@@ -1389,7 +1389,10 @@ object Microstructure {
     * sampled fills — the fact never shuffles. Slippage avoids signed
     * integer `div` entirely (Spark truncates, DuckDB floors —
     * opposite on negatives): both `vwap_cents` and `slip_bp` are ONE
-    * IEEE division of exact ints (D21's rule, unrounded). Headroom:
+    * IEEE division of exact ints (D21's rule, unrounded). `slip_bp` is
+    * NULL on a day whose traded price·qty is 0 (every trade priced
+    * 0.00) — the oracle's `x / 0` — where ANSI division would throw
+    * and fail the whole report. Headroom:
     * cents·day_qty·10⁴ needs < 2⁶³ — at 10⁵ cents and 10⁹ daily
     * units that is 10¹⁸, inside int64 with one order of magnitude to
     * spare; a larger venue shards the day key. */
@@ -1416,8 +1419,8 @@ object Microstructure {
         col("day_qty"),
         (col("day_pv").cast("double") / col("day_qty").cast("double"))
           .as("vwap_cents"),
-        ((col("cents") * col("day_qty") - col("day_pv")) * 10000L)
-          .cast("double").divide(col("day_pv").cast("double"))
+        try_divide(((col("cents") * col("day_qty") - col("day_pv")) * 10000L)
+          .cast("double"), col("day_pv").cast("double"))
           .as("slip_bp"))
       .orderBy("symbol", "fill_id")
   }
@@ -1438,7 +1441,9 @@ object Microstructure {
     * event_id (running frames are O(n) streaming aggregates), fills
     * filtered AFTER the cumsum (the benchmark must see every trade).
     * Exact int64 running sums; `run_vwap_cents` and `slip_bp` are
-    * each ONE IEEE division of exact ints (D50's signed-div rule). */
+    * each ONE IEEE division of exact ints (D50's signed-div rule);
+    * `slip_bp` is NULL while the running price·qty is 0 (D50's
+    * zero-divisor rule). */
   def runningVwapSlippage(events: DataFrame, fillEvery: Int): DataFrame = {
     require(fillEvery >= 1, s"fillEvery must be >= 1: $fillEvery")
     val parsed = events.select(
@@ -1462,8 +1467,8 @@ object Microstructure {
         col("cum_qty"),
         (col("cum_pv").cast("double") / col("cum_qty").cast("double"))
           .as("run_vwap_cents"),
-        ((col("cents") * col("cum_qty") - col("cum_pv")) * 10000L)
-          .cast("double").divide(col("cum_pv").cast("double"))
+        try_divide(((col("cents") * col("cum_qty") - col("cum_pv")) * 10000L)
+          .cast("double"), col("cum_pv").cast("double"))
           .as("slip_bp"))
       .orderBy("symbol", "fill_id")
   }
@@ -1481,7 +1486,8 @@ object Microstructure {
     * day frame); regressors are ln of deterministic IEEE ratios
     * (exact-int divisions), zero-slip and full-participation fills
     * excluded (ln singularities — counted via n_fills vs D50's
-    * output). Slope = covar_pop/var_pop of aggregate doubles,
+    * output), as are fills of a zero price·qty day (NULL slip, D50's
+    * zero-divisor rule). Slope = covar_pop/var_pop of aggregate doubles,
     * round(4) — D18's corr-aggregate determinism class (float-sweep
     * proven at sf0.1); symbols with degenerate x-variance report
     * NULL. */
@@ -1502,8 +1508,8 @@ object Microstructure {
       .filter(col("event_id") % fillEvery === 0)
       .join(broadcast(daily), Seq("symbol", "day"))
       .withColumn("slip_bp",
-        ((col("cents") * col("day_qty") - col("day_pv")) * 10000L)
-          .cast("double") / col("day_pv").cast("double"))
+        try_divide(((col("cents") * col("day_qty") - col("day_pv")) * 10000L)
+          .cast("double"), col("day_pv").cast("double")))
       .withColumn("part",
         col("k").cast("double") / col("day_qty").cast("double"))
       .filter(abs(col("slip_bp")) > 0 && col("k") < col("day_qty"))

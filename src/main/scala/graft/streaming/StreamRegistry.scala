@@ -123,23 +123,29 @@ object StreamRegistry {
     * drives run sequentially within a session (Verify/Bench both
     * iterate keys one at a time), so the scoped conf cannot bleed
     * into a concurrent batch plan. */
-  private def withStreamConf[R](s: SparkSession)(body: => R): R = {
-    val key = "spark.sql.shuffle.partitions"
-    // No-data polling sleep between micro-batches (default 10 ms):
-    // processAllAvailable crosses it once per drained batch; at ~6
-    // batches per drive that is pure latency. 1 ms keeps the poll
-    // loop (the engine's own floor) without the idle tax.
-    val pollKey = "spark.sql.streaming.pollingDelay"
-    val prev = s.conf.get(key)
-    val prevPoll = s.conf.getOption(pollKey)
-    s.conf.set(key, StreamStatePartitions)
-    s.conf.set(pollKey, "1")
-    try withNioCkpt(s)(body) finally {
-      s.conf.set(key, prev)
-      prevPoll match {
-        case Some(v) => s.conf.set(pollKey, v)
-        case None => s.conf.unset(pollKey)
-      }
+  private def withStreamConf[R](s: SparkSession)(body: => R): R =
+    withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
+      // No-data polling sleep between micro-batches (default 10 ms):
+      // processAllAvailable crosses it once per drained batch; at ~6
+      // batches per drive that is pure latency. 1 ms keeps the poll
+      // loop (the engine's own floor) without the idle tax.
+      withConf(s, "spark.sql.streaming.pollingDelay", "1")(withNioCkpt(s)(body))
+    }
+
+  /** Run `body` with session conf `key` set to `value`. The session's
+    * own setting is restored on every exit path — re-set if it had
+    * one, unset if it ran on the default (`getAll` holds only set
+    * keys, where `getOption` would also return a default) — and the
+    * `try` begins right after the set, so a throwing `start()` or
+    * drive cannot leak the override into the rest of the session. */
+  private def withConf[R](s: SparkSession, key: String, value: String)
+                         (body: => R): R = {
+    val prev = s.conf.getAll.get(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
     }
   }
 
@@ -152,17 +158,10 @@ object StreamRegistry {
     * (see its scaladoc) does the identical create-temp+atomic-rename
     * protocol in-process. Scoped per drive so a caller checkpointing
     * to durable storage keeps the default manager. */
-  private def withNioCkpt[R](s: SparkSession)(body: => R): R = {
-    val key = "spark.sql.streaming.checkpointFileManagerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, classOf[org.apache.spark.sql.execution.streaming
-      .checkpointing.NioCheckpointFileManager].getName)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withNioCkpt[R](s: SparkSession)(body: => R): R =
+    withConf(s, "spark.sql.streaming.checkpointFileManagerClass",
+      classOf[org.apache.spark.sql.execution.streaming
+        .checkpointing.NioCheckpointFileManager].getName)(body)
 
   /** The drive sink, replacing the memory sink (r18): a foreachBatch
     * collector. The memory sink's `addBatch` collects EVERY batch's
@@ -299,10 +298,11 @@ object StreamRegistry {
     * buffered row is evicted before its match arrives (the safety
     * argument a production Kafka deployment makes with per-partition
     * time ordering). */
-  private def runTape2[T](s: SparkSession, tapeA: Seq[T], tapeB: Seq[T],
-                          mode: OutputMode, chunks: Int = 4)
-                         (plan: (Dataset[T], Dataset[T]) => DataFrame)
-                         (implicit enc: Encoder[T]): DataFrame =
+  private[graft] def runTape2[T](s: SparkSession, tapeA: Seq[T],
+                                 tapeB: Seq[T], mode: OutputMode,
+                                 chunks: Int = 4)
+                                (plan: (Dataset[T], Dataset[T]) => DataFrame)
+                                (implicit enc: Encoder[T]): DataFrame =
     withStreamConf(s) {
       implicit val sqlCtx = s.sqlContext
       val inA = MemoryStream[T]
@@ -312,22 +312,22 @@ object StreamRegistry {
       val outSchema = sdf.schema
       val name = s"graft_stream_sink_${sinkCtr.incrementAndGet()}"
       // Skip the no-data micro-batch after each drained round (scoped,
-      // restored in finally): the G6 drive is an INNER stream-stream
-      // interval join — matches emit in the data batch that completes
-      // them, and a no-data batch's only work is state EVICTION, which
-      // cannot change inner-join output (rows evicted are exactly those
-      // past the watermark no future row can match). Each round
-      // previously ran data-batch + no-data-batch: 8 micro-batches'
-      // fixed cost (4 state stores x 8 partitions each) for 4 rounds
-      // of data. Sink contents are identical — oracle-checked — and a
-      // deployment that wants eager eviction keeps the default.
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNoData = s.conf.getOption(noDataKey)
-      s.conf.set(noDataKey, "false")
-      val q = prof("start")(sdf.writeStream.format("memory")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .queryName(name).outputMode(mode).start())
-      val out =
+      // restored on every exit path): the G6 drive is an INNER
+      // stream-stream interval join — matches emit in the data batch
+      // that completes them, and a no-data batch's only work is state
+      // EVICTION, which cannot change inner-join output (rows evicted
+      // are exactly those past the watermark no future row can match).
+      // Each round previously ran data-batch + no-data-batch: 8
+      // micro-batches' fixed cost (4 state stores x 8 partitions each)
+      // for 4 rounds of data. Sink contents are identical —
+      // oracle-checked — and a deployment that wants eager eviction
+      // keeps the default. The checkpoint dir goes on every exit path
+      // too, a failed start() included.
+      val out = try withConf(s,
+          "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+        val q = prof("start")(sdf.writeStream.format("memory")
+          .option("checkpointLocation", ckpt.getAbsolutePath)
+          .queryName(name).outputMode(mode).start())
         try {
           val perA = math.max(1, (tapeA.size + chunks - 1) / chunks)
           val perB = math.max(1, (tapeB.size + chunks - 1) / chunks)
@@ -347,13 +347,10 @@ object StreamRegistry {
           prof("detach")(detached(s,
             s.table(name).collect().toIndexedSeq, outSchema))
         } finally {
-          prof("stop")(q.stop()); rmTree(ckpt)
-          prevNoData match {
-            case Some(v) => s.conf.set(noDataKey, v)
-            case None => s.conf.unset(noDataKey)
-          }
+          prof("stop")(q.stop())
           unloadDeadStateStores()
         }
+      } finally rmTree(ckpt)
       s.catalog.dropTempView(name)
       out
     }

@@ -1118,9 +1118,11 @@ object Streaming {
       .withColumn("admitted", col("margin") >= 0)
   }
 
+  /** `slip_bp` is NULL while the running price·qty is 0 (the batch
+    * twin's zero-divisor rule), hence boxed. */
   case class FillPoint(symbol: Long, fill_id: Long, day: String,
                        exec_cents: Long, cum_qty: Long,
-                       run_vwap_cents: Double, slip_bp: Double)
+                       run_vwap_cents: Double, slip_bp: java.lang.Double)
 
   /** G26 — STREAMING RUNNING-VWAP SLIPPAGE: the live twin of
     * `Microstructure.runningVwapSlippage` (D52) — the TCA report a
@@ -1156,7 +1158,8 @@ object Streaming {
                 Some(FillPoint(key._1, t.event_id, key._2, t.cents,
                   cumQty,
                   cumPv.toDouble / cumQty.toDouble,
-                  ((t.cents * cumQty - cumPv) * 10000L).toDouble
+                  if (cumPv == 0L) null
+                  else ((t.cents * cumQty - cumPv) * 10000L).toDouble
                     / cumPv.toDouble))
               else None
             }

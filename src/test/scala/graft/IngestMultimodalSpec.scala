@@ -31,6 +31,107 @@ class IngestMultimodalSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(out, "symbol=EURUSD", "year=2024")))
   }
 
+  /** A Dukascopy-style tree `<symbol>/<day>.csv`: 4 symbols x 12 days
+    * (2023-12-26 .. 2024-01-06, so each symbol spans two years) x 5
+    * ticks. Even days' files are 5 bytes longer (Volume `1.00`), so the
+    * scan's largest-first packing is fixed: 48 files in 4 splits of 12,
+    * two of even days and two of odd days, and every (symbol, year)
+    * has files in two splits. Returns the root and the source's (rows,
+    * bid cents sum, ts millis sum). */
+  private def csvTree(): (java.nio.file.Path, Long, Long, Long) = {
+    val dir = Files.createTempDirectory("graft_csv_tree")
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd HH:mm:ss.SSS")
+    def price(c: Int) = f"${c / 100}.${c % 100}%02d"
+    var rows = 0L; var cents = 0L; var millis = 0L
+    for (k <- 0 until 4; d <- 0 until 12) {
+      val day = java.time.LocalDate.of(2023, 12, 26).plusDays(d)
+      val sym = Files.createDirectories(dir.resolve(s"SYM$k"))
+      val volume = if (d % 2 == 0) "1.00" else "1.0"
+      val lines = (0 until 5).map { i =>
+        val ts = day.atTime(7, 55, i, 123000000)
+        val c = 100 + k * 100 + d * 5 + i
+        rows += 1; cents += c
+        millis += ts.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+        s"${ts.format(fmt)},${price(c)},${price(c + 1)},$volume"
+      }
+      Files.writeString(sym.resolve(s"$day.csv"),
+        ("DateTime,Bid,Ask,Volume" +: lines).mkString("", "\n", "\n"))
+    }
+    (dir, rows, cents, millis)
+  }
+
+  /** Task counts of the stages `body` submits. The listener bus is
+    * asynchronous but ordered, so a marker job run after `body` is
+    * seen only once every earlier stage event has been. */
+  private def stageTasks(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = "graft-stage-tasks-marker"
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var seen = Seq.empty[Int]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        tasks.add(e.stageInfo.numTasks); ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) {
+          import scala.jdk.CollectionConverters._
+          seen = tasks.asScala.toSeq
+          flushed.countDown()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    seen
+  }
+
+  test("CsvTickIngest.read lists a many-file glob in at most " +
+      "shufflePartitions tasks and reads the same rows as Spark's default") {
+    val (dir, nRows, _, _) = csvTree()
+    val glob = dir.toString + "/*/*.csv"
+    val cores = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    assert(spark.conf.get(key) == cores.toString) // set by GraftSession
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val bounded = stageTasks { rows = CsvTickIngest.read(spark, glob).collect() }
+    // 48 root paths > the 32-path threshold: the listing is a job
+    assert(bounded.nonEmpty && bounded.max <= cores, s"stage tasks: $bounded")
+    // Spark's default parallelism lists one path per task
+    var dflt = Array.empty[org.apache.spark.sql.Row]
+    val unbounded = try {
+      spark.conf.set(key, "10000")
+      stageTasks { dflt = CsvTickIngest.read(spark, glob).collect() }
+    } finally spark.conf.set(key, cores.toString)
+    assert(unbounded.contains(48), s"stage tasks: $unbounded")
+    assert(rows.length == nRows)
+    assert(rows.map(_.toString).sorted.toSeq == dflt.map(_.toString).sorted.toSeq)
+  }
+
+  test("CsvTickIngest.write leaves one part file per (symbol, year) " +
+      "with the source's rows, bid cents and ts millis") {
+    val (dir, nRows, cents, millis) = csvTree()
+    val out = dir.resolve("gold")
+    CsvTickIngest.write(CsvTickIngest.read(spark, dir.toString + "/*/*.csv"),
+      out.toString)
+    val leaves = for {
+      s <- out.toFile.listFiles().toSeq if s.getName.startsWith("symbol=")
+      y <- s.listFiles().toSeq if y.getName.startsWith("year=")
+    } yield s.getName + "/" + y.getName ->
+      y.listFiles().count(_.getName.startsWith("part-"))
+    assert(leaves.length == 8, leaves) // 4 symbols x 2 years
+    assert(leaves.forall(_._2 == 1), leaves)
+    val a = spark.read.parquet(out.toString)
+      .agg(count(lit(1)), sum(round(col("bid") * 100).cast("long")),
+        sum(unix_millis(col("ts")))).head()
+    assert((a.getLong(0), a.getLong(1), a.getLong(2)) == ((nRows, cents, millis)))
+  }
+
   test("multimodal feature extraction is deterministic over binary payloads") {
     val media = Multimodal.syntheticMedia(spark, 30)
     val feats = Multimodal.extractFeatures(media).collect()

@@ -861,6 +861,28 @@ class MicrostructureSpec extends SparkSpec {
     assert(out.head._7 < 0 && out(1)._7 > 0) // buy below / above VWAP
   }
 
+  test("vwapSlippage, runningVwapSlippage and impactExponent: a day " +
+      "whose trades are all priced 0.00 scores NULL slippage (the " +
+      "oracle's x / 0) instead of failing the report") {
+    val ev = events(
+      (20L, 1L, "2024-01-01 10:00:00", 1.00, 10),  // fill on a priced day
+      (21L, 1L, "2024-01-01 11:00:00", 1.02, 30),
+      (40L, 1L, "2024-01-02 10:00:00", 0.00, 5),   // fill, zero-priced day
+      (41L, 1L, "2024-01-02 11:00:00", 0.00, 3))
+    def slips(df: org.apache.spark.sql.DataFrame) =
+      df.select("fill_id", "slip_bp").collect()
+        .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val day = Microstructure.vwapSlippage(ev, 20)
+    assert(slips(day) == Map(
+      20L -> Some((100L * 40L - 4060L) * 10000L / 4060.0), 40L -> None))
+    assert(day.filter("fill_id = 40").select("vwap_cents").head().getDouble(0) == 0.0)
+    assert(slips(Microstructure.runningVwapSlippage(ev, 20)) ==
+      Map(20L -> Some(0.0), 40L -> None))
+    // the NULL slip drops with the zero-slip fills (ln singularity)
+    val imp = Microstructure.impactExponent(ev, 20).collect()
+    assert(imp.map(_.getLong(0)).toSeq == Seq(1L) && imp.head.getLong(1) == 1L)
+  }
+
   test("reversalSpread: losers/winners by PREVIOUS-day rank, spread " +
       "from rounded finals; an under-populated day reports NULL " +
       "winner and spread") {

@@ -5,19 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * `getOrCreate` — so the suite doesn't pay repeated startup). */
+  * `getOrCreate` — so the suite doesn't pay repeated startup), built
+  * by [[GraftSession.builder]] so the specs exercise the configuration
+  * the engine ships and the benchmark times. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

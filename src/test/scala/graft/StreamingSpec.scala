@@ -1268,6 +1268,48 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("G26 parity on a zero-priced day: stream and batch both score " +
+      "NULL slippage while the running price·qty is 0") {
+    import graft.streaming.Streaming.{BarTrade, FillPoint}
+    val trades = Seq(
+      BarTrade(20L, 1L, t("2024-01-02 10:00:00"), 0L, 10L),   // cum_pv 0
+      BarTrade(21L, 1L, t("2024-01-02 11:00:00"), 100L, 10L),
+      BarTrade(40L, 1L, t("2024-01-02 12:00:00"), 0L, 5L))    // cum_pv 1000
+    val ev = trades.map(b => (b.event_id, b.symbol, b.ts, "trade",
+      b.cents / 100.0, s"""{"k":${b.k}}"""))
+      .toDF("event_id", "user_id", "ts", "event_type", "value", "props")
+    val batch = graft.operators.Microstructure.runningVwapSlippage(ev, 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.get(6))).toSet
+    assert(batch == Set((1L, 20L, null),
+      (1L, 40L, (0L * 25L - 1000L) * 10000L / 1000.0)))
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[BarTrade]
+    val q = Streaming.runningVwapPoints(in.toDS(), 20)
+      .writeStream.format("memory").queryName("p_runvwap_zero")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(trades: _*); q.processAllAvailable()
+      val streamed = spark.table("p_runvwap_zero").as[FillPoint].collect()
+        .map(f => (f.symbol, f.fill_id, f.slip_bp)).toSet
+      assert(streamed == batch)
+    } finally q.stop()
+  }
+
+  test("a tape drive whose start() fails leaves every session conf " +
+      "as it was") {
+    val before = spark.conf.getAll
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      // a sort on a non-aggregated stream is rejected at start()
+      graft.streaming.StreamRegistry.runTape2(spark, Seq(1L, 2L),
+        Seq(3L), OutputMode.Append) { (a, b) =>
+        a.union(b).toDF().orderBy("value")
+      }
+    }
+    assert(e.getMessage.toLowerCase.contains("sort"), e.getMessage)
+    assert(spark.conf.getAll == before)
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("G25 parity: seasonalFlags (offline baseline + stream-static " +
       "scoring) == batch seasonalAnomaly; day boundary resets the " +
       "move state") {
