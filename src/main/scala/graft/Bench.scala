@@ -151,9 +151,6 @@ object Bench {
       System.err.println(f"[bench] warm-up battery: ${
         (System.nanoTime() - t0) / 1e9}%.1f s (untimed)")
     }
-    // Harmless under the round-9 µs testdata (applies only to NANOS
-    // files); kept so pre-regeneration ns parquet still warms.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try {

@@ -27,11 +27,26 @@ import org.apache.spark.sql.SparkSession
   *   out to every core of a cluster. The bound applies as well to
   *   partitioned trees with more than 32 directories, e.g.
   *   `GoldIngest.readDir` over thousands of symbols.
+  * - [[GraftExtensions]] installed through `withExtensions`: the graft
+  *   functions plus [[SmallSortToSinglePartition]], an AQE rule that
+  *   plans a global sort whose input fits one advisory partition
+  *   (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, by the plan's
+  *   size estimate, runtime stats once upstream stages have run) as an
+  *   `Exchange SinglePartition` instead of a range shuffle. That skips
+  *   the range partitioner's sampling job, a full recompute of the
+  *   sort's input that AQE would coalesce back to one partition anyway.
+  *   Scale-safe: estimates under Filter, Aggregate and Join are upper
+  *   bounds, a generator below the shuffle disables it, and a 100 TB
+  *   sort is far above the gate and keeps the sampled range sort.
+  * - `spark.sql.legacy.parquet.nanosAsLong`, so `Tables.events` can read
+  *   the older TIMESTAMP(NANOS) testdata encoding as raw nanos (Spark 4
+  *   refuses that type otherwise); set here once, not per read.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new GraftExtensions())
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -58,6 +73,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.hadoop.FastLocalFileSystem].getName)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   /** Local session for the driver-contract mains. */

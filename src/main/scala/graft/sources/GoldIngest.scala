@@ -38,8 +38,7 @@ object GoldIngest {
     val w = Window.partitionBy("symbol").orderBy("ts", "bid", "ask")
     spark.read.parquet(s"$dir/*")
       .select(
-        regexp_extract(col("_metadata.file_path"), ".*/([^/]+)/[^/]+$", 1)
-          .as("symbol"),
+        CsvTickIngest.symbolFromPath(col("_metadata.file_path")).as("symbol"),
         col("datetime").cast("timestamp").as("ts"),
         col("bid"), col("ask"))
       .withColumn("tick_id", row_number().over(w).cast("long"))

@@ -36,21 +36,21 @@ object Tables {
     * testdata generations, so the reader branches on the LOADED type:
     *
     *  - parquet TIMESTAMP(NANOS) (rounds ≤8), which Spark 4 refuses by
-    *    default ([PARQUET_TYPE_ILLEGAL]) — read as raw nanos
-    *    (`nanosAsLong`) and truncate to a µs TimestampType with integer
-    *    division (`div`, not `/` — a double roundtrip of an ~1.7e18
-    *    nanos value loses ~256 ns of precision);
+    *    default ([PARQUET_TYPE_ILLEGAL]) — read as raw nanos under the
+    *    `nanosAsLong` conf that [[graft.GraftSession]] sets (this reader
+    *    writes no session conf), and truncate to a µs TimestampType
+    *    with integer division (`div`, not `/` — a double roundtrip of
+    *    an ~1.7e18 nanos value loses ~256 ns of precision);
     *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) (round-9
     *    regeneration), which Spark loads as TIMESTAMP_NTZ — cast to
     *    TimestampType, value-preserving because every graft session
-    *    pins `spark.sql.session.timeZone=UTC` (GraftSession.scala:29).
+    *    pins `spark.sql.session.timeZone=UTC` ([[graft.GraftSession]]).
     *
     * DuckDB reads the native value either way, so queries only emit
     * second-or-coarser truncations (SURVEY §6); under the µs encoding
     * both engines see bit-identical timestamps.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

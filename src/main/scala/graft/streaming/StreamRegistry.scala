@@ -225,14 +225,23 @@ object StreamRegistry {
     * per-drive call taxes all 49 keys to bound memory that only
     * accumulates meaningfully across MANY drives; a 4-drive bound
     * keeps peak dead-provider state at <= 4 drives' worth (the 100x
-    * replay's driver-memory concern) at a quarter of the cost. */
+    * replay's driver-memory concern) at a quarter of the cost.
+    *
+    * Precondition: drives run one at a time. `unloadAll` is JVM-wide
+    * and would also unload a live query's providers, so it runs only
+    * when the session has no active query; a 4th call that finds one
+    * skips the unload and the count starts over. The count is one
+    * atomic update, so concurrent callers cannot lose a drive.
+    * Returns whether this call unloaded. */
   private val drivesSinceUnload = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def unloadDeadStateStores(): Unit =
-    if (drivesSinceUnload.incrementAndGet() >= 4) {
-      drivesSinceUnload.set(0)
+  private[graft] def unloadDeadStateStores(s: SparkSession): Boolean = {
+    val due = drivesSinceUnload.updateAndGet(n => (n + 1) % 4) == 0
+    val unload = due && s.streams.active.isEmpty
+    if (unload)
       org.apache.spark.sql.execution.streaming.state
         .StreamStateJanitor.unloadAll()
-    }
+    unload
+  }
 
   private def runBatches[T](s: SparkSession, batches: Seq[Seq[T]],
                             mode: OutputMode)
@@ -284,7 +293,7 @@ object StreamRegistry {
           }
         } finally {
           prof("stop")(q.stop()); rmTree(ckpt)
-          unloadDeadStateStores()
+          unloadDeadStateStores(s)
         }
       if (!complete) s.catalog.dropTempView(name)
       out
@@ -348,7 +357,7 @@ object StreamRegistry {
             s.table(name).collect().toIndexedSeq, outSchema))
         } finally {
           prof("stop")(q.stop())
-          unloadDeadStateStores()
+          unloadDeadStateStores(s)
         }
       } finally rmTree(ckpt)
       s.catalog.dropTempView(name)
@@ -1001,7 +1010,7 @@ object StreamRegistry {
         chunks.drop(1).foreach { c =>
           in.addData(c: _*); q.processAllAvailable()
         }
-      } finally { q.stop(); rmTree(ckpt); unloadDeadStateStores() }
+      } finally { q.stop(); rmTree(ckpt); unloadDeadStateStores(s) }
       if (chunks.size > 1)
         Streaming.upsertBatch(table, Seq("tick_id"))(
           s.createDataFrame(chunks.last), chunks.size - 1L)

@@ -132,6 +132,38 @@ class IngestMultimodalSpec extends SparkSpec {
     assert((a.getLong(0), a.getLong(1), a.getLong(2)) == ((nRows, cents, millis)))
   }
 
+  test("the symbol taken from the file path equals the old per-row " +
+      "regex on directory names with '-', '.' and digits") {
+    val dir = Files.createTempDirectory("graft_csv_syms")
+    val syms = Seq("EUR-USD", "1000SHIB.P", "x.9-2024", "BTC-USD.v2")
+    syms.foreach { sym =>
+      val d = Files.createDirectories(dir.resolve(sym))
+      Files.writeString(d.resolve("2024-01-02.csv"),
+        "DateTime,Bid,Ask,Volume\n20240102 07:55:01.123,1.1,1.2,1.0\n")
+    }
+    val csv = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
+      .select(col("symbol"),
+        regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1).as("old"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(csv.map(_._1).sorted.toSeq == syms.sorted)
+    assert(csv.forall { case (now, old) => now == old }, csv.toSeq)
+
+    val gold = dir.resolve("gold").toString
+    syms.foreach { sym =>
+      spark.range(3).select(lit(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
+          .as("datetime"), lit(1.0).as("bid"), lit(1.1).as("ask"))
+        .write.parquet(s"$gold/$sym")
+    }
+    val path = col("_metadata.file_path")
+    val paths = spark.read.parquet(s"$gold/*")
+      .select(CsvTickIngest.symbolFromPath(path),
+        regexp_extract(path, ".*/([^/]+)/[^/]+$", 1))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(paths.forall { case (now, old) => now == old }, paths.toSeq)
+    assert(graft.sources.GoldIngest.readDir(spark, gold).select("symbol")
+      .distinct().collect().map(_.getString(0)).sorted.toSeq == syms.sorted)
+  }
+
   test("multimodal feature extraction is deterministic over binary payloads") {
     val media = Multimodal.syntheticMedia(spark, 30)
     val feats = Multimodal.extractFeatures(media).collect()

@@ -1310,6 +1310,23 @@ class StreamingSpec extends SparkSpec {
     assert(spark.streams.active.isEmpty)
   }
 
+  test("the state-store janitor never unloads while a query is active, " +
+      "and unloads on one call in 4 once none is") {
+    import graft.streaming.StreamRegistry.unloadDeadStateStores
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Long]
+    val q = in.toDS().writeStream.format("memory").queryName("p_janitor")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(1L, 2L); q.processAllAvailable()
+      // 4 consecutive calls hold the 4th of the count, wherever it stands
+      assert((1 to 4).map(_ => unloadDeadStateStores(spark)) ==
+        Seq.fill(4)(false))
+      assert(q.isActive)
+    } finally q.stop()
+    assert((1 to 4).count(_ => unloadDeadStateStores(spark)) == 1)
+  }
+
   test("G25 parity: seasonalFlags (offline baseline + stream-static " +
       "scoring) == batch seasonalAnomaly; day boundary resets the " +
       "move state") {
