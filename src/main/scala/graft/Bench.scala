@@ -119,31 +119,15 @@ object Bench {
             .orderBy(col("v").desc, col("id"))
             .write.format("noop").mode("overwrite").save()
         }
-        // streaming machinery: one tiny synthetic drive initializes
-        // StreamExecution / micro-batch planner / state-store stack so
-        // the first q_stream_* key measures its drive, not first-use
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx = spark.sqlContext
+        // streaming machinery: one tiny synthetic tape through the
+        // q_stream_* drive initializes StreamExecution / micro-batch
+        // planner / state-store stack so the first q_stream_* key
+        // measures its drive, not first-use
         implicit val longEnc = org.apache.spark.sql.Encoders.scalaLong
-        val ms = MemoryStream[Long]
-        val ck = java.nio.file.Files
-          .createTempDirectory("graft_bench_warm_ckpt")
-        val q = ms.toDS().groupBy((col("value") % 7).as("g")).count()
-          .writeStream.format("noop")
-          .option("checkpointLocation", ck.toString)
-          .outputMode("update").start()
-        try {
-          ms.addData(1L to 2000L: _*); q.processAllAvailable()
-          ms.addData(2001L to 4000L: _*); q.processAllAvailable()
-        } finally {
-          q.stop()
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).toSeq.flatten.foreach(rm)
-            f.delete(); ()
-          }
-          rm(ck.toFile)
-        }
+        graft.streaming.StreamRegistry.drive(spark,
+          Seq(Seq(1L to 2000L, 2001L to 4000L)),
+          org.apache.spark.sql.streaming.OutputMode.Update)(
+          in => in.head.groupBy((col("value") % 7).as("g")).count())
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] JIT warm-up battery FAILED " +
           s"(run-1 heads will include JVM warm-up): $e")
@@ -169,9 +153,6 @@ object Bench {
     // Build them here, before the clock, and report each build as an
     // explicit fixture:* row so per-query numbers are MARGINAL cost
     // and the shared-infrastructure cost stays visible, not hidden.
-    // The keys mirror the registry call sites exactly (same corpus
-    // key, same hyperparameters) so the cache HITS there.
-    import graft.sources.Tables
     def fixture(name: String)(f: => Unit): (String, Double) = {
       val t0 = System.nanoTime()
       try f catch { case scala.util.control.NonFatal(e) =>
@@ -179,36 +160,9 @@ object Bench {
       }
       (name, (System.nanoTime() - t0) / 1e9)
     }
-    val fixtures = Seq(
-      fixture("slot_chain") {
-        graft.operators.Features.slotChain(Tables.ticks(spark, sfDir),
-          SparkEntry.tensorSlots, 0.6, 0.2, Some(sfDir)).errs.count(); ()
-      },
-      fixture("gd_fit") {
-        graft.operators.Features.gdFit(Tables.ticks(spark, sfDir),
-          SparkEntry.tensorSlots, 2, 4, 0.0625, 0.6, 0.2, Some(sfDir))
-          .errs.count(); ()
-      },
-      fixture("pair_census") {
-        graft.operators.TextDedup.pairCensus(
-          Tables.documents(spark, sfDir), sfDir).count(); ()
-      },
-      // F7d serving artifact: the trained coarse-quantizer centroids
-      // (k·dim floats) — at 100 TB an ingest-time product; prebuilt
-      // here so q_ann_ivf_served prices the read path only
-      fixture("ivf_cents") {
-        SparkEntry.servedIvfCentroids(spark, sfDir); ()
-      },
-      // the session-memoized tick tape all q_stream_* keys replay
-      // (29 consumers; built via the same SessionFrameCache key the
-      // registry drives hit)
-      fixture("stream_tape") {
-        graft.streaming.StreamRegistry.warmTape(spark, sfDir); ()
-      },
-      // the session-memoized orders tape (G30 + G36 drive it)
-      fixture("order_tape") {
-        graft.streaming.StreamRegistry.warmOrderTape(spark, sfDir); ()
-      })
+    val fixtures = Fixtures.all.map { case (name, build) =>
+      fixture(name)(build(spark, sfDir))
+    }
 
     // Double-run protocol (round-8): the whole suite executes TWICE
     // back-to-back. Run 1 keeps the historical semantics (cold codegen

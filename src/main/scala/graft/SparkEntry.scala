@@ -1432,7 +1432,7 @@ object SparkEntry {
     "q_dedup_clusters" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // NULL-band_hash isolation + unordered-band rationale documented
-      // at the shared helper (also used by the CcDiag diagnostic).
+      // at the shared helper.
       TextDedup.dedupClustersFromBuckets(docs,
         TextDedup.minhashBucketAssignments(docs))
     }),
@@ -10523,7 +10523,7 @@ object SparkEntry {
     // G31 — the snapshot ladder: for every (source, chunk) with new
     // grams, the 32-register summary over that source's grams in the
     // deterministic 4-chunk tape prefix (per = ceil(N/4), doc_id
-    // order — runTape's grouping verbatim).
+    // order — the drive's `quarters` split verbatim).
     "q_stream_hll" -> {
       import graft.functions.PortableText._
       s"""WITH nd AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
@@ -10799,7 +10799,7 @@ object SparkEntry {
         |ORDER BY g.o_orderkey""".stripMargin,
 
     // G17 — the watermark-sizing audit on the jittered-arrival
-    // replay: process order is (chunk, tick_id) — runTape's 4-chunk
+    // replay: process order is (chunk, tick_id) — the drive's 4-chunk
     // grouping of the arrival order, then the operator's in-batch
     // tick_id sort; wm = the symbol's running max BEFORE the tick.
     "q_stream_late" -> {
@@ -11062,7 +11062,7 @@ object SparkEntry {
     },
 
     // G33 — the watermark schedule simulated exactly: chunk =
-    // runTape's 4-way split in tape order, W_c = the running max
+    // the drive's 4-way split in tape order, W_c = the running max
     // event-ms through chunk c, and a register DIES between
     // consecutive same-symbol ticks iff the next tick lands in a
     // later chunk whose preceding watermark strictly passed

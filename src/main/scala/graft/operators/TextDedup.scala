@@ -444,7 +444,7 @@ object TextDedup {
     * pair (its minimal matching band), so the output SET is
     * identical to `candidatePairs(minHashBands(...))` — spec-proven
     * — while the multi-million-row exact-dedup SHUFFLE disappears
-    * (the wave-6 PairProfile measured that distinct at 10.6 s of
+    * (a wave-6 stage profile measured that distinct at 10.6 s of
     * the ~13 s family queries at sf0.1: THE dominant stage; here it
     * becomes a per-row filter of ≤ Bands−1 integer hashes over
     * already-loaded arrays, no exchange). At 100 TB the distinct was
@@ -1212,9 +1212,9 @@ object TextDedup {
     * bands, NULL band_hash dropped (token-less docs must stay
     * ISOLATED — xxhash64 skips null args, so without the filter every
     * empty doc would collapse onto xxhash64(band) and co-cluster),
-    * bucket key = xxhash64(band, band_hash). ONE definition shared by
-    * the registry and the diagnostics (CcDiag) so a measurement can
-    * never silently drift from the measured query. */
+    * bucket key = xxhash64(band, band_hash). ONE definition, so the
+    * registry key and any measurement of it cannot silently drift
+    * apart. */
   def minhashBucketAssignments(docs: DataFrame): DataFrame =
     minHashBands(docs, ordered = false)
       .filter(col("band_hash").isNotNull)

@@ -1,21 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 import graft.operators.Features
 import graft.sources.Tables
 
 /** Driver-checkable STREAMING keys (`q_stream_*`): each G-family
   * operator run as a REAL Structured Streaming query over the sfDir
-  * tape — a MemoryStream fed in tape (tick_id) order across several
+  * tape — a MemoryStream fed in tape order across several
   * micro-batches (state carry + within-batch re-sort exercised, the
-  * same drive protocol as the parity specs), a memory sink, and the
-  * sink's final frame returned as a batch DataFrame for the DuckDB
-  * oracle hash (ref: README §8.5 — the live monitoring loop's output
-  * IS a queryable table).
+  * same drive protocol as the parity specs) by the one [[drive]], and
+  * the sink's final contents returned as a batch DataFrame for the
+  * DuckDB oracle hash (ref: README §8.5 — the live monitoring loop's
+  * output IS a queryable table).
   *
   * Execution-mode notes, honestly stated:
   *  - windowed aggregations run `Complete` here because the tape is
@@ -28,57 +29,39 @@ import graft.sources.Tables
   *    emits (the sentinel's own window stays open and never emits —
   *    the bounded-tape analog of "the still-open final window never
   *    emits");
-  *  - the sink is collected and re-parallelized so the returned frame
-  *    is detached from the transient memory-sink view (Bench runs
+  *  - the sink rows are collected on the driver when the drive ends
+  *    and returned as a fresh frame (a LocalRelation, or a
+  *    parallelized one for large sinks — see [[detached]]), so the
+  *    result outlives the drive's query and its sink view (Bench runs
   *    every key twice in one session).
   *
+  * The tapes are session-memoized driver-side `Seq`s (see [[tape]]).
   * At 100 TB the tape is a Kafka topic and the sink a lakehouse
   * table; everything between — the operators under test — is
   * partition-parallel keyed state, |symbols| wide, rate-independent.
   */
 object StreamRegistry {
-  import Streaming.{Doc, Ev, Tick}
+  import Streaming.{BarTrade, Change, Doc, Ev, FunnelEvent, OrderArrival,
+    PathEvent, PitEvent, SourcedDoc, Tick}
 
   private implicit val tickEnc: Encoder[Tick] = Encoders.product[Tick]
   private implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
   private implicit val docEnc: Encoder[Doc] = Encoders.product[Doc]
+  private implicit val sdEnc: Encoder[SourcedDoc] =
+    Encoders.product[SourcedDoc]
+  private implicit val btEnc: Encoder[BarTrade] = Encoders.product[BarTrade]
+  private implicit val chEnc: Encoder[Change] = Encoders.product[Change]
+  private implicit val oaEnc: Encoder[OrderArrival] =
+    Encoders.product[OrderArrival]
+  private implicit val pitEnc: Encoder[PitEvent] = Encoders.product[PitEvent]
+  private implicit val pathEnc: Encoder[PathEvent] =
+    Encoders.product[PathEvent]
+  private implicit val feEnc: Encoder[FunnelEvent] =
+    Encoders.product[FunnelEvent]
 
   private val sinkCtr = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Env-gated micro-batch profiler (GRAFT_STREAM_PROF=1): prints the
-    * wall time of each drive phase (query start, every
-    * addData+processAllAvailable round, sink collect) to stderr so the
-    * fixed micro-batch machinery cost can be decomposed per key
-    * without touching the drive protocol. Zero overhead when unset. */
-  private val profEnabled = sys.env.contains("GRAFT_STREAM_PROF")
-  private def prof[R](label: String)(body: => R): R =
-    if (!profEnabled) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[streamprof] $label%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
-  /** Drive `plan` over `tape` as a streaming query: `chunks`
-    * micro-batches in tape order, memory sink in `mode`, stopped
-    * after the final processAllAvailable. Returns the sink detached. */
-  private def runTape[T](s: SparkSession, tape: Seq[T], mode: OutputMode,
-                         chunks: Int = 4)(plan: Dataset[T] => DataFrame)
-                        (implicit enc: Encoder[T]): DataFrame = {
-    val per = math.max(1, (tape.size + chunks - 1) / chunks)
-    runBatches(s, tape.grouped(per).toSeq, mode)(plan)
-  }
-
-  /** [[runTape]] with EXPLICIT batch boundaries — for operators whose
-    * emission is driven by the watermark schedule itself (G33's
-    * event-time timeouts fire in the no-data micro-batch that follows
-    * each data batch, against that batch's watermark — probed on this
-    * Spark: strict `timeout < watermark`, evaluated within the same
-    * processAllAvailable), where trailing sentinel BATCHES — not just
-    * sentinel rows inside the last chunk — are what flush the tail. */
-  /** State-partition count for the tape drives. A stateful streaming
+  /** State-partition count for the drives. A stateful streaming
     * query fixes its state partitioning from
     * `spark.sql.shuffle.partitions` at FIRST-batch planning and every
     * micro-batch then commits one state-store delta per partition per
@@ -92,7 +75,7 @@ object StreamRegistry {
     * cardinality and rate, not a global constant). */
   private val StreamStatePartitions = "8"
 
-  /** Checkpoint root for the tape drives. A MemoryStream-fed query's
+  /** Checkpoint root for the drives. A MemoryStream-fed query's
     * checkpoint is NON-RECOVERABLE by construction (the in-memory
     * source cannot replay offsets after a restart — Spark documents
     * the memory source as test-only), so durability buys nothing
@@ -103,33 +86,59 @@ object StreamRegistry {
     * has one; a production deployment with a REPLAYABLE source (Kafka)
     * keeps its checkpoint on durable storage exactly as before —
     * override via SPARK_GRAFT_STREAM_CKPT. Each drive gets a fresh
-    * subdir, deleted in its finally (tmpfs is RAM — never leak). */
-  private val ckptRoot: String =
+    * [[ckptPrefix]] subdir, deleted on every exit path (tmpfs is
+    * RAM — never leak). */
+  private[graft] val ckptRoot: String =
     sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
       Some("/dev/shm").filter(p => new java.io.File(p).canWrite)
     }.getOrElse(System.getProperty("java.io.tmpdir"))
 
+  /** Name prefix of this JVM's drive checkpoint dirs. The root is
+    * shared by every process on the host, so the pid tells one
+    * process's dirs (a leaked one included) from another's. */
+  private[graft] val ckptPrefix =
+    s"graft_stream_ckpt${ProcessHandle.current().pid()}_"
+
   private def freshCkptDir(): java.io.File =
     java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(ckptRoot), "graft_stream_ckpt").toFile
+      java.nio.file.Paths.get(ckptRoot), ckptPrefix).toFile
 
   private def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
     f.delete(); ()
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to the
-    * tape-drive value, restoring the session default after. The
-    * drives run sequentially within a session (Verify/Bench both
-    * iterate keys one at a time), so the scoped conf cannot bleed
-    * into a concurrent batch plan. */
-  private def withStreamConf[R](s: SparkSession)(body: => R): R =
+  /** Run `body` under the drive's scoped session conf. The drives run
+    * sequentially within a session (Verify/Bench both iterate keys one
+    * at a time), so the scoped conf cannot bleed into a concurrent
+    * batch plan.
+    *  - `spark.sql.shuffle.partitions` = [[StreamStatePartitions]].
+    *  - `pollingDelay` 1 ms: the no-data polling sleep between
+    *    micro-batches (default 10 ms) is crossed once per drained batch
+    *    by processAllAvailable; at ~6 batches per drive that is pure
+    *    latency. 1 ms keeps the poll loop (the engine's own floor)
+    *    without the idle tax.
+    *  - `noDataMicroBatches.enabled` = `noDataBatches` (see [[drive]]).
+    *  - The NIO checkpoint file manager. The drives checkpoint to a
+    *    local (tmpfs) path, where Hadoop's local filesystem — absent
+    *    the native library — forks a `chmod` process per file create
+    *    and a `readlink` per rename: ~30 forks per micro-batch across
+    *    the offset WAL, commit WAL and 8 state deltas, measured as the
+    *    bulk of walCommit/commitOffsets. The NIO manager (see its
+    *    scaladoc) does the identical create-temp+atomic-rename
+    *    protocol in-process. Scoped per drive so a caller
+    *    checkpointing to durable storage keeps the default manager. */
+  private def withStreamConf[R](s: SparkSession, noDataBatches: Boolean)
+                               (body: => R): R =
     withConf(s, "spark.sql.shuffle.partitions", StreamStatePartitions) {
-      // No-data polling sleep between micro-batches (default 10 ms):
-      // processAllAvailable crosses it once per drained batch; at ~6
-      // batches per drive that is pure latency. 1 ms keeps the poll
-      // loop (the engine's own floor) without the idle tax.
-      withConf(s, "spark.sql.streaming.pollingDelay", "1")(withNioCkpt(s)(body))
+      withConf(s, "spark.sql.streaming.pollingDelay", "1") {
+        withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled",
+            noDataBatches.toString) {
+          withConf(s, "spark.sql.streaming.checkpointFileManagerClass",
+            classOf[org.apache.spark.sql.execution.streaming
+              .checkpointing.NioCheckpointFileManager].getName)(body)
+        }
+      }
     }
 
   /** Run `body` with session conf `key` set to `value`. The session's
@@ -149,24 +158,10 @@ object StreamRegistry {
     }
   }
 
-  /** Scope the NIO checkpoint file manager to a tape drive. The drives
-    * checkpoint to a local (tmpfs) path, where Hadoop's local
-    * filesystem — absent the native library — forks a `chmod` process
-    * per file create and a `readlink` per rename: ~30 forks per
-    * micro-batch across the offset WAL, commit WAL and 8 state deltas,
-    * measured as the bulk of walCommit/commitOffsets. The NIO manager
-    * (see its scaladoc) does the identical create-temp+atomic-rename
-    * protocol in-process. Scoped per drive so a caller checkpointing
-    * to durable storage keeps the default manager. */
-  private def withNioCkpt[R](s: SparkSession)(body: => R): R =
-    withConf(s, "spark.sql.streaming.checkpointFileManagerClass",
-      classOf[org.apache.spark.sql.execution.streaming
-        .checkpointing.NioCheckpointFileManager].getName)(body)
-
-  /** The drive sink, replacing the memory sink (r18): a foreachBatch
-    * collector. The memory sink's `addBatch` collects EVERY batch's
-    * rows to the driver — in Complete mode that is the FULL result
-    * table re-collected per micro-batch, with all but the last copy
+  /** The Complete-mode drive sink (r18): a foreachBatch collector. The
+    * memory sink's `addBatch` collects EVERY batch's rows to the
+    * driver — in Complete mode that is the FULL result table
+    * re-collected per micro-batch, with all but the last copy
     * discarded by the final rewrite (guide §5: no driver collect in
     * the query path). Here intermediate Complete epochs execute
     * through the noop sink instead — the identical micro-batch plan
@@ -177,27 +172,18 @@ object StreamRegistry {
     * collected. Complete-mode equivalence: the memory sink's final
     * table IS the last epoch's full result (each Complete addBatch
     * replaces the table), which is exactly what the final collect
-    * captures. Append/Update epochs are collected as they emit (the
-    * memory sink collected them too — this drops only the second full
-    * copy the old detach paid re-collecting the sink table at the
-    * end, plus the temp-view register/drop churn). */
+    * captures. */
   private final class BatchCollector {
-    private val buf =
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+    private val buf = scala.collection.mutable.ArrayBuffer[Row]()
     @volatile var finalRound = false
-    def add(df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            complete: Boolean): Unit =
-      if (complete && !finalRound) {
-        df.write.format("noop").mode("overwrite").save()
-      } else {
+    def add(df: Dataset[Row]): Unit =
+      if (!finalRound) df.write.format("noop").mode("overwrite").save()
+      else {
         val rows = df.collect()
-        buf.synchronized {
-          if (complete) buf.clear()
-          buf ++= rows
-        }
+        buf.synchronized { buf.clear(); buf ++= rows }
         ()
       }
-    def rows: Seq[org.apache.spark.sql.Row] = buf.synchronized(buf.toVector)
+    def rows: Seq[Row] = buf.synchronized(buf.toVector)
   }
 
   /** Detached result frame from collected sink rows. Small sinks
@@ -205,7 +191,7 @@ object StreamRegistry {
     * parallelize detach paid a re-encode stage per drive); large ones
     * keep the distributed re-parallelize so the 100x tape replays do
     * not funnel a big sink through one driver-side encode. */
-  private def detached(s: SparkSession, rows: Seq[org.apache.spark.sql.Row],
+  private def detached(s: SparkSession, rows: Seq[Row],
                        schema: org.apache.spark.sql.types.StructType)
       : DataFrame =
     if (rows.length <= 16384) {
@@ -243,125 +229,100 @@ object StreamRegistry {
     unload
   }
 
-  private def runBatches[T](s: SparkSession, batches: Seq[Seq[T]],
-                            mode: OutputMode)
-                           (plan: Dataset[T] => DataFrame)
-                           (implicit enc: Encoder[T]): DataFrame =
-    withStreamConf(s) {
-      implicit val sqlCtx = s.sqlContext
-      val in = MemoryStream[T]
-      val ckpt = freshCkptDir()
-      val complete = mode == OutputMode.Complete
-      val sdf = plan(in.toDS())
-      val outSchema = sdf.schema
-      // Complete mode drives through the foreachBatch collector (skip
-      // the N-1 intermediate full-table collects); Append/Update keep
-      // the memory sink — their per-epoch emissions must be captured
-      // anyway, and an A/B showed the foreachBatch path costs a fresh
-      // QueryExecution per epoch (~+0.5 s on the emission-heavy keys)
-      // while the memory sink write rides the micro-batch execution.
-      val coll = new BatchCollector
-      val name = s"graft_stream_sink_${sinkCtr.incrementAndGet()}"
-      val writer = sdf.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode(mode)
-      val q = prof("start")(
-        (if (complete)
-          writer.foreachBatch(
-            (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) => coll.add(df, complete = true))
-        else writer.format("memory").queryName(name)).start())
-      val out =
-        try {
-          val live = batches.filter(_.nonEmpty)
-          live.zipWithIndex.foreach { case (chunk, i) =>
-            if (i == live.size - 1) coll.finalRound = true
-            prof(s"batch$i(${chunk.size})") {
-              in.addData(chunk: _*); q.processAllAvailable()
-            }
-            if (profEnabled) q.recentProgress.takeRight(2).foreach { p =>
-              System.err.println(s"[streamprof]   b=${p.batchId} " +
-                s"durationMs=${p.durationMs}")
-            }
-          }
-          if (profEnabled) q.explain() // the executed micro-batch plan
-          prof("detach") {
-            val rows =
-              if (complete) coll.rows
-              else s.table(name).collect().toIndexedSeq
-            detached(s, rows, outSchema)
-          }
-        } finally {
-          prof("stop")(q.stop()); rmTree(ckpt)
-          unloadDeadStateStores(s)
-        }
-      if (!complete) s.catalog.dropTempView(name)
-      out
-    }
+  /** A tape split into 4 chunks in tape order — the default drive
+    * feed (4 micro-batches: state carry across batches and the
+    * within-batch re-sort are both exercised). */
+  private def quarters[T](tape: Seq[T]): Seq[Seq[T]] =
+    tape.grouped(math.max(1, (tape.size + 3) / 4)).toSeq
 
-  /** Two-input variant of [[runTape]] for stream-stream joins: both
-    * tapes are fed in aligned chunk rounds (chunk i of B, then chunk
-    * i of A, then one processAllAvailable) — with both tapes in
-    * global event-time order the min-over-inputs watermark always
-    * trails every future row by more than the join lookback, so no
-    * buffered row is evicted before its match arrives (the safety
-    * argument a production Kafka deployment makes with per-partition
-    * time ordering). */
-  private[graft] def runTape2[T](s: SparkSession, tapeA: Seq[T],
-                                 tapeB: Seq[T], mode: OutputMode,
-                                 chunks: Int = 4)
-                                (plan: (Dataset[T], Dataset[T]) => DataFrame)
-                                (implicit enc: Encoder[T]): DataFrame =
-    withStreamConf(s) {
+  /** THE streaming drive: every `q_stream_*` key (and Bench's warm-up)
+    * runs its query through here.
+    *
+    * Round protocol: `feeds` holds one chunk sequence per source; one
+    * MemoryStream per source is handed to `plan` in the same order.
+    * In round i the drive adds chunk i of every source that has one,
+    * in the order given, then calls ONE processAllAvailable — so a
+    * two-source drive can order its legs (the interval join feeds
+    * quotes before trades), and sentinel BATCHES are just extra
+    * chunks. Empty chunks are skipped. Operators whose emission is
+    * driven by the watermark schedule (G33's event-time timeouts fire
+    * in the no-data micro-batch that follows each data batch, against
+    * that batch's watermark — probed on this Spark: strict `timeout <
+    * watermark`, evaluated within the same processAllAvailable) rely
+    * on exactly these batch boundaries.
+    *
+    * Sink by mode, unless `writer` supplies the caller's own:
+    *  - Complete: the [[BatchCollector]] through foreachBatch (only
+    *    the final round's full table is collected);
+    *  - Append/Update: the memory sink under a fresh
+    *    `graft_stream_sink_*` view. Its per-epoch emissions must be
+    *    captured anyway, and an A/B showed the foreachBatch path costs
+    *    a fresh QueryExecution per epoch (~+0.5 s on the
+    *    emission-heavy keys) while the memory sink write rides the
+    *    micro-batch execution.
+    * The collected rows come back [[detached]]; with a `writer` the
+    * sink is the caller's, and the drive returns an empty frame of the
+    * plan's schema.
+    *
+    * `noDataBatches = false` skips the no-data micro-batch after each
+    * drained round. Only an operator whose no-data batch can change
+    * no output may set it: the G6 INNER stream-stream interval join
+    * emits a match in the data batch that completes it, and a no-data
+    * batch's only work there is state EVICTION of rows past the
+    * watermark that no future row can match.
+    *
+    * Cleanup, on every exit path — a throwing `plan` or `start()`
+    * included: the query is stopped, the scoped conf
+    * ([[withStreamConf]]) restored, the fresh checkpoint dir removed
+    * and the sink view dropped; every drive that started a query
+    * counts towards [[unloadDeadStateStores]]. */
+  private[graft] def drive[T](
+      s: SparkSession, feeds: Seq[Seq[Seq[T]]], mode: OutputMode,
+      noDataBatches: Boolean = true,
+      writer: Option[DataFrame => DataStreamWriter[Row]] = None)
+      (plan: Seq[Dataset[T]] => DataFrame)
+      (implicit enc: Encoder[T]): DataFrame =
+    withStreamConf(s, noDataBatches) {
       implicit val sqlCtx = s.sqlContext
-      val inA = MemoryStream[T]
-      val inB = MemoryStream[T]
-      val ckpt = freshCkptDir()
-      val sdf = plan(inA.toDS(), inB.toDS())
-      val outSchema = sdf.schema
+      val ins = feeds.map(_ => MemoryStream[T])
+      val rounds = feeds.map(_.filter(_.nonEmpty))
+      val nRounds = (0 +: rounds.map(_.size)).max
       val name = s"graft_stream_sink_${sinkCtr.incrementAndGet()}"
-      // Skip the no-data micro-batch after each drained round (scoped,
-      // restored on every exit path): the G6 drive is an INNER
-      // stream-stream interval join — matches emit in the data batch
-      // that completes them, and a no-data batch's only work is state
-      // EVICTION, which cannot change inner-join output (rows evicted
-      // are exactly those past the watermark no future row can match).
-      // Each round previously ran data-batch + no-data-batch: 8
-      // micro-batches' fixed cost (4 state stores x 8 partitions each)
-      // for 4 rounds of data. Sink contents are identical —
-      // oracle-checked — and a deployment that wants eager eviction
-      // keeps the default. The checkpoint dir goes on every exit path
-      // too, a failed start() included.
-      val out = try withConf(s,
-          "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-        val q = prof("start")(sdf.writeStream.format("memory")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .queryName(name).outputMode(mode).start())
-        try {
-          val perA = math.max(1, (tapeA.size + chunks - 1) / chunks)
-          val perB = math.max(1, (tapeB.size + chunks - 1) / chunks)
-          val ga = tapeA.grouped(perA).toSeq
-          val gb = tapeB.grouped(perB).toSeq
-          (0 until math.max(ga.size, gb.size)).foreach { i =>
-            prof(s"batch$i") {
-              if (i < gb.size) inB.addData(gb(i): _*)
-              if (i < ga.size) inA.addData(ga(i): _*)
-              q.processAllAvailable()
-            }
-            if (profEnabled) q.recentProgress.takeRight(2).foreach { p =>
-              System.err.println(s"[streamprof]   b=${p.batchId} " +
-                s"durationMs=${p.durationMs}")
-            }
+      val ckpt = freshCkptDir()
+      try {
+        val sdf = plan(ins.map(_.toDS()))
+        val coll = new BatchCollector
+        val (w, sinkRows): (DataStreamWriter[Row], () => Seq[Row]) =
+          writer match {
+            case Some(f) => (f(sdf), () => Nil)
+            case None if mode == OutputMode.Complete =>
+              (sdf.writeStream.foreachBatch(
+                (df: Dataset[Row], _: Long) => coll.add(df)),
+                () => coll.rows)
+            case None =>
+              (sdf.writeStream.format("memory").queryName(name),
+                () => s.table(name).collect().toIndexedSeq)
           }
-          prof("detach")(detached(s,
-            s.table(name).collect().toIndexedSeq, outSchema))
+        val q = w.option("checkpointLocation", ckpt.getAbsolutePath)
+          .outputMode(mode).start()
+        try {
+          (0 until nRounds).foreach { i =>
+            if (i == nRounds - 1) coll.finalRound = true
+            ins.zip(rounds).foreach { case (in, chunks) =>
+              if (i < chunks.size) in.addData(chunks(i): _*)
+            }
+            q.processAllAvailable()
+          }
+          detached(s, sinkRows(), sdf.schema)
         } finally {
-          prof("stop")(q.stop())
+          q.stop()
           unloadDeadStateStores(s)
         }
-      } finally rmTree(ckpt)
-      s.catalog.dropTempView(name)
-      out
+      } finally {
+        rmTree(ckpt)
+        s.catalog.dropTempView(name)
+        ()
+      }
     }
 
   /** Collapse a small batch-trained frame to a LocalRelation with the
@@ -383,6 +344,16 @@ object StreamRegistry {
   /** Pre-build the session tape (Bench's untimed fixture hook). */
   def warmTape(s: SparkSession, d: String): Int = tickTape(s, d).size
 
+  /** A session-memoized tape: `df`'s rows in `df`'s order as `T`,
+    * collected once per (session, memo `key`) through
+    * [[graft.SessionFrameCache]]. `T`'s fields bind to `df`'s columns
+    * by name; extra columns (a sort key) are dropped. Read-only after
+    * construction: every consumer either iterates or concatenates
+    * sentinels onto a copy. */
+  private def tape[T: Encoder](s: SparkSession, key: String)
+                              (df: => DataFrame): Seq[T] =
+    graft.SessionFrameCache.getOrBuild(s, key)(df.as[T].collect().toSeq)
+
   /** The tick tape in tick_id order (globally ts-monotone — verified
     * on the driver corpora; the ingest invariant every tape replay
     * assumes). SESSION-MEMOIZED via [[graft.SessionFrameCache]]: 29
@@ -390,57 +361,37 @@ object StreamRegistry {
     * key (parquet scan + global sort + driver collect) measured as a
     * fixed ~1 s tax on every q_stream_* key at sf0.1 — the tape is
     * the shared fixture of the whole G-family, built once per
-    * (session, sfDir). Read-only after construction (every consumer
-    * either iterates or concatenates sentinels onto a copy). */
+    * (session, sfDir). */
   private def tickTape(s: SparkSession, d: String): Seq[Tick] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_tick_tape:$d") {
-      Tables.ticks(s, d)
-        .select("tick_id", "symbol", "ts", "bid")
-        .orderBy("tick_id")
-        .collect()
-        .map(r => Tick(r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          r.getDouble(3))).toSeq
-    }
+    tape[Tick](s, s"stream_tick_tape:$d")(Tables.ticks(s, d)
+      .select("tick_id", "symbol", "ts", "bid").orderBy("tick_id"))
 
   /** The documents tape in doc_id order — SESSION-MEMOIZED like
     * [[tickTape]]: five registry keys (G3 dedup, G7 near-dup, G23 cms,
     * G27 classifier, G34 manifest) drive this identical tape, and each
     * previously paid its own parquet scan + global sort + driver
     * collect per invocation (x2 under the bench's double-run
-    * protocol). Read-only after construction. */
+    * protocol). */
   private def docTape(s: SparkSession, d: String): Seq[Doc] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_doc_tape:$d") {
-      Tables.documents(s, d).select("doc_id", "text")
-        .orderBy("doc_id").collect()
-        .map(r => Doc(r.getLong(0), r.getString(1))).toSeq
-    }
+    tape[Doc](s, s"stream_doc_tape:$d")(Tables.documents(s, d)
+      .select("doc_id", "text").orderBy("doc_id"))
 
   /** The (doc_id, source, text) tape in doc_id order — shared by G28
     * (KS drift) and G31 (HLL novelty); memoized like [[docTape]]. */
-  private def sourcedDocTape(s: SparkSession, d: String)
-      : Seq[Streaming.SourcedDoc] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_sourceddoc_tape:$d") {
-      Tables.documents(s, d).select("doc_id", "source", "text")
-        .orderBy("doc_id").collect()
-        .map(r => Streaming.SourcedDoc(r.getLong(0), r.getString(1),
-          r.getString(2))).toSeq
-    }
+  private def sourcedDocTape(s: SparkSession, d: String): Seq[SourcedDoc] =
+    tape[SourcedDoc](s, s"stream_sourceddoc_tape:$d")(Tables.documents(s, d)
+      .select("doc_id", "source", "text").orderBy("doc_id"))
 
   /** The trade tape (event_id, symbol, ts, cents, json k) in event_id
     * order — shared by G18 (volume bars) and G26 (running VWAP);
     * memoized like [[docTape]]. */
-  private def barTradeTape(s: SparkSession, d: String)
-      : Seq[Streaming.BarTrade] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_bartrade_tape:$d") {
-      Tables.events(s, d)
-        .select(col("event_id"), col("user_id").as("symbol"), col("ts"),
-          expr("CAST(round(value * 100.0, 0) AS BIGINT)").as("cents"),
-          coalesce(get_json_object(col("props"), "$.k").cast("long"),
-            lit(0L)).as("k"))
-        .orderBy("event_id").collect()
-        .map(r => Streaming.BarTrade(r.getLong(0), r.getLong(1),
-          r.getTimestamp(2), r.getLong(3), r.getLong(4))).toSeq
-    }
+  private def barTradeTape(s: SparkSession, d: String): Seq[BarTrade] =
+    tape[BarTrade](s, s"stream_bartrade_tape:$d")(Tables.events(s, d)
+      .select(col("event_id"), col("user_id").as("symbol"), col("ts"),
+        expr("CAST(round(value * 100.0, 0) AS BIGINT)").as("cents"),
+        coalesce(get_json_object(col("props"), "$.k").cast("long"),
+          lit(0L)).as("k"))
+      .orderBy("event_id"))
 
   /** One sentinel tick per symbol at (tape horizon + 1 day) 07:51 UTC
     * — strictly past every tape (day, slot), so it closes any open
@@ -461,36 +412,30 @@ object StreamRegistry {
 
   /** G1 twin key: streaming 1-second session downsample of the tape. */
   def streamDownsample(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Complete)(
-      t => Streaming.downsample1s(t.toDF()))
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
+      in => Streaming.downsample1s(in.head.toDF()))
       .orderBy("symbol", "ts_s")
 
   /** G4 twin key: per-(symbol, day) streaming tick counts. */
   def streamWindowCounts(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Complete)(
-      t => Streaming.windowCounts(t.toDF(), "1 day"))
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
+      in => Streaming.windowCounts(in.head.toDF(), "1 day"))
       .orderBy("symbol", "win_start")
 
   /** G8 twin key: streaming hourly OHLC bars. */
   def streamOhlc(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Complete)(
-      t => Streaming.ohlcBars(t.toDF(), "1 hour"))
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
+      in => Streaming.ohlcBars(in.head.toDF(), "1 hour"))
       .orderBy("symbol", "bucket_start")
 
   /** G13 twin key: streaming daily VWAP bars over the events tape
     * (json qty rides the tape rows). */
   def streamVwap(s: SparkSession, d: String): DataFrame = {
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_ev_tape:$d") {
-      Tables.events(s, d)
-        .select("event_id", "user_id", "ts", "value", "props")
-        .orderBy("event_id")
-        .collect()
-        .map(r => Ev(r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          r.getDouble(3), r.getString(4))).toSeq
-    }
-    runTape(s, tape, OutputMode.Complete)(
-      t => Streaming.vwapBars(t.toDF()))
+    val evs = tape[Ev](s, s"stream_ev_tape:$d")(Tables.events(s, d)
+      .select("event_id", "user_id", "ts", "value", "props")
+      .orderBy("event_id"))
+    drive(s, Seq(quarters(evs)), OutputMode.Complete)(
+      in => Streaming.vwapBars(in.head.toDF()))
       .orderBy("symbol", "bucket_start")
   }
 
@@ -499,8 +444,8 @@ object StreamRegistry {
     * (the §6 house rule: never hash a sub-second timestamp cell). */
   def streamSessions(s: SparkSession, d: String, gap: String)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Complete)(
-      t => Streaming.sessionWindows(t.toDF(), gap))
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
+      in => Streaming.sessionWindows(in.head.toDF(), gap))
       .select(col("symbol"),
         unix_micros(col("session_start")).as("session_start_us"),
         unix_micros(col("session_end")).as("session_end_us"),
@@ -510,11 +455,10 @@ object StreamRegistry {
   /** G23 twin key: the count-min cell grid maintained as a live
     * aggregation over the documents tape — streaming state IS the
     * sketch (≤ 4·1024 int64 cells). */
-  def streamCms(s: SparkSession, d: String): DataFrame = {
-    runTape(s, docTape(s, d), OutputMode.Complete)(
-      t => Streaming.cmsCellCounts(t.toDF()))
+  def streamCms(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(docTape(s, d))), OutputMode.Complete)(
+      in => Streaming.cmsCellCounts(in.head.toDF()))
       .orderBy("rw", "cell")
-  }
 
   // ===== Append-mode per-row keyed-state operators ===================
 
@@ -523,20 +467,14 @@ object StreamRegistry {
     * per batch; the FINAL register per key is the row with the
     * largest n_changes (strictly increasing per emission). */
   def streamCdc(s: SparkSession, d: String): DataFrame = {
-    import Streaming.Change
-    implicit val chEnc: Encoder[Change] = Encoders.product[Change]
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_change_tape:$d") {
-      Tables.events(s, d)
-        .select(col("event_id").as("seq"), col("user_id").as("key"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("value"))
-        .orderBy("seq").collect()
-        .map(r => Change(r.getLong(0), r.getLong(1), r.getString(2),
-          r.getDouble(3))).toSeq
-    }
-    val sink = runTape(s, tape, OutputMode.Update)(
-      t => Streaming.cdcState(t).toDF())
+    val changes = tape[Change](s, s"stream_change_tape:$d")(Tables
+      .events(s, d)
+      .select(col("event_id").as("seq"), col("user_id").as("key"),
+        when(col("event_type") === "error", "D").otherwise("U").as("op"),
+        col("value"))
+      .orderBy("seq"))
+    val sink = drive(s, Seq(quarters(changes)), OutputMode.Update)(
+      in => Streaming.cdcState(in.head).toDF())
     import org.apache.spark.sql.expressions.Window
     sink.withColumn("_rn", row_number().over(
         Window.partitionBy("key").orderBy(col("n_changes").desc)))
@@ -549,21 +487,18 @@ object StreamRegistry {
     * symbol's trailing partial bar (no sentinel can close a
     * quantity-threshold bar). */
   def streamVolumeBars(s: SparkSession, d: String, barQty: Long)
-      : DataFrame = {
-    import Streaming.BarTrade
-    implicit val btEnc: Encoder[BarTrade] = Encoders.product[BarTrade]
-    runTape(s, barTradeTape(s, d), OutputMode.Append)(
-      t => Streaming.volumeBarState(t, barQty).toDF())
+      : DataFrame =
+    drive(s, Seq(quarters(barTradeTape(s, d))), OutputMode.Append)(
+      in => Streaming.volumeBarState(in.head, barQty).toDF())
       .orderBy("symbol", "bar_id")
-  }
 
 
   /** G20 twin key: per-tick running TWAP through B13's exact-integer
     * half-up formula — every interval-completing arrival emits the
     * TWAP so far (nothing emits while Σdur = 0). */
   def streamTwap(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.twapPoints(t).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.twapPoints(in.head).toDF())
       .orderBy("symbol", "date", "n_weighted")
 
   /** G19 twin key: one-tick-lookahead spike decisions — each tick's
@@ -572,8 +507,8 @@ object StreamRegistry {
     * successor in state). */
   def streamSpikes(s: SparkSession, d: String, thresholdBp: Long)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.spikeFlags(t, thresholdBp).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.spikeFlags(in.head, thresholdBp).toDF())
       .orderBy("tick_id")
 
   /** G22 twin key: running realized moments per (symbol, day) — a
@@ -581,21 +516,18 @@ object StreamRegistry {
     * sums are integer-valued doubles, so prefix sums are exact and
     * the rounded moment formulas evaluate identically batch-side. */
   def streamMoments(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.momentPoints(t).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.momentPoints(in.head).toDF())
       .orderBy("symbol", "date", "n_moves")
 
   /** G26 twin key: live TCA — fill-aligned running-VWAP slippage
     * points off the two exact int64 state sums (cum qty, cum p·q);
     * the D52 report spelling verbatim, zero-qty quotes transparent. */
   def streamRunningVwap(s: SparkSession, d: String, fillEvery: Int)
-      : DataFrame = {
-    import Streaming.BarTrade
-    implicit val btEnc: Encoder[BarTrade] = Encoders.product[BarTrade]
-    runTape(s, barTradeTape(s, d), OutputMode.Append)(
-      t => Streaming.runningVwapPoints(t, fillEvery).toDF())
+      : DataFrame =
+    drive(s, Seq(quarters(barTradeTape(s, d))), OutputMode.Append)(
+      in => Streaming.runningVwapPoints(in.head, fillEvery).toDF())
       .orderBy("symbol", "fill_id")
-  }
 
   /** G21 twin key: triple-barrier labels emitted at the deciding
     * tick; on a bounded tape the sink is the batch D38 frame minus
@@ -603,8 +535,8 @@ object StreamRegistry {
     * with n_lookahead < horizon — still open in state). */
   def streamTripleBarrier(s: SparkSession, d: String, entryEvery: Int,
                           horizon: Int, barrierBp: Long): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.tripleBarrierState(t, entryEvery, horizon,
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.tripleBarrierState(in.head, entryEvery, horizon,
         barrierBp).toDF())
       .orderBy("symbol", "e_idx")
 
@@ -613,47 +545,37 @@ object StreamRegistry {
     * (exact int64 sums, one IEEE division per point). */
   def streamResponse(s: SparkSession, d: String, lags: Seq[Int])
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.responsePoints(t, lags).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.responsePoints(in.head, lags).toDF())
       .orderBy("symbol", "lag", "n_obs", "resp_cents")
 
   /** G27 twin key: the learned-quality admission gate scoring the
     * live document feed — stateless per-row margin fold through the
     * native PolyHash, admission on the exact int64 sign. */
-  def streamClassifier(s: SparkSession, d: String): DataFrame = {
-    runTape(s, docTape(s, d), OutputMode.Append)(
-      t => Streaming.classifierAdmission(t))
+  def streamClassifier(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(docTape(s, d))), OutputMode.Append)(
+      in => Streaming.classifierAdmission(in.head))
       .orderBy("doc_id")
-  }
 
   /** G31 twin key: the per-source HLL novelty monitor — each
     * micro-batch emits every touched source's CURRENT 32-register
     * summary, so the sink is the full snapshot LADDER (one row per
     * (source, batch-with-new-grams)); the oracle rebuilds the same
     * ladder from the deterministic 4-chunk tape prefixes. */
-  def streamHll(s: SparkSession, d: String): DataFrame = {
-    import Streaming.SourcedDoc
-    implicit val sdEnc: Encoder[SourcedDoc] = Encoders.product[SourcedDoc]
-    runTape(s, sourcedDocTape(s, d), OutputMode.Append)(
-      t => Streaming.hllNdvPoints(t, 2).toDF())
+  def streamHll(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(sourcedDocTape(s, d))), OutputMode.Append)(
+      in => Streaming.hllNdvPoints(in.head, 2).toDF())
       .orderBy("source", "n_zero_registers", "sum_scaled")
-  }
 
   /** The orders tape in global (day, orderkey) arrival order —
     * SESSION-MEMOIZED like [[tickTape]] (r17: G30 and G36 each paid
     * their own parquet scan + global sort + driver collect; at 100×
-    * that is two redundant 15 M-row collects). Read-only after
-    * construction; both consumers only iterate. */
-  private def orderTape(s: SparkSession, d: String)
-      : Seq[Streaming.OrderArrival] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_order_tape:$d") {
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).as("day_i"))
-        .orderBy("day_i", "o_orderkey").collect()
-        .map(r => Streaming.OrderArrival(r.getLong(0), r.getLong(1),
-          r.getInt(2))).toSeq
-    }
+    * that is two redundant 15 M-row collects). */
+  private def orderTape(s: SparkSession, d: String): Seq[OrderArrival] =
+    tape[OrderArrival](s, s"stream_order_tape:$d")(Tables.orders(s, d)
+      .select(col("o_orderkey"), col("o_custkey"),
+        datediff(col("o_orderdate"), lit("1970-01-01")).as("day_i"))
+      .orderBy("day_i", "o_orderkey"))
 
   /** Pre-build the session orders tape (Bench/Sf1Smoke fixture). */
   def warmOrderTape(s: SparkSession, d: String): Int =
@@ -663,30 +585,19 @@ object StreamRegistry {
     * the fraud-screen count over the customer's strictly-earlier days
     * inside the window, fed in global (day, orderkey) order. */
   def streamOrderVelocity(s: SparkSession, d: String, windowDays: Int)
-      : DataFrame = {
-    import Streaming.OrderArrival
-    implicit val oaEnc: Encoder[OrderArrival] =
-      Encoders.product[OrderArrival]
-    runTape(s, orderTape(s, d), OutputMode.Append)(
-      t => Streaming.orderVelocityPoints(t, windowDays).toDF())
+      : DataFrame =
+    drive(s, Seq(quarters(orderTape(s, d))), OutputMode.Append)(
+      in => Streaming.orderVelocityPoints(in.head, windowDays).toDF())
       .orderBy("o_orderkey")
-  }
 
   /** G38 twin key: per-user event-path edges emitted at arrival off
     * the one-string last-type register. */
   def streamPathEdges(s: SparkSession, d: String): DataFrame = {
-    import Streaming.PathEvent
-    implicit val peEnc: Encoder[PathEvent] = Encoders.product[PathEvent]
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_pathevent_tape:$d") {
-      Tables.events(s, d)
-        .select("event_id", "user_id", "ts", "event_type")
-        .orderBy("event_id").collect()
-        .map(r => PathEvent(r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          r.getString(3))).toSeq
-    }
-    runTape(s, tape, OutputMode.Append)(
-      t => Streaming.pathEdges(t).toDF())
+    val evs = tape[PathEvent](s, s"stream_pathevent_tape:$d")(Tables
+      .events(s, d)
+      .select("event_id", "user_id", "ts", "event_type").orderBy("event_id"))
+    drive(s, Seq(quarters(evs)), OutputMode.Append)(
+      in => Streaming.pathEdges(in.head).toDF())
       .orderBy("user_id", "prev_type", "next_type")
   }
 
@@ -694,11 +605,10 @@ object StreamRegistry {
     * micro-batch emits every touched split's running counts / id
     * bounds / mod-p content checksum (n_docs strictly increases per
     * emission, so the ladder rows are distinct by construction). */
-  def streamManifest(s: SparkSession, d: String): DataFrame = {
-    runTape(s, docTape(s, d), OutputMode.Append)(
-      t => Streaming.manifestPoints(t).toDF())
+  def streamManifest(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(docTape(s, d))), OutputMode.Append)(
+      in => Streaming.manifestPoints(in.head).toDF())
       .orderBy("split", "n_docs")
-  }
 
   /** G15 twin key: the deployment-split burst flagger — the
     * per-symbol p90 rate thresholds train offline (B10's spelling at
@@ -717,8 +627,8 @@ object StreamRegistry {
         .groupBy("symbol")
         .agg(round(expr(s"percentile(n, $pct)"), 4).as("thr")))
     }
-    runTape(s, tickTape(s, d), OutputMode.Complete)(
-      t => Streaming.burstFlags(t.toDF(), trained,
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
+      in => Streaming.burstFlags(in.head.toDF(), trained,
         windowDur = "1 minute"))
       .orderBy("symbol", "sec")
   }
@@ -734,8 +644,8 @@ object StreamRegistry {
       localized(graft.operators.Microstructure
         .seasonalBaseline(Tables.ticks(s, d)))
     }
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.seasonalFlags(t, baseline, threshold))
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.seasonalFlags(in.head, baseline, threshold))
       .orderBy("symbol", "tick_id")
   }
 
@@ -746,10 +656,17 @@ object StreamRegistry {
     * never hash a sub-second timestamp cell). */
   def streamIntervalJoin(s: SparkSession, d: String, lookback: String)
       : DataFrame = {
-    val tape = tickTape(s, d)
-    val trades = tape.filter(_.tick_id % 20 == 0)
-    runTape2(s, trades, tape, OutputMode.Append)(
-      (t, q) => Streaming.intervalJoin(t.toDF(), q.toDF(), lookback))
+    val quotes = tickTape(s, d)
+    val trades = quotes.filter(_.tick_id % 20 == 0)
+    // quotes fed before trades in every round, so with both tapes in
+    // global event-time order the min-over-inputs watermark always
+    // trails every future row by more than the lookback: no buffered
+    // row is evicted before its match arrives (the argument a
+    // production Kafka deployment makes with per-partition time
+    // ordering). No-data batches skipped: see [[drive]].
+    drive(s, Seq(quarters(quotes), quarters(trades)), OutputMode.Append,
+        noDataBatches = false)(
+      in => Streaming.intervalJoin(in(1).toDF(), in(0).toDF(), lookback))
       .select(col("trade_id"), col("symbol"),
         unix_micros(col("trade_ts")).as("trade_us"),
         unix_micros(col("quote_ts")).as("quote_us"), col("quote_bid"))
@@ -760,8 +677,8 @@ object StreamRegistry {
     * recursion e' = (bid + e)/2 per (symbol, day), every arrival
     * emitting the current estimate. */
   def streamEwma(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.ewmaPoints(t).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.ewmaPoints(in.head).toDF())
       .orderBy("tick_id")
 
   /** G29 twin key: point-in-time feature serving — the two-register
@@ -769,23 +686,17 @@ object StreamRegistry {
     * read by purchase facts (kind 1), matching the E16 offline join
     * row for row. */
   def streamPit(s: SparkSession, d: String): DataFrame = {
-    import Streaming.PitEvent
-    implicit val peEnc: Encoder[PitEvent] = Encoders.product[PitEvent]
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_pitevent_tape:$d") {
-      Tables.events(s, d)
-        .filter(col("event_type").isin("click", "view", "purchase"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          when(col("event_type") === "click", 0)
-            .when(col("event_type") === "view", 2)
-            .otherwise(1).as("kind"),
-          col("event_id").as("id"), col("value").as("v"))
-        .orderBy("id").collect()
-        .map(r => PitEvent(r.getLong(0), r.getTimestamp(1), r.getInt(2),
-          r.getLong(3), r.getDouble(4))).toSeq
-    }
-    runTape(s, tape, OutputMode.Append)(
-      t => Streaming.pitServePoints(t).toDF())
+    val evs = tape[PitEvent](s, s"stream_pitevent_tape:$d")(Tables
+      .events(s, d)
+      .filter(col("event_type").isin("click", "view", "purchase"))
+      .select(col("user_id").as("symbol"), col("ts"),
+        when(col("event_type") === "click", 0)
+          .when(col("event_type") === "view", 2)
+          .otherwise(1).as("kind"),
+        col("event_id").as("id"), col("value").as("v"))
+      .orderBy("id"))
+    drive(s, Seq(quarters(evs)), OutputMode.Append)(
+      in => Streaming.pitServePoints(in.head).toDF())
       .orderBy("fact_id")
   }
 
@@ -795,8 +706,6 @@ object StreamRegistry {
     * (trained on the same corpus here — the self-drift audit shape). */
   def streamKsDrift(s: SparkSession, d: String, maxLen: Int)
       : DataFrame = {
-    import Streaming.SourcedDoc
-    implicit val sdEnc: Encoder[SourcedDoc] = Encoders.product[SourcedDoc]
     // the offline-trained reference CDF: one batch job per
     // (session, corpus, maxLen) — memoized like [[centroidArtifacts]]
     val ref = graft.SessionFrameCache.getOrBuild(
@@ -804,8 +713,8 @@ object StreamRegistry {
       graft.operators.CorpusPipeline.lengthCdf(Tables.documents(s, d),
         maxLen)
     }
-    runTape(s, sourcedDocTape(s, d), OutputMode.Append)(
-      t => Streaming.ksDriftPoints(t, ref, maxLen).toDF())
+    drive(s, Seq(quarters(sourcedDocTape(s, d))), OutputMode.Append)(
+      in => Streaming.ksDriftPoints(in.head, ref, maxLen).toDF())
       .orderBy("source", "n_docs")
   }
 
@@ -813,14 +722,10 @@ object StreamRegistry {
     * six int64 registers per customer, every order emitting the
     * running covered/span report. */
   def streamCoverage(s: SparkSession, d: String, windowDays: Int)
-      : DataFrame = {
-    import Streaming.OrderArrival
-    implicit val oaEnc: Encoder[OrderArrival] =
-      Encoders.product[OrderArrival]
-    runTape(s, orderTape(s, d), OutputMode.Append)(
-      t => Streaming.coveragePoints(t, windowDays).toDF())
+      : DataFrame =
+    drive(s, Seq(quarters(orderTape(s, d))), OutputMode.Append)(
+      in => Streaming.coveragePoints(in.head, windowDays).toDF())
       .orderBy("o_orderkey")
-  }
 
   /** G17 twin key: late-arrival flags on the B11 jittered-arrival
     * replay — the tape is fed in (deterministic-hash) ARRIVAL order,
@@ -830,8 +735,7 @@ object StreamRegistry {
     * replays exactly that order. */
   def streamLate(s: SparkSession, d: String, delayUs: Long): DataFrame = {
     import org.apache.spark.sql.functions.{pmod, unix_micros}
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_late_tape:$d") {
+    val ticks = tape[Tick](s, s"stream_late_tape:$d") {
       val p = graft.functions.PortableText.P
       val jitter = pmod(pmod(col("tick_id"), lit(p)) * lit(2654435761L),
         lit(p)).%(lit(1200000000L)).-(lit(600000000L))
@@ -839,33 +743,22 @@ object StreamRegistry {
         .select(col("tick_id"), col("symbol"), col("ts"), col("bid"),
           (unix_micros(col("ts")) + jitter).as("arr"))
         .orderBy("arr", "tick_id")
-        .collect()
-        .map(r => Tick(r.getLong(0), r.getLong(1), r.getTimestamp(2),
-          r.getDouble(3))).toSeq
     }
-    runTape(s, tape, OutputMode.Append)(
-      t => Streaming.lateFlags(t, delayUs).toDF())
+    drive(s, Seq(quarters(ticks)), OutputMode.Append)(
+      in => Streaming.lateFlags(in.head, delayUs).toDF())
       .orderBy("tick_id")
   }
 
   /** G16 twin key: the greedy funnel over the event-time-ordered
     * feed — one row per stage advance, chained-min parity. */
   def streamFunnel(s: SparkSession, d: String, tauUs: Long): DataFrame = {
-    import Streaming.FunnelEvent
-    implicit val feEnc: Encoder[FunnelEvent] =
-      Encoders.product[FunnelEvent]
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_funnel_tape:$d") {
-      Tables.events(s, d)
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"))
-        .orderBy(unix_micros(col("ts")), col("event_id")).collect()
-        .map(r => FunnelEvent(r.getLong(0), r.getLong(1),
-          r.getTimestamp(2), r.getString(3))).toSeq
-    }
-    runTape(s, tape, OutputMode.Append)(
-      t => Streaming.funnelProgress(t, "view", "click", "purchase",
+    val evs = tape[FunnelEvent](s, s"stream_funnel_tape:$d")(Tables
+      .events(s, d)
+      .filter(col("event_type").isin("view", "click", "purchase"))
+      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+      .orderBy(unix_micros(col("ts")), col("event_id")))
+    drive(s, Seq(quarters(evs)), OutputMode.Append)(
+      in => Streaming.funnelProgress(in.head, "view", "click", "purchase",
         tauUs).toDF())
       .orderBy("user_id", "stage")
   }
@@ -873,51 +766,40 @@ object StreamRegistry {
   /** The documents tape in the batch HASH-WALK order (the G9/G10
     * ordering contract: rank by the multiplicative hash, ties by
     * doc_id — a backfill replaying the batch walk). */
-  private def hashWalkTape(s: SparkSession, d: String)
-      : Seq[Streaming.SourcedDoc] =
-    graft.SessionFrameCache.getOrBuild(s, s"stream_hashwalk_tape:$d") {
-      import Streaming.SourcedDoc
+  private def hashWalkTape(s: SparkSession, d: String): Seq[SourcedDoc] =
+    tape[SourcedDoc](s, s"stream_hashwalk_tape:$d") {
       val p = graft.functions.PortableText.P
       Tables.documents(s, d).select("doc_id", "source", "text")
         .withColumn("rnk",
           pmod(pmod(col("doc_id"), lit(p)) + lit(p), lit(p))
             * lit(2654435761L) % lit(p))
-        .orderBy("rnk", "doc_id").collect()
-        .map(r => SourcedDoc(r.getLong(0), r.getString(1),
-          r.getString(2))).toSeq
+        .orderBy("rnk", "doc_id")
     }
 
   /** G9 twin key: token-budget admission on the hash walk — the
     * prefix-cut quota enforced live, decisions matching the batch
     * tokenBudgetPerSource doc for doc. */
   def streamTokenBudget(s: SparkSession, d: String, budget: Long)
-      : DataFrame = {
-    import Streaming.SourcedDoc
-    implicit val sdEnc: Encoder[SourcedDoc] = Encoders.product[SourcedDoc]
-    runTape(s, hashWalkTape(s, d), OutputMode.Append)(
-      t => Streaming.tokenBudgetAdmission(t, budget).toDF())
+      : DataFrame =
+    drive(s, Seq(quarters(hashWalkTape(s, d))), OutputMode.Append)(
+      in => Streaming.tokenBudgetAdmission(in.head, budget).toDF())
       .orderBy("doc_id")
-  }
 
   /** G10 twin key: per-source doc-count cap admission on the hash
     * walk — position ≤ cap admits, permanent rejection after. */
-  def streamSourceCap(s: SparkSession, d: String, cap: Int): DataFrame = {
-    import Streaming.SourcedDoc
-    implicit val sdEnc: Encoder[SourcedDoc] = Encoders.product[SourcedDoc]
-    runTape(s, hashWalkTape(s, d), OutputMode.Append)(
-      t => Streaming.sourceCapAdmission(t, cap).toDF())
+  def streamSourceCap(s: SparkSession, d: String, cap: Int): DataFrame =
+    drive(s, Seq(quarters(hashWalkTape(s, d))), OutputMode.Append)(
+      in => Streaming.sourceCapAdmission(in.head, cap).toDF())
       .orderBy("doc_id")
-  }
 
   /** G7 twin key: streaming near-dup admission — each doc's MinHash
     * LSH bands claim keyed (band, hash) buckets, first-writer-wins in
     * doc_id order; a band flags when its bucket was already claimed,
     * so the flag set equals "an earlier doc shares the bucket". */
-  def streamNearDup(s: SparkSession, d: String): DataFrame = {
-    runTape(s, docTape(s, d), OutputMode.Append)(
-      t => Streaming.nearDupBandFlags(t.toDF()).toDF())
+  def streamNearDup(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(docTape(s, d))), OutputMode.Append)(
+      in => Streaming.nearDupBandFlags(in.head.toDF()).toDF())
       .orderBy("doc_id", "band")
-  }
 
   /** G7b twin key (r16 verdict #4): the STREAMING dup-spectrum —
     * G7's ingest-time near-dup admission driven over the
@@ -941,14 +823,10 @@ object StreamRegistry {
     * bucket rule, which is what the oracle replays. */
   def streamDupSpectrum(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
-    val tape = graft.SessionFrameCache.getOrBuild(
-      s, s"stream_dup_tape:$d") {
-      graft.operators.RichCorpus.dupDocs(base)
-        .select("doc_id", "text").orderBy("doc_id").collect()
-        .map(r => Doc(r.getLong(0), r.getString(1))).toSeq
-    }
-    val flags = runTape(s, tape, OutputMode.Append)(
-      t => Streaming.nearDupBandFlags(t.toDF()).toDF())
+    val docs = tape[Doc](s, s"stream_dup_tape:$d")(graft.operators
+      .RichCorpus.dupDocs(base).select("doc_id", "text").orderBy("doc_id"))
+    val flags = drive(s, Seq(quarters(docs)), OutputMode.Append)(
+      in => Streaming.nearDupBandFlags(in.head.toDF()).toDF())
     val verdict = flags.groupBy("doc_id")
       .agg(expr("bool_or(dup_band)").as("is_dup"))
     graft.operators.RichCorpus.dupPairs(base)
@@ -977,8 +855,8 @@ object StreamRegistry {
         .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
         .toMap
     }
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.volConeAlerts(t, cones, h).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.volConeAlerts(in.head, cones, h).toDF())
       .orderBy("symbol", "day")
   }
 
@@ -991,26 +869,15 @@ object StreamRegistry {
     * equal to the plain tick view iff the sink landed every tick
     * exactly once and the replay was a no-op. */
   def streamUpsertAudit(s: SparkSession, d: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import org.apache.spark.sql.functions.pmod
     val p = graft.functions.PortableText.P
     val table = s"graft_stream_upsert_${sinkCtr.incrementAndGet()}"
-    val tape = tickTape(s, d)
-    val per = math.max(1, (tape.size + 3) / 4)
-    val chunks = tape.grouped(per).toSeq
+    val chunks = quarters(tickTape(s, d))
     try {
       s.createDataFrame(chunks.head).write.saveAsTable(table)
-      val in = MemoryStream[Tick]
-      val ckpt = freshCkptDir()
-      val q = withNioCkpt(s) {
-        Streaming.idempotentTickSink(in.toDS(), table)
-          .option("checkpointLocation", ckpt.getAbsolutePath).start()
-      }
-      try {
-        chunks.drop(1).foreach { c =>
-          in.addData(c: _*); q.processAllAvailable()
-        }
-      } finally { q.stop(); rmTree(ckpt); unloadDeadStateStores(s) }
+      drive(s, Seq(chunks.drop(1)), OutputMode.Update,
+        writer = Some(df => Streaming.idempotentTickSink(df.as[Tick], table)))(
+        in => in.head.toDF())
       if (chunks.size > 1)
         Streaming.upsertBatch(table, Seq("tick_id"))(
           s.createDataFrame(chunks.last), chunks.size - 1L)
@@ -1033,23 +900,22 @@ object StreamRegistry {
 
   /** G12 twin key: per-tick tick-rule classes off one-double state. */
   def streamTickClasses(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.tickClasses(t).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.tickClasses(in.head).toDF())
       .orderBy("tick_id")
 
   /** G35 twin key: per-tick drawdown points off the running peak. */
   def streamDrawdown(s: SparkSession, d: String): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.drawdownPoints(t).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.drawdownPoints(in.head).toDF())
       .orderBy("tick_id")
 
   /** G3 twin key: streaming exact dedup over the documents tape in
     * doc_id order — first arrival per md5 content hash wins. */
-  def streamDedupExact(s: SparkSession, d: String): DataFrame = {
-    runTape(s, docTape(s, d), OutputMode.Append)(
-      t => Streaming.dedupExact(t).toDF())
+  def streamDedupExact(s: SparkSession, d: String): DataFrame =
+    drive(s, Seq(quarters(docTape(s, d))), OutputMode.Append)(
+      in => Streaming.dedupExact(in.head).toDF())
       .orderBy("doc_id")
-  }
 
   // ===== Deployed-model session-window scorers (G40/G43) ============
 
@@ -1128,8 +994,8 @@ object StreamRegistry {
   def streamAnomaly(s: SparkSession, d: String, k: Int,
                     pct: Double): DataFrame = {
     val (scalers, centroids, thresholds) = centroidArtifacts(s, d, k, pct)
-    runTape(s, withSentinels(tickTape(s, d)), OutputMode.Append)(
-      t => Streaming.windowAnomalyAlerts(t, k, scalers, centroids,
+    drive(s, Seq(quarters(withSentinels(tickTape(s, d)))), OutputMode.Append)(
+      in => Streaming.windowAnomalyAlerts(in.head, k, scalers, centroids,
         thresholds).toDF())
       .orderBy("symbol", "date", "win")
   }
@@ -1141,8 +1007,8 @@ object StreamRegistry {
   def streamPositions(s: SparkSession, d: String, k: Int, pct: Double,
                       exitFrac: Double, fromDate: String): DataFrame = {
     val (scalers, centroids, thresholds) = centroidArtifacts(s, d, k, pct)
-    runTape(s, withSentinels(tickTape(s, d)), OutputMode.Append)(
-      t => Streaming.signalPositions(t, k, scalers, centroids,
+    drive(s, Seq(quarters(withSentinels(tickTape(s, d)))), OutputMode.Append)(
+      in => Streaming.signalPositions(in.head, k, scalers, centroids,
         thresholds, exitFrac, fromDate).toDF())
       .orderBy("symbol", "date", "win")
   }
@@ -1153,8 +1019,8 @@ object StreamRegistry {
   def streamRetrain(s: SparkSession, d: String, k: Int, pct: Double,
                     consecutive: Int): DataFrame = {
     val (scalers, centroids, thresholds) = centroidArtifacts(s, d, k, pct)
-    runTape(s, withSentinels(tickTape(s, d)), OutputMode.Append)(
-      t => Streaming.retrainAlerts(t, k, scalers, centroids,
+    drive(s, Seq(quarters(withSentinels(tickTape(s, d)))), OutputMode.Append)(
+      in => Streaming.retrainAlerts(in.head, k, scalers, centroids,
         thresholds, consecutive).toDF())
       .orderBy("symbol", "date", "win")
   }
@@ -1189,8 +1055,8 @@ object StreamRegistry {
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         (sc, w, th)
       }
-    runTape(s, withSentinels(tickTape(s, d)), OutputMode.Append)(
-      t => Streaming.gdModelScores(t, k, scalers, weights,
+    drive(s, Seq(quarters(withSentinels(tickTape(s, d)))), OutputMode.Append)(
+      in => Streaming.gdModelScores(in.head, k, scalers, weights,
         thresholds).toDF())
       .orderBy("symbol", "date", "win")
   }
@@ -1203,8 +1069,8 @@ object StreamRegistry {
     * IEEE recurrence over each symbol's prefix list. */
   def streamWelford(s: SparkSession, d: String, kSigma: Double)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Update)(
-      t => Streaming.anomalyFlags(t, kSigma).toDF()
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Update)(
+      in => Streaming.anomalyFlags(in.head, kSigma).toDF()
         .withColumnRenamed("isAnomaly", "is_anomaly"))
       .orderBy("symbol", "n")
 
@@ -1226,8 +1092,8 @@ object StreamRegistry {
       .collect { case Seq(a, b) => (a, b) }.take(nPairs).toSeq
     val betas = pairs.zipWithIndex
       .map { case (p, j) => p -> (0.5 + 0.25 * j) }.toMap
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.pairSpreadZ(t, pairs, betas).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.pairSpreadZ(in.head, pairs, betas).toDF())
       .orderBy("tick_id", "sym_a", "sym_b")
   }
 
@@ -1237,8 +1103,8 @@ object StreamRegistry {
     * over each move prefix. */
   def streamGarch(s: SparkSession, d: String, omega: Double,
                   alpha: Double, beta: Double): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.garchPoints(t, omega, alpha, beta).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.garchPoints(in.head, omega, alpha, beta).toDF())
       .orderBy("symbol", "date", "n_move")
 
   /** G45 twin key: the Kalman local-level filter on the tape — a
@@ -1246,8 +1112,8 @@ object StreamRegistry {
     * replays the identical fold over each tick prefix. */
   def streamKalman(s: SparkSession, d: String, q: Double, r: Double)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.kalmanPoints(t, q, r).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.kalmanPoints(in.head, q, r).toDF())
       .orderBy("symbol", "date", "n_seen")
 
   /** G46 twin key: the symmetric CUSUM filter on the tape — a point
@@ -1255,8 +1121,8 @@ object StreamRegistry {
     * count; the oracle replays the branchless int64 fold over each
     * move prefix. */
   def streamCusum(s: SparkSession, d: String, h: Long): DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.cusumPoints(t, h).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.cusumPoints(in.head, h).toDF())
       .orderBy("symbol", "date", "n_move")
 
   /** G47 twin key: fixed-width FFD on the tape — a point per tick
@@ -1264,8 +1130,8 @@ object StreamRegistry {
     * frame row for row, so the oracle is the batch oracle. */
   def streamFfd(s: SparkSession, d: String, dOrd: Double, k: Int)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.ffdPoints(t, dOrd, k).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.ffdPoints(in.head, dOrd, k).toDF())
       .orderBy("tick_id")
 
   /** G49 twin key: the F78 media lake replayed as an id-ordered
@@ -1282,8 +1148,8 @@ object StreamRegistry {
       Multimodal.syntheticDupMedia(s, nDistinct)
         .collect().sortBy(_.media_id).toSeq
     }
-    runTape(s, tape, OutputMode.Append)(
-      m => Streaming.mediaAdmission(m).toDF())
+    drive(s, Seq(quarters(tape)), OutputMode.Append)(
+      in => Streaming.mediaAdmission(in.head).toDF())
       .orderBy("media_id")
   }
 
@@ -1294,14 +1160,14 @@ object StreamRegistry {
   def streamHmm(s: SparkSession, d: String,
                 hp: graft.operators.Microstructure.HmmParams)
       : DataFrame =
-    runTape(s, tickTape(s, d), OutputMode.Append)(
-      t => Streaming.hmmPoints(t, hp).toDF())
+    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
+      in => Streaming.hmmPoints(in.head, hp).toDF())
       .orderBy("symbol", "date", "n_move")
 
   /** G33 twin key: the event-time-timeout dormancy detector on the
     * tape. Emission is WATERMARK-driven, so the drive protocol IS
     * part of the contract and the oracle simulates it exactly: 4
-    * tape chunks (the runTape default), then two sentinel BATCHES
+    * tape chunks (the [[quarters]] split), then two sentinel BATCHES
     * (an off-roster symbol at maxTs + gap + 1ms and + 2·gap + 2ms).
     * After every data batch this Spark runs a no-data micro-batch
     * that fires timeouts against that batch's watermark (probed:
@@ -1319,10 +1185,8 @@ object StreamRegistry {
     val maxMs = tape.iterator.map(_.ts.getTime).max
     val s1 = Tick(-1L, -1L, new java.sql.Timestamp(maxMs + gapMs + 1), 0.0)
     val s2 = Tick(-2L, -1L, new java.sql.Timestamp(maxMs + 2 * gapMs + 2), 0.0)
-    val per = math.max(1, (tape.size + 3) / 4)
-    runBatches(s, tape.grouped(per).toSeq ++ Seq(Seq(s1), Seq(s2)),
-      OutputMode.Append)(
-      t => Streaming.dormancyFlags(t, gapMs).toDF())
+    drive(s, Seq(quarters(tape) ++ Seq(Seq(s1), Seq(s2))),
+      OutputMode.Append)(in => Streaming.dormancyFlags(in.head, gapMs).toDF())
       .orderBy("symbol", "last_tick_id")
   }
 }

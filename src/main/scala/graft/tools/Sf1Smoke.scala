@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{GraftSession, SparkEntry}
+import graft.{Fixtures, GraftSession, SparkEntry}
 
 /** Round-8 sf1-scale smoke of the dedup family (r5/r6 verdicts' ask:
   * first evidence beyond sf0.1 that the LSH shuffle sizes scale as
@@ -510,26 +510,15 @@ object Sf1Smoke {
     val fixtures: Seq[(String, Double)] =
       if (whichFamily != "registry") Seq.empty
       else {
-        import graft.sources.Tables
         // pair_census is NOT prebuilt here (r16 verdict finding): its
         // only consumers (q_dedup_curve / q_lsh_planner) are excluded
         // from this sweep as quadratic-by-construction on the all-dup
         // replica, so the 354 s census (the single largest line of the
         // r16 bracket) priced work nothing in the sweep consumed.
         // Bench still prebuilds it — there the consumers run.
-        Seq(
-          fixture("slot_chain") {
-            graft.operators.Features.slotChain(Tables.ticks(spark, outDir),
-              SparkEntry.tensorSlots, 0.6, 0.2, Some(outDir)).errs.count(); ()
-          },
-          fixture("gd_fit") {
-            graft.operators.Features.gdFit(Tables.ticks(spark, outDir),
-              SparkEntry.tensorSlots, 2, 4, 0.0625, 0.6, 0.2, Some(outDir))
-              .errs.count(); ()
-          },
-          fixture("ivf_cents") {
-            SparkEntry.servedIvfCentroids(spark, outDir); ()
-          })
+        Seq("slot_chain", "gd_fit", "ivf_cents").map { name =>
+          fixture(name)(Fixtures(name)(spark, outDir))
+        }
       }
     val phases = if (whichFamily == "registry") Seq("cold")
                  else Seq("cold", "warm")
@@ -594,29 +583,19 @@ object Sf1Smoke {
         (Seq.empty[(String, Double)], Seq.empty[(String, Double)])
       else {
         buildStreamTables()
-        import graft.sources.Tables
         // the G-family's shared builds, prebuilt against streamDir so
         // the per-key rows are marginal cost (the Bench discipline):
         // the session-memoized tick tape (29 drive consumers) and the
         // batch-trained deployment artifacts four serving keys load.
-        val sf = Seq(
-          fixture("stream_tape") {
-            graft.streaming.StreamRegistry.warmTape(spark, streamDir); ()
-          },
-          fixture("order_tape") {
-            graft.streaming.StreamRegistry.warmOrderTape(spark, streamDir)
-            ()
-          },
-          fixture("slot_chain_stream") {
-            graft.operators.Features.slotChain(
-              Tables.ticks(spark, streamDir), SparkEntry.tensorSlots,
-              0.6, 0.2, Some(streamDir)).errs.count(); ()
-          },
-          fixture("gd_fit_stream") {
-            graft.operators.Features.gdFit(Tables.ticks(spark, streamDir),
-              SparkEntry.tensorSlots, 2, 4, 0.0625, 0.6, 0.2,
-              Some(streamDir)).errs.count(); ()
-          })
+        // (fixture row name -> Fixtures name; the slot chain and GD
+        // fit rows carry a _stream suffix to tell them from the batch
+        // pass's builds on outDir)
+        val sf = Seq("stream_tape" -> "stream_tape",
+            "order_tape" -> "order_tape",
+            "slot_chain_stream" -> "slot_chain",
+            "gd_fit_stream" -> "gd_fit").map { case (row, name) =>
+          fixture(row)(Fixtures(name)(spark, streamDir))
+        }
         val st = streamFamily.map { q =>
           val before = graft.CkptGc.snapshot(spark)
           var failed = false

@@ -1295,19 +1295,62 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** What a drive must leave as it found it, failed or not: the
+    * session conf, this JVM's checkpoint dirs under the checkpoint
+    * root and the `graft_stream_sink_*` views. */
+  private def driveTraces() = (
+    spark.conf.getAll,
+    Option(new java.io.File(graft.streaming.StreamRegistry.ckptRoot)
+      .list()).toSeq.flatten
+      .filter(_.startsWith(graft.streaming.StreamRegistry.ckptPrefix)).toSet,
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_sink_")).toSet)
+
+  /** Both drive shapes, each with its feeds and `noDataBatches`: one
+    * source on the defaults, and two sources with no-data batches off
+    * (the interval join's drive). */
+  private val driveShapes = Seq(
+    (Seq(Seq(Seq(1L, 2L))), true),
+    (Seq(Seq(Seq(1L, 2L)), Seq(Seq(3L))), false))
+
+  private def assertDriveLeftNoTraces(
+      before: (Map[String, String], Set[String], Set[String])): Unit = {
+    val (conf, ckpts, views) = driveTraces()
+    assert(conf == before._1)
+    assert(spark.streams.active.isEmpty)
+    assert(ckpts == before._2)
+    assert(views == before._3)
+  }
+
   test("a tape drive whose start() fails leaves every session conf " +
       "as it was") {
-    val before = spark.conf.getAll
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      // a sort on a non-aggregated stream is rejected at start()
-      graft.streaming.StreamRegistry.runTape2(spark, Seq(1L, 2L),
-        Seq(3L), OutputMode.Append) { (a, b) =>
-        a.union(b).toDF().orderBy("value")
+    driveShapes.foreach { case (feeds, noDataBatches) =>
+      val before = driveTraces()
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        // a sort on a non-aggregated stream is rejected at start()
+        graft.streaming.StreamRegistry.drive(spark, feeds, OutputMode.Append,
+          noDataBatches = noDataBatches) { in =>
+          in.reduce(_ union _).toDF().orderBy("value")
+        }
       }
+      assert(e.getMessage.toLowerCase.contains("sort"), e.getMessage)
+      assertDriveLeftNoTraces(before)
     }
-    assert(e.getMessage.toLowerCase.contains("sort"), e.getMessage)
-    assert(spark.conf.getAll == before)
-    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a tape drive whose micro-batch fails drops its sink view and " +
+      "checkpoint dir and restores the session conf") {
+    driveShapes.foreach { case (feeds, noDataBatches) =>
+      val before = driveTraces()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        // value 2 fails the assertion inside the first micro-batch
+        graft.streaming.StreamRegistry.drive(spark, feeds, OutputMode.Append,
+          noDataBatches = noDataBatches) { in =>
+          in.reduce(_ union _).toDF().selectExpr("assert_true(value < 2)")
+        }
+      }
+      assertDriveLeftNoTraces(before)
+    }
   }
 
   test("the state-store janitor never unloads while a query is active, " +
