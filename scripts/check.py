@@ -14,6 +14,10 @@ import numpy as np
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+def null_like(v) -> bool:
+    """None, NaN, NaT and pd.NA, which the stringified-cell hash spells alike."""
+    return pd.api.types.is_scalar(v) and bool(pd.isna(v))
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -23,8 +27,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         elif np.issubdtype(s.dtype, np.datetime64):
             df[c] = s.astype("datetime64[us]")
         elif s.dtype == object:
+            # one null spelling (NaN, as in a float column), so the atol
+            # pass below never compares None with NaN
             df[c] = s.apply(lambda v: tuple(np.asarray(v).round(6).tolist())
-                            if isinstance(v, (list, np.ndarray)) else v)
+                            if isinstance(v, (list, np.ndarray))
+                            else np.nan if null_like(v) else v)
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 def main():

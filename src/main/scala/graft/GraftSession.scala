@@ -28,16 +28,30 @@ import org.apache.spark.sql.SparkSession
   *   partitioned trees with more than 32 directories, e.g.
   *   `GoldIngest.readDir` over thousands of symbols.
   * - [[GraftExtensions]] installed through `withExtensions`: the graft
-  *   functions plus [[SmallSortToSinglePartition]], an AQE rule that
-  *   plans a global sort whose input fits one advisory partition
-  *   (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, by the plan's
-  *   size estimate, runtime stats once upstream stages have run) as an
-  *   `Exchange SinglePartition` instead of a range shuffle. That skips
-  *   the range partitioner's sampling job, a full recompute of the
-  *   sort's input that AQE would coalesce back to one partition anyway.
-  *   Scale-safe: estimates under Filter, Aggregate and Join are upper
-  *   bounds, a generator below the shuffle disables it, and a 100 TB
-  *   sort is far above the gate and keeps the sampled range sort.
+  *   functions plus two AQE query-stage preparation rules, both gated
+  *   on `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
+  *   coalesces shuffle reads toward (no conf of their own):
+  *   - [[SmallPlanToOneStage]] runs a plan as one stage when every leaf
+  *     already runs as one partition (a one-split file scan, a local
+  *     table, a one-partition checkpoint, a materialized stage AQE
+  *     would read as one partition) and the leaves together fit the
+  *     gate: it drops every `ENSURE_REQUIREMENTS` shuffle, hash-joins
+  *     in place of each pending broadcast, and coalesces each leaf to
+  *     `SinglePartition`. A tick-sized key then pays one job, not one
+  *     per stage. It keeps the plan whole under a generator, a
+  *     null-aware anti join, a dynamic-pruning subquery or a `Union`,
+  *     and never touches a user `repartition`, so every leaf keeps its
+  *     one task;
+  *   - [[SmallSortToSinglePartition]] plans a global sort whose input
+  *     fits the gate (by the plan's size estimate, runtime stats once
+  *     upstream stages have run) as an `Exchange SinglePartition`
+  *     instead of a range shuffle. That skips the range partitioner's
+  *     sampling job, a full recompute of the sort's input that AQE
+  *     would coalesce back to one partition anyway.
+  *   Scale-safe: the gate is AQE's own advisory size, estimates under
+  *   Filter, Aggregate and Join are upper bounds, and at 100 TB every
+  *   scan has many splits and every input is far above the gate, so
+  *   such plans keep every exchange.
   * - `spark.sql.legacy.parquet.nanosAsLong`, so `Tables.events` can read
   *   the older TIMESTAMP(NANOS) testdata encoding as raw nanos (Spark 4
   *   refuses that type otherwise); set here once, not per read.

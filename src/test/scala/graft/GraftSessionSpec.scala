@@ -1,32 +1,38 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** The session [[GraftSession.builder]] ships: the small-sort rule of
+/** The session [[GraftSession.builder]] ships: the two AQE rules of
   * [[GraftExtensions]] and the session confs it sets once. */
 class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  /** Jobs `body` submits. The listener bus is asynchronous but
-    * ordered, so a marker job run after `body` is seen only once every
-    * earlier job start has been. */
-  private def jobs(body: => Unit): Int = {
+  /** Jobs and tasks `body` submits. The listener bus is asynchronous
+    * but ordered, so a marker job run after `body` is seen only once
+    * every earlier job start and stage submission has been. */
+  private def jobsAndTasks(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val marker = "graft-jobs-marker"
     val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var seen = -1
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var seen = (-1, -1)
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) {
-          seen = started.get()
+          seen = (started.get(), tasks.get())
           flushed.countDown()
         } else { started.incrementAndGet(); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (flushed.getCount > 0) { tasks.addAndGet(e.stageInfo.numTasks); () }
     }
     sc.addSparkListener(l)
     try {
@@ -38,11 +44,17 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     seen
   }
 
+  private def jobs(body: => Unit): Int = jobsAndTasks(body)._1
+
   /** Partitionings of the shuffles in an executed frame's final plan. */
   private def shuffles(df: DataFrame): Seq[Partitioning] =
     collect(df.queryExecution.executedPlan) {
       case s: ShuffleExchangeExec => s.outputPartitioning
     }
+
+  /** Nodes of an executed frame's final plan, stages included. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case p => p }
 
   private def ranged(ps: Seq[Partitioning]): Boolean =
     ps.exists(_.isInstanceOf[RangePartitioning])
@@ -51,12 +63,6 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def advisory: Long =
     spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-
-  private def withAdvisory[T](bytes: Long)(body: => T): T = {
-    val old = spark.conf.getOption(advisoryKey)
-    spark.conf.set(advisoryKey, bytes.toString)
-    try body finally old.fold(spark.conf.unset(advisoryKey))(spark.conf.set(advisoryKey, _))
-  }
 
   private val n = 4000L
   /** 4000 rows in 4 slices; k = id * 7919 mod 1000 repeats each k 4x. */
@@ -102,6 +108,26 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
       assert(rows == (0L until 50L).map(k => (k, if (k == 7) 200L else 0L))
         .filter(_._2 > 0))
+      // the re-plan after the aggregate stage runs one-stages the rest:
+      // the sort runs on that stage's one-partition read, no exchange
+      assert(shuffles(df).forall(_.isInstanceOf[HashPartitioning]), shuffles(df))
+      assert(shuffles(df).size == 1, shuffles(df))
+      assert(nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    }
+  }
+
+  test("a sort over a union of two aggregates plans Exchange " +
+      "SinglePartition from the stages' runtime size") {
+    // the Union keeps the re-plan multi-stage, so the sort's shuffle is
+    // the small-sort rule's to rewrite
+    def agg(m: Long) = spark.range(0, 200000, 1, 4).filter(col("id") % 1000 === m)
+      .groupBy((col("id") % 50).as("k")).agg(count(lit(1)).as("c"))
+    val df = agg(7).union(agg(8)).orderBy(col("k"), col("c"))
+    val gate = 64L * 1024
+    withAdvisory(gate) {
+      assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > gate)
+      val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows == Seq((7L, 200L), (8L, 200L)))
       assert(shuffles(df).contains(SinglePartition), shuffles(df))
       assert(!ranged(shuffles(df)), shuffles(df))
     }
@@ -126,6 +152,126 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
     assert(ranged(shuffles(df)), shuffles(df))
     assert(rows == (for (x <- 199L to 0L by -1; id <- 0L until 20L) yield (id, x)))
+  }
+
+  /** One-split parquet tables, written once: `orders(o_id, cust,
+    * amount)` with 4000 rows over 300 customers, `customer(cust,
+    * nation)` with 300 rows over 7 nations. */
+  private lazy val tables: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_one_stage").toString
+    spark.range(0, 4000, 1, 1).selectExpr("id AS o_id", "(id * 37) % 300 AS cust",
+        "(id * 7919) % 1000 AS amount")
+      .write.parquet(s"$d/orders")
+    spark.range(0, 300, 1, 1).selectExpr("id AS cust", "(id * 13) % 7 AS nation")
+      .write.parquet(s"$d/customer")
+    d
+  }
+  private def orders: DataFrame = spark.read.parquet(s"$tables/orders")
+  private def customer: DataFrame = spark.read.parquet(s"$tables/customer")
+
+  /** Aggregate ⋈ table → rank window → sort, the shape of most small
+    * registry keys. */
+  private def ranked: DataFrame =
+    orders.groupBy("cust").agg(sum("amount").as("total"))
+      .join(customer, "cust")
+      .withColumn("rk", rank().over(
+        Window.partitionBy("nation").orderBy(col("total").desc, col("cust"))))
+      .orderBy("nation", "rk")
+
+  private def rankedRows(rows: Array[Row]): Seq[(Long, Long, Long, Int)] =
+    rows.toSeq.map(r => (r.getAs[Long]("nation"), r.getAs[Long]("cust"),
+      r.getAs[Long]("total"), r.getAs[Int]("rk")))
+
+  test("an aggregate ⋈ table → rank window → sort over one-split parquet " +
+      "runs as one job, with the rows of the run gated at 1 KB") {
+    val df = ranked
+    var rows = Array.empty[Row]
+    val one = jobs { rows = df.collect() }
+    assert(one == 1, s"jobs: $one\n${df.queryExecution.executedPlan}")
+    assert(shuffles(df).isEmpty, shuffles(df))
+    assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]))
+    assert(nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    val gated = ranked
+    var gatedRows = Array.empty[Row]
+    val many = withAdvisory(1024) { jobs { gatedRows = gated.collect() } }
+    assert(many > 1, s"jobs at the 1 KB gate: $many")
+    assert(rankedRows(rows) == rankedRows(gatedRows))
+    assert(rows.length == 300)
+  }
+
+  test("the 1 KB gate keeps every shuffle of the ranked plan") {
+    val df = ranked
+    withAdvisory(1024) { df.collect() }
+    val ps = shuffles(df)
+    // the aggregate's and the window's hash shuffles, the sort's range
+    // shuffle, and the join's broadcast
+    assert(ps.count(_.isInstanceOf[HashPartitioning]) == 2, ps)
+    assert(ps.count(_.isInstanceOf[RangePartitioning]) == 1, ps)
+    assert(nodes(df).count(_.isInstanceOf[BroadcastExchangeExec]) == 1)
+    assert(nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]))
+    assert(!nodes(df).exists(p => p.isInstanceOf[CoalesceExec] ||
+      p.isInstanceOf[ShuffledHashJoinExec]))
+  }
+
+  test("a join with one multi-partition side keeps both exchanges") {
+    val old = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = customer.join(
+        spark.range(0, 300, 1, 4).selectExpr("id AS cust", "id * 2 AS twice"), "cust")
+      val rows = df.collect().toSeq.map(r => (r.getAs[Long]("cust"), r.getAs[Long]("twice")))
+      assert(rows.sorted == (0L until 300L).map(c => (c, 2 * c)))
+      assert(shuffles(df).count(_.isInstanceOf[HashPartitioning]) == 2, shuffles(df))
+      assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    } finally old.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+  }
+
+  test("an aggregate over a 4-file parquet scan keeps its shuffle") {
+    val d = java.nio.file.Files.createTempDirectory("graft_four_files").toString
+    orders.repartition(4).write.parquet(s"$d/orders")
+    val df = spark.read.parquet(s"$d/orders").groupBy("cust").agg(count(lit(1)).as("c"))
+    val rows = df.collect()
+    assert(rows.length == 300 && rows.map(_.getLong(1)).sum == 4000L)
+    assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
+    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+  }
+
+  test("a 3-branch Union of one-split scans keeps its tasks") {
+    val df = orders.union(orders).union(orders)
+      .groupBy("cust").agg(count(lit(1)).as("c"))
+    var rows = Array.empty[Row]
+    val (_, tasks) = jobsAndTasks { rows = df.collect() }
+    assert(rows.map(_.getLong(1)).sum == 3 * 4000L)
+    assert(nodes(df).exists(_.isInstanceOf[UnionExec]))
+    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    // one scan task per branch, then the aggregate's coalesced read
+    assert(tasks >= 4, s"tasks: $tasks")
+  }
+
+  test("NOT IN keeps its null-aware BroadcastHashJoin") {
+    orders.createOrReplaceTempView("graft_one_stage_orders")
+    customer.createOrReplaceTempView("graft_one_stage_customer")
+    val df = spark.sql("SELECT cust FROM graft_one_stage_customer WHERE cust NOT IN " +
+      "(SELECT cust FROM graft_one_stage_orders WHERE amount < 50) ORDER BY cust")
+    val rows = df.collect().toSeq.map(_.getLong(0))
+    val kept = (0L until 4000L).filter(id => (id * 7919) % 1000 < 50)
+      .map(id => (id * 37) % 300).toSet
+    assert(rows.nonEmpty && rows == (0L until 300L).filterNot(kept))
+    assert(nodes(df).exists {
+      case j: BroadcastHashJoinExec => j.isNullAwareAntiJoin
+      case _ => false
+    }, df.queryExecution.executedPlan)
+  }
+
+  test("explode over a one-split scan keeps its shuffle") {
+    val df = customer
+      .select(col("cust"), explode(sequence(lit(0L), lit(199L))).as("x"))
+      .groupBy("x").agg(sum("cust").as("s"))
+    val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.sorted == (0L until 200L).map(x => (x, 300L * 299 / 2)))
+    assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
+    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
   }
 
   test("nanosAsLong is set once by the session; Tables.events writes no " +

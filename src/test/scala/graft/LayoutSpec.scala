@@ -7,6 +7,17 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `df`'s executed plan as an input above the advisory gate gets it:
+    * built with the gate at 1 byte, where [[SmallPlanToOneStage]] keeps
+    * every exchange. These specs stand for the 100 TB plan. */
+  private def gatedPlan(df: => org.apache.spark.sql.DataFrame): String =
+    withAdvisory(1)(df.queryExecution.executedPlan.toString)
+
+  /** The plan of a toy input under the default gate: one stage, every
+    * exchange planned away and the one-partition leaves coalesced. */
+  private def oneStage(plan: String): Boolean =
+    !plan.contains("Exchange") && plan.contains("Coalesce 1")
+
   test("zValue interleaves bits: unit vectors, locality, and bounds") {
     val out = Seq((1L, 0L), (0L, 1L), (3L, 0L), (0L, 3L), (3L, 3L))
       .toDF("a", "b")
@@ -343,9 +354,8 @@ class LayoutSpec extends SparkSpec {
     // slot-chain share checkpoints the scaled frame, so downstream
     // consumers (windowTensors) only see the barrier — the stats
     // join lives in windowSlots' own plan
-    val scalePlan = graft.operators.Features
-      .windowSlots(ticks, 4, 0.6, 0.2)
-      .queryExecution.executedPlan.toString
+    val scalePlan = gatedPlan(graft.operators.Features
+      .windowSlots(ticks, 4, 0.6, 0.2))
     assert(!scalePlan.contains("SortMergeJoin"),
       s"windowSlots plan regressed to SortMergeJoin:\n$scalePlan")
     assert(scalePlan.contains("BroadcastHashJoin"),
@@ -364,6 +374,10 @@ class LayoutSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(apPlan.contains("BroadcastHashJoin"),
       s"anomalyPipeline expected a broadcast threshold join:\n$apPlan")
+    // the 120-tick toy input itself runs windowSlots as one stage
+    val toyPlan = graft.operators.Features.windowSlots(ticks, 4, 0.6, 0.2)
+      .queryExecution.executedPlan.toString
+    assert(oneStage(toyPlan), s"windowSlots expected one stage:\n$toyPlan")
   }
 
   test("H16: the sequential-filter family compiles to exactly ONE " +
@@ -380,21 +394,27 @@ class LayoutSpec extends SparkSpec {
     val ticks = graft.sources.Tables.ticks(spark, d)
     def hashExchanges(plan: String): Int =
       "Exchange hashpartitioning".r.findAllIn(plan).size
-    for ((name, df) <- Seq(
-        "garchFilter" -> graft.operators.Microstructure
-          .garchFilter(ticks, SparkEntry.garchOmega,
-            SparkEntry.garchAlpha, SparkEntry.garchBeta),
-        "kalmanFilter" -> graft.operators.Microstructure
-          .kalmanFilter(ticks, SparkEntry.kalmanQ, SparkEntry.kalmanR),
-        "cusumFilter" -> graft.operators.Microstructure
-          .cusumFilter(ticks, SparkEntry.cusumH),
-        "hmmFilter" -> graft.operators.Microstructure
-          .hmmFilter(ticks, SparkEntry.hmmParams),
-        "fracDiff" -> graft.operators.Microstructure
-          .fracDiff(ticks, SparkEntry.ffdD, SparkEntry.ffdK))) {
-      val plan = df.queryExecution.executedPlan.toString
+    def filters = Seq(
+      "garchFilter" -> graft.operators.Microstructure
+        .garchFilter(ticks, SparkEntry.garchOmega,
+          SparkEntry.garchAlpha, SparkEntry.garchBeta),
+      "kalmanFilter" -> graft.operators.Microstructure
+        .kalmanFilter(ticks, SparkEntry.kalmanQ, SparkEntry.kalmanR),
+      "cusumFilter" -> graft.operators.Microstructure
+        .cusumFilter(ticks, SparkEntry.cusumH),
+      "hmmFilter" -> graft.operators.Microstructure
+        .hmmFilter(ticks, SparkEntry.hmmParams),
+      "fracDiff" -> graft.operators.Microstructure
+        .fracDiff(ticks, SparkEntry.ffdD, SparkEntry.ffdK))
+    for ((name, df) <- filters) {
+      val plan = gatedPlan(df)
       assert(hashExchanges(plan) == 1,
         s"$name expected exactly 1 hash exchange:\n$plan")
+    }
+    // the sf0.001 tape itself runs each filter as one stage
+    for ((name, df) <- filters) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(oneStage(plan), s"$name expected one stage:\n$plan")
     }
   }
 
