@@ -5,7 +5,7 @@ Usage: python3 scripts/check.py [sfdir] [outdir]
 Reads outdir/<name>/ parquet (written by graft.Verify) and
 outdir/oracle_sql.json, runs each oracle in DuckDB over the sfdir
 tables, and compares (columns sorted by name, rows sorted, values
-exact after stringify-with-rounding).
+exact after stringify-with-rounding). Exits 1 when any key FAILs.
 """
 import sys, json, glob
 import duckdb
@@ -51,22 +51,24 @@ def main():
                       # (e.g. the sf1 replica has only documents)
     if n_views == 0:
         sys.exit(f"no tables found under {sfdir} — wrong sfdir?")
-    n_ok = 0
+    n_ok, failed = 0, []
+    def fail(name, why):
+        failed.append(name); print(f"FAIL {name}: {why}")
     names = sorted(set(oracle) | {g.split("/")[-1] for g in glob.glob(f"{outdir}/*") if not g.endswith(".json")})
     for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output"); continue
+            fail(name, "no spark output"); continue
         spark_df = pd.read_parquet(f"{outdir}/{name}")
         if name not in oracle:
             print(f"rows {name}: {len(spark_df)} rows (no oracle)"); continue
         try:
             duck_df = con.execute(oracle[name]).df()
         except Exception as e:
-            print(f"FAIL {name}: oracle error {e}"); continue
+            fail(name, f"oracle error {e}"); continue
         a, b = canon(spark_df), canon(duck_df)
         if list(a.columns) != list(b.columns):
-            print(f"FAIL {name}: cols spark={list(a.columns)} duck={list(b.columns)}"); continue
+            fail(name, f"cols spark={list(a.columns)} duck={list(b.columns)}"); continue
         # Dtype-CLASS gate: the driver's row hash stringifies values, so
         # an int64 Spark column vs a float64 oracle column ("32" vs
         # "32.0") hash-mismatches even when values are equal. r8 shipped
@@ -81,13 +83,13 @@ def main():
             if (ia and fb) or (fa and ib):
                 dtype_bad.append(f"{c}: spark={sa} duck={sb}")
         if dtype_bad:
-            print(f"FAIL {name}: int/float dtype drift ({'; '.join(dtype_bad)})"); continue
+            fail(name, f"int/float dtype drift ({'; '.join(dtype_bad)})"); continue
         if len(a) != len(b):
-            print(f"FAIL {name}: rows spark={len(a)} duck={len(b)}"); continue
+            fail(name, f"rows spark={len(a)} duck={len(b)}"); continue
         try:
             pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=0, atol=1e-6)
         except AssertionError as e:
-            print(f"FAIL {name}: {str(e).splitlines()[-1] if str(e) else 'diff'}")
+            fail(name, str(e).splitlines()[-1] if str(e) else "diff")
             merged = a.compare(b) if a.shape == b.shape else None
             if merged is not None and not merged.empty:
                 print(merged.head(5))
@@ -118,10 +120,11 @@ def main():
                 i = int(np.argmax(bad.values))
                 sdiff.append(f"{c}[{i}]: spark={sa.iloc[i]} duck={sb.iloc[i]} (+{int(bad.sum())-1} more)")
         if sdiff:
-            print(f"FAIL {name}: strict stringify drift ({'; '.join(sdiff[:4])})")
+            fail(name, f"strict stringify drift ({'; '.join(sdiff[:4])})")
             continue
         print(f"OK   {name} ({len(a)} rows)"); n_ok += 1
     print(f"== {n_ok}/{len([n for n in names if n in oracle])} oracle-checked OK ==")
+    sys.exit(1 if failed else 0)
 
 if __name__ == "__main__":
     main()

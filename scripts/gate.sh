@@ -40,12 +40,18 @@ run_gate() {
       || { echo "VERIFY FAILED at $sf — tail of log:"; tail -20 "/tmp/gate_verify_$sf.log"; exit 1; }
   fi
   grep -F '[verify]' "/tmp/gate_verify_$sf.log" && { echo "VERIFY had per-query failures at $sf"; exit 1; }
-  # check.py prints FAIL lines but exits 0; gate on the absence of FAIL.
-  local report
+  # check.py exits 1 when any key FAILs; keep its report either way so
+  # the FAIL lines print before the gate exits.
+  local report status
+  set +e
   report="$(python3 scripts/check.py "/root/testdata/$sf" "$out")"
+  status=$?
+  set -e
   echo "$report" | tail -3
-  if echo "$report" | grep -q '^FAIL'; then
-    echo "GATE FAILED at $sf:"; echo "$report" | grep '^FAIL'; exit 1
+  if [ "$status" -ne 0 ] || echo "$report" | grep -q '^FAIL'; then
+    echo "GATE FAILED at $sf (check.py exit $status):"
+    echo "$report" | grep '^FAIL' || true
+    exit 1
   fi
 }
 

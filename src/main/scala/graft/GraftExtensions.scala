@@ -12,15 +12,16 @@ import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS, EnsureRequirements, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.internal.SQLConf
-import graft.functions.{CharEntropy, CharGrams, MinHashes, PolyHash, PqCodes, SimHash64, VecDot, Winnow, WordGrams}
+import graft.functions.{CdcChunks, CharEntropy, CharGrams, MinHashes, PolyHash, PqCodes, SimHash64, SortedCommon, VecDot, Winnow, WordGrams}
 
 /** Canonical extension injection point. [[GraftSession.builder]]
   * installs it through `withExtensions`, and `--conf
   * spark.sql.extensions=graft.GraftExtensions` does the same for every
   * session of a cluster deployment. It adds:
   *
-  *  - all graft functions (operators also self-register defensively
-  *    for sessions created without extensions, e.g. a caller's own);
+  *  - all eleven `graft_*` functions (operators also self-register
+  *    defensively for sessions created without extensions, e.g. a
+  *    caller's own);
   *  - two AQE query-stage preparation rules, applied in this order to
   *    the initial plan and at every AQE re-plan:
   *    [[SmallPlanToOneStage]], so a plan whose leaves each run as one
@@ -39,42 +40,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectQueryStagePrepRule(_ => SmallSortToSinglePartition)
     // Builders are the validated fromArgs factories — arity/literal
     // misuse fails analysis with the function signature in the message.
-    ext.injectFunction((
-      FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      (exprs: Seq[Expression]) => PolyHash.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_grams"),
-      new ExpressionInfo(classOf[CharGrams].getName, "graft_grams"),
-      (exprs: Seq[Expression]) => CharGrams.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vecdot"),
-      new ExpressionInfo(classOf[VecDot].getName, "graft_vecdot"),
-      (exprs: Seq[Expression]) => VecDot.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhashes"),
-      new ExpressionInfo(classOf[MinHashes].getName, "graft_minhashes"),
-      (exprs: Seq[Expression]) => MinHashes.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHash64.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_wordgrams"),
-      new ExpressionInfo(classOf[WordGrams].getName, "graft_wordgrams"),
-      (exprs: Seq[Expression]) => WordGrams.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pqcodes"),
-      new ExpressionInfo(classOf[PqCodes].getName, "graft_pqcodes"),
-      (exprs: Seq[Expression]) => PqCodes.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[Winnow].getName, "graft_winnow"),
-      (exprs: Seq[Expression]) => Winnow.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_charentropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_charentropy"),
-      (exprs: Seq[Expression]) => CharEntropy.fromArgs(exprs)))
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("graft_polyhash", classOf[PolyHash], PolyHash.fromArgs),
+      ("graft_grams", classOf[CharGrams], CharGrams.fromArgs),
+      ("graft_vecdot", classOf[VecDot], VecDot.fromArgs),
+      ("graft_minhashes", classOf[MinHashes], MinHashes.fromArgs),
+      ("graft_simhash", classOf[SimHash64], SimHash64.fromArgs),
+      ("graft_wordgrams", classOf[WordGrams], WordGrams.fromArgs),
+      ("graft_pqcodes", classOf[PqCodes], PqCodes.fromArgs),
+      ("graft_winnow", classOf[Winnow], Winnow.fromArgs),
+      ("graft_charentropy", classOf[CharEntropy], CharEntropy.fromArgs),
+      ("graft_cdc", classOf[CdcChunks], CdcChunks.fromArgs),
+      ("graft_sorted_ncommon", classOf[SortedCommon], SortedCommon.fromArgs)
+    ).foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }
 

@@ -78,8 +78,7 @@ object GraftSession {
       // MB of metaspace at worst and is workload-independent (a
       // cluster driver compiles per-executor anyway: this cache is
       // per-JVM and the same reasoning applies at any scale).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // file: scheme without per-file process forks (see
       // graft.hadoop.FastLocalFileSystem — absent the native Hadoop
       // library, every local file create forks `chmod`). Behavior

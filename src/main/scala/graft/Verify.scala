@@ -21,13 +21,9 @@ object Verify {
     // reused, a previous run's parquet would otherwise survive a
     // crash and the downstream compare would happily hash-match stale
     // results — a thrown query must surface as a missing/err row,
-    // never as a phantom pass.
-    def rmTree(f: java.io.File): Unit = {
-      // listFiles() returns null on I/O error — an NPE here would
-      // escape the per-query catch and abort the whole verify loop
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-      f.delete(); ()
-    }
+    // never as a phantom pass. `rmTree` skips an unlistable subtree
+    // instead of throwing, so the delete cannot escape the per-query
+    // catch and abort the loop.
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -38,7 +34,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        rmTree(new java.io.File(s"$outDir/$name"))
+        LocalFiles.rmTree(new java.io.File(s"$outDir/$name"))
       }
       CkptGc.sweep(spark, ckptBefore)
     }

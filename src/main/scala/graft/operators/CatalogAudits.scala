@@ -36,15 +36,6 @@ object CatalogAudits {
     p
   }
 
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    val f = p.toFile
-    def rec(x: java.io.File): Unit = {
-      if (x.isDirectory) Option(x.listFiles()).toSeq.flatten.foreach(rec)
-      x.delete(); ()
-    }
-    rec(f)
-  }
-
   /** Materialize `df` off the temp state it reads (collect +
     * re-parallelize): audit frames are tiny (≤ |symbols| rows). */
   private def detach(s: SparkSession, df: DataFrame): DataFrame = {
@@ -94,7 +85,7 @@ object CatalogAudits {
             .as("ask_e4"),
           sum(pmod(unix_millis(col("ts")), lit(P))).as("ts_fp"))
         .orderBy("symbol"))
-    } finally rmTree(root)
+    } finally graft.LocalFiles.rmTree(root.toFile)
   }
 
   /** A29 — ORC INTERCHANGE ROUND-TRIP: the engine's second columnar
@@ -130,7 +121,7 @@ object CatalogAudits {
             .as("ask_e4"),
           sum(pmod(unix_micros(col("ts")), lit(P))).as("ts_fp"))
         .orderBy("symbol"))
-    } finally rmTree(root)
+    } finally graft.LocalFiles.rmTree(root.toFile)
   }
 
   /** A30 — JSON-LINES INTERCHANGE ROUND-TRIP: the text-corpus wire
@@ -160,7 +151,7 @@ object CatalogAudits {
           sum(pmod(expr("graft_polyhash(text)"), lit(P))).as("text_fp"),
           countDistinct(col("lang")).as("n_langs"))
         .orderBy("source"))
-    } finally rmTree(root)
+    } finally graft.LocalFiles.rmTree(root.toFile)
   }
 
   /** A11 — COMPACTION AUDIT: the tick fact lands in TWO appends of 3
@@ -244,7 +235,7 @@ object CatalogAudits {
         .write.mode(SaveMode.Overwrite).parquet(s"$root/gen=2")
       detach(s, CatalogOps.evolutionReport(s, root.toString,
         Seq("props", "event_type")))
-    } finally rmTree(root)
+    } finally graft.LocalFiles.rmTree(root.toFile)
   }
 
   /** A21 — ORPHAN-SWEEP AUDIT: a 4-file live partition plus a 2-file

@@ -103,11 +103,6 @@ object StreamRegistry {
     java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(ckptRoot), ckptPrefix).toFile
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-    f.delete(); ()
-  }
-
   /** Run `body` under the drive's scoped session conf. The drives run
     * sequentially within a session (Verify/Bench both iterate keys one
     * at a time), so the scoped conf cannot bleed into a concurrent
@@ -235,6 +230,12 @@ object StreamRegistry {
   private def quarters[T](tape: Seq[T]): Seq[Seq[T]] =
     tape.grouped(math.max(1, (tape.size + 3) / 4)).toSeq
 
+  /** The default tick drive: the session tick tape ([[tickTape]]) in
+    * [[quarters]] through `plan`, the one-source feed of most keys. */
+  private def tickDrive(s: SparkSession, d: String, mode: OutputMode)
+                       (plan: Dataset[Tick] => Dataset[_]): DataFrame =
+    drive(s, Seq(quarters(tickTape(s, d))), mode)(in => plan(in.head).toDF())
+
   /** THE streaming drive: every `q_stream_*` key (and Bench's warm-up)
     * runs its query through here.
     *
@@ -319,7 +320,7 @@ object StreamRegistry {
           unloadDeadStateStores(s)
         }
       } finally {
-        rmTree(ckpt)
+        graft.LocalFiles.rmTree(ckpt)
         s.catalog.dropTempView(name)
         ()
       }
@@ -412,20 +413,20 @@ object StreamRegistry {
 
   /** G1 twin key: streaming 1-second session downsample of the tape. */
   def streamDownsample(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
-      in => Streaming.downsample1s(in.head.toDF()))
+    tickDrive(s, d, OutputMode.Complete)(
+      ticks => Streaming.downsample1s(ticks.toDF()))
       .orderBy("symbol", "ts_s")
 
   /** G4 twin key: per-(symbol, day) streaming tick counts. */
   def streamWindowCounts(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
-      in => Streaming.windowCounts(in.head.toDF(), "1 day"))
+    tickDrive(s, d, OutputMode.Complete)(
+      ticks => Streaming.windowCounts(ticks.toDF(), "1 day"))
       .orderBy("symbol", "win_start")
 
   /** G8 twin key: streaming hourly OHLC bars. */
   def streamOhlc(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
-      in => Streaming.ohlcBars(in.head.toDF(), "1 hour"))
+    tickDrive(s, d, OutputMode.Complete)(
+      ticks => Streaming.ohlcBars(ticks.toDF(), "1 hour"))
       .orderBy("symbol", "bucket_start")
 
   /** G13 twin key: streaming daily VWAP bars over the events tape
@@ -444,8 +445,8 @@ object StreamRegistry {
     * (the §6 house rule: never hash a sub-second timestamp cell). */
   def streamSessions(s: SparkSession, d: String, gap: String)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
-      in => Streaming.sessionWindows(in.head.toDF(), gap))
+    tickDrive(s, d, OutputMode.Complete)(
+      ticks => Streaming.sessionWindows(ticks.toDF(), gap))
       .select(col("symbol"),
         unix_micros(col("session_start")).as("session_start_us"),
         unix_micros(col("session_end")).as("session_end_us"),
@@ -497,8 +498,7 @@ object StreamRegistry {
     * half-up formula — every interval-completing arrival emits the
     * TWAP so far (nothing emits while Σdur = 0). */
   def streamTwap(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.twapPoints(in.head).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.twapPoints)
       .orderBy("symbol", "date", "n_weighted")
 
   /** G19 twin key: one-tick-lookahead spike decisions — each tick's
@@ -507,8 +507,7 @@ object StreamRegistry {
     * successor in state). */
   def streamSpikes(s: SparkSession, d: String, thresholdBp: Long)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.spikeFlags(in.head, thresholdBp).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.spikeFlags(_, thresholdBp))
       .orderBy("tick_id")
 
   /** G22 twin key: running realized moments per (symbol, day) — a
@@ -516,8 +515,7 @@ object StreamRegistry {
     * sums are integer-valued doubles, so prefix sums are exact and
     * the rounded moment formulas evaluate identically batch-side. */
   def streamMoments(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.momentPoints(in.head).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.momentPoints)
       .orderBy("symbol", "date", "n_moves")
 
   /** G26 twin key: live TCA — fill-aligned running-VWAP slippage
@@ -535,9 +533,8 @@ object StreamRegistry {
     * with n_lookahead < horizon — still open in state). */
   def streamTripleBarrier(s: SparkSession, d: String, entryEvery: Int,
                           horizon: Int, barrierBp: Long): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.tripleBarrierState(in.head, entryEvery, horizon,
-        barrierBp).toDF())
+    tickDrive(s, d, OutputMode.Append)(
+      Streaming.tripleBarrierState(_, entryEvery, horizon, barrierBp))
       .orderBy("symbol", "e_idx")
 
   /** G24 twin key: the running R(l) curve — every arrival settles
@@ -545,8 +542,7 @@ object StreamRegistry {
     * (exact int64 sums, one IEEE division per point). */
   def streamResponse(s: SparkSession, d: String, lags: Seq[Int])
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.responsePoints(in.head, lags).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.responsePoints(_, lags))
       .orderBy("symbol", "lag", "n_obs", "resp_cents")
 
   /** G27 twin key: the learned-quality admission gate scoring the
@@ -627,8 +623,8 @@ object StreamRegistry {
         .groupBy("symbol")
         .agg(round(expr(s"percentile(n, $pct)"), 4).as("thr")))
     }
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Complete)(
-      in => Streaming.burstFlags(in.head.toDF(), trained,
+    tickDrive(s, d, OutputMode.Complete)(
+      ticks => Streaming.burstFlags(ticks.toDF(), trained,
         windowDur = "1 minute"))
       .orderBy("symbol", "sec")
   }
@@ -644,8 +640,8 @@ object StreamRegistry {
       localized(graft.operators.Microstructure
         .seasonalBaseline(Tables.ticks(s, d)))
     }
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.seasonalFlags(in.head, baseline, threshold))
+    tickDrive(s, d, OutputMode.Append)(
+      Streaming.seasonalFlags(_, baseline, threshold))
       .orderBy("symbol", "tick_id")
   }
 
@@ -677,8 +673,7 @@ object StreamRegistry {
     * recursion e' = (bid + e)/2 per (symbol, day), every arrival
     * emitting the current estimate. */
   def streamEwma(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.ewmaPoints(in.head).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.ewmaPoints)
       .orderBy("tick_id")
 
   /** G29 twin key: point-in-time feature serving — the two-register
@@ -855,8 +850,7 @@ object StreamRegistry {
         .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
         .toMap
     }
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.volConeAlerts(in.head, cones, h).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.volConeAlerts(_, cones, h))
       .orderBy("symbol", "day")
   }
 
@@ -900,14 +894,12 @@ object StreamRegistry {
 
   /** G12 twin key: per-tick tick-rule classes off one-double state. */
   def streamTickClasses(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.tickClasses(in.head).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.tickClasses)
       .orderBy("tick_id")
 
   /** G35 twin key: per-tick drawdown points off the running peak. */
   def streamDrawdown(s: SparkSession, d: String): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.drawdownPoints(in.head).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.drawdownPoints)
       .orderBy("tick_id")
 
   /** G3 twin key: streaming exact dedup over the documents tape in
@@ -1069,8 +1061,8 @@ object StreamRegistry {
     * IEEE recurrence over each symbol's prefix list. */
   def streamWelford(s: SparkSession, d: String, kSigma: Double)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Update)(
-      in => Streaming.anomalyFlags(in.head, kSigma).toDF()
+    tickDrive(s, d, OutputMode.Update)(
+      Streaming.anomalyFlags(_, kSigma)
         .withColumnRenamed("isAnomaly", "is_anomaly"))
       .orderBy("symbol", "n")
 
@@ -1092,8 +1084,7 @@ object StreamRegistry {
       .collect { case Seq(a, b) => (a, b) }.take(nPairs).toSeq
     val betas = pairs.zipWithIndex
       .map { case (p, j) => p -> (0.5 + 0.25 * j) }.toMap
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.pairSpreadZ(in.head, pairs, betas).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.pairSpreadZ(_, pairs, betas))
       .orderBy("tick_id", "sym_a", "sym_b")
   }
 
@@ -1103,8 +1094,8 @@ object StreamRegistry {
     * over each move prefix. */
   def streamGarch(s: SparkSession, d: String, omega: Double,
                   alpha: Double, beta: Double): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.garchPoints(in.head, omega, alpha, beta).toDF())
+    tickDrive(s, d, OutputMode.Append)(
+      Streaming.garchPoints(_, omega, alpha, beta))
       .orderBy("symbol", "date", "n_move")
 
   /** G45 twin key: the Kalman local-level filter on the tape — a
@@ -1112,8 +1103,7 @@ object StreamRegistry {
     * replays the identical fold over each tick prefix. */
   def streamKalman(s: SparkSession, d: String, q: Double, r: Double)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.kalmanPoints(in.head, q, r).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.kalmanPoints(_, q, r))
       .orderBy("symbol", "date", "n_seen")
 
   /** G46 twin key: the symmetric CUSUM filter on the tape — a point
@@ -1121,8 +1111,7 @@ object StreamRegistry {
     * count; the oracle replays the branchless int64 fold over each
     * move prefix. */
   def streamCusum(s: SparkSession, d: String, h: Long): DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.cusumPoints(in.head, h).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.cusumPoints(_, h))
       .orderBy("symbol", "date", "n_move")
 
   /** G47 twin key: fixed-width FFD on the tape — a point per tick
@@ -1130,8 +1119,7 @@ object StreamRegistry {
     * frame row for row, so the oracle is the batch oracle. */
   def streamFfd(s: SparkSession, d: String, dOrd: Double, k: Int)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.ffdPoints(in.head, dOrd, k).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.ffdPoints(_, dOrd, k))
       .orderBy("tick_id")
 
   /** G49 twin key: the F78 media lake replayed as an id-ordered
@@ -1160,8 +1148,7 @@ object StreamRegistry {
   def streamHmm(s: SparkSession, d: String,
                 hp: graft.operators.Microstructure.HmmParams)
       : DataFrame =
-    drive(s, Seq(quarters(tickTape(s, d))), OutputMode.Append)(
-      in => Streaming.hmmPoints(in.head, hp).toDF())
+    tickDrive(s, d, OutputMode.Append)(Streaming.hmmPoints(_, hp))
       .orderBy("symbol", "date", "n_move")
 
   /** G33 twin key: the event-time-timeout dormancy detector on the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -12,6 +12,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * 7:50-8:00 and 13:50-14:00 time windows"). Here that is a streaming
   * plan, not a polling loop: watermarked event-time windows for the
   * downsampler, keyed state for the anomaly scorer.
+  *
+  * The keyed-state operators share one fold, [[keyedFold]], and with
+  * it one contract:
+  *  - state is per key: each key starts from the operator's initial
+  *    state, a fresh value per key, and carries its own state from
+  *    micro-batch to micro-batch;
+  *  - inside a micro-batch a key's rows are folded in the operator's
+  *    sort key order, whatever order they arrived in ([[unordered]]
+  *    only for folds whose result cannot depend on it);
+  *  - across micro-batches arrival order governs: a row that arrives
+  *    in a later batch folds after every row of the earlier ones, so
+  *    batch parity holds when the feed arrives in the sort key's
+  *    order;
+  *  - the state type is the checkpoint schema: changing an operator's
+  *    state class or tuple makes its existing checkpoints unreadable.
+  * Only [[dormancyFlags]] keeps its own `flatMapGroupsWithState`: it
+  * emits on an event-time timeout, which the fold does not arm.
   */
 object Streaming {
 
@@ -19,6 +36,45 @@ object Streaming {
   case class Ev(event_id: Long, user_id: Long, ts: Timestamp,
                 value: Double, props: String)
   case class AnomalyFlag(symbol: Long, n: Long, mean: Double, isAnomaly: Boolean)
+
+  /** The keyed-state fold of every stateful operator here but
+    * [[dormancyFlags]]: group `rows` by `key`, sort each key's rows of
+    * the micro-batch by `order`, and hand them to `fold` with the
+    * key's state, or with `init`, evaluated afresh, when it has none.
+    * `fold` runs strictly and returns the state to keep and the rows
+    * to emit; a null state keeps none (removes the key's state). No
+    * timeout is armed. */
+  private[graft] def keyedFold[T, K: Encoder, S: Encoder, U: Encoder,
+                               O: Ordering](rows: Dataset[T], mode: OutputMode)
+      (key: T => K, order: T => O)(init: => S)
+      (fold: (K, S, Seq[T]) => (S, IterableOnce[U])): Dataset[U] =
+    rows.groupByKey(key).flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout) {
+      (k: K, group: Iterator[T], state: GroupState[S]) =>
+        val (s, out) = fold(k, state.getOption.getOrElse(init),
+          group.toSeq.sortBy(order))
+        if (s == null) state.remove() else state.update(s)
+        out.iterator
+    }
+
+  /** The sort key of a fold whose result does not depend on row order
+    * (counts, max registers, sums mod p): the sort is stable, so it
+    * leaves the rows as they come. */
+  private val unordered: Any => Unit = _ => ()
+
+  /** (ts ms, tick_id): event time, ties by arrival sequence. */
+  private val tsThenId: Tick => (Long, Long) = t => (t.ts.getTime, t.tick_id)
+
+  /** The tick's UTC calendar day, `yyyy-MM-dd`. */
+  private def utcDate(ts: Timestamp): String =
+    java.time.Instant.ofEpochMilli(ts.getTime)
+      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
+
+  /** The per-(symbol, UTC day) key of the day-scoped tick folds. */
+  private val symbolDay: Tick => (Long, String) = t => (t.symbol, utcDate(t.ts))
+
+  /** Exact epoch µs: `getTime` alone is only ms-grained. */
+  private def micros(ts: Timestamp): Long =
+    math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
   /** G1 — streaming 1-second downsample of the session windows: the
     * streaming twin of `TickOps.secondDownsample`, including the tie
@@ -50,10 +106,22 @@ object Streaming {
     */
   def anomalyFlags(ticks: Dataset[Tick], k: Double): Dataset[AnomalyFlag] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout)(flagGroup(k))
+    // (count, mean, m2) Welford accumulator
+    keyedFold(ticks, OutputMode.Update)(_.symbol, tsThenId)((0L, 0.0, 0.0)) {
+      (symbol, st, rows) =>
+        var (n, mean, m2) = st
+        var flags = List.empty[AnomalyFlag]
+        rows.foreach { t =>
+          val sigma = if (n > 1) math.sqrt(m2 / (n - 1)) else Double.PositiveInfinity
+          val isAnomaly = n > 1 && math.abs(t.bid - mean) > k * sigma
+          n += 1
+          val d = t.bid - mean
+          mean += d / n
+          m2 += d * (t.bid - mean)
+          flags = AnomalyFlag(symbol, n, mean, isAnomaly) :: flags
+        }
+        ((n, mean, m2), flags.reverseIterator)
+    }
   }
 
   /** G4 — streaming per-window tick counts: the live analog of the
@@ -151,18 +219,12 @@ object Streaming {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    docs
-      .groupByKey(d => md5hex(d.text))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (hash: String, rows: Iterator[Doc], state: GroupState[Boolean]) =>
-          val seenBefore = state.getOption.getOrElse(false)
-          val sorted = rows.toSeq.sortBy(_.doc_id)
-          state.update(true)
-          sorted.zipWithIndex.map { case (d, i) =>
-            DedupDecision(d.doc_id, hash, seenBefore || i > 0)
-          }.iterator
-      }
+    keyedFold(docs, OutputMode.Append)(d => md5hex(d.text), _.doc_id)(false) {
+      (hash, seenBefore, rows) =>
+        (true, rows.zipWithIndex.map { case (d, i) =>
+          DedupDecision(d.doc_id, hash, seenBefore || i > 0)
+        })
+    }
   }
 
   /** G8 — streaming OHLC candlesticks: the live twin of
@@ -234,21 +296,17 @@ object Streaming {
     * the caller keeps them unconditionally (same as batch). */
   def nearDupBandFlags(docs: DataFrame): Dataset[BandFlag] = {
     import docs.sparkSession.implicits._
-    graft.operators.TextDedup.minHashBands(docs, ordered = false)
+    val bands = graft.operators.TextDedup.minHashBands(docs, ordered = false)
       .filter(col("band_hash").isNotNull)
       .select(col("doc_id").cast("long"), col("band").cast("int"),
         col("band_hash").cast("long"))
       .as[(Long, Int, Long)]
-      .groupByKey { case (_, band, bh) => (band, bh) }
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[(Long, Int, Long)],
-         state: GroupState[Boolean]) =>
-          val claimed = state.getOption.getOrElse(false)
-          state.update(true)
-          rows.toSeq.sortBy(_._1).zipWithIndex.map {
-            case ((id, band, _), i) => BandFlag(id, band, claimed || i > 0)
-          }.iterator
-      }
+    keyedFold(bands, OutputMode.Append)(r => (r._2, r._3), _._1)(false) {
+      (_, claimed, rows) =>
+        (true, rows.zipWithIndex.map {
+          case ((id, band, _), i) => BandFlag(id, band, claimed || i > 0)
+        })
+    }
   }
 
   case class SourcedDoc(doc_id: Long, source: String, text: String)
@@ -277,27 +335,23 @@ object Streaming {
     import docs.sparkSession.implicits._
     val P = graft.functions.PortableText.P
     def rank(id: Long): Long = ((id % P) + P) % P * 2654435761L % P
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[SourcedDoc],
-         state: GroupState[(Long, Boolean)]) =>
-          var (cum, exhausted) = state.getOption.getOrElse((0L, false))
-          val out = rows.toSeq.sortBy(d => (rank(d.doc_id), d.doc_id)).map { d =>
-            // same token rule as PortableText.tokens: whitespace
-            // split, empty fragments dropped
-            val n = d.text.split(' ').count(_.nonEmpty).toLong
-            if (!exhausted && cum + n <= budget) {
-              cum += n
-              BudgetDecision(d.doc_id, source, n, cum, admitted = true)
-            } else {
-              exhausted = true
-              BudgetDecision(d.doc_id, source, n, cum, admitted = false)
-            }
-          }
-          state.update((cum, exhausted))
-          out.iterator
+    keyedFold(docs, OutputMode.Append)(_.source,
+        d => (rank(d.doc_id), d.doc_id))((0L, false)) { (source, st, rows) =>
+      var (cum, exhausted) = st
+      val out = rows.map { d =>
+        // same token rule as PortableText.tokens: whitespace
+        // split, empty fragments dropped
+        val n = d.text.split(' ').count(_.nonEmpty).toLong
+        if (!exhausted && cum + n <= budget) {
+          cum += n
+          BudgetDecision(d.doc_id, source, n, cum, admitted = true)
+        } else {
+          exhausted = true
+          BudgetDecision(d.doc_id, source, n, cum, admitted = false)
+        }
       }
+      ((cum, exhausted), out)
+    }
   }
 
   case class Change(seq: Long, key: Long, op: String, value: Double)
@@ -316,19 +370,15 @@ object Streaming {
     * exactly (spec'd three ways). */
   def cdcState(changes: Dataset[Change]): Dataset[CdcRow] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Change],
-         state: GroupState[(Long, String, Double, Long)]) =>
-          var (lseq, lop, v, n) =
-            state.getOption.getOrElse((Long.MinValue, "", 0.0, 0L))
-          rows.foreach { c =>
-            n += 1
-            if (c.seq > lseq) { lseq = c.seq; lop = c.op; v = c.value }
-          }
-          state.update((lseq, lop, v, n))
-          CdcRow(key, lseq, lop, v, n)
+    keyedFold(changes, OutputMode.Update)(_.key, unordered)(
+        (Long.MinValue, "", 0.0, 0L)) { (key, st, rows) =>
+      var (lseq, lop, v, n) = st
+      rows.foreach { c =>
+        n += 1
+        if (c.seq > lseq) { lseq = c.seq; lop = c.op; v = c.value }
       }
+      ((lseq, lop, v, n), Iterator.single(CdcRow(key, lseq, lop, v, n)))
+    }
   }
 
   case class EwmaPoint(tick_id: Long, symbol: Long, date: String,
@@ -346,24 +396,16 @@ object Streaming {
     * (symbol, day). */
   def ewmaPoints(ticks: Dataset[Tick]): Dataset[EwmaPoint] = {
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[(Long, Double)]) =>
-          var (n, e) = state.getOption.getOrElse((0L, 0.0))
-          val out = rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id))
-            .map { t =>
-              e = if (n == 0) t.bid else (t.bid + e) * 0.5
-              n += 1
-              EwmaPoint(t.tick_id, key._1, key._2, n, e)
-            }
-          state.update((n, e))
-          out.iterator
-      }
+    keyedFold(ticks, OutputMode.Append)(symbolDay, tsThenId)((0L, 0.0)) {
+      (key, st, rows) =>
+        var (n, e) = st
+        val out = rows.map { t =>
+          e = if (n == 0) t.bid else (t.bid + e) * 0.5
+          n += 1
+          EwmaPoint(t.tick_id, key._1, key._2, n, e)
+        }
+        ((n, e), out)
+    }
   }
 
   case class TickClass(tick_id: Long, symbol: Long, cls: String)
@@ -375,29 +417,25 @@ object Streaming {
     * matching the batch rule's unclassified head). Fed in (ts,
     * tick_id) order, the per-symbol class COUNTS equal the batch
     * aggregate's — spec'd; the batch op reports the counts, the
-    * stream reports the per-tick stream a live monitor consumes. */
+    * stream reports the per-tick stream a live monitor consumes. The
+    * state NaN marks a symbol with no tick yet, so a tick after a NaN
+    * bid also classes `first` (a NaN compares neither up nor down). */
   def tickClasses(ticks: Dataset[Tick]): Dataset[TickClass] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[Double]) =>
-          var prev = state.getOption
-          val out = rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id))
-            .map { t =>
-              val cls = prev match {
-                case None                  => "first"
-                case Some(p) if t.bid > p  => "up"
-                case Some(p) if t.bid < p  => "down"
-                case _                     => "zero"
-              }
-              prev = Some(t.bid)
-              TickClass(t.tick_id, symbol, cls)
-            }
-          prev.foreach(state.update)
-          out.iterator
-      }
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(Double.NaN) {
+      (symbol, st, rows) =>
+        var prev = st
+        val out = rows.map { t =>
+          val cls =
+            if (prev.isNaN) "first"
+            else if (t.bid > prev) "up"
+            else if (t.bid < prev) "down"
+            else "zero"
+          prev = t.bid
+          TickClass(t.tick_id, symbol, cls)
+        }
+        (prev, out)
+    }
   }
 
   case class DrawdownPoint(tick_id: Long, symbol: Long, cummax: Double,
@@ -414,25 +452,17 @@ object Streaming {
     * parameter-free and bounded: one double per live symbol. */
   def drawdownPoints(ticks: Dataset[Tick]): Dataset[DrawdownPoint] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[Double]) =>
-          var peak = state.getOption
-          val out = rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id))
-            .map { t =>
-              val p = peak match {
-                case Some(x) => math.max(x, t.bid)
-                case None    => t.bid
-              }
-              peak = Some(p)
-              DrawdownPoint(t.tick_id, symbol, p,
-                if (p != 0.0) Some((p - t.bid) / p) else None)
-            }
-          peak.foreach(state.update)
-          out.iterator
+    // no peak yet = −∞: the first tick's max is its own bid
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(
+        Double.NegativeInfinity) { (symbol, peak, rows) =>
+      var p = peak
+      val out = rows.map { t =>
+        p = math.max(p, t.bid)
+        DrawdownPoint(t.tick_id, symbol, p,
+          if (p != 0.0) Some((p - t.bid) / p) else None)
       }
+      (p, out)
+    }
   }
 
   case class CapDecision(doc_id: Long, source: String, rnk: Long,
@@ -457,20 +487,15 @@ object Streaming {
     require(cap >= 0, s"cap must be >= 0: $cap")
     val P = graft.functions.PortableText.P
     def rank(id: Long): Long = ((id % P) + P) % P * 2654435761L % P
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[SourcedDoc],
-         state: GroupState[Long]) =>
-          var seen = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(d => (rank(d.doc_id), d.doc_id))
-            .map { d =>
-              seen += 1
-              CapDecision(d.doc_id, source, seen, seen <= cap)
-            }
-          state.update(seen)
-          out.iterator
+    keyedFold(docs, OutputMode.Append)(_.source,
+        d => (rank(d.doc_id), d.doc_id))(0L) { (source, seen0, rows) =>
+      var seen = seen0
+      val out = rows.map { d =>
+        seen += 1
+        CapDecision(d.doc_id, source, seen, seen <= cap)
       }
+      (seen, out)
+    }
   }
 
   case class FunnelEvent(event_id: Long, user_id: Long, ts: Timestamp,
@@ -500,30 +525,24 @@ object Streaming {
                      step2: String, step3: String,
                      tauUs: Long): Dataset[FunnelAdvance] = {
     import events.sparkSession.implicits._
-    def us(ts: Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[FunnelEvent],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (t1, t2, t3) = state.getOption.getOrElse((-1L, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelAdvance]
-          rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
-            val u = us(e.ts)
-            if (t1 < 0 && e.event_type == step1) {
-              t1 = u; out += FunnelAdvance(uid, 1, u, completed = false)
-            } else if (t1 >= 0 && t2 < 0 && e.event_type == step2 &&
-                u > t1 && u <= t1 + tauUs) {
-              t2 = u; out += FunnelAdvance(uid, 2, u, completed = false)
-            } else if (t2 >= 0 && t3 < 0 && e.event_type == step3 &&
-                u > t2 && u <= t2 + tauUs) {
-              t3 = u; out += FunnelAdvance(uid, 3, u, completed = true)
-            }
-          }
-          state.update((t1, t2, t3))
-          out.iterator
+    keyedFold(events, OutputMode.Append)(_.user_id,
+        e => (micros(e.ts), e.event_id))((-1L, -1L, -1L)) { (uid, st, rows) =>
+      var (t1, t2, t3) = st
+      val out = scala.collection.mutable.ArrayBuffer.empty[FunnelAdvance]
+      rows.foreach { e =>
+        val u = micros(e.ts)
+        if (t1 < 0 && e.event_type == step1) {
+          t1 = u; out += FunnelAdvance(uid, 1, u, completed = false)
+        } else if (t1 >= 0 && t2 < 0 && e.event_type == step2 &&
+            u > t1 && u <= t1 + tauUs) {
+          t2 = u; out += FunnelAdvance(uid, 2, u, completed = false)
+        } else if (t2 >= 0 && t3 < 0 && e.event_type == step3 &&
+            u > t2 && u <= t2 + tauUs) {
+          t3 = u; out += FunnelAdvance(uid, 3, u, completed = true)
+        }
       }
+      ((t1, t2, t3), out)
+    }
   }
 
   case class LateFlag(tick_id: Long, symbol: Long, us: Long,
@@ -544,23 +563,18 @@ object Streaming {
     * definition), exactly the batch op's 1-preceding frame. */
   def lateFlags(ticks: Dataset[Tick], delayUs: Long): Dataset[LateFlag] = {
     import ticks.sparkSession.implicits._
-    def us(ts: Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick], state: GroupState[Long]) =>
-          var maxUs = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(_.tick_id).map { t =>
-            val u = us(t.ts)
-            val wm = if (maxUs == Long.MinValue) None else Some(maxUs)
-            val late = wm.exists(m => u < m - delayUs)
-            if (u > maxUs) maxUs = u
-            LateFlag(t.tick_id, symbol, u, wm, late)
-          }
-          state.update(maxUs)
-          out.iterator
-      }
+    keyedFold(ticks, OutputMode.Append)(_.symbol, _.tick_id)(Long.MinValue) {
+      (symbol, max0, rows) =>
+        var maxUs = max0
+        val out = rows.map { t =>
+          val u = micros(t.ts)
+          val wm = if (maxUs == Long.MinValue) None else Some(maxUs)
+          val late = wm.exists(m => u < m - delayUs)
+          if (u > maxUs) maxUs = u
+          LateFlag(t.tick_id, symbol, u, wm, late)
+        }
+        (maxUs, out)
+    }
   }
 
   /** Per-doc verdict over one micro-batch of [[nearDupBandFlags]]
@@ -569,25 +583,6 @@ object Streaming {
   def nearDupVerdicts(bandFlags: DataFrame): DataFrame =
     bandFlags.groupBy("doc_id")
       .agg(expr("bool_or(dup_band)").as("is_duplicate"))
-
-  /** (count, mean, m2) Welford accumulator. */
-  private def flagGroup(k: Double)(
-      symbol: Long, rows: Iterator[Tick],
-      state: GroupState[(Long, Double, Double)]): Iterator[AnomalyFlag] = {
-    var (n, mean, m2) = state.getOption.getOrElse((0L, 0.0, 0.0))
-    var flags = List.empty[AnomalyFlag]
-    rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id)).foreach { t =>
-      val sigma = if (n > 1) math.sqrt(m2 / (n - 1)) else Double.PositiveInfinity
-      val isAnomaly = n > 1 && math.abs(t.bid - mean) > k * sigma
-      n += 1
-      val d = t.bid - mean
-      mean += d / n
-      m2 += d * (t.bid - mean)
-      flags = AnomalyFlag(symbol, n, mean, isAnomaly) :: flags
-    }
-    state.update((n, mean, m2))
-    flags.reverseIterator
-  }
 
   case class TwapPoint(symbol: Long, date: String, n_weighted: Long,
                        twap: Double)
@@ -609,34 +604,24 @@ object Streaming {
     * sub-ms and would diverge from the batch `unix_micros` sums. */
   def twapPoints(ticks: Dataset[Tick]): Dataset[TwapPoint] = {
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    def micros(ts: Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[(Long, Long, Long, Long, Long)]) =>
-          var (lastC, lastUs, s, d, n) =
-            state.getOption.getOrElse((-1L, 0L, 0L, 0L, 0L))
-          var out = List.empty[TwapPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            val us = micros(t.ts)
-            if (lastC >= 0L) {
-              val dur = us - lastUs
-              s += lastC * dur; d += dur; n += 1L
-              if (d > 0L)
-                out = TwapPoint(key._1, key._2, n,
-                  ((s * 200L + d) / (d * 2L)).toDouble / 10000.0) :: out
-            }
-            lastC = c; lastUs = us
-          }
-          state.update((lastC, lastUs, s, d, n))
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        (-1L, 0L, 0L, 0L, 0L)) { (key, st, rows) =>
+      var (lastC, lastUs, s, d, n) = st
+      var out = List.empty[TwapPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        val us = micros(t.ts)
+        if (lastC >= 0L) {
+          val dur = us - lastUs
+          s += lastC * dur; d += dur; n += 1L
+          if (d > 0L)
+            out = TwapPoint(key._1, key._2, n,
+              ((s * 200L + d) / (d * 2L)).toDouble / 10000.0) :: out
+        }
+        lastC = c; lastUs = us
       }
+      ((lastC, lastUs, s, d, n), out.reverseIterator)
+    }
   }
 
   case class MomentPoint(symbol: Long, date: String, n_moves: Long,
@@ -669,41 +654,33 @@ object Streaming {
     * rows with variance > 0. */
   def momentPoints(ticks: Dataset[Tick]): Dataset[MomentPoint] = {
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
     def r4(x: Double): Double =
       java.math.BigDecimal.valueOf(x)
         .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[MomentState]) =>
-          var s = state.getOption.getOrElse(
-            MomentState(-1L, 0L, 0.0, 0.0, 0.0, 0.0))
-          var out = List.empty[MomentPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            if (s.lastC >= 0L) {
-              val d = (c - s.lastC).toDouble
-              s = MomentState(c, s.n + 1L, s.s1 + d, s.s2 + d * d,
-                s.s3 + d * d * d, s.s4 + d * d * d * d)
-              val n = s.n.toDouble
-              val m1 = s.s1 / n; val m2 = s.s2 / n
-              val m3 = s.s3 / n; val m4 = s.s4 / n
-              val v = m2 - m1 * m1
-              if (v > 0)
-                out = MomentPoint(key._1, key._2, s.n, r4(v),
-                  r4((m3 - 3.0 * m1 * m2 + 2.0 * m1 * m1 * m1) /
-                    (v * math.sqrt(v))),
-                  r4((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2 -
-                    3.0 * m1 * m1 * m1 * m1) / (v * v) - 3.0)) :: out
-            } else s = s.copy(lastC = c)
-          }
-          state.update(s)
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        MomentState(-1L, 0L, 0.0, 0.0, 0.0, 0.0)) { (key, s0, rows) =>
+      var s = s0
+      var out = List.empty[MomentPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        if (s.lastC >= 0L) {
+          val d = (c - s.lastC).toDouble
+          s = MomentState(c, s.n + 1L, s.s1 + d, s.s2 + d * d,
+            s.s3 + d * d * d, s.s4 + d * d * d * d)
+          val n = s.n.toDouble
+          val m1 = s.s1 / n; val m2 = s.s2 / n
+          val m3 = s.s3 / n; val m4 = s.s4 / n
+          val v = m2 - m1 * m1
+          if (v > 0)
+            out = MomentPoint(key._1, key._2, s.n, r4(v),
+              r4((m3 - 3.0 * m1 * m2 + 2.0 * m1 * m1 * m1) /
+                (v * math.sqrt(v))),
+              r4((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2 -
+                3.0 * m1 * m1 * m1 * m1) / (v * v) - 3.0)) :: out
+        } else s = s.copy(lastC = c)
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class SpikeDecision(tick_id: Long, symbol: Long, cents: Long,
@@ -726,32 +703,28 @@ object Streaming {
   def spikeFlags(ticks: Dataset[Tick], thresholdBp: Long)
   : Dataset[SpikeDecision] = {
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[SpikeState]) =>
-          var s = state.getOption.getOrElse(SpikeState(-1L, -1L, 0L))
-          var out = List.empty[SpikeDecision]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            if (s.curId >= 0L) {
-              val cur = s.curCents
-              val spike = s.prevCents >= 0L &&
-                math.abs(cur - s.prevCents) * 10000L >
-                  thresholdBp * s.prevCents &&
-                math.abs(cur - c) * 10000L > thresholdBp * c &&
-                (cur - s.prevCents) * (cur - c) > 0L
-              val rep = if (spike) (s.prevCents + c + 1L) / 2L else cur
-              out = SpikeDecision(s.curId, symbol, cur, spike, rep) :: out
-              s = SpikeState(cur, t.tick_id, c)
-            } else {
-              s = SpikeState(s.prevCents, t.tick_id, c)
-            }
-          }
-          state.update(s)
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(_.symbol, _.tick_id)(
+        SpikeState(-1L, -1L, 0L)) { (symbol, s0, rows) =>
+      var s = s0
+      var out = List.empty[SpikeDecision]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        if (s.curId >= 0L) {
+          val cur = s.curCents
+          val spike = s.prevCents >= 0L &&
+            math.abs(cur - s.prevCents) * 10000L >
+              thresholdBp * s.prevCents &&
+            math.abs(cur - c) * 10000L > thresholdBp * c &&
+            (cur - s.prevCents) * (cur - c) > 0L
+          val rep = if (spike) (s.prevCents + c + 1L) / 2L else cur
+          out = SpikeDecision(s.curId, symbol, cur, spike, rep) :: out
+          s = SpikeState(cur, t.tick_id, c)
+        } else {
+          s = SpikeState(s.prevCents, t.tick_id, c)
+        }
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class BarTrade(event_id: Long, symbol: Long, ts: Timestamp,
@@ -802,37 +775,32 @@ object Streaming {
   def volumeBarState(trades: Dataset[BarTrade], barQty: Long)
   : Dataset[VolumeBar] = {
     import trades.sparkSession.implicits._
-    trades.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[BarTrade],
-         state: GroupState[BarState]) =>
-          var s = state.getOption.getOrElse(
-            BarState(0L, -1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-          var out = List.empty[VolumeBar]
-          rows.toSeq.sortBy(_.event_id).foreach { t =>
-            require(t.k >= 0L,
-              s"volumeBarState: negative qty ${t.k} (event ${t.event_id})")
-            val cum = s.cum + t.k
-            val tb = math.max(cum - 1, 0L) / barQty
-            val ms = t.ts.getTime
-            if (s.barId >= 0L && tb > s.barId) {
-              out = VolumeBar(symbol, s.barId, s.accQty, s.nTicks,
-                s.open, s.high, s.low, s.close,
-                barTs(s.tsFirstMs), barTs(s.tsLastMs)) :: out
-              s = s.copy(barId = -1L)
-            }
-            s = if (s.barId < 0L)
-              BarState(cum, tb, t.k, 1L, t.cents, t.cents, t.cents,
-                t.cents, ms, ms)
-            else
-              BarState(cum, s.barId, s.accQty + t.k, s.nTicks + 1L,
-                s.open, math.max(s.high, t.cents),
-                math.min(s.low, t.cents), t.cents, s.tsFirstMs, ms)
-          }
-          state.update(s)
-          out.reverseIterator
+    keyedFold(trades, OutputMode.Append)(_.symbol, _.event_id)(
+        BarState(0L, -1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)) { (symbol, s0, rows) =>
+      var s = s0
+      var out = List.empty[VolumeBar]
+      rows.foreach { t =>
+        require(t.k >= 0L,
+          s"volumeBarState: negative qty ${t.k} (event ${t.event_id})")
+        val cum = s.cum + t.k
+        val tb = math.max(cum - 1, 0L) / barQty
+        val ms = t.ts.getTime
+        if (s.barId >= 0L && tb > s.barId) {
+          out = VolumeBar(symbol, s.barId, s.accQty, s.nTicks,
+            s.open, s.high, s.low, s.close,
+            barTs(s.tsFirstMs), barTs(s.tsLastMs)) :: out
+          s = s.copy(barId = -1L)
+        }
+        s = if (s.barId < 0L)
+          BarState(cum, tb, t.k, 1L, t.cents, t.cents, t.cents,
+            t.cents, ms, ms)
+        else
+          BarState(cum, s.barId, s.accQty + t.k, s.nTicks + 1L,
+            s.open, math.max(s.high, t.cents),
+            math.min(s.low, t.cents), t.cents, s.tsFirstMs, ms)
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class BarrierLabel(symbol: Long, e_idx: Long, entry_id: Long,
@@ -872,34 +840,30 @@ object Streaming {
     require(barrierBp > 0 && barrierBp < 10000,
       s"barrierBp must be in (0, 10000): $barrierBp")
     import ticks.sparkSession.implicits._
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[BarrierState]) =>
-          var s = state.getOption.getOrElse(BarrierState(0L, Nil))
-          var out = List.empty[BarrierLabel]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val idx = s.nSeen + 1L
-            val c = math.round(t.bid * 100.0)
-            val still = s.open.filter { case (eIdx, eC, eId) =>
-              val up = c * 10000L >= eC * (10000L + barrierBp)
-              val dn = c * 10000L <= eC * (10000L - barrierBp)
-              if (up || dn)
-                out = BarrierLabel(symbol, eIdx, eId, eC,
-                  if (up) 1 else -1, idx) :: out
-              else if (idx - eIdx >= horizon)
-                out = BarrierLabel(symbol, eIdx, eId, eC, 0, idx) :: out
-              !(up || dn || idx - eIdx >= horizon)
-            }
-            val opened =
-              if (idx % entryEvery == 1L % entryEvery)
-                still :+ ((idx, c, t.tick_id)) else still
-            s = BarrierState(idx, opened)
-          }
-          state.update(s)
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(_.symbol, _.tick_id)(
+        BarrierState(0L, Nil)) { (symbol, s0, rows) =>
+      var s = s0
+      var out = List.empty[BarrierLabel]
+      rows.foreach { t =>
+        val idx = s.nSeen + 1L
+        val c = math.round(t.bid * 100.0)
+        val still = s.open.filter { case (eIdx, eC, eId) =>
+          val up = c * 10000L >= eC * (10000L + barrierBp)
+          val dn = c * 10000L <= eC * (10000L - barrierBp)
+          if (up || dn)
+            out = BarrierLabel(symbol, eIdx, eId, eC,
+              if (up) 1 else -1, idx) :: out
+          else if (idx - eIdx >= horizon)
+            out = BarrierLabel(symbol, eIdx, eId, eC, 0, idx) :: out
+          !(up || dn || idx - eIdx >= horizon)
+        }
+        val opened =
+          if (idx % entryEvery == 1L % entryEvery)
+            still :+ ((idx, c, t.tick_id)) else still
+        s = BarrierState(idx, opened)
       }
+      (s, out.reverseIterator)
+    }
   }
 
   /** G23 — STREAMING COUNT-MIN SKETCH: the F47 cell grid maintained
@@ -947,44 +911,39 @@ object Streaming {
       s"lags must be >= 1: $lags")
     import ticks.sparkSession.implicits._
     val maxLag = lags.max
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[RespState]) =>
-          var s = state.getOption.getOrElse(RespState(Seq.empty,
-            lags.map(_ => 0L), lags.map(_ => 0L)))
-          var out = List.empty[RespPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            var counts = s.counts
-            var sums = s.sums
-            lags.zipWithIndex.foreach { case (l, i) =>
-              if (s.recent.length >= l) {
-                val past = s.recent(l - 1)
-                if (past.sign != 0L) {
-                  counts = counts.updated(i, counts(i) + 1L)
-                  sums = sums.updated(i,
-                    sums(i) + past.sign * (c - past.cents))
-                }
-              }
-            }
-            val sign =
-              if (s.recent.isEmpty) 0L
-              else if (c > s.recent.head.cents) 1L
-              else if (c < s.recent.head.cents) -1L
-              else 0L
-            s = RespState((RespEntry(c, sign) +: s.recent).take(maxLag),
-              counts, sums)
-            lags.zipWithIndex.foreach { case (l, i) =>
-              if (counts(i) > 0L)
-                out = RespPoint(symbol, l, counts(i),
-                  sums(i).toDouble / counts(i).toDouble) :: out
+    keyedFold(ticks, OutputMode.Append)(_.symbol, _.tick_id)(RespState(
+        Seq.empty, lags.map(_ => 0L), lags.map(_ => 0L))) { (symbol, s0, rows) =>
+      var s = s0
+      var out = List.empty[RespPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        var counts = s.counts
+        var sums = s.sums
+        lags.zipWithIndex.foreach { case (l, i) =>
+          if (s.recent.length >= l) {
+            val past = s.recent(l - 1)
+            if (past.sign != 0L) {
+              counts = counts.updated(i, counts(i) + 1L)
+              sums = sums.updated(i,
+                sums(i) + past.sign * (c - past.cents))
             }
           }
-          state.update(s)
-          out.reverseIterator
+        }
+        val sign =
+          if (s.recent.isEmpty) 0L
+          else if (c > s.recent.head.cents) 1L
+          else if (c < s.recent.head.cents) -1L
+          else 0L
+        s = RespState((RespEntry(c, sign) +: s.recent).take(maxLag),
+          counts, sums)
+        lags.zipWithIndex.foreach { case (l, i) =>
+          if (counts(i) > 0L)
+            out = RespPoint(symbol, l, counts(i),
+              sums(i).toDouble / counts(i).toDouble) :: out
+        }
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class KsPoint(source: String, n_docs: Long, ks_stat: Double,
@@ -1011,29 +970,24 @@ object Streaming {
     require(maxLen >= 1 && refCdf.length == maxLen + 1,
       s"refCdf must have maxLen+1 bins: ${refCdf.length} vs ${maxLen + 1}")
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[SourcedDoc],
-         state: GroupState[Array[Long]]) =>
-          val h = state.getOption.getOrElse(new Array[Long](maxLen + 1))
-          rows.foreach { d =>
-            val n = d.text.split(" ").count(_.nonEmpty)
-            h(math.min(n, maxLen)) += 1
-          }
-          state.update(h)
-          val total = h.sum
-          var cum = 0L; var ks = 0.0; var at = 0
-          var i = 0
-          while (i <= maxLen) {
-            cum += h(i)
-            val diff = math.abs(cum.toDouble / total - refCdf(i))
-            if (diff > ks) { ks = diff; at = i }
-            i += 1
-          }
-          Iterator.single(
-            KsPoint(source, total, math.rint(ks * 1e4) / 1e4, at))
+    keyedFold(docs, OutputMode.Append)(_.source, unordered)(
+        new Array[Long](maxLen + 1)) { (source, h, rows) =>
+      rows.foreach { d =>
+        val n = d.text.split(" ").count(_.nonEmpty)
+        h(math.min(n, maxLen)) += 1
       }
+      val total = h.sum
+      var cum = 0L; var ks = 0.0; var at = 0
+      var i = 0
+      while (i <= maxLen) {
+        cum += h(i)
+        val diff = math.abs(cum.toDouble / total - refCdf(i))
+        if (diff > ks) { ks = diff; at = i }
+        i += 1
+      }
+      (h, Iterator.single(
+        KsPoint(source, total, math.rint(ks * 1e4) / 1e4, at)))
+    }
   }
 
   case class PitEvent(symbol: Long, ts: Timestamp, kind: Int, id: Long,
@@ -1059,35 +1013,26 @@ object Streaming {
     * assumption). */
   def pitServePoints(events: Dataset[PitEvent]): Dataset[PitRow] = {
     import events.sparkSession.implicits._
-    // exact µs (the lateFlags rule — getTime is only ms-grained)
-    def usOf(ts: Timestamp): Long =
-      math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-    events.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[PitEvent],
-         state: GroupState[PitReg]) =>
-          var reg = state.getOption.getOrElse(PitReg(None, None))
-          var a = reg.a
-          var b = reg.b
-          val out = rows.toSeq
-            // ties: features (kinds 0 and 2) BEFORE facts (kind 1) —
-            // E16's inclusive rule; kind 2 must not sort after facts
-            .sortBy(e => (usOf(e.ts), if (e.kind == 1) 1 else 0, e.id))
-            .flatMap { e =>
-              val us = usOf(e.ts)
-              e.kind match {
-                case 0 => a = Some((e.v, us)); None
-                case 2 => b = Some((e.v, us)); None
-                case _ =>
-                  Some(PitRow(e.id, symbol,
-                    a.map(_._1), a.map(us - _._2),
-                    b.map(_._1), b.map(us - _._2)))
-              }
-            }
-          state.update(PitReg(a, b))
-          out.iterator
+    // ties: features (kinds 0 and 2) BEFORE facts (kind 1) — E16's
+    // inclusive rule; kind 2 must not sort after facts
+    keyedFold(events, OutputMode.Append)(_.symbol,
+        e => (micros(e.ts), if (e.kind == 1) 1 else 0, e.id))(
+        PitReg(None, None)) { (symbol, reg, rows) =>
+      var a = reg.a
+      var b = reg.b
+      val out = rows.flatMap { e =>
+        val us = micros(e.ts)
+        e.kind match {
+          case 0 => a = Some((e.v, us)); None
+          case 2 => b = Some((e.v, us)); None
+          case _ =>
+            Some(PitRow(e.id, symbol,
+              a.map(_._1), a.map(us - _._2),
+              b.map(_._1), b.map(us - _._2)))
+        }
       }
+      (PitReg(a, b), out)
+    }
   }
 
   /** G27 — STREAMING LEARNED-QUALITY ADMISSION: the ingest gate run
@@ -1140,33 +1085,26 @@ object Streaming {
       : Dataset[FillPoint] = {
     require(fillEvery >= 1, s"fillEvery must be >= 1: $fillEvery")
     import trades.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    trades.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[BarTrade],
-         state: GroupState[(Long, Long)]) =>
-          var (cumQty, cumPv) = state.getOption.getOrElse((0L, 0L))
-          val out = rows.toSeq.sortBy(_.event_id).flatMap { t =>
-            if (t.k <= 0L) None
-            else {
-              cumQty += t.k
-              cumPv += t.cents * t.k
-              if (t.event_id % fillEvery == 0L)
-                Some(FillPoint(key._1, t.event_id, key._2, t.cents,
-                  cumQty,
-                  cumPv.toDouble / cumQty.toDouble,
-                  if (cumPv == 0L) null
-                  else ((t.cents * cumQty - cumPv) * 10000L).toDouble
-                    / cumPv.toDouble))
-              else None
-            }
-          }
-          state.update((cumQty, cumPv))
-          out.iterator
+    keyedFold(trades, OutputMode.Append)(t => (t.symbol, utcDate(t.ts)),
+        _.event_id)((0L, 0L)) { (key, st, rows) =>
+      var (cumQty, cumPv) = st
+      val out = rows.flatMap { t =>
+        if (t.k <= 0L) None
+        else {
+          cumQty += t.k
+          cumPv += t.cents * t.k
+          if (t.event_id % fillEvery == 0L)
+            Some(FillPoint(key._1, t.event_id, key._2, t.cents,
+              cumQty,
+              cumPv.toDouble / cumQty.toDouble,
+              if (cumPv == 0L) null
+              else ((t.cents * cumQty - cumPv) * 10000L).toDouble
+                / cumPv.toDouble))
+          else None
+        }
       }
+      ((cumQty, cumPv), out)
+    }
   }
 
   case class MovePoint(symbol: Long, tick_id: Long, minute_od: Int,
@@ -1194,33 +1132,26 @@ object Streaming {
                     threshold: Double): DataFrame = {
     require(threshold > 0, s"threshold must be > 0: $threshold")
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
     def minuteOd(ts: Timestamp): Int = {
       val t = java.time.Instant.ofEpochMilli(ts.getTime)
         .atZone(java.time.ZoneOffset.UTC).toLocalTime
       t.getHour * 60 + t.getMinute
     }
-    val moves = ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[Long]) =>
-          var last = state.getOption.getOrElse(-1L)
-          val out = rows.toSeq.sortBy(_.tick_id).flatMap { t =>
-            val c = math.round(t.bid * 100.0)
-            val r =
-              if (last >= 0L)
-                Some(MovePoint(key._1, t.tick_id, minuteOd(t.ts),
-                  math.abs(c - last).toDouble))
-              else None
-            last = c
-            r
-          }
-          state.update(last)
-          out.iterator
-      }
+    val moves = keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(-1L) {
+      (key, last0, rows) =>
+        var last = last0
+        val out = rows.flatMap { t =>
+          val c = math.round(t.bid * 100.0)
+          val r =
+            if (last >= 0L)
+              Some(MovePoint(key._1, t.tick_id, minuteOd(t.ts),
+                math.abs(c - last).toDouble))
+            else None
+          last = c
+          r
+        }
+        (last, out)
+    }
     val z = when(col("sigma") =!= 0,
       (col("mv") - col("mu")) / col("sigma"))
     moves.toDF()
@@ -1340,29 +1271,23 @@ object Streaming {
     import docs.sparkSession.implicits._
     val cells = graft.operators.TextDedup.hllCells(docs.toDF(), n)
       .as[(String, Long, Long)]
-    cells.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[Array[Long]]) =>
-          val regs = state.getOption.getOrElse(
-            new Array[Long](graft.operators.TextDedup.HllRegs))
-          rows.foreach { case (_, reg, rho) =>
-            val i = reg.toInt
-            if (rho > regs(i)) regs(i) = rho
-          }
-          state.update(regs)
-          var zero = 0L
-          var sumScaled = 0L
-          var i = 0
-          while (i < regs.length) {
-            if (regs(i) == 0L) zero += 1
-            sumScaled += 1L << (26 - regs(i)).toInt
-            i += 1
-          }
-          Iterator.single(HllPoint(source, zero, sumScaled,
-            0.697 * 1024 * 67108864 / sumScaled.toDouble))
+    keyedFold(cells, OutputMode.Append)(_._1, unordered)(
+        new Array[Long](graft.operators.TextDedup.HllRegs)) { (source, regs, rows) =>
+      rows.foreach { case (_, reg, rho) =>
+        val i = reg.toInt
+        if (rho > regs(i)) regs(i) = rho
       }
+      var zero = 0L
+      var sumScaled = 0L
+      var i = 0
+      while (i < regs.length) {
+        if (regs(i) == 0L) zero += 1
+        sumScaled += 1L << (26 - regs(i)).toInt
+        i += 1
+      }
+      (regs, Iterator.single(HllPoint(source, zero, sumScaled,
+        0.697 * 1024 * 67108864 / sumScaled.toDouble)))
+    }
   }
 
   case class ManifestPoint(split: String, n_docs: Long, n_tokens: Long,
@@ -1387,24 +1312,20 @@ object Streaming {
   def manifestPoints(docs: Dataset[Doc]): Dataset[ManifestPoint] = {
     import docs.sparkSession.implicits._
     val p = graft.functions.PortableText.P
-    docs.groupByKey(d =>
-      graft.operators.CorpusPipeline.splitNameJvm(d.doc_id))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (split: String, rows: Iterator[Doc],
-         state: GroupState[(Long, Long, Long, Long, Long)]) =>
-          var (n, toks, ck, mn, mx) = state.getOption
-            .getOrElse((0L, 0L, 0L, Long.MaxValue, Long.MinValue))
-          rows.foreach { d =>
-            n += 1
-            toks += d.text.split(" ").count(_.nonEmpty).toLong
-            ck = (ck + graft.functions.PolyHash.hash(d.text)) % p
-            if (d.doc_id < mn) mn = d.doc_id
-            if (d.doc_id > mx) mx = d.doc_id
-          }
-          state.update((n, toks, ck, mn, mx))
-          Iterator.single(ManifestPoint(split, n, toks, ck, mn, mx))
+    keyedFold(docs, OutputMode.Append)(
+        d => graft.operators.CorpusPipeline.splitNameJvm(d.doc_id), unordered)(
+        (0L, 0L, 0L, Long.MaxValue, Long.MinValue)) { (split, st, rows) =>
+      var (n, toks, ck, mn, mx) = st
+      rows.foreach { d =>
+        n += 1
+        toks += d.text.split(" ").count(_.nonEmpty).toLong
+        ck = (ck + graft.functions.PolyHash.hash(d.text)) % p
+        if (d.doc_id < mn) mn = d.doc_id
+        if (d.doc_id > mx) mx = d.doc_id
       }
+      ((n, toks, ck, mn, mx),
+        Iterator.single(ManifestPoint(split, n, toks, ck, mn, mx)))
+    }
   }
 
   case class OrderArrival(o_orderkey: Long, o_custkey: Long, day_i: Int)
@@ -1435,27 +1356,22 @@ object Streaming {
       : Dataset[VelocityRow] = {
     import orders.sparkSession.implicits._
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
-    orders.groupByKey(_.o_custkey)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (cust: Long, rows: Iterator[OrderArrival],
-         state: GroupState[VelocityState]) =>
-          var days = state.getOption.map(_.days).getOrElse(Nil)
-          val out = rows.toSeq.sortBy(o => (o.day_i, o.o_orderkey))
-            .map { o =>
-              val n = days.iterator
-                .filter(e => e._1 >= o.day_i - windowDays &&
-                  e._1 <= o.day_i - 1)
-                .map(_._2).sum
-              val cur = days.find(_._1 == o.day_i).map(_._2).getOrElse(0L)
-              days = (o.day_i, cur + 1L) ::
-                days.filter(e => e._1 != o.day_i &&
-                  e._1 >= o.day_i - windowDays)
-              VelocityRow(o.o_orderkey, cust, o.day_i, n)
-            }
-          state.update(VelocityState(days))
-          out.iterator
+    keyedFold(orders, OutputMode.Append)(_.o_custkey,
+        o => (o.day_i, o.o_orderkey))(VelocityState(Nil)) { (cust, st, rows) =>
+      var days = st.days
+      val out = rows.map { o =>
+        val n = days.iterator
+          .filter(e => e._1 >= o.day_i - windowDays &&
+            e._1 <= o.day_i - 1)
+          .map(_._2).sum
+        val cur = days.find(_._1 == o.day_i).map(_._2).getOrElse(0L)
+        days = (o.day_i, cur + 1L) ::
+          days.filter(e => e._1 != o.day_i &&
+            e._1 >= o.day_i - windowDays)
+        VelocityRow(o.o_orderkey, cust, o.day_i, n)
       }
+      (VelocityState(days), out)
+    }
   }
 
   case class PathEvent(event_id: Long, user_id: Long, ts: Timestamp,
@@ -1476,21 +1392,16 @@ object Streaming {
     * must carry). */
   def pathEdges(events: Dataset[PathEvent]): Dataset[EdgePoint] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[PathEvent],
-         state: GroupState[String]) =>
-          var prev = state.getOption
-          val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .flatMap { e =>
-              val edge = prev.map(p => EdgePoint(user, p, e.event_type))
-              prev = Some(e.event_type)
-              edge
-            }
-          prev.foreach(state.update)
-          out.iterator
+    keyedFold(events, OutputMode.Append)(_.user_id,
+        e => (e.ts.getTime, e.event_id))(null: String) { (user, st, rows) =>
+      var prev = Option(st)
+      val out = rows.flatMap { e =>
+        val edge = prev.map(p => EdgePoint(user, p, e.event_type))
+        prev = Some(e.event_type)
+        edge
       }
+      (prev.orNull, out)
+    }
   }
 
   /** G40 keyed state: the OPEN session window's (day, win) and its
@@ -1627,12 +1538,7 @@ object Streaming {
       : Dataset[WindowScore] = {
     import ticks.sparkSession.implicits._
     require(k >= 2, s"need >= 2 slots: $k")
-    // calendar/slot/scoring arithmetic: the SHARED G40/G41/G42
-    // spelling (sessionUtcParts / sessionSlotOf / windowUErr)
-    val utcParts = sessionUtcParts _
-    val slotOf = sessionSlotOf _
-    def winName(slot: Int): String =
-      if (slot == 1) "morning" else "afternoon"
+    // scoring arithmetic: the SHARED G40/G41/G42 spelling (windowUErr)
     def score(symbol: Long, day: String, win: String,
               buf: List[(Long, Long)]): WindowScore = {
       // order by tick_id at close: the batch slot map is row_number
@@ -1662,56 +1568,52 @@ object Streaming {
     import ticks.sparkSession.implicits._
     val utcParts = sessionUtcParts _
     val slotOf = sessionSlotOf _
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[WindowAnomState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[T]
-          rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id)).foreach { t =>
-            val (d, h, m) = utcParts(t.ts)
-            val slot = slotOf(h, m)
-            val curSlot = if (st == null || st.curWin == "morning") 1 else 3
-            // close the open window once the tape moves past it —
-            // keeping the state alive with the last-closed marker
-            // (st = null would let a later late tick re-open and
-            // restate the scored window)
-            if (st != null && st.buf.nonEmpty &&
-                (d > st.curDay || (d == st.curDay && slot > curSlot))) {
-              out ++= score(symbol, st.curDay, st.curWin, st.buf)
-              st = st.copy(curDay = "", curWin = "", buf = Nil,
-                lastClosedDay = st.curDay,
-                lastClosedSlot = if (st.curWin == "morning") 1 else 3)
-            }
-            if (slot == 1 || slot == 3) {
-              val w = if (slot == 1) "morning" else "afternoon"
-              val c = math.round(t.bid * 100.0)
-              // a late cross-batch tick whose (day, slot) sorts
-              // EARLIER than the open window — or at-or-before the
-              // last CLOSED window — is dropped, not appended:
-              // appending would mis-attribute it to the open window,
-              // and re-opening a closed window would emit a duplicate
-              // restated score (Append mode cannot retract; G14's
-              // late-data discipline)
-              val late = st != null && ((st.buf.nonEmpty &&
-                (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
-                d < st.lastClosedDay ||
-                (d == st.lastClosedDay && slot <= st.lastClosedSlot))
-              if (!late) {
-                st =
-                  if (st == null)
-                    WindowAnomState(d, w, List((t.tick_id, c)))
-                  else if (st.buf.isEmpty)
-                    st.copy(curDay = d, curWin = w,
-                      buf = List((t.tick_id, c)))
-                  else st.copy(buf = st.buf :+ ((t.tick_id, c)))
-              }
-            }
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(
+        null: WindowAnomState) { (symbol, st0, rows) =>
+      var st = st0
+      val out = scala.collection.mutable.ArrayBuffer.empty[T]
+      rows.foreach { t =>
+        val (d, h, m) = utcParts(t.ts)
+        val slot = slotOf(h, m)
+        val curSlot = if (st == null || st.curWin == "morning") 1 else 3
+        // close the open window once the tape moves past it —
+        // keeping the state alive with the last-closed marker
+        // (st = null would let a later late tick re-open and
+        // restate the scored window)
+        if (st != null && st.buf.nonEmpty &&
+            (d > st.curDay || (d == st.curDay && slot > curSlot))) {
+          out ++= score(symbol, st.curDay, st.curWin, st.buf)
+          st = st.copy(curDay = "", curWin = "", buf = Nil,
+            lastClosedDay = st.curDay,
+            lastClosedSlot = if (st.curWin == "morning") 1 else 3)
+        }
+        if (slot == 1 || slot == 3) {
+          val w = if (slot == 1) "morning" else "afternoon"
+          val c = math.round(t.bid * 100.0)
+          // a late cross-batch tick whose (day, slot) sorts
+          // EARLIER than the open window — or at-or-before the
+          // last CLOSED window — is dropped, not appended:
+          // appending would mis-attribute it to the open window,
+          // and re-opening a closed window would emit a duplicate
+          // restated score (Append mode cannot retract; G14's
+          // late-data discipline)
+          val late = st != null && ((st.buf.nonEmpty &&
+            (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
+            d < st.lastClosedDay ||
+            (d == st.lastClosedDay && slot <= st.lastClosedSlot))
+          if (!late) {
+            st =
+              if (st == null)
+                WindowAnomState(d, w, List((t.tick_id, c)))
+              else if (st.buf.isEmpty)
+                st.copy(curDay = d, curWin = w,
+                  buf = List((t.tick_id, c)))
+              else st.copy(buf = st.buf :+ ((t.tick_id, c)))
           }
-          if (st != null) state.update(st) else state.remove()
-          out.iterator
+        }
       }
+      (st, out)
+    }
   }
 
   /** G43 output: one row per closed session window of a TRAINED
@@ -1803,76 +1705,72 @@ object Streaming {
     val utcParts = sessionUtcParts _
     val slotOf = sessionSlotOf _
     val scoreBuf = windowUErr(k, scalers, centroids) _
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[SignalPosState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SignalPoint]
-          def close(): Unit = if (st != null && st.buf.nonEmpty) {
-            val closedSlot = if (st.curWin == "morning") 1 else 3
-            val traded = st.curDay >= fromDate &&
-              thresholds.contains(symbol)
-            if (traded) {
-              val qu = thresholds(symbol)
-              // tick_id order at close (r13 advice): matches the
-              // batch slot map (row_number over tick_id) AND the
-              // batch close (max_by(cents, tick_id)) on out-of-order
-              // tapes — buf.last was append order, which diverges
-              // when an intra-window tick arrives in a later batch
-              val ordered = st.buf.sortBy(_._1).map(_._2)
-              val (uErr, uLast) = scoreBuf(symbol, ordered)
-              val closeC = ordered.last
-              val posPrev = st.pos
-              val pnl = if (st.hasPrev)
-                posPrev.toLong * (closeC - st.prevClose) else 0L
-              val newPos =
-                if (uErr.toDouble > qu) { if (uLast > 0) -1 else 1 }
-                else if (uErr.toDouble <= qu * exitFrac) 0
-                else posPrev
-              out += SignalPoint(symbol, st.curDay, st.curWin,
-                uErr.toDouble / 1000000.0, newPos, posPrev, pnl)
-              st = st.copy(buf = Nil, pos = newPos,
-                prevClose = closeC, hasPrev = true,
-                lastClosedDay = st.curDay, lastClosedSlot = closedSlot)
-            } else st = st.copy(buf = Nil,
-              lastClosedDay = st.curDay, lastClosedSlot = closedSlot)
-          }
-          rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id)).foreach { t =>
-            val (d, h, m) = utcParts(t.ts)
-            val slot = slotOf(h, m)
-            val curSlot =
-              if (st == null || st.curWin == "morning") 1 else 3
-            if (st != null && st.buf.nonEmpty &&
-                (d > st.curDay || (d == st.curDay && slot > curSlot))) {
-              close()
-            }
-            if (slot == 1 || slot == 3) {
-              val w = if (slot == 1) "morning" else "afternoon"
-              val c = math.round(t.bid * 100.0)
-              // a tick is LATE if it precedes the open window (G40's
-              // rule) OR sorts at-or-before the last CLOSED window —
-              // the position register outlives window closes, so a
-              // closed window must never re-open and restate
-              val late = st != null && ((st.buf.nonEmpty &&
-                (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
-                d < st.lastClosedDay ||
-                (d == st.lastClosedDay && slot <= st.lastClosedSlot))
-              if (!late) {
-                st =
-                  if (st == null)
-                    SignalPosState(d, w, List((t.tick_id, c)), 0, 0L,
-                      hasPrev = false, lastClosedDay = "",
-                      lastClosedSlot = -1)
-                  else st.copy(curDay = d, curWin = w,
-                    buf = st.buf :+ ((t.tick_id, c)))
-              }
-            }
-          }
-          if (st != null) state.update(st) else state.remove()
-          out.iterator
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(
+        null: SignalPosState) { (symbol, st0, rows) =>
+      var st = st0
+      val out = scala.collection.mutable.ArrayBuffer.empty[SignalPoint]
+      def close(): Unit = if (st != null && st.buf.nonEmpty) {
+        val closedSlot = if (st.curWin == "morning") 1 else 3
+        val traded = st.curDay >= fromDate &&
+          thresholds.contains(symbol)
+        if (traded) {
+          val qu = thresholds(symbol)
+          // tick_id order at close (r13 advice): matches the
+          // batch slot map (row_number over tick_id) AND the
+          // batch close (max_by(cents, tick_id)) on out-of-order
+          // tapes — buf.last was append order, which diverges
+          // when an intra-window tick arrives in a later batch
+          val ordered = st.buf.sortBy(_._1).map(_._2)
+          val (uErr, uLast) = scoreBuf(symbol, ordered)
+          val closeC = ordered.last
+          val posPrev = st.pos
+          val pnl = if (st.hasPrev)
+            posPrev.toLong * (closeC - st.prevClose) else 0L
+          val newPos =
+            if (uErr.toDouble > qu) { if (uLast > 0) -1 else 1 }
+            else if (uErr.toDouble <= qu * exitFrac) 0
+            else posPrev
+          out += SignalPoint(symbol, st.curDay, st.curWin,
+            uErr.toDouble / 1000000.0, newPos, posPrev, pnl)
+          st = st.copy(buf = Nil, pos = newPos,
+            prevClose = closeC, hasPrev = true,
+            lastClosedDay = st.curDay, lastClosedSlot = closedSlot)
+        } else st = st.copy(buf = Nil,
+          lastClosedDay = st.curDay, lastClosedSlot = closedSlot)
       }
+      rows.foreach { t =>
+        val (d, h, m) = utcParts(t.ts)
+        val slot = slotOf(h, m)
+        val curSlot =
+          if (st == null || st.curWin == "morning") 1 else 3
+        if (st != null && st.buf.nonEmpty &&
+            (d > st.curDay || (d == st.curDay && slot > curSlot))) {
+          close()
+        }
+        if (slot == 1 || slot == 3) {
+          val w = if (slot == 1) "morning" else "afternoon"
+          val c = math.round(t.bid * 100.0)
+          // a tick is LATE if it precedes the open window (G40's
+          // rule) OR sorts at-or-before the last CLOSED window —
+          // the position register outlives window closes, so a
+          // closed window must never re-open and restate
+          val late = st != null && ((st.buf.nonEmpty &&
+            (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
+            d < st.lastClosedDay ||
+            (d == st.lastClosedDay && slot <= st.lastClosedSlot))
+          if (!late) {
+            st =
+              if (st == null)
+                SignalPosState(d, w, List((t.tick_id, c)), 0, 0L,
+                  hasPrev = false, lastClosedDay = "",
+                  lastClosedSlot = -1)
+              else st.copy(curDay = d, curWin = w,
+                buf = st.buf :+ ((t.tick_id, c)))
+          }
+        }
+      }
+      (st, out)
+    }
   }
 
   /** G42 keyed state: G40's open-window register plus the
@@ -1916,61 +1814,57 @@ object Streaming {
     val slotOf = sessionSlotOf _
     def uErrOf(symbol: Long, buf: List[Long]): Long =
       windowUErr(k, scalers, centroids)(symbol, buf)._1
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[RetrainAlertState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[RetrainAlert]
-          def close(): Unit = if (st != null && st.buf.nonEmpty) {
-            // tick_id order at close — the shared G40/G41 rule
-            val uErr = uErrOf(symbol, st.buf.sortBy(_._1).map(_._2))
-            val breached = thresholds.get(symbol)
-              .exists(q => uErr.toDouble > q)
-            val streak = if (breached) st.streak + 1 else 0
-            if (breached && streak == consecutive)
-              out += RetrainAlert(symbol, st.curDay, st.curWin,
-                streak.toLong, uErr.toDouble / 1000000.0)
-            st = st.copy(curDay = "", curWin = "", buf = Nil,
-              streak = streak, lastClosedDay = st.curDay,
-              lastClosedSlot = if (st.curWin == "morning") 1 else 3)
-          }
-          rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id)).foreach { t =>
-            val (d, h, m) = utcParts(t.ts)
-            val slot = slotOf(h, m)
-            val curSlot =
-              if (st == null || st.curWin == "morning") 1 else 3
-            if (st != null && st.buf.nonEmpty &&
-                (d > st.curDay || (d == st.curDay && slot > curSlot))) {
-              close()
-            }
-            if (slot == 1 || slot == 3) {
-              val w = if (slot == 1) "morning" else "afternoon"
-              val c = math.round(t.bid * 100.0)
-              // G40's late-tick rule PLUS the closed-window marker: a
-              // tick earlier than the open window — or at-or-before
-              // the last CLOSED window — drops (its window already
-              // scored into the streak; Append cannot restate it)
-              val late = st != null && ((st.buf.nonEmpty &&
-                (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
-                d < st.lastClosedDay ||
-                (d == st.lastClosedDay && slot <= st.lastClosedSlot))
-              if (!late) {
-                st =
-                  if (st == null)
-                    RetrainAlertState(d, w, List((t.tick_id, c)),
-                      0, "", -1)
-                  else if (st.buf.isEmpty)
-                    st.copy(curDay = d, curWin = w,
-                      buf = List((t.tick_id, c)))
-                  else st.copy(buf = st.buf :+ ((t.tick_id, c)))
-              }
-            }
-          }
-          if (st != null) state.update(st) else state.remove()
-          out.iterator
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(
+        null: RetrainAlertState) { (symbol, st0, rows) =>
+      var st = st0
+      val out = scala.collection.mutable.ArrayBuffer.empty[RetrainAlert]
+      def close(): Unit = if (st != null && st.buf.nonEmpty) {
+        // tick_id order at close — the shared G40/G41 rule
+        val uErr = uErrOf(symbol, st.buf.sortBy(_._1).map(_._2))
+        val breached = thresholds.get(symbol)
+          .exists(q => uErr.toDouble > q)
+        val streak = if (breached) st.streak + 1 else 0
+        if (breached && streak == consecutive)
+          out += RetrainAlert(symbol, st.curDay, st.curWin,
+            streak.toLong, uErr.toDouble / 1000000.0)
+        st = st.copy(curDay = "", curWin = "", buf = Nil,
+          streak = streak, lastClosedDay = st.curDay,
+          lastClosedSlot = if (st.curWin == "morning") 1 else 3)
       }
+      rows.foreach { t =>
+        val (d, h, m) = utcParts(t.ts)
+        val slot = slotOf(h, m)
+        val curSlot =
+          if (st == null || st.curWin == "morning") 1 else 3
+        if (st != null && st.buf.nonEmpty &&
+            (d > st.curDay || (d == st.curDay && slot > curSlot))) {
+          close()
+        }
+        if (slot == 1 || slot == 3) {
+          val w = if (slot == 1) "morning" else "afternoon"
+          val c = math.round(t.bid * 100.0)
+          // G40's late-tick rule PLUS the closed-window marker: a
+          // tick earlier than the open window — or at-or-before
+          // the last CLOSED window — drops (its window already
+          // scored into the streak; Append cannot restate it)
+          val late = st != null && ((st.buf.nonEmpty &&
+            (d < st.curDay || (d == st.curDay && slot < curSlot))) ||
+            d < st.lastClosedDay ||
+            (d == st.lastClosedDay && slot <= st.lastClosedSlot))
+          if (!late) {
+            st =
+              if (st == null)
+                RetrainAlertState(d, w, List((t.tick_id, c)),
+                  0, "", -1)
+              else if (st.buf.isEmpty)
+                st.copy(curDay = d, curWin = w,
+                  buf = List((t.tick_id, c)))
+              else st.copy(buf = st.buf :+ ((t.tick_id, c)))
+          }
+        }
+      }
+      (st, out)
+    }
   }
 
   /** G39 keyed state: the OPEN day's (day, prev cents, rv
@@ -2000,48 +1894,41 @@ object Streaming {
       : Dataset[VolPoint] = {
     import ticks.sparkSession.implicits._
     require(h >= 1, s"h must be >= 1: $h")
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
     def cents(bid: Double): Long = math.round(bid * 100.0)
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[VolConeState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[VolPoint]
-          def close(): Unit = if (st != null) {
-            val ring1 = (st.ring :+ ((st.curDay, st.curRv))).takeRight(h)
-            if (ring1.length == h) {
-              val roll = ring1.map(_._2).sum
-              val band = cones.get(symbol) match {
-                case None => "untrained"
-                case Some((lo, hi)) =>
-                  if (roll < lo) "below"
-                  else if (roll > hi) "above" else "in"
-              }
-              out += VolPoint(symbol, st.curDay, roll, band)
-            }
-            st = VolConeState("", 0L, 0L, ring1.takeRight(h - 1))
+    keyedFold(ticks, OutputMode.Append)(_.symbol, tsThenId)(
+        null: VolConeState) { (symbol, st0, rows) =>
+      var st = st0
+      val out = scala.collection.mutable.ArrayBuffer.empty[VolPoint]
+      def close(): Unit = if (st != null) {
+        val ring1 = (st.ring :+ ((st.curDay, st.curRv))).takeRight(h)
+        if (ring1.length == h) {
+          val roll = ring1.map(_._2).sum
+          val band = cones.get(symbol) match {
+            case None => "untrained"
+            case Some((lo, hi)) =>
+              if (roll < lo) "below"
+              else if (roll > hi) "above" else "in"
           }
-          rows.toSeq.sortBy(t => (t.ts.getTime, t.tick_id)).foreach { t =>
-            val d = utcDate(t.ts)
-            val c = cents(t.bid)
-            if (st == null || st.curDay.isEmpty)
-              st = VolConeState(d, c, 0L,
-                if (st == null) Nil else st.ring)
-            else if (d != st.curDay) {
-              close()
-              st = st.copy(curDay = d, prevCents = c, curRv = 0L)
-            } else {
-              val dd = c - st.prevCents
-              st = st.copy(prevCents = c, curRv = st.curRv + dd * dd)
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
+          out += VolPoint(symbol, st.curDay, roll, band)
+        }
+        st = VolConeState("", 0L, 0L, ring1.takeRight(h - 1))
       }
+      rows.foreach { t =>
+        val d = utcDate(t.ts)
+        val c = cents(t.bid)
+        if (st == null || st.curDay.isEmpty)
+          st = VolConeState(d, c, 0L,
+            if (st == null) Nil else st.ring)
+        else if (d != st.curDay) {
+          close()
+          st = st.copy(curDay = d, prevCents = c, curRv = 0L)
+        } else {
+          val dd = c - st.prevCents
+          st = st.copy(prevCents = c, curRv = st.curRv + dd * dd)
+        }
+      }
+      (st, out)
+    }
   }
 
   /** G37 keyed state: each leg's last price (NaN = unseen) + the
@@ -2078,37 +1965,30 @@ object Streaming {
           (a, b, t.symbol == a, t.tick_id, t.ts, t.bid)
       }
     }
-    routed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, Long),
-         rows: Iterator[(Long, Long, Boolean, Long, Timestamp, Double)],
-         state: GroupState[PairSpreadState]) =>
-          val beta = betas(key)
-          var st = state.getOption
-            .getOrElse(PairSpreadState(Double.NaN, Double.NaN, 0L,
-              0.0, 0.0))
-          val out = rows.toSeq.sortBy(r => (r._5.getTime, r._4))
-            .flatMap { case (_, _, isA, tickId, _, bid) =>
-              st = if (isA) st.copy(lastA = bid) else st.copy(lastB = bid)
-              if (st.lastA.isNaN || st.lastB.isNaN) None
-              else {
-                val s = st.lastA - beta * st.lastB
-                val n1 = st.n + 1
-                val d = s - st.mean
-                val mean1 = st.mean + d / n1
-                val m21 = st.m2 + d * (s - mean1)
-                st = st.copy(n = n1, mean = mean1, m2 = m21)
-                val z =
-                  if (n1 >= 2 && m21 > 0.0)
-                    Some((s - mean1) / math.sqrt(m21 / n1))
-                  else None
-                Some(PairZ(tickId, key._1, key._2, s, z))
-              }
-            }
-          state.update(st)
-          out.iterator
+    keyedFold(routed, OutputMode.Append)(r => (r._1, r._2),
+        r => (r._5.getTime, r._4))(
+        PairSpreadState(Double.NaN, Double.NaN, 0L, 0.0, 0.0)) { (key, st0, rows) =>
+      val beta = betas(key)
+      var st = st0
+      val out = rows.flatMap { case (_, _, isA, tickId, _, bid) =>
+        st = if (isA) st.copy(lastA = bid) else st.copy(lastB = bid)
+        if (st.lastA.isNaN || st.lastB.isNaN) None
+        else {
+          val s = st.lastA - beta * st.lastB
+          val n1 = st.n + 1
+          val d = s - st.mean
+          val mean1 = st.mean + d / n1
+          val m21 = st.m2 + d * (s - mean1)
+          st = st.copy(n = n1, mean = mean1, m2 = m21)
+          val z =
+            if (n1 >= 2 && m21 > 0.0)
+              Some((s - mean1) / math.sqrt(m21 / n1))
+            else None
+          Some(PairZ(tickId, key._1, key._2, s, z))
+        }
       }
+      (st, out)
+    }
   }
 
   /** G36 keyed state: first island start ever, the OPEN island's
@@ -2137,35 +2017,30 @@ object Streaming {
       : Dataset[CoveragePoint] = {
     import orders.sparkSession.implicits._
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
-    orders.groupByKey(_.o_custkey)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (cust: Long, rows: Iterator[OrderArrival],
-         state: GroupState[CoverageState]) =>
-          var st = state.getOption.orNull
-          val out = rows.toSeq.sortBy(o => (o.day_i, o.o_orderkey))
-            .map { o =>
-              val s = o.day_i.toLong
-              val e = s + windowDays
-              st =
-                if (st == null)
-                  CoverageState(s, s, e, 0L, 1L, 1L)
-                else if (s > st.islE)
-                  // strictly past the open island's end: close it
-                  CoverageState(st.firstS, s, e,
-                    st.closedCov + (st.islE - st.islS),
-                    st.nIsl + 1L, st.nOrd + 1L)
-                else
-                  CoverageState(st.firstS, st.islS,
-                    math.max(st.islE, e), st.closedCov, st.nIsl,
-                    st.nOrd + 1L)
-              CoveragePoint(o.o_orderkey, cust, st.nOrd, st.nIsl,
-                st.closedCov + (st.islE - st.islS),
-                st.islE - st.firstS)
-            }
-          if (st != null) state.update(st)
-          out.iterator
+    keyedFold(orders, OutputMode.Append)(_.o_custkey,
+        o => (o.day_i, o.o_orderkey))(null: CoverageState) { (cust, st0, rows) =>
+      var st = st0
+      val out = rows.map { o =>
+        val s = o.day_i.toLong
+        val e = s + windowDays
+        st =
+          if (st == null)
+            CoverageState(s, s, e, 0L, 1L, 1L)
+          else if (s > st.islE)
+            // strictly past the open island's end: close it
+            CoverageState(st.firstS, s, e,
+              st.closedCov + (st.islE - st.islS),
+              st.nIsl + 1L, st.nOrd + 1L)
+          else
+            CoverageState(st.firstS, st.islS,
+              math.max(st.islE, e), st.closedCov, st.nIsl,
+              st.nOrd + 1L)
+        CoveragePoint(o.o_orderkey, cust, st.nOrd, st.nIsl,
+          st.closedCov + (st.islE - st.islS),
+          st.islE - st.firstS)
       }
+      (st, out)
+    }
   }
 
   /** G44 keyed state: last cents (Long.MinValue = none), previous
@@ -2189,34 +2064,26 @@ object Streaming {
   def garchPoints(ticks: Dataset[Tick], omega: Double, alpha: Double,
                   beta: Double): Dataset[GarchPoint] = {
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
     val seed = omega / (1.0 - alpha - beta)
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[GarchState]) =>
-          // Long.MinValue = no tick seen yet (a plain -1 would
-          // conflate "unseen" with a genuinely negative price)
-          var s = state.getOption.getOrElse(
-            GarchState(Long.MinValue, 0.0, 0.0, 0L))
-          var out = List.empty[GarchPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            if (s.lastC != Long.MinValue) {
-              val m = (c - s.lastC).toDouble
-              val h = if (s.n == 0L) seed
-                else omega + alpha * s.prev * s.prev + beta * s.h
-              s = GarchState(c, m, h, s.n + 1L)
-              out = GarchPoint(t.tick_id, key._1, key._2, s.n, m, h,
-                m * m > 4.0 * h) :: out
-            } else s = s.copy(lastC = c)
-          }
-          state.update(s)
-          out.reverseIterator
+    // Long.MinValue = no tick seen yet (a plain -1 would conflate
+    // "unseen" with a genuinely negative price)
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        GarchState(Long.MinValue, 0.0, 0.0, 0L)) { (key, s0, rows) =>
+      var s = s0
+      var out = List.empty[GarchPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        if (s.lastC != Long.MinValue) {
+          val m = (c - s.lastC).toDouble
+          val h = if (s.n == 0L) seed
+            else omega + alpha * s.prev * s.prev + beta * s.h
+          s = GarchState(c, m, h, s.n + 1L)
+          out = GarchPoint(t.tick_id, key._1, key._2, s.n, m, h,
+            m * m > 4.0 * h) :: out
+        } else s = s.copy(lastC = c)
       }
+      (s, out.reverseIterator)
+    }
   }
 
   /** G46 keyed state: last cents (Long.MinValue = none), the CUSUM
@@ -2241,36 +2108,28 @@ object Streaming {
   def cusumPoints(ticks: Dataset[Tick], h: Long): Dataset[CusumPoint] = {
     import ticks.sparkSession.implicits._
     require(h > 0, s"h must be positive: $h")
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[CusumState]) =>
-          // Long.MinValue = no tick seen yet (not -1: negative
-          // prices round to negative cents and must still diff)
-          var s = state.getOption.getOrElse(
-            CusumState(Long.MinValue, 0L, 0L, 0L, 0L))
-          var out = List.empty[CusumPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            if (s.lastC != Long.MinValue) {
-              val m = c - s.lastC
-              val g = math.max(0L, s.sp + m)
-              val l = math.min(0L, s.sn + m)
-              val bp = if (g > h) 1L else 0L
-              val bn = if (l < -h) 1L else 0L
-              s = CusumState(c, g * (1L - bp), l * (1L - bn),
-                s.n + 1L, s.nev + bp + bn)
-              out = CusumPoint(t.tick_id, key._1, key._2, s.n, s.sp,
-                s.sn, s.nev) :: out
-            } else s = s.copy(lastC = c)
-          }
-          state.update(s)
-          out.reverseIterator
+    // Long.MinValue = no tick seen yet (not -1: negative prices round
+    // to negative cents and must still diff)
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        CusumState(Long.MinValue, 0L, 0L, 0L, 0L)) { (key, s0, rows) =>
+      var s = s0
+      var out = List.empty[CusumPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        if (s.lastC != Long.MinValue) {
+          val m = c - s.lastC
+          val g = math.max(0L, s.sp + m)
+          val l = math.min(0L, s.sn + m)
+          val bp = if (g > h) 1L else 0L
+          val bn = if (l < -h) 1L else 0L
+          s = CusumState(c, g * (1L - bp), l * (1L - bn),
+            s.n + 1L, s.nev + bp + bn)
+          out = CusumPoint(t.tick_id, key._1, key._2, s.n, s.sp,
+            s.sn, s.nev) :: out
+        } else s = s.copy(lastC = c)
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class FfdPoint(tick_id: Long, symbol: Long, ffd: Double)
@@ -2289,26 +2148,22 @@ object Streaming {
     import ticks.sparkSession.implicits._
     require(k >= 1, s"k must be >= 1: $k")
     val weights = graft.operators.Microstructure.ffdWeights(d, k)
-    ticks.groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (symbol: Long, rows: Iterator[Tick],
-         state: GroupState[List[Long]]) =>
-          var ring = state.getOption.getOrElse(List.empty[Long])
-          var out = List.empty[FfdPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            ring = (math.round(t.bid * 100.0) :: ring).take(k + 1)
-            if (ring.length == k + 1) {
-              // ring head = current tick, matching weight order
-              val dot = weights.zip(ring)
-                .map { case (w, c) => w * c.toDouble }
-                .reduce(_ + _)
-              out = FfdPoint(t.tick_id, symbol, dot) :: out
-            }
-          }
-          state.update(ring)
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(_.symbol, _.tick_id)(
+        List.empty[Long]) { (symbol, ring0, rows) =>
+      var ring = ring0
+      var out = List.empty[FfdPoint]
+      rows.foreach { t =>
+        ring = (math.round(t.bid * 100.0) :: ring).take(k + 1)
+        if (ring.length == k + 1) {
+          // ring head = current tick, matching weight order
+          val dot = weights.zip(ring)
+            .map { case (w, c) => w * c.toDouble }
+            .reduce(_ + _)
+          out = FfdPoint(t.tick_id, symbol, dot) :: out
+        }
       }
+      (ring, out.reverseIterator)
+    }
   }
 
   /** G45 keyed state: the filter pair (x̂, P) plus the tick count
@@ -2330,30 +2185,23 @@ object Streaming {
   def kalmanPoints(ticks: Dataset[Tick], q: Double, r: Double)
       : Dataset[KalmanPoint] = {
     import ticks.sparkSession.implicits._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[KalmanState]) =>
-          var s = state.getOption.getOrElse(KalmanState(0.0, 0.0, 0L))
-          var out = List.empty[KalmanPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val z = math.round(t.bid * 100.0).toDouble
-            s = if (s.n == 0L) KalmanState(z, r, 1L)
-            else {
-              val pp = s.p + q
-              val k = pp / (pp + r)
-              KalmanState(s.x + k * (z - s.x), (1.0 - k) * pp, s.n + 1L)
-            }
-            out = KalmanPoint(t.tick_id, key._1, key._2, s.n, z, s.x,
-              s.p) :: out
-          }
-          state.update(s)
-          out.reverseIterator
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        KalmanState(0.0, 0.0, 0L)) { (key, s0, rows) =>
+      var s = s0
+      var out = List.empty[KalmanPoint]
+      rows.foreach { t =>
+        val z = math.round(t.bid * 100.0).toDouble
+        s = if (s.n == 0L) KalmanState(z, r, 1L)
+        else {
+          val pp = s.p + q
+          val k = pp / (pp + r)
+          KalmanState(s.x + k * (z - s.x), (1.0 - k) * pp, s.n + 1L)
+        }
+        out = KalmanPoint(t.tick_id, key._1, key._2, s.n, z, s.x,
+          s.p) :: out
       }
+      (s, out.reverseIterator)
+    }
   }
 
   case class MediaDecision(media_id: Long, kind: String,
@@ -2371,21 +2219,17 @@ object Streaming {
   def mediaAdmission(media: Dataset[graft.operators.Multimodal.MediaRow])
       : Dataset[MediaDecision] = {
     import media.sparkSession.implicits._
-    media.groupByKey(r => (r.kind, graft.operators.Multimodal.contentFp(r)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Long),
-         rows: Iterator[graft.operators.Multimodal.MediaRow],
-         state: GroupState[Boolean]) =>
-          var seen = state.getOption.getOrElse(false)
-          val out = rows.toSeq.sortBy(_.media_id).map { r =>
-            val admit = !seen
-            seen = true
-            MediaDecision(r.media_id, r.kind, admit)
-          }
-          state.update(seen)
-          out.iterator
-      }
+    keyedFold(media, OutputMode.Append)(
+        r => (r.kind, graft.operators.Multimodal.contentFp(r)), _.media_id)(false) {
+      (_, seen0, rows) =>
+        var seen = seen0
+        val out = rows.map { r =>
+          val admit = !seen
+          seen = true
+          MediaDecision(r.media_id, r.kind, admit)
+        }
+        (seen, out)
+    }
   }
 
   /** G48 keyed state: last cents (Long.MinValue = none), the scalar
@@ -2411,38 +2255,30 @@ object Streaming {
       : Dataset[HmmPoint] = {
     import ticks.sparkSession.implicits._
     import hp._
-    def utcDate(ts: Timestamp): String =
-      java.time.Instant.ofEpochMilli(ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-    ticks.groupByKey(t => (t.symbol, utcDate(t.ts)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Tick],
-         state: GroupState[HmmState]) =>
-          // Long.MinValue = no tick seen yet (not -1: negative
-          // prices round to negative cents and must still diff)
-          var s = state.getOption.getOrElse(
-            HmmState(Long.MinValue, 0.0, 0L))
-          var out = List.empty[HmmPoint]
-          rows.toSeq.sortBy(_.tick_id).foreach { t =>
-            val c = math.round(t.bid * 100.0)
-            if (s.lastC != Long.MinValue) {
-              val m = (c - s.lastC).toDouble
-              val eLm = gL / (gL2 + m * m)
-              val eHm = gH / (gH2 + m * m)
-              // identical expression trees as the batch SQL fold
-              val uL = if (s.n == 0L) piL * eLm
-                else eLm * (stayL * s.pl + toL * (1.0 - s.pl))
-              val uH = if (s.n == 0L) piH * eHm
-                else eHm * (toH * s.pl + stayH * (1.0 - s.pl))
-              val pl = uL / (uL + uH)
-              s = HmmState(c, pl, s.n + 1L)
-              out = HmmPoint(t.tick_id, key._1, key._2, s.n, m,
-                1.0 - pl, (1.0 - pl) > 0.5) :: out
-            } else s = s.copy(lastC = c)
-          }
-          state.update(s)
-          out.reverseIterator
+    // Long.MinValue = no tick seen yet (not -1: negative prices round
+    // to negative cents and must still diff)
+    keyedFold(ticks, OutputMode.Append)(symbolDay, _.tick_id)(
+        HmmState(Long.MinValue, 0.0, 0L)) { (key, s0, rows) =>
+      var s = s0
+      var out = List.empty[HmmPoint]
+      rows.foreach { t =>
+        val c = math.round(t.bid * 100.0)
+        if (s.lastC != Long.MinValue) {
+          val m = (c - s.lastC).toDouble
+          val eLm = gL / (gL2 + m * m)
+          val eHm = gH / (gH2 + m * m)
+          // identical expression trees as the batch SQL fold
+          val uL = if (s.n == 0L) piL * eLm
+            else eLm * (stayL * s.pl + toL * (1.0 - s.pl))
+          val uH = if (s.n == 0L) piH * eHm
+            else eHm * (toH * s.pl + stayH * (1.0 - s.pl))
+          val pl = uL / (uL + uH)
+          s = HmmState(c, pl, s.n + 1L)
+          out = HmmPoint(t.tick_id, key._1, key._2, s.n, m,
+            1.0 - pl, (1.0 - pl) > 0.5) :: out
+        } else s = s.copy(lastC = c)
       }
+      (s, out.reverseIterator)
+    }
   }
 }

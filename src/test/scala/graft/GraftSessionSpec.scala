@@ -293,4 +293,16 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(spark.conf.getAll == before)
     } finally old.foreach(spark.conf.set(key, _))
   }
+
+  test("GraftExtensions alone resolves all eleven graft_* functions in a " +
+      "fresh session, before any operator registers one") {
+    val names = Seq("graft_polyhash", "graft_grams", "graft_vecdot",
+      "graft_minhashes", "graft_simhash", "graft_wordgrams", "graft_pqcodes",
+      "graft_winnow", "graft_charentropy", "graft_cdc", "graft_sorted_ncommon")
+    // a new session gets the extensions' functions but none that an
+    // operator registered on another session
+    val fresh = spark.newSession()
+    val missing = names.filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"unresolved: $missing")
+  }
 }

@@ -2214,4 +2214,43 @@ class StreamingSpec extends SparkSpec {
       }
     } finally q.stop()
   }
+
+  test("keyedFold: each key starts from a fresh initial state, folds " +
+      "its rows in sort-key order, carries state across micro-batches " +
+      "and keeps none when its fold returns null") {
+    implicit val sqlCtx = spark.sqlContext
+    // one state partition, so both keys fold in one task, where a
+    // shared initial array would show
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val in = MemoryStream[(String, Long)]
+      // state: a one-slot counter array; each row emits its position
+      // in the key's fold; key z returns no state
+      val q = Streaming.keyedFold(in.toDS(), OutputMode.Append)(
+          (r: (String, Long)) => r._1, (r: (String, Long)) => r._2)(
+          new Array[Long](1)) { (k, seen, rows) =>
+        val out = rows.map { r => seen(0) += 1; (k, r._2, seen(0)) }
+        (if (k == "z") null else seen, out)
+      }.writeStream.format("memory").queryName("keyed_fold")
+        .outputMode(OutputMode.Append).start()
+      try {
+        def stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+        in.addData(("a", 3L), ("b", 1L), ("a", 1L), ("b", 2L), ("z", 5L),
+          ("b", 0L))
+        q.processAllAvailable()
+        assert(stateRows == 2L)
+        in.addData(("a", 2L), ("z", 6L), ("b", 9L))
+        q.processAllAvailable()
+        assert(stateRows == 2L)
+        val out = spark.table("keyed_fold").as[(String, Long, Long)]
+          .collect().toSet
+        assert(out == Set(
+          ("a", 1L, 1L), ("a", 3L, 2L), ("a", 2L, 3L),
+          ("b", 0L, 1L), ("b", 1L, 2L), ("b", 2L, 3L), ("b", 9L, 4L),
+          ("z", 5L, 1L), ("z", 6L, 1L)))
+      } finally q.stop()
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
