@@ -17,7 +17,7 @@ echo "== round-close 2/3: whole-registry 10x scale sweep =="
 # env -u: a leaked SPARK_GRAFT_ONLY would narrow the sweep to a
 # partial bracket and the rotation below would certify stale data.
 env -u SPARK_GRAFT_ONLY \
-  SPARK_GRAFT_FAMILY=registry SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   sbt -batch "runMain graft.tools.Sf1Smoke" \
   > /tmp/round_close_sweep.log 2>&1 \
   || { echo "SWEEP FAILED — tail:"; tail -20 /tmp/round_close_sweep.log; exit 1; }

@@ -5,10 +5,10 @@ Usage: scripts/scale_gate.py [current.json] [baseline.json]
   defaults: scale_sweep_10x.json vs scale_sweep_10x_prev.json
 
 Compares the per-key seconds of the current round's 10x replica sweep
-(`sbt "runMain graft.tools.Sf1Smoke"` with SPARK_GRAFT_FAMILY=registry)
-against the prior round's recorded bracket and FAILS (exit 1) if any
-key exceeds RATIO x its prior point — the standing scale-regression
-detector the 100 TB design claim needs (r15 verdict #4).
+(`sbt "runMain graft.tools.Sf1Smoke"`) against the prior round's
+recorded bracket and FAILS (exit 1) if any key exceeds RATIO x its
+prior point — the standing scale-regression detector the 100 TB
+design claim needs (r15 verdict #4).
 
 Keys new this round (no baseline point) are listed informationally.
 Sub-floor timings (< FLOOR s on both sides) are ignored: at that size

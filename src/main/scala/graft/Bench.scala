@@ -49,14 +49,7 @@ object Bench {
         // next to the bench numbers instead of discarding it.
         System.err.println(s"[bench] ORC/JSON warm-up FAILED " +
           s"(A29/A30 keys will include one-time format init): $e")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).toSeq.flatten.foreach(rm)
-          f.delete(); ()
-        }
-        rm(fmtDir.toFile)
-      }
+      } finally LocalFiles.rmTree(fmtDir.toFile)
     }
     // JIT/codegen battery (r18, guide §1: per-query numbers must
     // measure the query, not JVM warm-up): a fresh JVM C2-compiles the

@@ -69,13 +69,6 @@ object CkptGc {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window.WindowExec",
         org.apache.logging.log4j.Level.ERROR)
-      // "function X replaced a previously registered function": the
-      // graft native-expression registrars are idempotent by design
-      // (each registry query re-registers its functions); the notice
-      // is correct and content-free at 270 queries/session
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-        org.apache.logging.log4j.Level.ERROR)
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Mark every persistent RDD NOT yet tracked as pinned. Call

@@ -19,9 +19,10 @@ import graft.functions.{CdcChunks, CharEntropy, CharGrams, MinHashes, PolyHash, 
   * spark.sql.extensions=graft.GraftExtensions` does the same for every
   * session of a cluster deployment. It adds:
   *
-  *  - all eleven `graft_*` functions (operators also self-register
-  *    defensively for sessions created without extensions, e.g. a
-  *    caller's own);
+  *  - all eleven `graft_*` functions. This is the only place they are
+  *    registered: an operator that calls one needs a session built
+  *    with this extension (through [[GraftSession]] or the conf
+  *    above). `newSession()` keeps them;
   *  - two AQE query-stage preparation rules, applied in this order to
   *    the initial plan and at every AQE re-plan:
   *    [[SmallPlanToOneStage]], so a plan whose leaves each run as one

@@ -28,9 +28,14 @@ import org.apache.spark.sql.SparkSession
   *   partitioned trees with more than 32 directories, e.g.
   *   `GoldIngest.readDir` over thousands of symbols.
   * - [[GraftExtensions]] installed through `withExtensions`: the graft
-  *   functions plus two AQE query-stage preparation rules, both gated
-  *   on `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
-  *   coalesces shuffle reads toward (no conf of their own):
+  *   functions plus two AQE query-stage preparation rules. The
+  *   extension is the only source of the `graft_*` functions the
+  *   operators call, so a library caller builds its session here or
+  *   sets `spark.sql.extensions=graft.GraftExtensions`; a session with
+  *   neither fails analysis on the first `graft_*` call. Both rules
+  *   are gated on `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+  *   the size AQE coalesces shuffle reads toward (no conf of their
+  *   own):
   *   - [[SmallPlanToOneStage]] runs a plan as one stage when every leaf
   *     already runs as one partition (a one-split file scan, a local
   *     table, a one-partition checkpoint, a materialized stage AQE
@@ -88,6 +93,24 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Run `body` with session conf `key` set to `value`. The session's
+    * own setting is restored on every exit path — re-set if it had
+    * one, unset if it ran on the default (`getAll` holds only set
+    * keys, where `getOption` would also return a default and the
+    * restore would pin it) — and the `try` begins right after the set,
+    * so a throwing body cannot leak the override into the rest of the
+    * session. */
+  private[graft] def withConf[R](s: SparkSession, key: String, value: String)
+                                (body: => R): R = {
+    val prev = s.conf.getAll.get(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
 
   /** Local session for the driver-contract mains. */
   def local(cores: String): SparkSession = {

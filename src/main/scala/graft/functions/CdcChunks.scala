@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -99,10 +97,4 @@ object CdcChunks {
     if (m < 1 || m > 30) fail(s"maskBits must be in [1, 30], got $m")
     CdcChunks(exprs.head, m)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cdc"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc"),
-      fromArgs _)
 }

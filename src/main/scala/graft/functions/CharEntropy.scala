@@ -1,9 +1,7 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -63,10 +61,4 @@ object CharEntropy {
       s"graft_charentropy(str): takes exactly 1 argument, got ${exprs.length}")
     CharEntropy(exprs.head)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_charentropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_charentropy"),
-      fromArgs _)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -76,11 +74,4 @@ object CharGrams {
     if (n < 1) fail(s"n must be positive, got $n")
     CharGrams(exprs.head, n)
   }
-
-  /** Register `graft_grams(str, n)` (n must be a foldable int). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_grams"),
-      new ExpressionInfo(classOf[CharGrams].getName, "graft_grams"),
-      fromArgs _)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -84,15 +82,4 @@ object PolyHash {
         s"graft_polyhash(str) takes exactly 1 argument, got ${exprs.length}")
     PolyHash(exprs.head)
   }
-
-  /** Register `graft_polyhash` in the session's function registry so it
-    * is callable from SQL fragments and inside HOF lambdas. Idempotent;
-    * called by every operator that uses it (robust even when the
-    * session is created by a driver that knows nothing about
-    * SparkSessionExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      fromArgs _)
 }

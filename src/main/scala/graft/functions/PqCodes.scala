@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -114,10 +112,4 @@ object PqCodes {
     val k = intLit(exprs(4), "k", 1, 65536)
     PqCodes(exprs.head, exprs(1), nSub, subDim, k)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pqcodes"),
-      new ExpressionInfo(classOf[PqCodes].getName, "graft_pqcodes"),
-      fromArgs _)
 }

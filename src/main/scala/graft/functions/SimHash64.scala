@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -69,10 +67,4 @@ object SimHash64 {
     if (bits < 1 || bits > 64) fail(s"bits out of range: $bits")
     SimHash64(exprs.head, bits)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      fromArgs _)
 }

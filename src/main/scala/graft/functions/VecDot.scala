@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -64,10 +62,4 @@ object VecDot {
         s"graft_vecdot(a, b) takes exactly 2 arguments, got ${exprs.length}")
     VecDot(exprs.head, exprs(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_vecdot"),
-      new ExpressionInfo(classOf[VecDot].getName, "graft_vecdot"),
-      fromArgs _)
 }

@@ -142,7 +142,6 @@ object CatalogAudits {
     try {
       Tables.documents(s, d)
         .write.mode(SaveMode.Overwrite).json(root.toString)
-      graft.functions.PolyHash.register(s)
       val back = s.read.json(root.toString)
       detach(s, back.groupBy("source").agg(
           count(lit(1)).as("n"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Catalog-backed lakehouse operations — the Spark-native analog of the
   * reference's Iceberg/Trino storage layer: year-partitioned gold
@@ -19,6 +20,13 @@ import org.apache.spark.sql.functions._
   * only matching directories (proved in `CatalogSpec`).
   */
 object CatalogOps {
+
+  /** Run an `insertInto` overwrite under dynamic partition overwrite,
+    * so it rewrites only the partitions present in the written rows;
+    * the session's own `partitionOverwriteMode` is restored after. */
+  private def dynamicOverwrite(spark: SparkSession)(write: => Unit): Unit =
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode",
+      "dynamic")(write)
 
   /** Create (or replace) a year-partitioned gold table from a tick
     * frame with a `ts` timestamp column. Null timestamps are dropped at
@@ -60,9 +68,7 @@ object CatalogOps {
   def overwritePartitions(rows: DataFrame, table: String, tsCol: String = "ts"): Unit = {
     val spark = rows.sparkSession
     val tableCols = spark.table(table).schema.fieldNames
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
+    dynamicOverwrite(spark)(
       rows
         .filter(col(tsCol).isNotNull)
         .withColumn("year", year(col(tsCol)))
@@ -70,11 +76,7 @@ object CatalogOps {
         .write
         .mode(SaveMode.Overwrite)
         .format("parquet")
-        .insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+        .insertInto(table))
   }
 
   /** Partition-level RESTORE: put the listed `years` of `table` back to
@@ -151,18 +153,9 @@ object CatalogOps {
           .filter(col("year") === y)
           .repartition(n)
           .localCheckpoint(true)
-        val prev =
-          spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
+        dynamicOverwrite(spark)(
           compacted.write.mode(SaveMode.Overwrite).format("parquet")
-            .insertInto(table)
-        finally prev match {
-          case Some(v) =>
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+            .insertInto(table))
         y -> n
       }
     }.toMap
@@ -263,18 +256,9 @@ object CatalogOps {
       val remaining = cleaned.groupBy(col(partitionCol)).agg(count(lit(1)))
         .collect().map(_.getInt(0)).toSet
       val emptied = affected.filterNot(remaining)
-      val prev =
-        spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
+      dynamicOverwrite(spark)(
         cleaned.write.mode(SaveMode.Overwrite).format("parquet")
-          .insertInto(table)
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+          .insertInto(table))
       emptied.foreach(p => spark.sql(
         s"ALTER TABLE $table DROP IF EXISTS PARTITION ($partitionCol=$p)"))
     }

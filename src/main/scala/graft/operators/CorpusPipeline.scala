@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{PortableText, WordGrams}
+import graft.functions.PortableText
 
 /** Corpus-pipeline stages (SURVEY §2.F15–F17) — the composition layer
   * a pre-training data pipeline runs between raw ingest and training:
@@ -130,7 +130,6 @@ object CorpusPipeline {
     * docs per split in int64; at true scale swap to a modular
     * partial-sum reduce — documented, F54's rule). */
   def releaseManifest(docs: DataFrame): DataFrame = {
-    graft.functions.PolyHash.register(docs.sparkSession)
     val split = hashSplit(docs).select("doc_id", "split")
     docs
       .select(col("doc_id"),
@@ -322,7 +321,6 @@ object CorpusPipeline {
     * report always covers the full eval set. */
   def decontaminate(docs: DataFrame, n: Int = 5, holdoutMod: Int = 50)
       : DataFrame = {
-    WordGrams.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"),
       explode(gramsCol(n)).as("gram"))
     val trainGrams = grams.filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
@@ -353,7 +351,6 @@ object CorpusPipeline {
     * held-out docs keep their row (zero counts, NULL frac). */
   def contaminationScore(docs: DataFrame, n: Int = 5, holdoutMod: Int = 50)
       : DataFrame = {
-    WordGrams.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"),
       explode(gramsCol(n)).as("gram"))
     val trainGrams = grams.filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
@@ -397,8 +394,6 @@ object CorpusPipeline {
   def bloomPrefilter(docs: DataFrame, n: Int = 5, holdoutMod: Int = 50,
                      kHash: Int = 3): DataFrame = {
     require(kHash >= 1 && kHash <= 8, s"kHash must be in [1,8]: $kHash")
-    WordGrams.register(docs.sparkSession)
-    graft.functions.PolyHash.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"), explode(gramsCol(n)).as("gram"))
     // Materialize both distinct gram sets once: each feeds TWO
     // consumers (train → bloom build + exact join; held → probes +
@@ -690,7 +685,6 @@ object CorpusPipeline {
     require(overlap >= 0 && overlap < chunkTokens,
       s"overlap must be in [0, chunkTokens): $overlap")
     val stride = chunkTokens - overlap
-    graft.functions.PolyHash.register(docs.sparkSession)
     docs.select(col("doc_id"), expr(tokens).as("tk"))
       .withColumn("n_tokens", size(col("tk")))
       .filter(col("n_tokens") > 0)
@@ -965,7 +959,6 @@ object CorpusPipeline {
                            ns: Seq[Int] = Seq(2, 3, 5, 7),
                            holdoutMod: Int = 50): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 2), s"need gram widths >= 2: $ns")
-    WordGrams.register(docs.sparkSession)
     // the gram explode feeds BOTH the train-distinct and the test
     // side — checkpoint it so the tokenize+wordgrams scan runs
     // once per width, not twice (the bm25 tf-barrier discipline;
@@ -1133,7 +1126,6 @@ object CorpusPipeline {
     * snapshots under different sources counts to the NEW side's
     * source (the release owns its docs). */
   def corpusDelta(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
-    graft.functions.PolyHash.register(oldDocs.sparkSession)
     def fp(df: DataFrame, suffix: String) = df.select(
       col("doc_id"),
       col("source").as(s"source_$suffix"),
@@ -1175,7 +1167,6 @@ object CorpusPipeline {
     * token-less docs keep the zero vector via the left join. */
   def hashedTfVectors(docs: DataFrame, dim: Int = 64): DataFrame = {
     require(dim >= 1, s"dim must be >= 1: $dim")
-    graft.functions.PolyHash.register(docs.sparkSession)
     val bk = docs.select(col("doc_id"), explode(expr(tokens)).as("tok"))
       .withColumn("b", expr(s"graft_polyhash(tok) % $dim"))
       .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
@@ -1414,7 +1405,6 @@ object CorpusPipeline {
     * (never dropped — a filter that silently loses empty docs
     * miscounts its own reject rate). */
   def classifierScore(docs: DataFrame, nBuckets: Int = 1024): DataFrame = {
-    graft.functions.PolyHash.register(docs.sparkSession)
     import graft.functions.PortableText.tokens
     val feats = docs
       .select(col("doc_id"), explode(expr(tokens)).as("tok"))

@@ -85,7 +85,6 @@ object LangModel {
     * round(4); ln parity per D3. Sub-2-token docs report
     * n_bigrams=0 with NULL score (left join). */
   def bigramSurprisal(docs: DataFrame): DataFrame = {
-    graft.functions.WordGrams.register(docs.sparkSession)
     val docBigrams = docs.select(col("doc_id"),
         explode(expr(s"graft_wordgrams($tokens, 2)")).as("bigram"))
       .groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf"))
@@ -162,8 +161,6 @@ object LangModel {
     * Narrow one-pass projection — no shuffle, no explode; the
     * per-row loop is the whole cost. */
   def charEntropy(docs: DataFrame): DataFrame = {
-    graft.functions.CharEntropy.register(docs.sparkSession)
-    graft.functions.CharGrams.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       length(col("text")).as("len_cp"),
@@ -256,7 +253,6 @@ object LangModel {
     * token-less docs 0/NULL via left join. */
   def knSurprisal(docs: DataFrame, discount: Double): DataFrame = {
     require(discount > 0 && discount < 1, s"discount in (0,1): $discount")
-    graft.functions.WordGrams.register(docs.sparkSession)
     val docBigrams = docs.select(col("doc_id"),
         explode(expr(s"graft_wordgrams($tokens, 2)")).as("bigram"))
       .groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf"))

@@ -156,7 +156,6 @@ object Retrieval {
                    qVec: Long = 0L, kCand: Int = 20, k: Int = 10)
       : DataFrame = {
     require(k > 0 && kCand >= k, s"need kCand >= k > 0: $kCand, $k")
-    graft.functions.VecDot.register(docs.sparkSession)
     val cands = termSearch(docs, query, kCand)
       .withColumnRenamed("rnk", "term_rnk")
       .withColumnRenamed("score", "term_score")

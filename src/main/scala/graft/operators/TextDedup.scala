@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.PolyHash
 import graft.functions.PortableText._
 
 /** Text-analysis and deduplication operators over the `documents`
@@ -45,7 +44,6 @@ object TextDedup {
     * `n_shared_fps` counts the distinct duplicated texts behind them.
     */
   def dupMatrix(docs: DataFrame): DataFrame = {
-    PolyHash.register(docs.sparkSession)
     val c = docs
       .select(col("source"), expr(docFingerprint).as("fp"))
       .groupBy("fp", "source").agg(count(lit(1)).as("cnt"))
@@ -88,8 +86,6 @@ object TextDedup {
     * two doc rows (no checkpoint, no second pass over the pair
     * frame). All counts exact int64. */
   def nearDupLeakage(docs: DataFrame): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.MinHashes.register(docs.sparkSession)
     // first-match band join ([[candidatePairsFromSigs]]) — the pair
     // set is identical to the old bands→join→DISTINCT plan but the
     // candidate-sized dedup shuffle is gone
@@ -138,8 +134,6 @@ object TextDedup {
     * error are unrounded IEEE divisions/differences of exact ints. */
   def sourceSimilarity(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.functions.WordGrams.register(docs.sparkSession)
-    PolyHash.register(docs.sparkSession)
     val sg = docs
       .select(col("source"),
         explode(expr(s"graft_wordgrams($tokens, 3)")).as("gram"))
@@ -198,8 +192,6 @@ object TextDedup {
     * EliminateSorts removes the sort under joins/aggregations, but NOT
     * under a terminal checkpoint/write.) */
   def minHashBands(docs: DataFrame, ordered: Boolean): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.MinHashes.register(docs.sparkSession)
     val bands = docs
       .withColumn("th", expr(tokenHashes))
       .withColumn("mh", expr(minHashes))
@@ -229,8 +221,6 @@ object TextDedup {
     * int64; catch_bp integer bps; per-pair Jaccard ONE IEEE division
     * of exact ints, mean round(4) (aggregate rule). */
   def plantedDupRecall(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.MinHashes.register(docs.sparkSession)
     val th = docs.select(col("doc_id"), expr(tokenHashes).as("th"))
       .localCheckpoint(true)
     val bands = th.withColumn("mh", expr(minHashes))
@@ -610,9 +600,6 @@ object TextDedup {
     * audit and the threshold curve. */
   private def candidatePairStats(docs: DataFrame, samplePct: Int)
       : DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.MinHashes.register(docs.sparkSession)
-    graft.functions.SortedCommon.register(docs.sparkSession)
     // ths: th deduped + ascending-sorted ONCE here (n log n per doc)
     // so the pair stage's |A∩B| is the allocation-free native
     // two-pointer walk instead of a per-pair hash set (measured the
@@ -714,8 +701,6 @@ object TextDedup {
       s"severities must be >= 2: $severities")
     val ss = docs.sparkSession
     import ss.implicits._
-    PolyHash.register(ss)
-    graft.functions.MinHashes.register(ss)
     val base = docs
       .filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
       .select("doc_id", "text", "lang", "source")
@@ -909,8 +894,6 @@ object TextDedup {
   /** F3 — SimHash signature per document ([[PortableText.SimHashBits]]
     * bits). */
   def simHashSig(docs: DataFrame): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.SimHash64.register(docs.sparkSession)
     docs
       .withColumn("th", expr(tokenHashes))
       .withColumn("simhash", expr(simHash))
@@ -1002,7 +985,6 @@ object TextDedup {
     */
   def ngramJaccard(docs: DataFrame, minJaccard: Double,
                    maxDf: Int = 20): DataFrame = {
-    graft.functions.CharGrams.register(docs.sparkSession)
     // Inverted-index formulation: |A∩B| comes from a gram-equality
     // self-join (shuffle by gram, partial-agg counts) instead of
     // per-pair array unions — pairs with zero shared grams never
@@ -1075,7 +1057,6 @@ object TextDedup {
     * their low-df grams dominate. */
   def containmentPairs(docs: DataFrame, minContainment: Double,
                        maxDf: Int = 20): DataFrame = {
-    graft.functions.CharGrams.register(docs.sparkSession)
     val g = docs
       .filter(col("doc_id") % 5 === 0)
       .withColumn("grams", expr(grams3))
@@ -1439,7 +1420,6 @@ object TextDedup {
     * tokens. Narrow one-pass over the native `graft_wordgrams`
     * expression — no shuffle, no explode. */
   def repeatedSpans(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.WordGrams.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       expr(s"size(graft_wordgrams($tokens, $n))").as("n_grams"),
@@ -1569,7 +1549,6 @@ object TextDedup {
                        damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"need at least one round: $iters")
     import graft.functions.PortableText.docFingerprint
-    graft.functions.PolyHash.register(docs.sparkSession)
     val perSrcFp = docs
       .select(col("source"), expr(docFingerprint).as("fp"))
       .groupBy("fp", "source").agg(count(lit(1)).as("n"))
@@ -1694,7 +1673,6 @@ object TextDedup {
     * division of exact counts (unrounded, SURVEY §6); gram-less docs
     * report zero counts with NULL ratio. */
   def boilerplateShare(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.WordGrams.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"),
         explode(expr(s"graft_wordgrams($tokens, $n)")).as("gram"))
       .distinct()
@@ -1740,8 +1718,6 @@ object TextDedup {
     * hash + df + join-back, so the span REPORT (F62) and the span
     * EXCISION (F64) cannot disagree on what counts as duplicated. */
   private def dupGramStarts(docs: DataFrame, w: Int): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.WordGrams.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"),
         posexplode(expr(s"transform(graft_wordgrams($tokens, $w), " +
           "g -> graft_polyhash(g))")).as(Seq("p", "h")))
@@ -1879,8 +1855,6 @@ object TextDedup {
   /** (source, reg, rho) per gram occurrence — the shared front half
     * of the F14b pipeline; consumers merge registers their own way. */
   private[graft] def hllCells(docs: DataFrame, n: Int): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.WordGrams.register(docs.sparkSession)
     docs.select(col("source"),
         explode(expr(s"graft_wordgrams($tokens, $n)")).as("gram"))
       .select(col("source"), expr("graft_polyhash(gram)").as("h"))
@@ -1900,8 +1874,6 @@ object TextDedup {
     * NULLs so the report schema is identical either way. */
   def hllNdv(docs: DataFrame, n: Int = 2,
              audit: Boolean = true): DataFrame = {
-    PolyHash.register(docs.sparkSession)
-    graft.functions.WordGrams.register(docs.sparkSession)
     val grams = docs.select(
       explode(expr(s"graft_wordgrams($tokens, $n)")).as("gram"))
     val per = grams
@@ -2035,7 +2007,6 @@ object TextDedup {
       .groupBy("rw", "cell").agg(count(lit(1)).as("cnt"))
 
   def cmsHeavyHitters(docs: DataFrame, k: Int = 20): DataFrame = {
-    PolyHash.register(docs.sparkSession)
     val occ = docs.select(explode(expr(tokens)).as("token"))
       .withColumn("h", expr("graft_polyhash(token)"))
       .localCheckpoint(true)
@@ -2338,7 +2309,6 @@ object TextDedup {
 
   /** F11 — whole-document polynomial fingerprint (rolling hash). */
   def fingerprint(docs: DataFrame): DataFrame = {
-    PolyHash.register(docs.sparkSession)
     docs.select(col("doc_id"), expr(docFingerprint).as("fp"))
       .orderBy("doc_id")
   }
@@ -2362,7 +2332,6 @@ object TextDedup {
   def winnowFingerprints(docs: DataFrame, k: Int = 5, w: Int = 8)
       : DataFrame = {
     require(k > 0 && w > 0, s"k and w must be positive: $k, $w")
-    graft.functions.Winnow.register(docs.sparkSession)
     // One narrow pass over the native [[graft.functions.Winnow]]
     // expression (rolling gram hash + monotonic-deque window minimum,
     // O(n) per doc). A fingerprint is the single bigint h·2^21 + p
@@ -2412,7 +2381,6 @@ object TextDedup {
   def cdcChunks(docs: DataFrame, maskBits: Int = 6): DataFrame = {
     require(maskBits >= 1 && maskBits <= 30,
       s"maskBits must be in [1, 30]: $maskBits")
-    graft.functions.CdcChunks.register(docs.sparkSession)
     // chunk rows: the explode is the only corpus-sized frame; it is
     // derived once and checkpointed for the census + the collapse
     val chunks = docs

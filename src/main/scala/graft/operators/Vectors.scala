@@ -391,7 +391,6 @@ object Vectors {
     */
   def bruteForceKnn(emb: DataFrame, nQueries: Int, k: Int,
                     dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val n = withNorm(emb, dim)
     val q = n.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("va"),
@@ -470,7 +469,6 @@ object Vectors {
     * and tie rules identical to F6. */
   def filteredKnn(emb: DataFrame, nQueries: Int, k: Int, label: Int,
                   dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val n = withNorm(emb, dim)
     val q = n.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("va"),
@@ -510,7 +508,6 @@ object Vectors {
     * last with NULL density. */
   def knnDensity(emb: DataFrame, nTargets: Int, k: Int,
                  dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val n = withNorm(emb, dim)
     val q = n.filter(col("vec_id") < nTargets)
       .select(col("vec_id").as("target_id"), col("embedding").as("va"),
@@ -565,7 +562,6 @@ object Vectors {
     * the 100 TB path where brute force is off the table.
     */
   def lshBuckets(emb: DataFrame, nPlanes: Int, dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val b = emb
       .withColumn("bucket", lshBucketCol(nPlanes, dim))
       .select("vec_id", "bucket")
@@ -586,7 +582,6 @@ object Vectors {
     */
   def ivfKnn(emb: DataFrame, nQueries: Int, k: Int, nCentroids: Int,
              dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val cents: Array[Seq[Float]] = emb
       .filter(col("vec_id") < nCentroids).orderBy("vec_id")
       .select("embedding").collect()
@@ -818,8 +813,6 @@ object Vectors {
   def ivfPqSearch(emb: DataFrame, nQueries: Int, k: Int,
                   nCentroids: Int = 8, nSub: Int = 8, subDim: Int = 8,
                   kCode: Int = 16): DataFrame = {
-    VecDot.register(emb.sparkSession)
-    graft.functions.PqCodes.register(emb.sparkSession)
     import emb.sparkSession.implicits._
     def ddot(a: Seq[Float], b: Seq[Float]): Double = {
       var acc = 0.0; var i = 0
@@ -960,7 +953,6 @@ object Vectors {
                    scale: Int = 32, dim: Int = Dim): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"nProbe must be in [1, $nCentroids]: $nProbe")
-    graft.functions.PqCodes.register(emb.sparkSession)
     import emb.sparkSession.implicits._
     def ddot(a: Seq[Float], b: Seq[Float]): Double = {
       var acc = 0.0; var i = 0
@@ -1025,7 +1017,6 @@ object Vectors {
     * oracle's d64 folds compute. Ties to the lower neighbor_id. */
   private def bruteForceL2(emb: DataFrame, nQueries: Int, k: Int,
                            dim: Int): DataFrame = {
-    VecDot.register(emb.sparkSession)
     def vd(a: Column, b: Column): Column = call_function("graft_vecdot", a, b)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("va"))
@@ -1146,7 +1137,6 @@ object Vectors {
     * below 2^24). Checkpointed once: multiple consumers (init fetch,
     * per-iteration update, final scoring). */
   private def quantizedBase(emb: DataFrame, scale: Int): DataFrame = {
-    VecDot.register(emb.sparkSession)
     emb.select(col("vec_id"),
         expr(s"transform(embedding, x -> " +
           s"CAST(floor(CAST(x AS DOUBLE) * $scale + 0.5d) AS BIGINT))").as("qv"))
@@ -1329,7 +1319,6 @@ object Vectors {
     */
   def pqEncode(emb: DataFrame, nSub: Int = 8, subDim: Int = 8,
                k: Int = 16, queryId: Long = 0L): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val first = emb.filter(col("vec_id") < k).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0))
     require(first.length == k,
@@ -1358,7 +1347,6 @@ object Vectors {
     // 100× smoke). Codes land in one array column; the per-subspace
     // views below are O(1) element_at reads.
     val flatCents: Seq[Float] = cents.flatten.flatten
-    graft.functions.PqCodes.register(emb.sparkSession)
     val coded = emb.select(col("vec_id"), col("embedding"))
       .withColumn("_codes", call_function("graft_pqcodes",
         col("embedding"), typedlit(flatCents),
@@ -1404,7 +1392,6 @@ object Vectors {
     */
   def semDecontaminate(emb: DataFrame, minCos: Double, holdoutMod: Int = 50,
                        nPlanes: Int = 8, dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     val n = withNorm(emb, dim)
       .withColumn("bucket", lshBucketCol(nPlanes, dim))
       .localCheckpoint(true)
@@ -1446,7 +1433,6 @@ object Vectors {
     */
   def cosineDedup(emb: DataFrame, minCos: Double, nPlanes: Int = 8,
                   dim: Int = Dim): DataFrame = {
-    VecDot.register(emb.sparkSession)
     // Materialization barrier (same trick as simHashPairs): without
     // it, projection collapse inlines the nPlanes VecDot bucket
     // expression and the norm into BOTH self-join sides, evaluating

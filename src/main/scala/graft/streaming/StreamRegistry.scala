@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
+import graft.GraftSession.withConf
 import graft.operators.Features
 import graft.sources.Tables
 
@@ -135,23 +136,6 @@ object StreamRegistry {
         }
       }
     }
-
-  /** Run `body` with session conf `key` set to `value`. The session's
-    * own setting is restored on every exit path — re-set if it had
-    * one, unset if it ran on the default (`getAll` holds only set
-    * keys, where `getOption` would also return a default) — and the
-    * `try` begins right after the set, so a throwing `start()` or
-    * drive cannot leak the override into the rest of the session. */
-  private def withConf[R](s: SparkSession, key: String, value: String)
-                         (body: => R): R = {
-    val prev = s.conf.getAll.get(key)
-    s.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** The Complete-mode drive sink (r18): a foreachBatch collector. The
     * memory sink's `addBatch` collects EVERY batch's rows to the

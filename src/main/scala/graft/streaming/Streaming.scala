@@ -879,7 +879,6 @@ object Streaming {
     * (parity spec'd), so a backfilled sketch and the live one can be
     * compared — or summed — cell by cell. */
   def cmsCellCounts(docs: DataFrame): DataFrame = {
-    graft.functions.PolyHash.register(docs.sparkSession)
     graft.operators.TextDedup.cmsCells(
       docs.select(explode(expr(graft.functions.PortableText.tokens))
           .as("token"))
@@ -1052,7 +1051,6 @@ object Streaming {
     * weight formula, occurrence-weighted like the batch explode). */
   def classifierAdmission(docs: Dataset[Doc], nBuckets: Int = 1024)
       : DataFrame = {
-    graft.functions.PolyHash.register(docs.sparkSession)
     val toks = graft.functions.PortableText.tokens
     docs.toDF().select(
       col("doc_id"),

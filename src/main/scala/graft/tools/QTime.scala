@@ -16,83 +16,17 @@ object QTime {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_STAGE_DIAG=1: per-stage wall/task-time dump after each
-    // query — tells whether elapsed time is inside Spark jobs at all
-    // (task time) or between them (driver/scheduler/planning gaps).
-    val diag = sys.env.contains("GRAFT_STAGE_DIAG")
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    if (diag) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val i = sc.stageInfo
-          val wall = for {
-            a <- i.completionTime; b <- i.submissionTime
-          } yield a - b
-          stages.add(f"[stagediag] stage=${i.stageId}%4d " +
-            f"tasks=${i.numTasks}%3d wall=${wall.getOrElse(-1L)}%5d ms " +
-            f"exec=${i.taskMetrics.executorRunTime}%5d ms " +
-            f"ser=${i.taskMetrics.resultSerializationTime}%3d " +
-            f"name=${i.name.takeWhile(_ != '\n').take(60)}")
-        }
-      })
     spark.range(1000L).write.format("noop").mode("overwrite").save()
-    // GRAFT_STACK_SAMPLE=<thread-name-substring>: 10 ms stack sampler
-    // over matching threads while queries run; frame histogram printed
-    // at exit. Diagnoses driver-side gaps invisible to stage metrics.
-    val samplePat = sys.env.get("GRAFT_STACK_SAMPLE")
-    val hist = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    @volatile var sampling = true
-    val sampler = samplePat.map { pat =>
-      val t = new Thread(() => {
-        while (sampling) {
-          Thread.getAllStackTraces.forEach { (th, st) =>
-            if (th.getName.toLowerCase.contains(pat.toLowerCase) &&
-                st.nonEmpty) {
-              // innermost 4 frames: where the thread actually is —
-              // except shell forks, where the CALLER is the question
-              val depth =
-                if (st.exists(f => f.getClassName.contains("Shell") ||
-                  f.getClassName.contains("ProcessImpl"))) 16 else 4
-              val key = st.take(depth).map(f =>
-                s"${f.getClassName.split('.').last}.${f.getMethodName}")
-                .mkString(" < ")
-              hist.merge(key, 1, (a, b) => a + b)
-            }
-          }
-          Thread.sleep(10)
-        }
-      })
-      t.setDaemon(true); t.start(); t
-    }
     def once(q: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // GRAFT_QTIME_ITERS=n: n warm repeats, min reported — drowns the
-    // ±15% session noise when reading sub-second deltas.
-    val iters = sys.env.get("GRAFT_QTIME_ITERS").map(_.toInt).getOrElse(1)
     for (q <- args) {
       val cold = once(q)
-      stages.clear()
-      val warm = (1 to iters).map(_ => once(q)).min
+      val warm = once(q)
       println(f"[qtime] $q%-24s cold=$cold%7.2f s  warm=$warm%7.2f s")
-      if (diag) {
-        Thread.sleep(200)
-        stages.forEach(s => println(s))
-      }
-    }
-    sampling = false
-    sampler.foreach(_.join(500))
-    if (samplePat.nonEmpty) {
-      import scala.jdk.CollectionConverters._
-      println("[stacksample] top frames:")
-      hist.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, n) =>
-        println(f"[stacksample] $n%5d  $k")
-      }
     }
     spark.stop()
   }

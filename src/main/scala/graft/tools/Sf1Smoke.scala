@@ -3,15 +3,15 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import graft.{Fixtures, GraftSession, SparkEntry}
 
-/** Round-8 sf1-scale smoke of the dedup family (r5/r6 verdicts' ask:
-  * first evidence beyond sf0.1 that the LSH shuffle sizes scale as
-  * designed).
+/** Whole-registry scale sweep over a 10x replica of sf0.1 (first
+  * built for the round-8 sf1-scale smoke of the dedup family: evidence
+  * beyond sf0.1 that the LSH shuffle sizes scale as designed).
   *
   * No sf1 testdata exists (driver generates up to sf0.1), so this
-  * builds a 10x replica of sf0.1's `documents` under tmp/sf1smoke/:
-  * each of 10 replicas keeps the text and remaps
+  * builds a 10x replica of sf0.1's tables under tmp/sf1smoke/: each of
+  * 10 replicas keeps the text and remaps ids, e.g.
   * doc_id -> doc_id + replica * 5e9 — multi-billion ids, deliberately
-  * past the old `id * K` overflow boundary (~3.5e9), so the smoke also
+  * past the old `id * K` overflow boundary (~3.5e9), so the sweep also
   * exercises the r6 mod-P-first hash fix on real operator paths.
   *
   * This replica corpus is a WORST-CASE dedup stress, not a neutral
@@ -20,12 +20,13 @@ import graft.{Fixtures, GraftSession, SparkEntry}
   * bucket per replicated text). Super-linearity in the band join or
   * the CC iteration shows up here amplified, which is the point.
   *
-  * Timings through the same noop sink Bench uses; each query twice
-  * (cold / warm) so contention and cold-JIT are visible, mirroring
-  * the round-8 double-run bench protocol.
+  * Every key runs twice through the same noop sink Bench uses; the
+  * min of the two passes goes to `scale_sweep_<n>x.json`, the bracket
+  * `scripts/scale_gate.py` ratchets round over round.
   *
-  * Run: sbt "runMain graft.tools.Sf1Smoke"   (env SPARK_GRAFT_CPUS)
-  * Results recorded in SURVEY.md §5 (round-8 smoke paragraph).
+  * Run: sbt "runMain graft.tools.Sf1Smoke"
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR (the source SF),
+  * SPARK_GRAFT_REPLICAS, SPARK_GRAFT_ONLY (see below).
   */
 object Sf1Smoke {
   def main(args: Array[String]): Unit = {
@@ -35,10 +36,6 @@ object Sf1Smoke {
     // sf1); 100 gives the second scaling point (~sf10: 500k docs /
     // 200k vectors) for the 1x → 10x → 100x curve in SURVEY §5.
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    // SPARK_GRAFT_FAMILY selects which replica family to time:
-    // "docs" (dedup/vector/curation), "events" (temporal joins/tick
-    // features — round-9 addition), or "all" (default).
-    val whichFamily = sys.env.getOrElse("SPARK_GRAFT_FAMILY", "all")
     val outDir =
       if (replicas == 10) "tmp/sf1smoke" else s"tmp/smoke${replicas}x"
     val spark = GraftSession.local(cpus)
@@ -99,7 +96,6 @@ object Sf1Smoke {
     // replica parquet round-trips through Tables.events identically
     // to the driver-generated table.
     val eventsPath = s"$outDir/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcEvents = spark.read.parquet(s"$src/events.parquet").count()
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$eventsPath/_SUCCESS"))) {
@@ -244,222 +240,29 @@ object Sf1Smoke {
           s" — delete $outDir and rerun")
       }
     }
-    val needTpch = whichFamily == "registry"
-    if (needTpch) {
-      replicate("lineitem", Seq("l_orderkey" -> true, "l_partkey" -> true,
-        "l_suppkey" -> true, "l_linenumber" -> false, "l_quantity" -> false,
-        "l_extendedprice" -> false, "l_discount" -> false, "l_tax" -> false,
-        "l_returnflag" -> false, "l_linestatus" -> false,
-        "l_shipdate" -> false))
-      replicate("orders", Seq("o_orderkey" -> true, "o_custkey" -> true,
-        "o_orderstatus" -> false, "o_totalprice" -> false,
-        "o_orderdate" -> false, "o_orderpriority" -> false))
-      replicate("customer", Seq("c_custkey" -> true, "c_name" -> false,
-        "c_nationkey" -> false, "c_acctbal" -> false,
-        "c_mktsegment" -> false))
-      replicate("supplier", Seq("s_suppkey" -> true, "s_name" -> false,
-        "s_nationkey" -> false, "s_acctbal" -> false))
-      replicate("part", Seq("p_partkey" -> true, "p_name" -> false,
-        "p_brand" -> false, "p_type" -> false, "p_size" -> false,
-        "p_retailprice" -> false))
-      copyTable("nation")
-      copyTable("region")
-    }
+    replicate("lineitem", Seq("l_orderkey" -> true, "l_partkey" -> true,
+      "l_suppkey" -> true, "l_linenumber" -> false, "l_quantity" -> false,
+      "l_extendedprice" -> false, "l_discount" -> false, "l_tax" -> false,
+      "l_returnflag" -> false, "l_linestatus" -> false,
+      "l_shipdate" -> false))
+    replicate("orders", Seq("o_orderkey" -> true, "o_custkey" -> true,
+      "o_orderstatus" -> false, "o_totalprice" -> false,
+      "o_orderdate" -> false, "o_orderpriority" -> false))
+    replicate("customer", Seq("c_custkey" -> true, "c_name" -> false,
+      "c_nationkey" -> false, "c_acctbal" -> false,
+      "c_mktsegment" -> false))
+    replicate("supplier", Seq("s_suppkey" -> true, "s_name" -> false,
+      "s_nationkey" -> false, "s_acctbal" -> false))
+    replicate("part", Seq("p_partkey" -> true, "p_name" -> false,
+      "p_brand" -> false, "p_type" -> false, "p_size" -> false,
+      "p_retailprice" -> false))
+    copyTable("nation")
+    copyTable("region")
 
-    def time(label: String)(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[sf1-smoke] $label%-28s $s%.2f s")
-      s
-    }
-    val docsFamily = Seq("q_dedup_minhash", "q_dedup_greedy", "q_dedup_clusters",
-      "q_decontaminate", "q_dedup_exact", "q_corpus_select",
-      // round-8 curation + vector additions at the same 10x scale
-      "q_line_dedup", "q_pii_scrub", "q_corpus_curate",
-      "q_kmeans", "q_embed_quant", "q_cluster_cap", "q_pq_codes",
-      // round-8 third-session additions: fingerprinting, retrieval,
-      // chunking, sketches, and the delta/bloom dedup paths. The 10x
-      // replica is a worst case for q_dup_matrix (every fp count ≥
-      // replicas) and q_dedup_incremental (every incoming band bucket
-      // hot); q_winnow/q_chunk_docs/q_hll_ndv are narrow passes that
-      // should scale linearly with rows.
-      "q_winnow", "q_chunk_docs", "q_hll_ndv", "q_term_search",
-      "q_dup_matrix", "q_dedup_incremental", "q_bloom_prefilter",
-      "q_cluster_audit",
-      // late-session additions over the same replica tables
-      "q_gram_novelty", "q_stratified_split", "q_dedup_report",
-      "q_length_histogram", "q_hybrid_search",
-      // round-9 model-based quality + composed-ANN ops: the LM join
-      // is token-keyed (vocab stays fixed while occurrences 10x),
-      // entropy is a narrow native pass, mixture/knn/ivfpq ride the
-      // same broadcast/bucket shapes as their parents.
-      "q_lm_surprisal", "q_char_entropy", "q_mixture_sample",
-      "q_knn_density", "q_ivfpq_search", "q_bigram_surprisal",
-      // round-9 session-3 additions: containment rides F4's capped
-      // inverted index (worst case: every replica text shares every
-      // gram), CMS/BPE/DSIR are vocab-keyed aggregates whose key
-      // space is FIXED while occurrences 10x — the shapes that must
-      // stay linear.
-      "q_containment", "q_cms_heavy_hitters", "q_bpe_pairs",
-      "q_importance_weights",
-      // round-9 session-5: fertility is a (lang, source) aggregate
-      // whose key space is fixed while rows 10x; concentration is the
-      // F10b token-freq shuffle plus two 1-row aggregates.
-      "q_tokenizer_fertility", "q_token_concentration",
-      // sweep/confusion: fixed (source × cut) / |langs|² key spaces.
-      "q_threshold_sweep", "q_lang_confusion",
-      // round-10: zipf is the token-freq shuffle + a 100-row OLS;
-      // ann_recall composes the two bounded-query broadcast scans;
-      // bpe_train iterates 5 vocab-sized aggregates + folds (the
-      // vocabulary is FIXED while occurrences 10x — rounds must not
-      // grow with rows).
-      "q_zipf_fit", "q_ann_recall", "q_bpe_train",
-      // round-10 session-2: dup_spans is the F4 inverted-index shape
-      // on positional gram hashes (worst case here — every replica
-      // doc shares every gram, all positions duplicated); gram/PCA
-      // ride the one-buffer-per-task Aggregator (N-invariant
-      // shuffle); bpe_encode joins the corpus back to the FIXED
-      // vocab frame.
-      "q_dup_spans", "q_gram_matrix", "q_pca_power", "q_bpe_encode",
-      "q_dup_excise",
-      // round-10 session-3: KN rides F40's bigram shuffle + three
-      // vocab-sized side aggregates (key space FIXED while
-      // occurrences 10x); length buckets is one |widths|-row
-      // aggregate; the ranking audit's per-query windows rank docs-
-      // with-hits — on the all-dup replica EVERY doc hits, the
-      // worst case for the per-query partitions.
-      "q_kn_surprisal", "q_length_buckets", "q_ranking_audit",
-      // F69-F71: leakage + threshold curve ride the F2 band join
-      // (the replica makes every bucket 10x hot — worst case);
-      // source similarity's k-explode multiplies the bounded
-      // distinct-gram frame only.
-      "q_near_leakage", "q_source_similarity",
-      // q_dedup_curve / q_lsh_planner deliberately NOT smoked here:
-      // the all-dup replica is QUADRATIC BY CONSTRUCTION for the
-      // full-candidate exact-Jaccard artifacts (every band bucket
-      // 10x hot => raw matches ~100x => gigarow pair frames - a
-      // measured >11 min non-completion, not a plan defect). At
-      // scale those artifacts run on band parameters the F74
-      // planner picks to keep buckets bounded, or on the sampled
-      // audit path (q_dedup_audit's 5%). Adjudicated in SURVEY §5.
-      // round-10 waves 4-8: SemDeDup rides kmeans blocks (all-dup
-      // replica → hot clusters, the within-cluster pair worst case);
-      // classifier/calibration are explode + broadcast-weight joins
-      // with a FIXED weight table; the LSH planner shares the F71
-      // candidate frame (band-hot worst case); waterfill/KS/
-      // boilerplate/delta/attribution collapse to |sources|-bounded
-      // frames in their first aggregate; text_embed is explode + two
-      // doc-keyed aggregates; Fisher is one (label, dim) exploded
-      // aggregate over a FIXED key space.
-      "q_semantic_dedup", "q_classifier_score", "q_clf_calibration",
-      "q_waterfill", "q_ks_drift", "q_boilerplate",
-      "q_corpus_delta", "q_curation_matrix", "q_text_embed",
-      "q_label_fisher",
-      // round-15 additions: length-normalized ranking, CDC chunking,
-      // the AUC audit, and the temperature curve — the replica is a
-      // worst case for q_cdc_chunks's dup census (every chunk hash
-      // >= replicas hot)
-      "q_bm25", "q_cdc_chunks", "q_clf_auc", "q_mixture_temps")
-    // The temporal-join/tick family over the symbol-remapped events
-    // replica: as-of ladder (plain, tolerance-gated, nearest-either-
-    // side), the per-(symbol, day) EWMA fold, market beta (the one
-    // query whose per-second market agg WIDENS with symbol count),
-    // tick-rule direction counts, and the range-join/sessionization
-    // pair.
-    val eventsFamily = Seq("q_asof_join", "q_asof_tolerance",
-      "q_nearest_join", "q_ewma", "q_market_beta", "q_tick_rule",
-      "q_range_join", "q_sessionize",
-      // round-9 microstructure + CDC family: all one-exchange
-      // window+agg shapes on (symbol[, day]) like the EWMA/tick-rule
-      // pair; the forward as-of is E1's scan reversed.
-      "q_roll_spread", "q_amihud", "q_flow_imbalance",
-      "q_variance_ratio", "q_asof_forward", "q_scd2", "q_cdc_apply",
-      // round-9 session-3: range vol collapses to (symbol, day) in
-      // its first aggregate; the funnel is three shrinking user-keyed
-      // conditional MINs.
-      "q_range_vol", "q_funnel",
-      // round-9 session-5: volume bars + VPIN are the one-exchange
-      // cumsum/window shape whose per-symbol state is constant while
-      // the symbol count 10x; interp grid is calendar-bounded after
-      // its first aggregate (the property the replica must not break).
-      "q_volume_bars", "q_vpin", "q_interp_grid",
-      // session-5 second half: TWAP/bipower/spike/sign ride the same
-      // one-exchange (symbol[, day]) shapes; HY + Epps explode onto
-      // bounded bucket/scale factors; LR + effective spread are the
-      // quote∪trade union on one symbol exchange; bitemporal is A15's
-      // shape behind a pushed event_id prefix filter.
-      "q_twap", "q_bipower", "q_spike_repair", "q_sign_persistence",
-      "q_hy_cov", "q_epps_curve", "q_lee_ready", "q_effective_spread",
-      "q_bitemporal",
-      // round-10: triple barrier's lookahead join volume is
-      // (n/stride)·2·horizon — linear in rows with 10-100x more
-      // symbols; moments ride the (symbol, day) exchange; session
-      // containment is the one-exchange as-of union.
-      "q_triple_barrier", "q_realized_moments", "q_session_assign",
-      // round-10 session-2: semivariance/medrv/mean-reversion ride
-      // the one-exchange (symbol[, day]) lag+agg shape; the vol
-      // signature's cascade re-aggregates grids, never the fact —
-      // rung cost must stay grid-sized as symbols 10-100x.
-      "q_semivariance", "q_medrv", "q_mean_reversion",
-      "q_vol_signature",
-      // round-10 session-3: BNS rides the same (symbol, day)
-      // lag+agg exchange as bipower/medrv; the response function is
-      // ONE symbol window carrying sign + |lags| leads, then a
-      // (symbol, lag) aggregate.
-      "q_bns_jump", "q_price_response",
-      // round-10 waves 4-8: cohort/negation-funnel are user-keyed
-      // shrinking aggregates; overnight/newey-west/clock-kurtosis/
-      // spread-decomp ride the one-exchange (symbol[, day]) lag+agg
-      // shape; the TCA pair's day frame is calendar-bounded and
-      // broadcast; the impact fit adds one covar aggregate on top.
-      "q_cohort_retention", "q_funnel_negation", "q_overnight_intraday",
-      "q_vwap_slippage", "q_running_vwap", "q_newey_west",
-      "q_clock_kurtosis", "q_spread_decomp", "q_impact_exponent",
-      "q_participation", "q_seasonal_anomaly",
-      // session close: the PIT feature join is E1's one-union-one-
-      // window shape (two carries instead of one); the recall bench
-      // runs on a SAMPLED mini-corpus by design (bounded regardless
-      // of corpus scale — only the sample's band join grows).
-      "q_pit_features", "q_dedup_recall",
-      // round-14: the model-lifecycle family on 10-100x the SYMBOLS —
-      // the session-shared slot chain builds once for the whole block
-      // (the replica's cacheKey is this outDir); the GD fit's
-      // driver-side weight registry is |symbols|·2kh doubles (the
-      // A19 bounded-decision claim, exercised at 10x the symbols);
-      // phase-status/stage-lineage are calendar/manifest-bounded
-      // after their first aggregates.
-      "q_window_tensors", "q_anomaly_pipeline", "q_nn_recon",
-      "q_signal_backtest", "q_gd_autoencoder", "q_gd_valcurve",
-      "q_pipeline_status", "q_stage_lineage",
-      // round-15 (r14 verdict #6): the REST of the slot-chain family,
-      // so the 10x/100x sweep times the full 16-consumer block in one
-      // session with the share active — the warm numbers below are
-      // MARGINAL cost on top of the one chain build.
-      "q_error_profile", "q_model_params", "q_backtest_report",
-      "q_book_report", "q_latency_sensitivity", "q_signal_sweep",
-      "q_staleness_report", "q_walkforward_model",
-      // round-15 additions: the sequential-filter family's regime
-      // classifier, the factor model pair (roster stays 8 while the
-      // symbol universe grows 10-100x — the scan/collapse is what
-      // scales), and the λ-grid forecast selection
-      "q_hmm_regime", "q_factor_pca", "q_factor_resid",
-      "q_ewma_vol_grid",
-      // the rest of the sequential-filter family (same H16
-      // one-exchange shape; timed so the family's scale curve is on
-      // record, not just its plan proof)
-      "q_garch", "q_kalman", "q_cusum", "q_fracdiff")
     // Whole-registry sweep (r15 verdict #4): every SparkEntry key at
-    // the 10x replica, ONE timed pass each, JSON out — the standing
+    // the 10x replica, timed twice, JSON out — the standing
     // scale-regression bracket scripts/scale_gate.py ratchets against
     // round over round. Exclusions, each with its standing rationale:
-    //  - q_stream_*: the tape-replay harness assumes the driver
-    //    corpus's GLOBAL ts-monotonicity in tick_id order (the ingest
-    //    invariant); the replica's disjoint-symbol blocks repeat the
-    //    same time span per id block, so a replayed tape would spend
-    //    the run inside watermark-drop paths and time a corpus the
-    //    semantics reject. The G-family's scale story is carried by
-    //    its batch twins (all swept) + the state-bound/watermark plan
-    //    proofs (H15, G-section §2 notes).
     //  - q_dedup_curve / q_lsh_planner: QUADRATIC BY CONSTRUCTION on
     //    the all-dup replica (every band bucket replicas-hot, raw
     //    matches ~replicas² — a measured >11 min non-completion, not
@@ -469,25 +272,26 @@ object Sf1Smoke {
     //    real ids) — the replica's +5e9 offsets violate that contract
     //    by construction. The bench itself is a bounded sampled audit
     //    (its cost does not grow with corpus scale).
-    val registryFamily = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.startsWith("q_stream_"))
-      .filterNot(Set("q_dedup_curve", "q_lsh_planner", "q_dedup_recall"))
-    val family0 =
-      if (whichFamily == "docs") docsFamily
-      else if (whichFamily == "events") eventsFamily
-      else if (whichFamily == "registry") registryFamily
-      else docsFamily ++ eventsFamily
+    //  - q_stream_media: its media lake is a corpus-independent
+    //    fixture (the key ignores the sfDir, so a replica point would
+    //    re-time sf0.1).
+    // The q_stream_* keys run over the monotone per-replica-shifted
+    // tape under streamDir (see buildStreamTables), every other key
+    // over outDir.
     // SPARK_GRAFT_ONLY=q_a,q_b narrows a run to named queries (new-op
-    // smokes without re-timing the whole family).
-    val family = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(f) => val keep = f.split(',').map(_.trim).toSet
-        family0.filter(keep)
-      case None => family0
-    }
-    // Registry mode: pre-build the session-shared fixtures exactly as
-    // Bench does (same corpus key = this outDir, same params), so the
-    // per-key numbers are MARGINAL cost and the shared builds are
-    // explicit fixture rows in the JSON rather than landing on the
+    // smokes without re-timing the whole registry).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(',').map(_.trim).toSet)
+    val (streamFamily, registryFamily) = SparkEntry.queries.keys.toSeq
+      .sorted
+      .filterNot(Set("q_dedup_curve", "q_lsh_planner", "q_dedup_recall",
+        "q_stream_media"))
+      .filter(q => only.forall(_(q)))
+      .partition(_.startsWith("q_stream_"))
+    // Pre-build the session-shared fixtures exactly as Bench does
+    // (same corpus key = the replica dir, same params), so the per-key
+    // numbers are MARGINAL cost and the shared builds are explicit
+    // fixture rows in the JSON rather than landing on the
     // alphabetically-first consumer.
     def fixture(name: String)(f: => Unit): (String, Double) = {
       val t0 = System.nanoTime()
@@ -507,79 +311,56 @@ object Sf1Smoke {
       println(f"[sf1-smoke] fixture:$name%-20s $s%.2f s")
       (s"fixture:$name", if (failed) -1.0 else s)
     }
-    val fixtures: Seq[(String, Double)] =
-      if (whichFamily != "registry") Seq.empty
-      else {
-        // pair_census is NOT prebuilt here (r16 verdict finding): its
-        // only consumers (q_dedup_curve / q_lsh_planner) are excluded
-        // from this sweep as quadratic-by-construction on the all-dup
-        // replica, so the 354 s census (the single largest line of the
-        // r16 bracket) priced work nothing in the sweep consumed.
-        // Bench still prebuilds it — there the consumers run.
-        Seq("slot_chain", "gd_fit", "ivf_cents").map { name =>
-          fixture(name)(Fixtures(name)(spark, outDir))
-        }
-      }
-    val phases = if (whichFamily == "registry") Seq("cold")
-                 else Seq("cold", "warm")
-    val timed = family.flatMap { q =>
-      phases.map { phase =>
+    // Each key over `dir`, bracket value = min of two passes (r17: the
+    // ratchet's one false positive — q_ewma 1.55 -> 10.03 "6.5x" — was
+    // machine contention, adjudicated by standalone reruns at 2.10 s;
+    // min-of-two is Bench's plan_cost discipline and kills the class
+    // at the source). A failure records the -1 sentinel (the scale
+    // gate fails on it; round_close also greps FAILED), so one broken
+    // key can neither abort the sweep nor masquerade as a near-zero
+    // timing.
+    def timeKeys(keys: Seq[String], dir: String): Seq[(String, Double)] =
+      keys.map { q =>
         // per-query checkpoint sweep (the Bench/Verify discipline):
         // without it each query's localCheckpoint barriers — e.g.
-        // the dedup band-sketch frame — accumulate across the family
-        // and the WARM timings run under storage-memory pressure
-        // (the r12 warm-slower-than-cold regression, here at 10-100x
-        // the block sizes). Deliberate cross-query caches stay via
-        // their CkptGc pins.
+        // the dedup band-sketch frame — accumulate across the sweep
+        // and later keys run under storage-memory pressure (the r12
+        // warm-slower-than-cold regression, here at 10-100x the
+        // block sizes). Deliberate cross-query caches stay via their
+        // CkptGc pins.
         val before = graft.CkptGc.snapshot(spark)
-        // Registry mode records a failure as the -1 sentinel (the
-        // scale-gate fails on it; round_close also greps FAILED) so
-        // one broken key cannot abort the whole 300-key sweep NOR
-        // masquerade as a near-zero timing. The curated docs/events
-        // families keep the historical abort-on-failure: their
-        // numbers are hand-recorded in SURVEY §7 with no machine
-        // gate, so a swallowed failure there would poison the record.
         var failed = false
-        def onePass(label: String): Double = time(s"$q $label") {
-          try SparkEntry.queries(q)(spark, outDir)
+        def onePass(label: String): Double = {
+          val t0 = System.nanoTime()
+          try SparkEntry.queries(q)(spark, dir)
             .write.format("noop").mode("overwrite").save()
           catch {
-            case scala.util.control.NonFatal(e)
-                if whichFamily == "registry" =>
+            case scala.util.control.NonFatal(e) =>
               failed = true
               System.err.println(s"[sf1-smoke] $q FAILED: ${e.getMessage}")
           }
+          val s = (System.nanoTime() - t0) / 1e9
+          val name = s"$q $label"
+          println(f"[sf1-smoke] $name%-28s $s%.2f s")
+          s
         }
-        val s = onePass(phase)
-        // Registry mode: a SECOND pass, bracket value = min (r17: the
-        // ratchet's one false positive — q_ewma 1.55 -> 10.03 "6.5x"
-        // — was machine contention, adjudicated by standalone reruns
-        // at 2.10 s; min-of-two is Bench's plan_cost discipline and
-        // kills the class at the source. The baseline it rotates over
-        // holds single-run values, so the first min-of-two round can
-        // only read FASTER — the ratchet fails on slowdowns only.)
-        val s2 = if (whichFamily == "registry" && !failed)
-          math.min(s, onePass("run2")) else s
+        val s = onePass("cold")
+        val s2 = if (!failed) math.min(s, onePass("run2")) else s
         graft.CkptGc.sweep(spark, before)
-        (s"$q${if (phase == "warm") ":warm" else ""}",
-          if (failed) -1.0 else s2)
+        (q, if (failed) -1.0 else s2)
       }
+    // pair_census is NOT prebuilt here (r16 verdict finding): its
+    // only consumers (q_dedup_curve / q_lsh_planner) are excluded
+    // from this sweep as quadratic-by-construction on the all-dup
+    // replica, so the 354 s census (the single largest line of the
+    // r16 bracket) priced work nothing in the sweep consumed.
+    // Bench still prebuilds it — there the consumers run.
+    val fixtures = Seq("slot_chain", "gd_fit", "ivf_cents").map { name =>
+      fixture(name)(Fixtures(name)(spark, outDir))
     }
-    // STREAMING pass (r16 verdict #2): every q_stream_* key over the
-    // monotone per-replica-shifted tape — ONE cold point each, in the
-    // same bracket under the same ratchet. q_stream_media stays out
-    // (its media lake is a corpus-independent fixture: the key
-    // ignores the sfDir, so a replica point would re-time sf0.1).
-    val streamFamily0 = SparkEntry.queries.keys.toSeq.sorted
-      .filter(_.startsWith("q_stream_"))
-      .filterNot(_ == "q_stream_media")
-    val streamFamily = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(f) => val keep = f.split(',').map(_.trim).toSet
-        streamFamily0.filter(keep)
-      case None => streamFamily0
-    }
+    val timed = timeKeys(registryFamily, outDir)
     val (streamFixtures, streamTimed) =
-      if (whichFamily != "registry" || streamFamily.isEmpty)
+      if (streamFamily.isEmpty)
         (Seq.empty[(String, Double)], Seq.empty[(String, Double)])
       else {
         buildStreamTables()
@@ -596,26 +377,7 @@ object Sf1Smoke {
             "gd_fit_stream" -> "gd_fit").map { case (row, name) =>
           fixture(row)(Fixtures(name)(spark, streamDir))
         }
-        val st = streamFamily.map { q =>
-          val before = graft.CkptGc.snapshot(spark)
-          var failed = false
-          def onePass(label: String): Double = time(s"$q $label") {
-            try SparkEntry.queries(q)(spark, streamDir)
-              .write.format("noop").mode("overwrite").save()
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                failed = true
-                System.err.println(s"[sf1-smoke] $q FAILED: " +
-                  e.getMessage)
-            }
-          }
-          val s = onePass("cold")
-          // same min-of-two contention bracket as the batch pass
-          val s2 = if (!failed) math.min(s, onePass("run2")) else s
-          graft.CkptGc.sweep(spark, before)
-          (q, if (failed) -1.0 else s2)
-        }
-        (sf, st)
+        (sf, timeKeys(streamFamily, streamDir))
       }
     // fixture -> dependent-keys attribution (r16 verdict finding: the
     // bracket didn't say which keys consume a fixture's cost, so a
@@ -646,40 +408,31 @@ object Sf1Smoke {
       "fixture:slot_chain_stream" -> Seq("q_stream_anomaly",
         "q_stream_positions", "q_stream_retrain", "q_stream_gd_scores"),
       "fixture:gd_fit_stream" -> Seq("q_stream_gd_scores"))
-    // JSON bracket for the scale-regression ratchet (registry mode):
+    // JSON bracket for the scale-regression ratchet:
     // scripts/scale_gate.py compares this file round over round and
     // fails any key > 3x its prior point.
-    if (whichFamily == "registry") {
-      val present = (fixtures ++ streamFixtures).map(_._1).toSet
-      val deps = fixtureDeps.filter(d => present(d._1))
-        .map { case (k, ks) =>
-          "\"" + k.stripPrefix("fixture:") + "\":" +
-            ks.map("\"" + _ + "\"").mkString("[", ",", "]") }
-        .mkString("\"_fixture_deps\":{", ",", "}")
-      val j = ((fixtures ++ timed ++ streamFixtures ++ streamTimed)
-        .map { case (k, v) =>
-          "\"" + k + "\":" + String.format(java.util.Locale.ROOT,
-            "%.3f", Double.box(v)) } :+ deps)
-        .mkString("{", ",", "}")
-      // A SPARK_GRAFT_ONLY-narrowed run must not overwrite the full
-      // bracket (round_close.sh would rotate a partial baseline) —
-      // write it aside for manual merging instead.
-      val f =
-        if (sys.env.contains("SPARK_GRAFT_ONLY"))
-          s"scale_sweep_${replicas}x_partial.json"
-        else s"scale_sweep_${replicas}x.json"
-      java.nio.file.Files.write(java.nio.file.Paths.get(f),
-        (j + "\n").getBytes("UTF-8"))
-      println(s"[sf1-smoke] bracket written: $f (${timed.size} batch + " +
-        s"${streamTimed.size} stream keys)")
-    }
-    if (whichFamily != "events" && whichFamily != "registry") {
-      // Sanity: cluster structure should reflect the 10x replication —
-      // cluster count ~= distinct texts, not rows.
-      val reps = SparkEntry.queries("q_dedup_clusters")(spark, outDir)
-        .agg(countDistinct("cluster")).head().getLong(0)
-      println(s"[sf1-smoke] distinct clusters=$reps (rows=$n)")
-    }
+    val present = (fixtures ++ streamFixtures).map(_._1).toSet
+    val deps = fixtureDeps.filter(d => present(d._1))
+      .map { case (k, ks) =>
+        "\"" + k.stripPrefix("fixture:") + "\":" +
+          ks.map("\"" + _ + "\"").mkString("[", ",", "]") }
+      .mkString("\"_fixture_deps\":{", ",", "}")
+    val j = ((fixtures ++ timed ++ streamFixtures ++ streamTimed)
+      .map { case (k, v) =>
+        "\"" + k + "\":" + String.format(java.util.Locale.ROOT,
+          "%.3f", Double.box(v)) } :+ deps)
+      .mkString("{", ",", "}")
+    // A SPARK_GRAFT_ONLY-narrowed run must not overwrite the full
+    // bracket (round_close.sh would rotate a partial baseline) —
+    // write it aside for manual merging instead.
+    val f =
+      if (sys.env.contains("SPARK_GRAFT_ONLY"))
+        s"scale_sweep_${replicas}x_partial.json"
+      else s"scale_sweep_${replicas}x.json"
+    java.nio.file.Files.write(java.nio.file.Paths.get(f),
+      (j + "\n").getBytes("UTF-8"))
+    println(s"[sf1-smoke] bracket written: $f (${timed.size} batch + " +
+      s"${streamTimed.size} stream keys)")
     spark.stop()
   }
 }

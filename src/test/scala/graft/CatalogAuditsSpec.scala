@@ -55,7 +55,6 @@ class CatalogAuditsSpec extends SparkSpec {
       "counts, char sums and text fingerprints; escaping survives " +
       "quotes, backslashes and tabs") {
     val audit = CatalogAudits.jsonRoundTrip(spark, d)
-    graft.functions.PolyHash.register(spark)
     val direct = Tables.documents(spark, d)
       .groupBy("source")
       .agg(count(lit(1)).as("n"),

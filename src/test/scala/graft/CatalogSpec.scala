@@ -253,6 +253,35 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  test("overwritePartitions, compactPartitions and eraseKeys leave the " +
+      "session conf as they found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getAll.get(key)
+    // unset: an op that pins the default on restore shows in getAll
+    spark.conf.unset(key)
+    try withTable("gold_conf") {
+      CatalogOps.createGoldTable(ticksDf, "gold_conf")
+      def unchanged(op: String)(body: => Unit): Unit = {
+        val before = spark.conf.getAll
+        body
+        assert(spark.conf.getAll == before, op)
+      }
+      unchanged("overwritePartitions")(CatalogOps.overwritePartitions(Seq(
+        (10L, "EURUSD", ts("2023-03-01 08:00:00"), 9.99, 9.9912))
+        .toDF("tick_id", "symbol", "ts", "bid", "ask"), "gold_conf"))
+      unchanged("compactPartitions")(
+        CatalogOps.compactPartitions(spark, "gold_conf", Seq(2024)))
+      unchanged("eraseKeys")(
+        CatalogOps.eraseKeys(spark, "gold_conf", "tick_id", Seq(3L)))
+      // a session that set the mode itself keeps its own value
+      spark.conf.set(key, "STATIC")
+      unchanged("eraseKeys after a session set")(
+        CatalogOps.eraseKeys(spark, "gold_conf", "tick_id", Seq(4L)))
+      assert(spark.conf.getAll.get(key) == Some("STATIC"))
+      assert(spark.table("gold_conf").count() == 1)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("storageProfile: footer-level per-column telemetry — value " +
       "counts reconcile with rows, the constant column compresses " +
       "far better than the unique one, encodings surface") {

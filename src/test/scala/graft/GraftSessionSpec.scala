@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -214,17 +215,14 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a join with one multi-partition side keeps both exchanges") {
-    val old = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val df = customer.join(
         spark.range(0, 300, 1, 4).selectExpr("id AS cust", "id * 2 AS twice"), "cust")
       val rows = df.collect().toSeq.map(r => (r.getAs[Long]("cust"), r.getAs[Long]("twice")))
       assert(rows.sorted == (0L until 300L).map(c => (c, 2 * c)))
       assert(shuffles(df).count(_.isInstanceOf[HashPartitioning]) == 2, shuffles(df))
       assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
-    } finally old.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+    }
   }
 
   test("an aggregate over a 4-file parquet scan keeps its shuffle") {
@@ -294,15 +292,46 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally old.foreach(spark.conf.set(key, _))
   }
 
+  private val graftFunctions = Seq("graft_polyhash", "graft_grams",
+    "graft_vecdot", "graft_minhashes", "graft_simhash", "graft_wordgrams",
+    "graft_pqcodes", "graft_winnow", "graft_charentropy", "graft_cdc",
+    "graft_sorted_ncommon")
+
   test("GraftExtensions alone resolves all eleven graft_* functions in a " +
       "fresh session, before any operator registers one") {
-    val names = Seq("graft_polyhash", "graft_grams", "graft_vecdot",
-      "graft_minhashes", "graft_simhash", "graft_wordgrams", "graft_pqcodes",
-      "graft_winnow", "graft_charentropy", "graft_cdc", "graft_sorted_ncommon")
-    // a new session gets the extensions' functions but none that an
-    // operator registered on another session
+    // a new session gets the extensions' functions and nothing
+    // registered on another session
     val fresh = spark.newSession()
-    val missing = names.filterNot(fresh.catalog.functionExists)
+    val missing = graftFunctions.filterNot(fresh.catalog.functionExists)
     assert(missing.isEmpty, s"unresolved: $missing")
+  }
+
+  test("building and running registry keys leaves each graft_* registry " +
+      "entry the one GraftExtensions installed") {
+    val registry = spark.sessionState.functionRegistry
+    def entries = graftFunctions.map { name =>
+      val id = FunctionIdentifier(name)
+      (name, registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    }
+    val before = entries
+    // a tiny corpus in the registry's table layout: the three keys use
+    // graft_polyhash, graft_vecdot, graft_charentropy and graft_grams
+    val d = java.nio.file.Files.createTempDirectory("graft_registry_keys").toFile
+    try {
+      spark.range(0, 8, 1, 1).selectExpr("id AS doc_id",
+          "concat('doc ', CAST(id AS STRING), ' text ', repeat('ab', CAST(id AS INT))) AS text",
+          "'en' AS lang", "'web' AS source", "CAST(0 AS BIGINT) AS n_chars")
+        .write.parquet(s"$d/documents.parquet")
+      spark.range(0, 20, 1, 1).selectExpr("id AS vec_id",
+          "transform(sequence(0, 63), i -> CAST((id * 7 + i) % 11 - 5 AS FLOAT)) AS embedding",
+          "CAST(id % 3 AS INT) AS label")
+        .write.parquet(s"$d/embeddings.parquet")
+      for (key <- Seq("q_doc_fingerprint", "q_ann_topk", "q_char_entropy"))
+        assert(SparkEntry.queries(key)(spark, d.toString).collect().nonEmpty, key)
+    } finally LocalFiles.rmTree(d)
+    before.zip(entries).foreach { case ((name, info0, build0), (_, info1, build1)) =>
+      assert(info1 eq info0, s"$name: ExpressionInfo replaced")
+      assert(build1 eq build0, s"$name: builder replaced")
+    }
   }
 }

@@ -28,7 +28,6 @@ class NativeExprPropertySpec extends SparkSpec {
   } yield l.take(k)
 
   test("WordGrams == transform/slice/array_join HOF on random token lists") {
-    graft.functions.WordGrams.register(spark)
     val cases = samples(for {
       t <- tokensGen; n <- Gen.choose(1, 6)
     } yield (t, n), 40)
@@ -45,7 +44,6 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("PolyHash == codepoint fold on random unicode strings") {
-    graft.functions.PolyHash.register(spark)
     // STRING pieces, not Char: the emoji is non-BMP (surrogate pair)
     val strGen = Gen.listOfN(12,
       Gen.oneOf("a", "Z", "9", " ", "é", "中", "😀"))
@@ -60,7 +58,6 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("MinHashes == affine-rehash min on random hash arrays") {
-    graft.functions.MinHashes.register(spark)
     val hashes = for {
       l <- Gen.listOfN(10, Gen.choose(0L, 1000000006L))
       k <- Gen.choose(0, 10)
@@ -78,7 +75,6 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("SimHash64 == per-bit vote fold on random hash arrays") {
-    graft.functions.SimHash64.register(spark)
     val hashes = for {
       l <- Gen.listOfN(10, Gen.choose(0L, 1000000006L))
       k <- Gen.choose(1, 10)
@@ -114,7 +110,6 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("CharGrams == distinct-substring HOF on random unicode strings") {
-    graft.functions.CharGrams.register(spark)
     val strGen = Gen.listOfN(10,
       Gen.oneOf("a", "b", "9", " ", "é", "中", "😀")).map(_.mkString)
     samples(for { s <- strGen; n <- Gen.choose(1, 4) } yield (s, n), 40)
@@ -131,7 +126,6 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("VecDot == left-to-right double accumulation on random vectors") {
-    graft.functions.VecDot.register(spark)
     val vec = Gen.listOfN(16, Gen.choose(-100, 100).map(_ / 7.0f))
     samples(for { a <- vec; b <- vec } yield (a, b), 40)
       .foreach { case ((a, b), seed) =>
@@ -146,7 +140,6 @@ class NativeExprPropertySpec extends SparkSpec {
 
   test("SortedCommon == size(array_intersect) on random sorted " +
       "distinct arrays, and rejects unsorted input") {
-    graft.functions.SortedCommon.register(spark)
     val arr = Gen.listOfN(20, Gen.choose(0L, 40L))
       .map(_.distinct.sorted)
     samples(for { a <- arr; b <- arr } yield (a, b), 40)

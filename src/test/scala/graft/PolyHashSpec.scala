@@ -7,7 +7,6 @@ class PolyHashSpec extends SparkSpec {
   import spark.implicits._
 
   test("PolyHash equals the declarative HOF fold and the Scala reference") {
-    PolyHash.register(spark)
     val df = Seq("", "a", "abc", "the quick brown fox", "x" * 1000)
       .toDF("text")
       .select(
@@ -40,7 +39,6 @@ class PolyHashSpec extends SparkSpec {
     assert(out.getLong(0) == PolyHash.hash("abc"))
     assert(out.getLong(1) == PolyHash.hash("xyz"))
     // and the end-to-end DataFrame path agrees
-    PolyHash.register(spark)
     val r = Seq(("abc", "xyz")).toDF("a", "b")
       .selectExpr("graft_polyhash(a)", "graft_polyhash(b)")
       .as[(Long, Long)].collect().head
@@ -48,7 +46,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("PolyHash is callable inside HOF lambdas (token hashing path)") {
-    PolyHash.register(spark)
     val out = Seq("aa bb").toDF("text")
       .select(expr("transform(split(text, ' '), t -> graft_polyhash(t))").as("ths"))
       .as[Seq[Long]].collect().head
@@ -56,7 +53,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("CharGrams equals the declarative HOF distinct-3-gram spelling") {
-    graft.functions.CharGrams.register(spark)
     val df = Seq("abcdef", "aaaa", "abc").toDF("text")
       .select(
         col("text"),
@@ -73,8 +69,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("MinHashes equals the declarative HOF affine-rehash spelling") {
-    PolyHash.register(spark)
-    graft.functions.MinHashes.register(spark)
     val df = Seq("the quick brown fox", "a b c", "solo")
       .toDF("text")
       .select(expr(s"transform(array_distinct(${PortableText.tokens}), " +
@@ -90,8 +84,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("SimHash64 equals the declarative HOF vote spelling") {
-    PolyHash.register(spark)
-    graft.functions.SimHash64.register(spark)
     val bits = PortableText.SimHashBits
     val df = Seq("the quick brown fox", "a b a b", "solo")
       .toDF("text")
@@ -108,8 +100,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("PolyHash and CharGrams fold non-BMP text by code point, matching the HOF duals") {
-    PolyHash.register(spark)
-    graft.functions.CharGrams.register(spark)
     // U+1F600 and U+20000 are surrogate pairs in UTF-16; the engine
     // fragments (split('') / substring) count codepoints.
     val s = "a😀b𠀀c"
@@ -127,9 +117,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("registry builders validate arity and literal-ness with clear errors") {
-    PolyHash.register(spark)
-    graft.functions.CharGrams.register(spark)
-    graft.functions.VecDot.register(spark)
     val df = Seq(("abc", 3)).toDF("text", "n")
     def analysisFails(sqlExpr: String, fragment: String): Unit = {
       val e = intercept[Exception](df.select(expr(sqlExpr)).collect())
@@ -149,9 +136,6 @@ class PolyHashSpec extends SparkSpec {
 
   test("native functions reject wrong input TYPES at analysis, " +
       "never silently misread bytes") {
-    PolyHash.register(spark)
-    graft.functions.MinHashes.register(spark)
-    graft.functions.VecDot.register(spark)
     // graft_vecdot on array<double>: before ExpectsInputTypes the eval
     // loop read interleaved 4-byte halves of the doubles — garbage
     // with no error. Now analysis rejects the signature.
@@ -174,7 +158,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("VecDot throws on mismatched array lengths instead of truncating") {
-    graft.functions.VecDot.register(spark)
     val e = intercept[Exception] {
       Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f))).toDF("a", "b")
         .select(expr("graft_vecdot(a, b)")).collect()

@@ -61,8 +61,6 @@ class SkewStreamDedupSpec extends SparkSpec {
       "plan shape)") {
     import org.apache.spark.sql.functions.{col, expr, lit}
     import graft.functions.PortableText.{tokenHashes, minHashes}
-    graft.functions.PolyHash.register(spark)
-    graft.functions.MinHashes.register(spark)
     // one maximally hot bucket: 60 identical docs, every band bucket
     // holds the whole corpus, 1770 true pairs (emitted at band 0 by
     // the first-match rule)

@@ -12,16 +12,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Runs `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-    * scoped to `bytes` and restored in `finally`. At 1 byte every input
-    * is above the gate of [[SmallPlanToOneStage]] and
+    * scoped to `bytes` ([[GraftSession.withConf]]). At 1 byte every
+    * input is above the gate of [[SmallPlanToOneStage]] and
     * [[SmallSortToSinglePartition]]: a plan built inside is the plan an
     * input of cluster size gets. */
-  def withAdvisory[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
-    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withAdvisory[T](bytes: Long)(body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      bytes.toString)(body)
 }
 
 object SparkSpec {

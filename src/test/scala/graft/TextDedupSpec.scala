@@ -135,8 +135,6 @@ class TextDedupSpec extends SparkSpec {
   test("candidatePairsFromSigs == candidatePairs(minHashBands) as a " +
       "set, with exactly one row per pair (first-match, no distinct)") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.PolyHash.register(spark)
-    graft.functions.MinHashes.register(spark)
     // a corpus with exact dups (match ALL 4 bands — the multi-band
     // collapse the first-match filter must dedup), near-dups (some
     // bands), non-dups, and a token-less doc (NULL bands, dropped)
@@ -1010,7 +1008,6 @@ class TextDedupSpec extends SparkSpec {
       "stability property), identical docs dedup to full dup_share, " +
       "chunk lengths reconcile with the text") {
     import org.apache.spark.sql.functions.{col, explode, expr}
-    graft.functions.CdcChunks.register(spark)
     // deterministic pseudo-random text: varied chars so boundaries fire
     val base = (1 to 400).map(i =>
       ('a' + (i * 37 + i * i % 11) % 26).toChar).mkString
