@@ -3,12 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 import graft.operators._
-import graft.streaming.StreamRegistry
+import graft.registry._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory each
-  * query key maps to. Column names are aliased identically in the Spark
-  * plan and the DuckDB oracle SQL (driver hash-compares by sorted column
-  * name); floating aggregates round(·,4); result ordering explicit.
+/** Driver contract: `queries` (key → Spark builder over
+  * `(session, sfDir)`) and `oracleSql` (key → DuckDB SQL over the same
+  * tables), views built once per JVM from the `Key` records of the
+  * SURVEY §2 family objects in `graft.registry`. Column names are
+  * aliased identically in the Spark plan and the DuckDB oracle SQL
+  * (driver hash-compares by sorted column name); floating aggregates
+  * round(·,4); result ordering explicit.
+  *
+  * Besides the views and `entry`, this object holds only the
+  * parameters specs and `Fixtures` read and the oracle helpers and
+  * parameters two or more families share; one family's own live in
+  * its object.
   */
 object SparkEntry {
 
@@ -16,73 +24,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
     Analytics.pricingSummary(Tables.lineitem(spark, d), "1998-09-02 00:00:00")
-  }
-
-  /** Deterministic PII-bearing contact line appended to each doc's
-    * text (the synthetic corpus is PII-free word soup): one email, one
-    * phone, one IPv4, all pure functions of (doc_id, source). Used by
-    * `q_pii_scrub` and the `q_corpus_curate` composition;
-    * [[duckContactText]] is the SQL dual — one definition each side so
-    * the spellings cannot drift. */
-  private def withContactLine(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    docs.withColumn("text", concat(col("text"),
-      lit(" user"), col("doc_id").cast("string"),
-      lit("@"), col("source"), lit(".net call 555-"),
-      lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
-      lit(" from 10.0."), pmod(col("doc_id"), lit(256)).cast("string"),
-      lit(".99")))
-  }
-
-  /** DuckDB dual of [[withContactLine]]'s text expression. */
-  private val duckContactText: String =
-    "text || ' user' || CAST(doc_id AS VARCHAR) || '@' || source || " +
-      "'.net call 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') " +
-      "|| ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.99'"
-
-  /** The quantized-Lloyd oracle CTE chain (dual of
-    * `Vectors.kmeansAssign(k=8, iters=2, scale=32)`), ending in `a2`
-    * (vec_id, cluster, score) and `qq` (vec_id, qq). Shared by
-    * `q_kmeans` and `q_cluster_cap` so the iteration spelling exists
-    * once. */
-  private def duckKmeansCtes: String = {
-    def dot(a: String, b: String): String =
-      "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        s"list_transform(range(64), i -> $a[CAST(i+1 AS INT)] * " +
-        s"$b[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-    s"""WITH q AS (SELECT vec_id,
-      |    list_transform(embedding, x ->
-      |      CAST(floor(CAST(x AS DOUBLE) * 32 + 0.5) AS BIGINT)) AS qv
-      |  FROM embeddings),
-      |qd AS (SELECT vec_id, qv,
-      |    list_transform(qv, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS v
-      |  FROM q),
-      |c0 AS (SELECT vec_id AS cid, v AS cv FROM qd WHERE vec_id < 8),
-      |s1 AS (SELECT qd.vec_id, c0.cid,
-      |    ${dot("cv", "cv")} - 2 * ${dot("v", "cv")} AS score
-      |  FROM qd, c0),
-      |a1 AS (SELECT vec_id, cid AS cluster FROM (SELECT vec_id, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY score, cid) AS rn
-      |  FROM s1) x WHERE rn = 1),
-      |dims AS (SELECT a1.cluster, unnest(range(64)) AS d, qd.qv
-      |  FROM qd JOIN a1 USING (vec_id)),
-      |u AS (SELECT cluster, d, sum(qv[CAST(d + 1 AS INT)]) AS s,
-      |    count(*) AS cnt
-      |  FROM dims GROUP BY cluster, d),
-      |u2 AS (SELECT cluster,
-      |    list(CAST(CAST(CAST(s AS DOUBLE) / cnt AS FLOAT) AS DOUBLE)
-      |      ORDER BY d) AS cv
-      |  FROM u GROUP BY cluster),
-      |c1 AS (SELECT c0.cid, coalesce(u2.cv, c0.cv) AS cv
-      |  FROM c0 LEFT JOIN u2 ON u2.cluster = c0.cid),
-      |s2 AS (SELECT qd.vec_id, c1.cid,
-      |    ${dot("cv", "cv")} - 2 * ${dot("v", "cv")} AS score
-      |  FROM qd, c1),
-      |a2 AS (SELECT vec_id, cid AS cluster, score
-      |  FROM (SELECT vec_id, cid, score,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY score, cid) AS rn
-      |  FROM s2) x WHERE rn = 1),
-      |qq AS (SELECT vec_id, ${dot("v", "v")} AS qq FROM qd)""".stripMargin
   }
 
   /** Tick view over events — same derivation as Tables.ticks (SURVEY §3). */
@@ -95,83 +36,20 @@ object SparkEntry {
   // oracle literal (same discipline ticksSql applies to the ask
   // formula).
   val symPairs: Seq[(Long, Long)] = Seq((1L, 2L), (2L, 3L), (1L, 3L))
-  val symPairsSql: String =
-    symPairs.map { case (a, b) => s"($a, $b)" }.mkString(", ")
   val barQtyParam = 500L        // D30/D31 volume-bar size
-  val vpinWindowBars = 3        // D31 trailing bucket count
   val spikeBp = 5000L           // B12 spike threshold (basis points)
-  val eppsScales: Seq[Long] = Seq(60L, 600L, 3600L, 86400L)
-  val sigScales: Seq[Long] = Seq(60L, 600L, 3600L) // D43 RV ladder (s)
-  val eppsScalesSql: String = eppsScales.map(s => s"($s)").mkString(", ")
-  val hyBucketSec = 3600L       // D33 overlap-bucket grain
-  val rollCorrDays = 5          // D29 trailing window (days)
-  val bitemporalTxId = 5000L    // E13 transaction-time cutoff
-  val bitemporalTxEarly = 2500L // E20 earlier knowledge cutoff
-  val validTsLit = "2024-01-15 00:00:00" // E13/D8 valid-time cut
-  val lateDaysParam = 60        // C29 lateness threshold (days)
-  val sessionGapSec = 86400L    // E12 browsing-session gap (24 h —
-                                // probed: ~50/50 contained/orphan at
-                                // the gate SFs, 0 interval overlaps)
   val tbEntryEvery = 25         // D38 entry sampling stride
   val tcaFillEvery = 20         // D50 fill sampling stride
-  val waterfillPct = 95         // F75 budget as % of corpus tokens
-  val nwMaxLag = 3              // D51 Newey–West bandwidth
-  val rsHorizon = 5             // D54 realized-spread settle (trades)
   val tbHorizon = 40            // D38/D58 lookahead ticks
-  val shockBpParam = 3000L      // D58 jump threshold (basis points) —
-                                // probed at sf0.01 with recover 1000:
-                                // 8216 shocks, 63% recover, mean 11.7
-                                // ticks — two-sided
-  val shockRecoverBp = 1000L    // D58 recovery band (basis points)
-  val sortQuantiles = 5         // D59 portfolio-sort buckets
   val tbBarrierBp = 8000L       // D38 symmetric barrier (basis points)
-  val zipfTopK = 100            // F57 tokens in the fit
   val velocityDays = 90         // E17 trailing-interval window (days)
   val coverageWindowDays = 30   // E18 activity-interval length (days)
-  val nbMinTok = 20             // F92 teaching-rule min token count
-  val nbMinStopPct = 5          // F92 teaching-rule min stopword pct
-  val pairsEnterZ = 2.0         // D62 entry |z| threshold
-  val pairsExitZ = 0.5          // D62 exit |z| threshold
-  val incrVocabSplit = 200L     // F94 base/delta doc_id split
-  val incrVocabK = 50           // F94 reported vocabulary head
-  val pathTopK = 25             // E19 reported transition head
-  val centIters = 10            // F95 PageRank rounds
-  val centDamping = 0.85        // F95 damping factor
-  val harWeek = 5               // D63 weekly-horizon day count
-  val wsampleK = 10             // F96 per-source sample size
-  val coneHorizons = Seq(1, 5)  // D64 cone horizons (days)
-  val heapsBuckets = 10         // F98 corpus prefix points
-  val annFilterLabel = 3        // F89 filtered-search metadata label
-  val kAnonK = 5                // F88 k-anonymity threshold
-  val kAnonBucket = 256         // F88 length-generalization width —
-                                // probed: 64 flags ~99% of classes
-                                // (no release); 256 splits 70/294 at
-                                // sf0.1 — a real decision surface
   val respLags: Seq[Int] = Seq(1, 5, 10) // D45 response-function lags
-  val knDiscount = 0.75         // F66 Kneser-Ney absolute discount
-  val srcSimK = 64              // F70 source-signature minhash length
-  // rich-corpus sweep cuts sit in the tier-discriminating token range
-  // (tier token totals ≈ 43 / 65 / 85) so the per-source curves grade
-  val richSweepCuts: Seq[Long] = Seq(40L, 60L, 80L, 100L)
-  val richSweepCutsSql: String =
-    richSweepCuts.map(c => s"($c)").mkString(", ")
-  val semDedupTau = 0.35        // F72 within-cluster cosine cutoff —
-                                // probed: drops 69/82/791 of
-                                // 500/500/2000 vectors at the three
-                                // SFs (0.2 dropped ~90% — vacuous the
-                                // other way; max within-cluster sim
-                                // tops out near 0.6 on this corpus)
-  val dedupThrTenths: Seq[Int] = Seq(5, 6, 7, 8, 9) // F71 J cutoffs (×0.1)
-  val lshPlanConfigs: Seq[(Int, Int)] =  // F74 (bands, rows/band) grid —
-    Seq((16, 1), (8, 2), (4, 4), (2, 8), (1, 16)) // all k=16 layouts
-  val recallSeverities: Seq[Int] = Seq(2, 3, 5, 10) // F85 drop-every-k
-  val dedupThrTenthsSql: String =
-    dedupThrTenths.map(t => s"($t)").mkString(", ")
   /** D88/G47 shared oracle: the FFD dot product — Scala-computed
     * weights as round-trip literals, one fixed left-assoc chain over
     * the K-lag symbol window; warm-up rows excluded. The G47 stream's
     * sink equals this frame row for row (parity spec'd). */
-  private def fracDiffOracleSql: String = {
+  private[graft] def fracDiffOracleSql: String = {
     val weights = Microstructure.ffdWeights(ffdD, ffdK)
     val lags = (1 to ffdK).map(i =>
       s"lag(c0, $i) OVER win AS c$i").mkString(",\n      |    ")
@@ -200,7 +78,7 @@ object SparkEntry {
     * condition-free. Elements carry the raw move in `m`; their state
     * fields are the as-if-first fold state so the first element IS
     * the init. */
-  private def cusumFoldSql(mv: String): String = {
+  private[graft] def cusumFoldSql(mv: String): String = {
     val z = "CAST(0 AS BIGINT)"
     val spNew = s"greatest($z, acc.sp + e.m)"
     val snNew = s"least($z, acc.sn + e.m)"
@@ -227,7 +105,7 @@ object SparkEntry {
     * lambda. Field order is load-bearing (this DuckDB evaluates
     * result-struct fields sequentially in-place): every reader of
     * acc.h/acc.prev is declared before their writers. */
-  private def garchFoldSql(mv: String): String = {
+  private[graft] def garchFoldSql(mv: String): String = {
     // Scala-computed seed interpolated as its round-trip literal —
     // spelled as SQL arithmetic it would parse as exact DECIMAL and
     // sit 1 ulp off the streaming twin's binary value
@@ -253,7 +131,7 @@ object SparkEntry {
     * over an observation list `zs` — same field-order discipline
     * (imax reads acc.x before x writes it; x reads acc.p before p
     * writes it). */
-  private def kalmanFoldSql(zs: String): String = {
+  private[graft] def kalmanFoldSql(zs: String): String = {
     val kGain = s"((acc.p + $kalmanQ) / ((acc.p + $kalmanQ) + $kalmanR))"
     s"""list_reduce(list_transform($zs,
       |      v -> {imax: CAST(0.0 AS DOUBLE), x: v,
@@ -272,7 +150,7 @@ object SparkEntry {
     * Field order is load-bearing (sequential in-place struct
     * evaluation): nhi/pmax read acc.pl before pl writes it; the
     * element's raw move rides in `m`. */
-  private def hmmFoldSql(mv: String): String = {
+  private[graft] def hmmFoldSql(mv: String): String = {
     val hp = hmmParams
     import hp._
     def eL(m: String) = s"($gL / ($gL2 + $m * $m))"
@@ -297,80 +175,12 @@ object SparkEntry {
       |        m: e.m})""".stripMargin
   }
 
-  /** The D91/D92 factor-model WITH-body (deterministic roster →
-    * exact-int64 daily-return gram/sums → covariance cells → the
-    * shared unrolled power cascade), GENERATED from (factorSyms,
-    * factorComps, factorIters) — shared by the q_factor_pca and
-    * q_factor_resid oracles so the grid, the covariance spelling and
-    * the recurrence have ONE SQL spelling (the dual of
-    * `Microstructure.factorCore`). */
-  private lazy val factorCascadeSql: String = {
-    val dim = factorSyms
-    val head =
-      s"""r AS (SELECT symbol FROM (SELECT symbol, count(*) AS n
-        |    FROM $ticksSql t GROUP BY 1
-        |    ORDER BY n DESC, symbol LIMIT $dim) z),
-        |pos AS (SELECT symbol,
-        |    CAST(row_number() OVER (ORDER BY symbol) - 1 AS BIGINT)
-        |      AS p
-        |  FROM r),
-        |ret AS (SELECT p, CAST(t.ts AS DATE) AS d,
-        |    max_by(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      - min_by(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS ret
-        |  FROM $ticksSql t JOIN pos USING (symbol) GROUP BY 1, 2),
-        |okd AS (SELECT d FROM ret GROUP BY d
-        |  HAVING count(*) = $dim),
-        |rr AS (SELECT ret.* FROM ret JOIN okd USING (d)),
-        |pair AS (SELECT a.p AS i, b.p AS j,
-        |    CAST(sum(a.ret * b.ret) AS BIGINT) AS g
-        |  FROM rr a JOIN rr b USING (d) WHERE a.p <= b.p
-        |  GROUP BY 1, 2),
-        |sums AS (SELECT p AS i, CAST(sum(ret) AS BIGINT) AS s
-        |  FROM rr GROUP BY 1),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM okd),
-        |cell AS (
-        |  SELECT p.i AS i, p.j AS j,
-        |    (CAST(p.g AS DOUBLE) - CAST(si.s AS DOUBLE)
-        |      * CAST(sj.s AS DOUBLE) / nn.n) / (nn.n - 1.0) AS cv
-        |  FROM pair p JOIN sums si ON si.i = p.i
-        |    JOIN sums sj ON sj.i = p.j, nn
-        |  UNION ALL
-        |  SELECT p.j, p.i,
-        |    (CAST(p.g AS DOUBLE) - CAST(si.s AS DOUBLE)
-        |      * CAST(sj.s AS DOUBLE) / nn.n) / (nn.n - 1.0)
-        |  FROM pair p JOIN sums si ON si.i = p.i
-        |    JOIN sums sj ON sj.i = p.j, nn
-        |  WHERE p.i < p.j),
-        |cm0 AS (
-        |  SELECT list(rw ORDER BY i) AS c FROM (
-        |    SELECT i, list(cv ORDER BY j) AS rw FROM cell GROUP BY i)
-        |    rows_),
-        |trace AS (
-        |  SELECT list_reduce(list_prepend(0.0, list_transform(
-        |    range($dim), i -> c[CAST(i + 1 AS INT)][CAST(i + 1 AS INT)])),
-        |    (a, b) -> a + b) AS tr FROM cm0)""".stripMargin
-    (Seq(head) ++ powerCascadeBlocks(dim, factorComps, factorIters))
-      .mkString(",\n")
-  }
-
   /** D90/G48 parameters — emission scales bracket the tape's move
     * distribution (|move| median ≈ 3.5k cents, p99 ≈ 22k at sf0.01:
     * γ_L sits below the median, γ_H above p90, so the posterior
     * actually travels), sticky transitions keep regimes persistent. */
   val hmmParams = graft.operators.Microstructure.HmmParams(
     gL = 2000.0, gH = 12000.0, stayL = 0.95, stayH = 0.90)
-  val deconSweepNs = Seq(2, 3, 5, 7) // F105 gram-width grid (5 = the
-                                // production F17/F43 setting)
-  val ewmaVolLambdas = Seq(0.8, 0.9, 0.94, 0.97) // D93 decay grid
-                                // (0.94 = the RiskMetrics daily λ)
-  val factorSyms = 8            // D91 roster size (top by tick count)
-  val factorComps = 2           // D91 components reported
-  val factorIters = 40          // D91 power-iteration rounds
-  val cdcMaskBits = 6           // F102 CDC boundary mask (2^6 = 64-cp
-                                // average chunks; corpus docs ~300 cp)
-  val bm25K1 = 1.2              // F101 BM25 tf saturation
-  val bm25B = 0.75              // F101 BM25 length-normalization mix
   val ffdD = 0.4                // D88 fractional-differencing order
   val ffdK = 8                  // D88 fixed window width (lags)
   val cusumH = 5000L            // D89 CUSUM threshold (cents)
@@ -396,44 +206,6 @@ object SparkEntry {
                                 // the three SFs; 1.4 keeps the scan
                                 // non-vacuous at EVERY gate SF
                                 // (1/589/5821 rows)
-  val auditQueries: Seq[String] =          // F68 multi-term queries —
-    // each mixes the one RARE corpus term ('dup', df≈5% of docs) with
-    // common terms (df≈78%) so the idf weighting actually reorders
-    // vs the raw-hit ideal (probed: all-common queries give NDCG
-    // 1.0000 at every SF — vacuous).
-    Seq("dup data", "dup scan small", "dup join slow batch")
-  val auditK = 10                          // F68 NDCG cutoff
-  /** F68's (query_id, query, term) map as a VALUES body — generated
-    * from `auditQueries` so both engines rank the SAME term sets. */
-  val auditQueriesSql: String = auditQueries.zipWithIndex.flatMap {
-    case (q, i) =>
-      q.split(' ').filter(_.nonEmpty).distinct.map(t => s"($i, '$q', '$t')")
-  }.mkString(", ")
-  val packWidths: Seq[Int] = Seq(16, 32, 64) // F67 bucket widths; the
-                                // last is the truncation context (64
-                                // keeps all three buckets AND the
-                                // cap non-vacuous: corpus token
-                                // counts span 10..99 at the gate SFs)
-  val dupSpanW = 8              // F62 minimum duplicated-span width
-  val bpeMergeRounds = 5        // F59 adaptive merge rounds
-  val q6Year = 1996             // C30 shipdate year
-  val q6DiscLo = 0.05           // C30 discount band (inclusive)
-  val q6DiscHi = 0.07
-  val q6MaxQty = 24.0           // C30 small-quantity cutoff
-  val pcaComps = 2              // F61 principal components emitted
-  val pcaIters = 60             // F61 power-iteration rounds (both
-                                // engines unroll the SAME count)
-
-  val pcaDim = 64               // F61/F65 embedding dimensionality
-
-  val cointBands = 2            // D65 LSH bands
-  val cointBandBits = 7         // D65 bits per band (candidates ~
-                                // bands * n^2 / 2^(bandBits+1))
-  val cointSampleMod = 3        // D60 registry roster sample: keep
-                                // symbol % 3 == 0 → 1/9 of the
-                                // quadratic pair grid (r13; full
-                                // screen = spec baseline, full
-                                // roster = D65 blocked screen)
   /** F7d serving fixture: the trained coarse-quantizer centroids,
     * built ONCE per (session, corpus) — the k·dim-float artifact a
     * serving tier caches (ingest-time at 100 TB). Same params as
@@ -450,133 +222,6 @@ object SparkEntry {
   val reconFlagPct = 0.99       // F99 anomaly flag: err above the p99
                                 // error percentile (ref test.py:334)
   val signalExitFrac = 0.5      // D76 exit once window error recovers
-  val streamGoLive = "2024-01-16"  // G41 go-live date (mid-tape: the
-                                // deployment trades the back half)
-  val retrainPct = 0.90         // G42 monitoring band (p90 — alert
-                                // sensitivity, vs the p99 flag band)
-  val retrainConsecutive = 1    // G42 alert at the Nth breach in a row
-                                // below exitFrac * p99 threshold
-  val sweepPcts = Seq(0.9, 0.95, 0.99) // D81 swept flag percentiles
-  val stalenessRun = 3          // D83/G42 consecutive breaches → alert
-  val wfFolds = 3               // D77 walk-forward retrain folds
-  val wfMinTrain = 1            // D77 seed train windows (the tape
-                                // carries 1-5 session windows/symbol)
-  val wfStep = 1                // D77 eval windows per fold
-  val runCutoff = "2024-01-20"  // A25 as-of cutoff (mid-history)
-  val gdPatience = 2            // D85 early-stopping patience
-  // A28 stage params (small config longs — lineageParamsFp bound):
-  // identical in the registry's prior/current manifests, so the only
-  // verdict driver is the as-of data diff; the SPEC varies them.
-  val lineageParams: Map[String, Long] = Map(
-    "schema" -> 1L, "ingest" -> 2L, "clean" -> 750L,
-    "features" -> 16L, "train" -> 62500L, "evaluate" -> 990000L)
-  val fracD = 0.4               // D71 differentiation order
-  val fracK = 10                // D71 truncation lags
-  val cpcvGroups = 5            // D72 CPCV calendar groups (C(5,2)
-                                // = 10 test combinations)
-  val matryoshkaDims = Seq(8, 16, 32, 64) // F100 prefix lengths
-  val psiBuckets = 10           // D74 PSI histogram buckets
-
-  /** D60/D65 shared oracle fragments: the daily-close CTE and the
-    * OLS + residual-AR(1) fit tail over a `grid` CTE (sym_a, sym_b,
-    * day, ca, cb) — factored so the exact and the blocked screen
-    * interpolate ONE spelling of the regression arithmetic. */
-  private lazy val cointClosesSql: String =
-    """closes AS (SELECT user_id AS symbol,
-      |    CAST(date_trunc('day', ts) AS DATE) AS day,
-      |    max_by(CAST(round(value * 100.0, 0) AS BIGINT), event_id)
-      |      AS cents
-      |  FROM events GROUP BY 1, 2)""".stripMargin
-
-  private lazy val cointFitTailSql: String =
-    s"""lg AS (SELECT *,
-        |    lag(ca) OVER (PARTITION BY sym_a, sym_b ORDER BY day) AS ya,
-        |    lag(cb) OVER (PARTITION BY sym_a, sym_b ORDER BY day) AS xa
-        |  FROM grid),
-        |fit AS (SELECT sym_a, sym_b, count(*) AS n_days,
-        |    CAST(sum(cb) AS BIGINT) AS sx,
-        |    CAST(sum(ca) AS BIGINT) AS sy,
-        |    CAST(sum(cb * ca) AS BIGINT) AS sxy,
-        |    CAST(sum(cb * cb) AS BIGINT) AS sxx,
-        |    count(ya) AS n1,
-        |    CAST(sum(ca * ya) AS BIGINT) AS c_yy1,
-        |    CAST(sum(ca * xa) AS BIGINT) AS c_yx1,
-        |    CAST(sum(cb * ya) AS BIGINT) AS c_xy1,
-        |    CAST(sum(cb * xa) AS BIGINT) AS c_xx1,
-        |    CAST(sum(CASE WHEN ya IS NOT NULL THEN ca END) AS BIGINT)
-        |      AS c_y,
-        |    CAST(sum(CASE WHEN ya IS NOT NULL THEN cb END) AS BIGINT)
-        |      AS c_x,
-        |    CAST(sum(ya) AS BIGINT) AS c_y1,
-        |    CAST(sum(xa) AS BIGINT) AS c_x1,
-        |    CAST(sum(ya * ya) AS BIGINT) AS c_y1sq,
-        |    CAST(sum(xa * xa) AS BIGINT) AS c_x1sq,
-        |    CAST(sum(ya * xa) AS BIGINT) AS c_x1y1
-        |  FROM lg GROUP BY sym_a, sym_b),
-        |fb AS (SELECT *, ${Microstructure.olsSlopeFromSums("sx", "sy",
-             "sxy", "sxx", "n_days")} AS beta FROM fit),
-        |fab AS (SELECT *, ${Microstructure.olsInterceptFromSums("sx",
-             "sy", "beta", "n_days")} AS alpha FROM fb
-        |  WHERE beta IS NOT NULL),
-        |s AS (SELECT sym_a, sym_b, n_days, beta,
-        |    ${Microstructure.arCrossFromSums} AS s_cross,
-        |    ${Microstructure.arLag2FromSums} AS s_lag2
-        |  FROM fab),
-        |rr AS (SELECT sym_a, sym_b, n_days, beta,
-        |    CASE WHEN s_lag2 > 0 THEN round(s_cross / s_lag2, 4) + 0.0 END
-        |      AS rho
-        |  FROM s)
-        |SELECT sym_a, sym_b, n_days, round(beta, 4) + 0.0 AS beta, rho,
-        |  CASE WHEN rho > 0 AND rho < 1
-        |    THEN round(-ln(2.0) / ln(rho), 4) END AS half_life_days
-        |FROM rr ORDER BY sym_a, sym_b""".stripMargin
-
-  /** The F61 covariance + power-iteration cascade as a WITH-body
-    * (rounded gram/sums → covariance lists → `pcaIters` unrolled
-    * normalize-matvec blocks → sign-canonicalized eigenpair CTEs
-    * `p{m}e` + `trace`), GENERATED from (pcaComps, pcaIters, pcaDim)
-    * — shared by the q_pca_power and q_pca_project oracles so the
-    * recurrence has ONE spelling (the SQL twin of
-    * `Vectors.pcaCore`). */
-  private lazy val pcaCascadeSql: String = {
-    val dim = pcaDim
-    val head =
-      s"""pair AS (
-        |  SELECT i, j,
-        |    round(sum(CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE)
-        |            * CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE)), 4)
-        |      AS g
-        |  FROM embeddings, (SELECT unnest(range($dim)) AS i) ti,
-        |    (SELECT unnest(range($dim)) AS j) tj
-        |  WHERE i <= j GROUP BY i, j),
-        |sums AS (
-        |  SELECT i,
-        |    round(sum(CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE)), 4)
-        |      AS s
-        |  FROM embeddings, (SELECT unnest(range($dim)) AS i) ti
-        |  GROUP BY i),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings),
-        |cell AS (
-        |  SELECT p.i AS i, p.j AS j,
-        |    (p.g - si.s * sj.s / nn.n) / (nn.n - 1.0) AS cv
-        |  FROM pair p JOIN sums si ON si.i = p.i
-        |    JOIN sums sj ON sj.i = p.j, nn
-        |  UNION ALL
-        |  SELECT p.j, p.i, (p.g - si.s * sj.s / nn.n) / (nn.n - 1.0)
-        |  FROM pair p JOIN sums si ON si.i = p.i
-        |    JOIN sums sj ON sj.i = p.j, nn
-        |  WHERE p.i < p.j),
-        |cm0 AS (
-        |  SELECT list(rw ORDER BY i) AS c FROM (
-        |    SELECT i, list(cv ORDER BY j) AS rw FROM cell GROUP BY i)
-        |    rows_),
-        |trace AS (
-        |  SELECT list_reduce(list_prepend(0.0, list_transform(
-        |    range($dim), i -> c[CAST(i + 1 AS INT)][CAST(i + 1 AS INT)])),
-        |    (a, b) -> a + b) AS tr FROM cm0)""".stripMargin
-    (Seq(head) ++ powerCascadeBlocks(dim, pcaComps, pcaIters))
-      .mkString(",\n")
-  }
 
   /** The power-iteration/deflation cascade as generated unrolled CTE
     * blocks over a head-provided `cm0` (dim×dim covariance list) —
@@ -584,7 +229,7 @@ object SparkEntry {
     * PCA oracles (via [[pcaCascadeSql]]) and the D91 factor-model
     * oracle so the recurrence has ONE spelling per engine. Emits
     * `p{m}e` (loadings `v` + eigenvalue `lam`) per component. */
-  private def powerCascadeBlocks(dim: Int, comps: Int,
+  private[graft] def powerCascadeBlocks(dim: Int, comps: Int,
                                  iters: Int): Seq[String] = {
     def mv(c: String, v: String): String =
       s"list_transform(range($dim), i -> list_reduce(list_prepend(0.0, " +
@@ -615,1539 +260,6 @@ object SparkEntry {
     }
   }
 
-  /** The F59 training cascade as a WITH-body (vocab → seg0 → per-round
-    * pair-count/argmax/refold CTEs), GENERATED from `bpeMergeRounds` —
-    * shared verbatim by the q_bpe_train and q_bpe_encode oracles so
-    * the two cannot drift on the loop (the same one-spelling rule the
-    * Scala side enforces via `TextDedup.bpeCore`). */
-  private lazy val bpeCascadeSql: String = {
-    import graft.functions.PortableText._
-    val rounds = (1 to bpeMergeRounds).map { r =>
-      s"""p$r AS (SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt
-        |  FROM (SELECT unnest(list_transform(range(len(tok) - 1),
-        |      i -> tok[CAST(i + 1 AS INT)] || ' ' || tok[CAST(i + 2 AS INT)]))
-        |      AS pair, freq
-        |    FROM (SELECT string_split(seg, ' ') AS tok, freq
-        |      FROM seg${r - 1}) x
-        |    WHERE len(tok) >= 2) y
-        |  GROUP BY pair),
-        |m$r AS (SELECT pair, cnt, split_part(pair, ' ', 1) AS pa,
-        |    split_part(pair, ' ', 2) AS pb
-        |  FROM p$r ORDER BY cnt DESC, pair LIMIT 1),
-        |seg$r AS (SELECT list_reduce(string_split(s.seg, ' '),
-        |    (acc, t) -> CASE WHEN (acc = m.pa
-        |        OR ends_with(acc, ' ' || m.pa)) AND t = m.pb
-        |      THEN acc || t ELSE acc || ' ' || t END) AS seg, s.freq
-        |  FROM seg${r - 1} s, m$r m)""".stripMargin
-    }.mkString(",\n")
-    s"""vocab AS (SELECT word, count(*) AS freq
-      |  FROM (SELECT unnest($duckTokens) AS word FROM documents) t
-      |  GROUP BY word),
-      |seg0 AS (SELECT array_to_string(list_transform(range(length(word)),
-      |    i -> word[CAST(i + 1 AS INT)]), ' ') AS seg, freq FROM vocab),
-      |$rounds""".stripMargin
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- C. SQL analytics (SURVEY §2.C) ----
-    "q1_agg" -> ((s, d) =>
-      Analytics.pricingSummary(Tables.lineitem(s, d), "1998-09-02 00:00:00")),
-    "q_join_agg" -> ((s, d) =>
-      Analytics.shippingPriority(Tables.customer(s, d), Tables.orders(s, d),
-        Tables.lineitem(s, d), "BUILDING")),
-    // C30 — TPC-H Q6 essence: the pure-pushdown scan aggregate.
-    "q_forecast_revenue" -> ((s, d) =>
-      Analytics.forecastRevenue(Tables.lineitem(s, d), q6Year, q6DiscLo,
-        q6DiscHi, q6MaxQty)),
-    "q_multi_join" -> ((s, d) =>
-      Analytics.regionRevenue(Tables.region(s, d), Tables.nation(s, d),
-        Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-        Tables.supplier(s, d), "ASIA")),
-    "q_topk_per_group" -> ((s, d) =>
-      Analytics.topKPerGroup(Tables.part(s, d), "p_brand", "p_retailprice",
-        "p_partkey", 3)),
-    "q_rollup" -> ((s, d) => Analytics.rollupSummary(Tables.lineitem(s, d))),
-    // C13 — four-set GROUPING SETS lattice (marginals + grand total).
-    "q_grouping_sets" -> ((s, d) =>
-      Analytics.groupingSetsSummary(Tables.lineitem(s, d))),
-    // C14 — Q4-style decorrelated EXISTS → semi join priority count.
-    "q_exists_priority" -> ((s, d) =>
-      Analytics.priorityExists(Tables.orders(s, d), Tables.lineitem(s, d),
-        "2001-01-01 00:00:00", "2001-07-01 00:00:00", 0.07)),
-    // C15 — Q17-style decorrelated scalar-avg subquery (small-qty revenue).
-    "q_small_qty_revenue" -> ((s, d) =>
-      Analytics.smallQuantityRevenue(Tables.part(s, d), Tables.lineitem(s, d),
-        "Brand#23", 0.2)),
-    // C16 — Q13-style customer order-count distribution (zero tail kept).
-    "q_order_count_dist" -> ((s, d) =>
-      Analytics.orderCountDistribution(Tables.customer(s, d),
-        Tables.orders(s, d), "1-URGENT")),
-    // C17 — cumulative monthly revenue share per priority (exact cc).
-    "q_cumulative_share" -> ((s, d) =>
-      Analytics.cumulativeRevenue(Tables.orders(s, d),
-        Tables.lineitem(s, d))),
-    // C18 — Q7-style bilateral nation-pair volume by ship year.
-    "q_nation_volume" -> ((s, d) =>
-      Analytics.shippingVolume(Tables.nation(s, d), Tables.customer(s, d),
-        Tables.orders(s, d), Tables.lineitem(s, d), Tables.supplier(s, d),
-        "1996-01-01 00:00:00", "1997-12-31 23:59:59")),
-    // C19 — Q8-style nation market share of a part type per year.
-    "q_market_share" -> ((s, d) =>
-      Analytics.marketShare(Tables.nation(s, d), Tables.customer(s, d),
-        Tables.orders(s, d), Tables.lineitem(s, d), Tables.supplier(s, d),
-        Tables.part(s, d), "PROMO", "NATION_7")),
-    // C20 — Q10-style top-20 customers by returned-item revenue.
-    "q_returned_revenue" -> ((s, d) =>
-      Analytics.returnedItemRevenue(Tables.nation(s, d),
-        Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-        "1996-10-01 00:00:00", "1997-01-01 00:00:00")),
-    // C21 — Q14-style promo revenue share per ship month.
-    "q_promo_share" -> ((s, d) =>
-      Analytics.promoRevenueShare(Tables.part(s, d), Tables.lineitem(s, d),
-        "PROMO")),
-    // C22 — Q19-style disjunctive brand/size/quantity revenue.
-    "q_disjunctive_revenue" -> ((s, d) =>
-      Analytics.disjunctiveRevenue(Tables.part(s, d), Tables.lineitem(s, d))),
-    // C23 — Q22-style quiet well-funded customers by nation.
-    "q_idle_balance" -> ((s, d) =>
-      Analytics.idleCustomerBalance(Tables.nation(s, d),
-        Tables.customer(s, d), Tables.orders(s, d),
-        "2000-01-01 00:00:00")),
-    // C24 — Q11-style supplier global-value-share threshold.
-    "q_value_share" -> ((s, d) =>
-      Analytics.supplierValueShare(Tables.supplier(s, d),
-        Tables.lineitem(s, d), 80L)),
-    // C25 — Q15-style top-revenue supplier(s) over a quarter, ties kept.
-    "q_top_supplier" -> ((s, d) =>
-      Analytics.topSupplier(Tables.supplier(s, d), Tables.lineitem(s, d),
-        "1996-01-01 00:00:00", "1996-04-01 00:00:00")),
-    // C26 — trailing 3-month RANGE-frame revenue per priority.
-    "q_trailing_revenue" -> ((s, d) =>
-      Analytics.trailingRevenue(Tables.orders(s, d), Tables.lineitem(s, d))),
-    // C27 — Q9-style product-line profit by nation and order year.
-    "q_product_profit" -> ((s, d) =>
-      Analytics.productProfit(Tables.nation(s, d), Tables.orders(s, d),
-        Tables.lineitem(s, d), Tables.supplier(s, d), Tables.part(s, d),
-        "red")),
-    // C28 — Q16-style distinct-supplier count per part family.
-    "q_supplier_candidates" -> ((s, d) =>
-      Analytics.supplierCandidates(Tables.part(s, d), Tables.supplier(s, d),
-        Tables.lineitem(s, d))),
-    // C29 — Q21 essence: sole-late supplier on multi-supplier orders
-    // (late = shipped > 60 days after order date).
-    "q_waiting_supplier" -> ((s, d) =>
-      Analytics.waitingSuppliers(Tables.orders(s, d), Tables.lineitem(s, d),
-        Tables.supplier(s, d), lateDaysParam)),
-    // A18 — declarative constraint audit over lineitem (one scan) +
-    // referential orphan check, one report.
-    "q_constraint_audit" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val row = Lakehouse.constraintAudit(Tables.lineitem(s, d), Seq(
-        ("quantity_positive", col("l_quantity") <= 0),
-        ("discount_in_range", col("l_discount") < 0 || col("l_discount") > 1),
-        ("shipdate_not_null", col("l_shipdate").isNull),
-        ("price_positive", col("l_extendedprice") <= 0)))
-      val ref = Lakehouse.referentialViolations(Tables.lineitem(s, d),
-        "l_orderkey", Tables.orders(s, d), "o_orderkey", "orderkey_in_orders")
-      row.unionByName(ref
-        .select(col("constraint_name"), col("n_violations"),
-          col("total_rows"), col("pass")))
-        .orderBy(col("constraint_name"))
-    }),
-    "q_having" -> ((s, d) =>
-      Analytics.largeVolumeOrders(Tables.customer(s, d), Tables.orders(s, d),
-        Tables.lineitem(s, d), 210.0)),
-    "q_semi_join" -> ((s, d) =>
-      Analytics.suppliersWithShipments(Tables.supplier(s, d),
-        Tables.lineitem(s, d), 45.0)),
-    "q_percent_rank" -> ((s, d) => Analytics.pricePosition(Tables.part(s, d))),
-    // C12 — Q2-style groupwise-min join-back (cheapest shipper per part).
-    "q_min_cost" -> ((s, d) =>
-      Analytics.minCostSupplier(Tables.part(s, d), Tables.supplier(s, d),
-        Tables.lineitem(s, d), "Brand#13")),
-    "q_pivot" -> ((s, d) =>
-      Analytics.eventTypePivot(Tables.events(s, d),
-        Seq("click", "view", "purchase", "signup", "error"))),
-    "q_histogram" -> ((s, d) =>
-      Analytics.valueHistogram(Tables.events(s, d), 25.0)),
-    "q_corr_stats" -> ((s, d) => Features.corrStats(Tables.ticks(s, d))),
-    "q_minmax_scale" -> ((s, d) => Features.minMaxScale(Tables.ticks(s, d))),
-    "q_anti_join" -> ((s, d) =>
-      Analytics.customersWithoutOrders(Tables.customer(s, d),
-        Tables.orders(s, d).filter(
-          org.apache.spark.sql.functions.col("o_orderdate") >=
-            org.apache.spark.sql.functions.lit("2001-06-01 00:00:00").cast("timestamp")))),
-
-    // ---- A. Ingest & storage (SURVEY §2.A) ----
-    // A25 — run-tracking lineage (mlflow phase-tracker analog): as of
-    // the cutoff, each symbol's best validation run and — via the
-    // parent link — the train run's params + model artifact.
-    "q_run_history" -> ((s, d) =>
-      RunTracker.bestRunsAsOf(Tables.ticks(s, d), runCutoff)),
-    // A26 — pipeline phase-status table (main.py /status analog):
-    // per (symbol, day) cycle the train/val/test slice bounds +
-    // ok/error verdicts and the live session-window monitor row
-    // (error on a deployed-threshold breach — D83's rule).
-    "q_pipeline_status" -> ((s, d) =>
-      RunTracker.pipelineStatus(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // A28 — DVC-analog stage-lineage manifest: per pipeline stage the
-    // (input, params, output) fingerprints of the current run vs the
-    // as-of-cutoff prior run, with the cache/reproduce verdict.
-    "q_stage_lineage" -> ((s, d) =>
-      RunTracker.stageLineage(Tables.ticks(s, d), tensorSlots,
-        runCutoff, lineageParams, lineageParams,
-        cacheKey = Some(d))),
-    // MERGE-style upsert (CatalogOps.upsertPlan): every 97th order is
-    // updated (price doubled) and re-inserted under a shifted key;
-    // src marks kept/updated/inserted provenance.
-    "q_upsert" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val t = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-      val m = t.filter(col("o_orderkey") % 97 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val updates = m.unionByName(
-        m.withColumn("o_orderkey", col("o_orderkey") + 1000000000000L))
-      CatalogOps.upsertPlan(t, updates, Seq("o_orderkey"))
-        .withColumn("src", when(col("o_orderkey") >= 1000000000000L, "I")
-          .when(col("o_orderkey") % 97 === 0, "U").otherwise("K"))
-        .orderBy("o_orderkey")
-    }),
-    // A15 — SCD2 compaction: per-user value-tier version history.
-    "q_scd2" -> ((s, d) => Scd.scd2History(Tables.events(s, d))),
-    // E13 — bitemporal as-of: history as known at ingestion id 5000,
-    // attribute in effect mid-month.
-    "q_bitemporal" -> ((s, d) =>
-      Scd.bitemporalAsOf(Tables.events(s, d), bitemporalTxId,
-        validTsLit)),
-    // E20 — bitemporal restatement diff between two knowledge times.
-    "q_restatement" -> ((s, d) =>
-      Scd.bitemporalRestatement(Tables.events(s, d), bitemporalTxEarly,
-        bitemporalTxId, validTsLit)),
-    // A16 — CDC apply: error events are deletes, everything else an
-    // upsert; last writer (by event_id) wins per user.
-    "q_cdc_apply" -> ((s, d) => Scd.cdcApply(
-      Tables.events(s, d).select(
-        org.apache.spark.sql.functions.col("user_id").as("key"),
-        org.apache.spark.sql.functions.col("event_id").as("seq"),
-        org.apache.spark.sql.functions.when(
-          org.apache.spark.sql.functions.col("event_type") === "error", "D")
-          .otherwise("U").as("op"),
-        org.apache.spark.sql.functions.col("value")))),
-    "q_quality_scan" -> ((s, d) =>
-      Lakehouse.qualityScan(Tables.events(s, d), "event_type",
-        Seq("user_id", "value", "props"))),
-    // A27 — partition-skew report (ppm max-share + exact-int Gini).
-    "q_partition_skew" -> ((s, d) =>
-      Lakehouse.partitionSkew(Tables.events(s, d), "ts")),
-    "q_partition_stats" -> ((s, d) =>
-      Lakehouse.partitionStats(Tables.orders(s, d), "o_orderdate", "o_totalprice")),
-    "q_time_travel" -> ((s, d) =>
-      Lakehouse.snapshotAsOf(Tables.events(s, d),
-        org.apache.spark.sql.functions.col("ts"),
-        org.apache.spark.sql.functions.lit("2024-01-15 00:00:00").cast("timestamp"),
-        "event_type")),
-
-    "q_snapshot_log" -> ((s, d) =>
-      Lakehouse.snapshotHistory(Tables.events(s, d), "event_id", 2000L)),
-    // A14 — retention: expire all but the 3 newest snapshots (log audit;
-    // head state untouched, expired ids lose time travel only).
-    "q_snapshot_expire" -> ((s, d) =>
-      Lakehouse.expireSnapshots(Tables.events(s, d), "event_id", 2000L, 3)),
-    // E5 — nearest-event join (closest quote either side, ties back).
-    "q_nearest_join" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"))
-      TemporalJoins.nearestJoin(trades, quotes, "symbol", "ts",
-        "trade_id", "quote_id", Seq("bid"))
-    }),
-    // D18 — per-symbol beta vs the equal-weight per-second market.
-    "q_market_beta" -> ((s, d) => Features.marketBeta(Tables.ticks(s, d))),
-    // F32 — token-length histogram (64-token buckets).
-    "q_length_histogram" -> ((s, d) =>
-      CorpusPipeline.lengthHistogram(Tables.documents(s, d), 64)),
-    // F44 — pairwise source drift (exact-int TV distance, width 16).
-    "q_source_drift" -> ((s, d) =>
-      CorpusPipeline.sourceDrift(Tables.documents(s, d), 16)),
-    // F86 — per-source unigram KL to the corpus mixture.
-    "q_source_kl" -> ((s, d) =>
-      CorpusPipeline.sourceKl(Tables.documents(s, d))),
-    // F87 — per-source type-token ratio + hapax share.
-    "q_lexical_diversity" -> ((s, d) =>
-      CorpusPipeline.lexicalDiversity(Tables.documents(s, d))),
-    // F88 — k-anonymity audit over (source, lang, size-bucket).
-    "q_k_anonymity" -> ((s, d) =>
-      Curation.kAnonymityAudit(Tables.documents(s, d), kAnonK,
-        kAnonBucket)),
-    // F34 — curriculum phases: 10 stop-ratio quality tiers.
-    "q_curriculum" -> ((s, d) =>
-      CorpusPipeline.curriculumPhases(Tables.documents(s, d), 10)),
-    // Rollback to snapshot 2: history keeps every append AND gains the
-    // head `rollback` entry (Iceberg writes a snapshot; it never erases).
-    "q_rollback" -> ((s, d) =>
-      Lakehouse.rollbackHistory(Tables.events(s, d), "event_id", 2000L, 2L)),
-    // Diff snapshots 2 and 5 (as-of counts — ids beyond head compare
-    // against head, so the row is well-defined at every SF).
-    "q_snapshot_diff" -> ((s, d) =>
-      Lakehouse.diffSnapshots(Tables.events(s, d), "event_id", 2000L, 2L, 5L)),
-    "q_partitions_asof" -> ((s, d) =>
-      Lakehouse.partitionsAsOf(Tables.events(s, d), "event_id", 2000L, 2L,
-        "ts", "value")),
-    "q_ndv_profile" -> ((s, d) =>
-      Lakehouse.ndvProfile(Tables.events(s, d),
-        Seq("user_id", "event_type", "value"))),
-    "q_ann_ivf" -> ((s, d) =>
-      Vectors.ivfKnn(Tables.embeddings(s, d), 10, 5, 8)),
-    // F58 — recall@5 of the IVF index vs the exact scan (same params
-    // as q_ann_topk / q_ann_ivf, so the audit measures THAT index).
-    "q_ann_recall" -> ((s, d) =>
-      Vectors.annRecall(Tables.embeddings(s, d), 10, 5, 8)),
-    // F7c — recall@5 of the TRAINED-quantizer IVF (kmeans cells,
-    // q_kmeans's exact params) vs the same exact baseline; the
-    // trained-vs-convention comparison is q_ann_recall ⟂ this key.
-    "q_ann_ivf_trained" -> ((s, d) =>
-      Vectors.annRecallTrained(Tables.embeddings(s, d), 10, 5, 8)),
-    // F7d — the SERVED trained-IVF read path: centroids train ONCE
-    // per (session, corpus) via the fixture cache (at 100 TB an
-    // ingest-time artifact), the key prices assignment + probe scan
-    // only — the deployment's per-query cost, vs F7c's audit shape
-    // that deliberately re-prices training.
-    "q_ann_ivf_served" -> ((s, d) =>
-      Vectors.ivfKnnServed(Tables.embeddings(s, d),
-        servedIvfCentroids(s, d), 10, 5, 2)),
-    // F39b — recall@5 of the FULLY trained IVF-PQ (Lloyd coarse
-    // cells + per-subspace k-means codebook, nProbe=2) vs the exact
-    // squared-L2 scan; trained-vs-convention certified in VectorsSpec
-    // (ivfPqRecallOf over both variants).
-    "q_ivfpq_trained" -> ((s, d) =>
-      Vectors.ivfPqRecallTrained(Tables.embeddings(s, d), 10, 5)),
-    // F100 — Matryoshka audit: recall@5 of prefix-dim search vs the
-    // full-dim exact list, per prefix length.
-    "q_matryoshka_recall" -> ((s, d) =>
-      Vectors.matryoshkaRecall(Tables.embeddings(s, d), 10, 5,
-        matryoshkaDims)),
-
-    // ---- B. Tick cleaning (SURVEY §2.B) ----
-    "q_session_filter" -> ((s, d) => TickOps.sessionWindowFilter(Tables.ticks(s, d))),
-    "q_downsample_1s" -> ((s, d) => TickOps.secondDownsample(Tables.ticks(s, d))),
-    "q_daily_window_counts" -> ((s, d) => TickOps.dailyWindowCounts(Tables.ticks(s, d))),
-    "q_ffill" -> ((s, d) => TickOps.forwardFill(Tables.ticks(s, d), 10.0)),
-    "q_tick_dedup" -> ((s, d) => TickOps.tickDedup(Tables.ticks(s, d))),
-    "q_tz_shift" -> ((s, d) => TickOps.shiftTz(Tables.ticks(s, d), 2)),
-    "q_ohlc_bars" -> ((s, d) => TickOps.ohlcBars(Tables.ticks(s, d), "hour")),
-    "q_vwap" -> ((s, d) => TickOps.vwap(Tables.events(s, d))),
-
-    // ---- D. Feature engineering & anomaly pipeline (SURVEY §2.D) ----
-    "q_features_spread" -> ((s, d) => Features.tickFeatures(Tables.ticks(s, d))),
-    "q_rolling_stats" -> ((s, d) => Features.rollingStats(Tables.ticks(s, d), 5)),
-    "q_log_returns" -> ((s, d) => Features.logReturns(Tables.ticks(s, d))),
-    "q_anomaly_zscore" -> ((s, d) => Features.zScoreAnomaly(Tables.ticks(s, d), 3.0)),
-    "q_anomaly_threshold" -> ((s, d) =>
-      Features.anomalyThresholds(Tables.events(s, d), "value", Seq(92.0, 99.5))),
-    "q_resample_ticks" -> ((s, d) => Features.resampleWindow(Tables.ticks(s, d), 8)),
-    "q_resample_session" -> ((s, d) =>
-      Features.resampleSessionWindow(Tables.ticks(s, d), 8)),
-    "q_chrono_split" -> ((s, d) => Features.chronoSplit(Tables.ticks(s, d), 0.6, 0.2)),
-    "q_standard_scale" -> ((s, d) =>
-      Features.standardScale(Tables.events(s, d), "value", "event_id",
-        org.apache.spark.sql.functions.col("ts") <=
-          org.apache.spark.sql.functions.lit("2024-01-15 00:00:00").cast("timestamp"))),
-    "q_standard_scale_multi" -> ((s, d) =>
-      Features.standardScaleMulti(Tables.ticks(s, d), Seq("bid", "ask"),
-        "tick_id",
-        org.apache.spark.sql.functions.col("ts") <=
-          org.apache.spark.sql.functions.lit("2024-01-15 00:00:00").cast("timestamp"))),
-    "q_walk_forward" -> ((s, d) => Features.walkForward(Tables.ticks(s, d), 4, 5, 10, 3)),
-    // D69 — purged + embargoed walk-forward (leakage-controlled D9).
-    "q_purged_cv" -> ((s, d) =>
-      Features.purgedWalkForward(Tables.ticks(s, d), 4, 5, 10, 3, 2, 2)),
-    // D66 — windowed-tensor export: fixed-length scaled tick slots
-    // per (symbol, day, session window), the reference's ML handoff —
-    // registered as the scalar per-slot frame (one row per slot i);
-    // the ARRAY spelling (windowTensors) stays the library API but
-    // array cells are unhashable in pandas comparators (r12 driver).
-    "q_window_tensors" -> ((s, d) =>
-      Features.windowTensorRows(Tables.ticks(s, d), tensorSlots,
-        cacheKey = Some(d))),
-    // D67 — end-to-end per-symbol anomaly pipeline: session filter →
-    // window tensors → train-centroid error → p99 test-window flags.
-    "q_anomaly_pipeline" -> ((s, d) =>
-      Features.anomalyPipeline(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // D68 — test-phase evaluation table: per split, mean error and
-    // per-percentile thresholds + anomaly counts (test.py report).
-    "q_error_profile" -> ((s, d) =>
-      Features.errorProfile(Tables.ticks(s, d), tensorSlots,
-        cacheKey = Some(d))),
-    // D75 — ELM autoencoder: fixed dyadic hidden layer (softsign),
-    // per-symbol ridge output layer solved closed-form (unrolled
-    // Cholesky over exact int64 sums), p99 reconstruction flags.
-    "q_nn_recon" -> ((s, d) =>
-      Features.elmRecon(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // D84 — gradient-descent autoencoder (train.py:292-416 analog):
-    // fixed-epoch full-batch GD on the D66 slot tensors, driver-side
-    // weight updates over exact int64 gradient sums; output = loss
-    // curve + final weights + p99-flagged test windows.
-    "q_gd_autoencoder" -> ((s, d) =>
-      Features.gdAutoencoder(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // D85 — GD validation curve + early-stopping verdict (train.py's
-    // per-epoch val loss, best-model pick, patience stop).
-    "q_gd_valcurve" -> ((s, d) =>
-      Features.gdValCurve(Tables.ticks(s, d), tensorSlots,
-        patience = gdPatience, cacheKey = Some(d))),
-    // D76 — model-signal backtest: D67 anomaly flags enter, error
-    // recovery exits, exact-cent close-to-close P&L per symbol.
-    "q_signal_backtest" -> ((s, d) =>
-      Features.anomalySignalBacktest(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, exitFrac = signalExitFrac,
-        cacheKey = Some(d))),
-    // D77 — walk-forward model retrain: expanding-origin per-fold
-    // scaler/centroid/threshold re-fit, next-step out-of-sample
-    // scoring (README §9.2 retraining cycles). minTrain=1/step=1
-    // because the synthetic tape carries 1-5 session windows per
-    // symbol; deeper folds populate only where history allows.
-    "q_walkforward_model" -> ((s, d) =>
-      Features.walkForwardRetrain(Tables.ticks(s, d), tensorSlots,
-        folds = wfFolds, minTrain = wfMinTrain, step = wfStep,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // D78 — backtest performance report: hit rate, exact-cent P&L and
-    // max equity-curve drawdown over D76's per-window frame.
-    "q_backtest_report" -> ((s, d) =>
-      Features.backtestReport(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, exitFrac = signalExitFrac,
-        cacheKey = Some(d))),
-    // D79 — book-level roll-up: portfolio equity curve + max drawdown
-    // across symbols, best/worst contributors (min-id tie-break).
-    "q_book_report" -> ((s, d) =>
-      Features.bookReport(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, exitFrac = signalExitFrac,
-        cacheKey = Some(d))),
-    // D80 — execution-latency sensitivity: paper vs one-window-late
-    // P&L and the decay between them, exact cents.
-    "q_latency_sensitivity" -> ((s, d) =>
-      Features.latencySensitivity(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, exitFrac = signalExitFrac,
-        cacheKey = Some(d))),
-    // D81 — threshold sweep: the position machine at every candidate
-    // flag percentile, one error frame, |pcts| report rows.
-    "q_signal_sweep" -> ((s, d) =>
-      Features.signalSweep(Tables.ticks(s, d), tensorSlots, sweepPcts,
-        exitFrac = signalExitFrac, cacheKey = Some(d))),
-    // D82 — model-parameter manifest: centroid/scaler/threshold as a
-    // queryable table, one row per (symbol, slot).
-    "q_model_params" -> ((s, d) =>
-      Features.modelParams(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, cacheKey = Some(d))),
-    // D83 — staleness report: consecutive-breach runs over the window
-    // errors vs the deployed threshold, retrain alerts per G42's rule.
-    "q_staleness_report" -> ((s, d) =>
-      Features.stalenessReport(Tables.ticks(s, d), tensorSlots,
-        pct = reconFlagPct, consecutive = stalenessRun,
-        cacheKey = Some(d))),
-    "q_drawdown" -> ((s, d) => Features.drawdown(Tables.ticks(s, d))),
-    // D26 — time-under-water stretches per symbol (exact-int windows).
-    "q_drawdown_duration" -> ((s, d) =>
-      Features.drawdownDuration(Tables.ticks(s, d))),
-    "q_interarrival" -> ((s, d) => Features.interArrival(Tables.ticks(s, d))),
-    // D15 — per-(symbol, day) EWMA of the bid, α = 1/2.
-    "q_ewma" -> ((s, d) => Features.ewma(Tables.ticks(s, d))),
-    // D16 — lag-5 autocorrelation of the bid per symbol.
-    "q_autocorr" -> ((s, d) => Features.autocorr(Tables.ticks(s, d), 5)),
-    // D17 — realized volatility (sum of squared intraday log returns).
-    "q_realized_vol" -> ((s, d) => Features.realizedVol(Tables.ticks(s, d))),
-    // D42 — AR(1) mean-reversion half-life per symbol.
-    "q_mean_reversion" -> ((s, d) =>
-      Features.meanReversion(Tables.ticks(s, d))),
-    // D43 — volatility signature: RV across the sampling-scale ladder.
-    "q_vol_signature" -> ((s, d) =>
-      Microstructure.volSignature(Tables.ticks(s, d), sigScales)),
-    // B9 — tick-rule up/down/zero classification per symbol.
-    "q_tick_rule" -> ((s, d) => TickOps.tickRule(Tables.ticks(s, d))),
-    // B10 — quote-burst seconds above the per-symbol p90 rate.
-    "q_burst_detect" -> ((s, d) =>
-      TickOps.burstDetection(Tables.ticks(s, d), 0.90)),
-    // B11 — late-arrival audit replaying a ±10 min hash-jittered feed
-    // against a 60 s watermark (the watermark-sizing backtest).
-    "q_late_audit" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, lit, pmod, unix_micros}
-      val jitter = pmod(
-        pmod(col("tick_id"), lit(graft.functions.PortableText.P)) *
-          lit(2654435761L), lit(graft.functions.PortableText.P))
-        .%(lit(1200000000L)).-(lit(600000000L))
-      TickOps.lateArrivalAudit(Tables.ticks(s, d), 60000000L,
-        unix_micros(col("ts")) + jitter)
-    }),
-    // B12 — spike-tick repair: 50% jumps reverting against both
-    // neighbors flag + midpoint-repair (synthetic feed is iid-noisy,
-    // so both classes are dense at every threshold).
-    "q_spike_repair" -> ((s, d) =>
-      TickOps.spikeRepair(Tables.ticks(s, d), spikeBp)),
-    // D32 — order-flow sign persistence (zero-ticks transparent).
-    "q_sign_persistence" -> ((s, d) =>
-      Microstructure.signPersistence(Tables.ticks(s, d))),
-    // D34 — bipower variation + jump share per (symbol, day).
-    "q_bipower" -> ((s, d) =>
-      Microstructure.bipowerVariation(Tables.ticks(s, d))),
-    // D40 — realized semivariance halves + signed-jump variation.
-    "q_semivariance" -> ((s, d) =>
-      Microstructure.realizedSemivariance(Tables.ticks(s, d))),
-    // D41 — median realized variance (jump-robust IV) + jump share.
-    "q_medrv" -> ((s, d) =>
-      Microstructure.medianRealizedVariance(Tables.ticks(s, d))),
-    // D44 — BNS jump test: z-stat from RV/BV/tri-power quarticity.
-    "q_bns_jump" -> ((s, d) =>
-      Microstructure.bnsJumpTest(Tables.ticks(s, d))),
-    // D45 — Bouchaud price-response function R(lag) per symbol.
-    "q_price_response" -> ((s, d) =>
-      Microstructure.responseFunction(Tables.ticks(s, d), respLags)),
-    // D46 — LMF flow-persistence curve over the same lag ladder.
-    "q_flow_persistence" -> ((s, d) =>
-      Microstructure.flowPersistenceCurve(Tables.ticks(s, d), respLags)),
-    // D47 — hourly volume participation curve (exact int64 bps).
-    "q_participation" -> ((s, d) =>
-      Microstructure.participationCurve(Tables.events(s, d))),
-    // D48 — minute-of-day-adjusted anomaly scan (de-seasonalized D4).
-    "q_seasonal_anomaly" -> ((s, d) =>
-      Microstructure.seasonalAnomaly(Tables.ticks(s, d), seasonalZThr)),
-    // D49 — overnight vs intraday variance decomposition (French–Roll).
-    "q_overnight_intraday" -> ((s, d) =>
-      Microstructure.overnightIntraday(Tables.ticks(s, d))),
-    // D50 — TCA: sampled fills benchmarked against day VWAP, signed bp.
-    "q_vwap_slippage" -> ((s, d) =>
-      Microstructure.vwapSlippage(Tables.events(s, d), tcaFillEvery)),
-    // D51 — Newey–West long-run variance (Bartlett, L=3) + inflation.
-    "q_newey_west" -> ((s, d) =>
-      Microstructure.neweyWestVariance(Tables.ticks(s, d), nwMaxLag)),
-    // D52 — running-VWAP (participation-benchmark) slippage; the G26
-    // streaming twin carries the same two running sums as state.
-    "q_running_vwap" -> ((s, d) =>
-      Microstructure.runningVwapSlippage(Tables.events(s, d),
-        tcaFillEvery)),
-    // D53 — Ané–Geman clock comparison: time- vs volume-clock kurtosis.
-    "q_clock_kurtosis" -> ((s, d) =>
-      Microstructure.clockKurtosis(Tables.events(s, d), barQtyParam)),
-    // D55 — square-root-law fit: ln|slip| on ln(participation) slope.
-    "q_impact_exponent" -> ((s, d) =>
-      Microstructure.impactExponent(Tables.events(s, d), tcaFillEvery)),
-    // D55 over PLANTED-impact events (r15 verdict #1's D55 leg): the
-    // same operator on RichCorpus.eventsImpact's sqrt-law prices —
-    // the fitted exponent recovers the planted ~0.5 (median 0.52 at
-    // sf0.1) instead of the base corpus's uninformative noise fit.
-    // fillEvery=1: the one-day collapse leaves ~66 fills per symbol,
-    // all informative — sampling would re-starve the regression.
-    "q_impact_exponent_rich" -> ((s, d) =>
-      Microstructure.impactExponent(
-        RichCorpus.eventsImpact(Tables.events(s, d)), 1)),
-    // D56 — leverage-effect corr(move, next |move|) on exact cents.
-    "q_leverage_effect" -> ((s, d) =>
-      Microstructure.leverageEffect(Tables.ticks(s, d))),
-    // D58 — shock-recovery event study (D38's lookahead machinery).
-    "q_shock_recovery" -> ((s, d) =>
-      Features.shockRecovery(Tables.ticks(s, d), shockBpParam,
-        shockRecoverBp, tbHorizon)),
-    // D59 — cross-sectional reversal spread (portfolio sort, q=5).
-    "q_reversal_spread" -> ((s, d) =>
-      Microstructure.reversalSpread(Tables.ticks(s, d), sortQuantiles)),
-    // D60 — Engle–Granger pairwise cointegration screen on the daily
-    // close grid: hedge ratio, residual AR(1), half-life. Registered
-    // on the deterministic mod-cointSampleMod roster sample: the full
-    // screen is quadratic in symbols (r12's #1 bench head, 38 s /
-    // 1.12M pairs) and stays as the spec baseline; the full-roster
-    // path is D65's blocked screen. Per-pair values bit-identical.
-    "q_cointegration" -> ((s, d) =>
-      Microstructure.cointegrationScreenSampled(Tables.ticks(s, d),
-        cointSampleMod, Some(d))),
-    // D65 — blocked screen: LSH-banded candidate prune, exact fit on
-    // survivors only (the 100x-scale path for the quadratic D60).
-    "q_cointegration_blocked" -> ((s, d) =>
-      Microstructure.cointegrationScreenBlocked(Tables.ticks(s, d),
-        cointBands, cointBandBits, Some(d))),
-    // D62 — pairs-trade backtest on the symPairs roster: z-scored
-    // hedge spread, window state machine, P&L per pair.
-    "q_pairs_backtest" -> ((s, d) =>
-      Microstructure.pairsBacktest(Tables.ticks(s, d), symPairs,
-        pairsEnterZ, pairsExitZ, Some(d))),
-    // D63 — HAR-RV two-horizon regression (2x2 normal equations).
-    "q_har_rv" -> ((s, d) =>
-      Microstructure.harRv(Tables.ticks(s, d), harWeek)),
-    // D64 — volatility cones: rolling-RV quantile bands by horizon.
-    "q_vol_cones" -> ((s, d) =>
-      Microstructure.volCones(Tables.ticks(s, d), coneHorizons)),
-    // D57 — Clark MDH test: ln(day |move| mass) on ln(day volume).
-    "q_volume_elasticity" -> ((s, d) =>
-      Microstructure.volumeVolElasticity(Tables.events(s, d))),
-    // E17 — trailing-interval count join: orders per customer in the
-    // prior 90 strictly-earlier days.
-    "q_order_velocity" -> ((s, d) =>
-      TemporalJoins.orderVelocity(Tables.orders(s, d), velocityDays)),
-    // E18 — interval-union coverage: per-customer gaps-and-islands
-    // merge of [orderdate, +30d) activity intervals.
-    "q_interval_coverage" -> ((s, d) =>
-      TemporalJoins.intervalCoverage(Tables.orders(s, d),
-        coverageWindowDays)),
-    // E19 — event-path census: consecutive-transition Markov table.
-    "q_event_paths" -> ((s, d) =>
-      TemporalJoins.eventPaths(Tables.events(s, d), pathTopK)),
-    // B13 — TWAP per (symbol, day), next-tick holding intervals.
-    "q_twap" -> ((s, d) => TickOps.twap(Tables.ticks(s, d))),
-    // D61 — time-weighted quoted spread (+ flicker-bias contrast).
-    "q_tw_spread" -> ((s, d) => TickOps.twQuotedSpread(Tables.ticks(s, d))),
-    // D19 — Roll implied effective spread from serial covariance.
-    "q_roll_spread" -> ((s, d) => Microstructure.rollSpread(Tables.ticks(s, d))),
-    // D20 — Amihud illiquidity: avg |log return| per traded dollar.
-    "q_amihud" -> ((s, d) => Microstructure.amihud(Tables.events(s, d))),
-    // D21 — tick-rule signed order-flow imbalance per symbol-day.
-    "q_flow_imbalance" -> ((s, d) =>
-      Microstructure.flowImbalance(Tables.events(s, d))),
-    // D22 — Lo–MacKinlay variance ratio, q=4.
-    "q_variance_ratio" -> ((s, d) =>
-      Microstructure.varianceRatio(Tables.ticks(s, d), 4)),
-    // D24 — Kyle's lambda: price-impact OLS slope from exact int sums.
-    "q_kyle_lambda" -> ((s, d) =>
-      Microstructure.kyleLambda(Tables.events(s, d))),
-    // D36 — Lee-Ready: purchases are trades, click/view are quotes
-    // (the q_asof_forward split); mid test in doubled int cents.
-    "q_lee_ready" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"), col("value").as("price"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"),
-          (col("value") * 1.0002 + 0.01).as("ask"))
-      Microstructure.leeReady(trades, quotes)
-    }),
-    // D37 — effective spread / price improvement vs prevailing quote.
-    "q_effective_spread" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"), col("value").as("price"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"),
-          (col("value") * 1.0002 + 0.01).as("ask"))
-      Microstructure.effectiveSpread(trades, quotes)
-    }),
-    // D54 — Huang–Stoll decomposition: eff = realized + impact over
-    // the same trade/quote derivation as D37, horizon 5 trades.
-    "q_spread_decomp" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"), col("value").as("price"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"),
-          (col("value") * 1.0002 + 0.01).as("ask"))
-      Microstructure.spreadDecomposition(trades, quotes, rsHorizon)
-    }),
-    // D27 — Parkinson + Garman-Klass range volatility per symbol.
-    "q_range_vol" -> ((s, d) =>
-      Microstructure.rangeVolatility(Tables.ticks(s, d))),
-    // D28 — Corwin-Schultz high-low spread per (symbol, day-pair).
-    "q_cs_spread" -> ((s, d) =>
-      Microstructure.corwinSchultz(Tables.ticks(s, d))),
-    // D30 — volume bars: OHLC cut every 500 traded units.
-    "q_volume_bars" -> ((s, d) =>
-      Microstructure.volumeBars(Tables.events(s, d), barQtyParam)),
-    // D31 — VPIN toxicity on the 500-unit volume clock, 3-bucket window.
-    "q_vpin" -> ((s, d) =>
-      Microstructure.vpin(Tables.events(s, d), barQtyParam, vpinWindowBars)),
-    // D25 — Hurst exponent from the dyadic variance ladder.
-    "q_hurst" -> ((s, d) =>
-      Microstructure.hurstExponent(Tables.ticks(s, d))),
-    // D38 — triple-barrier labels: every 25th tick enters, ±8000 bp
-    // barriers, 40-tick horizon (all three classes present at every
-    // gate SF — probed).
-    "q_triple_barrier" -> ((s, d) =>
-      Features.tripleBarrier(Tables.ticks(s, d), tbEntryEvery, tbHorizon,
-        tbBarrierBp)),
-    // D70 — label-uniqueness sample weights over D38's entry grid.
-    "q_label_uniqueness" -> ((s, d) =>
-      Features.labelUniqueness(Tables.ticks(s, d), tbEntryEvery,
-        tbHorizon)),
-    // D71 — fixed-width fractional differentiation (FFD features).
-    "q_frac_diff" -> ((s, d) =>
-      Features.fracDiff(Tables.ticks(s, d), fracD, fracK)),
-    // D72 — combinatorial purged CV: every C(N,2) test-group pair.
-    "q_combinatorial_cv" -> ((s, d) =>
-      Features.combinatorialCv(Tables.ticks(s, d), cpcvGroups, 1)),
-    // D73 — vol-adaptive triple barrier: yesterday's realized vol
-    // sets today's profit-take/stop distance per symbol.
-    "q_vol_barrier" -> ((s, d) =>
-      Features.volAdaptiveBarrier(Tables.ticks(s, d), tbEntryEvery,
-        tbHorizon, 2)),
-    // D74 — PSI feature drift between the chrono train/test slices.
-    "q_psi_drift" -> ((s, d) =>
-      Features.psiDrift(Tables.ticks(s, d), psiBuckets)),
-    // D39 — realized skewness / excess kurtosis per (symbol, day).
-    "q_realized_moments" -> ((s, d) =>
-      Microstructure.realizedMoments(Tables.ticks(s, d))),
-    // D23 — intraday seasonality: |move| by minute of day.
-    "q_intraday_profile" -> ((s, d) =>
-      Microstructure.intradayProfile(Tables.ticks(s, d))),
-    // F30 — boilerplate share: fraction of a doc's distinct 3-grams
-    // occurring in other docs.
-    "q_gram_novelty" -> ((s, d) =>
-      TextDedup.boilerplateShare(Tables.documents(s, d), 3)),
-
-    // ---- E. Temporal joins & sessionization (SURVEY §2.E) ----
-    "q_asof_join" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"))
-      TemporalJoins.asOfJoin(trades, quotes, "symbol", "ts",
-        "trade_id", "quote_id", Seq("bid"))
-    }),
-    // E6 — FORWARD as-of: the next quote at-or-after each trade.
-    // E7 — lead-lag cross-correlation on the daily grid, lag 1 day.
-    "q_leadlag_corr" -> ((s, d) =>
-      TemporalJoins.leadLagCorr(Tables.ticks(s, d),
-        symPairs, "day", 1)),
-    // E9 — view→click→purchase funnel, greedy earliest chain, τ=1 day.
-    "q_funnel" -> ((s, d) =>
-      TemporalJoins.funnel(Tables.events(s, d), "view", "click",
-        "purchase", 86400000000L)),
-    // E15 — sequence match with negation: view → purchase within 1
-    // day and NO click strictly between.
-    "q_funnel_negation" -> ((s, d) =>
-      TemporalJoins.funnelWithout(Tables.events(s, d), "view",
-        "purchase", "click", 86400000000L)),
-    // E10 — per-symbol calendar coverage / missing-day report.
-    "q_calendar_coverage" -> ((s, d) =>
-      TemporalJoins.calendarCoverage(Tables.ticks(s, d))),
-    // E14 — cohort retention matrix: first-seen-day cohorts × day
-    // offsets, distinct active users + retention share.
-    "q_cohort_retention" -> ((s, d) =>
-      TemporalJoins.cohortRetention(Tables.events(s, d))),
-    // E16 — multi-table point-in-time feature join: purchases
-    // enriched with the latest click AND view values in ONE pass.
-    "q_pit_features" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      def leg(t: String) = ev.filter(col("event_type") === t)
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("id"), col("value").as("v"))
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("id"))
-      TemporalJoins.pointInTimeJoin(facts, leg("click"), leg("view"))
-    }),
-    // E11 — linear-interpolation gap fill onto the hourly grid.
-    "q_interp_grid" -> ((s, d) =>
-      TemporalJoins.interpolateGrid(Tables.ticks(s, d), "hour")),
-    // D33 — Hayashi-Yoshida async covariance, hourly overlap buckets.
-    "q_hy_cov" -> ((s, d) =>
-      TemporalJoins.hayashiYoshida(Tables.ticks(s, d),
-        symPairs, hyBucketSec)),
-    // D35 — Epps curve: grid corr swept over 1min/10min/1h/1day.
-    "q_epps_curve" -> ((s, d) =>
-      TemporalJoins.eppsCurve(Tables.ticks(s, d),
-        symPairs, eppsScales)),
-    // D29 — trailing 5-day rolling correlation per symbol pair.
-    "q_rolling_corr" -> ((s, d) =>
-      TemporalJoins.rollingPairCorr(Tables.ticks(s, d),
-        symPairs, rollCorrDays)),
-    // E12 — purchases assigned to their enclosing browsing session
-    // (sessions from non-purchase activity, 24 h gap); orphans NULL.
-    "q_session_assign" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val src = ev.filter(col("event_type") =!= "purchase")
-        .select(col("event_id").as("tick_id"),
-          col("user_id").as("symbol"), col("ts"))
-      val pts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("point_id"),
-          col("user_id").as("symbol"), col("ts"))
-      TemporalJoins.sessionAssign(src, pts, sessionGapSec)
-    }),
-    "q_asof_forward" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"))
-      TemporalJoins.asOfJoinForward(trades, quotes, "symbol", "ts",
-        "trade_id", "quote_id", Seq("bid"))
-    }),
-    // E4 — tolerance as-of: quotes older than 600 s must not price a
-    // trade (left flavor; this corpus yields fresh + stale + no-match).
-    "q_asof_tolerance" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"))
-      val quotes = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("quote_id"), col("value").as("bid"))
-      TemporalJoins.asOfJoinTolerance(trades, quotes, "symbol", "ts",
-        "trade_id", "quote_id", Seq("bid"), 600L)
-    }),
-    "q_range_join" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val ev = Tables.events(s, d)
-      val trades = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("symbol"), col("ts"),
-          col("event_id").as("trade_id"))
-      val clicks = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("symbol"), col("ts"))
-      TemporalJoins.rangeJoinCount(trades, clicks, "symbol", "ts",
-        "trade_id", 3600L)
-    }),
-    "q_sessionize" -> ((s, d) =>
-      TemporalJoins.sessionize(Tables.ticks(s, d), "symbol", "ts", 6 * 3600L)),
-    // E8 — co-trading session overlap for the E7 pair list, same gap.
-    "q_session_overlap" -> ((s, d) =>
-      TemporalJoins.sessionOverlap(Tables.ticks(s, d), "symbol", "ts",
-        6 * 3600L, symPairs)),
-
-    // ---- F. LLM-training-data ops (SURVEY §2.F) ----
-    "q_dedup_exact" -> ((s, d) => TextDedup.exactDedup(Tables.documents(s, d))),
-    // Connected components over minhash-band buckets: the "keep one
-    // doc per duplicate cluster" pipeline stage. Bipartite doc-bucket
-    // propagation — the pair graph is never materialized.
-    "q_dedup_clusters" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      // NULL-band_hash isolation + unordered-band rationale documented
-      // at the shared helper.
-      TextDedup.dedupClustersFromBuckets(docs,
-        TextDedup.minhashBucketAssignments(docs))
-    }),
-    // F91 — quality-aware canonical selection: longest cluster member
-    // survives (ties to smallest id), two-phase argmax.
-    "q_canonical_docs" -> ((s, d) =>
-      TextDedup.canonicalSelection(Tables.documents(s, d))),
-    // F50 — cluster-size distribution over the F13 clustering.
-    "q_cluster_sizes" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextDedup.clusterSizeProfile(
-        TextDedup.dedupClustersFromBuckets(docs,
-          TextDedup.minhashBucketAssignments(docs)))
-    }),
-    "q_dedup_minhash" -> ((s, d) => TextDedup.minHashBands(Tables.documents(s, d))),
-    "q_dedup_greedy" -> ((s, d) => TextDedup.greedyNearDup(Tables.documents(s, d))),
-    // F16b — source-stratified eval split (10% of each source).
-    "q_stratified_split" -> ((s, d) =>
-      CorpusPipeline.stratifiedSplit(Tables.documents(s, d), 10)),
-    // F31 — dedup survivorship: per-source doc/token cost of greedy
-    // near-dup.
-    "q_dedup_report" -> ((s, d) =>
-      TextDedup.dedupSurvivorship(Tables.documents(s, d))),
-    // F1b — cross-source duplication matrix. The synthetic corpus has
-    // near-dups but no EXACT cross-source copies, so the registry
-    // injects a deterministic 'mirror' dump (every 10th doc re-sourced,
-    // ids offset) — the mirrored-crawl situation the matrix detects;
-    // the oracle builds the identical union.
-    // F70 — source-similarity matrix: k-minhash estimate vs exact
-    // trigram-set Jaccard per source pair, with the error beside.
-    "q_source_similarity" -> ((s, d) =>
-      TextDedup.sourceSimilarity(Tables.documents(s, d), srcSimK)),
-    // F69 — near-dup leakage matrix over the same mirrored corpus as
-    // F1b (the raw corpus has no cross-source near-dups — probed).
-    "q_near_leakage" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val mirror = docs.where("doc_id % 10 = 0").selectExpr(
-        "doc_id + 1000000 AS doc_id", "text", "lang",
-        "'mirror' AS source", "n_chars")
-      TextDedup.nearDupLeakage(docs.unionByName(mirror))
-    }),
-    "q_dup_matrix" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val mirror = docs.where("doc_id % 10 = 0").selectExpr(
-        "doc_id + 1000000 AS doc_id", "text", "lang",
-        "'mirror' AS source", "n_chars")
-      TextDedup.dupMatrix(docs.unionByName(mirror))
-    }),
-    // F2d — incremental near-dup: every 5th doc plays the "incoming
-    // crawl", the rest the already-curated corpus.
-    // Single-scan form: existing/incoming are a predicate split of ONE
-    // table here, so the sketch is computed once and split after —
-    // verdicts bit-identical to the two-frame API (spec'd), corpus
-    // passes halved (r9 verdict #4).
-    "q_dedup_incremental" -> ((s, d) =>
-      TextDedup.incrementalNearDupSplit(Tables.documents(s, d),
-        org.apache.spark.sql.functions.expr("doc_id % 5 <> 0"))),
-    "q_dedup_simhash" -> ((s, d) => TextDedup.simHashSig(Tables.documents(s, d))),
-    // maxHamming=1 -> 2 pigeonhole bands of 16 bits (the production
-    // band width); the synthetic corpus is template-heavy, so higher
-    // radii balloon the pair set without testing anything new.
-    "q_dedup_simhash_pairs" -> ((s, d) =>
-      TextDedup.simHashPairs(TextDedup.simHashSig(Tables.documents(s, d)), 1)),
-    "q_dedup_ngram" -> ((s, d) =>
-      TextDedup.ngramJaccard(Tables.documents(s, d), 0.5)),
-    // F45 — asymmetric containment |A∩B|/|A| (subset-doc detection).
-    "q_containment" -> ((s, d) =>
-      TextDedup.containmentPairs(Tables.documents(s, d), 0.5)),
-    // F47 — Count-Min heavy hitters with exact audit columns.
-    "q_cms_heavy_hitters" -> ((s, d) =>
-      TextDedup.cmsHeavyHitters(Tables.documents(s, d), 20)),
-    // F51 — quantized-PMI collocation pairs (df-capped, presence).
-    "q_pmi_pairs" -> ((s, d) =>
-      TextDedup.pmiPairs(Tables.documents(s, d), 1000, 20, 3L)),
-    // F52 — training-mix audit vs declared target weights.
-    "q_mixture_audit" -> ((s, d) =>
-      CorpusPipeline.mixtureAudit(Tables.documents(s, d),
-        Seq(("src0", 2000L), ("src3", 3000L), ("src7", 1000L)))),
-    // F48 — BPE merge-pair statistics over the weighted vocabulary.
-    "q_bpe_pairs" -> ((s, d) =>
-      TextDedup.bpePairStats(Tables.documents(s, d), 20)),
-    // F53 — tokenizer fertility (tokens per char) per (lang, source).
-    "q_tokenizer_fertility" -> ((s, d) =>
-      CorpusPipeline.tokenizerFertility(Tables.documents(s, d))),
-    // F54 — corpus head-heaviness: top-20 share + Herfindahl index.
-    "q_token_concentration" -> ((s, d) =>
-      TextDedup.tokenConcentration(Tables.documents(s, d), 20)),
-    // F55 — min-token threshold sensitivity sweep per source.
-    "q_threshold_sweep" -> ((s, d) =>
-      CorpusPipeline.thresholdSweep(Tables.documents(s, d),
-        Seq(5L, 10L, 20L, 40L))),
-    // F56 — declared-vs-detected language confusion matrix.
-    "q_lang_confusion" -> ((s, d) =>
-      TextDedup.langConfusion(Tables.documents(s, d))),
-    "q_dedup_cosine" -> ((s, d) =>
-      Vectors.cosineDedup(Tables.embeddings(s, d), 0.05)),
-    // F49 — per-label centroid drift vs the global centroid.
-    "q_centroid_drift" -> ((s, d) =>
-      Vectors.centroidDrift(Tables.embeddings(s, d))),
-    // F60 — d×d gram matrix (upper triangle) in one collapsed pass.
-    "q_gram_matrix" -> ((s, d) =>
-      Vectors.gramMatrix(Tables.embeddings(s, d))),
-    // F61 — distributed PCA: top components via the fixed power-
-    // iteration cascade (driver eigen on the collapsed gram).
-    "q_pca_power" -> ((s, d) =>
-      Vectors.pcaPower(Tables.embeddings(s, d), pcaComps, pcaIters)),
-    // F65 — per-vector projection scores on the F61 basis.
-    "q_pca_project" -> ((s, d) =>
-      Vectors.pcaProject(Tables.embeddings(s, d), pcaComps, pcaIters)),
-    // F99 — PCA reconstruction-error anomaly scoring (the reference's
-    // autoencoder scorer, linear analog; exact-int flag threshold).
-    "q_recon_anomaly" -> ((s, d) =>
-      Vectors.reconAnomaly(Tables.embeddings(s, d), pcaComps, pcaIters,
-        64, reconFlagPct)),
-    "q_ann_topk" -> ((s, d) =>
-      Vectors.bruteForceKnn(Tables.embeddings(s, d), 10, 5)),
-    "q_ann_lsh" -> ((s, d) => Vectors.lshBuckets(Tables.embeddings(s, d), 8)),
-    "q_text_langid" -> ((s, d) => TextDedup.langId(Tables.documents(s, d))),
-    "q_text_quality" -> ((s, d) =>
-      TextDedup.qualityScore(Tables.documents(s, d),
-        Seq("the", "a", "of", "and", "to"))),
-    "q_token_count" -> ((s, d) => TextDedup.tokenCount(Tables.documents(s, d))),
-    // F35 — corpus-trained unigram-LM mean surprisal per document.
-    "q_lm_surprisal" -> ((s, d) =>
-      LangModel.unigramSurprisal(Tables.documents(s, d))),
-    // F36 — codepoint Shannon-entropy profile (native expression).
-    "q_char_entropy" -> ((s, d) => LangModel.charEntropy(Tables.documents(s, d))),
-    // F40 — conditional bigram-LM surprisal (the ≥2-gram quality rung).
-    "q_bigram_surprisal" -> ((s, d) =>
-      LangModel.bigramSurprisal(Tables.documents(s, d))),
-    // F66 — Kneser-Ney smoothed bigram surprisal (continuation counts).
-    "q_kn_surprisal" -> ((s, d) =>
-      LangModel.knSurprisal(Tables.documents(s, d), knDiscount)),
-    // F42 — top-256 vocab coverage / per-doc OOV rate.
-    "q_vocab_coverage" -> ((s, d) =>
-      LangModel.vocabCoverage(Tables.documents(s, d), 256)),
-    // F46 — DSIR-style quantized importance weights vs target source.
-    "q_importance_weights" -> ((s, d) =>
-      LangModel.importanceWeights(Tables.documents(s, d), "src3")),
-    // F41 — dedup-pair audit: exact Jaccard vs MinHash estimate over
-    // a deterministic 5% hash sample of the candidate pairs.
-    "q_dedup_audit" -> ((s, d) =>
-      TextDedup.dedupAudit(Tables.documents(s, d), samplePct = 5)),
-    // F85 — planted-mutation dedup recall benchmark (severity ladder).
-    "q_dedup_recall" -> ((s, d) =>
-      TextDedup.dedupRecallBench(Tables.documents(s, d),
-        recallSeverities)),
-    // F71 — dedup-threshold calibration curve (exact-int cutoffs).
-    // F71 and F74 both consume the FULL banded-candidate census;
-    // it is built once per session (TextDedup.pairCensus, a pinned
-    // checkpoint) and shared — identical values, one census cost
-    // (r12 measured the independent rebuilds at 18.6 s + 13.3 s).
-    "q_dedup_curve" -> ((s, d) =>
-      TextDedup.dedupThresholdCurve(Tables.documents(s, d),
-        dedupThrTenths,
-        Some(TextDedup.pairCensus(Tables.documents(s, d), d)))),
-    // F74 — LSH (bands × rows) S-curve planner over the candidate
-    // pairs' exact Jaccard distribution (shared census, see F71).
-    "q_lsh_planner" -> ((s, d) =>
-      TextDedup.lshPlanner(Tables.documents(s, d), lshPlanConfigs,
-        Some(TextDedup.pairCensus(Tables.documents(s, d), d)))),
-    // F37 — temperature-scaled (α=1/2) mixture sampling, budget 200.
-    "q_mixture_sample" -> ((s, d) =>
-      CorpusPipeline.mixtureSample(Tables.documents(s, d), 200L)),
-    // F38 — kNN-density outlier score: 100 targets, k=10.
-    "q_knn_density" -> ((s, d) =>
-      Vectors.knnDensity(Tables.embeddings(s, d), 100, 10)),
-    // F89 — filtered vector search: F6's top-k among label==3 only.
-    "q_ann_filtered" -> ((s, d) =>
-      Vectors.filteredKnn(Tables.embeddings(s, d), 10, 5, annFilterLabel)),
-    // F39 — IVF-PQ composed search: coarse cell prune + ADC rerank.
-    "q_ivfpq_search" -> ((s, d) =>
-      Vectors.ivfPqSearch(Tables.embeddings(s, d), 10, 5)),
-    "q_doc_fingerprint" -> ((s, d) => TextDedup.fingerprint(Tables.documents(s, d))),
-    // F11b — winnowing fingerprint selection (char 5-grams, window 8).
-    "q_winnow" -> ((s, d) =>
-      TextDedup.winnowFingerprints(Tables.documents(s, d), 5, 8)),
-    // F102 — content-defined chunking profile (Gear CDC, 64-cp mask).
-    "q_cdc_chunks" -> ((s, d) =>
-      TextDedup.cdcChunks(Tables.documents(s, d), cdcMaskBits)),
-    "q_text_repetition" -> ((s, d) =>
-      TextDedup.repetitionProfile(Tables.documents(s, d))),
-    // F9c — repeated-passage profile (duplicate word 3-grams).
-    "q_repeated_spans" -> ((s, d) =>
-      TextDedup.repeatedSpans(Tables.documents(s, d), 3)),
-    "q_token_freq" -> ((s, d) =>
-      TextDedup.tokenFrequency(Tables.documents(s, d), 20)),
-    // F94 — incremental vocab maintenance: base ⊎ delta merge; the
-    // oracle recomputes from the full corpus (merge == recompute).
-    "q_incr_vocab" -> ((s, d) =>
-      TextDedup.incrementalVocab(Tables.documents(s, d),
-        incrVocabSplit, incrVocabK)),
-    // F95 — duplication-graph source centrality (weighted PageRank).
-    "q_source_centrality" -> ((s, d) =>
-      TextDedup.sourceCentrality(Tables.documents(s, d),
-        centIters, centDamping)),
-    // F96 — token-mass-weighted WOR sample (Efraimidis–Spirakis,
-    // deterministic hash randomness).
-    "q_weighted_sample" -> ((s, d) =>
-      CorpusPipeline.weightedSample(Tables.documents(s, d), wsampleK)),
-    // F97 — held-out perplexity: train on the train split, score the
-    // val split, Laplace over the train vocabulary.
-    "q_heldout_ppl" -> ((s, d) =>
-      CorpusPipeline.heldOutPerplexity(Tables.documents(s, d))),
-    // F98 — Heaps'-law vocabulary-growth fit over corpus prefixes.
-    "q_heaps_fit" -> ((s, d) =>
-      TextDedup.heapsFit(Tables.documents(s, d), heapsBuckets)),
-    // F57 — Zipf-law OLS over the top-100 token spectrum.
-    "q_zipf_fit" -> ((s, d) =>
-      TextDedup.zipfFit(Tables.documents(s, d), zipfTopK)),
-    // F62 — maximal cross-doc duplicated token spans per document.
-    "q_dup_spans" -> ((s, d) =>
-      TextDedup.dupSpans(Tables.documents(s, d), dupSpanW)),
-    // F64 — rewrite docs with the duplicated spans excised.
-    "q_dup_excise" -> ((s, d) =>
-      TextDedup.dupSpanExcise(Tables.documents(s, d), dupSpanW)),
-    // F59 — the BPE trainer loop: 5 adaptive merge rounds.
-    "q_bpe_train" -> ((s, d) =>
-      TextDedup.bpeTrain(Tables.documents(s, d), bpeMergeRounds)),
-    // F63 — encode the corpus with the trained tokenizer.
-    "q_bpe_encode" -> ((s, d) =>
-      TextDedup.bpeEncode(Tables.documents(s, d), bpeMergeRounds)),
-    // F93 — BPE compression curve: token mass per merge rung.
-    "q_bpe_curve" -> ((s, d) =>
-      TextDedup.bpeCompressionCurve(Tables.documents(s, d),
-        bpeMergeRounds)),
-    // F14b — portable HLL over word 2-grams (m=32 registers).
-    "q_hll_ndv" -> ((s, d) => TextDedup.hllNdv(Tables.documents(s, d), 2)),
-    "q_term_saliency" -> ((s, d) =>
-      TextDedup.termSaliency(Tables.documents(s, d), 3)),
-    "q_json_extract" -> ((s, d) =>
-      Lakehouse.jsonExtractStats(Tables.events(s, d), "props", "$.k", "event_type")),
-    "q_group_percentile" -> ((s, d) =>
-      Features.groupPercentiles(Tables.ticks(s, d), Seq(0.5, 0.9))),
-    // F15–F17 — corpus-pipeline stages: quality filter with reason
-    // codes, deterministic hash split, n-gram decontamination.
-    "q_quality_filter" -> ((s, d) =>
-      CorpusPipeline.qualityFilter(Tables.documents(s, d))),
-    // F73 — hashed-feature linear classifier inference (broadcast
-    // weight table, exact-int margin, sign verdict).
-    "q_classifier_score" -> ((s, d) =>
-      CorpusPipeline.classifierScore(Tables.documents(s, d))),
-    // F92 — Naive Bayes quality-classifier TRAINING: rule-labeled
-    // corpus, Laplace-smoothed class counts, learned-vs-rule audit.
-    "q_nb_classifier" -> ((s, d) =>
-      LangModel.nbQualityClassifier(Tables.documents(s, d),
-        minTok = nbMinTok, minStopPct = nbMinStopPct)),
-    // F75 — token-budget waterfill: max-min fair allocation at the
-    // solved water level.
-    "q_waterfill" -> ((s, d) =>
-      CorpusPipeline.waterfillAllocation(Tables.documents(s, d),
-        waterfillPct)),
-    // F76 — KS drift test (one source vs rest) on exact length CDFs.
-    "q_ks_drift" -> ((s, d) =>
-      CorpusPipeline.ksDrift(Tables.documents(s, d))),
-    // F77 — hashed-TF doc vectors, verified via exact scalar profile.
-    "q_text_embed" -> ((s, d) =>
-      CorpusPipeline.textEmbedProfile(Tables.documents(s, d))),
-    // F81 — curation attribution: quality × near-dup joint verdicts
-    // per source (the drop Sankey).
-    "q_curation_matrix" -> ((s, d) =>
-      CorpusPipeline.curationAttribution(Tables.documents(s, d))),
-    // F83 — classifier-vs-rules calibration by margin bin.
-    "q_clf_calibration" -> ((s, d) =>
-      CorpusPipeline.classifierCalibration(Tables.documents(s, d))),
-    // F103 — exact tie-aware AUC of the margin vs the rule verdicts.
-    "q_clf_auc" -> ((s, d) =>
-      CorpusPipeline.classifierAuc(Tables.documents(s, d))),
-    // F104 — temperature-scaled mixture weight curve (sqrt ladder).
-    "q_mixture_temps" -> ((s, d) =>
-      CorpusPipeline.mixtureTemperatureCurve(Tables.documents(s, d))),
-    // F105 — the decontamination gram-width calibration sweep.
-    "q_decon_sweep" -> ((s, d) =>
-      CorpusPipeline.decontaminationSweep(Tables.documents(s, d),
-        deconSweepNs)),
-    // F80 — corpus snapshot delta: old = even ids, new = ids not
-    // divisible by 3 with %5 docs content-mutated — all four classes
-    // populated by construction.
-    "q_corpus_delta" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, concat, lit, when}
-      val docs = Tables.documents(s, d)
-      val oldSnap = docs.filter(col("doc_id") % 2 === 0)
-      val newSnap = docs.filter(col("doc_id") % 3 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-      CorpusPipeline.corpusDelta(oldSnap, newSnap)
-    }),
-    // F90 — release manifest: per-split counts + content checksum.
-    "q_release_manifest" -> ((s, d) =>
-      CorpusPipeline.releaseManifest(Tables.documents(s, d))),
-    "q_hash_split" -> ((s, d) =>
-      CorpusPipeline.hashSplit(Tables.documents(s, d))),
-    "q_decontaminate" -> ((s, d) =>
-      CorpusPipeline.decontaminate(Tables.documents(s, d))),
-    // F43 — graded contamination score (overlap fraction, not a flag).
-    "q_contamination_score" -> ((s, d) =>
-      CorpusPipeline.contaminationScore(Tables.documents(s, d))),
-    // F17c — Bloom prefilter for the same 5-gram decontamination split.
-    "q_bloom_prefilter" -> ((s, d) =>
-      CorpusPipeline.bloomPrefilter(Tables.documents(s, d))),
-    // F17b — semantic decontamination (embedding LSH + cosine).
-    "q_decontaminate_sem" -> ((s, d) =>
-      Vectors.semDecontaminate(Tables.embeddings(s, d), 0.05)),
-    "q_source_cap" -> ((s, d) =>
-      CorpusPipeline.capPerSource(Tables.documents(s, d), 10)),
-    "q_pack_sequences" -> ((s, d) =>
-      CorpusPipeline.packSequences(Tables.documents(s, d), 512, 4)),
-    // F67 — length-bucket packing audit: padding waste per bucket vs
-    // pad-to-max, exact int64 slots.
-    "q_length_buckets" -> ((s, d) =>
-      CorpusPipeline.lengthBucketAudit(Tables.documents(s, d), packWidths)),
-    "q_token_budget" -> ((s, d) =>
-      CorpusPipeline.tokenBudgetPerSource(Tables.documents(s, d), 1000L)),
-    // F29 — RAG chunking: 32-token windows, 8 shared between
-    // consecutive chunks.
-    "q_chunk_docs" -> ((s, d) =>
-      CorpusPipeline.chunkDocuments(Tables.documents(s, d), 32, 8)),
-    // F28 — inverted-index relevance search. 'dup' is the corpus's
-    // one rare token (df ~25 vs ~390 for the rest) so idf ordering is
-    // actually exercised; 'xyzzy' hits nothing (dropped by the df
-    // join, not scored zero).
-    // F68 — NDCG@k of the idf-weighted ranking vs the raw-tf ideal.
-    "q_ranking_audit" -> ((s, d) =>
-      Retrieval.rankingAudit(Tables.documents(s, d), auditQueries, auditK)),
-    "q_term_search" -> ((s, d) =>
-      Retrieval.termSearch(Tables.documents(s, d), "dup scan spark xyzzy", 15)),
-    // F101 — BM25 top-k: length-normalized lexical ranking (same
-    // query as F28 so the two rankers are directly comparable).
-    "q_bm25" -> ((s, d) =>
-      Retrieval.bm25Search(Tables.documents(s, d), "dup scan spark xyzzy", 15,
-        bm25K1, bm25B)),
-    // F33 — hybrid retrieval: top-20 lexical candidates re-ranked by
-    // cosine against vec 0's embedding (vec_id = doc_id, SURVEY §3).
-    "q_hybrid_search" -> ((s, d) =>
-      Retrieval.hybridSearch(Tables.documents(s, d), Tables.embeddings(s, d),
-        "dup scan spark xyzzy", 0L, 20, 10)),
-    // F22 — line-level boilerplate dedup. The synthetic corpus has no
-    // newlines, so the registry instantiates the SAME code path at
-    // token granularity (delim = ' '): tokens in more than half of
-    // all docs are the "boilerplate lines". CurationSpec drives the
-    // newline form on real multi-line documents.
-    "q_line_dedup" -> ((s, d) =>
-      Curation.lineDedup(Tables.documents(s, d), " ", 50)),
-    // F79 — per-source boilerplate report. Same delimiter note as
-    // q_line_dedup: the synthetic docs are single-line, so the
-    // registry splits on spaces (boiler "lines" = the source's
-    // template tokens); CurationSpec drives the newline form on real
-    // multi-line documents. dfPct probed: 30 flagged ~97% of lines
-    // (vacuous — template corpus); 80 splits 52/49/20% at the three
-    // SFs, two-sided everywhere.
-    "q_boilerplate" -> ((s, d) =>
-      Curation.boilerplateReport(Tables.documents(s, d), " ", 80)),
-    // r15 verdict #1 — the rich-corpus audit quartet: the SAME audit
-    // operators, run over RichCorpus's planted-structure derivation
-    // of the driver corpus (deterministic, oracle-priced), so their
-    // verdicts are non-degenerate: boilerplate share lands in the
-    // realistic 5-15% band, the sweep curves grade by source tier
-    // mix, source similarity shows the planted overlap spectrum, and
-    // Fisher separability exceeds 0.5 on the planted labels.
-    "q_boilerplate_rich" -> ((s, d) =>
-      Curation.boilerplateReport(
-        RichCorpus.docs(Tables.documents(s, d)), "\n", 30)),
-    "q_threshold_sweep_rich" -> ((s, d) =>
-      CorpusPipeline.thresholdSweep(
-        RichCorpus.docs(Tables.documents(s, d)), richSweepCuts)),
-    "q_source_similarity_rich" -> ((s, d) =>
-      TextDedup.sourceSimilarity(
-        RichCorpus.docs(Tables.documents(s, d)), srcSimK)),
-    "q_label_fisher_rich" -> ((s, d) =>
-      Vectors.labelSeparability(
-        RichCorpus.embeddings(Tables.embeddings(s, d)))),
-    // F2e — LSH recall-by-similarity on CONTROLLED-Jaccard planted
-    // dup families (keep/(16-keep) in {0.14..0.78}): the S-curve the
-    // band parameters are chosen against, measured on ground truth.
-    "q_dedup_spectrum" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextDedup.plantedDupRecall(RichCorpus.dupDocs(docs),
-        RichCorpus.dupPairs(docs))
-    }),
-    // F23 — PII scrub. The synthetic corpus is PII-free word soup, so
-    // the registry appends a deterministic contact line derived from
-    // (doc_id, source) before scrubbing — the redaction itself (and
-    // its cross-engine regex parity) is what's hash-checked; the
-    // oracle builds the identical line in SQL.
-    "q_pii_scrub" -> ((s, d) =>
-      Curation.piiScrub(withContactLine(Tables.documents(s, d)))),
-    // F24 — quantized k-means topic clustering (k=8, 2 assignment
-    // rounds, 1/32 fixed-point grid).
-    "q_kmeans" -> ((s, d) =>
-      Vectors.kmeansAssign(Tables.embeddings(s, d), 8, 2, 32)),
-    // F24b — topic-balanced sampling: the F18 cap keyed on the
-    // learned k-means cluster (cap=30 per cluster, hash order).
-    "q_cluster_cap" -> ((s, d) =>
-      Vectors.clusterBalancedSample(Tables.embeddings(s, d), 30)),
-    // F24c — per-cluster quality audit over the same assignment.
-    "q_cluster_audit" -> ((s, d) =>
-      Vectors.clusterAudit(Tables.embeddings(s, d), 8, 2, 32)),
-    // F25 — int8 scalar quantization + reconstruction-error profile.
-    "q_embed_quant" -> ((s, d) =>
-      Vectors.quantizeInt8(Tables.embeddings(s, d))),
-    // F72 — SemDeDup: k-means blocks + within-cluster cosine,
-    // drop-higher-id verdict at τ.
-    "q_semantic_dedup" -> ((s, d) =>
-      Vectors.semanticDedup(Tables.embeddings(s, d), semDedupTau)),
-    // F82 — per-dimension Fisher separability of the label classes.
-    "q_label_fisher" -> ((s, d) =>
-      Vectors.labelSeparability(Tables.embeddings(s, d))),
-    // F27 — product-quantization codes + ADC vs exact distance audit
-    // (8 subspaces x 16-entry codebooks, query vec 0).
-    "q_pq_codes" -> ((s, d) =>
-      Vectors.pqEncode(Tables.embeddings(s, d))),
-    // The pipeline's end product as ONE declarative plan: the
-    // materialized training slice = quality-kept ∧ not a near-dup ∧
-    // in the train split. Catalyst fuses the three stages' scans and
-    // drops their interior presentation sorts. (The synthetic corpus
-    // is template-generated, so greedy dedup keeps only ~2% of docs —
-    // tiny survivor counts here are the corpus, not a bug.)
-    "q_corpus_select" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, not}
-      val docs = Tables.documents(s, d)
-      val qf = CorpusPipeline.qualityFilter(docs).select("doc_id", "keep")
-      val dup = TextDedup.greedyNearDup(docs)
-      val split = CorpusPipeline.hashSplit(docs).select("doc_id", "split")
-      docs.select("doc_id", "lang", "source")
-        .join(qf, "doc_id").join(dup, "doc_id").join(split, "doc_id")
-        .filter(col("keep") && not(col("is_duplicate")) &&
-          col("split") === "train")
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
-    // F26 — the FULL curation pipeline as ONE declarative plan:
-    // contact-line inject → line-level boilerplate dedup (maxDfPct=80:
-    // the synthetic vocab is 31 tokens, 30 at df 75–80%, so this drops
-    // exactly the most common token corpus-wide — 50 would strip the
-    // whole vocabulary and empty the output) → PII scrub →
-    // quality filter ON THE CLEANED TEXT (minTokens=5; stopword rule
-    // disabled — stopwords are exactly what line-dedup removes) →
-    // not-a-near-dup (on raw text) → train split. Catalyst fuses six
-    // stages' scans; the emitted clean_text has boilerplate gone and
-    // PII redacted. Tiny survivor counts are the template corpus
-    // (see q_corpus_select), not a bug.
-    "q_corpus_curate" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, not}
-      val raw = Tables.documents(s, d)
-      val cleaned = Curation.lineDedup(withContactLine(raw), " ", 80)
-        .select(col("doc_id"), col("clean_text").as("text"))
-      // Materialization barrier (same contract as cosineDedup /
-      // ngramJaccard): the scrubbed frame feeds BOTH the quality
-      // filter and the output join — without the barrier, projection
-      // collapse inlines the whole line-dedup+scrub subtree into each
-      // consumer and evaluates it twice (measured ~2x at the sf1
-      // smoke). At real scale the curated text is the materialized
-      // product anyway; pinning it once is the honest plan.
-      // The scrub barrier and the near-dup admission are INDEPENDENT
-      // subtrees (scrubbed derives from cleaned, dup from raw) whose
-      // eager checkpoints otherwise chain serially — build them
-      // concurrently (the decontaminationSweep pool pattern; content
-      // identical either way).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (scrubbed, dup) =
-        try {
-          val scrubbedF = pool.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              override def call(): DataFrame = Curation.piiScrub(cleaned)
-                .select(col("doc_id"), col("clean_text").as("text"))
-                .localCheckpoint(true)
-            })
-          val dupF = pool.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              override def call(): DataFrame = TextDedup.greedyNearDup(raw)
-            })
-          (scrubbedF.get(), dupF.get())
-        } finally pool.shutdown()
-      val qf = CorpusPipeline.qualityFilter(scrubbed, 5, 0.65, 0.0)
-        .select("doc_id", "n_tokens", "keep")
-      val split = CorpusPipeline.hashSplit(raw).select("doc_id", "split")
-      raw.select("doc_id", "source")
-        .join(scrubbed.withColumnRenamed("text", "clean_text"), "doc_id")
-        .join(qf, "doc_id").join(dup, "doc_id").join(split, "doc_id")
-        .filter(col("keep") && not(col("is_duplicate")) &&
-          col("split") === "train")
-        .select("doc_id", "source", "n_tokens", "clean_text")
-        .orderBy("doc_id")
-    }),
-    // F12 — all three modalities decode REAL bytes (PPM/WAV/Y4M) into
-    // one long-format feature frame. Deterministic synthetic payloads
-    // (no binary fixtures ship in testdata); the per-row codec values
-    // are not SQL-expressible, so this key keeps the rows-only check —
-    // its hashable dual is q_media_summary below.
-    // F12 — full frame, e6-quantized into int64 per row so the driver
-    // hash-checks it against the independently re-derived fixture
-    // (mediaFixture below — formulas-only, no codec roundtrip).
-    "q_media_features" -> ((s, _) => Multimodal.featuresQuantized(s, 300)),
-    // F12b — the driver-checkable media oracle (VERDICT r9 #1): per
-    // feature, row count + exact int64 sum of the e6-quantized values.
-    // Deterministic by construction (integer payload formulas, integer
-    // codec sums, correctly-rounded IEEE ÷/√, HALF_UP quantization in
-    // int space before an order-independent integer sum); the oracle
-    // is the spec-written fixture table interpolated from the SAME
-    // constant MediaSummarySpec pins with hand-derived anchors.
-    "q_media_summary" -> ((s, _) => Multimodal.mediaSummary(s, 300)),
-    // F78 — media content dedup on the planted-duplicate lake: ground
-    // truth is by construction (keep ⟺ id < 96, groups of 2), so the
-    // verdict frame has a formula-generated oracle even though the
-    // codec math isn't SQL-expressible. nDistinct = 96 sits BELOW the
-    // audio generator's content period (samples vary only with
-    // key % 32 ⇒ audio keys collide at lcm(3,32) = 96 apart — the
-    // first oracle run at 150 caught exactly that as n_copies 4).
-    "q_media_dedup" -> ((s, _) =>
-      Multimodal.mediaDedup(Multimodal.syntheticDupMedia(s, 96))),
-
-    // ===== q_stream_* — the G-family run as REAL streaming queries
-    // over the sfDir tape (MemoryStream fed in tape order across
-    // micro-batches, memory sink hashed against the batch twin's
-    // DuckDB oracle — StreamRegistry's drive protocol; r14 verdict
-    // item #1). Windowed aggs run Complete over the bounded tape;
-    // keyed-state operators run Append exactly as deployed, with
-    // per-symbol sentinel ticks closing the final session windows.
-    // G1 — streaming 1 s session downsample (tie: lowest tick_id).
-    "q_stream_downsample" -> (StreamRegistry.streamDownsample(_, _)),
-    // G4 — streaming per-(symbol, day) tick counts + first/last bid.
-    "q_stream_window_counts" ->
-      (StreamRegistry.streamWindowCounts(_, _)),
-    // G8 — streaming hourly OHLC bars (batch tie-breaks).
-    "q_stream_ohlc" -> (StreamRegistry.streamOhlc(_, _)),
-    // G13 — streaming daily VWAP (exact-integer-cents formula).
-    "q_stream_vwap" -> (StreamRegistry.streamVwap(_, _)),
-    // G12 — per-tick tick-rule classes off one-double keyed state.
-    "q_stream_tick_classes" ->
-      (StreamRegistry.streamTickClasses(_, _)),
-    // G35 — per-tick drawdown points off the running-peak register.
-    "q_stream_drawdown" -> (StreamRegistry.streamDrawdown(_, _)),
-    // G3 — streaming exact dedup (md5 keyed state, first-in wins).
-    "q_stream_dedup_exact" -> (StreamRegistry.streamDedupExact(_, _)),
-    // G40 — live window-anomaly scoring with the batch-trained
-    // scaler/quantized-centroid/p99 band.
-    "q_stream_anomaly" -> ((s, d) =>
-      StreamRegistry.streamAnomaly(s, d, tensorSlots, reconFlagPct)),
-    // G43 — the batch-trained D84 autoencoder served live.
-    "q_stream_gd_scores" -> ((s, d) =>
-      StreamRegistry.streamGdScores(s, d, tensorSlots, 2, 4, 0.0625,
-        reconFlagPct)),
-    // G41 — the D76 backtest deployed live from the go-live date.
-    "q_stream_positions" -> ((s, d) =>
-      StreamRegistry.streamPositions(s, d, tensorSlots, reconFlagPct,
-        signalExitFrac, streamGoLive)),
-    // G42 — retrain alerts at the Nth consecutive p90 breach.
-    "q_stream_retrain" -> ((s, d) =>
-      StreamRegistry.streamRetrain(s, d, tensorSlots, retrainPct,
-        retrainConsecutive)),
-    // G5 — native session_window gap sessionization (5 min gap).
-    "q_stream_sessions" -> ((s, d) =>
-      StreamRegistry.streamSessions(s, d, "5 minutes")),
-    // G23 — the count-min cell grid as live aggregation state.
-    "q_stream_cms" -> (StreamRegistry.streamCms(_, _)),
-    // G14 — streaming CDC register, max-seq wins per key.
-    "q_stream_cdc" -> (StreamRegistry.streamCdc(_, _)),
-    // G18 — volume bars: closed bars only (the open tail lives in
-    // keyed state).
-    "q_stream_volume_bars" -> ((s, d) =>
-      StreamRegistry.streamVolumeBars(s, d, barQtyParam)),
-    // G20 — per-tick running TWAP (exact-integer half-up formula).
-    "q_stream_twap" -> (StreamRegistry.streamTwap(_, _)),
-    // G19 — one-tick-lookahead spike decisions (batch minus each
-    // symbol's final tick, still awaiting its successor).
-    "q_stream_spikes" -> ((s, d) =>
-      StreamRegistry.streamSpikes(s, d, spikeBp)),
-    // G22 — running realized moments, a point per move once var > 0.
-    "q_stream_moments" -> (StreamRegistry.streamMoments(_, _)),
-    // G26 — live TCA: fill-aligned running-VWAP slippage points.
-    "q_stream_running_vwap" -> ((s, d) =>
-      StreamRegistry.streamRunningVwap(s, d, tcaFillEvery)),
-    // G21 — triple-barrier labels at the deciding tick (batch minus
-    // feed-truncated horizon entries, which stay open in state).
-    "q_stream_triple_barrier" -> ((s, d) =>
-      StreamRegistry.streamTripleBarrier(s, d, tbEntryEvery, tbHorizon,
-        tbBarrierBp)),
-    // G24 — running price-response curve, a point per lag per tick.
-    "q_stream_response" -> ((s, d) =>
-      StreamRegistry.streamResponse(s, d, respLags)),
-    // G27 — learned-quality admission on the live doc feed.
-    "q_stream_classifier" -> (StreamRegistry.streamClassifier(_, _)),
-    // G31 — per-source HLL novelty snapshots, one per touched batch.
-    "q_stream_hll" -> (StreamRegistry.streamHll(_, _)),
-    // G30 — trailing-window order velocity served at arrival.
-    "q_stream_order_velocity" -> ((s, d) =>
-      StreamRegistry.streamOrderVelocity(s, d, velocityDays)),
-    // G38 — per-user path edges off the last-type register.
-    "q_stream_path_edges" -> (StreamRegistry.streamPathEdges(_, _)),
-    // G34 — release-manifest accumulation ladder per split.
-    "q_stream_manifest" -> (StreamRegistry.streamManifest(_, _)),
-    // G15 — burst flags vs the batch-trained p90 thresholds.
-    "q_stream_burst" -> ((s, d) =>
-      StreamRegistry.streamBurst(s, d, 0.90)),
-    // G25 — seasonal-anomaly scoring vs the offline baseline.
-    "q_stream_seasonal" -> ((s, d) =>
-      StreamRegistry.streamSeasonal(s, d, seasonalZThr)),
-    // G6 — stream-stream interval join (1 h lookback, 20th-tick
-    // trades vs the full quote tape).
-    "q_stream_interval_join" -> ((s, d) =>
-      StreamRegistry.streamIntervalJoin(s, d, "1 hour")),
-    // G11 — per-tick running EWMA (half-life recursion per day).
-    "q_stream_ewma" -> (StreamRegistry.streamEwma(_, _)),
-    // G29 — point-in-time feature serving, E16 row for row.
-    "q_stream_pit" -> (StreamRegistry.streamPit(_, _)),
-    // G28 — live KS drift per source vs the offline length CDF.
-    "q_stream_ks_drift" -> ((s, d) =>
-      StreamRegistry.streamKsDrift(s, d, 128)),
-    // G36 — running interval-union coverage per customer.
-    "q_stream_coverage" -> ((s, d) =>
-      StreamRegistry.streamCoverage(s, d, coverageWindowDays)),
-    // G17 — late flags on the B11 jittered-arrival replay.
-    "q_stream_late" -> ((s, d) =>
-      StreamRegistry.streamLate(s, d, 60000000L)),
-    // G16 — greedy funnel advances (view -> click -> purchase, 1 d).
-    "q_stream_funnel" -> ((s, d) =>
-      StreamRegistry.streamFunnel(s, d, 86400000000L)),
-    // G9 — token-budget admission on the hash walk.
-    "q_stream_token_budget" -> ((s, d) =>
-      StreamRegistry.streamTokenBudget(s, d, 1000L)),
-    // G10 — per-source cap admission on the hash walk.
-    "q_stream_source_cap" -> ((s, d) =>
-      StreamRegistry.streamSourceCap(s, d, 10)),
-    // G7 — streaming near-dup admission (first-writer band buckets).
-    "q_stream_near_dup" -> (StreamRegistry.streamNearDup(_, _)),
-    // G7b — streaming dup-spectrum: G7's admission over the planted-
-    // Jaccard dup corpus, flag rate per keep level (F2e's live twin).
-    "q_stream_dup_spectrum" -> (StreamRegistry.streamDupSpectrum(_, _)),
-    // G39 — vol-cone regime monitor at the 5-day horizon.
-    "q_stream_vol_cone" -> ((s, d) =>
-      StreamRegistry.streamVolCone(s, d, 5)),
-    // G32 — exactly-once-effect upsert sink audit (replayed batch).
-    "q_stream_upsert" -> (StreamRegistry.streamUpsertAudit(_, _)),
-    // G2 — Welford ±kσ anomaly flags, one row per tick.
-    "q_stream_welford" -> ((s, d) =>
-      StreamRegistry.streamWelford(s, d, welfordK)),
-    // G37 — pair-spread running z on the deterministic rank roster.
-    "q_stream_pairz" -> ((s, d) =>
-      StreamRegistry.streamPairZ(s, d, pairZCount)),
-    // G33 — event-time-timeout dormancy events (24 h quiet).
-    "q_stream_dormant" -> ((s, d) =>
-      StreamRegistry.streamDormant(s, d, dormantGapMs)),
-    // D86 — GARCH(1,1) day-close conditional-variance filter state.
-    "q_garch" -> ((s, d) => graft.operators.Microstructure
-      .garchFilter(Tables.ticks(s, d), garchOmega, garchAlpha,
-        garchBeta)),
-    // D87 — Kalman local-level day-close filter state.
-    "q_kalman" -> ((s, d) => graft.operators.Microstructure
-      .kalmanFilter(Tables.ticks(s, d), kalmanQ, kalmanR)),
-    // G44 — the GARCH filter live: a point per move with its
-    // variance forecast and 2σ-surprise verdict.
-    "q_stream_garch" -> ((s, d) =>
-      StreamRegistry.streamGarch(s, d, garchOmega, garchAlpha,
-        garchBeta)),
-    // G45 — the Kalman filter live: a point per tick with the
-    // post-update level and error variance.
-    "q_stream_kalman" -> ((s, d) =>
-      StreamRegistry.streamKalman(s, d, kalmanQ, kalmanR)),
-    // D88 — fixed-width fractional differencing per symbol.
-    "q_fracdiff" -> ((s, d) => graft.operators.Microstructure
-      .fracDiff(Tables.ticks(s, d), ffdD, ffdK)),
-    // D89 — symmetric CUSUM event filter per (symbol, day).
-    "q_cusum" -> ((s, d) => graft.operators.Microstructure
-      .cusumFilter(Tables.ticks(s, d), cusumH)),
-    // G46 — the CUSUM filter live: a point per move with registers
-    // and the running event count.
-    "q_stream_cusum" -> ((s, d) =>
-      StreamRegistry.streamCusum(s, d, cusumH)),
-    // G47 — FFD live: a point per tick once the lag ring fills; the
-    // sink equals the batch frame row for row.
-    "q_stream_ffd" -> ((s, d) =>
-      StreamRegistry.streamFfd(s, d, ffdD, ffdK)),
-    // D90 — two-state regime filter day-close posterior state.
-    "q_hmm_regime" -> ((s, d) => graft.operators.Microstructure
-      .hmmFilter(Tables.ticks(s, d), hmmParams)),
-    // D91 — cross-symbol market-mode PCA over daily cent returns.
-    "q_factor_pca" -> ((s, d) => graft.operators.Microstructure
-      .factorPca(Tables.ticks(s, d), factorSyms, factorComps,
-        factorIters)),
-    // D92 — per-symbol variance decomposition off the same factor fit.
-    "q_factor_resid" -> ((s, d) => graft.operators.Microstructure
-      .factorResiduals(Tables.ticks(s, d), factorSyms, factorComps,
-        factorIters)),
-    // D93 — RiskMetrics-λ grid: EWMA daily-vol forecast MSE/symbol.
-    "q_ewma_vol_grid" -> ((s, d) => graft.operators.Microstructure
-      .ewmaVolGrid(Tables.ticks(s, d), ewmaVolLambdas)),
-    // G48 — the regime filter live: a point per move with the
-    // post-update P(high) and its regime verdict.
-    "q_stream_hmm" -> ((s, d) =>
-      StreamRegistry.streamHmm(s, d, hmmParams)),
-    // G49 — streaming media-dedup admission over the F78 lake.
-    "q_stream_media" -> ((s, _) =>
-      StreamRegistry.streamMediaAdmission(s, 96)),
-
-    // ===== A-section side-effect audits (r14 verdict item #2):
-    // real on-disk state built in a throwaway location, the
-    // maintenance op run, and a LOGICAL audit frame returned whose
-    // cells a DuckDB oracle can derive from sfDir (layout constants
-    // pinned by the build parameters).
-    // A1 — CSV→parquet ingest round-trip audit per symbol.
-    "q_ingest_roundtrip" -> (CatalogAudits.ingestRoundTrip(_, _)),
-    // A29 — ORC interchange round-trip audit per symbol.
-    "q_orc_roundtrip" -> (CatalogAudits.orcRoundTrip(_, _)),
-    // A30 — JSONL interchange round-trip audit per source.
-    "q_jsonl_roundtrip" -> (CatalogAudits.jsonRoundTrip(_, _)),
-    // A11 — small-file compaction: lossless rewrite + planned layout.
-    "q_compaction_audit" -> (CatalogAudits.compactionAudit(_, _)),
-    // A17 — merged-schema read: per-generation backfill report.
-    "q_schema_evolution" -> (CatalogAudits.evolutionAudit(_, _)),
-    // A21 — orphan sweep: dry/delete/re-run counts + live rows.
-    "q_orphan_audit" -> (CatalogAudits.orphanAudit(_, _)),
-    // A22 — storage profile, logical slice (value/null counts).
-    "q_storage_profile" -> (CatalogAudits.storageProfileAudit(_, _)),
-  )
 
   /** F12 fixture — the media feature frame RE-DERIVED from the
     * generator's integer formulas alone (direct pixel/sample/frame
@@ -2218,7 +330,7 @@ object SparkEntry {
     * current-vs-prior manifests) without copy-pasting the spelling.
     * `tensorSlotsSqlG("", "")` is byte-equivalent to the historic
     * shared fragment (aliases aside). */
-  private def tensorSlotsSqlG(x: String, pred: String): String = {
+  private[graft] def tensorSlotsSqlG(x: String, pred: String): String = {
     val k = tensorSlots
     val and = if (pred.isEmpty) "" else s" AND ($pred)"
     s"""w$x AS (SELECT event_id AS tick_id, user_id AS symbol,
@@ -2282,13 +394,13 @@ object SparkEntry {
       |  FROM sx$x)""".stripMargin
   }
 
-  private lazy val tensorSlotsSql: String = tensorSlotsSqlG("", "")
+  private[graft] lazy val tensorSlotsSql: String = tensorSlotsSqlG("", "")
 
   /** D67/D68 shared oracle body: the slot chain plus the per-window
     * train-centroid error CTEs, ending in `er` (symbol, date, win,
     * split, u_err int64 micros). Generator form for the same reason
     * as [[tensorSlotsSqlG]]. */
-  private def windowErrSqlG(x: String, pred: String): String =
+  private[graft] def windowErrSqlG(x: String, pred: String): String =
     s"""${tensorSlotsSqlG(x, pred)},
       |tm$x AS (SELECT symbol, i, CAST(sum(u) AS BIGINT) AS su,
       |    count(*) AS n_tr
@@ -2306,119 +418,14 @@ object SparkEntry {
       |      AS BIGINT) AS u_err
       |  FROM tt$x GROUP BY 1, 2, 3, 4)""".stripMargin
 
-  private lazy val windowErrSql: String = windowErrSqlG("", "")
-
-  /** G40/G41/G42 oracle body: the D67 slot chain scored against the
-    * DEPLOYMENT's centroid — the per-(symbol, slot) train mean
-    * QUANTIZED to int64 micros (sign-split round of su/n_tr; a live
-    * model ships integer registers — `SessionScoring.windowUErr`'s
-    * `Map[Long, Seq[Long]]`), ending in `er` (symbol, date, win,
-    * split, n_ticks, u_err). Same shape as [[windowErrSqlG]] so
-    * [[positionChainSql]]/[[testThresholdSql]] compose on top. */
-  private lazy val quantWindowErrSql: String =
-    s"""$tensorSlotsSql,
-      |tmq AS (SELECT symbol, i,
-      |    CAST(CASE WHEN sum(u) >= 0
-      |      THEN floor(CAST(sum(u) AS DOUBLE) / count(*) + 0.5)
-      |      ELSE -floor(-(CAST(sum(u) AS DOUBLE) / count(*)) + 0.5)
-      |      END AS BIGINT) AS ubar
-      |  FROM uq WHERE split = 'train' GROUP BY 1, 2),
-      |ttq AS (SELECT q.symbol, q.date, q.win, q.split, q.n_ticks,
-      |    q.i,
-      |    CASE WHEN m.ubar IS NULL THEN 0.0
-      |      ELSE CAST(q.u - m.ubar AS DOUBLE)
-      |        * CAST(q.u - m.ubar AS DOUBLE)
-      |        / 1000000.0 / 1000000.0 END AS t
-      |  FROM uq q LEFT JOIN tmq m ON m.symbol = q.symbol
-      |    AND m.i = q.i),
-      |er AS (SELECT symbol, date, win, split,
-      |    min(n_ticks) AS n_ticks,
-      |    CAST(floor(list_reduce(list_prepend(0.0,
-      |      list(t ORDER BY i)), (a, b) -> a + b)
-      |      / $tensorSlots * 1000000.0 + 0.5) AS BIGINT) AS u_err
-      |  FROM ttq GROUP BY 1, 2, 3, 4)""".stripMargin
-
-  /** D84 oracle generator: the full-batch GD autoencoder training
-    * loop as an unrolled per-epoch CTE cascade (the F61/F59
-    * generated-oracle discipline). Every float the cascade produces
-    * comes from the SAME fragment texts and constants the Spark
-    * operator uses ([[Features.gdZExpr]] family, [[Features.gdWe0]]
-    * init, [[Features.gdUpdExpr]] update, [[Features.gdLossExpr]]
-    * loss), so DuckDB re-derives bit-identical weights, losses and
-    * flags. */
-  private def gdOracleSql(k: Int, h: Int, epochs: Int, lr: Double,
-                          pct: Double): String =
-    gdCascadeSql(k, h, epochs, lr, pct, withVal = false) +
-      gdReportSelectSql(k, h, epochs)
-
-  /** D85 oracle: the SAME cascade carrying the val split (gradients
-    * stay train-conditional — identical weights), then the curve:
-    * per-epoch losses at w_e (job e+1's pre-update pass / the final
-    * pass for w_E), running-min improvement windows, the patience
-    * counter and the best-epoch pick. */
-  private def gdValOracleSql(k: Int, h: Int, epochs: Int, lr: Double,
-                             patience: Int): String = {
-    val vlChain = s"(CAST(sl_va AS DOUBLE)/CAST(n_va AS DOUBLE)" +
-      s"/${Features.dlit(k.toDouble)}/1.0E6)"
-    val epochLossSelects = (1 until epochs).map { e =>
-      s"""SELECT symbol, $e AS epoch, sl, sl_va FROM g$e"""
-    } :+
-      s"""SELECT symbol, $epochs AS epoch, sl, sl_va FROM ftr"""
-    // pct only shapes the cascade's fth CTE, which this oracle's
-    // final SELECT never references — any value is equivalent here
-    gdCascadeSql(k, h, epochs, lr, 0.99, withVal = true) +
-      s""",
-      |vcnt AS (SELECT symbol, count(*) AS n_va FROM piv
-      |  WHERE split = 'val' GROUP BY 1),
-      |ftr AS (SELECT symbol,
-      |    CAST(sum(CASE WHEN split = 'train' THEN stq END) AS BIGINT)
-      |      AS sl,
-      |    CAST(sum(CASE WHEN split = 'val' THEN stq END) AS BIGINT)
-      |      AS sl_va
-      |  FROM fsq GROUP BY 1),
-      |vc AS (
-      |${epochLossSelects.mkString("\nUNION ALL\n")}
-      |),
-      |cl AS (SELECT v.symbol AS symbol, v.epoch AS epoch,
-      |    ${Features.gdLossExpr("sl", k)} AS train_loss,
-      |    CASE WHEN n_va > 0 AND sl_va IS NOT NULL THEN $vlChain END
-      |      AS val_loss
-      |  FROM vc v JOIN tc USING (symbol) LEFT JOIN vcnt USING (symbol)),
-      |wv1 AS (SELECT *, min(val_loss) OVER (PARTITION BY symbol
-      |    ORDER BY epoch
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |    AS prev_min FROM cl),
-      |wv2 AS (SELECT *, CASE WHEN val_loss IS NOT NULL
-      |    AND (prev_min IS NULL OR val_loss < prev_min) THEN epoch END
-      |    AS imp_e FROM wv1),
-      |wv3 AS (SELECT *, max(imp_e) OVER (PARTITION BY symbol
-      |    ORDER BY epoch) AS last_imp FROM wv2),
-      |se AS (SELECT symbol, COALESCE(min(CASE WHEN last_imp IS NOT NULL
-      |      AND epoch - last_imp >= $patience THEN epoch END), $epochs)
-      |    AS stop_epoch
-      |  FROM wv3 GROUP BY 1),
-      |bs AS (SELECT symbol, epoch AS best_epoch FROM (
-      |    SELECT c.symbol AS symbol, c.epoch AS epoch,
-      |      c.val_loss AS val_loss, row_number() OVER (
-      |      PARTITION BY c.symbol
-      |      ORDER BY c.val_loss ASC NULLS LAST, c.epoch) AS rk
-      |    FROM cl c JOIN se USING (symbol)
-      |    WHERE c.epoch <= se.stop_epoch) x
-      |  WHERE rk = 1 AND val_loss IS NOT NULL)
-      |SELECT c.symbol AS symbol, c.epoch AS epoch,
-      |  c.train_loss AS train_loss, c.val_loss AS val_loss,
-      |  COALESCE(c.epoch = bs.best_epoch, FALSE) AS is_best,
-      |  se.stop_epoch AS stop_epoch
-      |FROM cl c JOIN se USING (symbol) LEFT JOIN bs USING (symbol)
-      |ORDER BY symbol, epoch""".stripMargin
-  }
+  private[graft] lazy val windowErrSql: String = windowErrSqlG("", "")
 
   /** The D84 cascade (pivot, init weights, per-epoch forward/backward
     * + update CTEs, final scoring). `withVal` carries the val split
     * through the epoch stages — gradient sums stay train-conditional,
     * so the weight trajectory is IDENTICAL; the epoch aggregates
     * additionally price the epoch's val loss (`sl_va`). */
-  private def gdCascadeSql(k: Int, h: Int, epochs: Int, lr: Double,
+  private[graft] def gdCascadeSql(k: Int, h: Int, epochs: Int, lr: Double,
                            pct: Double, withVal: Boolean): String = {
     val piv = (0 until k)
       .map(i => s"max(CASE WHEN i = $i THEN u END) AS s$i")
@@ -2510,141 +517,13 @@ object SparkEntry {
       |  FROM fsq WHERE split = 'train' GROUP BY 1)""".stripMargin
   }
 
-  /** The D84 report's final SELECT (loss unpivot + final weights +
-    * flags) over [[gdCascadeSql]]'s CTEs. */
-  private def gdReportSelectSql(k: Int, h: Int, epochs: Int)
-      : String = {
-    val weNames = for (j <- 0 until h; i <- 0 until k)
-      yield (j, i, s"we_${j}_$i")
-    val wdNames = for (i <- 0 until k; j <- 0 until h)
-      yield (i, j, s"wd_${i}_$j")
-    val lossSelects = (0 until epochs).map { e =>
-      f"""SELECT g.symbol AS symbol, 'loss' AS kind, 'e$e%02d' AS a,
-        |    '' AS b, ${Features.gdLossExpr("sl", k)} AS value
-        |  FROM g$e%d g JOIN tc USING (symbol)""".stripMargin
-    } :+
-      f"""SELECT f.symbol AS symbol, 'loss' AS kind,
-        |    'e$epochs%02d' AS a, '' AS b,
-        |    ${Features.gdLossExpr("sl", k)} AS value
-        |  FROM fsl f JOIN tc USING (symbol)""".stripMargin
-    val weightSelects = weNames.map { case (j, i, n) =>
-      f"SELECT symbol, 'we' AS kind, 'j$j' AS a, 'i$i%02d' AS b," +
-        s" $n AS value FROM w$epochs"
-    } ++ wdNames.map { case (i, j, n) =>
-      f"SELECT symbol, 'wd' AS kind, 'i$i%02d' AS a, 'j$j' AS b," +
-        s" $n AS value FROM w$epochs"
-    }
-    val flagSelect =
-      s"""SELECT e2.symbol AS symbol, 'flag' AS kind, e2.date AS a,
-        |    e2.win AS b, CAST(e2.err_ppm AS DOUBLE)/1.0E6 AS value
-        |  FROM ferr e2 JOIN fth t USING (symbol)
-        |  WHERE e2.split = 'test'
-        |    AND CAST(e2.err_ppm AS DOUBLE) > t.qu""".stripMargin
-    s"""
-      |SELECT * FROM (
-      |${(lossSelects ++ weightSelects :+ flagSelect)
-        .mkString("\nUNION ALL\n")}
-      |) ORDER BY symbol, kind, a, b""".stripMargin
-  }
-
-  /** A28 oracle generator: BOTH manifests' slot chains via
-    * [[windowErrSqlG]] (suffix "" = current, "p" = as-of prior), the
-    * five content-fp aggregates per manifest, the stage-DAG ladder as
-    * sequential CTE stages, and the 6-row verdict union. Params fps
-    * are compile-time constants ([[RunTracker.lineageParamsFp]] —
-    * the same function the operator folds). */
-  private def stageLineageOracleSql(cutoff: String,
-                                    priorParams: Map[String, Long],
-                                    curParams: Map[String, Long])
-      : String = {
-    val P = graft.functions.PortableText.P
-    def pf(m: Map[String, Long])(st: String): Long =
-      RunTracker.lineageParamsFp(m(st))
-    val pc = pf(curParams) _; val pp = pf(priorParams) _
-    val pred = s"CAST(date_trunc('day', ts) AS DATE) <= DATE '$cutoff'"
-    def fpCtes(x: String): String =
-      s"""fc$x AS (SELECT
-        |    CAST(COALESCE(SUM(((tick_id * 31 + cents) % $P + $P) % $P),
-        |      0) % $P AS BIGINT) AS raw,
-        |    CAST(COALESCE(SUM(CASE WHEN (hour(ts) = 7 OR hour(ts) = 13)
-        |        AND minute(ts) >= 50
-        |      THEN ((tick_id * 31 + cents) % $P + $P) % $P END), 0) % $P
-        |      AS BIGINT) AS clean
-        |  FROM rawc$x),
-        |fs$x AS (SELECT CAST(COALESCE(SUM(
-        |    ((symbol * 8191 + i * 127 + u) % $P + $P) % $P), 0) % $P
-        |    AS BIGINT) AS v FROM uq$x),
-        |ft$x AS (SELECT CAST(COALESCE(SUM(
-        |    ((symbol * 8191 + i * 127 + su * 31 + n_tr) % $P + $P)
-        |      % $P), 0) % $P AS BIGINT) AS v FROM tm$x),
-        |fe$x AS (SELECT CAST(COALESCE(SUM(
-        |    ((symbol * 8191 + u_err) % $P + $P) % $P), 0) % $P
-        |    AS BIGINT) AS v FROM er$x),
-        |lad0$x AS (SELECT fc$x.raw AS raw, fc$x.clean AS clean,
-        |    fs$x.v AS slots, ft$x.v AS train, fe$x.v AS err
-        |  FROM fc$x, fs$x, ft$x, fe$x)""".stripMargin
-    def ladder(x: String, p: String => Long): String =
-      s"""l1$x AS (SELECT *,
-        |    (raw * 961 + raw * 31 + ${p("ingest")}) % $P AS o_ingest
-        |  FROM lad0$x),
-        |l2$x AS (SELECT *,
-        |    (o_ingest * 961 + clean * 31 + ${p("clean")}) % $P
-        |      AS o_clean FROM l1$x),
-        |l3$x AS (SELECT *,
-        |    (o_clean * 961 + slots * 31 + ${p("features")}) % $P
-        |      AS o_features FROM l2$x),
-        |l4$x AS (SELECT *,
-        |    (o_features * 961 + train * 31 + ${p("train")}) % $P
-        |      AS o_train FROM l3$x),
-        |l5$x AS (SELECT *,
-        |    (o_train * 31 + o_features) % $P AS i_eval FROM l4$x),
-        |lad$x AS (SELECT *,
-        |    (i_eval * 961 + err * 31 + ${p("evaluate")}) % $P
-        |      AS o_eval FROM l5$x)""".stripMargin
-    def vrow(ord: Int, st: String, in: String, out: String,
-             pin: String): String = {
-      val sameP = if (pc(st) == pp(st)) "TRUE" else "FALSE"
-      s"""SELECT $ord AS stage_ord, '$st' AS stage,
-        |  CAST($in AS BIGINT) AS input_fp,
-        |  CAST(${pc(st)} AS BIGINT) AS params_fp,
-        |  CAST($out AS BIGINT) AS output_fp,
-        |  CAST($pin AS BIGINT) AS prior_input_fp,
-        |  CAST(${pp(st)} AS BIGINT) AS prior_params_fp,
-        |  CASE WHEN CAST($in AS BIGINT) = CAST($pin AS BIGINT)
-        |    AND $sameP THEN 'cache' ELSE 'reproduce' END AS verdict
-        |FROM lad c, ladp p""".stripMargin
-    }
-    val rows = Seq(
-      vrow(0, "schema", "0", pc("schema").toString, "0"),
-      vrow(1, "ingest", "c.raw",
-        s"(c.raw * 961 + c.raw * 31 + ${pc("ingest")}) % $P", "p.raw"),
-      vrow(2, "clean", "c.o_ingest", "c.o_clean", "p.o_ingest"),
-      vrow(3, "features", "c.o_clean", "c.o_features", "p.o_clean"),
-      vrow(4, "train", "c.o_features", "c.o_train", "p.o_features"),
-      vrow(5, "evaluate", "c.i_eval", "c.o_eval", "p.i_eval")
-    ).mkString("\nUNION ALL\n")
-    s"""WITH ${windowErrSqlG("", "")},
-      |${windowErrSqlG("p", pred)},
-      |rawc AS (SELECT event_id AS tick_id, ts,
-      |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents
-      |  FROM events),
-      |rawcp AS (SELECT * FROM rawc WHERE $pred),
-      |${fpCtes("")},
-      |${fpCtes("p")},
-      |${ladder("", pc)},
-      |${ladder("p", pp)}
-      |SELECT * FROM (
-      |$rows
-      |) ORDER BY stage_ord""".stripMargin
-  }
-
   /** D76-family shared oracle fragments (r13 review dedup): the
     * session-close collapse and the position-machine CTE chain —
     * ONE spelling interpolated into all five trading-layer duals
     * (q_signal_backtest / q_backtest_report / q_book_report /
     * q_latency_sensitivity / q_signal_sweep), so a fix can never
     * desynchronize the copies. */
-  private lazy val sessionClosesSql: String =
+  private[graft] lazy val sessionClosesSql: String =
     s"""closes AS (SELECT user_id AS symbol,
       |    strftime(ts, '%Y-%m-%d') AS date,
       |    CASE WHEN hour(ts) = 7 AND minute(ts) >= 50 THEN 'morning'
@@ -2662,7 +541,7 @@ object SparkEntry {
     * threshold CTE join (plain `th` or the sweep's `thr3 t`),
     * `extraBbCols` its projected columns, `part` the machine's
     * partition keys, `extraPpCols` optional extra lag columns. */
-  private def positionChainSql(thrJoin: String, extraBbCols: String,
+  private[graft] def positionChainSql(thrJoin: String, extraBbCols: String,
                                part: String,
                                extraPpCols: String = "",
                                bbPred: String = "er.split = 'test'")
@@ -2696,8762 +575,23 @@ object SparkEntry {
       |  FROM ps WINDOW w AS (PARTITION BY $part ORDER BY date,
       |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END))""".stripMargin
 
-  private lazy val testThresholdSql: String =
+  private[graft] lazy val testThresholdSql: String =
     s"""th AS (SELECT symbol, quantile_cont(u_err, $reconFlagPct) AS qu
       |  FROM er WHERE split = 'test' GROUP BY 1)""".stripMargin
 
-  val ccOracleRounds = 6        // unrolled min-label rounds (sf0.1's
-                                // giant component converges in 3)
+  /** Every registry key, one record per key in the SURVEY family
+    * objects under `graft.registry`; built once per JVM, and a name
+    * declared twice fails the build here. */
+  private lazy val registry: Map[String, Key] = Key.byName(
+    IngestKeys.keys ++ CleaningKeys.keys ++ AnalyticsKeys.keys ++
+      FeatureKeys.keys ++ TemporalKeys.keys ++ CorpusKeys.keys ++
+      StreamingKeys.keys)
 
-  /** F13-family oracle CC: GENERATED unrolled min-label rounds over
-    * the `edges` CTE, replacing the transitive-closure recursive CTE
-    * whose intermediate state is O(|component|²) — on sf0.1's 7.7M-
-    * edge near-complete dup graph the closure never finished (the
-    * round-12 full-registry sweep found it), while min-label
-    * propagation converges in 3 measured rounds (6 unrolled = 2×
-    * margin; NON-convergence surfaces as a hash mismatch, never a
-    * silent pass). Ends in `<out>` (doc_id, cluster). */
-  private def ccLabelsSql(out: String): String = {
-    val rounds = (1 to ccOracleRounds).map { r =>
-      s"""l$r AS MATERIALIZED (SELECT l.doc_id,
-        |    least(min(l.lbl), coalesce(min(n.lbl), min(l.lbl))) AS lbl
-        |  FROM l${r - 1} l LEFT JOIN edges e ON e.doc_a = l.doc_id
-        |    LEFT JOIN l${r - 1} n ON n.doc_id = e.doc_b
-        |  GROUP BY l.doc_id)""".stripMargin
-    }.mkString(",\n")
-    s"""l0 AS MATERIALIZED (SELECT doc_id, doc_id AS lbl FROM documents),
-      |$rounds,
-      |$out AS (SELECT doc_id, lbl AS cluster FROM l$ccOracleRounds)""".stripMargin
-  }
+  /** Key → Spark builder over `(session, sfDir)`. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, k) => n -> k.build }
 
-  def oracleSql: Map[String, String] = Map(
-    // F12 — VALUES table interpolated from the formulas-only
-    // re-derivation (mediaFixture): the codec path and the fixture
-    // must agree cell-for-cell, and the driver hash enforces it.
-    "q_media_features" ->
-      s"""SELECT * FROM (VALUES ${mediaFixture(300).map {
-           case (id, f, q) =>
-             s"(CAST($id AS BIGINT), '$f', CAST($q AS BIGINT))"
-         }.mkString(", ")})
-        |  AS t(media_id, feature, value_q)
-        |ORDER BY media_id, feature""".stripMargin,
-    // F12b — spec-written fixture table (codec math isn't SQL-
-    // expressible; the summary IS deterministic integers, so the
-    // oracle is the same constant the operator must reproduce and
-    // MediaSummarySpec anchors by hand — one spelling, three readers).
-    "q_media_summary" ->
-      s"""SELECT * FROM (VALUES ${Multimodal.mediaSummaryFixture.map {
-           case (f, n, sq) =>
-             s"('$f', CAST($n AS BIGINT), CAST($sq AS BIGINT))"
-         }.mkString(", ")})
-        |  AS t(feature, n_rows, sum_q)
-        |ORDER BY feature""".stripMargin,
-    // F78 — media dedup on the planted-dup lake: the oracle IS the
-    // construction formula (kind by id % 3 — 96 ≡ 0 mod 3 keeps the
-    // replica aligned; keep ⟺ id < 96; every content group size 2,
-    // which HOLDS only below the audio content period — see the
-    // registry note). A codec/fingerprint corruption flips keep bits
-    // or n_copies and goes red — a real check despite no SQL codec
-    // math.
-    // G49 — the F78 construction formula: the tape is id-ordered, so
-    // first-arrival == min-id == the planted keep rule.
-    "q_stream_media" ->
-      """SELECT r AS media_id,
-        |  CASE WHEN r % 3 = 1 THEN 'image'
-        |       WHEN r % 3 = 2 THEN 'audio'
-        |       ELSE 'video' END AS kind,
-        |  r < 96 AS admitted
-        |FROM range(192) t(r) ORDER BY media_id""".stripMargin,
-    "q_media_dedup" ->
-      """SELECT r AS media_id,
-        |  CASE WHEN r % 3 = 1 THEN 'image'
-        |       WHEN r % 3 = 2 THEN 'audio'
-        |       ELSE 'video' END AS kind,
-        |  CAST(2 AS BIGINT) AS n_copies,
-        |  r < 96 AS keep
-        |FROM range(192) t(r) ORDER BY media_id""".stripMargin,
-    // C30 — Q6 essence: every predicate in the WHERE, one aggregate.
-    "q_forecast_revenue" ->
-      s"""SELECT
-        |  round(sum(l_extendedprice * l_discount), 4) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '$q6Year-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '${q6Year + 1}-01-01 00:00:00'
-        |  AND l_discount >= $q6DiscLo AND l_discount <= $q6DiscHi
-        |  AND l_quantity < $q6MaxQty""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity),4) AS sum_qty,
-        |  round(sum(l_extendedprice),4) AS sum_base_price,
-        |  round(sum(l_extendedprice*(1.0-l_discount)),4) AS sum_disc_price,
-        |  round(avg(l_quantity),4) AS avg_qty,
-        |  round(avg(l_discount),4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_agg" ->
-      """SELECT o_orderkey, o_orderdate, o_orderpriority,
-        |  round(sum(l_extendedprice*(1.0-l_discount)),4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_multi_join" ->
-      """SELECT n_name,
-        |  round(sum(l_extendedprice*(1.0-l_discount)),4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_topk_per_group" ->
-      """SELECT * FROM (
-        |  SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice,
-        |    row_number() OVER (PARTITION BY p_brand
-        |      ORDER BY p_retailprice DESC, p_partkey) AS rnk
-        |  FROM part) t
-        |WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin,
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag,'ALL') AS returnflag,
-        |  coalesce(l_linestatus,'ALL') AS linestatus,
-        |  round(sum(l_quantity),4) AS sum_qty, count(*) AS cnt
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    // C14 — the EXISTS spelled natively; DuckDB decorrelates it to
-    // the same semi join the Spark plan declares.
-    "q_exists_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '2001-07-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey AND l_discount > 0.07)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    // C15 — the correlated scalar subquery spelled natively; the avg is
-    // rounded BEFORE the compare on both sides (derived-from-rounded rule).
-    "q_small_qty_revenue" ->
-      """SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN (SELECT l_partkey AS a_partkey,
-        |        round(avg(l_quantity), 4) AS avg_qty
-        |      FROM lineitem JOIN part ON l_partkey = p_partkey
-        |      WHERE p_brand = 'Brand#23'
-        |      GROUP BY l_partkey) a ON l_partkey = a_partkey
-        |WHERE p_brand = 'Brand#23'
-        |  AND l_quantity < 0.2 * avg_qty""".stripMargin,
-    // C17 — revenue in exact int64 centi-cents → every sum (monthly,
-    // running, partition total) order-free; window sums CAST AS BIGINT
-    // (the r8 HUGEINT rule); share one division of exact ints.
-    "q_cumulative_share" ->
-      """WITH li AS (
-        |  SELECT l_orderkey,
-        |    CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT))
-        |      AS rev_cc
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT o_orderpriority, date_trunc('month', o_orderdate) AS mn,
-        |    CAST(sum(rev_cc) AS BIGINT) AS rev_cc
-        |  FROM orders JOIN li ON o_orderkey = l_orderkey
-        |  GROUP BY o_orderpriority, date_trunc('month', o_orderdate))
-        |SELECT o_orderpriority, strftime(mn, '%Y-%m') AS month, rev_cc,
-        |  CAST(sum(rev_cc) OVER (PARTITION BY o_orderpriority
-        |    ORDER BY mn) AS BIGINT) AS cum_cc,
-        |  CAST(CAST(sum(rev_cc) OVER (PARTITION BY o_orderpriority
-        |      ORDER BY mn) AS BIGINT) AS DOUBLE)
-        |    / CAST(CAST(sum(rev_cc) OVER (PARTITION BY o_orderpriority)
-        |      AS BIGINT) AS DOUBLE) AS share
-        |FROM m
-        |ORDER BY o_orderpriority, month""".stripMargin,
-    // C18 — revenue in exact centi-cents (the C17 rule) so nation-pair
-    // sums are reduction-order-free; sum CAST AS BIGINT (HUGEINT rule).
-    "q_nation_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  year(l_shipdate) AS l_year,
-        |  CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT)))
-        |    AS BIGINT) AS revenue_cc
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE sn.n_name <> cn.n_name
-        |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-        |    AND TIMESTAMP '1997-12-31 23:59:59'
-        |GROUP BY sn.n_name, cn.n_name, year(l_shipdate)
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    // C27 — profit exact int64 end-to-end: centi-cent revenue minus
-    // retail_cents·qty·100 (whole quantities); LIKE filter on part.
-    "q_product_profit" ->
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |  CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT))
-        |    - CAST(round(p_retailprice * 100.0, 0) AS BIGINT)
-        |      * CAST(round(l_quantity, 0) AS BIGINT) * 100)
-        |    AS BIGINT) AS profit_cc,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY n_name, year(o_orderdate)
-        |ORDER BY nation, o_year""".stripMargin,
-    // C28 — distinct (partkey, suppkey) pairs first, blacklist
-    // excluded via anti semantics (NOT IN on a NULL-free list).
-    "q_supplier_candidates" ->
-      """SELECT p_brand, p_type,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE l_suppkey NOT IN (
-        |  SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-        |GROUP BY p_brand, p_type
-        |ORDER BY supplier_cnt DESC, p_brand, p_type""".stripMargin,
-    // C29 — Q21 essence, decorrelated: EXISTS/NOT-EXISTS become two
-    // stacked aggregates; sole-late is a row-local predicate.
-    "q_waiting_supplier" ->
-      s"""WITH pos AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    max(CASE WHEN l_shipdate > o_orderdate
-        |      + INTERVAL $lateDaysParam DAYS THEN 1 ELSE 0 END) AS was_late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  GROUP BY l_orderkey, l_suppkey),
-        |po AS (
-        |  SELECT l_orderkey, count(*) AS n_suppliers,
-        |    CAST(sum(was_late) AS BIGINT) AS n_late_suppliers
-        |  FROM pos GROUP BY l_orderkey)
-        |SELECT s_name, count(*) AS numwait
-        |FROM pos JOIN po USING (l_orderkey)
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE was_late = 1 AND n_suppliers > 1 AND n_late_suppliers = 1
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name""".stripMargin,
-    // C19 — conditional two-sum aggregate; share is ONE division of
-    // exact int64 sums (unrounded, bit-identical both engines).
-    "q_market_share" ->
-      """WITH f AS (
-        |  SELECT year(o_orderdate) AS o_year,
-        |    CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT))
-        |      AS rev_cc,
-        |    n_name
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE p_type = 'PROMO')
-        |SELECT o_year,
-        |  CAST(sum(rev_cc) AS BIGINT) AS total_cc,
-        |  CAST(sum(CASE WHEN n_name = 'NATION_7' THEN rev_cc ELSE 0 END)
-        |    AS BIGINT) AS nation_cc,
-        |  CAST(CAST(sum(CASE WHEN n_name = 'NATION_7' THEN rev_cc ELSE 0 END)
-        |      AS BIGINT) AS DOUBLE)
-        |    / CAST(CAST(sum(rev_cc) AS BIGINT) AS DOUBLE) AS mkt_share
-        |FROM f GROUP BY o_year ORDER BY o_year""".stripMargin,
-    // C20 — agg-before-dim-join; top 20 by (revenue desc, custkey).
-    "q_returned_revenue" ->
-      """SELECT c_custkey, c_name, n_name, c_acctbal,
-        |  CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT)))
-        |    AS BIGINT) AS revenue_cc
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY c_custkey, c_name, n_name, c_acctbal
-        |ORDER BY revenue_cc DESC, c_custkey LIMIT 20""".stripMargin,
-    // C21 — promo share per ship month; one conditional aggregate,
-    // share one division of exact ints.
-    "q_promo_share" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_cc ELSE 0 END)
-        |    AS BIGINT) AS promo_cc,
-        |  CAST(sum(rev_cc) AS BIGINT) AS total_cc,
-        |  CAST(CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_cc ELSE 0 END)
-        |      AS BIGINT) AS DOUBLE)
-        |    / CAST(CAST(sum(rev_cc) AS BIGINT) AS DOUBLE) AS promo_share
-        |FROM (SELECT l_shipdate, p_type,
-        |    CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT))
-        |      AS rev_cc
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey) f
-        |GROUP BY ship_month ORDER BY ship_month""".stripMargin,
-    // C22 — OR-of-ANDs residual predicate, single exact int64 sum.
-    "q_disjunctive_revenue" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT)))
-        |    AS BIGINT) AS revenue_cc
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#20' AND p_size BETWEEN 1 AND 20
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#25' AND p_size BETWEEN 1 AND 30
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    // C23 — the avg-positive-balance compare is CROSS-MULTIPLIED into
-    // exact int64 cents (bal·n_pos > sum_pos) so neither engine ever
-    // materializes the average as a double.
-    "q_idle_balance" ->
-      """WITH c AS (SELECT c_custkey, c_nationkey,
-        |    CAST(round(c_acctbal * 100.0, 0) AS BIGINT) AS bal_cents
-        |  FROM customer),
-        |p AS (SELECT CAST(sum(bal_cents) AS BIGINT) AS sum_pos_cents,
-        |    count(*) AS n_pos FROM c WHERE bal_cents > 0)
-        |SELECT n_name, count(*) AS numcust,
-        |  CAST(sum(bal_cents) AS BIGINT) AS totacctbal_cents
-        |FROM c, p
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE bal_cents * n_pos > sum_pos_cents
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // C26 — trailing 3-month RANGE frame on an integer month index
-    // (gap months count out of the window — the RANGE-vs-ROWS point);
-    // window sums CAST AS BIGINT (HUGEINT rule).
-    "q_trailing_revenue" ->
-      """WITH li AS (
-        |  SELECT l_orderkey,
-        |    CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT))
-        |      AS rev_cc
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT o_orderpriority,
-        |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS month_idx,
-        |    CAST(sum(rev_cc) AS BIGINT) AS rev_cc
-        |  FROM orders JOIN li ON o_orderkey = l_orderkey
-        |  GROUP BY 1, 2)
-        |SELECT o_orderpriority, CAST(month_idx AS BIGINT) AS month_idx,
-        |  rev_cc,
-        |  CAST(sum(rev_cc) OVER w AS BIGINT) AS trailing3_cc,
-        |  CAST(count(*) OVER w AS BIGINT) AS n_months_in_window
-        |FROM m
-        |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month_idx
-        |  RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderpriority, month_idx""".stripMargin,
-    // A18 — all row predicates in ONE conditional aggregate; the
-    // referential check is an anti-join count UNION'd in.
-    "q_constraint_audit" ->
-      """WITH base AS (
-        |  SELECT count(*) AS total_rows,
-        |    CAST(sum(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS v_qty,
-        |    CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 1
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS v_disc,
-        |    CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS v_ship,
-        |    CAST(sum(CASE WHEN l_extendedprice <= 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS v_price
-        |  FROM lineitem),
-        |ref AS (
-        |  SELECT (SELECT count(*) FROM lineitem WHERE NOT EXISTS
-        |      (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey))
-        |    AS n_violations,
-        |    (SELECT count(*) FROM lineitem) AS total_rows)
-        |SELECT constraint_name, n_violations, total_rows,
-        |  n_violations = 0 AS pass
-        |FROM (
-        |  SELECT 'quantity_positive' AS constraint_name, v_qty AS n_violations,
-        |    total_rows FROM base
-        |  UNION ALL SELECT 'discount_in_range', v_disc, total_rows FROM base
-        |  UNION ALL SELECT 'shipdate_not_null', v_ship, total_rows FROM base
-        |  UNION ALL SELECT 'price_positive', v_price, total_rows FROM base
-        |  UNION ALL SELECT 'orderkey_in_orders', n_violations, total_rows
-        |    FROM ref) u
-        |ORDER BY constraint_name""".stripMargin,
-    // C25 — groupwise-max view with ties kept; "= max" is an exact
-    // int64 compare on centi-cent sums.
-    "q_top_supplier" ->
-      """WITH v AS (SELECT l_suppkey,
-        |    CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT)))
-        |      AS BIGINT) AS total_revenue_cc
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey),
-        |m AS (SELECT max(total_revenue_cc) AS max_cc FROM v)
-        |SELECT s_suppkey, s_name, total_revenue_cc
-        |FROM v, m JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue_cc = max_cc
-        |ORDER BY s_suppkey""".stripMargin,
-    // C24 — global-share HAVING cross-multiplied into exact basis
-    // points: value·10000 > total·80.
-    "q_value_share" ->
-      """WITH v AS (SELECT l_suppkey,
-        |    CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)
-        |      * (100 - CAST(round(l_discount * 100.0, 0) AS BIGINT)))
-        |      AS BIGINT) AS value_cc
-        |  FROM lineitem GROUP BY l_suppkey),
-        |t AS (SELECT CAST(sum(value_cc) AS BIGINT) AS total_cc FROM v)
-        |SELECT s_suppkey, s_name, value_cc
-        |FROM v, t JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE value_cc * 10000 > total_cc * 80
-        |ORDER BY value_cc DESC, s_suppkey""".stripMargin,
-    // C16 — Q13 two-level aggregation; zero-order customers kept by the
-    // left join, counts exact int64.
-    "q_order_count_dist" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |      GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    // C13 — gid from CASE-on-nullness (engine-portable, not native
-    // grouping_id whose bit order is engine-defined).
-    "q_grouping_sets" ->
-      """SELECT CASE WHEN l_returnflag IS NULL THEN 2 ELSE 0 END
-        |     + CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END AS gid,
-        |  coalesce(l_returnflag, 'ALL') AS returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS linestatus,
-        |  round(sum(l_quantity), 4) AS sum_qty,
-        |  round(sum(l_extendedprice*(1.0-l_discount)), 4) AS revenue,
-        |  count(*) AS cnt
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |  (l_returnflag), (l_linestatus), ())
-        |ORDER BY gid, returnflag, linestatus""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |  AND o_orderdate >= TIMESTAMP '2001-06-01 00:00:00')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_pivot" ->
-      """SELECT user_id AS symbol,
-        |  count(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |  count(*) FILTER (WHERE event_type = 'view') AS n_view,
-        |  count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |  count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |  count(*) FILTER (WHERE event_type = 'error') AS n_error
-        |FROM events GROUP BY user_id ORDER BY symbol""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(value / 25.0) AS BIGINT) AS bucket,
-        |  count(*) AS n, round(avg(value), 4) AS avg_value
-        |FROM events GROUP BY CAST(floor(value / 25.0) AS BIGINT)
-        |ORDER BY bucket""".stripMargin,
-    "q_corr_stats" ->
-      s"""SELECT symbol, round(corr(bid, ask), 4) AS bid_ask_corr,
-        |  round(covar_samp(bid, ask), 4) AS bid_ask_covar,
-        |  count(*) AS n
-        |FROM $ticksSql t GROUP BY symbol ORDER BY symbol""".stripMargin,
-    "q_minmax_scale" ->
-      s"""SELECT tick_id, symbol,
-        |  CASE WHEN mx <> mn THEN (bid - mn) / (mx - mn) END AS bid_scaled
-        |FROM (SELECT tick_id, symbol, bid,
-        |    min(bid) OVER (PARTITION BY symbol) AS mn,
-        |    max(bid) OVER (PARTITION BY symbol) AS mx
-        |  FROM $ticksSql t) x
-        |ORDER BY symbol, tick_id""".stripMargin,
-    "q_semi_join" ->
-      """SELECT s_suppkey, s_name FROM supplier
-        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey
-        |  AND l_quantity >= 45.0)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_percent_rank" ->
-      """SELECT p_partkey, p_type,
-        |  round(percent_rank() OVER w, 4) AS price_pct_rank,
-        |  round(cume_dist() OVER w, 4) AS price_cume_dist
-        |FROM part
-        |WINDOW w AS (PARTITION BY p_type ORDER BY p_retailprice, p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
-    // Groupwise-min join-back (Q2 essence): min picked raw, ties kept.
-    "q_min_cost" ->
-      """WITH p AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#13'),
-        |li AS (SELECT p_partkey, l_suppkey, l_extendedprice
-        |  FROM lineitem JOIN p ON l_partkey = p_partkey),
-        |m AS (SELECT p_partkey, min(l_extendedprice) AS min_price
-        |  FROM li GROUP BY p_partkey)
-        |SELECT DISTINCT li.p_partkey AS p_partkey,
-        |  l_suppkey AS s_suppkey, s_name, min_price
-        |FROM li JOIN m ON li.p_partkey = m.p_partkey
-        |  AND l_extendedprice = min_price
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY li.p_partkey, s_suppkey""".stripMargin,
-    "q_resample_session" ->
-      s"""WITH b0 AS (SELECT tick_id, symbol, strftime(ts, '%Y-%m-%d') AS date,
-        |    CASE WHEN hour(ts) = 7 AND minute(ts) >= 50 THEN 'morning'
-        |         WHEN hour(ts) = 13 AND minute(ts) >= 50 THEN 'afternoon'
-        |    END AS win, bid
-        |  FROM $ticksSql t),
-        |b AS (SELECT tick_id, symbol, date, win, bid,
-        |    row_number() OVER (PARTITION BY symbol, date, win ORDER BY tick_id) AS rn,
-        |    count(*) OVER (PARTITION BY symbol, date, win) AS cnt
-        |  FROM b0 WHERE win IS NOT NULL),
-        |g AS (SELECT DISTINCT symbol, date, win, cnt FROM b),
-        |idx AS (SELECT symbol, date, win, i,
-        |    CASE WHEN cnt = 1 THEN 1 ELSE (i * (cnt - 1)) // 7 + 1 END AS target_rn
-        |  FROM g, (SELECT unnest(range(8)) AS i) s)
-        |SELECT idx.symbol, idx.date, idx.win, idx.i, b.rn AS src_rn, b.bid AS bid
-        |FROM idx JOIN b ON b.symbol = idx.symbol AND b.date = idx.date
-        |  AND b.win = idx.win AND b.rn = idx.target_rn
-        |ORDER BY idx.symbol, idx.date, idx.win, idx.i""".stripMargin,
-    // D66 — windowed-tensor export: the shared slot chain, elements
-    // re-derived from the exact int64 micros (r11 signed-zero
-    // discipline: never round(double, d) on element-wise values).
-    // Scalar per-slot rows — the ARRAY spelling is unhashable in the
-    // driver's pandas comparator (the r12 red).
-    "q_window_tensors" ->
-      s"""WITH $tensorSlotsSql
-        |SELECT symbol, date, win, split, n_ticks, i,
-        |  CAST(u AS DOUBLE) / 1000000.0 + 0.0 AS el
-        |FROM uq
-        |ORDER BY symbol, date, win, i""".stripMargin,
-    // D67 — the composed pipeline: D66's slot chain, per-(symbol,
-    // slot) exact-int train sums, ascending-slot ordered list fold
-    // for each window error (never an unordered double SUM),
-    // sign-split floor quantization, per-symbol quantile_cont p99
-    // flag on test windows (the reference's test.py thresholding).
-    // D68 — same error chain, per-split quantile_cont thresholds +
-    // one counting aggregate, UNION per percentile (D5's shape).
-    "q_error_profile" ->
-      s"""WITH $windowErrSql,
-        |thr AS (SELECT split, quantile_cont(u_err, 0.92) AS t0,
-        |    quantile_cont(u_err, 0.995) AS t1
-        |  FROM er GROUP BY 1),
-        |one AS (SELECT er.split, count(*) AS n_windows,
-        |    CAST(sum(u_err) // count(*) AS BIGINT) AS mean_err_ppm,
-        |    CAST(sum(CASE WHEN CAST(u_err AS DOUBLE) > thr.t0
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN CAST(u_err AS DOUBLE) > thr.t1
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    min(thr.t0) AS t0, min(thr.t1) AS t1
-        |  FROM er JOIN thr USING (split) GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT split, n_windows, mean_err_ppm,
-        |    CAST(92.0 AS DOUBLE) AS pct,
-        |    round(t0, 4) + 0.0 AS threshold_ppm, n0 AS n_above
-        |  FROM one
-        |  UNION ALL
-        |  SELECT split, n_windows, mean_err_ppm, CAST(99.5 AS DOUBLE),
-        |    round(t1, 4) + 0.0, n1 FROM one) u
-        |ORDER BY split, pct""".stripMargin,
-    "q_anomaly_pipeline" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql
-        |SELECT er.symbol, er.date, er.win, er.split,
-        |  CAST(u_err AS DOUBLE) / 1000000.0 + 0.0 AS err,
-        |  (er.split = 'test' AND th.qu IS NOT NULL
-        |    AND CAST(u_err AS DOUBLE) > th.qu) AS is_anomaly
-        |FROM er LEFT JOIN th ON th.symbol = er.symbol
-        |ORDER BY er.symbol, er.date, er.win""".stripMargin,
-    // D75 — ELM autoencoder: the full train-and-score loop re-derived
-    // in SQL — pivoted slots, the SAME dyadic hidden weights (shared
-    // elmZExpr/elmVExpr fragments — LCG ints over 4096 parse to
-    // identical doubles), exact int64 Gram/cross sums, the SAME
-    // unrolled Cholesky + substitution stages (shared elmCholStages/
-    // elmSolveStages text), per-term quantized errors, integer div k,
-    // quantile_cont p99 flag (the D67 pairing).
-    "q_nn_recon" -> {
-      val k = tensorSlots
-      val piv = (0 until k)
-        .map(i => s"max(CASE WHEN i = $i THEN u END) AS s$i")
-        .mkString(", ")
-      val zs = (1 to Features.ElmHidden)
-        .map(j => s"${Features.elmZExpr(j, k)} AS z$j").mkString(", ")
-      val vs = (1 to Features.ElmHidden)
-        .map(j => s"${Features.elmVExpr(s"z$j")} AS v$j").mkString(", ")
-      val aCols = Features.elmAExprs
-        .map { case (n, e) => s"$e AS $n" }.mkString(", ")
-      val cholCtes = Features.elmCholStages.zipWithIndex.map {
-        case (st, ix) =>
-          val prev = if (ix == 0) "aa" else s"ch$ix"
-          s"ch${ix + 1} AS (SELECT *, " +
-            st.map { case (n, e) => s"$e AS $n" }.mkString(", ") +
-            s" FROM $prev)"
-      }.mkString(",\n")
-      val lCols = Features.elmCholStages.flatten
-        .map { case (n, _) => s"ch.$n AS $n" }.mkString(", ")
-      val solveCtes = Features.elmSolveStages.zipWithIndex.map {
-        case (st, ix) =>
-          val prev = if (ix == 0) "f0" else s"f$ix"
-          s"f${ix + 1} AS (SELECT *, " +
-            st.map { case (n, e) => s"$e AS $n" }.mkString(", ") +
-            s" FROM $prev)"
-      }.mkString(",\n")
-      val nStages = Features.elmSolveStages.length
-      s"""WITH $tensorSlotsSql,
-        |piv AS (SELECT symbol, date, win, split, $piv
-        |  FROM uq GROUP BY 1, 2, 3, 4),
-        |hz AS (SELECT *, $zs FROM piv),
-        |hid AS (SELECT symbol, date, win, split, $vs FROM hz),
-        |gs AS (SELECT symbol, count(*) AS n_tr,
-        |    CAST(sum(v1*v1) AS BIGINT) AS g11,
-        |    CAST(sum(v2*v1) AS BIGINT) AS g21,
-        |    CAST(sum(v2*v2) AS BIGINT) AS g22,
-        |    CAST(sum(v3*v1) AS BIGINT) AS g31,
-        |    CAST(sum(v3*v2) AS BIGINT) AS g32,
-        |    CAST(sum(v3*v3) AS BIGINT) AS g33,
-        |    CAST(sum(v1) AS BIGINT) AS sv1,
-        |    CAST(sum(v2) AS BIGINT) AS sv2,
-        |    CAST(sum(v3) AS BIGINT) AS sv3
-        |  FROM hid WHERE split = 'train' GROUP BY symbol),
-        |aa AS (SELECT *, $aCols FROM gs),
-        |$cholCtes,
-        |rh AS (SELECT uq.symbol AS symbol, uq.i AS i,
-        |    CAST(sum(h.v1*uq.u) AS BIGINT) AS c1,
-        |    CAST(sum(h.v2*uq.u) AS BIGINT) AS c2,
-        |    CAST(sum(h.v3*uq.u) AS BIGINT) AS c3,
-        |    CAST(sum(uq.u) AS BIGINT) AS c0
-        |  FROM uq JOIN hid h ON h.symbol = uq.symbol
-        |    AND h.date = uq.date AND h.win = uq.win
-        |  WHERE uq.split = 'train' GROUP BY 1, 2),
-        |f0 AS (SELECT rh.symbol AS symbol, rh.i AS i,
-        |    (CAST(c1 AS DOUBLE)/1.0E12) AS r1,
-        |    (CAST(c2 AS DOUBLE)/1.0E12) AS r2,
-        |    (CAST(c3 AS DOUBLE)/1.0E12) AS r3,
-        |    (CAST(c0 AS DOUBLE)/1.0E6) AS r4,
-        |    $lCols
-        |  FROM rh JOIN ch${Features.elmCholStages.length} ch
-        |    ON ch.symbol = rh.symbol),
-        |$solveCtes,
-        |beta AS (SELECT symbol, i, b1, b2, b3, b4 FROM f$nStages),
-        |px AS (SELECT uq.symbol AS symbol, uq.date AS date,
-        |    uq.win AS win, uq.split AS split, uq.u AS u,
-        |    b.b1 AS b1, b.b2 AS b2, b.b3 AS b3, b.b4 AS b4,
-        |    h.v1 AS v1, h.v2 AS v2, h.v3 AS v3
-        |  FROM uq JOIN hid h ON h.symbol = uq.symbol
-        |    AND h.date = uq.date AND h.win = uq.win
-        |  LEFT JOIN beta b ON b.symbol = uq.symbol AND b.i = uq.i),
-        |p2 AS (SELECT *, ${Features.elmXhExpr} AS xh FROM px),
-        |pr AS (SELECT symbol, date, win, split,
-        |    CASE WHEN b1 IS NULL THEN 0
-        |      ELSE ${Features.elmTqExpr} END AS tq
-        |  FROM p2),
-        |er2 AS (SELECT symbol, date, win, split,
-        |    CAST(sum(tq) // $k AS BIGINT) AS err_ppm
-        |  FROM pr GROUP BY 1, 2, 3, 4),
-        |th AS (SELECT symbol, quantile_cont(err_ppm, $reconFlagPct) AS qu
-        |  FROM er2 WHERE split = 'test' GROUP BY 1)
-        |SELECT er2.symbol, er2.date, er2.win, er2.split, er2.err_ppm,
-        |  (er2.split = 'test' AND th.qu IS NOT NULL
-        |    AND CAST(er2.err_ppm AS DOUBLE) > th.qu) AS is_anomaly
-        |FROM er2 LEFT JOIN th ON th.symbol = er2.symbol
-        |ORDER BY er2.symbol, er2.date, er2.win""".stripMargin
-    },
-    // D84 — gradient-descent autoencoder: the ENTIRE training loop
-    // re-derived in SQL as a GENERATED unrolled per-epoch CTE cascade
-    // from the same constants (dyadic init weights, shared forward/
-    // backward fragment texts, sign-split int64 gradient sums, the
-    // exact gdUpdExpr/gdLossExpr IEEE chains), then the final-weight
-    // scoring, loss/weight unpivot and p99 flags.
-    "q_gd_autoencoder" -> gdOracleSql(tensorSlots, 2, 4, 0.0625,
-      reconFlagPct),
-    // D85 — validation curve: the val-aware cascade (identical weight
-    // trajectory), per-epoch losses at w_e, improvement windows,
-    // patience counter, best-epoch pick.
-    "q_gd_valcurve" -> gdValOracleSql(tensorSlots, 2, 4, 0.0625,
-      gdPatience),
-    // D76 — model-signal backtest: D67's error chain (shared
-    // windowErrSql), per-symbol p99 threshold, D62's last_value
-    // IGNORE NULLS position machine over the TEST window roster,
-    // exact-int close-to-close P&L (no float surface at all).
-    "q_signal_backtest" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql,
-        |${positionChainSql("JOIN th ON th.symbol = er.symbol",
-          ", th.qu", "symbol")}
-        |SELECT symbol, count(*) AS n_windows,
-        |  CAST(sum(CASE WHEN pos <> 0 AND pos <> pos_prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_trades,
-        |  CAST(sum(CASE WHEN pos <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS windows_in_pos,
-        |  CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev * dc
-        |    ELSE 0 END) AS BIGINT) AS pnl_cents
-        |FROM pp GROUP BY 1 ORDER BY symbol""".stripMargin,
-    // D83 — staleness report: the error chain joined to the deployed
-    // threshold, D26's run-id idiom (lag + running start sum) over
-    // the per-symbol window roster, runs collapsed to the report.
-    "q_staleness_report" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql,
-        |fb AS (SELECT er.symbol, er.date, er.win,
-        |    CASE WHEN CAST(er.u_err AS DOUBLE) > th.qu
-        |      THEN 1 ELSE 0 END AS breach
-        |  FROM er JOIN th ON th.symbol = er.symbol),
-        |fs AS (SELECT *, CASE WHEN breach = 1
-        |      AND coalesce(lag(breach) OVER w, 0) = 0
-        |    THEN 1 ELSE 0 END AS start
-        |  FROM fb WINDOW w AS (PARTITION BY symbol ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END)),
-        |fr AS (SELECT *, CAST(sum(start) OVER (PARTITION BY symbol
-        |    ORDER BY date, CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS run_id
-        |  FROM fs),
-        |rr AS (SELECT *, row_number() OVER (PARTITION BY symbol, run_id
-        |    ORDER BY date, CASE WHEN win = 'morning' THEN 0 ELSE 1 END)
-        |    AS rn_in_run
-        |  FROM fr WHERE breach = 1),
-        |runs AS (SELECT symbol, run_id, count(*) AS run_len,
-        |    min(CASE WHEN rn_in_run = $stalenessRun THEN date END)
-        |      AS alert_date
-        |  FROM rr GROUP BY 1, 2),
-        |ps AS (SELECT symbol,
-        |    CAST(sum(run_len) AS BIGINT) AS n_breach_w,
-        |    count(*) AS n_runs, max(run_len) AS longest_run,
-        |    CAST(sum(CASE WHEN run_len >= $stalenessRun
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_alerts,
-        |    min(alert_date) AS first_alert_date
-        |  FROM runs GROUP BY 1),
-        |nw AS (SELECT symbol, count(*) AS n_windows FROM fb GROUP BY 1)
-        |SELECT nw.symbol, nw.n_windows,
-        |  coalesce(ps.n_breach_w, 0) AS n_breach_w,
-        |  coalesce(ps.n_runs, 0) AS n_runs,
-        |  coalesce(ps.longest_run, 0) AS longest_run,
-        |  coalesce(ps.n_alerts, 0) AS n_alerts,
-        |  ps.first_alert_date
-        |FROM nw LEFT JOIN ps ON ps.symbol = nw.symbol
-        |ORDER BY nw.symbol""".stripMargin,
-    // D77 — walk-forward model retrain: the slot chain's `slots`/`rk`
-    // CTEs crossed with the fold grid, the scaler/centroid/error
-    // chain re-run per fold with the fold key riding along, fold-train
-    // quantile_cont thresholds (the percentile pairing), report per
-    // (fold, symbol). Eval-exhausted symbols drop per fold (D7).
-    "q_walkforward_model" ->
-      s"""WITH $tensorSlotsSql,
-        |fg AS (SELECT unnest(range($wfFolds)) AS fold),
-        |fr AS (SELECT sl.symbol, sl.date, sl.win, sl.i, sl.cents,
-        |    rk.rn_w, fg.fold, $wfMinTrain + fg.fold * $wfStep AS origin
-        |  FROM slots sl JOIN rk ON rk.symbol = sl.symbol
-        |    AND rk.date = sl.date AND rk.win = sl.win CROSS JOIN fg),
-        |ftt AS (SELECT *, CASE WHEN rn_w <= origin THEN 'train'
-        |    WHEN rn_w <= origin + $wfStep THEN 'eval' END AS role
-        |  FROM fr WHERE rn_w <= origin + $wfStep),
-        |wst AS (SELECT fold, symbol, count(*) AS n_tr,
-        |    CAST(sum(cents) AS BIGINT) AS sa,
-        |    CAST(sum(cents * cents) AS BIGINT) AS sq
-        |  FROM ftt WHERE role = 'train' GROUP BY 1, 2),
-        |wsc AS (SELECT fold, symbol, CAST(sa AS DOUBLE) / n_tr AS mu,
-        |    CASE WHEN CAST(sq AS DOUBLE) / n_tr
-        |        - (CAST(sa AS DOUBLE) / n_tr) * (CAST(sa AS DOUBLE) / n_tr)
-        |        > 0
-        |      THEN sqrt(CAST(sq AS DOUBLE) / n_tr
-        |        - (CAST(sa AS DOUBLE) / n_tr) * (CAST(sa AS DOUBLE) / n_tr))
-        |      END AS sd
-        |  FROM wst),
-        |wsx AS (SELECT f.fold, f.symbol, f.date, f.win, f.role, f.i,
-        |    CASE WHEN c.sd IS NOT NULL AND c.sd > 0
-        |      THEN (f.cents - c.mu) / c.sd ELSE 0.0 END AS x
-        |  FROM ftt f LEFT JOIN wsc c ON c.fold = f.fold
-        |    AND c.symbol = f.symbol),
-        |wuq AS (SELECT fold, symbol, date, win, role, i,
-        |    CAST(CASE WHEN x >= 0 THEN floor(x * 1000000.0 + 0.5)
-        |      ELSE -floor(-x * 1000000.0 + 0.5) END AS BIGINT) AS u
-        |  FROM wsx),
-        |wtm AS (SELECT fold, symbol, i, CAST(sum(u) AS BIGINT) AS su,
-        |    count(*) AS n_ct
-        |  FROM wuq WHERE role = 'train' GROUP BY 1, 2, 3),
-        |wtt AS (SELECT q.fold, q.symbol, q.date, q.win, q.role, q.i,
-        |    CASE WHEN m.n_ct IS NULL THEN 0.0
-        |      ELSE (CAST(q.u AS DOUBLE) - CAST(m.su AS DOUBLE) / m.n_ct)
-        |        * (CAST(q.u AS DOUBLE) - CAST(m.su AS DOUBLE) / m.n_ct)
-        |        / 1000000.0 / 1000000.0 END AS t
-        |  FROM wuq q LEFT JOIN wtm m ON m.fold = q.fold
-        |    AND m.symbol = q.symbol AND m.i = q.i),
-        |wer AS (SELECT fold, symbol, date, win, role,
-        |    CAST(floor(list_reduce(list_prepend(0.0, list(t ORDER BY i)),
-        |      (a, b) -> a + b) / $tensorSlots * 1000000.0 + 0.5)
-        |      AS BIGINT) AS u_err
-        |  FROM wtt GROUP BY 1, 2, 3, 4, 5),
-        |wthr AS (SELECT fold, symbol,
-        |    quantile_cont(u_err, $reconFlagPct) AS qu,
-        |    count(*) AS n_train_w
-        |  FROM wer WHERE role = 'train' GROUP BY 1, 2)
-        |SELECT e.fold, e.symbol, max(t.n_train_w) AS n_train_w,
-        |  count(*) AS n_eval_w,
-        |  CAST(CAST(sum(e.u_err) AS BIGINT) AS DOUBLE) / count(*)
-        |    / 1000000.0 AS mean_err,
-        |  CAST(sum(CASE WHEN CAST(e.u_err AS DOUBLE) > t.qu
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged
-        |FROM wer e JOIN wthr t ON t.fold = e.fold AND t.symbol = e.symbol
-        |WHERE e.role = 'eval' GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    // D78 — backtest performance report: q_signal_backtest's position
-    // chain extended with the running equity curve (windowed exact-int
-    // sums, CAST AS BIGINT against the HUGEINT widening), running-peak
-    // drawdown, win/loss step counts and the one IEEE hit-rate
-    // division.
-    "q_backtest_report" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql,
-        |${positionChainSql("JOIN th ON th.symbol = er.symbol",
-          ", th.qu", "symbol")},
-        |pw AS (SELECT *, CAST(CASE WHEN dc IS NOT NULL
-        |    THEN pos_prev * dc ELSE 0 END AS BIGINT) AS pnl FROM pp),
-        |cm AS (SELECT *, CAST(sum(pnl) OVER wr AS BIGINT) AS cum
-        |  FROM pw WINDOW wr AS (PARTITION BY symbol ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |dd AS (SELECT *, max(cum) OVER wr - cum AS ddv
-        |  FROM cm WINDOW wr AS (PARTITION BY symbol ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |ag AS (SELECT symbol, count(*) AS n_windows,
-        |  CAST(sum(CASE WHEN pos <> 0 AND pos <> pos_prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_trades,
-        |  CAST(sum(CASE WHEN pnl > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_win_steps,
-        |  CAST(sum(CASE WHEN pnl < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_loss_steps,
-        |  CAST(sum(pnl) AS BIGINT) AS pnl_cents,
-        |  max(ddv) AS max_dd_cents
-        |FROM dd GROUP BY 1)
-        |SELECT symbol, n_windows, n_trades, n_win_steps, n_loss_steps,
-        |  pnl_cents, max_dd_cents,
-        |  CASE WHEN n_win_steps + n_loss_steps > 0 THEN
-        |    CAST(n_win_steps AS DOUBLE) / (n_win_steps + n_loss_steps)
-        |    END AS hit_rate
-        |FROM ag ORDER BY symbol""".stripMargin,
-    // D79 — book-level roll-up: the same position chain collapsed to
-    // per-(date, win) book P&L steps, ONE global running-curve window
-    // over the calendar step roster, extreme contributors via
-    // min-over-equality (engine-stable tie-break).
-    "q_book_report" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql,
-        |${positionChainSql("JOIN th ON th.symbol = er.symbol",
-          ", th.qu", "symbol")},
-        |pw AS (SELECT *, CAST(CASE WHEN dc IS NOT NULL
-        |    THEN pos_prev * dc ELSE 0 END AS BIGINT) AS pnl FROM pp),
-        |stp AS (SELECT date, win, CAST(sum(pnl) AS BIGINT) AS book_pnl
-        |  FROM pw GROUP BY 1, 2),
-        |bcm AS (SELECT *, CAST(sum(book_pnl) OVER wr AS BIGINT) AS cum
-        |  FROM stp WINDOW wr AS (ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |bdd AS (SELECT *, max(cum) OVER wr - cum AS ddv
-        |  FROM bcm WINDOW wr AS (ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |bk AS (SELECT count(*) AS n_steps,
-        |    CAST(sum(book_pnl) AS BIGINT) AS pnl_cents,
-        |    max(ddv) AS max_dd_cents FROM bdd),
-        |sy AS (SELECT symbol, CAST(sum(pnl) AS BIGINT) AS sym_pnl
-        |  FROM pw GROUP BY 1),
-        |ex AS (SELECT count(*) AS n_symbols,
-        |    max(sym_pnl) AS best_pnl_cents,
-        |    min(sym_pnl) AS worst_pnl_cents FROM sy),
-        |pk AS (SELECT
-        |    min(CASE WHEN s.sym_pnl = e.best_pnl_cents
-        |      THEN s.symbol END) AS best_symbol,
-        |    min(CASE WHEN s.sym_pnl = e.worst_pnl_cents
-        |      THEN s.symbol END) AS worst_symbol
-        |  FROM sy s CROSS JOIN ex e)
-        |SELECT bk.n_steps, ex.n_symbols, bk.pnl_cents, bk.max_dd_cents,
-        |  pk.best_symbol, ex.best_pnl_cents, pk.worst_symbol,
-        |  ex.worst_pnl_cents
-        |FROM bk CROSS JOIN ex CROSS JOIN pk""".stripMargin,
-    // D80 — latency sensitivity: the q_signal_backtest chain with one
-    // extra lag (position decided two windows back) re-pricing each
-    // step; decay = paper − delayed, all exact int64.
-    "q_latency_sensitivity" ->
-      s"""WITH $windowErrSql,
-        |$testThresholdSql,
-        |${positionChainSql("JOIN th ON th.symbol = er.symbol",
-          ", th.qu", "symbol",
-          " coalesce(lag(pos, 2) OVER w, 0) AS pos_prev2,")}
-        |SELECT symbol, count(*) AS n_windows,
-        |  CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev * dc
-        |    ELSE 0 END) AS BIGINT) AS pnl_cents,
-        |  CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev2 * dc
-        |    ELSE 0 END) AS BIGINT) AS pnl_delayed_cents,
-        |  CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev * dc
-        |    ELSE 0 END) AS BIGINT)
-        |    - CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev2 * dc
-        |    ELSE 0 END) AS BIGINT) AS decay_cents
-        |FROM pp GROUP BY 1 ORDER BY symbol""".stripMargin,
-    // D81 — threshold sweep: all swept thresholds from generated
-    // per-pct quantile_cont aggregates (string pct keys), the machine
-    // partitioned (symbol, pct), |pcts| report rows.
-    "q_signal_sweep" -> {
-      val thrUnion = sweepPcts.map { p =>
-        s"""SELECT symbol, '${Features.pctTag(p)}' AS pct,
-          |    quantile_cont(u_err, $p) AS qu
-          |  FROM er WHERE split = 'test' GROUP BY 1""".stripMargin
-      }.mkString("\n  UNION ALL ")
-      s"""WITH $windowErrSql,
-        |thr3 AS ($thrUnion),
-        |${positionChainSql("JOIN thr3 t ON t.symbol = er.symbol",
-          ", t.pct, t.qu", "symbol, pct")}
-        |SELECT pct, count(*) AS n_windows,
-        |  CAST(sum(CASE WHEN pos <> 0 AND pos <> pos_prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_trades,
-        |  CAST(sum(CASE WHEN pos <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS windows_in_pos,
-        |  count(DISTINCT CASE WHEN pos <> 0 THEN symbol END)
-        |    AS n_symbols_pos,
-        |  CAST(sum(CASE WHEN dc IS NOT NULL THEN pos_prev * dc
-        |    ELSE 0 END) AS BIGINT) AS pnl_cents
-        |FROM pp GROUP BY 1 ORDER BY pct""".stripMargin
-    },
-    // D82 — model-parameter manifest: the slot chain's own `sc`
-    // scaler CTE re-emitted, per-slot train centroids off `uq`,
-    // window counts + threshold off `er` — serving parity by SELECT.
-    "q_model_params" ->
-      s"""WITH $windowErrSql,
-        |tm2 AS (SELECT symbol, i, CAST(sum(u) AS BIGINT) AS su,
-        |    count(*) AS n_ct
-        |  FROM uq WHERE split = 'train' GROUP BY 1, 2),
-        |tw AS (SELECT symbol,
-        |    CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_train_w,
-        |    CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_test_w
-        |  FROM er GROUP BY 1),
-        |$testThresholdSql
-        |SELECT m.symbol, m.i, CAST(m.su AS DOUBLE) / m.n_ct
-        |    AS centroid_u,
-        |  t.n_train_w, t.n_test_w, s.mu, s.sd, th.qu
-        |FROM tm2 m JOIN tw t ON t.symbol = m.symbol
-        |  LEFT JOIN sc s ON s.symbol = m.symbol
-        |  LEFT JOIN th ON th.symbol = m.symbol
-        |ORDER BY m.symbol, m.i""".stripMargin,
-    "q_having" ->
-      """WITH big AS (SELECT l_orderkey, sum(l_quantity) AS tq
-        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 210.0)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_totalprice,
-        |  round(tq, 4) AS total_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    // A25 — run registry re-derived end-to-end: per-(symbol, day)
-    // cycle, D7's split arithmetic slices the day's ticks per phase,
-    // loss ppm-exact in int64; ids/params/artifacts pure functions of
-    // (symbol, day index, phase); as-of = pushed-down date predicate.
-    "q_run_history" ->
-      s"""WITH t AS (SELECT event_id AS tick_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |d0 AS (SELECT min(day) AS d0 FROM t),
-        |e AS (SELECT tick_id, symbol, day, (day - d0.d0) AS di, cents
-        |  FROM t, d0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY symbol, day
-        |      ORDER BY tick_id) AS rn,
-        |    count(*) OVER (PARTITION BY symbol, day) AS cnt FROM e),
-        |p AS (SELECT *, CASE WHEN rn <= floor(cnt * 0.6) THEN 'train'
-        |      WHEN rn <= floor(cnt * 0.6) + floor(cnt * 0.2) THEN 'val'
-        |      ELSE 'test' END AS phase FROM r),
-        |dd AS (SELECT *, abs(cents - lag(cents) OVER (PARTITION BY
-        |      symbol, day, phase ORDER BY tick_id)) AS d_cents FROM p),
-        |runs AS (SELECT symbol, day, di, phase,
-        |    count(d_cents) AS n_diffs,
-        |    CAST(sum(d_cents) AS BIGINT) AS sum_abs
-        |  FROM dd GROUP BY 1, 2, 3, 4),
-        |rr AS (SELECT symbol, day, di, phase,
-        |    CASE WHEN n_diffs > 0
-        |      THEN CAST((sum_abs * 1000000) // n_diffs AS BIGINT)
-        |    END AS loss_ppm,
-        |    CAST(symbol * 10000000 + di * 3 + (CASE phase WHEN 'train'
-        |      THEN 0 WHEN 'val' THEN 1 ELSE 2 END) AS BIGINT) AS run_id,
-        |    CAST(symbol * 10000000 + di * 3 AS BIGINT) AS parent_run_id,
-        |    CAST(1000000 // (di + 10) AS BIGINT) AS lr_ppm,
-        |    CASE WHEN phase = 'train' THEN 'models/'
-        |      || CAST(symbol AS VARCHAR) || '/d' || CAST(di AS VARCHAR)
-        |      || '.pt' END AS artifact_path
-        |  FROM runs),
-        |ao AS (SELECT * FROM rr WHERE day <= DATE '$runCutoff'),
-        |best AS (SELECT symbol, run_id AS best_run_id,
-        |    loss_ppm AS best_val_loss_ppm, parent_run_id
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY symbol
-        |      ORDER BY loss_ppm ASC NULLS LAST, run_id) AS rk
-        |    FROM ao WHERE phase = 'val' AND loss_ppm IS NOT NULL) x
-        |  WHERE rk = 1),
-        |tr AS (SELECT run_id AS parent_run_id, lr_ppm, artifact_path
-        |  FROM ao WHERE phase = 'train'),
-        |cnts AS (SELECT symbol, count(*) AS n_runs FROM ao GROUP BY 1)
-        |SELECT c.symbol, c.n_runs, b.best_run_id, b.best_val_loss_ppm,
-        |  tr.lr_ppm, tr.artifact_path
-        |FROM cnts c LEFT JOIN best b ON b.symbol = c.symbol
-        |LEFT JOIN tr ON tr.parent_run_id = b.parent_run_id
-        |ORDER BY c.symbol""".stripMargin,
-    // A26 — pipeline phase status: the A25 slice CTEs with ts bounds
-    // kept, ok/error from the metric-existence predicate; live rows
-    // from the session-window collapse + the shared windowErrSql
-    // error chain vs the deployed test-percentile threshold.
-    "q_pipeline_status" ->
-      s"""WITH $windowErrSql,
-        |t2 AS (SELECT event_id AS tick_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day, ts,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |r2 AS (SELECT *, row_number() OVER (PARTITION BY symbol, day
-        |      ORDER BY tick_id) AS rn,
-        |    count(*) OVER (PARTITION BY symbol, day) AS cnt FROM t2),
-        |p2 AS (SELECT *, CASE WHEN rn <= floor(cnt * 0.6) THEN 'train'
-        |      WHEN rn <= floor(cnt * 0.6) + floor(cnt * 0.2) THEN 'val'
-        |      ELSE 'test' END AS phase FROM r2),
-        |dd2 AS (SELECT *, abs(cents - lag(cents) OVER (PARTITION BY
-        |      symbol, day, phase ORDER BY tick_id)) AS d_cents FROM p2),
-        |met AS (SELECT symbol, strftime(day, '%Y-%m-%d') AS day, phase,
-        |    date_trunc('second', min(ts)) AS started,
-        |    date_trunc('second', max(ts)) AS finished,
-        |    count(*) AS n_ticks,
-        |    CASE WHEN count(d_cents) > 0 THEN 'ok' ELSE 'error' END
-        |      AS status
-        |  FROM dd2 GROUP BY 1, 2, 3),
-        |sess AS (SELECT user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day, ts
-        |  FROM events
-        |  WHERE (hour(ts) = 7 OR hour(ts) = 13) AND minute(ts) >= 50),
-        |lb AS (SELECT symbol, day,
-        |    date_trunc('second', min(ts)) AS started,
-        |    date_trunc('second', max(ts)) AS finished,
-        |    count(*) AS n_ticks
-        |  FROM sess GROUP BY 1, 2),
-        |thr2 AS (SELECT symbol,
-        |    quantile_cont(u_err, $reconFlagPct) AS qu
-        |  FROM er WHERE split = 'test' GROUP BY 1),
-        |br AS (SELECT er.symbol AS symbol, er.date AS date,
-        |    max(CASE WHEN t.qu IS NOT NULL
-        |      AND CAST(er.u_err AS DOUBLE) > t.qu THEN 1 ELSE 0 END)
-        |      AS breached
-        |  FROM er LEFT JOIN thr2 t ON t.symbol = er.symbol
-        |  GROUP BY 1, 2),
-        |liv AS (SELECT lb.symbol, strftime(lb.day, '%Y-%m-%d') AS day,
-        |    'live' AS phase,
-        |    lb.started, lb.finished, lb.n_ticks,
-        |    CASE WHEN br.breached = 1 THEN 'error' ELSE 'ok' END
-        |      AS status
-        |  FROM lb LEFT JOIN br ON br.symbol = lb.symbol
-        |    AND br.date = strftime(lb.day, '%Y-%m-%d'))
-        |SELECT * FROM (SELECT * FROM met UNION ALL SELECT * FROM liv)
-        |ORDER BY symbol, day,
-        |  CASE phase WHEN 'train' THEN 0 WHEN 'val' THEN 1
-        |    WHEN 'test' THEN 2 ELSE 3 END""".stripMargin,
-    // A28 — stage-lineage manifest: two generated slot chains (full
-    // vs as-of), content-fp aggregates, the stage-DAG ladder, verdict
-    // per stage.
-    "q_stage_lineage" -> stageLineageOracleSql(runCutoff,
-      lineageParams, lineageParams),
-    "q_upsert" ->
-      """WITH upd AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice * 2 AS o_totalprice,
-        |      o_orderstatus
-        |    FROM orders WHERE o_orderkey % 97 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000000000, o_custkey, o_totalprice * 2,
-        |      o_orderstatus
-        |    FROM orders WHERE o_orderkey % 97 = 0),
-        |m AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-        |    FROM orders
-        |    WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-        |  UNION ALL SELECT * FROM upd)
-        |SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-        |  CASE WHEN o_orderkey >= 1000000000000 THEN 'I'
-        |       WHEN o_orderkey % 97 = 0 THEN 'U' ELSE 'K' END AS src
-        |FROM m ORDER BY o_orderkey""".stripMargin,
-    "q_quality_scan" ->
-      """SELECT event_type, count(*) AS total_rows,
-        |  count(*) FILTER (WHERE user_id IS NULL) AS user_id_nulls,
-        |  count(*) FILTER (WHERE value IS NULL) AS value_nulls,
-        |  count(*) FILTER (WHERE props IS NULL) AS props_nulls
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_partition_stats" ->
-      """SELECT year(o_orderdate) AS yr, count(*) AS n_rows,
-        |  round(sum(o_totalprice),4) AS sum_val
-        |FROM orders GROUP BY year(o_orderdate) ORDER BY yr""".stripMargin,
-    // A27 — day-partition counts, pairwise exact-int Gini, ppm ints.
-    "q_partition_skew" ->
-      """WITH c AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1),
-        |p AS (SELECT CAST(sum(abs(a.n - b.n)) AS BIGINT) AS sad
-        |  FROM c a, c b),
-        |s AS (SELECT count(*) AS n_partitions,
-        |    CAST(sum(n) AS BIGINT) AS total_rows,
-        |    max(n) AS max_rows, min(n) AS min_rows FROM c)
-        |SELECT n_partitions, total_rows, max_rows, min_rows,
-        |  CAST((max_rows * 1000000) // total_rows AS BIGINT)
-        |    AS max_share_ppm,
-        |  CAST((sad * 1000000) // (2 * n_partitions * total_rows)
-        |    AS BIGINT) AS gini_ppm
-        |FROM s, p""".stripMargin,
-    "q_time_travel" ->
-      """SELECT event_type, count(*) AS n_rows FROM events
-        |WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ndv_profile" ->
-      """SELECT count(*) AS total_rows,
-        |  count(DISTINCT user_id) AS ndv_user_id,
-        |  count(DISTINCT event_type) AS ndv_event_type,
-        |  count(DISTINCT value) AS ndv_value
-        |FROM events""".stripMargin,
-    "q_snapshot_log" ->
-      """SELECT snapshot_id, added,
-        |  CAST(sum(added) OVER (ORDER BY snapshot_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS total
-        |FROM (SELECT event_id // 2000 AS snapshot_id, count(*) AS added
-        |  FROM events GROUP BY event_id // 2000) s
-        |ORDER BY snapshot_id""".stripMargin,
-    // Expiry report: same history CTE as q_snapshot_log plus the
-    // retain-last-3 verdict against the max id.
-    "q_snapshot_expire" ->
-      """SELECT snapshot_id, added, total,
-        |  snapshot_id <= h - 3 AS expired,
-        |  NOT (snapshot_id <= h - 3) AS time_travelable
-        |FROM (
-        |  SELECT snapshot_id, added,
-        |    CAST(sum(added) OVER (ORDER BY snapshot_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS total,
-        |    max(snapshot_id) OVER () AS h
-        |  FROM (SELECT event_id // 2000 AS snapshot_id, count(*) AS added
-        |    FROM events GROUP BY event_id // 2000) s) x
-        |ORDER BY snapshot_id""".stripMargin,
-    // The rollback row comes from a FROM-clause join against the
-    // target snapshot's history row, NOT a scalar subquery: when the
-    // target snapshot does not exist (sf0.001 has one snapshot), the
-    // join is empty and no rollback entry appears — matching the
-    // Spark side's empty-crossJoin semantics, where a scalar subquery
-    // would instead fabricate a NULL-total row.
-    "q_rollback" ->
-      """WITH s AS (SELECT event_id // 2000 AS snapshot_id, count(*) AS added
-        |  FROM events GROUP BY event_id // 2000),
-        |h AS (SELECT snapshot_id, added,
-        |  CAST(sum(added) OVER (ORDER BY snapshot_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS total,
-        |  'append' AS operation FROM s)
-        |SELECT snapshot_id, added, total, operation FROM h
-        |UNION ALL
-        |SELECT mx.m + 1 AS snapshot_id, CAST(0 AS BIGINT) AS added,
-        |  t.total, 'rollback' AS operation
-        |FROM (SELECT total FROM h WHERE snapshot_id = 2) t,
-        |     (SELECT max(snapshot_id) AS m FROM h) mx
-        |ORDER BY snapshot_id""".stripMargin,
-    // A16 — CDC apply: arg_max twice on the unique seq (deterministic),
-    // delete-tailed keys dropped in HAVING.
-    "q_cdc_apply" ->
-      """SELECT user_id AS key,
-        |  arg_max(value, event_id) AS value,
-        |  count(*) AS n_changes,
-        |  CAST(max(event_id) AS BIGINT) AS last_seq
-        |FROM events
-        |GROUP BY user_id
-        |HAVING arg_max(CASE WHEN event_type = 'error' THEN 'D'
-        |  ELSE 'U' END, event_id) <> 'D'
-        |ORDER BY key""".stripMargin,
-    // A15 — SCD2: order by (second-truncated ts, event_id) — the
-    // only cross-engine-total order (raw ts is ns in DuckDB, µs in
-    // Spark); consecutive-equal tiers collapse into the earlier row.
-    // E13 — q_scd2's history restricted to the tx cutoff, then the
-    // valid-interval membership filter.
-    // E20 — restatement diff: the SAME generated bitemporal-read CTE
-    // group at TWO cutoffs (one spelling, two instantiations — the
-    // bpeCascadeSql rule), full-outer joined, CASE verdict.
-    "q_restatement" -> {
-      def read(tag: String, cutoff: Long): String =
-        s"""${tag}t AS (SELECT user_id, event_id,
-          |    date_trunc('second', ts) AS ts_s,
-          |    CASE WHEN value < 25.0 THEN 'low'
-          |         WHEN value < 75.0 THEN 'mid'
-          |         ELSE 'high' END AS tier
-          |  FROM events WHERE event_id <= $cutoff),
-          |${tag}c AS (SELECT user_id, ts_s, event_id, tier FROM (
-          |    SELECT user_id, ts_s, event_id, tier,
-          |      lag(tier, 1) OVER (PARTITION BY user_id
-          |        ORDER BY ts_s, event_id) AS prev_tier
-          |    FROM ${tag}t) x
-          |  WHERE prev_tier IS NULL OR tier <> prev_tier),
-          |${tag}h AS (SELECT user_id, tier, ts_s AS valid_from,
-          |    lead(ts_s, 1) OVER (PARTITION BY user_id
-          |      ORDER BY ts_s, event_id) AS valid_to
-          |  FROM ${tag}c),
-          |${tag}r AS (SELECT user_id, tier FROM ${tag}h
-          |  WHERE valid_from <= TIMESTAMP '$validTsLit'
-          |    AND (valid_to IS NULL
-          |      OR valid_to > TIMESTAMP '$validTsLit'))""".stripMargin
-      s"""WITH ${read("e", bitemporalTxEarly)},
-        |${read("l", bitemporalTxId)}
-        |SELECT coalesce(er.user_id, lr.user_id) AS user_id,
-        |  er.tier AS tier_early, lr.tier AS tier_late,
-        |  CASE WHEN er.tier IS NULL THEN 'appeared'
-        |       WHEN lr.tier IS NULL THEN 'retracted'
-        |       WHEN er.tier = lr.tier THEN 'unchanged'
-        |       ELSE 'restated' END AS verdict
-        |FROM er FULL OUTER JOIN lr ON er.user_id = lr.user_id
-        |ORDER BY user_id""".stripMargin
-    },
-    "q_bitemporal" ->
-      s"""WITH tiered AS (
-        |  SELECT user_id, event_id, date_trunc('second', ts) AS ts_s,
-        |    CASE WHEN value < 25.0 THEN 'low'
-        |         WHEN value < 75.0 THEN 'mid'
-        |         ELSE 'high' END AS tier
-        |  FROM events WHERE event_id <= $bitemporalTxId),
-        |chg AS (
-        |  SELECT user_id, ts_s, event_id, tier FROM (
-        |    SELECT user_id, ts_s, event_id, tier,
-        |      lag(tier, 1) OVER (PARTITION BY user_id
-        |        ORDER BY ts_s, event_id) AS prev_tier
-        |    FROM tiered) x
-        |  WHERE prev_tier IS NULL OR tier <> prev_tier),
-        |hist AS (
-        |  SELECT user_id,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts_s, event_id) AS version,
-        |    tier, ts_s AS valid_from,
-        |    lead(ts_s, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts_s, event_id) AS valid_to,
-        |    lead(ts_s, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts_s, event_id) IS NULL AS is_current
-        |  FROM chg)
-        |SELECT * FROM hist
-        |WHERE valid_from <= TIMESTAMP '$validTsLit'
-        |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '$validTsLit')
-        |ORDER BY user_id""".stripMargin,
-    "q_scd2" ->
-      """WITH tiered AS (
-        |  SELECT user_id, event_id, date_trunc('second', ts) AS ts_s,
-        |    CASE WHEN value < 25.0 THEN 'low'
-        |         WHEN value < 75.0 THEN 'mid'
-        |         ELSE 'high' END AS tier
-        |  FROM events),
-        |chg AS (
-        |  SELECT user_id, ts_s, event_id, tier FROM (
-        |    SELECT user_id, ts_s, event_id, tier,
-        |      lag(tier, 1) OVER (PARTITION BY user_id
-        |        ORDER BY ts_s, event_id) AS prev_tier
-        |    FROM tiered) x
-        |  WHERE prev_tier IS NULL OR tier <> prev_tier)
-        |SELECT user_id,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id) AS version,
-        |  tier, ts_s AS valid_from,
-        |  lead(ts_s, 1) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id) AS valid_to,
-        |  lead(ts_s, 1) OVER (PARTITION BY user_id
-        |    ORDER BY ts_s, event_id) IS NULL AS is_current
-        |FROM chg ORDER BY user_id, version""".stripMargin,
-    "q_snapshot_diff" ->
-      """SELECT CAST(2 AS BIGINT) AS snap_a, CAST(5 AS BIGINT) AS snap_b,
-        |  count(*) FILTER (WHERE event_id // 2000 <= 2) AS rows_a,
-        |  count(*) FILTER (WHERE event_id // 2000 <= 5) AS rows_b,
-        |  count(*) FILTER (WHERE event_id // 2000 <= 5)
-        |    - count(*) FILTER (WHERE event_id // 2000 <= 2) AS delta
-        |FROM events""".stripMargin,
-    "q_partitions_asof" ->
-      """SELECT year(ts) AS yr, count(*) AS n_rows,
-        |  round(sum(value),4) AS sum_val
-        |FROM events WHERE event_id // 2000 <= 2
-        |GROUP BY year(ts) ORDER BY yr""".stripMargin,
-    "q_session_filter" ->
-      s"""SELECT tick_id, symbol, date_trunc('second', ts) AS ts_s,
-        |  bid, ask
-        |FROM $ticksSql t
-        |WHERE (hour(ts) = 7 OR hour(ts) = 13) AND minute(ts) >= 50
-        |ORDER BY symbol, tick_id""".stripMargin,
-    "q_downsample_1s" ->
-      s"""SELECT symbol, date_trunc('second', ts) AS ts_s,
-        |  min(tick_id) AS tick_id,
-        |  arg_min(bid, tick_id) AS bid,
-        |  arg_min(ask, tick_id) AS ask
-        |FROM $ticksSql t
-        |WHERE (hour(ts) = 7 OR hour(ts) = 13) AND minute(ts) >= 50
-        |GROUP BY symbol, date_trunc('second', ts)
-        |ORDER BY symbol, ts_s""".stripMargin,
-    "q_daily_window_counts" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date,
-        |  count(*) FILTER (WHERE hour(ts) = 7 AND minute(ts) >= 50) AS ticks_window1,
-        |  count(*) FILTER (WHERE hour(ts) = 13 AND minute(ts) >= 50) AS ticks_window2
-        |FROM $ticksSql t
-        |WHERE (hour(ts) = 7 OR hour(ts) = 13) AND minute(ts) >= 50
-        |GROUP BY strftime(ts, '%Y-%m-%d') ORDER BY date""".stripMargin,
-    "q_ffill" ->
-      s"""SELECT tick_id, symbol,
-        |  CASE WHEN bid < 10 THEN NULL ELSE bid END AS bid_raw,
-        |  last_value(CASE WHEN bid < 10 THEN NULL ELSE bid END IGNORE NULLS)
-        |    OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bid_filled
-        |FROM $ticksSql t ORDER BY symbol, tick_id""".stripMargin,
-    "q_tick_dedup" ->
-      s"""SELECT tick_id, symbol, ts_m, bid FROM (
-        |  SELECT tick_id, symbol, date_trunc('minute', ts) AS ts_m, bid,
-        |    row_number() OVER (PARTITION BY symbol, date_trunc('minute', ts)
-        |      ORDER BY tick_id) AS rn
-        |  FROM $ticksSql t) x
-        |WHERE rn = 1 ORDER BY symbol, ts_m""".stripMargin,
-    "q_tz_shift" ->
-      s"""SELECT tick_id, symbol,
-        |  date_trunc('second', ts + INTERVAL 2 HOUR) AS ts_shifted,
-        |  hour(ts + INTERVAL 2 HOUR) AS hour_shifted
-        |FROM $ticksSql t ORDER BY tick_id""".stripMargin,
-    "q_ohlc_bars" ->
-      s"""SELECT symbol, date_trunc('hour', ts) AS bar_ts,
-        |  arg_min(bid, tick_id) AS open, max(bid) AS high,
-        |  min(bid) AS low, arg_max(bid, tick_id) AS close,
-        |  count(*) AS n_ticks
-        |FROM $ticksSql t GROUP BY symbol, date_trunc('hour', ts)
-        |ORDER BY symbol, bar_ts""".stripMargin,
-    "q_vwap" ->
-      """SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  CAST((_n * 200 + _d) // (_d * 2) AS DOUBLE) / 10000.0 AS vwap,
-        |  total_qty, n_trades FROM (
-        |  SELECT user_id AS symbol, CAST(ts AS DATE) AS _date,
-        |    CAST(sum(CAST(round(value * 100.0, 0) AS BIGINT)
-        |      * CAST(props->>'$.k' AS INT)) AS BIGINT) AS _n,
-        |    CAST(nullif(sum(CAST(props->>'$.k' AS INT)), 0) AS BIGINT) AS _d,
-        |    CAST(sum(CAST(props->>'$.k' AS INT)) AS BIGINT) AS total_qty,
-        |    count(*) AS n_trades
-        |  FROM events GROUP BY user_id, CAST(ts AS DATE)) x
-        |ORDER BY symbol, date""".stripMargin,
-    "q_features_spread" ->
-      s"""SELECT tick_id, symbol, greatest(ask - bid, 0) AS spread,
-        |  (bid + ask) / 2.0 AS mid
-        |FROM $ticksSql t ORDER BY tick_id""".stripMargin,
-    "q_rolling_stats" ->
-      s"""SELECT tick_id, symbol,
-        |  round(avg(bid) OVER w, 4) AS roll_avg,
-        |  round(stddev_samp(bid) OVER w, 4) AS roll_std
-        |FROM $ticksSql t
-        |WINDOW w AS (PARTITION BY symbol ORDER BY tick_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY symbol, tick_id""".stripMargin,
-    "q_log_returns" ->
-      s"""SELECT tick_id, symbol,
-        |  CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev) END
-        |    AS log_ret
-        |FROM (SELECT tick_id, symbol, bid,
-        |    lag(bid, 1) OVER (PARTITION BY symbol ORDER BY tick_id) AS prev
-        |  FROM $ticksSql t) x
-        |ORDER BY symbol, tick_id""".stripMargin,
-    // D4 — `round(z,4) + 0.0`: the D60 negative-zero normalization
-    // (tiny negative z rounds to -0.0 under DuckDB's fp round, +0.0
-    // under Spark's BigDecimal round; 3 cells at sf0.1 — found by the
-    // round-12 full-registry strict sweep before the driver could).
-    "q_anomaly_zscore" ->
-      s"""SELECT tick_id, symbol, round(z, 4) + 0.0 AS zscore, abs(z) > 3.0 AS is_anomaly
-        |FROM (SELECT tick_id, symbol,
-        |    CASE WHEN stddev_samp(bid) OVER (PARTITION BY symbol) <> 0 THEN
-        |      (bid - avg(bid) OVER (PARTITION BY symbol))
-        |        / stddev_samp(bid) OVER (PARTITION BY symbol) END AS z
-        |  FROM $ticksSql t) x
-        |ORDER BY symbol, tick_id""".stripMargin,
-    "q_anomaly_threshold" ->
-      """WITH thr AS (SELECT quantile_cont(value, 0.92) AS t0,
-        |    quantile_cont(value, 0.995) AS t1 FROM events)
-        |SELECT 92.0 AS pct, round(t0, 4) AS threshold,
-        |  (SELECT count(*) FROM events WHERE value > thr.t0) AS n_above FROM thr
-        |UNION ALL
-        |SELECT 99.5 AS pct, round(t1, 4) AS threshold,
-        |  (SELECT count(*) FROM events WHERE value > thr.t1) AS n_above FROM thr
-        |ORDER BY pct""".stripMargin,
-    "q_resample_ticks" ->
-      s"""WITH b AS (SELECT tick_id, symbol, strftime(ts, '%Y-%m-%d') AS date, bid,
-        |    row_number() OVER (PARTITION BY symbol, strftime(ts, '%Y-%m-%d')
-        |      ORDER BY tick_id) AS rn,
-        |    count(*) OVER (PARTITION BY symbol, strftime(ts, '%Y-%m-%d')) AS cnt
-        |  FROM $ticksSql t),
-        |g AS (SELECT DISTINCT symbol, date, cnt FROM b),
-        |idx AS (SELECT symbol, date, i,
-        |    CASE WHEN cnt = 1 THEN 1 ELSE (i * (cnt - 1)) // 7 + 1 END AS target_rn
-        |  FROM g, (SELECT unnest(range(8)) AS i) s)
-        |SELECT idx.symbol, idx.date, idx.i, b.rn AS src_rn, b.bid AS bid
-        |FROM idx JOIN b ON b.symbol = idx.symbol AND b.date = idx.date
-        |  AND b.rn = idx.target_rn
-        |ORDER BY idx.symbol, idx.date, idx.i""".stripMargin,
-    "q_chrono_split" ->
-      """WITH days AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date FROM events),
-        |d2 AS (SELECT date, row_number() OVER (ORDER BY date) AS rn,
-        |    count(*) OVER () AS n FROM days)
-        |SELECT date, rn,
-        |  CASE WHEN rn <= floor(n * 0.6) THEN 'train'
-        |       WHEN rn <= floor(n * 0.6) + floor(n * 0.2) THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM d2 ORDER BY date""".stripMargin,
-    "q_standard_scale" ->
-      """WITH s AS (SELECT avg(value) AS mu, stddev_samp(value) AS sigma
-        |  FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00')
-        |SELECT event_id,
-        |  CASE WHEN sigma <> 0 THEN round((value - mu) / sigma, 4) + 0.0
-        |    END AS scaled
-        |FROM events, s ORDER BY event_id""".stripMargin,
-    "q_standard_scale_multi" ->
-      s"""WITH t AS (SELECT * FROM $ticksSql tk),
-        |s AS (SELECT avg(bid) AS mu_bid, stddev_samp(bid) AS sigma_bid,
-        |    avg(ask) AS mu_ask, stddev_samp(ask) AS sigma_ask
-        |  FROM t WHERE ts <= TIMESTAMP '2024-01-15 00:00:00')
-        |SELECT tick_id,
-        |  CASE WHEN sigma_bid <> 0
-        |    THEN round((bid - mu_bid) / sigma_bid, 4) + 0.0 END AS bid_scaled,
-        |  CASE WHEN sigma_ask <> 0
-        |    THEN round((ask - mu_ask) / sigma_ask, 4) + 0.0 END AS ask_scaled
-        |FROM t, s ORDER BY tick_id""".stripMargin,
-    // D69 — D9's ranges with the purge tail carved out of each train
-    // window and the embargo band after each test window (folds 4,
-    // step 5, train 10, test 3, purge 2, embargo 2 — the registry
-    // constants spelled inline like D9).
-    "q_purged_cv" ->
-      """SELECT fold, date, role FROM (
-        |  SELECT fold, date,
-        |    CASE WHEN rn >= fold * 5 + 1 AND rn < fold * 5 + 9
-        |        THEN 'train'
-        |      WHEN rn >= fold * 5 + 9 AND rn < fold * 5 + 11
-        |        THEN 'purged'
-        |      WHEN rn >= fold * 5 + 11 AND rn < fold * 5 + 14
-        |        THEN 'test'
-        |      WHEN rn >= fold * 5 + 14 AND rn < fold * 5 + 16
-        |        THEN 'embargo'
-        |    END AS role
-        |  FROM (SELECT date, row_number() OVER (ORDER BY date) AS rn
-        |    FROM (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date
-        |      FROM events) d) d2,
-        |    (SELECT unnest(range(4)) AS fold) f) x
-        |WHERE role IS NOT NULL ORDER BY fold, date""".stripMargin,
-    "q_walk_forward" ->
-      """SELECT fold, date, role FROM (
-        |  SELECT fold, date,
-        |    CASE WHEN rn >= fold * 5 + 1 AND rn < fold * 5 + 11 THEN 'train'
-        |         WHEN rn >= fold * 5 + 11 AND rn < fold * 5 + 14 THEN 'test'
-        |    END AS role
-        |  FROM (SELECT date, row_number() OVER (ORDER BY date) AS rn
-        |    FROM (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date FROM events) d) d2,
-        |    (SELECT unnest(range(4)) AS fold) f) x
-        |WHERE role IS NOT NULL ORDER BY fold, date""".stripMargin,
-    "q_drawdown" ->
-      s"""SELECT tick_id, symbol, cummax,
-        |  CASE WHEN cummax <> 0 THEN (cummax - bid) / cummax END AS drawdown
-        |FROM (SELECT tick_id, symbol, bid,
-        |    max(bid) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cummax
-        |  FROM $ticksSql t) x
-        |ORDER BY symbol, tick_id""".stripMargin,
-    // D26 — all exact ints: cent compares, tick counts, window sums
-    // CAST AS BIGINT (HUGEINT rule); zero-fill via the roster join.
-    "q_drawdown_duration" ->
-      s"""WITH m AS (
-        |  SELECT symbol, below,
-        |    CAST(sum(strt) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS stretch_id
-        |  FROM (
-        |    SELECT symbol, tick_id, below,
-        |      CASE WHEN below = 1 AND coalesce(lag(below, 1) OVER (
-        |        PARTITION BY symbol ORDER BY tick_id), 0) = 0
-        |        THEN 1 ELSE 0 END AS strt
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CASE WHEN cents < max(cents) OVER (
-        |          PARTITION BY symbol ORDER BY tick_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          THEN 1 ELSE 0 END AS below
-        |      FROM (SELECT symbol, tick_id,
-        |          CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |        FROM $ticksSql t) y) z) zz),
-        |st AS (SELECT symbol, stretch_id, count(*) AS len
-        |  FROM m WHERE below = 1 GROUP BY symbol, stretch_id),
-        |per AS (SELECT symbol, count(*) AS n_stretches,
-        |    CAST(sum(len) AS BIGINT) AS n_underwater,
-        |    max(len) AS max_stretch_ticks
-        |  FROM st GROUP BY symbol)
-        |SELECT r.symbol,
-        |  coalesce(per.n_stretches, 0) AS n_stretches,
-        |  coalesce(per.n_underwater, 0) AS n_underwater,
-        |  coalesce(per.max_stretch_ticks, 0) AS max_stretch_ticks
-        |FROM (SELECT DISTINCT symbol FROM $ticksSql t) r
-        |LEFT JOIN per ON r.symbol = per.symbol
-        |ORDER BY r.symbol""".stripMargin,
-    // Realized vol: intraday lag (partition includes the day), ln
-    // parity per q_log_returns, aggregate round(4).
-    "q_realized_vol" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  round(sum(r * r), 4) AS realized_vol,
-        |  count(r) AS n_returns
-        |FROM (SELECT symbol, _date,
-        |    CASE WHEN prev > 0 AND bid > 0
-        |      THEN ln(bid / prev) END AS r
-        |  FROM (SELECT symbol, CAST(ts AS DATE) AS _date, bid,
-        |      lag(bid, 1) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |        ORDER BY tick_id) AS prev
-        |    FROM $ticksSql t) y) x
-        |GROUP BY symbol, _date
-        |ORDER BY symbol, date""".stripMargin,
-    // D43 — the oracle computes each rung DIRECTLY from the fact
-    // (per-scale arg_min grids); equivalent to the Spark cascade
-    // because first-tick-per-bucket is associative over nested
-    // scales. Generated from the same sigScales constant.
-    "q_vol_signature" -> (sigScales.map { s =>
-      s"""SELECT symbol, CAST($s AS BIGINT) AS scale_s, rv, n_ret,
-        |  CASE WHEN n_ret > 0 THEN rv / CAST(n_ret AS DOUBLE)
-        |  END AS rv_per_ret
-        |FROM (
-        |  SELECT symbol, round(sum(r * r), 4) AS rv, count(r) AS n_ret
-        |  FROM (
-        |    SELECT symbol,
-        |      CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev)
-        |        END AS r
-        |    FROM (
-        |      SELECT symbol, _date, bucket, bid,
-        |        lag(bid) OVER (PARTITION BY symbol, _date
-        |          ORDER BY bucket) AS prev
-        |      FROM (
-        |        SELECT symbol, CAST(ts AS DATE) AS _date,
-        |          epoch_us(CAST(ts AS TIMESTAMP)) // ${s * 1000000L}
-        |            AS bucket,
-        |          arg_min(bid, tick_id) AS bid
-        |        FROM $ticksSql t
-        |        GROUP BY 1, 2, 3) g) l) q
-        |  GROUP BY symbol) a""".stripMargin
-    }.mkString("\nUNION ALL\n") + "\nORDER BY symbol, scale_s"),
-    // D42 — slope = quotient of unrounded aggregates over exact int
-    // cents, round(4) once; half-life = hard −ln2 literal over ln of
-    // the ROUNDED slope, NULL outside 0 < rho < 1.
-    "q_mean_reversion" ->
-      s"""SELECT symbol, n_pairs, rho,
-        |  CASE WHEN rho > 0 AND rho < 1
-        |    THEN round(-0.6931471805599453 / ln(rho), 4)
-        |  END AS halflife_ticks
-        |FROM (
-        |  SELECT symbol, count(cp) AS n_pairs,
-        |    CASE WHEN var_pop(cp) > 0
-        |      THEN round(covar_pop(c, cp) / var_pop(cp), 4)
-        |    END AS rho
-        |  FROM (
-        |    SELECT symbol, c,
-        |      lag(c) OVER (PARTITION BY symbol ORDER BY tick_id) AS cp
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS c
-        |      FROM $ticksSql t) p) q
-        |  GROUP BY symbol) agg
-        |ORDER BY symbol""".stripMargin,
-    "q_tick_rule" ->
-      s"""SELECT symbol,
-        |  CAST(sum(CASE WHEN prev IS NOT NULL AND bid > prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
-        |  CAST(sum(CASE WHEN prev IS NOT NULL AND bid < prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_down,
-        |  CAST(sum(CASE WHEN prev IS NOT NULL AND bid = prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |  CAST(sum(CASE WHEN prev IS NOT NULL AND bid > prev
-        |    THEN 1 ELSE 0 END)
-        |   - sum(CASE WHEN prev IS NOT NULL AND bid < prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS net_flow
-        |FROM (SELECT symbol, bid,
-        |    lag(bid, 1) OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS prev
-        |  FROM $ticksSql t) x
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // B10 — burst detection: threshold = exact percentile ROUNDED
-    // before the strict compare (integer rates sit on interpolation
-    // B11 — late audit: jittered arrival = us + pmod-hash(tick_id) %
-    // 20min − 10min (the F16 hash, first reduction pmod-spelled);
-    // running max over (arrival, tick_id) with a 1-PRECEDING frame
-    // (never late against itself); all µs exact int64.
-    "q_late_audit" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (
-        |  SELECT symbol, tick_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    epoch_us(CAST(ts AS TIMESTAMP))
-        |      + (${duckHashOrder("tick_id")}) % 1200000000 - 600000000
-        |      AS arr
-        |  FROM $ticksSql t),
-        |w AS (
-        |  SELECT symbol, us,
-        |    max(us) OVER (PARTITION BY symbol ORDER BY arr, tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS wm
-        |  FROM t)
-        |SELECT symbol, count(*) AS n_ticks,
-        |  CAST(sum(CASE WHEN wm IS NOT NULL AND us < wm - 60000000
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-        |  CAST(max(CASE WHEN wm IS NOT NULL AND wm - us > 0
-        |    THEN wm - us ELSE 0 END) AS BIGINT) AS max_lateness_us,
-        |  CAST(sum(CASE WHEN wm IS NOT NULL AND us < wm - 60000000
-        |      THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS late_ratio
-        |FROM w GROUP BY symbol ORDER BY symbol""".stripMargin
-    },
-    // B12 — bp compare cross-multiplied to pure int64; repair is the
-    // neighbor midpoint via the half-up integer formula.
-    "q_spike_repair" ->
-      s"""SELECT tick_id, symbol, cents, is_spike,
-        |  CASE WHEN is_spike THEN (prev + next + 1) // 2
-        |    ELSE cents END AS repaired_cents
-        |FROM (
-        |  SELECT tick_id, symbol, cents, prev, next,
-        |    prev IS NOT NULL AND next IS NOT NULL
-        |      AND abs(cents - prev) * 10000 > $spikeBp * prev
-        |      AND abs(cents - next) * 10000 > $spikeBp * next
-        |      AND (cents - prev) * (cents - next) > 0 AS is_spike
-        |  FROM (
-        |    SELECT tick_id, symbol,
-        |      CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |      lag(CAST(round(bid * 100.0, 0) AS BIGINT), 1)
-        |        OVER w AS prev,
-        |      lead(CAST(round(bid * 100.0, 0) AS BIGINT), 1)
-        |        OVER w AS next
-        |    FROM $ticksSql t
-        |    WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)) x) y
-        |ORDER BY tick_id""".stripMargin,
-    // D37 — effective spread: es2 = |2p − mid2| vs spread2 in doubled
-    // cents; avg e4 via the half-up integer spelling (Σ·100+n) div 2n.
-    // D54 — decomposition: D37's union/carry dual + a lead over the
-    // trade frame; exact signed int sums, one division chain to
-    // dollars, midpoint trades excluded (sign NULL).
-    "q_spread_decomp" ->
-      s"""WITH q AS (
-        |  SELECT user_id AS symbol, ts, 0 AS kind, event_id AS id,
-        |    CAST(NULL AS BIGINT) AS p,
-        |    CAST(round(value * 100.0, 0) AS BIGINT)
-        |      + CAST(round((value*1.0002+0.01) * 100.0, 0) AS BIGINT)
-        |      AS mid2
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |t AS (
-        |  SELECT user_id AS symbol, ts, 1 AS kind, event_id AS id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS p,
-        |    CAST(NULL AS BIGINT) AS mid2
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (
-        |  SELECT *,
-        |    last_value(mid2 IGNORE NULLS) OVER w AS q_mid2
-        |  FROM (SELECT * FROM q UNION ALL SELECT * FROM t) z
-        |  WINDOW w AS (PARTITION BY symbol ORDER BY ts, kind, id
-        |    ROWS UNBOUNDED PRECEDING)),
-        |tr AS (
-        |  SELECT symbol, p, q_mid2,
-        |    lead(q_mid2, $rsHorizon) OVER (PARTITION BY symbol
-        |      ORDER BY ts, id) AS mid2_fut
-        |  FROM u WHERE kind = 1),
-        |c AS (
-        |  SELECT symbol, p, q_mid2, mid2_fut,
-        |    CASE WHEN p * 2 > q_mid2 THEN 1
-        |         WHEN p * 2 < q_mid2 THEN -1 END AS sgn
-        |  FROM tr
-        |  WHERE q_mid2 IS NOT NULL AND mid2_fut IS NOT NULL),
-        |s AS (
-        |  SELECT symbol, count(*) AS n_signed,
-        |    CAST(sum(sgn * (p * 2 - q_mid2)) AS BIGINT) AS s_eff,
-        |    CAST(sum(sgn * (p * 2 - mid2_fut)) AS BIGINT) AS s_real,
-        |    CAST(sum(sgn * (mid2_fut - q_mid2)) AS BIGINT) AS s_imp
-        |  FROM c WHERE sgn IS NOT NULL GROUP BY symbol)
-        |SELECT symbol, n_signed,
-        |  CAST(s_eff AS DOUBLE) / n_signed / 2.0 / 10000.0 AS avg_eff,
-        |  CAST(s_real AS DOUBLE) / n_signed / 2.0 / 10000.0
-        |    AS avg_realized,
-        |  CAST(s_imp AS DOUBLE) / n_signed / 2.0 / 10000.0 AS avg_impact
-        |FROM s ORDER BY symbol""".stripMargin,
-    "q_effective_spread" ->
-      """WITH q AS (
-        |  SELECT user_id AS symbol, ts, 0 AS kind, event_id AS id,
-        |    CAST(NULL AS BIGINT) AS p,
-        |    CAST(round(value * 100.0, 0) AS BIGINT)
-        |      + CAST(round((value*1.0002+0.01) * 100.0, 0) AS BIGINT)
-        |      AS mid2,
-        |    (CAST(round((value*1.0002+0.01) * 100.0, 0) AS BIGINT)
-        |      - CAST(round(value * 100.0, 0) AS BIGINT)) * 2 AS spread2
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |t AS (
-        |  SELECT user_id AS symbol, ts, 1 AS kind, event_id AS id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS p,
-        |    CAST(NULL AS BIGINT) AS mid2, CAST(NULL AS BIGINT) AS spread2
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (
-        |  SELECT *,
-        |    last_value(mid2 IGNORE NULLS) OVER w AS q_mid2,
-        |    last_value(spread2 IGNORE NULLS) OVER w AS q_spread2
-        |  FROM (SELECT * FROM q UNION ALL SELECT * FROM t) z
-        |  WINDOW w AS (PARTITION BY symbol ORDER BY ts, kind, id
-        |    ROWS UNBOUNDED PRECEDING)),
-        |c AS (
-        |  SELECT symbol,
-        |    CASE WHEN q_mid2 IS NOT NULL THEN abs(p * 2 - q_mid2) END
-        |      AS es2,
-        |    q_spread2
-        |  FROM u WHERE kind = 1)
-        |SELECT symbol, count(*) AS n_trades, count(es2) AS n_quoted,
-        |  CASE WHEN count(es2) > 0 THEN
-        |    CAST((CAST(sum(coalesce(es2, 0)) AS BIGINT) * 100
-        |      + count(es2)) // (count(es2) * 2) AS DOUBLE) / 10000.0
-        |  END AS avg_eff_spread,
-        |  CAST(sum(CASE WHEN es2 < q_spread2 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_inside,
-        |  CAST(sum(CASE WHEN es2 > q_spread2 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outside,
-        |  CASE WHEN count(es2) > 0 THEN
-        |    CAST(sum(CASE WHEN es2 < q_spread2 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / count(es2) END AS inside_share
-        |FROM c GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // D36 — Lee-Ready: as-of via the union + IGNORE NULLS running
-    // last (quotes sort before trades at equal ts); mid test pure
-    // int64 in doubled cents; ask spelled exactly as ticksSql.
-    "q_lee_ready" ->
-      """WITH q AS (
-        |  SELECT user_id AS symbol, ts, 0 AS kind, event_id AS id,
-        |    CAST(NULL AS BIGINT) AS p,
-        |    CAST(round(value * 100.0, 0) AS BIGINT)
-        |      + CAST(round((value*1.0002+0.01) * 100.0, 0) AS BIGINT)
-        |      AS mid2
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |t AS (
-        |  SELECT user_id AS symbol, ts, 1 AS kind, event_id AS id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS p,
-        |    CAST(NULL AS BIGINT) AS mid2
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (
-        |  SELECT *, last_value(mid2 IGNORE NULLS) OVER (
-        |    PARTITION BY symbol ORDER BY ts, kind, id
-        |    ROWS UNBOUNDED PRECEDING) AS q_mid2
-        |  FROM (SELECT * FROM q UNION ALL SELECT * FROM t) z),
-        |c AS (
-        |  SELECT symbol, p, q_mid2,
-        |    lag(p) OVER (PARTITION BY symbol ORDER BY ts, id) AS prev_p
-        |  FROM u WHERE kind = 1),
-        |d AS (
-        |  SELECT symbol,
-        |    CASE WHEN q_mid2 IS NOT NULL AND p * 2 > q_mid2 THEN 'buy'
-        |         WHEN q_mid2 IS NOT NULL AND p * 2 < q_mid2 THEN 'sell'
-        |         WHEN prev_p IS NOT NULL AND p > prev_p THEN 'buy'
-        |         WHEN prev_p IS NOT NULL AND p < prev_p THEN 'sell'
-        |         ELSE 'none' END AS cls,
-        |    CASE WHEN q_mid2 IS NOT NULL AND p * 2 <> q_mid2 THEN 'mid'
-        |         WHEN prev_p IS NOT NULL AND p <> prev_p THEN 'tick'
-        |         ELSE 'none' END AS method
-        |  FROM c)
-        |SELECT symbol, count(*) AS n_trades,
-        |  CAST(sum(CASE WHEN cls = 'buy' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_buy,
-        |  CAST(sum(CASE WHEN cls = 'sell' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_sell,
-        |  CAST(sum(CASE WHEN method = 'mid' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_by_mid,
-        |  CAST(sum(CASE WHEN method = 'tick' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_by_tick,
-        |  CAST(sum(CASE WHEN cls = 'none' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_unclassified
-        |FROM d GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // B13 — TWAP: int64 time-weighted cent sums (day-bounded, no
-    // overflow), B8's half-up integer e4 formula — no double sum.
-    // D61 — TW quoted spread: the TWAP holding-interval discipline on
-    // exact-cent spreads; both ratios single IEEE divisions of exact
-    // int sums, unrounded; single-tick days NULL via nullif.
-    "q_tw_spread" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date, n_ticks,
-        |  CAST(_s AS DOUBLE) / CAST(_d AS DOUBLE) AS twq_spread_cents,
-        |  CAST(_ss AS DOUBLE) / CAST(n_ticks AS DOUBLE)
-        |    AS avg_spread_cents
-        |FROM (
-        |  SELECT symbol, _date,
-        |    CAST(sum(CASE WHEN dur IS NOT NULL THEN sp * dur
-        |      ELSE 0 END) AS BIGINT) AS _s,
-        |    nullif(CAST(sum(coalesce(dur, 0)) AS BIGINT), 0) AS _d,
-        |    CAST(sum(sp) AS BIGINT) AS _ss,
-        |    count(*) AS n_ticks
-        |  FROM (
-        |    SELECT symbol, _date, sp,
-        |      lead(us) OVER (PARTITION BY symbol, _date
-        |        ORDER BY tick_id) - us AS dur
-        |    FROM (
-        |      SELECT symbol, CAST(ts AS DATE) AS _date, tick_id,
-        |        CAST(round(ask * 100.0, 0) AS BIGINT)
-        |          - CAST(round(bid * 100.0, 0) AS BIGINT) AS sp,
-        |        epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |      FROM $ticksSql t) p) q
-        |  GROUP BY symbol, _date) agg
-        |ORDER BY symbol, date""".stripMargin,
-    "q_twap" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  CAST((_s * 200 + _d) // (_d * 2) AS DOUBLE) / 10000.0 AS twap,
-        |  n_weighted
-        |FROM (
-        |  SELECT symbol, _date,
-        |    CAST(sum(CASE WHEN dur IS NOT NULL THEN cents * dur
-        |      ELSE 0 END) AS BIGINT) AS _s,
-        |    nullif(CAST(sum(coalesce(dur, 0)) AS BIGINT), 0) AS _d,
-        |    count(dur) AS n_weighted
-        |  FROM (
-        |    SELECT symbol, _date, cents,
-        |      lead(us) OVER (PARTITION BY symbol, _date
-        |        ORDER BY tick_id) - us AS dur
-        |    FROM (
-        |      SELECT symbol, CAST(ts AS DATE) AS _date, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |        epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |      FROM $ticksSql t) p) q
-        |  GROUP BY symbol, _date) agg
-        |ORDER BY symbol, date""".stripMargin,
-    // D34 — RV and the bipower sum round(4) as aggregates; BV =
-    // rounded-sum × π/2 HARD literal, re-rounded; jump share divides
-    // the two ROUNDED aggregates (derived-from-rounded).
-    "q_bipower" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date, n_pairs,
-        |  rv, sum_bp,
-        |  round(sum_bp * 1.5707963267948966, 4) AS bv,
-        |  CASE WHEN rv > 0 THEN greatest(0.0,
-        |    1.0 - round(sum_bp * 1.5707963267948966, 4) / rv)
-        |  END AS jump_share
-        |FROM (
-        |  SELECT symbol, _date,
-        |    round(sum(r * r), 4) AS rv,
-        |    round(sum(abs(r) * abs(r_prev)), 4) AS sum_bp,
-        |    count(CASE WHEN r IS NOT NULL AND r_prev IS NOT NULL
-        |      THEN 1 END) AS n_pairs
-        |  FROM (
-        |    SELECT symbol, _date, r,
-        |      lag(r) OVER (PARTITION BY symbol, _date ORDER BY tick_id)
-        |        AS r_prev
-        |    FROM (
-        |      SELECT symbol, _date, tick_id,
-        |        CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev)
-        |          END AS r
-        |      FROM (
-        |        SELECT symbol, CAST(ts AS DATE) AS _date, tick_id, bid,
-        |          lag(bid) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |            ORDER BY tick_id) AS prev
-        |        FROM $ticksSql t) p) q) s
-        |  GROUP BY symbol, _date) agg
-        |ORDER BY symbol, date""".stripMargin,
-    // D40 — each semivariance half round(4) as an aggregate; SJ and
-    // up_share derive from the ROUNDED halves. Zero returns join
-    // neither half; an all-NULL day emits NULL halves (outer CASE).
-    "q_semivariance" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  n_ret, n_up, n_down, rs_up, rs_down,
-        |  rs_up - rs_down AS signed_jump,
-        |  CASE WHEN rs_up + rs_down > 0
-        |    THEN rs_up / (rs_up + rs_down) END AS up_share
-        |FROM (
-        |  SELECT symbol, _date,
-        |    round(sum(CASE WHEN r IS NOT NULL THEN
-        |      CASE WHEN r > 0 THEN r * r ELSE 0.0 END END), 4) AS rs_up,
-        |    round(sum(CASE WHEN r IS NOT NULL THEN
-        |      CASE WHEN r < 0 THEN r * r ELSE 0.0 END END), 4) AS rs_down,
-        |    count(r) AS n_ret,
-        |    CAST(sum(CASE WHEN r > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_up,
-        |    CAST(sum(CASE WHEN r < 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_down
-        |  FROM (
-        |    SELECT symbol, _date,
-        |      CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev)
-        |        END AS r
-        |    FROM (
-        |      SELECT symbol, CAST(ts AS DATE) AS _date, tick_id, bid,
-        |        lag(bid) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |          ORDER BY tick_id) AS prev
-        |      FROM $ticksSql t) p) q
-        |  GROUP BY symbol, _date) agg
-        |ORDER BY symbol, date""".stripMargin,
-    // D41 — 3-median as a+b+c−max−min (branch-free, identical IEEE
-    // spelling); Σmed² and RV round(4) as aggregates; MedRV = rounded
-    // sum × HARD constant 1.4193583020224412 × exact-int N/(N−2),
-    // re-rounded; jump share divides the two rounded aggregates.
-    "q_medrv" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  n_trip, rv, sum_med2,
-        |  CASE WHEN n_trip > 2 THEN
-        |    round(1.4193583020224412 * sum_med2 *
-        |      (CAST(n_trip AS DOUBLE) / CAST(n_trip - 2 AS DOUBLE)), 4)
-        |  END AS medrv,
-        |  CASE WHEN rv > 0 AND n_trip > 2 THEN greatest(0.0,
-        |    1.0 - round(1.4193583020224412 * sum_med2 *
-        |      (CAST(n_trip AS DOUBLE) / CAST(n_trip - 2 AS DOUBLE)), 4)
-        |      / rv)
-        |  END AS med_jump_share
-        |FROM (
-        |  SELECT symbol, _date,
-        |    round(sum(r * r), 4) AS rv,
-        |    round(sum(med3 * med3), 4) AS sum_med2,
-        |    count(med3) AS n_trip
-        |  FROM (
-        |    SELECT symbol, _date,  r,
-        |      CASE WHEN r IS NOT NULL AND r1 IS NOT NULL
-        |          AND r2 IS NOT NULL THEN
-        |        abs(r) + abs(r1) + abs(r2)
-        |          - greatest(abs(r), abs(r1), abs(r2))
-        |          - least(abs(r), abs(r1), abs(r2))
-        |      END AS med3
-        |    FROM (
-        |      SELECT symbol, _date, r,
-        |        lag(r) OVER (PARTITION BY symbol, _date ORDER BY tick_id)
-        |          AS r1,
-        |        lag(r, 2) OVER (PARTITION BY symbol, _date
-        |          ORDER BY tick_id) AS r2
-        |      FROM (
-        |        SELECT symbol, _date, tick_id,
-        |          CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev)
-        |            END AS r
-        |        FROM (
-        |          SELECT symbol, CAST(ts AS DATE) AS _date, tick_id, bid,
-        |            lag(bid) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |              ORDER BY tick_id) AS prev
-        |          FROM $ticksSql t) p) q) s) m
-        |  GROUP BY symbol, _date) agg
-        |ORDER BY symbol, date""".stripMargin,
-    // D44 — BNS jump test: RV / Σ|r||r₋₁| / Σ tri-power all round(4)
-    // as aggregates (sf0.01 day sums 5.8e-6..1.25e3 — the tolerance
-    // swallows sum-order drift AND pow() libm ulps); BV/TQ multiply
-    // the rounded sums by HARD literals (π/2, μ₄⁄₃⁻³) + exact-int
-    // n_trip; z derives from the rounded aggregates with θ as the
-    // hard literal; jump_99 compares rounded z to Φ⁻¹(0.99).
-    "q_bns_jump" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  n_ret, n_trip, rv, bv, tq, z_stat,
-        |  CASE WHEN z_stat IS NOT NULL THEN z_stat > 2.3263 END
-        |    AS jump_99
-        |FROM (
-        |  SELECT symbol, _date, n_ret, n_trip, rv, bv, tq,
-        |    CASE WHEN rv > 0 AND bv > 0 AND n_ret > 0 THEN
-        |      round((1.0 - bv / rv) / sqrt(0.6089937538621326 *
-        |        greatest(1.0, tq / (bv * bv)) /
-        |        CAST(n_ret AS DOUBLE)), 4)
-        |    END AS z_stat
-        |  FROM (
-        |    SELECT symbol, _date, n_ret, n_trip, rv,
-        |      round(sum_bp * 1.5707963267948966, 4) AS bv,
-        |      round(1.7434720745319836 * CAST(n_trip AS DOUBLE) *
-        |        sum_tp, 4) AS tq
-        |    FROM (
-        |      SELECT symbol, _date,
-        |        round(sum(r * r), 4) AS rv,
-        |        round(sum(abs(r) * abs(r1)), 4) AS sum_bp,
-        |        round(sum(tp), 4) AS sum_tp,
-        |        count(r) AS n_ret,
-        |        count(tp) AS n_trip
-        |      FROM (
-        |        SELECT symbol, _date, r, r1,
-        |          CASE WHEN r IS NOT NULL AND r1 IS NOT NULL
-        |              AND r2 IS NOT NULL THEN
-        |            pow(abs(r), 1.3333333333333333) *
-        |              pow(abs(r1), 1.3333333333333333) *
-        |              pow(abs(r2), 1.3333333333333333)
-        |          END AS tp
-        |        FROM (
-        |          SELECT symbol, _date, r,
-        |            lag(r) OVER (PARTITION BY symbol, _date
-        |              ORDER BY tick_id) AS r1,
-        |            lag(r, 2) OVER (PARTITION BY symbol, _date
-        |              ORDER BY tick_id) AS r2
-        |          FROM (
-        |            SELECT symbol, _date, tick_id,
-        |              CASE WHEN prev > 0 AND bid > 0 THEN ln(bid / prev)
-        |                END AS r
-        |            FROM (
-        |              SELECT symbol, CAST(ts AS DATE) AS _date, tick_id,
-        |                bid,
-        |                lag(bid) OVER (PARTITION BY symbol,
-        |                  CAST(ts AS DATE) ORDER BY tick_id) AS prev
-        |              FROM $ticksSql t) p) q) s) u
-        |      GROUP BY symbol, _date) agg) d1) d2
-        |ORDER BY symbol, date""".stripMargin,
-    // D45 — exact int64 contributions sign·(cents_{t+l} − cents_t);
-    // the avg is one IEEE division of exact sums, UNROUNDED (D21's
-    // rule). Lead columns and union branches GENERATED from respLags
-    // so the lag list has one spelling in both engines.
-    "q_price_response" ->
-      s"""WITH base AS (
-        |  SELECT symbol, tick_id, cents,
-        |    lag(cents) OVER w AS prev,
-        |${respLags.map(l =>
-            s"    lead(cents, $l) OVER w AS fwd_$l").mkString(",\n")}
-        |  FROM (
-        |    SELECT symbol, tick_id,
-        |      CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |    FROM $ticksSql t)
-        |  WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)
-        |), signed AS (
-        |  SELECT symbol, cents,
-        |    CASE WHEN prev IS NOT NULL AND cents > prev THEN 1
-        |      WHEN prev IS NOT NULL AND cents < prev THEN -1
-        |    END AS sign,
-        |${respLags.map(l => s"    fwd_$l").mkString(",\n")}
-        |  FROM base
-        |), u AS (
-        |${respLags.map(l =>
-            s"""  SELECT symbol, $l AS lag,
-              |    CASE WHEN sign IS NOT NULL AND fwd_$l IS NOT NULL
-              |      THEN sign * (fwd_$l - cents) END AS contrib
-              |  FROM signed""".stripMargin).mkString("\n  UNION ALL\n")}
-        |)
-        |SELECT symbol, lag, count(contrib) AS n_obs,
-        |  avg(contrib) AS resp_cents
-        |FROM u GROUP BY symbol, lag
-        |ORDER BY symbol, lag""".stripMargin,
-    // D46 — the ℓ-back nonzero sign is lag(sign, ℓ) over the FILTERED
-    // frame (D32's zero-transparency generalized); counts exact
-    // int64, repeat fraction one IEEE division, unrounded. Lag
-    // branches generated from respLags.
-    "q_flow_persistence" ->
-      s"""WITH sg AS (
-        |  SELECT symbol, tick_id,
-        |    CASE WHEN prev IS NOT NULL AND cents > prev THEN 1
-        |      WHEN prev IS NOT NULL AND cents < prev THEN -1
-        |    END AS sign
-        |  FROM (
-        |    SELECT symbol, tick_id, cents,
-        |      lag(cents) OVER (PARTITION BY symbol ORDER BY tick_id)
-        |        AS prev
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |      FROM $ticksSql t) c) p),
-        |f AS (SELECT symbol, tick_id, sign FROM sg
-        |  WHERE sign IS NOT NULL),
-        |l AS (
-        |  SELECT symbol, sign,
-        |${respLags.map(l =>
-            s"""    lag(sign, $l) OVER (PARTITION BY symbol
-              |      ORDER BY tick_id) AS back_$l""".stripMargin)
-           .mkString(",\n")}
-        |  FROM f),
-        |u AS (
-        |${respLags.map(l =>
-            s"""  SELECT symbol, $l AS lag, sign, back_$l AS back
-              |  FROM l""".stripMargin).mkString("\n  UNION ALL\n")}
-        |),
-        |agg AS (
-        |  SELECT symbol, lag, count(back) AS n_pairs,
-        |    CAST(sum(CASE WHEN back = sign THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_repeat
-        |  FROM u GROUP BY symbol, lag)
-        |SELECT symbol, lag, n_pairs, n_repeat,
-        |  CASE WHEN n_pairs > 0 THEN
-        |    CAST(n_repeat AS DOUBLE) / CAST(n_pairs AS DOUBLE)
-        |  END AS p_repeat
-        |FROM agg
-        |ORDER BY symbol, lag""".stripMargin,
-    // D48 — D4's discipline: μ/σ unrounded aggregate doubles, z
-    // derived then round(4) once, flag on the unrounded z; moves are
-    // exact |Δcents| per (symbol, day).
-    "q_seasonal_anomaly" ->
-      s"""WITH mv AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(hour(ts) * 60 + minute(ts) AS INT) AS minute_od,
-        |    CAST(abs(cents - prev) AS DOUBLE) AS mv
-        |  FROM (
-        |    SELECT symbol, tick_id, ts, cents,
-        |      lag(cents) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |        ORDER BY tick_id) AS prev
-        |    FROM (
-        |      SELECT symbol, tick_id, ts,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |      FROM $ticksSql t) c) p
-        |  WHERE prev IS NOT NULL),
-        |base AS (SELECT minute_od, avg(mv) AS mu,
-        |    stddev_samp(mv) AS sigma
-        |  FROM mv GROUP BY minute_od)
-        |SELECT symbol, tick_id, minute_od, mv,
-        |  round(CASE WHEN sigma <> 0 THEN (mv - mu) / sigma END, 4)
-        |    AS zscore
-        |FROM mv JOIN base USING (minute_od)
-        |WHERE abs(CASE WHEN sigma <> 0 THEN (mv - mu) / sigma END)
-        |  > $seasonalZThr
-        |ORDER BY symbol, tick_id""".stripMargin,
-    // D51 — Newey–West: per-lag exact sums via generated UNION ALL
-    // (the stack dual), γ̂ and the Bartlett combination through the
-    // SHARED nwGammaExpr / nwSigmaExpr spellings — no float aggregate
-    // past the exact sums in either engine.
-    "q_newey_west" -> {
-      import graft.operators.Microstructure.{nwGammaExpr, nwSigmaExpr}
-      val perK = (0 to nwMaxLag).map { k =>
-        if (k == 0)
-          """SELECT symbol, 0 AS k, count(*) AS n_k,
-            |    CAST(sum(d * d) AS BIGINT) AS sxy,
-            |    CAST(sum(d) AS BIGINT) AS sx,
-            |    CAST(sum(d) AS BIGINT) AS sy
-            |  FROM moves GROUP BY symbol""".stripMargin
-        else
-          s"""SELECT symbol, $k AS k, count(*) AS n_k,
-            |    CAST(sum(d * dl) AS BIGINT) AS sxy,
-            |    CAST(sum(d) AS BIGINT) AS sx,
-            |    CAST(sum(dl) AS BIGINT) AS sy
-            |  FROM (SELECT symbol, d, lag(d, $k) OVER (
-            |      PARTITION BY symbol ORDER BY tick_id) AS dl
-            |    FROM moves) x
-            |  WHERE dl IS NOT NULL GROUP BY symbol""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      val pivots = (0 to nwMaxLag).map(k =>
-        s"max(CASE WHEN k = $k THEN gamma END) AS g$k").mkString(",\n    ")
-      s"""WITH c AS (SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |  FROM $ticksSql t),
-        |moves AS (SELECT symbol, tick_id, d FROM (
-        |    SELECT symbol, tick_id, cents - lag(cents, 1) OVER (
-        |      PARTITION BY symbol ORDER BY tick_id) AS d FROM c) x
-        |  WHERE d IS NOT NULL),
-        |tot AS (SELECT symbol, count(*) AS n, CAST(sum(d) AS BIGINT) AS s
-        |  FROM moves GROUP BY symbol),
-        |pk AS ($perK),
-        |gg AS (SELECT pk.symbol, pk.k, pk.n_k, pk.sxy, pk.sx, pk.sy,
-        |    tot.n, CAST(tot.s AS DOUBLE) / tot.n AS m
-        |  FROM pk JOIN tot USING (symbol)),
-        |ga AS (SELECT symbol, k, n, $nwGammaExpr AS gamma FROM gg),
-        |pv AS (SELECT symbol, max(n) AS n_moves,
-        |    $pivots
-        |  FROM ga GROUP BY symbol)
-        |SELECT symbol, n_moves, round(g0, 4) AS gamma0,
-        |  round(${nwSigmaExpr(nwMaxLag)}, 4) AS nw_var,
-        |  round(CASE WHEN g0 <> 0
-        |    THEN (${nwSigmaExpr(nwMaxLag)}) / g0 END, 4) AS inflation
-        |FROM pv ORDER BY symbol""".stripMargin
-    },
-    // D55 — impact exponent: D50's tape/fill derivation, ln of exact
-    // ratio divisions, covar_pop/var_pop slope round(4) (D18 class),
-    // singular fills excluded.
-    "q_impact_exponent" ->
-      s"""WITH p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS INT), 0) AS k
-        |  FROM events),
-        |t AS (SELECT * FROM p WHERE k > 0),
-        |d AS (SELECT symbol, day, CAST(sum(k) AS BIGINT) AS day_qty,
-        |    CAST(sum(cents * k) AS BIGINT) AS day_pv
-        |  FROM t GROUP BY symbol, day),
-        |f AS (SELECT t.symbol,
-        |    CAST((t.cents * d.day_qty - d.day_pv) * 10000 AS DOUBLE)
-        |      / d.day_pv AS slip_bp,
-        |    CAST(t.k AS DOUBLE) / d.day_qty AS part,
-        |    t.k, d.day_qty
-        |  FROM t JOIN d USING (symbol, day)
-        |  WHERE t.event_id % $tcaFillEvery = 0),
-        |g AS (SELECT symbol, ln(part) AS x, ln(abs(slip_bp)) AS y
-        |  FROM f WHERE abs(slip_bp) > 0 AND k < day_qty)
-        |SELECT symbol, count(*) AS n_fills,
-        |  round(CASE WHEN var_pop(x) > 0
-        |    THEN covar_pop(y, x) / var_pop(x) END, 4) AS impact_exp
-        |FROM g GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // D55 over the PLANTED-impact events: q_impact_exponent's body
-    // on the richimpact CTE (sqrt-law cents, engine-identical).
-    "q_impact_exponent_rich" ->
-      s"""WITH ${RichCorpus.duckImpactCte},
-        |p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS INT), 0) AS k
-        |  FROM richimpact),
-        |t AS (SELECT * FROM p WHERE k > 0),
-        |d AS (SELECT symbol, day, CAST(sum(k) AS BIGINT) AS day_qty,
-        |    CAST(sum(cents * k) AS BIGINT) AS day_pv
-        |  FROM t GROUP BY symbol, day),
-        |f AS (SELECT t.symbol,
-        |    CAST((t.cents * d.day_qty - d.day_pv) * 10000 AS DOUBLE)
-        |      / d.day_pv AS slip_bp,
-        |    CAST(t.k AS DOUBLE) / d.day_qty AS part,
-        |    t.k, d.day_qty
-        |  FROM t JOIN d USING (symbol, day)
-        |  WHERE t.event_id % 1 = 0),
-        |g AS (SELECT symbol, ln(part) AS x, ln(abs(slip_bp)) AS y
-        |  FROM f WHERE abs(slip_bp) > 0 AND k < day_qty)
-        |SELECT symbol, count(*) AS n_fills,
-        |  round(CASE WHEN var_pop(x) > 0
-        |    THEN covar_pop(y, x) / var_pop(x) END, 4) AS impact_exp
-        |FROM g GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // D56 — leverage effect: exact-cent diffs, five exact int64 sums,
-    // the shared corrFromSums IEEE spelling, round(4) once.
-    "q_leverage_effect" ->
-      s"""WITH t AS (SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c
-        |  FROM $ticksSql t),
-        |d AS (SELECT symbol, tick_id,
-        |    c - lag(c) OVER (PARTITION BY symbol ORDER BY tick_id) AS d
-        |  FROM t),
-        |p AS (SELECT symbol, d,
-        |    abs(lead(d) OVER (PARTITION BY symbol ORDER BY tick_id))
-        |      AS a_next
-        |  FROM d),
-        |g AS (SELECT symbol, count(*) AS n_pairs,
-        |    CAST(sum(d) AS BIGINT) AS sx,
-        |    CAST(sum(a_next) AS BIGINT) AS sy,
-        |    CAST(sum(d * a_next) AS BIGINT) AS sxy,
-        |    CAST(sum(d * d) AS BIGINT) AS sxx,
-        |    CAST(sum(a_next * a_next) AS BIGINT) AS syy
-        |  FROM p WHERE d IS NOT NULL AND a_next IS NOT NULL
-        |  GROUP BY symbol)
-        |SELECT symbol, n_pairs,
-        |  round(${Microstructure.corrFromSums("sx", "sy", "sxy",
-             "sxx", "syy", "n_pairs")}, 4) AS leverage_corr
-        |FROM g ORDER BY symbol""".stripMargin,
-    // D60 — cointegration screen: exact-cent daily closes (max_by
-    // tick_id), ONE lag window + ONE 17-sum aggregate, beta/alpha via
-    // the shared olsSlopeFromSums spellings, the residual AR(1) sums
-    // expanded algebraically (arCrossFromSums — shared verbatim with
-    // the Spark side), rho round(4), half-life from the ROUNDED rho
-    // (float sweep).
-    // D64 — volatility cones: the D63 daily-rv frame, per-horizon
-    // rolling ROWS sums (full windows only), engine exact-percentile
-    // round(4) with picked-int min/max; horizon CTEs GENERATED from
-    // the shared coneHorizons constant.
-    "q_vol_cones" -> {
-      val hs = coneHorizons.map { h =>
-        s"""f$h AS (SELECT symbol,
-          |    sum(rv) OVER (PARTITION BY symbol ORDER BY _date
-          |      ROWS BETWEEN ${h - 1} PRECEDING AND CURRENT ROW)
-          |      AS roll_rv,
-          |    count(*) OVER (PARTITION BY symbol ORDER BY _date
-          |      ROWS BETWEEN ${h - 1} PRECEDING AND CURRENT ROW) AS nw
-          |  FROM rv),
-          |s$h AS (SELECT symbol, CAST($h AS INT) AS horizon_days,
-          |    roll_rv
-          |  FROM f$h WHERE nw = $h)""".stripMargin
-      }.mkString(",\n")
-      val u = coneHorizons.map(h => s"SELECT * FROM s$h")
-        .mkString("\n UNION ALL ")
-      s"""WITH p AS (SELECT user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS _date, event_id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |l AS (SELECT symbol, _date,
-        |    cents - lag(cents) OVER (PARTITION BY symbol, _date
-        |      ORDER BY event_id) AS d
-        |  FROM p),
-        |rv AS (SELECT symbol, _date, CAST(sum(d * d) AS BIGINT) AS rv
-        |  FROM l WHERE d IS NOT NULL GROUP BY 1, 2),
-        |$hs,
-        |u AS ($u)
-        |SELECT symbol, horizon_days, count(*) AS n_windows,
-        |  CAST(min(roll_rv) AS BIGINT) AS rv_min,
-        |  round(quantile_cont(roll_rv, 0.25), 4) AS rv_p25,
-        |  round(quantile_cont(roll_rv, 0.5), 4) AS rv_med,
-        |  round(quantile_cont(roll_rv, 0.75), 4) AS rv_p75,
-        |  CAST(max(roll_rv) AS BIGINT) AS rv_max
-        |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-    // D63 — HAR-RV: per-day rv exact int64, full-week rows only, the
-    // six centered moments via the shared cmom spelling, Cramer 2x2,
-    // round(4) (float sweep).
-    "q_har_rv" -> {
-      val c11 = Microstructure.cmom("sx1x1", "sx1", "sx1", "n_days")
-      val c22 = Microstructure.cmom("sx2x2", "sx2", "sx2", "n_days")
-      val c12 = Microstructure.cmom("sx1x2", "sx1", "sx2", "n_days")
-      val c1y = Microstructure.cmom("sx1y", "sx1", "sy", "n_days")
-      val c2y = Microstructure.cmom("sx2y", "sx2", "sy", "n_days")
-      val cyy = Microstructure.cmom("syy", "sy", "sy", "n_days")
-      s"""WITH p AS (SELECT user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS _date, event_id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |l AS (SELECT symbol, _date,
-        |    cents - lag(cents) OVER (PARTITION BY symbol, _date
-        |      ORDER BY event_id) AS d
-        |  FROM p),
-        |rv AS (SELECT symbol, _date, CAST(sum(d * d) AS BIGINT) AS rv
-        |  FROM l WHERE d IS NOT NULL GROUP BY 1, 2),
-        |f AS (SELECT symbol, rv,
-        |    lag(rv) OVER (PARTITION BY symbol ORDER BY _date) AS x1,
-        |    sum(rv) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN $harWeek PRECEDING AND 1 PRECEDING) AS x2,
-        |    count(*) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN $harWeek PRECEDING AND 1 PRECEDING) AS nw
-        |  FROM rv),
-        |s AS (SELECT symbol, count(*) AS n_days,
-        |    CAST(sum(x1) AS BIGINT) AS sx1,
-        |    CAST(sum(x2) AS BIGINT) AS sx2,
-        |    CAST(sum(rv) AS BIGINT) AS sy,
-        |    sum(CAST(x1 AS HUGEINT) * CAST(x1 AS HUGEINT)) AS sx1x1,
-        |    sum(CAST(x2 AS HUGEINT) * CAST(x2 AS HUGEINT)) AS sx2x2,
-        |    sum(CAST(x1 AS HUGEINT) * CAST(x2 AS HUGEINT)) AS sx1x2,
-        |    sum(CAST(x1 AS HUGEINT) * CAST(rv AS HUGEINT)) AS sx1y,
-        |    sum(CAST(x2 AS HUGEINT) * CAST(rv AS HUGEINT)) AS sx2y,
-        |    sum(CAST(rv AS HUGEINT) * CAST(rv AS HUGEINT)) AS syy
-        |  FROM f WHERE nw = $harWeek GROUP BY symbol),
-        |dd AS (SELECT *, ($c11 * $c22 - $c12 * $c12) AS det FROM s),
-        |bb AS (SELECT *,
-        |    CASE WHEN n_days > 2 AND det > 0
-        |      THEN ($c1y * $c22 - $c2y * $c12) / det END AS beta_d,
-        |    CASE WHEN n_days > 2 AND det > 0
-        |      THEN ($c2y * $c11 - $c1y * $c12) / det END AS beta_w
-        |  FROM dd)
-        |SELECT symbol, n_days, round(beta_d, 4) AS beta_d,
-        |  round(beta_w, 4) AS beta_w,
-        |  round(CASE WHEN beta_d IS NOT NULL AND $cyy > 0
-        |    THEN (beta_d * $c1y + beta_w * $c2y) / $cyy END, 4) AS r2
-        |FROM bb ORDER BY symbol""".stripMargin
-    },
-    // D62 — pairs backtest: the D60 close grid on the roster, β/mean/σ
-    // from exact-int sums (σ via the arCrossFromSums expansion
-    // discipline), the position state machine as last_value IGNORE
-    // NULLS over threshold-crossing signals, P&L round(4).
-    "q_pairs_backtest" ->
-      s"""WITH closes AS (SELECT user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    max_by(CAST(round(value * 100.0, 0) AS BIGINT), event_id)
-        |      AS cents
-        |  FROM events GROUP BY 1, 2),
-        |grid AS (SELECT a.symbol AS sym_a, b.symbol AS sym_b, a.day,
-        |    a.cents AS ca, b.cents AS cb
-        |  FROM closes a JOIN closes b ON a.day = b.day
-        |  JOIN (VALUES $symPairsSql) r(pa, pb)
-        |    ON a.symbol = r.pa AND b.symbol = r.pb),
-        |st AS (SELECT sym_a, sym_b, count(*) AS n_days,
-        |    CAST(sum(cb) AS BIGINT) AS sx,
-        |    CAST(sum(ca) AS BIGINT) AS sy,
-        |    CAST(sum(cb * ca) AS BIGINT) AS sxy,
-        |    CAST(sum(cb * cb) AS BIGINT) AS sxx,
-        |    CAST(sum(ca * ca) AS BIGINT) AS syy
-        |  FROM grid GROUP BY 1, 2),
-        |sb AS (SELECT *, ${Microstructure.olsSlopeFromSums("sx", "sy",
-             "sxy", "sxx", "n_days")} AS beta FROM st),
-        |sm AS (SELECT *,
-        |    (CAST(sy AS DOUBLE) - beta * CAST(sx AS DOUBLE)) / n_days
-        |      AS mean_s
-        |  FROM sb WHERE beta IS NOT NULL),
-        |sv AS (SELECT *,
-        |    (CAST(syy AS DOUBLE) - 2 * beta * CAST(sxy AS DOUBLE)
-        |      + beta * beta * CAST(sxx AS DOUBLE)) / n_days
-        |      - mean_s * mean_s AS var_s
-        |  FROM sm),
-        |ss AS (SELECT sym_a, sym_b, n_days, beta, mean_s,
-        |    sqrt(var_s) AS sd_s
-        |  FROM sv WHERE var_s > 0),
-        |tz AS (SELECT g.sym_a, g.sym_b, s.n_days, g.day,
-        |    CAST(g.ca AS DOUBLE) - s.beta * CAST(g.cb AS DOUBLE) AS sp,
-        |    (CAST(g.ca AS DOUBLE) - s.beta * CAST(g.cb AS DOUBLE)
-        |      - s.mean_s) / s.sd_s AS z
-        |  FROM grid g JOIN ss s USING (sym_a, sym_b)),
-        |sg AS (SELECT *, CASE
-        |    WHEN abs(z) >= $pairsEnterZ THEN
-        |      CASE WHEN z > 0 THEN -1 ELSE 1 END
-        |    WHEN abs(z) <= $pairsExitZ THEN 0 END AS sig
-        |  FROM tz),
-        |ps AS (SELECT *, coalesce(last_value(sig IGNORE NULLS)
-        |      OVER (PARTITION BY sym_a, sym_b ORDER BY day
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-        |      AS pos
-        |  FROM sg),
-        |pp AS (SELECT *,
-        |    coalesce(lag(pos) OVER (PARTITION BY sym_a, sym_b
-        |      ORDER BY day), 0) AS pos_prev,
-        |    sp - lag(sp) OVER (PARTITION BY sym_a, sym_b
-        |      ORDER BY day) AS ds
-        |  FROM ps)
-        |SELECT sym_a, sym_b, n_days,
-        |  CAST(sum(CASE WHEN pos <> 0 AND pos <> pos_prev
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_trades,
-        |  CAST(sum(CASE WHEN pos <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS days_in_pos,
-        |  round(sum(CASE WHEN ds IS NOT NULL
-        |    THEN CAST(pos_prev AS DOUBLE) * ds ELSE 0.0 END), 4)
-        |    AS pnl_cents
-        |FROM pp GROUP BY 1, 2, 3 ORDER BY sym_a, sym_b""".stripMargin,
-    // D60 — negative-zero discipline: DuckDB's round() is an fp
-    // multiply (round(-1e-9, 4) = -0.0) while Spark's is BigDecimal
-    // (always +0.0); the driver's hash stringifies, so "-0.0" vs
-    // "0.0" is a mismatch on numerically equal cells (the ONLY r11
-    // drift — 2 cells of 67,050). `round(..) + 0.0` normalizes
-    // (-0.0 + 0.0 = +0.0 in IEEE; NULL propagates) on every slope-
-    // like column that can legitimately round to a signed zero.
-    "q_cointegration" ->
-      s"""WITH $cointClosesSql,
-        |grid AS (SELECT a.symbol AS sym_a, b.symbol AS sym_b, a.day,
-        |    a.cents AS ca, b.cents AS cb
-        |  FROM closes a JOIN closes b
-        |    ON a.day = b.day AND a.symbol < b.symbol
-        |  WHERE a.symbol % $cointSampleMod = 0
-        |    AND b.symbol % $cointSampleMod = 0),
-        |$cointFitTailSql""".stripMargin,
-    // D65 — blocked screen: stage-1 LSH banding over fixed-calendar
-    // up-move bits (exact ints both engines), stage-2 the SHARED fit
-    // tail — candidates only. Same negative-zero discipline as D60.
-    "q_cointegration_blocked" -> {
-      val nBits = cointBands * cointBandBits
-      val loHis = (0 until nBits).map(b =>
-        s"max(CASE WHEN j = ${2 * b} THEN cents END) AS lo$b, " +
-          s"max(CASE WHEN j = ${2 * b + 1} THEN cents END) AS hi$b")
-        .mkString(",\n|    ")
-      val sigSum = (0 until nBits).map(b =>
-        s"CASE WHEN hi$b > lo$b THEN CAST(${1L << b} AS BIGINT) " +
-          "ELSE 0 END").mkString(" + ")
-      s"""WITH $cointClosesSql,
-        |d0 AS (SELECT min(day) AS d0 FROM closes),
-        |rel AS (SELECT symbol, (day - d0.d0) AS j, cents
-        |  FROM closes, d0 WHERE (day - d0.d0) < ${2 * nBits}),
-        |lohi AS (SELECT symbol,
-        |    $loHis
-        |  FROM rel GROUP BY symbol),
-        |sig AS (SELECT symbol, $sigSum AS sig FROM lohi),
-        |bandrows AS (SELECT symbol, i AS band_idx,
-        |    (sig // CAST(pow(2, i * $cointBandBits) AS BIGINT))
-        |      % ${1L << cointBandBits} AS band_val
-        |  FROM sig, (SELECT unnest(range($cointBands)) AS i) t),
-        |cand AS (SELECT DISTINCT a.symbol AS sym_a, b.symbol AS sym_b
-        |  FROM bandrows a JOIN bandrows b
-        |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-        |    AND a.symbol < b.symbol),
-        |grid AS (SELECT c.sym_a, c.sym_b, a.day,
-        |    a.cents AS ca, b.cents AS cb
-        |  FROM cand c JOIN closes a ON a.symbol = c.sym_a
-        |    JOIN closes b ON b.symbol = c.sym_b AND b.day = a.day),
-        |$cointFitTailSql""".stripMargin
-    },
-    // D57 — volume–volatility elasticity: within-day exact-cent move
-    // mass vs exact volume, ln of exact ints, covar_pop/var_pop slope
-    // round(4) (D55's accepted spelling), zero days dropped pre-ln.
-    "q_volume_elasticity" ->
-      s"""WITH p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |  FROM events),
-        |l AS (SELECT symbol, day, k,
-        |    abs(cents - lag(cents) OVER (PARTITION BY symbol, day
-        |      ORDER BY event_id)) AS ad
-        |  FROM p),
-        |d AS (SELECT symbol, day, CAST(sum(ad) AS BIGINT) AS move,
-        |    CAST(sum(k) AS BIGINT) AS vol
-        |  FROM l GROUP BY symbol, day
-        |  HAVING CAST(sum(ad) AS BIGINT) > 0
-        |    AND CAST(sum(k) AS BIGINT) > 0),
-        |g AS (SELECT symbol, ln(CAST(vol AS DOUBLE)) AS x,
-        |    ln(CAST(move AS DOUBLE)) AS y
-        |  FROM d)
-        |SELECT symbol, count(*) AS n_days,
-        |  round(CASE WHEN var_pop(x) > 0
-        |    THEN covar_pop(y, x) / var_pop(x) END, 4) AS elasticity
-        |FROM g GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // E17 — trailing-interval count: the same integer-epoch-day RANGE
-    // frame, strictly-earlier days, empty frame an exact 0.
-    "q_order_velocity" ->
-      s"""SELECT o_orderkey, o_custkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS o_day,
-        |  count(*) OVER (PARTITION BY o_custkey
-        |    ORDER BY date_diff('day', DATE '1970-01-01',
-        |      CAST(o_orderdate AS DATE))
-        |    RANGE BETWEEN $velocityDays PRECEDING AND 1 PRECEDING)
-        |    AS n_prior
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // E19 — event-path census: per-user lag over (ts, event_id) total
-    // order, alphabet-bounded edge aggregate, exact-int share
-    // division, termSearch heap top-k.
-    "q_event_paths" ->
-      s"""WITH lg AS (SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type
-        |  FROM events),
-        |e AS (SELECT prev_type, event_type AS next_type,
-        |    count(*) AS n_edges
-        |  FROM lg WHERE prev_type IS NOT NULL
-        |  GROUP BY prev_type, event_type),
-        |m AS (SELECT prev_type, CAST(sum(n_edges) AS BIGINT) AS n_out
-        |  FROM e GROUP BY prev_type),
-        |k AS (SELECT e.prev_type, e.next_type, e.n_edges, m.n_out,
-        |    CAST(e.n_edges AS DOUBLE) / CAST(m.n_out AS DOUBLE)
-        |      AS share
-        |  FROM e JOIN m USING (prev_type)
-        |  ORDER BY e.n_edges DESC, e.prev_type, e.next_type
-        |  LIMIT $pathTopK)
-        |SELECT row_number() OVER (ORDER BY n_edges DESC, prev_type,
-        |    next_type) AS rnk,
-        |  prev_type, next_type, n_edges, n_out, share
-        |FROM k ORDER BY rnk""".stripMargin,
-    // E18 — interval-union coverage: strictly-preceding running-max
-    // window for island starts, running sum for island ids, exact
-    // int64 epoch-day arithmetic throughout; coverage is one IEEE
-    // division of exact ints. Tied same-day orders carry identical
-    // (s, e), so tie order cannot move any aggregate.
-    "q_interval_coverage" ->
-      s"""WITH iv AS (SELECT o_custkey,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS s,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      + $coverageWindowDays AS e
-        |  FROM orders),
-        |m AS (SELECT o_custkey, s, e,
-        |    max(e) OVER (PARTITION BY o_custkey ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-        |  FROM iv),
-        |m2 AS (SELECT *, CASE WHEN pme IS NULL OR s > pme
-        |    THEN 1 ELSE 0 END AS ni FROM m),
-        |m3 AS (SELECT *, sum(ni) OVER (PARTITION BY o_custkey ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM m2),
-        |isl AS (SELECT o_custkey, island, count(*) AS n_orders,
-        |    min(s) AS i_s, max(e) AS i_e
-        |  FROM m3 GROUP BY 1, 2)
-        |SELECT o_custkey, CAST(sum(n_orders) AS BIGINT) AS n_orders,
-        |  count(*) AS n_intervals,
-        |  CAST(sum(i_e - i_s) AS BIGINT) AS covered_days,
-        |  CAST(max(i_e) - min(i_s) AS BIGINT) AS span_days,
-        |  CAST(sum(i_e - i_s) AS DOUBLE)
-        |    / CAST(max(i_e) - min(i_s) AS DOUBLE) AS coverage
-        |FROM isl GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // D53 — clock kurtosis: D39's adjudicated moment spelling run on
-    // both clocks (time = per-day print moves; volume = D30 bar-close
-    // moves with the q_volume_bars window verbatim); ratio divides
-    // the two ROUNDED finals.
-    "q_clock_kurtosis" ->
-      s"""WITH p AS (SELECT user_id AS symbol, event_id,
-        |    CAST(ts AS TIMESTAMP) AS ts,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |  FROM events),
-        |td AS (SELECT symbol,
-        |    CAST(cents - lag(cents) OVER (PARTITION BY symbol,
-        |      CAST(ts AS DATE) ORDER BY event_id) AS DOUBLE) AS d
-        |  FROM p),
-        |ta AS (SELECT symbol, count(d) AS n_time, avg(d) AS m1,
-        |    avg(d * d) AS m2, avg(d * d * d) AS m3,
-        |    avg(d * d * d * d) AS m4
-        |  FROM td WHERE d IS NOT NULL GROUP BY symbol),
-        |tk AS (SELECT symbol, n_time,
-        |    CASE WHEN m2 - m1 * m1 > 0 THEN
-        |      round((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2
-        |        - 3.0 * m1 * m1 * m1 * m1)
-        |        / ((m2 - m1 * m1) * (m2 - m1 * m1)) - 3.0, 4)
-        |    END AS kurt_time
-        |  FROM ta),
-        |bars AS (SELECT symbol, bar_id,
-        |    arg_max(cents, event_id) AS close_cents
-        |  FROM (SELECT symbol, event_id, cents,
-        |      CAST(greatest(sum(k) OVER (PARTITION BY symbol
-        |        ORDER BY event_id ROWS UNBOUNDED PRECEDING) - 1, 0)
-        |        // $barQtyParam AS BIGINT) AS bar_id
-        |    FROM p) x
-        |  GROUP BY symbol, bar_id),
-        |vd AS (SELECT symbol,
-        |    CAST(close_cents - lag(close_cents) OVER (
-        |      PARTITION BY symbol ORDER BY bar_id) AS DOUBLE) AS d
-        |  FROM bars),
-        |va AS (SELECT symbol, count(d) AS n_vol, avg(d) AS m1,
-        |    avg(d * d) AS m2, avg(d * d * d) AS m3,
-        |    avg(d * d * d * d) AS m4
-        |  FROM vd WHERE d IS NOT NULL GROUP BY symbol),
-        |vk AS (SELECT symbol, n_vol,
-        |    CASE WHEN m2 - m1 * m1 > 0 THEN
-        |      round((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2
-        |        - 3.0 * m1 * m1 * m1 * m1)
-        |        / ((m2 - m1 * m1) * (m2 - m1 * m1)) - 3.0, 4)
-        |    END AS kurt_vol
-        |  FROM va)
-        |SELECT tk.symbol, tk.n_time, tk.kurt_time, vk.n_vol, vk.kurt_vol,
-        |  CASE WHEN tk.kurt_time IS NOT NULL AND vk.kurt_vol IS NOT NULL
-        |      AND tk.kurt_time <> 0
-        |    THEN vk.kurt_vol / tk.kurt_time END AS kurt_ratio
-        |FROM tk JOIN vk USING (symbol)
-        |ORDER BY symbol""".stripMargin,
-    // D52 — running-VWAP slippage: one running window per (symbol,
-    // day), fills filtered AFTER the cumsum, both outputs ONE IEEE
-    // division of exact ints (D50's signed-div rule).
-    "q_running_vwap" ->
-      s"""WITH p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS INT), 0) AS k
-        |  FROM events),
-        |t AS (SELECT * FROM p WHERE k > 0),
-        |r AS (SELECT symbol, event_id, day, cents,
-        |    CAST(sum(k) OVER (PARTITION BY symbol, day ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_qty,
-        |    CAST(sum(cents * k) OVER (PARTITION BY symbol, day
-        |      ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_pv
-        |  FROM t)
-        |SELECT symbol, event_id AS fill_id,
-        |  strftime(day, '%Y-%m-%d') AS day,
-        |  cents AS exec_cents, cum_qty,
-        |  CAST(cum_pv AS DOUBLE) / cum_qty AS run_vwap_cents,
-        |  CAST((cents * cum_qty - cum_pv) * 10000 AS DOUBLE) / cum_pv
-        |    AS slip_bp
-        |FROM r WHERE event_id % $tcaFillEvery = 0
-        |ORDER BY symbol, fill_id""".stripMargin,
-    // D50 — TCA: (symbol, day) VWAP sums exact int64 (HUGEINT CAST
-    // back), both vwap_cents and slip_bp ONE IEEE division of exact
-    // ints (signed integer div deliberately avoided — Spark truncates
-    // where DuckDB floors), day-frame join, fills every Nth event.
-    "q_vwap_slippage" ->
-      s"""WITH p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS INT), 0) AS k
-        |  FROM events),
-        |t AS (SELECT * FROM p WHERE k > 0),
-        |d AS (SELECT symbol, day, CAST(sum(k) AS BIGINT) AS day_qty,
-        |    CAST(sum(cents * k) AS BIGINT) AS day_pv
-        |  FROM t GROUP BY symbol, day)
-        |SELECT t.symbol, t.event_id AS fill_id,
-        |  strftime(t.day, '%Y-%m-%d') AS day,
-        |  t.cents AS exec_cents, d.day_qty,
-        |  CAST(d.day_pv AS DOUBLE) / d.day_qty AS vwap_cents,
-        |  CAST((t.cents * d.day_qty - d.day_pv) * 10000 AS DOUBLE)
-        |    / d.day_pv AS slip_bp
-        |FROM t JOIN d USING (symbol, day)
-        |WHERE t.event_id % $tcaFillEvery = 0
-        |ORDER BY symbol, fill_id""".stripMargin,
-    // D49 — French–Roll decomposition: first/last cents per (symbol,
-    // day) by tick_id, exact int diffs, variance via the SHARED
-    // Microstructure.varFromSums spelling (exact sums — no engine
-    // var_samp), share of RAW vars, round(4) display only.
-    "q_overnight_intraday" -> {
-      import graft.operators.Microstructure.varFromSums
-      s"""WITH daily AS (SELECT symbol, date_trunc('day', ts) AS day,
-        |    arg_min(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS open_c,
-        |    arg_max(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS close_c
-        |  FROM $ticksSql t GROUP BY symbol, date_trunc('day', ts)),
-        |rets AS (SELECT symbol,
-        |    open_c - lag(close_c, 1) OVER (PARTITION BY symbol
-        |      ORDER BY day) AS r_on,
-        |    close_c - open_c AS r_id
-        |  FROM daily),
-        |ag AS (SELECT symbol, count(*) AS n_days, count(r_on) AS n_on,
-        |    CAST(sum(r_on) AS BIGINT) AS s_on,
-        |    CAST(sum(r_on * r_on) AS BIGINT) AS sq_on,
-        |    CAST(sum(r_id) AS BIGINT) AS s_id,
-        |    CAST(sum(r_id * r_id) AS BIGINT) AS sq_id
-        |  FROM rets GROUP BY symbol),
-        |v AS (SELECT symbol, n_days,
-        |    ${varFromSums("s_on", "sq_on", "n_on")} AS v_on,
-        |    ${varFromSums("s_id", "sq_id", "n_days")} AS v_id
-        |  FROM ag)
-        |SELECT symbol, n_days,
-        |  round(v_on, 4) AS var_overnight,
-        |  round(v_id, 4) AS var_intraday,
-        |  round(CASE WHEN v_on IS NOT NULL AND v_id IS NOT NULL
-        |      AND v_on + v_id > 0
-        |    THEN v_on / (v_on + v_id) END, 4) AS overnight_share
-        |FROM v ORDER BY symbol""".stripMargin
-    },
-    // D47 — all-integer participation curve: hourly/total/cumulative
-    // quantity sums are exact int64 (CAST — the r8 HUGEINT lesson),
-    // shares in bps via exact integer division. Zero rounding
-    // discipline needed anywhere.
-    "q_participation" ->
-      """WITH p AS (SELECT user_id AS symbol, hour(ts) AS hour_od,
-        |    coalesce(CAST(props->>'$.k' AS INT), 0) AS k FROM events),
-        |h AS (SELECT symbol, hour_od, count(*) AS n_trades,
-        |    CAST(sum(k) AS BIGINT) AS hour_qty
-        |  FROM p GROUP BY symbol, hour_od),
-        |w AS (SELECT symbol, hour_od, n_trades, hour_qty,
-        |    CAST(sum(hour_qty) OVER (PARTITION BY symbol) AS BIGINT)
-        |      AS total_qty,
-        |    CAST(sum(hour_qty) OVER (PARTITION BY symbol
-        |      ORDER BY hour_od ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS BIGINT) AS cum_qty
-        |  FROM h)
-        |SELECT symbol, hour_od, n_trades, hour_qty,
-        |  CASE WHEN total_qty > 0 THEN (hour_qty * 10000) // total_qty
-        |    END AS share_bp,
-        |  CASE WHEN total_qty > 0 THEN (cum_qty * 10000) // total_qty
-        |    END AS cum_share_bp
-        |FROM w
-        |ORDER BY symbol, hour_od""".stripMargin,
-    // D32 — signs int64, zero-ticks carry the previous nonzero sign
-    // (IGNORE NULLS lag); persistence one IEEE division of exact ints.
-    "q_sign_persistence" ->
-      s"""SELECT symbol,
-        |  CAST(sum(CASE WHEN sign IS NOT NULL AND prev_sign IS NOT NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CASE WHEN sign IS NOT NULL AND prev_sign IS NOT NULL
-        |    AND sign = prev_sign THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_repeat,
-        |  CASE WHEN sum(CASE WHEN sign IS NOT NULL
-        |      AND prev_sign IS NOT NULL THEN 1 ELSE 0 END) > 0 THEN
-        |    CAST(sum(CASE WHEN sign IS NOT NULL AND prev_sign IS NOT NULL
-        |      AND sign = prev_sign THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(sum(CASE WHEN sign IS NOT NULL
-        |      AND prev_sign IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |  END AS persistence
-        |FROM (
-        |  SELECT symbol, sign,
-        |    last_value(sign IGNORE NULLS) OVER (PARTITION BY symbol
-        |      ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS prev_sign
-        |  FROM (
-        |    SELECT symbol, tick_id,
-        |      CASE WHEN prev IS NOT NULL AND cents > prev THEN 1
-        |        WHEN prev IS NOT NULL AND cents < prev THEN -1 END AS sign
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |        lag(CAST(round(bid * 100.0, 0) AS BIGINT), 1) OVER (
-        |          PARTITION BY symbol ORDER BY tick_id) AS prev
-        |      FROM $ticksSql t) a) b) c
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // knots — the rounded value is the only safe comparand).
-    "q_burst_detect" ->
-      s"""WITH per AS (
-        |  SELECT symbol, date_trunc('second', ts) AS sec,
-        |    count(*) AS n
-        |  FROM $ticksSql t
-        |  GROUP BY symbol, date_trunc('second', ts)),
-        |thr AS (
-        |  SELECT symbol, round(quantile_cont(n, 0.90), 4) AS thr
-        |  FROM per GROUP BY symbol)
-        |SELECT p.symbol, count(*) AS n_seconds,
-        |  CAST(sum(CASE WHEN n > thr THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_burst,
-        |  max(n) AS max_rate, thr
-        |FROM per p JOIN thr USING (symbol)
-        |GROUP BY p.symbol, thr
-        |ORDER BY symbol""".stripMargin,
-    // D19 — Roll spread: Δp in exact integer cents, covar_samp
-    // rounded to 4, spread DERIVED from the rounded covariance so the
-    // sqrt sees bit-identical inputs in both engines (SURVEY §6).
-    "q_roll_spread" ->
-      s"""SELECT symbol, n_pairs, cov_cents2,
-        |  CASE WHEN cov_cents2 < 0
-        |    THEN round(2.0 * sqrt(-cov_cents2), 4) END
-        |    AS roll_spread_cents
-        |FROM (
-        |  SELECT symbol,
-        |    round(covar_samp(dp, dp_prev), 4) AS cov_cents2,
-        |    count(CASE WHEN dp IS NOT NULL AND dp_prev IS NOT NULL
-        |      THEN 1 END) AS n_pairs
-        |  FROM (
-        |    SELECT symbol, dp,
-        |      lag(dp, 1) OVER (PARTITION BY symbol ORDER BY tick_id)
-        |        AS dp_prev
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CAST(cents - lag(cents, 1) OVER (PARTITION BY symbol
-        |          ORDER BY tick_id) AS DOUBLE) AS dp
-        |      FROM (SELECT symbol, tick_id,
-        |          CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |        FROM $ticksSql t) c) d) e
-        |  GROUP BY symbol) x
-        |ORDER BY symbol""".stripMargin,
-    // D22 — variance ratio: Δp in exact cents, var_samp round(4),
-    // ratio derived from the ROUNDED variances (D19's rule).
-    // D28 — Corwin-Schultz: daily H/L exact cents; beta/gamma ROUNDED
-    // (4dp) BEFORE alpha — at the beta=gamma boundary alpha cancels to
-    // ±1e-16 with engine-dependent sign, flipping the >=0 gate; from
-    // identical rounded inputs the sqrt/exp chain is bit-identical.
-    // 3−2√2 as a HARD literal; negative alpha → NULL spread.
-    "q_cs_spread" ->
-      s"""SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  beta, gamma, alpha,
-        |  CASE WHEN alpha >= 0
-        |    THEN 2.0 * (exp(alpha) - 1.0) / (exp(alpha) + 1.0)
-        |  END AS cs_spread
-        |FROM (
-        |  SELECT symbol, _date, beta, gamma,
-        |    (sqrt(2.0 * beta) - sqrt(beta)) / 0.1715728752538099
-        |      - sqrt(gamma / 0.1715728752538099) AS alpha
-        |  FROM (
-        |    SELECT symbol, _date,
-        |      round(ln(CAST(h AS DOUBLE) / CAST(l AS DOUBLE))
-        |        * ln(CAST(h AS DOUBLE) / CAST(l AS DOUBLE))
-        |      + ln(CAST(h_next AS DOUBLE) / CAST(l_next AS DOUBLE))
-        |        * ln(CAST(h_next AS DOUBLE) / CAST(l_next AS DOUBLE)), 4)
-        |        AS beta,
-        |      round(ln(CAST(greatest(h, h_next) AS DOUBLE)
-        |          / CAST(least(l, l_next) AS DOUBLE))
-        |      * ln(CAST(greatest(h, h_next) AS DOUBLE)
-        |          / CAST(least(l, l_next) AS DOUBLE)), 4) AS gamma
-        |    FROM (
-        |      SELECT symbol, _date, h, l,
-        |        lead(h) OVER w AS h_next, lead(l) OVER w AS l_next
-        |      FROM (
-        |        SELECT symbol, CAST(ts AS DATE) AS _date,
-        |          max(cents) AS h, min(cents) AS l
-        |        FROM (SELECT symbol, ts,
-        |            CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |          FROM $ticksSql t) c
-        |        GROUP BY symbol, CAST(ts AS DATE)
-        |        HAVING min(cents) > 0) d
-        |      WINDOW w AS (PARTITION BY symbol ORDER BY _date)) p
-        |    WHERE h_next IS NOT NULL) g) a
-        |ORDER BY symbol, date""".stripMargin,
-    // D27 — daily OHLC in exact cents; elementwise ln on identical
-    // inputs; pooled sums round(4); estimator constants as HARD double
-    // literals (4·ln2, 2·ln2−1) so neither engine computes its own ln2.
-    "q_range_vol" ->
-      s"""SELECT symbol, n_days, sum_lhl2, sum_lco2,
-        |  round(sum_lhl2 / (CAST(n_days AS DOUBLE) * 2.772588722239781), 4)
-        |    AS parkinson_var,
-        |  round((0.5 * sum_lhl2 - 0.3862943611198906 * sum_lco2)
-        |    / CAST(n_days AS DOUBLE), 4) AS gk_var
-        |FROM (
-        |  SELECT symbol, count(*) AS n_days,
-        |    round(sum(lhl * lhl), 4) AS sum_lhl2,
-        |    round(sum(lco * lco), 4) AS sum_lco2
-        |  FROM (
-        |    SELECT symbol,
-        |      ln(CAST(h AS DOUBLE) / CAST(l AS DOUBLE)) AS lhl,
-        |      ln(CAST(c AS DOUBLE) / CAST(o AS DOUBLE)) AS lco
-        |    FROM (
-        |      SELECT symbol, CAST(ts AS DATE) AS d,
-        |        arg_min(cents, tick_id) AS o, max(cents) AS h,
-        |        min(cents) AS l, arg_max(cents, tick_id) AS c
-        |      FROM (SELECT symbol, tick_id, ts,
-        |          CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |        FROM $ticksSql t) c
-        |      GROUP BY symbol, CAST(ts AS DATE)) ohlc
-        |    WHERE l > 0 AND o > 0) terms
-        |  GROUP BY symbol) agg
-        |ORDER BY symbol""".stripMargin,
-    "q_variance_ratio" ->
-      s"""SELECT symbol, n_obs, var_1, var_q,
-        |  CASE WHEN var_1 > 0
-        |    THEN round(var_q / (4 * var_1), 4) END AS vr
-        |FROM (
-        |  SELECT symbol,
-        |    round(var_samp(dp1), 4) AS var_1,
-        |    round(var_samp(dpq), 4) AS var_q,
-        |    count(dpq) AS n_obs
-        |  FROM (
-        |    SELECT symbol,
-        |      CAST(cents - lag(cents, 1) OVER w AS DOUBLE) AS dp1,
-        |      CAST(cents - lag(cents, 4) OVER w AS DOUBLE) AS dpq
-        |    FROM (SELECT symbol, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |      FROM $ticksSql t) c
-        |    WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)) d
-        |  GROUP BY symbol) x
-        |ORDER BY symbol""".stripMargin,
-    // D23 — intraday profile: within-day lag in exact cents, pooled
-    // mean round(4); minute-of-day via hour·60+minute in both engines.
-    "q_intraday_profile" ->
-      s"""SELECT hour(ts) * 60 + minute(ts) AS minute_od,
-        |  count(*) AS n_ticks,
-        |  round(avg(mv), 4) AS avg_abs_move_cents
-        |FROM (
-        |  SELECT ts, CAST(abs(cents - lag(cents, 1) OVER (
-        |      PARTITION BY symbol, CAST(ts AS DATE) ORDER BY tick_id))
-        |    AS DOUBLE) AS mv
-        |  FROM (SELECT symbol, tick_id, ts,
-        |      CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |    FROM $ticksSql t) c) d
-        |GROUP BY hour(ts) * 60 + minute(ts)
-        |ORDER BY minute_od""".stripMargin,
-    // D20 — Amihud: intraday lag in exact cents; the ln/divide/avg
-    // chain matches the Spark expression term-for-term; aggregate
-    // double → round(4).
-    "q_amihud" ->
-      """SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  round(avg(impact), 4) AS amihud_e9,
-        |  count(impact) AS n_obs
-        |FROM (
-        |  SELECT symbol, _date,
-        |    CASE WHEN prev > 0 AND cents > 0 AND k > 0 THEN
-        |      abs(ln(CAST(cents AS DOUBLE) / prev))
-        |        / CAST(cents * k AS DOUBLE) * 1e9
-        |    END AS impact
-        |  FROM (
-        |    SELECT user_id AS symbol, CAST(ts AS DATE) AS _date,
-        |      CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |      CAST(props->>'$.k' AS INT) AS k,
-        |      lag(CAST(round(value * 100.0, 0) AS BIGINT), 1) OVER (
-        |        PARTITION BY user_id, CAST(ts AS DATE)
-        |        ORDER BY event_id) AS prev
-        |    FROM events) y) x
-        |GROUP BY symbol, _date
-        |ORDER BY symbol, date""".stripMargin,
-    // D21 — flow imbalance: int64-exact signed-volume sums (CAST AS
-    // BIGINT — the r8 HUGEINT lesson), ratio one IEEE division of
-    // exact ints, unrounded.
-    "q_flow_imbalance" ->
-      """SELECT symbol, strftime(_date, '%Y-%m-%d') AS date,
-        |  buy_qty, sell_qty,
-        |  CASE WHEN buy_qty + sell_qty > 0 THEN
-        |    CAST(buy_qty - sell_qty AS DOUBLE)
-        |      / CAST(buy_qty + sell_qty AS DOUBLE) END AS imbalance,
-        |  n_classified
-        |FROM (
-        |  SELECT symbol, _date,
-        |    CAST(sum(CASE WHEN prev IS NOT NULL AND cents > prev
-        |      THEN k ELSE 0 END) AS BIGINT) AS buy_qty,
-        |    CAST(sum(CASE WHEN prev IS NOT NULL AND cents < prev
-        |      THEN k ELSE 0 END) AS BIGINT) AS sell_qty,
-        |    count(prev) AS n_classified
-        |  FROM (
-        |    SELECT user_id AS symbol, CAST(ts AS DATE) AS _date,
-        |      CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |      CAST(props->>'$.k' AS INT) AS k,
-        |      lag(CAST(round(value * 100.0, 0) AS BIGINT), 1) OVER (
-        |        PARTITION BY user_id, CAST(ts AS DATE)
-        |        ORDER BY event_id) AS prev
-        |    FROM events) y
-        |  GROUP BY symbol, _date) x
-        |ORDER BY symbol, date""".stripMargin,
-    // D30 — volume bars: running-qty bucket in pure int64 (both
-    // engines' integer division truncates toward zero), OHLC in exact
-    // cents via arg_min/arg_max, bar edges second-truncated strings.
-    "q_volume_bars" ->
-      s"""SELECT symbol, bar_id,
-        |  CAST(sum(k) AS BIGINT) AS bar_qty,
-        |  count(*) AS n_ticks,
-        |  arg_min(cents, event_id) AS open_cents,
-        |  max(cents) AS high_cents,
-        |  min(cents) AS low_cents,
-        |  arg_max(cents, event_id) AS close_cents,
-        |  strftime(date_trunc('second', min(ts)), '%Y-%m-%d %H:%M:%S')
-        |    AS ts_first,
-        |  strftime(date_trunc('second', max(ts)), '%Y-%m-%d %H:%M:%S')
-        |    AS ts_last
-        |FROM (
-        |  SELECT symbol, event_id, ts, cents, k,
-        |    CAST(greatest(sum(k) OVER (PARTITION BY symbol ORDER BY event_id
-        |      ROWS UNBOUNDED PRECEDING) - 1, 0) // $barQtyParam AS BIGINT) AS bar_id
-        |  FROM (
-        |    SELECT user_id AS symbol, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |      CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |      coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |    FROM events) y) x
-        |GROUP BY symbol, bar_id
-        |ORDER BY symbol, bar_id""".stripMargin,
-    // D31 — VPIN: tick-rule sign lags across bucket boundaries; the
-    // trailing 3-bucket ratio is two int64 window sums, one IEEE
-    // division of exact ints (D21's rule, unrounded).
-    "q_vpin" ->
-      s"""SELECT symbol, bar_id, buy_qty, sell_qty,
-        |  CASE WHEN buy_qty + sell_qty > 0 THEN
-        |    CAST(abs(buy_qty - sell_qty) AS DOUBLE)
-        |      / CAST(buy_qty + sell_qty AS DOUBLE) END AS toxicity,
-        |  CASE WHEN _vol > 0 THEN
-        |    CAST(_imb AS DOUBLE) / CAST(_vol AS DOUBLE) END AS vpin,
-        |  n_bars_in_window
-        |FROM (
-        |  SELECT symbol, bar_id, buy_qty, sell_qty,
-        |    CAST(sum(abs(buy_qty - sell_qty)) OVER w AS BIGINT) AS _imb,
-        |    CAST(sum(buy_qty + sell_qty) OVER w AS BIGINT) AS _vol,
-        |    CAST(count(*) OVER w AS BIGINT) AS n_bars_in_window
-        |  FROM (
-        |    SELECT symbol, bar_id,
-        |      CAST(sum(CASE WHEN prev IS NOT NULL AND cents > prev
-        |        THEN k ELSE 0 END) AS BIGINT) AS buy_qty,
-        |      CAST(sum(CASE WHEN prev IS NOT NULL AND cents < prev
-        |        THEN k ELSE 0 END) AS BIGINT) AS sell_qty
-        |    FROM (
-        |      SELECT symbol, event_id, cents, k,
-        |        lag(cents, 1) OVER (PARTITION BY symbol ORDER BY event_id)
-        |          AS prev,
-        |        CAST(greatest(sum(k) OVER (PARTITION BY symbol
-        |          ORDER BY event_id ROWS UNBOUNDED PRECEDING) - 1, 0) // $barQtyParam
-        |          AS BIGINT) AS bar_id
-        |      FROM (
-        |        SELECT user_id AS symbol, event_id,
-        |          CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |          coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |        FROM events) z) y
-        |    GROUP BY symbol, bar_id) b
-        |  WINDOW w AS (PARTITION BY symbol ORDER BY bar_id
-        |    ROWS BETWEEN ${vpinWindowBars - 1} PRECEDING AND CURRENT ROW)) v
-        |ORDER BY symbol, bar_id""".stripMargin,
-    // D25 — Hurst: lns see ROUNDED variances (identical inputs both
-    // engines), slope a fixed linear combination spelled identically.
-    // D38 — triple barrier: the oracle spells the RANGE join directly
-    // (DuckDB handles it at gate scale); the Spark plan's block-
-    // bucketed equi-join is semantically identical. Barriers compare
-    // cross-multiplied int64 — no ratio double on either engine.
-    "q_triple_barrier" ->
-      s"""WITH x AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS BIGINT) AS idx
-        |  FROM $ticksSql t),
-        |e AS (SELECT symbol, idx AS e_idx, tick_id AS entry_id, c AS e_c
-        |  FROM x WHERE idx % $tbEntryEvery = 1),
-        |j AS (
-        |  SELECT e.symbol, e.e_idx, e.entry_id, e.e_c,
-        |    min(CASE WHEN f.c * 10000 >= e.e_c * (10000 + $tbBarrierBp)
-        |      THEN f.idx END) AS up_idx,
-        |    min(CASE WHEN f.c * 10000 <= e.e_c * (10000 - $tbBarrierBp)
-        |      THEN f.idx END) AS dn_idx,
-        |    count(*) AS n_lookahead
-        |  FROM e JOIN x f ON f.symbol = e.symbol
-        |    AND f.idx > e.e_idx AND f.idx <= e.e_idx + $tbHorizon
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT symbol, e_idx, entry_id, e_c, up_idx, dn_idx, n_lookahead,
-        |  CASE WHEN up_idx IS NOT NULL AND (dn_idx IS NULL OR up_idx < dn_idx)
-        |    THEN 1
-        |  WHEN dn_idx IS NOT NULL AND (up_idx IS NULL OR dn_idx < up_idx)
-        |    THEN -1
-        |  ELSE 0 END AS label
-        |FROM j ORDER BY symbol, e_idx""".stripMargin,
-    // D70 — label uniqueness: the D38 entry grid's span coverage, per
-    // covered tick the exact-int concurrency, per entry the ordered
-    // ascending-f_idx fold of the shared `CAST(1 AS DOUBLE)/c`
-    // inverses, mean quantized via the sign-split floor spelling.
-    // DuckDB side enumerates spans with a plain range join (IEJoin —
-    // oracle scale); the Spark side uses D38's bucketize equi-join.
-    "q_label_uniqueness" ->
-      s"""WITH x AS (SELECT user_id AS symbol, event_id AS tick_id,
-        |    CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY event_id) AS BIGINT) AS idx
-        |  FROM events),
-        |e AS (SELECT symbol, idx AS e_idx, tick_id AS entry_id
-        |  FROM x WHERE idx % $tbEntryEvery = 1 % $tbEntryEvery),
-        |cov AS (SELECT e.symbol, e.e_idx, e.entry_id, f.idx AS f_idx
-        |  FROM e JOIN x f ON f.symbol = e.symbol
-        |    AND f.idx > e.e_idx AND f.idx <= e.e_idx + $tbHorizon),
-        |cc AS (SELECT symbol, f_idx, count(*) AS c
-        |  FROM cov GROUP BY 1, 2),
-        |iv AS (SELECT cov.symbol, cov.e_idx, cov.entry_id, cov.f_idx,
-        |    CAST(1 AS DOUBLE) / cc.c AS inv
-        |  FROM cov JOIN cc ON cc.symbol = cov.symbol
-        |    AND cc.f_idx = cov.f_idx)
-        |SELECT symbol, e_idx, entry_id, count(*) AS n_span,
-        |  CAST(floor(list_reduce(list_prepend(0.0,
-        |      list(inv ORDER BY f_idx)), (a, b) -> a + b)
-        |    / count(*) * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 + 0.0
-        |    AS uniqueness
-        |FROM iv GROUP BY 1, 2, 3 ORDER BY symbol, e_idx""".stripMargin,
-    // D74 — PSI drift: integer buckets off the exact train range,
-    // +1 smoothing in int space, ONE ln per bucket over a ratio of
-    // exact int64 products, ascending-bucket ordered fold, sign-split
-    // quantization. Single-row output (ORDER BY vacuous).
-    "q_psi_drift" ->
-      s"""WITH dd AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date
-        |    FROM events),
-        |rk AS (SELECT date, row_number() OVER (ORDER BY date) AS rn,
-        |    (SELECT count(*) FROM dd) AS n FROM dd),
-        |sp AS (SELECT date, CASE WHEN rn <= floor(n * 0.6) THEN 'train'
-        |    WHEN rn <= floor(n * 0.6) + floor(n * 0.2) THEN 'val'
-        |    ELSE 'test' END AS split FROM rk),
-        |x AS (SELECT sp.split,
-        |    CAST(round(e.value * 100.0, 0) AS BIGINT) AS c
-        |  FROM events e JOIN sp ON sp.date = strftime(e.ts, '%Y-%m-%d')
-        |  WHERE sp.split <> 'val'),
-        |r AS (SELECT min(c) AS mn, max(c) AS mx FROM x
-        |  WHERE split = 'train'),
-        |h AS (SELECT CAST(least(${psiBuckets - 1}, greatest(0,
-        |      ((c - mn) * $psiBuckets) // (mx - mn + 1))) AS BIGINT) AS b,
-        |    CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tr,
-        |    CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS te
-        |  FROM x, r GROUP BY 1),
-        |f AS (SELECT i.b, coalesce(h.tr, 0) AS tr, coalesce(h.te, 0) AS te
-        |  FROM (SELECT unnest(range($psiBuckets)) AS b) i
-        |  LEFT JOIN h ON h.b = i.b),
-        |t AS (SELECT CAST(sum(tr) AS BIGINT) AS n_tr,
-        |    CAST(sum(te) AS BIGINT) AS n_te FROM f),
-        |cb AS (SELECT f.b, n_tr, n_te,
-        |    (CAST(tr + 1 AS DOUBLE) / (n_tr + $psiBuckets)
-        |      - CAST(te + 1 AS DOUBLE) / (n_te + $psiBuckets))
-        |    * ln(CAST((tr + 1) * (n_te + $psiBuckets) AS DOUBLE)
-        |      / CAST((te + 1) * (n_tr + $psiBuckets) AS DOUBLE)) AS contrib
-        |  FROM f, t)
-        |SELECT CAST($psiBuckets AS BIGINT) AS n_buckets, n_tr AS n_train,
-        |  n_te AS n_test,
-        |  CAST(CASE WHEN s0 >= 0 THEN floor(s0 * 1000000.0 + 0.5)
-        |    ELSE -floor(-s0 * 1000000.0 + 0.5) END AS BIGINT)
-        |    / 1000000.0 + 0.0 AS psi
-        |FROM (SELECT n_tr, n_te, list_reduce(list_prepend(0.0,
-        |    list(contrib ORDER BY b)), (a, y) -> a + y) AS s0
-        |  FROM cb GROUP BY n_tr, n_te) z""".stripMargin,
-    // D73 — vol-adaptive barriers: exact-int day rv, one correctly-
-    // rounded sqrt + floor(+0.5) into int64 CENTS (the compare stays
-    // pure integer), D38's lookahead shape; first days drop.
-    "q_vol_barrier" ->
-      s"""WITH x AS (SELECT user_id AS symbol, event_id AS tick_id,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY event_id) AS BIGINT) AS idx
-        |  FROM events),
-        |dd AS (SELECT *, c - lag(c) OVER (PARTITION BY symbol, day
-        |    ORDER BY tick_id) AS dd FROM x),
-        |rv AS (SELECT symbol, day, CAST(sum(dd * dd) AS BIGINT) AS rv
-        |  FROM dd GROUP BY 1, 2),
-        |rp AS (SELECT symbol, day, lag(rv) OVER (PARTITION BY symbol
-        |    ORDER BY day) AS rv_prev FROM rv),
-        |bcs AS (SELECT symbol, day, greatest(1, CAST(floor(
-        |    2 * sqrt(CAST(rv_prev AS DOUBLE)) + 0.5) AS BIGINT)) AS bc
-        |  FROM rp WHERE rv_prev IS NOT NULL),
-        |e AS (SELECT x.symbol, x.idx AS e_idx, x.tick_id AS entry_id,
-        |    x.c AS e_c, bcs.bc
-        |  FROM x JOIN bcs ON bcs.symbol = x.symbol AND bcs.day = x.day
-        |  WHERE x.idx % $tbEntryEvery = 1 % $tbEntryEvery),
-        |j AS (SELECT e.symbol, e.e_idx, e.entry_id, e.e_c, e.bc,
-        |    min(CASE WHEN f.c >= e.e_c + e.bc THEN f.idx END) AS up_idx,
-        |    min(CASE WHEN f.c <= e.e_c - e.bc THEN f.idx END) AS dn_idx,
-        |    count(*) AS n_lookahead
-        |  FROM e JOIN x f ON f.symbol = e.symbol
-        |    AND f.idx > e.e_idx AND f.idx <= e.e_idx + $tbHorizon
-        |  GROUP BY 1, 2, 3, 4, 5)
-        |SELECT symbol, e_idx, entry_id, e_c, bc, up_idx, dn_idx,
-        |  n_lookahead,
-        |  CASE WHEN up_idx IS NOT NULL
-        |      AND (dn_idx IS NULL OR up_idx < dn_idx) THEN 1
-        |    WHEN dn_idx IS NOT NULL
-        |      AND (up_idx IS NULL OR dn_idx < up_idx) THEN -1
-        |    ELSE 0 END AS label
-        |FROM j ORDER BY symbol, e_idx""".stripMargin,
-    // D72 — CPCV: group bounds FROM the day roster (one aggregate),
-    // the C(N,2) combo grid via two ranges, integer-range roles.
-    "q_combinatorial_cv" ->
-      s"""WITH d0 AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date
-        |    FROM events),
-        |nd AS (SELECT count(*) AS n FROM d0),
-        |r AS (SELECT date, row_number() OVER (ORDER BY date) AS rn
-        |  FROM d0),
-        |g AS (SELECT date, rn, ((rn - 1) * $cpcvGroups) // nd.n AS g
-        |  FROM r, nd),
-        |bd AS (SELECT g, min(rn) AS lo, max(rn) AS hi FROM g GROUP BY 1),
-        |cmb AS (SELECT a.a, b.b, a.a * $cpcvGroups + b.b AS combo_id
-        |  FROM (SELECT unnest(range($cpcvGroups)) AS a) a,
-        |    (SELECT unnest(range($cpcvGroups)) AS b) b
-        |  WHERE a.a < b.b),
-        |cb AS (SELECT cmb.combo_id, cmb.a, cmb.b, ba.lo AS lo_a,
-        |    ba.hi AS hi_a, bb.lo AS lo_b, bb.hi AS hi_b
-        |  FROM cmb JOIN bd ba ON ba.g = cmb.a
-        |    JOIN bd bb ON bb.g = cmb.b)
-        |SELECT cb.combo_id, g.date,
-        |  CASE WHEN g.g = cb.a OR g.g = cb.b THEN 'test'
-        |    WHEN (g.rn >= cb.lo_a - 1 AND g.rn <= cb.hi_a + 1)
-        |      OR (g.rn >= cb.lo_b - 1 AND g.rn <= cb.hi_b + 1)
-        |      THEN 'purged'
-        |    ELSE 'train' END AS role
-        |FROM g, cb ORDER BY combo_id, date""".stripMargin,
-    // D71 — fracdiff: driver-computed (1-B)^d weights interpolated as
-    // shortest-round-trip literals into BOTH engines; the K-lag
-    // combination is one explicit left-associated chain over exact
-    // int64 cents; sign-split floor quantization; complete windows
-    // only.
-    "q_frac_diff" -> {
-      val ws = Features.fracDiffWeights(fracD, fracK)
-      val comb = (1 to fracK).foldLeft(s"${ws(0)} * CAST(c AS DOUBLE)")(
-        (acc, i) => s"($acc + ${ws(i)} * CAST(c$i AS DOUBLE))")
-      val lags = (1 to fracK).map(i =>
-        s"lag(c, $i) OVER (PARTITION BY symbol ORDER BY tick_id) AS c$i")
-        .mkString(",\n|    ")
-      s"""WITH b AS (SELECT user_id AS symbol, event_id AS tick_id,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS c,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id)
-        |      AS idx
-        |  FROM events),
-        |l AS (SELECT symbol, tick_id, idx, c,
-        |    $lags
-        |  FROM b)
-        |SELECT symbol, tick_id,
-        |  CAST(CASE WHEN ($comb) >= 0
-        |    THEN floor(($comb) * 1000000.0 + 0.5)
-        |    ELSE -floor(-($comb) * 1000000.0 + 0.5) END AS BIGINT)
-        |    / 1000000.0 + 0.0 AS ffd
-        |FROM l WHERE idx > $fracK ORDER BY symbol, tick_id""".stripMargin
-    },
-    // D59 — reversal spread: B7's exact-cent OHLC collapse, one
-    // identically-spelled IEEE bp return, ntile over a total order,
-    // bucket means round(4), spread from the rounded finals.
-    "q_reversal_spread" ->
-      s"""WITH d AS (SELECT user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    min_by(CAST(round(value * 100.0, 0) AS BIGINT), event_id)
-        |      AS o,
-        |    max_by(CAST(round(value * 100.0, 0) AS BIGINT), event_id)
-        |      AS cl
-        |  FROM events GROUP BY 1, 2),
-        |r AS (SELECT symbol, day,
-        |    CAST(cl - o AS DOUBLE) / o * 10000 AS ret_bp,
-        |    lag(CAST(cl - o AS DOUBLE) / o * 10000)
-        |      OVER (PARTITION BY symbol ORDER BY day) AS prev_bp
-        |  FROM d WHERE o > 0),
-        |rk AS (SELECT day, ret_bp,
-        |    ntile($sortQuantiles)
-        |      OVER (PARTITION BY day ORDER BY prev_bp, symbol) AS q
-        |  FROM r WHERE prev_bp IS NOT NULL),
-        |g AS (SELECT strftime(day, '%Y-%m-%d') AS day,
-        |    count(*) AS n_symbols,
-        |    round(avg(CASE WHEN q = 1 THEN ret_bp END), 4) AS loser_bp,
-        |    round(avg(CASE WHEN q = $sortQuantiles THEN ret_bp END), 4)
-        |      AS winner_bp
-        |  FROM rk GROUP BY 1)
-        |SELECT day, n_symbols, loser_bp, winner_bp,
-        |  round(loser_bp - winner_bp, 4) AS reversal_spread_bp
-        |FROM g ORDER BY day""".stripMargin,
-    // D58 — shock recovery: D38's oracle shape (plain range join at
-    // gate SFs), cross-multiplied exact-cent thresholds, first
-    // recovery one conditional MIN, non-negative exact div move.
-    "q_shock_recovery" ->
-      s"""WITH x AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS BIGINT) AS idx
-        |  FROM $ticksSql t),
-        |s AS (SELECT symbol, idx AS s_idx, tick_id AS shock_id,
-        |    lag(c) OVER (PARTITION BY symbol ORDER BY idx) AS pre_c,
-        |    c AS shock_c
-        |  FROM x),
-        |sh AS (SELECT * FROM s WHERE pre_c > 0
-        |  AND abs(shock_c - pre_c) * 10000 >= pre_c * $shockBpParam),
-        |j AS (
-        |  SELECT sh.symbol, sh.s_idx, sh.shock_id, sh.pre_c, sh.shock_c,
-        |    min(CASE WHEN abs(f.c - sh.pre_c) * 10000
-        |      <= sh.pre_c * $shockRecoverBp THEN f.idx END) AS r_idx,
-        |    count(*) AS n_lookahead
-        |  FROM sh JOIN x f ON f.symbol = sh.symbol
-        |    AND f.idx > sh.s_idx AND f.idx <= sh.s_idx + $tbHorizon
-        |  GROUP BY 1, 2, 3, 4, 5)
-        |SELECT symbol, shock_id, pre_c, shock_c,
-        |  (abs(shock_c - pre_c) * 10000) // pre_c AS abs_move_bp,
-        |  r_idx - s_idx AS recovery_ticks,
-        |  r_idx IS NOT NULL AS recovered,
-        |  n_lookahead
-        |FROM j ORDER BY symbol, shock_id""".stripMargin,
-    // D39 — realized moments: unrounded avg moments (corr-aggregate
-    // discipline — raw power sums pass 2^53 where rounding is
-    // meaningless), scale-invariant finals round(4); var^1.5 spelled
-    // var*sqrt(var) on both engines (pow is not correctly rounded).
-    "q_realized_moments" ->
-      s"""WITH d AS (
-        |  SELECT symbol, _date,
-        |    CAST(c - lag(c) OVER (PARTITION BY symbol, _date
-        |      ORDER BY tick_id) AS DOUBLE) AS d
-        |  FROM (SELECT symbol, tick_id, CAST(ts AS DATE) AS _date,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c FROM $ticksSql t) x),
-        |a AS (
-        |  SELECT symbol, _date, count(d) AS n_moves,
-        |    avg(d) AS m1, avg(d * d) AS m2, avg(d * d * d) AS m3,
-        |    avg(d * d * d * d) AS m4
-        |  FROM d GROUP BY 1, 2),
-        |v AS (SELECT *, m2 - m1 * m1 AS _var FROM a)
-        |SELECT symbol, strftime(_date, '%Y-%m-%d') AS date, n_moves,
-        |  round(_var, 4) AS variance,
-        |  CASE WHEN _var > 0 THEN
-        |    round((m3 - 3.0 * m1 * m2 + 2.0 * m1 * m1 * m1)
-        |      / (_var * sqrt(_var)), 4) END AS skewness,
-        |  CASE WHEN _var > 0 THEN
-        |    round((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2
-        |      - 3.0 * m1 * m1 * m1 * m1) / (_var * _var) - 3.0, 4)
-        |  END AS ex_kurtosis
-        |FROM v ORDER BY symbol, date""".stripMargin,
-    "q_hurst" ->
-      s"""SELECT symbol, n_obs, var_1, var_8,
-        |  CASE WHEN var_1 > 0 AND var_2 > 0 AND var_4 > 0 AND var_8 > 0
-        |    THEN round(((-3.0 * ln(var_1) - ln(var_2) + ln(var_4)
-        |      + 3.0 * ln(var_8)) / (10.0 * ln(2.0))) / 2.0, 4) + 0.0
-        |  END AS hurst
-        |FROM (
-        |  SELECT symbol,
-        |    round(var_samp(d1), 4) AS var_1,
-        |    round(var_samp(d2), 4) AS var_2,
-        |    round(var_samp(d4), 4) AS var_4,
-        |    round(var_samp(d8), 4) AS var_8,
-        |    count(d8) AS n_obs
-        |  FROM (
-        |    SELECT symbol,
-        |      CAST(cents - lag(cents, 1) OVER w AS DOUBLE) AS d1,
-        |      CAST(cents - lag(cents, 2) OVER w AS DOUBLE) AS d2,
-        |      CAST(cents - lag(cents, 4) OVER w AS DOUBLE) AS d4,
-        |      CAST(cents - lag(cents, 8) OVER w AS DOUBLE) AS d8
-        |    FROM (
-        |      SELECT symbol, tick_id,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |      FROM $ticksSql t) y
-        |    WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)) z
-        |  GROUP BY symbol) agg
-        |ORDER BY symbol""".stripMargin,
-    // D24 — Kyle's lambda: all five regression sums CAST AS BIGINT (the
-    // r8 HUGEINT rule), slope ONE division of exact ints, unrounded.
-    "q_kyle_lambda" ->
-      """SELECT symbol, n_obs, sx,
-        |  CASE WHEN n_obs * sxx - sx * sx > 0 THEN
-        |    CAST(n_obs * sxy - sx * sy AS DOUBLE)
-        |      / CAST(n_obs * sxx - sx * sx AS DOUBLE) END AS kyle_lambda
-        |FROM (
-        |  SELECT symbol,
-        |    CAST(sum(sv * dp) AS BIGINT) AS sxy,
-        |    CAST(sum(sv) AS BIGINT) AS sx,
-        |    CAST(sum(CASE WHEN sv IS NOT NULL THEN dp END) AS BIGINT)
-        |      AS sy,
-        |    CAST(sum(sv * sv) AS BIGINT) AS sxx,
-        |    count(sv) AS n_obs
-        |  FROM (
-        |    SELECT symbol, cents - prev AS dp,
-        |      CASE WHEN cents > prev THEN CAST(k AS BIGINT)
-        |           WHEN cents < prev THEN -CAST(k AS BIGINT)
-        |           WHEN prev IS NOT NULL THEN 0 END AS sv
-        |    FROM (
-        |      SELECT user_id AS symbol,
-        |        CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |        CAST(props->>'$.k' AS INT) AS k,
-        |        lag(CAST(round(value * 100.0, 0) AS BIGINT), 1) OVER (
-        |          PARTITION BY user_id, CAST(ts AS DATE)
-        |          ORDER BY event_id) AS prev
-        |      FROM events) y) z
-        |  GROUP BY symbol) agg
-        |ORDER BY symbol""".stripMargin,
-    "q_autocorr" ->
-      s"""SELECT symbol, round(corr(bid, lag_bid), 4) AS autocorr_5,
-        |  count(lag_bid) AS n_pairs
-        |FROM (SELECT symbol, bid,
-        |    lag(bid, 5) OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS lag_bid
-        |  FROM $ticksSql t) x
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // EWMA: same ordered list, same left-to-right (x+acc)*0.5 fold —
-    // DuckDB list_reduce seeds with the FIRST element and folds the
-    // rest, exactly the Spark slice(...,2)+init spelling, so the
-    // unrounded doubles are bit-identical.
-    "q_ewma" ->
-      s"""SELECT symbol, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |  count(*) AS n_ticks,
-        |  list_reduce(list(bid ORDER BY ts, tick_id),
-        |    (acc, x) -> (x + acc) * cast(0.5 as double)) AS ewma_bid
-        |FROM $ticksSql t
-        |GROUP BY symbol, CAST(ts AS DATE)
-        |ORDER BY symbol, date""".stripMargin,
-    "q_interarrival" ->
-      s"""SELECT symbol, round(avg(gap_us) / 1000000.0, 4) AS avg_gap_sec,
-        |  round(max(gap_us) / 1000000.0, 4) AS max_gap_sec,
-        |  count(gap_us) AS n_gaps
-        |FROM (SELECT symbol, epoch_us(CAST(ts AS TIMESTAMP))
-        |    - lag(epoch_us(CAST(ts AS TIMESTAMP)))
-        |      OVER (PARTITION BY symbol ORDER BY tick_id) AS gap_us
-        |  FROM $ticksSql t) x
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // Nearest join: backward ASOF inclusive + forward ASOF strict,
-    // closer candidate wins, exact-µs ties go backward.
-    "q_nearest_join" ->
-      """WITH tr AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |qu AS (SELECT * FROM events
-        |  WHERE event_type IN ('click','view')),
-        |b AS (SELECT t.event_id AS trade_id, t.user_id AS symbol, t.ts,
-        |    q.event_id AS b_id, q.value AS b_bid,
-        |    epoch_us(t.ts) - epoch_us(q.ts) AS b_age
-        |  FROM tr t ASOF LEFT JOIN qu q
-        |    ON t.user_id = q.user_id AND t.ts >= q.ts),
-        |f AS (SELECT t.event_id AS trade_id,
-        |    q.event_id AS f_id, q.value AS f_bid,
-        |    epoch_us(q.ts) - epoch_us(t.ts) AS f_age
-        |  FROM tr t ASOF LEFT JOIN qu q
-        |    ON t.user_id = q.user_id AND t.ts < q.ts)
-        |SELECT trade_id, symbol, date_trunc('second', ts) AS ts_s,
-        |  CASE WHEN useback THEN b_id
-        |       WHEN f_id IS NOT NULL THEN f_id END AS near_id,
-        |  CASE WHEN useback THEN 'back'
-        |       WHEN f_id IS NOT NULL THEN 'fwd' END AS direction,
-        |  CASE WHEN useback THEN b_age
-        |       WHEN f_id IS NOT NULL THEN f_age END AS near_age_us,
-        |  CASE WHEN useback THEN b_bid
-        |       WHEN f_id IS NOT NULL THEN f_bid END AS near_bid
-        |FROM (SELECT b.*, f.f_id, f.f_bid, f.f_age,
-        |    b_id IS NOT NULL AND (f_id IS NULL OR b_age <= f_age)
-        |      AS useback
-        |  FROM b JOIN f USING (trade_id)) x
-        |ORDER BY trade_id""".stripMargin,
-    // Market beta: per-(symbol, second) first tick, per-second
-    // equal-weight mean ROUNDED to 4 before the covar/var (kills avg
-    // reduction-order noise at the join boundary), grouped beta
-    // rounded per the D10 corr convention.
-    "q_market_beta" ->
-      s"""WITH ps AS (SELECT symbol, date_trunc('second', ts) AS sec,
-        |    arg_min(bid, tick_id) AS bid
-        |  FROM $ticksSql t GROUP BY symbol, date_trunc('second', ts)),
-        |mk AS (SELECT sec, round(avg(bid), 4) AS mkt FROM ps GROUP BY sec)
-        |SELECT symbol,
-        |  CASE WHEN var_pop(mkt) > 0 THEN
-        |    round(covar_pop(bid, mkt) / var_pop(mkt), 4) END AS beta,
-        |  count(*) AS n_obs
-        |FROM ps JOIN mk USING (sec)
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // Curriculum: even-grid score snap (2*floor(score*2^20+0.5)) and
-    // ROUNDED quantile_cont thresholds — the parity argument in the
-    // operator's docstring makes round(t) identical across engines, so
-    // every comparison is integer-exact (raw interpolated thresholds
-    // flipped 5/5000 phases at sf0.1).
-    "q_curriculum" -> {
-      import graft.functions.PortableText._
-      val qs = (1 until 10).map(i =>
-        s"round(quantile_cont(score_q, 0.$i))").mkString(", ")
-      s"""WITH s AS (SELECT doc_id, length(tk) AS n_tokens,
-        |    CASE WHEN length(tk) > 0 THEN
-        |      CAST(length(list_filter(tk, t ->
-        |        list_contains(['the','a','of','and','to'], t))) AS DOUBLE)
-        |        / length(tk) END AS score
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x),
-        |s2 AS (SELECT doc_id, n_tokens, score,
-        |    2 * CAST(floor(score * 1048576 + 0.5) AS BIGINT) AS score_q
-        |  FROM s),
-        |th AS (SELECT [$qs] AS ths FROM s2)
-        |SELECT doc_id, n_tokens, score,
-        |  10 - list_reduce(list_prepend(0, list_transform(ths,
-        |    t -> CASE WHEN score_q > t THEN 1 ELSE 0 END)), (a, b) -> a + b)
-        |    AS phase
-        |FROM s2, th ORDER BY doc_id""".stripMargin
-    },
-    // Length histogram: exact-int buckets, window running total,
-    // exact-int share division.
-    "q_length_histogram" -> {
-      import graft.functions.PortableText._
-      s"""SELECT bucket, n_docs, tokens,
-        |  CAST(sum(n_docs) OVER (ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_docs,
-        |  CAST(CAST(sum(n_docs) OVER (ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS DOUBLE) / n_total AS cum_doc_share
-        |FROM (
-        |  SELECT n_tokens // 64 AS bucket, count(*) AS n_docs,
-        |    CAST(sum(n_tokens) AS BIGINT) AS tokens
-        |  FROM (SELECT CAST(length($duckTokens) AS BIGINT) AS n_tokens
-        |    FROM documents) d
-        |  GROUP BY n_tokens // 64) g,
-        |  (SELECT count(*) AS n_total FROM documents) n
-        |ORDER BY bucket""".stripMargin
-    },
-    // F44 — TV numerator pure int64 (counts × counts, order-free),
-    // distance ONE division, unrounded; sums CAST (HUGEINT rule).
-    "q_source_drift" -> {
-      import graft.functions.PortableText._
-      s"""WITH hist AS (
-        |  SELECT source,
-        |    CAST(length($duckTokens) // 16 AS BIGINT) AS bucket,
-        |    count(*) AS c
-        |  FROM documents GROUP BY source, bucket),
-        |tot AS (SELECT source, CAST(sum(c) AS BIGINT) AS n
-        |  FROM hist GROUP BY source),
-        |pairs AS (SELECT a.source AS src_a, a.n AS n_a,
-        |    b.source AS src_b, b.n AS n_b
-        |  FROM tot a, tot b WHERE a.source < b.source),
-        |univ AS (SELECT p.src_a, p.src_b, p.n_a, p.n_b, u.bucket
-        |  FROM pairs p, (SELECT DISTINCT bucket FROM hist) u),
-        |j AS (SELECT src_a, src_b, n_a, n_b,
-        |    abs(coalesce(ha.c, 0) * n_b - coalesce(hb.c, 0) * n_a) AS num
-        |  FROM univ
-        |  LEFT JOIN hist ha ON ha.source = univ.src_a
-        |    AND ha.bucket = univ.bucket
-        |  LEFT JOIN hist hb ON hb.source = univ.src_b
-        |    AND hb.bucket = univ.bucket)
-        |SELECT src_a, src_b, n_a, n_b,
-        |  CAST(CAST(sum(num) AS BIGINT) AS DOUBLE)
-        |    / CAST(2.0 * n_a * n_b AS DOUBLE) AS tv_dist
-        |FROM j GROUP BY src_a, src_b, n_a, n_b
-        |ORDER BY src_a, src_b""".stripMargin
-    },
-    // F86 — per-source unigram KL: one (source, token) collapse,
-    // ln-sum per-term spelling (cross-multiplied int ratio would
-    // overflow), vocab-sized float sum round(4) (float sweep).
-    "q_source_kl" -> {
-      import graft.functions.PortableText._
-      s"""WITH st AS (SELECT source, token, count(*) AS c_st
-        |  FROM (SELECT source, unnest($duckTokens) AS token
-        |    FROM documents)
-        |  GROUP BY source, token),
-        |ct AS (SELECT token, CAST(sum(c_st) AS BIGINT) AS c_t
-        |  FROM st GROUP BY token),
-        |ns AS (SELECT source, CAST(sum(c_st) AS BIGINT) AS n_s
-        |  FROM st GROUP BY source),
-        |tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n_total FROM ns)
-        |SELECT st.source, max(ns.n_s) AS n_tokens, count(*) AS n_terms,
-        |  round(sum((CAST(c_st AS DOUBLE) / CAST(n_s AS DOUBLE)) *
-        |    (ln(CAST(c_st AS DOUBLE)) + ln(CAST(n_total AS DOUBLE))
-        |     - ln(CAST(n_s AS DOUBLE)) - ln(CAST(c_t AS DOUBLE)))), 4)
-        |    AS kl
-        |FROM st JOIN ct USING (token) JOIN ns USING (source), tot
-        |GROUP BY st.source ORDER BY st.source""".stripMargin
-    },
-    // F87 — lexical diversity: exact int counts, two unrounded IEEE
-    // divisions of exact ints, NULL guards on empty marginals.
-    "q_lexical_diversity" -> {
-      import graft.functions.PortableText._
-      s"""WITH st AS (SELECT source, token, count(*) AS c_st
-        |  FROM (SELECT source, unnest($duckTokens) AS token
-        |    FROM documents)
-        |  GROUP BY source, token),
-        |sg AS (SELECT source, CAST(sum(c_st) AS BIGINT) AS n_tokens,
-        |    count(*) AS n_types,
-        |    CAST(sum(CASE WHEN c_st = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_hapax
-        |  FROM st GROUP BY source),
-        |dg AS (SELECT source,
-        |    round(avg(CAST(length(list_distinct($duckTokens)) AS DOUBLE)
-        |      / length($duckTokens)), 4) AS mean_doc_ttr
-        |  FROM documents WHERE length($duckTokens) > 0
-        |  GROUP BY source)
-        |SELECT sg.source, n_tokens, n_types, n_hapax,
-        |  CASE WHEN n_tokens > 0
-        |    THEN CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE) END
-        |    AS type_token_ratio,
-        |  CASE WHEN n_types > 0
-        |    THEN CAST(n_hapax AS DOUBLE) / CAST(n_types AS DOUBLE) END
-        |    AS hapax_share,
-        |  dg.mean_doc_ttr
-        |FROM sg LEFT JOIN dg USING (source)
-        |ORDER BY source""".stripMargin
-    },
-    // F88 — k-anonymity classes: one grouped count, exact-int div
-    // bucketing (both engines truncate non-negative), int compare.
-    "q_k_anonymity" ->
-      s"""SELECT source, lang,
-        |  CAST(n_chars // $kAnonBucket AS BIGINT) AS size_bucket,
-        |  count(*) AS n_docs, count(*) < $kAnonK AS at_risk
-        |FROM documents GROUP BY source, lang, size_bucket
-        |ORDER BY source, lang, size_bucket""".stripMargin,
-    // Tolerance as-of: ASOF LEFT JOIN keeps every trade; the staleness
-    // gate nullifies the match columns (age in exact integer µs; both
-    // engines floor ns→µs identically).
-    // E16 — the two-ASOF dual of the one-union-one-window plan;
-    // values picked raw, ages exact µs, left semantics.
-    "q_pit_features" ->
-      """SELECT t.event_id AS fact_id, t.user_id AS symbol,
-        |  a.value AS a_val,
-        |  epoch_us(t.ts) - epoch_us(a.ts) AS a_age_us,
-        |  b.value AS b_val,
-        |  epoch_us(t.ts) - epoch_us(b.ts) AS b_age_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF LEFT JOIN (SELECT * FROM events
-        |    WHERE event_type = 'click') a
-        |  ON t.user_id = a.user_id AND t.ts >= a.ts
-        |ASOF LEFT JOIN (SELECT * FROM events
-        |    WHERE event_type = 'view') b
-        |  ON t.user_id = b.user_id AND t.ts >= b.ts
-        |ORDER BY fact_id""".stripMargin,
-    "q_asof_tolerance" ->
-      """SELECT trade_id, symbol, ts_s,
-        |  CASE WHEN fresh THEN qid END AS asof_id,
-        |  CASE WHEN fresh THEN qbid END AS asof_bid,
-        |  CASE WHEN fresh THEN age_us END AS age_us
-        |FROM (
-        |  SELECT t.event_id AS trade_id, t.user_id AS symbol,
-        |    date_trunc('second', t.ts) AS ts_s,
-        |    q.event_id AS qid, q.value AS qbid,
-        |    epoch_us(t.ts) - epoch_us(q.ts) AS age_us,
-        |    q.event_id IS NOT NULL
-        |      AND epoch_us(t.ts) - epoch_us(q.ts) <= 600000000 AS fresh
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |  ASOF LEFT JOIN (SELECT * FROM events
-        |    WHERE event_type IN ('click','view')) q
-        |    ON t.user_id = q.user_id AND t.ts >= q.ts) x
-        |ORDER BY trade_id""".stripMargin,
-    "q_asof_join" ->
-      """SELECT t.event_id AS trade_id, t.user_id AS symbol,
-        |  date_trunc('second', t.ts) AS ts_s,
-        |  q.event_id AS asof_id, q.value AS asof_bid
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF JOIN (SELECT * FROM events WHERE event_type IN ('click','view')) q
-        |  ON t.user_id = q.user_id AND t.ts >= q.ts
-        |ORDER BY trade_id""".stripMargin,
-    // E10 — coverage: per-symbol generate_series day grid left-joined
-    // to the collapsed (symbol, day) frame; exact int counts, one
-    // unrounded division.
-    "q_calendar_coverage" ->
-      s"""WITH days AS (
-        |  SELECT symbol, CAST(ts AS DATE) AS d, count(*) AS n_ticks
-        |  FROM $ticksSql t GROUP BY symbol, CAST(ts AS DATE)),
-        |span AS (SELECT symbol, min(d) AS d0, max(d) AS d1
-        |  FROM days GROUP BY symbol),
-        |grid AS (SELECT symbol, CAST(g.g AS DATE) AS d
-        |  FROM span, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS g(g))
-        |SELECT symbol,
-        |  count(*) AS n_days_span,
-        |  CAST(sum(CASE WHEN days.n_ticks IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_days_active,
-        |  CAST(sum(CASE WHEN days.n_ticks IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_days_missing,
-        |  CAST(sum(CASE WHEN days.n_ticks IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / count(*) AS coverage
-        |FROM grid LEFT JOIN days USING (symbol, d)
-        |GROUP BY symbol ORDER BY symbol""".stripMargin,
-    // D35 — Epps curve: per-scale anchors via arg_min, moves exact
-    // cents, bucket ids integer div (no double quotient), corr
-    // round(4), <2-point pair-scales NULL.
-    "q_epps_curve" ->
-      s"""WITH scales AS (SELECT CAST(s.scale_sec AS BIGINT) AS scale_sec
-        |  FROM (VALUES $eppsScalesSql) AS s(scale_sec)),
-        |t AS (SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM $ticksSql tk),
-        |anchors AS (
-        |  SELECT symbol, scale_sec,
-        |    us // (scale_sec * 1000000) AS bucket,
-        |    arg_min(cents, tick_id) AS a_cents
-        |  FROM t, scales
-        |  GROUP BY symbol, scale_sec, us // (scale_sec * 1000000)),
-        |moves AS (
-        |  SELECT symbol, scale_sec, bucket,
-        |    CAST(a_cents - lag(a_cents) OVER (
-        |      PARTITION BY symbol, scale_sec ORDER BY bucket)
-        |      AS DOUBLE) AS mv
-        |  FROM anchors),
-        |m AS (SELECT * FROM moves WHERE mv IS NOT NULL),
-        |pairs AS (SELECT * FROM (VALUES $symPairsSql)
-        |  AS p(sym_a, sym_b))
-        |SELECT p.sym_a, p.sym_b, a.scale_sec,
-        |  count(*) AS n_buckets,
-        |  round(CASE WHEN stddev_samp(a.mv) > 0 AND stddev_samp(b.mv) > 0
-        |    THEN covar_samp(a.mv, b.mv)
-        |      / (stddev_samp(a.mv) * stddev_samp(b.mv)) END, 4)
-        |    AS grid_corr
-        |FROM pairs p
-        |JOIN m a ON a.symbol = p.sym_a
-        |JOIN m b ON b.symbol = p.sym_b AND b.scale_sec = a.scale_sec
-        |  AND b.bucket = a.bucket
-        |GROUP BY p.sym_a, p.sym_b, a.scale_sec
-        |ORDER BY sym_a, sym_b, a.scale_sec""".stripMargin,
-    // D33 — HY: exact cent-delta products summed int64; overlap pairs
-    // counted once in the bucket of the overlap START (integer div on
-    // both engines); hy_corr IEEE sqrt/mul/div on identical exact ints.
-    "q_hy_cov" ->
-      s"""WITH rets AS (
-        |  SELECT symbol, cents - prev_c AS r, prev_us AS t0, us AS t1
-        |  FROM (
-        |    SELECT symbol, tick_id,
-        |      CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |      epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |      lag(CAST(round(bid * 100.0, 0) AS BIGINT)) OVER w AS prev_c,
-        |      lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER w AS prev_us
-        |    FROM $ticksSql t
-        |    WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)) x
-        |  WHERE prev_c IS NOT NULL),
-        |pairs AS (SELECT * FROM (VALUES $symPairsSql)
-        |  AS p(sym_a, sym_b)),
-        |ex AS (SELECT symbol, r, t0, t1, CAST(g.g AS BIGINT) AS bucket
-        |  FROM rets, unnest(generate_series(t0 // ${hyBucketSec * 1000000L},
-        |    t1 // ${hyBucketSec * 1000000L})) AS g(g)),
-        |cov AS (
-        |  SELECT p.sym_a, p.sym_b, count(*) AS n_overlaps,
-        |    CAST(sum(a.r * b.r) AS BIGINT) AS hy_cov_cc2
-        |  FROM pairs p
-        |  JOIN ex a ON a.symbol = p.sym_a
-        |  JOIN ex b ON b.symbol = p.sym_b AND b.bucket = a.bucket
-        |  WHERE a.t0 < b.t1 AND b.t0 < a.t1
-        |    AND greatest(a.t0, b.t0) // ${hyBucketSec * 1000000L} = a.bucket
-        |  GROUP BY p.sym_a, p.sym_b),
-        |vars AS (SELECT symbol, CAST(sum(r * r) AS BIGINT) AS v
-        |  FROM rets GROUP BY symbol)
-        |SELECT sym_a, sym_b, n_overlaps, hy_cov_cc2,
-        |  va.v AS var_a_cc2, vb.v AS var_b_cc2,
-        |  CASE WHEN va.v > 0 AND vb.v > 0 THEN
-        |    CAST(hy_cov_cc2 AS DOUBLE)
-        |      / (sqrt(CAST(va.v AS DOUBLE)) * sqrt(CAST(vb.v AS DOUBLE)))
-        |  END AS hy_corr
-        |FROM cov
-        |JOIN vars va ON va.symbol = cov.sym_a
-        |JOIN vars vb ON vb.symbol = cov.sym_b
-        |ORDER BY sym_a, sym_b""".stripMargin,
-    // E11 — interpolation never leaves int64: grid INDEX as time
-    // (uniform grid ⇒ index interp ≡ time interp), B8's half-up
-    // integer rounding formula, both engines' integer division
-    // truncates toward zero on the non-negative operands.
-    "q_interp_grid" ->
-      s"""WITH anchors AS (
-        |  SELECT symbol, date_trunc('hour', ts) AS bucket,
-        |    arg_min(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS a_cents
-        |  FROM $ticksSql t GROUP BY symbol, date_trunc('hour', ts)),
-        |span AS (SELECT symbol, min(bucket) AS b0, max(bucket) AS b1
-        |  FROM anchors GROUP BY symbol),
-        |grid AS (SELECT symbol, CAST(g.g AS TIMESTAMP) AS bucket
-        |  FROM span, unnest(generate_series(b0, b1, INTERVAL 1 HOUR))
-        |    AS g(g)),
-        |j AS (SELECT grid.symbol, grid.bucket, a.a_cents,
-        |    row_number() OVER (PARTITION BY grid.symbol
-        |      ORDER BY grid.bucket) AS idx
-        |  FROM grid LEFT JOIN anchors a
-        |    ON a.symbol = grid.symbol AND a.bucket = grid.bucket),
-        |f AS (SELECT symbol, bucket, a_cents, idx,
-        |    last_value(a_cents IGNORE NULLS) OVER wp AS p_cents,
-        |    last_value(CASE WHEN a_cents IS NOT NULL THEN idx END
-        |      IGNORE NULLS) OVER wp AS p_idx,
-        |    first_value(a_cents IGNORE NULLS) OVER wn AS n_cents,
-        |    first_value(CASE WHEN a_cents IS NOT NULL THEN idx END
-        |      IGNORE NULLS) OVER wn AS n_idx
-        |  FROM j
-        |  WINDOW wp AS (PARTITION BY symbol ORDER BY bucket
-        |      ROWS UNBOUNDED PRECEDING),
-        |    wn AS (PARTITION BY symbol ORDER BY bucket
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT symbol,
-        |  strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket_ts,
-        |  CASE WHEN a_cents IS NOT NULL THEN a_cents
-        |    ELSE (2 * (p_cents * (n_idx - idx) + n_cents * (idx - p_idx))
-        |      + (n_idx - p_idx)) // (2 * (n_idx - p_idx)) END AS cents,
-        |  a_cents IS NOT NULL AS is_observed
-        |FROM f ORDER BY symbol, bucket_ts""".stripMargin,
-    // D29 — rolling corr over a ROWS frame on the shared daily grid;
-    // moves exact cents, corr round(4), <2-point windows NULL.
-    "q_rolling_corr" ->
-      s"""WITH grid AS (
-        |  SELECT symbol, CAST(ts AS DATE) AS d,
-        |    arg_min(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS cents
-        |  FROM $ticksSql t GROUP BY symbol, CAST(ts AS DATE)),
-        |rets AS (
-        |  SELECT symbol, d,
-        |    CAST(cents - lag(cents) OVER (PARTITION BY symbol ORDER BY d)
-        |      AS DOUBLE) AS mv
-        |  FROM grid),
-        |r AS (SELECT * FROM rets WHERE mv IS NOT NULL),
-        |pairs AS (SELECT * FROM (VALUES $symPairsSql)
-        |  AS p(sym_a, sym_b)),
-        |al AS (
-        |  SELECT p.sym_a, p.sym_b, a.d, a.mv AS d_a, b.mv AS d_b
-        |  FROM pairs p
-        |  JOIN r a ON a.symbol = p.sym_a
-        |  JOIN r b ON b.symbol = p.sym_b AND b.d = a.d)
-        |SELECT sym_a, sym_b, strftime(d, '%Y-%m-%d') AS date,
-        |  round(corr(d_a, d_b) OVER w, 4) AS roll_corr,
-        |  CAST(count(*) OVER w AS BIGINT) AS n_in_window
-        |FROM al
-        |WINDOW w AS (PARTITION BY sym_a, sym_b ORDER BY d
-        |  ROWS BETWEEN ${rollCorrDays - 1} PRECEDING AND CURRENT ROW)
-        |ORDER BY sym_a, sym_b, date""".stripMargin,
-    // E9 — funnel: chained conditional MINs in exact int64 epoch µs
-    // (ns→µs cast rule); dropouts keep NULLs via left joins.
-    "q_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |t1 AS (SELECT user_id, min(us) AS t1_us FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |t2 AS (SELECT ev.user_id, min(us) AS t2_us
-        |  FROM ev JOIN t1 USING (user_id)
-        |  WHERE event_type = 'click' AND us > t1_us
-        |    AND us <= t1_us + 86400000000 GROUP BY ev.user_id),
-        |t3 AS (SELECT ev.user_id, min(us) AS t3_us
-        |  FROM ev JOIN t2 USING (user_id)
-        |  WHERE event_type = 'purchase' AND us > t2_us
-        |    AND us <= t2_us + 86400000000 GROUP BY ev.user_id)
-        |SELECT t1.user_id, t1_us, t2_us, t3_us,
-        |  t3_us IS NOT NULL AS completed
-        |FROM t1 LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    // E14 — cohort retention: distinct (user, day) frame, first-seen
-    // min as the cohort, calendar²-bounded matrix; counts exact int64,
-    // retention ONE IEEE division of exact ints (unrounded).
-    "q_cohort_retention" ->
-      """WITH days AS (SELECT DISTINCT user_id,
-        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
-        |coh AS (SELECT user_id, min(day) AS cohort_day
-        |  FROM days GROUP BY user_id),
-        |sz AS (SELECT cohort_day, count(*) AS cohort_size
-        |  FROM coh GROUP BY cohort_day),
-        |act AS (SELECT c.cohort_day,
-        |    CAST(date_diff('day', c.cohort_day, d.day) AS BIGINT)
-        |      AS day_offset,
-        |    count(*) AS n_active
-        |  FROM days d JOIN coh c USING (user_id) GROUP BY 1, 2)
-        |SELECT strftime(a.cohort_day, '%Y-%m-%d') AS cohort_date,
-        |  a.day_offset, a.n_active, s.cohort_size,
-        |  CAST(a.n_active AS DOUBLE) / s.cohort_size AS retention
-        |FROM act a JOIN sz s USING (cohort_day)
-        |ORDER BY cohort_date, day_offset""".stripMargin,
-    // E15 — negation funnel: E9's chained conditional mins + ONE
-    // decorrelated blocker count over the matched window; blocked is
-    // three-valued (NULL when no chain), exact int64 µs throughout.
-    "q_funnel_negation" ->
-      """WITH ev AS (SELECT user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |t1 AS (SELECT user_id, min(us) AS t1_us FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |t2 AS (SELECT ev.user_id, min(us) AS t2_us
-        |  FROM ev JOIN t1 USING (user_id)
-        |  WHERE event_type = 'purchase' AND us > t1_us
-        |    AND us <= t1_us + 86400000000 GROUP BY ev.user_id),
-        |w AS (SELECT t1.user_id, t1_us, t2_us
-        |  FROM t1 LEFT JOIN t2 USING (user_id)),
-        |b AS (SELECT ev.user_id, count(*) AS n_blockers
-        |  FROM ev JOIN w USING (user_id)
-        |  WHERE event_type = 'click' AND w.t2_us IS NOT NULL
-        |    AND us > w.t1_us AND us < w.t2_us
-        |  GROUP BY ev.user_id)
-        |SELECT w.user_id, w.t1_us, w.t2_us,
-        |  CASE WHEN w.t2_us IS NOT NULL
-        |    THEN coalesce(b.n_blockers, 0) END AS n_blockers,
-        |  CASE WHEN w.t2_us IS NOT NULL
-        |    THEN coalesce(b.n_blockers, 0) > 0 END AS blocked,
-        |  w.t2_us IS NOT NULL AND coalesce(b.n_blockers, 0) = 0
-        |    AS completed
-        |FROM w LEFT JOIN b USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    // E6 — forward as-of: DuckDB ASOF with the inequality flipped.
-    // E7 — lead-lag: grid = first tick per (symbol, day) by tick_id
-    // (B2's rule), moves exact cents on the grid, corr round(4); pairs
-    // with no overlap drop out (inner join) on both sides.
-    "q_leadlag_corr" ->
-      s"""WITH grid AS (
-        |  SELECT symbol, date_trunc('day', ts) AS bucket,
-        |    arg_min(CAST(round(bid * 100.0, 0) AS BIGINT), tick_id)
-        |      AS cents
-        |  FROM $ticksSql t
-        |  GROUP BY symbol, date_trunc('day', ts)),
-        |rets AS (
-        |  SELECT symbol, bucket,
-        |    CAST(cents - lag(cents, 1) OVER (
-        |      PARTITION BY symbol ORDER BY bucket) AS DOUBLE) AS d
-        |  FROM grid),
-        |pairs(sym_lead, sym_lag) AS (
-        |  VALUES (CAST(1 AS BIGINT), CAST(2 AS BIGINT)),
-        |         (CAST(2 AS BIGINT), CAST(3 AS BIGINT)),
-        |         (CAST(1 AS BIGINT), CAST(3 AS BIGINT)))
-        |SELECT p.sym_lead, p.sym_lag, count(*) AS n_pairs,
-        |  round(corr(a.d, b.d), 4) AS leadlag_corr
-        |FROM pairs p
-        |JOIN rets a ON a.symbol = p.sym_lead AND a.d IS NOT NULL
-        |JOIN rets b ON b.symbol = p.sym_lag AND b.d IS NOT NULL
-        |  AND b.bucket = a.bucket + INTERVAL 1 DAY
-        |GROUP BY p.sym_lead, p.sym_lag
-        |ORDER BY sym_lead, sym_lag""".stripMargin,
-    "q_asof_forward" ->
-      """SELECT t.event_id AS trade_id, t.user_id AS symbol,
-        |  date_trunc('second', t.ts) AS ts_s,
-        |  q.event_id AS next_id, q.value AS next_bid
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF JOIN (SELECT * FROM events WHERE event_type IN ('click','view')) q
-        |  ON t.user_id = q.user_id AND t.ts <= q.ts
-        |ORDER BY trade_id""".stripMargin,
-    "q_range_join" ->
-      """SELECT t.event_id AS trade_id, t.user_id AS symbol,
-        |  count(q.ts) AS n_in_window
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'purchase') t
-        |LEFT JOIN (SELECT user_id, ts FROM events
-        |      WHERE event_type IN ('click','view')) q
-        |  ON q.user_id = t.user_id
-        |  AND q.ts >= t.ts - INTERVAL 3600 SECONDS AND q.ts < t.ts
-        |GROUP BY t.event_id, t.user_id ORDER BY trade_id""".stripMargin,
-    // E12 — containment: non-overlapping gap sessions ⇒ LEFT range
-    // join matches at most one interval; second-grain compares.
-    "q_session_assign" ->
-      s"""WITH t AS (SELECT event_id AS tick_id, user_id AS symbol, ts
-        |  FROM events WHERE event_type <> 'purchase'),
-        |s AS (SELECT tick_id, symbol, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w > INTERVAL $sessionGapSec SECOND
-        |      THEN 1 ELSE 0 END AS new_s
-        |  FROM t WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)),
-        |s2 AS (SELECT symbol, ts,
-        |    CAST(sum(new_s) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS session_id
-        |  FROM s),
-        |sess AS (SELECT symbol, session_id,
-        |    date_trunc('second', min(ts)) AS st,
-        |    date_trunc('second', max(ts)) AS en
-        |  FROM s2 GROUP BY symbol, session_id),
-        |p AS (SELECT event_id AS point_id, user_id AS symbol,
-        |    date_trunc('second', CAST(ts AS TIMESTAMP)) AS ts_s
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT p.point_id, p.symbol,
-        |  strftime(p.ts_s, '%Y-%m-%d %H:%M:%S') AS ts_s,
-        |  sess.session_id,
-        |  sess.session_id IS NOT NULL AS in_session
-        |FROM p LEFT JOIN sess ON sess.symbol = p.symbol
-        |  AND p.ts_s >= sess.st AND p.ts_s <= sess.en
-        |ORDER BY point_id""".stripMargin,
-    "q_sessionize" ->
-      """WITH t AS (SELECT event_id AS tick_id, user_id AS symbol, ts FROM events),
-        |s AS (SELECT tick_id, symbol, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w > INTERVAL 6 HOUR THEN 1 ELSE 0 END AS new_s
-        |  FROM t WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)),
-        |s2 AS (SELECT symbol, ts,
-        |    CAST(sum(new_s) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS session_id
-        |  FROM s)
-        |SELECT symbol, session_id, count(*) AS n_ticks,
-        |  date_trunc('second', min(ts)) AS session_start,
-        |  date_trunc('second', max(ts)) AS session_end
-        |FROM s2 GROUP BY symbol, session_id
-        |ORDER BY symbol, session_id""".stripMargin,
-    // E8 — session overlap: second-truncated bounds → exact int64
-    // second durations, all sums order-free (CAST — HUGEINT rule).
-    "q_session_overlap" ->
-      """WITH t AS (SELECT event_id AS tick_id, user_id AS symbol, ts FROM events),
-        |s AS (SELECT tick_id, symbol, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w > INTERVAL 6 HOUR THEN 1 ELSE 0 END AS new_s
-        |  FROM t WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)),
-        |s2 AS (SELECT symbol, ts,
-        |    sum(new_s) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS session_id
-        |  FROM s),
-        |sess AS (SELECT symbol,
-        |    date_trunc('second', min(ts)) AS st,
-        |    date_trunc('second', max(ts)) AS en
-        |  FROM s2 GROUP BY symbol, session_id),
-        |pairs(sym_a, sym_b) AS (
-        |  VALUES (CAST(1 AS BIGINT), CAST(2 AS BIGINT)),
-        |         (CAST(2 AS BIGINT), CAST(3 AS BIGINT)),
-        |         (CAST(1 AS BIGINT), CAST(3 AS BIGINT)))
-        |SELECT p.sym_a, p.sym_b, count(*) AS n_overlaps,
-        |  CAST(sum(date_diff('second',
-        |    greatest(a.st, b.st), least(a.en, b.en))) AS BIGINT)
-        |    AS total_overlap_s
-        |FROM pairs p
-        |JOIN sess a ON a.symbol = p.sym_a
-        |JOIN sess b ON b.symbol = p.sym_b
-        |  AND b.st <= a.en AND a.st <= b.en
-        |GROUP BY p.sym_a, p.sym_b
-        |ORDER BY sym_a, sym_b""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT doc_id, md5(text) AS h,
-        |  doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS keep
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_dedup_minhash" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t)
-        |SELECT doc_id, band,
-        |  (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |    AS band_hash
-        |FROM m, (SELECT unnest(range($Bands)) AS band) b
-        |ORDER BY doc_id, band""".stripMargin
-    },
-    // F85 — recall benchmark: the SAME mutation arithmetic (DuckDB
-    // list lambdas are 1-based where Spark's are 0-based — aligned so
-    // both drop exactly the k·i-th tokens), the F2 band CTEs over the
-    // constructed corpus, detection via a left join of the planted
-    // list; counts exact, recall/kept_share one division each.
-    "q_dedup_recall" -> {
-      import graft.functions.PortableText._
-      val muts = recallSeverities.map { k =>
-        s"""SELECT doc_id + ${k * 10000000L} AS doc_id,
-          |    array_to_string(list_filter($duckTokens,
-          |      (t, i) -> i % $k <> 0), ' ') AS text, lang, source
-          |  FROM base""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      val sev = recallSeverities.map(k => s"($k)").mkString(", ")
-      s"""WITH base AS (SELECT doc_id, text, lang, source
-        |  FROM documents WHERE doc_id % 20 = 0),
-        |mut AS ($muts),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM mut),
-        |t AS (SELECT doc_id, $duckTokenHashes AS th FROM corpus),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |p0 AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_hash = y.band_hash
-        |    AND x.doc_id < y.doc_id
-        |  WHERE x.band_hash IS NOT NULL),
-        |planted AS (SELECT s.k AS severity, b.doc_id AS doc_a,
-        |    b.doc_id + s.k * 10000000 AS doc_b
-        |  FROM (VALUES $sev) s(k), base b)
-        |SELECT severity, count(*) AS n_planted,
-        |  count(p0.doc_a) AS n_detected,
-        |  CAST(count(p0.doc_a) AS DOUBLE) / count(*) AS recall,
-        |  CAST(severity - 1 AS DOUBLE) / severity AS kept_share
-        |FROM planted LEFT JOIN p0 USING (doc_a, doc_b)
-        |GROUP BY severity ORDER BY severity""".stripMargin
-    },
-    // F41 — audit: same band/bucket CTEs as the minhash family; the
-    // exact intersection runs only on flagged pairs; ratios are
-    // exact-int divisions, unrounded.
-    "q_dedup_audit" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, th, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |p0 AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_hash = y.band_hash
-        |    AND x.doc_id < y.doc_id
-        |  WHERE x.band_hash IS NOT NULL),
-        |p AS (SELECT doc_a, doc_b FROM p0
-        |  WHERE ${duckHashOrder("(doc_a * 31 + doc_b)")} % 100 < 5),
-        |j AS (SELECT p.doc_a, p.doc_b,
-        |    length(list_filter(list_distinct(ma.th), v -> list_contains(mb.th, v)))
-        |      AS n_common,
-        |    length(list_distinct(ma.th)) + length(list_distinct(mb.th)) AS sz,
-        |    length(list_filter(range($MinHashK),
-        |      i -> ma.mh[CAST(i+1 AS INT)] = mb.mh[CAST(i+1 AS INT)]))
-        |      AS mh_agree
-        |  FROM p JOIN m ma ON ma.doc_id = p.doc_a
-        |  JOIN m mb ON mb.doc_id = p.doc_b)
-        |SELECT doc_a, doc_b,
-        |  CAST(n_common AS BIGINT) AS n_common,
-        |  CAST(sz - n_common AS BIGINT) AS n_union,
-        |  CAST(n_common AS DOUBLE) / (sz - n_common) AS jaccard,
-        |  CAST(mh_agree AS BIGINT) AS mh_agree,
-        |  CAST(mh_agree AS DOUBLE) / $MinHashK AS mh_est,
-        |  abs(CAST(mh_agree AS DOUBLE) / $MinHashK
-        |    - CAST(n_common AS DOUBLE) / (sz - n_common)) AS abs_err
-        |FROM j ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // F71 — F41's band/pair/intersection CTEs (full population, no
-    // sample), thresholds from the generated VALUES list; the cutoff
-    // is the exact-int cross-multiplication 10·n_common >= t·n_union;
-    // zero-pair thresholds keep their row; drop share exact bps.
-    "q_dedup_curve" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, th, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |p0 AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_hash = y.band_hash
-        |    AND x.doc_id < y.doc_id
-        |  WHERE x.band_hash IS NOT NULL),
-        |j AS (SELECT p0.doc_a, p0.doc_b,
-        |    length(list_filter(list_distinct(ma.th), v -> list_contains(mb.th, v)))
-        |      AS n_common,
-        |    length(list_distinct(ma.th)) + length(list_distinct(mb.th))
-        |      - length(list_filter(list_distinct(ma.th), v -> list_contains(mb.th, v)))
-        |      AS n_union
-        |  FROM p0 JOIN m ma ON ma.doc_id = p0.doc_a
-        |  JOIN m mb ON mb.doc_id = p0.doc_b),
-        |thr AS (SELECT CAST(v.t AS INT) AS thr_tenths
-        |  FROM (VALUES $dedupThrTenthsSql) v(t)),
-        |q AS (SELECT thr_tenths, count(*) AS n_pairs,
-        |    count(DISTINCT doc_b) AS n_docs_dropped
-        |  FROM j, thr
-        |  WHERE n_common * 10 >= thr_tenths * n_union
-        |  GROUP BY thr_tenths),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT thr.thr_tenths,
-        |  coalesce(q.n_pairs, 0) AS n_pairs,
-        |  coalesce(q.n_docs_dropped, 0) AS n_docs_dropped,
-        |  (coalesce(q.n_docs_dropped, 0) * 10000) // n.n_docs
-        |    AS drop_share_bp
-        |FROM thr LEFT JOIN q USING (thr_tenths) CROSS JOIN n
-        |ORDER BY thr.thr_tenths""".stripMargin
-    },
-    // F74 — LSH planner: the SAME t/m/bands/p0/j candidate chain as
-    // q_dedup_curve; per config the product-chain S-curve from
-    // TextDedup.detectProbExpr (one spelling, both engines — no libm
-    // pow), ppm-quantized per pair before order-free integer sums
-    // (HUGEINT sums CAST back), wanted = exact-int cross-mult.
-    "q_lsh_planner" -> {
-      import graft.functions.PortableText._
-      val cfgSelects = lshPlanConfigs.map { case (b, r) =>
-        s"""SELECT $b AS n_bands, $r AS rows_per_band,
-          |    CAST(round((${graft.operators.TextDedup.detectProbExpr(b, r)})
-          |      * 1000000.0, 0) AS BIGINT) AS p_q,
-          |    2 * n_common >= n_union AS wanted
-          |  FROM jac""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, th, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |p0 AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_hash = y.band_hash
-        |    AND x.doc_id < y.doc_id
-        |  WHERE x.band_hash IS NOT NULL),
-        |j AS (SELECT p0.doc_a, p0.doc_b,
-        |    length(list_filter(list_distinct(ma.th), v -> list_contains(mb.th, v)))
-        |      AS n_common,
-        |    length(list_distinct(ma.th)) + length(list_distinct(mb.th))
-        |      - length(list_filter(list_distinct(ma.th), v -> list_contains(mb.th, v)))
-        |      AS n_union
-        |  FROM p0 JOIN m ma ON ma.doc_id = p0.doc_a
-        |  JOIN m mb ON mb.doc_id = p0.doc_b),
-        |jac AS (SELECT n_common, n_union,
-        |    CAST(n_common AS DOUBLE) / n_union AS jacc
-        |  FROM j),
-        |u AS ($cfgSelects)
-        |SELECT n_bands, rows_per_band, count(*) AS n_pairs,
-        |  CAST(sum(p_q) AS BIGINT) AS det_ppm,
-        |  count(CASE WHEN wanted THEN 1 END) AS n_wanted,
-        |  CAST(sum(CASE WHEN wanted THEN p_q ELSE 0 END) AS BIGINT)
-        |    AS det_wanted_ppm,
-        |  CAST(sum(CASE WHEN NOT wanted THEN p_q ELSE 0 END) AS BIGINT)
-        |    AS det_unwanted_ppm,
-        |  CAST(CAST(sum(p_q) AS BIGINT) AS DOUBLE) / 1000000.0 / count(*)
-        |    AS mean_det
-        |FROM u GROUP BY n_bands, rows_per_band
-        |ORDER BY rows_per_band, n_bands""".stripMargin
-    },
-    // Greedy arrival-order near-dup: dup iff any band bucket holds an
-    // earlier doc — bucket-min vs own doc_id, no recursion needed.
-    "q_dedup_greedy" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bf AS (SELECT band, band_hash, min(doc_id) AS first_doc
-        |       FROM bands WHERE band_hash IS NOT NULL
-        |       GROUP BY band, band_hash),
-        |v AS (SELECT bands.doc_id, bool_or(first_doc < bands.doc_id) AS dup
-        |      FROM bands JOIN bf USING (band, band_hash)
-        |      GROUP BY bands.doc_id)
-        |SELECT d.doc_id, coalesce(v.dup, false) AS is_duplicate
-        |FROM documents d LEFT JOIN v ON d.doc_id = v.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // Stratified split: same hash-walk rank as q_source_cap, exact-int
-    // pct threshold rank*100 <= count*pct.
-    "q_stratified_split" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, source, rnk, n_source,
-        |  CASE WHEN rnk * 100 <= n_source * 10 THEN 'test'
-        |       ELSE 'train' END AS split
-        |FROM (SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY ${duckHashOrder("doc_id")}, doc_id) AS rnk,
-        |    count(*) OVER (PARTITION BY source) AS n_source
-        |  FROM documents) x
-        |ORDER BY doc_id""".stripMargin
-    },
-    // Survivorship: greedy verdict CTEs (as q_dedup_greedy) joined to
-    // per-doc token counts, one group by source.
-    "q_dedup_report" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bf AS (SELECT band, band_hash, min(doc_id) AS first_doc
-        |       FROM bands WHERE band_hash IS NOT NULL
-        |       GROUP BY band, band_hash),
-        |v AS (SELECT bands.doc_id, bool_or(first_doc < bands.doc_id) AS dup
-        |      FROM bands JOIN bf USING (band, band_hash)
-        |      GROUP BY bands.doc_id),
-        |g AS (SELECT d.doc_id, d.source,
-        |    CAST(length($duckTokens) AS BIGINT) AS n_tokens,
-        |    coalesce(v.dup, false) AS dup
-        |  FROM documents d LEFT JOIN v ON d.doc_id = v.doc_id)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
-        |  CAST(sum(CASE WHEN dup THEN n_tokens ELSE 0 END) AS BIGINT)
-        |    AS tokens_dropped,
-        |  CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS DOUBLE) / count(*)
-        |    AS doc_drop_ratio,
-        |  CASE WHEN sum(n_tokens) > 0 THEN
-        |    CAST(sum(CASE WHEN dup THEN n_tokens ELSE 0 END) AS DOUBLE)
-        |      / CAST(sum(n_tokens) AS BIGINT) END AS token_drop_ratio
-        |FROM g GROUP BY source ORDER BY source""".stripMargin
-    },
-    // Dup matrix: per-(fp, source) counts first, then count-level pair
-    // join — cross pairs cnt_a*cnt_b, diagonal C(cnt,2), exact ints.
-    // F70 — distinct (source, word-trigram) set → polyhash → k affine
-    // minhashes (the F2 family) per source; est = matches/k, exact =
-    // inter/union, err — all unrounded IEEE over exact ints. Word
-    // TRIGRAMS: char trigrams and word bigrams both saturate on the
-    // shared synthetic vocab (pairs at/near 1.0) while trigram J
-    // spreads 0.013..0.26 across SFs.
-    "q_source_similarity" -> {
-      import graft.functions.PortableText._
-      s"""WITH sg AS (SELECT DISTINCT source, gram FROM (
-        |    SELECT source,
-        |      unnest(list_transform(range(1, length(tk) - 1),
-        |        i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i+1 AS INT)]
-        |          || ' ' || tk[CAST(i+2 AS INT)])) AS gram
-        |    FROM (SELECT source, $duckTokens AS tk
-        |      FROM documents) t) x),
-        |sh AS (SELECT source, ${duckPolyHash("gram")} AS h FROM sg),
-        |sz AS (SELECT source, count(*) AS n_grams FROM sh
-        |  GROUP BY source),
-        |sig AS (SELECT source, j,
-        |    min(((2*j + 3) * h + 5*j + 7) % $P) AS mh
-        |  FROM sh, (SELECT unnest(range($srcSimK)) AS j) js
-        |  GROUP BY source, j),
-        |est AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    CAST(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_match
-        |  FROM sig a JOIN sig b ON a.j = b.j AND a.source < b.source
-        |  GROUP BY a.source, b.source),
-        |iv AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    count(*) AS n_inter
-        |  FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-        |  GROUP BY a.source, b.source)
-        |SELECT e.source_a, e.source_b, sa.n_grams AS n_gram_a,
-        |  sb.n_grams AS n_gram_b, coalesce(iv.n_inter, 0) AS n_inter,
-        |  e.n_match,
-        |  CAST(e.n_match AS DOUBLE) / CAST($srcSimK AS DOUBLE)
-        |    AS est_jaccard,
-        |  CAST(coalesce(iv.n_inter, 0) AS DOUBLE) /
-        |    CAST(sa.n_grams + sb.n_grams - coalesce(iv.n_inter, 0)
-        |      AS DOUBLE) AS exact_jaccard,
-        |  CAST(e.n_match AS DOUBLE) / CAST($srcSimK AS DOUBLE) -
-        |    CAST(coalesce(iv.n_inter, 0) AS DOUBLE) /
-        |      CAST(sa.n_grams + sb.n_grams - coalesce(iv.n_inter, 0)
-        |        AS DOUBLE) AS err
-        |FROM est e LEFT JOIN iv USING (source_a, source_b)
-        |JOIN sz sa ON sa.source = e.source_a
-        |JOIN sz sb ON sb.source = e.source_b
-        |ORDER BY source_a, source_b""".stripMargin
-    },
-    // F69 — F1b's mirror CTE + the F2 band/bucket CTEs; candidate
-    // pairs get sources via two doc-keyed joins, roll up by the
-    // least/greatest source pair; counts exact int64.
-    "q_near_leakage" -> {
-      import graft.functions.PortableText._
-      s"""WITH d AS (SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, 'mirror' FROM documents
-        |  WHERE doc_id % 10 = 0),
-        |t AS (SELECT doc_id, $duckTokenHashes AS th FROM d),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |p0 AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_hash = y.band_hash
-        |    AND x.doc_id < y.doc_id),
-        |ps AS (SELECT p0.doc_a, p0.doc_b,
-        |    least(sa.source, sb.source) AS source_a,
-        |    greatest(sa.source, sb.source) AS source_b
-        |  FROM p0 JOIN d sa ON sa.doc_id = p0.doc_a
-        |  JOIN d sb ON sb.doc_id = p0.doc_b),
-        |c AS (SELECT source_a, source_b, count(*) AS n_pairs
-        |  FROM ps GROUP BY source_a, source_b),
-        |dv AS (SELECT source_a, source_b,
-        |    count(DISTINCT doc) AS n_docs
-        |  FROM (SELECT source_a, source_b,
-        |      unnest([doc_a, doc_b]) AS doc FROM ps) u
-        |  GROUP BY source_a, source_b)
-        |SELECT c.source_a, c.source_b, c.n_pairs, dv.n_docs,
-        |  c.source_a <> c.source_b AS cross_source
-        |FROM c JOIN dv USING (source_a, source_b)
-        |ORDER BY source_a, source_b""".stripMargin
-    },
-    "q_dup_matrix" -> {
-      import graft.functions.PortableText._
-      s"""WITH d AS (SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, 'mirror' FROM documents
-        |  WHERE doc_id % 10 = 0),
-        |f AS (SELECT doc_id, source, $duckDocFingerprint AS fp
-        |  FROM d),
-        |c AS (SELECT fp, source, count(*) AS cnt FROM f
-        |  GROUP BY fp, source),
-        |cross_p AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    CAST(sum(a.cnt * b.cnt) AS BIGINT) AS n_dup_pairs,
-        |    count(*) AS n_shared_fps
-        |  FROM c a JOIN c b ON a.fp = b.fp AND a.source < b.source
-        |  GROUP BY a.source, b.source),
-        |intra AS (SELECT source AS source_a, source AS source_b,
-        |    CAST(sum((cnt * (cnt - 1)) // 2) AS BIGINT) AS n_dup_pairs,
-        |    count(*) AS n_shared_fps
-        |  FROM c WHERE cnt >= 2 GROUP BY source)
-        |SELECT * FROM (SELECT * FROM cross_p UNION ALL
-        |  SELECT * FROM intra) u
-        |ORDER BY source_a, source_b""".stripMargin
-    },
-    // Incremental near-dup: bucket flags (any existing member / min
-    // incoming id) replayed over the same band spelling as
-    // q_dedup_greedy; blame prefers 'existing' over 'batch'.
-    "q_dedup_incremental" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band, doc_id % 5 = 0 AS incoming,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bk AS (SELECT band, band_hash,
-        |    max(CASE WHEN NOT incoming THEN 1 ELSE 0 END) AS has_existing,
-        |    min(CASE WHEN incoming THEN doc_id END) AS first_incoming
-        |  FROM bands WHERE band_hash IS NOT NULL
-        |  GROUP BY band, band_hash),
-        |v AS (SELECT bands.doc_id,
-        |    bool_or(has_existing = 1) AS dup_ex,
-        |    bool_or(first_incoming < bands.doc_id) AS dup_batch
-        |  FROM bands JOIN bk USING (band, band_hash)
-        |  WHERE bands.incoming AND bands.band_hash IS NOT NULL
-        |  GROUP BY bands.doc_id)
-        |SELECT d.doc_id, coalesce(dup_ex OR dup_batch, false) AS is_duplicate,
-        |  CASE WHEN dup_ex THEN 'existing'
-        |       WHEN dup_batch THEN 'batch' END AS dup_source
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-        |LEFT JOIN v USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // Fixpoint min-label propagation == component minimum — unrolled
-    // rounds (ccLabelsSql; the transitive-closure recursion blew up
-    // on sf0.1's near-complete dup graph).
-    "q_dedup_clusters" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |pairs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band
-        |    AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |edges AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |${ccLabelsSql("cl")}
-        |SELECT doc_id, cluster, doc_id = cluster AS keep
-        |FROM cl ORDER BY doc_id""".stripMargin
-    },
-    // F91 — the CC CTE + per-doc token counts; canonical = two-phase
-    // max-then-min (engine-stable ties, no arg_max).
-    "q_canonical_docs" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |pairs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band
-        |    AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |edges AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |${ccLabelsSql("cl")},
-        |s AS (SELECT doc_id, CAST(length($duckTokens) AS BIGINT)
-        |    AS n_tokens FROM documents),
-        |j AS (SELECT cl.doc_id, cl.cluster, s.n_tokens
-        |  FROM cl JOIN s USING (doc_id)),
-        |mt AS (SELECT cluster, max(n_tokens) AS mt FROM j GROUP BY cluster),
-        |canon AS (SELECT j.cluster, min(j.doc_id) AS canonical_id
-        |  FROM j JOIN mt ON mt.cluster = j.cluster AND j.n_tokens = mt.mt
-        |  GROUP BY j.cluster)
-        |SELECT j.doc_id, j.cluster, j.n_tokens, canon.canonical_id,
-        |  j.doc_id = canon.canonical_id AS is_canonical
-        |FROM j JOIN canon ON canon.cluster = j.cluster
-        |ORDER BY j.doc_id""".stripMargin
-    },
-    // F50 — same recursive-CTE CC as q_dedup_clusters, then the two
-    // exact-int histogram aggregates.
-    "q_cluster_sizes" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |pairs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.band = b.band
-        |    AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-        |edges AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs
-        |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |${ccLabelsSql("lab")},
-        |sz AS (SELECT cluster, count(*) AS cluster_size FROM lab
-        |  GROUP BY cluster)
-        |SELECT cluster_size, count(*) AS n_clusters,
-        |  cluster_size * count(*) AS n_docs
-        |FROM sz GROUP BY cluster_size ORDER BY cluster_size""".stripMargin
-    },
-    "q_dedup_simhash" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents)
-        |SELECT doc_id, $duckSimHash AS simhash FROM t ORDER BY doc_id""".stripMargin
-    },
-    // Brute-force hamming join is a VALID oracle for the banded Spark
-    // plan: pigeonhole banding has recall exactly 1 for hamming <= 1.
-    "q_dedup_simhash_pairs" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckSimHash AS simhash
-        |  FROM (SELECT doc_id, $duckTokenHashes AS th FROM documents) x)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  bit_count(xor(a.simhash, b.simhash)) AS hamming
-        |FROM t a JOIN t b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-        |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // Inverted index with df cap (grams in > 20 docs of a bucket are
-    // dropped before pairing); intersection counts capped grams only,
-    // denominators |A|,|B| stay full — same lower-bound Jaccard as
-    // TextDedup.ngramJaccard.
-    "q_dedup_ngram" -> {
-      import graft.functions.PortableText._
-      s"""WITH g0 AS (SELECT doc_id, lang, source, $duckGrams3 AS grams
-        |    FROM documents WHERE doc_id % 5 = 0),
-        |g AS (SELECT doc_id, length(grams) AS n FROM g0),
-        |inv AS (SELECT doc_id, lang, source, unnest(grams) AS gram FROM g0),
-        |invk AS (SELECT * FROM (SELECT doc_id, lang, source, gram,
-        |    count(*) OVER (PARTITION BY lang, source, gram) AS df FROM inv)
-        |  WHERE df <= 20),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    count(*) AS inter
-        |  FROM invk a JOIN invk b ON a.lang = b.lang AND a.source = b.source
-        |    AND a.gram = b.gram AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard
-        |FROM p JOIN g ca ON ca.doc_id = p.doc_a
-        |  JOIN g cb ON cb.doc_id = p.doc_b
-        |WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // F51 — quantized PMI: presence (distinct) tokens; two-step
-    // overflow-safe score (c_ab·((n_docs·10⁴) div c_b)) div c_a exact
-    // int64; df cap inoperative on the tiny synthetic vocab (quality
-    // knob, not a scale guard — the pair join is doc-keyed/linear);
-    // top-20 by (score desc, tok_a, tok_b).
-    "q_pmi_pairs" -> {
-      import graft.functions.PortableText._
-      s"""WITH toks AS (
-        |  SELECT DISTINCT doc_id, token
-        |  FROM (SELECT doc_id, unnest($duckTokens) AS token
-        |    FROM documents) t),
-        |nd AS (SELECT count(*) AS n_docs FROM documents),
-        |df AS (SELECT token, count(*) AS c FROM toks GROUP BY token),
-        |cap AS (SELECT doc_id, token, c FROM toks JOIN df USING (token)
-        |  WHERE c <= 1000),
-        |p AS (SELECT a.token AS tok_a, b.token AS tok_b,
-        |    a.c AS c_a, b.c AS c_b, count(*) AS c_ab
-        |  FROM cap a JOIN cap b ON a.doc_id = b.doc_id
-        |    AND a.token < b.token
-        |  GROUP BY 1, 2, 3, 4
-        |  HAVING count(*) >= 3)
-        |SELECT CAST(row_number() OVER (ORDER BY score_bp DESC, tok_a,
-        |    tok_b) AS BIGINT) AS rnk,
-        |  tok_a, tok_b, CAST(c_a AS BIGINT) AS c_a,
-        |  CAST(c_b AS BIGINT) AS c_b, CAST(c_ab AS BIGINT) AS c_ab,
-        |  score_bp
-        |FROM (SELECT tok_a, tok_b, c_a, c_b, c_ab,
-        |    CAST((c_ab * ((n_docs * 10000) // c_b)) // c_a AS BIGINT)
-        |      AS score_bp
-        |  FROM p, nd) s
-        |ORDER BY rnk LIMIT 20""".stripMargin
-    },
-    // F52 — mix audit: actual share exact basis points, deviation
-    // int64, scale factor one IEEE division, absent targets 0.
-    "q_mixture_audit" -> {
-      import graft.functions.PortableText._
-      s"""WITH per AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(sum(length($duckTokens)) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tokens_total
-        |  FROM per),
-        |tgt AS (SELECT * FROM (VALUES ('src0', 2000), ('src3', 3000),
-        |  ('src7', 1000)) AS v(source, target_bp))
-        |SELECT per.source, n_docs, n_tokens,
-        |  (n_tokens * 10000) // tokens_total AS actual_bp,
-        |  CAST(coalesce(tgt.target_bp, 0) AS BIGINT) AS target_bp,
-        |  (n_tokens * 10000) // tokens_total
-        |    - CAST(coalesce(tgt.target_bp, 0) AS BIGINT) AS deviation_bp,
-        |  CASE WHEN n_tokens > 0 THEN
-        |    CAST(coalesce(tgt.target_bp, 0) AS DOUBLE)
-        |      * CAST(tokens_total AS DOUBLE)
-        |      / (10000.0 * CAST(n_tokens AS DOUBLE)) END AS scale_to_target
-        |FROM per LEFT JOIN tgt USING (source), tot
-        |ORDER BY per.source""".stripMargin
-    },
-    // F53 — fertility exact int64 bps; chars_per_bpe_token one IEEE
-    // division of exact ints (unrounded).
-    "q_tokenizer_fertility" -> {
-      import graft.functions.PortableText._
-      s"""SELECT lang, source, count(*) AS n_docs,
-        |  CAST(sum(length(text)) AS BIGINT) AS chars_total,
-        |  CAST(sum(length($duckTokens)) AS BIGINT) AS ws_tokens_total,
-        |  CAST(sum(length(regexp_extract_all(text,
-        |    '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS BIGINT) AS bpe_tokens_total,
-        |  CASE WHEN sum(length(text)) > 0 THEN
-        |    (CAST(sum(length($duckTokens)) AS BIGINT) * 10000)
-        |      // CAST(sum(length(text)) AS BIGINT) END AS ws_fertility_bp,
-        |  CASE WHEN sum(length(text)) > 0 THEN
-        |    (CAST(sum(length(regexp_extract_all(text,
-        |      '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS BIGINT) * 10000)
-        |      // CAST(sum(length(text)) AS BIGINT) END AS bpe_fertility_bp,
-        |  CASE WHEN sum(length(regexp_extract_all(text,
-        |      '[a-z]+|[0-9]+|[^a-z0-9 ]'))) > 0 THEN
-        |    CAST(sum(length(text)) AS DOUBLE)
-        |      / CAST(sum(length(regexp_extract_all(text,
-        |        '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS DOUBLE)
-        |  END AS chars_per_bpe_token
-        |FROM documents GROUP BY lang, source
-        |ORDER BY lang, source""".stripMargin
-    },
-    // F55 — sweep: |thresholds|-factor explode into one conditional
-    // aggregate; kept share exact int64 bps.
-    "q_threshold_sweep" -> {
-      import graft.functions.PortableText._
-      s"""SELECT source, min_tokens,
-        |  count(*) AS n_docs_total,
-        |  CAST(sum(CASE WHEN n >= min_tokens THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_docs_kept,
-        |  CAST(sum(CASE WHEN n >= min_tokens THEN n ELSE 0 END)
-        |    AS BIGINT) AS tokens_kept,
-        |  (CAST(sum(CASE WHEN n >= min_tokens THEN 1 ELSE 0 END)
-        |    AS BIGINT) * 10000) // count(*) AS kept_share_bp
-        |FROM (SELECT source, CAST(length($duckTokens) AS BIGINT) AS n
-        |  FROM documents) d,
-        |  (SELECT CAST(t.min_tokens AS BIGINT) AS min_tokens
-        |   FROM (VALUES (5), (10), (20), (40)) AS t(min_tokens)) t
-        |GROUP BY source, min_tokens
-        |ORDER BY source, min_tokens""".stripMargin
-    },
-    // F67 — bucket ladder GENERATED once (CorpusPipeline
-    // .widthLadderSql) and run verbatim by both engines; slot math
-    // exact int64; the two waste shares single IEEE divisions,
-    // unrounded.
-    "q_length_buckets" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT least(CAST(length($duckTokens) AS BIGINT),
-        |    ${packWidths.last}) AS t FROM documents),
-        |b AS (SELECT ${CorpusPipeline.widthLadderSql("t", packWidths)}
-        |    AS bucket_len, t FROM t),
-        |agg AS (SELECT bucket_len, count(*) AS n_docs,
-        |    CAST(sum(t) AS BIGINT) AS sum_tokens
-        |  FROM b GROUP BY bucket_len)
-        |SELECT bucket_len, n_docs, sum_tokens,
-        |  CAST(bucket_len AS BIGINT) * n_docs - sum_tokens AS pad_slots,
-        |  CAST(CAST(bucket_len AS BIGINT) * n_docs - sum_tokens
-        |      AS DOUBLE) /
-        |    CAST(CAST(bucket_len AS BIGINT) * n_docs AS DOUBLE)
-        |    AS waste_share,
-        |  ${packWidths.last} * n_docs - sum_tokens AS flat_pad_slots,
-        |  CAST(${packWidths.last} * n_docs - sum_tokens AS DOUBLE) /
-        |    CAST(${packWidths.last} * n_docs AS DOUBLE)
-        |    AS flat_waste_share
-        |FROM agg
-        |ORDER BY bucket_len""".stripMargin
-    },
-    // F54 — top-k share exact int64 bps (total-ordered head), HHI =
-    // Σf²/N² with N² one IEEE multiply of the same exact int.
-    "q_token_concentration" -> {
-      import graft.functions.PortableText._
-      s"""WITH freqs AS (
-        |  SELECT token, count(*) AS freq
-        |  FROM (SELECT unnest($duckTokens) AS token FROM documents) t
-        |  GROUP BY token),
-        |tot AS (SELECT CAST(sum(freq) AS BIGINT) AS n_occurrences,
-        |    count(*) AS n_vocab,
-        |    CAST(sum(freq * freq) AS BIGINT) AS sum_f2
-        |  FROM freqs),
-        |head AS (SELECT CAST(sum(freq) AS BIGINT) AS topk_occ FROM (
-        |  SELECT freq FROM freqs ORDER BY freq DESC, token LIMIT 20) h)
-        |SELECT n_occurrences, n_vocab, topk_occ,
-        |  CASE WHEN n_occurrences > 0 THEN
-        |    (topk_occ * 10000) // n_occurrences END AS topk_share_bp,
-        |  sum_f2,
-        |  CASE WHEN n_occurrences > 0 THEN
-        |    CAST(sum_f2 AS DOUBLE) / (CAST(n_occurrences AS DOUBLE)
-        |      * CAST(n_occurrences AS DOUBLE)) END AS hhi
-        |FROM tot, head""".stripMargin
-    },
-    // F47 — CMS: identical sketch both engines (minhash affine family
-    // over PolyHash, mod 1024), est = min over 4 rows, exact audit
-    // beside; top-20 by (est desc, token) total order.
-    "q_cms_heavy_hitters" -> {
-      import graft.functions.PortableText._
-      s"""WITH occ AS (SELECT token, ${duckPolyHash("token")} AS h
-        |  FROM (SELECT unnest($duckTokens) AS token FROM documents) t),
-        |cells AS (SELECT rc.j AS rw, ((2*rc.j+3)*occ.h + 5*rc.j+7) % $P % 1024 AS cell,
-        |    count(*) AS cnt
-        |  FROM occ, (SELECT unnest(range(4)) AS j) rc
-        |  GROUP BY 1, 2),
-        |exact AS (SELECT token, h, count(*) AS exact_cnt
-        |  FROM occ GROUP BY token, h),
-        |probes AS (SELECT token, exact_cnt, rc.j AS rw,
-        |    ((2*rc.j+3)*h + 5*rc.j+7) % $P % 1024 AS cell
-        |  FROM exact, (SELECT unnest(range(4)) AS j) rc),
-        |est AS (SELECT token, exact_cnt,
-        |    CAST(min(cnt) AS BIGINT) AS est_cnt
-        |  FROM probes JOIN cells USING (rw, cell)
-        |  GROUP BY token, exact_cnt)
-        |SELECT CAST(row_number() OVER
-        |    (ORDER BY est_cnt DESC, token) AS BIGINT) AS rnk,
-        |  token, est_cnt, CAST(exact_cnt AS BIGINT) AS exact_cnt,
-        |  est_cnt - CAST(exact_cnt AS BIGINT) AS overcount
-        |FROM est
-        |ORDER BY rnk LIMIT 20""".stripMargin
-    },
-    // F48 — BPE pair stats: substring scan with multiplicity (NOT the
-    // distinct gram set); counts exact int64; (cnt desc, pair) order.
-    "q_bpe_pairs" -> {
-      import graft.functions.PortableText._
-      s"""WITH vocab AS (SELECT word, count(*) AS freq
-        |  FROM (SELECT unnest($duckTokens) AS word FROM documents) t
-        |  GROUP BY word),
-        |pairs AS (SELECT substr(word, CAST(i AS INT), 2) AS pair,
-        |    CAST(sum(freq) AS BIGINT) AS pair_cnt
-        |  FROM vocab, unnest(range(1, length(word))) AS u(i)
-        |  WHERE length(word) >= 2
-        |  GROUP BY 1)
-        |SELECT CAST(row_number() OVER
-        |    (ORDER BY pair_cnt DESC, pair) AS BIGINT) AS rnk,
-        |  pair, pair_cnt
-        |FROM pairs ORDER BY rnk LIMIT 20""".stripMargin
-    },
-    // F45 — asymmetric containment: ORDERED pairs (a≠b), score =
-    // inter/|A| — one division of exact int64 counts, unrounded; same
-    // df-capped inverted index as q_dedup_ngram.
-    "q_containment" -> {
-      import graft.functions.PortableText._
-      s"""WITH g0 AS (SELECT doc_id, lang, source, $duckGrams3 AS grams
-        |    FROM documents WHERE doc_id % 5 = 0),
-        |g AS (SELECT doc_id, length(grams) AS n FROM g0),
-        |inv AS (SELECT doc_id, lang, source, unnest(grams) AS gram FROM g0),
-        |invk AS (SELECT * FROM (SELECT doc_id, lang, source, gram,
-        |    count(*) OVER (PARTITION BY lang, source, gram) AS df FROM inv)
-        |  WHERE df <= 20),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    count(*) AS inter
-        |  FROM invk a JOIN invk b ON a.lang = b.lang AND a.source = b.source
-        |    AND a.gram = b.gram AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, CAST(p.inter AS BIGINT) AS inter,
-        |  CAST(ca.n AS BIGINT) AS na,
-        |  CAST(p.inter AS DOUBLE) / CAST(ca.n AS DOUBLE) AS containment
-        |FROM p JOIN g ca ON ca.doc_id = p.doc_a
-        |WHERE CAST(p.inter AS DOUBLE) / CAST(ca.n AS DOUBLE) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // F49 — centroid drift: per-(label,pos) mean scaled+rounded to
-    // exact int64; global centroid DEFINED from those quantized means
-    // (n-weighted, one division + round); dots/norms exact ints,
-    // cosine one IEEE division, unrounded.
-    // F61 — the oracle replays the IDENTICAL fixed power-iteration
-    // recurrence as an unrolled CTE cascade GENERATED from the same
-    // (pcaComps, pcaIters) constants the registry call uses, so the
-    // loops cannot drift (F59's discipline). Covariance derives from
-    // the round(4) gram + sums; every fold (`list_reduce` with a
-    // prepended 0.0) accumulates left-to-right over ascending index,
-    // matching the Scala foldLeft — the engines agree bit-for-bit
-    // before the final round(6).
-    "q_pca_power" -> {
-      val finals = (0 until pcaComps).map { m =>
-        s"SELECT CAST($m AS BIGINT) AS comp, CAST(p AS BIGINT) AS pos, " +
-          "round(v[CAST(p + 1 AS INT)], 6) AS loading, " +
-          "round(lam, 6) AS eigenvalue, " +
-          "round(lam / tr, 6) AS explained_share " +
-          s"FROM p${m}e, trace, (SELECT unnest(range($pcaDim)) AS p) pp"
-      }
-      s"WITH $pcaCascadeSql\nSELECT * FROM (" +
-        finals.mkString(" UNION ALL ") + ") u ORDER BY comp, pos"
-    },
-    // F65 — projection scores from the SAME cascade (unrounded basis,
-    // the Scala twin of pcaCore); per-vector fold in ascending-index
-    // order, bit-identical to the Spark aggregate/zip_with spelling.
-    "q_pca_project" -> {
-      val scoreCols = (0 until pcaComps).map { m =>
-        s"round(list_reduce(list_prepend(0.0, list_transform(" +
-          s"range($pcaDim), i -> CAST(e.embedding[CAST(i + 1 AS INT)] " +
-          s"AS DOUBLE) * p$m.v[CAST(i + 1 AS INT)])), " +
-          s"(a, b) -> a + b), 6) AS pc$m"
-      }.mkString(",\n  ")
-      val froms = (0 until pcaComps).map(m => s"p${m}e p$m").mkString(", ")
-      s"""WITH $pcaCascadeSql
-        |SELECT e.vec_id, e.label,
-        |  $scoreCols
-        |FROM embeddings e, $froms
-        |ORDER BY e.vec_id""".stripMargin
-    },
-    // F99 — reconstruction error from the SAME cascade: rows center
-    // on mu = s/n (the cascade's round(4) sums), err = ||e||^2 minus
-    // the component scores' squares (ascending-index folds, the F65
-    // spelling), quantized to int64 micros via the sign-split floor
-    // spelling; the flag compare runs entirely in int64.
-    "q_recon_anomaly" -> {
-      val scoreCols = (0 until pcaComps).map { m =>
-        s"list_reduce(list_prepend(0.0, list_transform(" +
-          s"range($pcaDim), i -> ce[CAST(i + 1 AS INT)] " +
-          s"* p$m.v[CAST(i + 1 AS INT)])), (a, b) -> a + b) AS s$m"
-      }.mkString(",\n|    ")
-      val froms = (0 until pcaComps).map(m => s"p${m}e p$m").mkString(", ")
-      val errExpr = (0 until pcaComps)
-        .foldLeft("ee")((acc, m) => s"($acc - s$m * s$m)")
-      s"""WITH $pcaCascadeSql,
-        |mu AS (SELECT list(s / nn.n ORDER BY i) AS mu FROM sums, nn
-        |  GROUP BY nn.n),
-        |cen AS (SELECT e.vec_id, e.label,
-        |    list_transform(range($pcaDim), i ->
-        |      CAST(e.embedding[CAST(i + 1 AS INT)] AS DOUBLE)
-        |        - mu.mu[CAST(i + 1 AS INT)]) AS ce
-        |  FROM embeddings e, mu),
-        |scx AS (SELECT vec_id, label,
-        |    list_reduce(list_prepend(0.0, list_transform(ce,
-        |      x -> x * x)), (a, b) -> a + b) AS ee,
-        |    $scoreCols
-        |  FROM cen, $froms),
-        |eq AS (SELECT vec_id, label,
-        |    CAST(CASE WHEN $errExpr >= 0
-        |      THEN floor(($errExpr) * 1000000.0 + 0.5)
-        |      ELSE -floor(-($errExpr) * 1000000.0 + 0.5)
-        |    END AS BIGINT) AS u
-        |  FROM scx),
-        |tot AS (SELECT quantile_cont(u, $reconFlagPct) AS qu FROM eq)
-        |SELECT vec_id, label, CAST(u AS DOUBLE) / 1000000.0 + 0.0 AS err,
-        |  (CAST(u AS DOUBLE) > tot.qu) AS is_anomaly
-        |FROM eq, tot ORDER BY vec_id""".stripMargin
-    },
-    // F60 — pair products cast float→double BEFORE multiply (exact,
-    // bit-identical across engines); per-cell sums round(4).
-    "q_gram_matrix" ->
-      """SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE)
-        |          * CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE)), 4)
-        |    AS sum_prod
-        |FROM embeddings,
-        |  (SELECT unnest(range(64)) AS i) ti,
-        |  (SELECT unnest(range(64)) AS j) tj
-        |WHERE i <= j
-        |GROUP BY i, j ORDER BY i, j""".stripMargin,
-    "q_centroid_drift" ->
-      """WITH inv AS (
-        |  SELECT label, i.i AS pos,
-        |    CAST(embedding[CAST(i.i + 1 AS INT)] AS DOUBLE) AS v
-        |  FROM embeddings, (SELECT unnest(range(64)) AS i) i),
-        |comps AS (
-        |  SELECT label, pos,
-        |    CAST(round(sum(v) / count(*) * 1000000.0, 0) AS BIGINT) AS cq,
-        |    count(*) AS n
-        |  FROM inv GROUP BY label, pos),
-        |g AS (
-        |  SELECT pos,
-        |    CAST(round(CAST(sum(cq * n) AS DOUBLE)
-        |      / CAST(sum(n) AS DOUBLE), 0) AS BIGINT) AS gq
-        |  FROM comps GROUP BY pos),
-        |dots AS (
-        |  SELECT label, max(n) AS n_vectors,
-        |    CAST(sum(cq * cq) AS BIGINT) AS ll,
-        |    CAST(sum(gq * gq) AS BIGINT) AS gg,
-        |    CAST(sum(cq * gq) AS BIGINT) AS lg
-        |  FROM comps JOIN g USING (pos) GROUP BY label)
-        |SELECT label, n_vectors,
-        |  sqrt(CAST(ll AS DOUBLE)) / 1000000.0 AS centroid_norm,
-        |  CASE WHEN ll > 0 AND gg > 0 THEN CAST(lg AS DOUBLE)
-        |    / (sqrt(CAST(ll AS DOUBLE)) * sqrt(CAST(gg AS DOUBLE))) END
-        |    AS cos_to_global
-        |FROM dots ORDER BY label""".stripMargin,
-    // Candidates from shared LSH bucket (same hyperplane arithmetic as
-    // q_ann_lsh); label equality is a filter, not the bucket key.
-    "q_dedup_cosine" ->
-      """WITH e AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings WHERE vec_id % 5 = 0),
-        |n AS (SELECT vec_id, label, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(8), j ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(range(64), i -> v[CAST(i+1 AS INT)]
-        |              * CAST((j*31 + i*17) % 5 - 2 AS DOUBLE))),
-        |            (a, b) -> a + b) > 0
-        |        THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-        |        ELSE CAST(0 AS BIGINT) END)), (a, b) -> a + b) AS bucket
-        |  FROM e),
-        |p AS (SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> a.v[CAST(i+1 AS INT)] * b.v[CAST(i+1 AS INT)])),
-        |      (x, y) -> x + y) / nullif(a.nrm * b.nrm, 0) AS cs
-        |  FROM n a JOIN n b ON a.bucket = b.bucket AND a.label = b.label
-        |    AND a.vec_id < b.vec_id)
-        |SELECT label, vec_a, vec_b, round(cs, 4) AS cos_sim
-        |FROM p WHERE cs >= 0.05 ORDER BY vec_a, vec_b""".stripMargin,
-    // Semantic decontamination: same hyperplane-bucket + norm sketch
-    // as q_dedup_cosine, held-out side vec_id % 50 = 0 joined against
-    // the training side by bucket; max/count are order-free, so the
-    // per-held-out report is engine-exact.
-    "q_decontaminate_sem" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(8), j ->
-        |        CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |            list_transform(range(64), i -> v[CAST(i+1 AS INT)]
-        |              * CAST((j*31 + i*17) % 5 - 2 AS DOUBLE))),
-        |            (a, b) -> a + b) > 0
-        |        THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-        |        ELSE CAST(0 AS BIGINT) END)), (a, b) -> a + b) AS bucket
-        |  FROM e),
-        |p0 AS (SELECT h.vec_id AS held_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> h.v[CAST(i+1 AS INT)] * t.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(h.nrm * t.nrm, 0) AS cs
-        |  FROM n h JOIN n t ON t.bucket = h.bucket
-        |  WHERE h.vec_id % 50 = 0 AND t.vec_id % 50 <> 0),
-        |p AS (SELECT held_id, count(*) AS n_similar,
-        |    round(max(cs), 4) AS max_cos
-        |  FROM p0 WHERE cs >= 0.05 GROUP BY held_id)
-        |SELECT e2.vec_id, coalesce(p.n_similar, 0) AS n_similar, p.max_cos,
-        |  coalesce(p.n_similar, 0) > 0 AS contaminated
-        |FROM embeddings e2 LEFT JOIN p ON p.held_id = e2.vec_id
-        |WHERE e2.vec_id % 50 = 0 ORDER BY e2.vec_id""".stripMargin,
-    // IVF: centroids are the first 8 vectors of the table itself, so
-    // the cell argmax (ties to the lower centroid index, matching
-    // array_position-of-array_max) is a cross join + row_number over
-    // the same left-to-right list_reduce dots Vectors.ivfKnn computes
-    // via graft_vecdot.
-    "q_ann_ivf" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> e.v[CAST(i+1 AS INT)] * c.cv[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) AS dt
-        |  FROM e, c),
-        |cell AS (SELECT vec_id, cid AS cell FROM
-        |  (SELECT vec_id, cid,
-        |     row_number() OVER (PARTITION BY vec_id ORDER BY dt DESC, cid) AS rn
-        |   FROM d) WHERE rn = 1),
-        |n AS (SELECT e.vec_id, e.v, cell.cell,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> e.v[CAST(i+1 AS INT)] * e.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm
-        |  FROM e JOIN cell ON cell.vec_id = e.vec_id),
-        |p AS (SELECT q.vec_id AS query_id, q.cell, nb.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * nb.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * nb.nrm, 0) AS cs
-        |  FROM n q JOIN n nb ON nb.cell = q.cell AND nb.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10),
-        |r AS (SELECT query_id, cell, neighbor_id, cs,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |      AS rnk FROM p)
-        |SELECT query_id, cell, neighbor_id, rnk, round(cs, 4) AS cos_sim
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // F58 — composes the two verified CTE chains (brute + IVF) and
-    // joins their top-k sets; recall is one exact-int division.
-    // F100 — generated per-prefix brute-force CTE blocks (the F6/F58
-    // fold spellings at range(m)); hit counts exact ints, recall ppm
-    // by integer division.
-    "q_matryoshka_recall" -> {
-      def knn(dm: Int, tag: String) =
-        s"""n$tag AS (SELECT vec_id, v,
-          |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          |      list_transform(range($dm), i -> v[CAST(i+1 AS INT)]
-          |        * v[CAST(i+1 AS INT)])),
-          |      (a, b) -> a + b)) AS nrm FROM e),
-          |p$tag AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-          |      list_transform(range($dm), i -> q.v[CAST(i+1 AS INT)]
-          |        * c.v[CAST(i+1 AS INT)])),
-          |      (a, b) -> a + b) / nullif(q.nrm * c.nrm, 0) AS cs
-          |  FROM n$tag q JOIN n$tag c ON c.vec_id <> q.vec_id
-          |  WHERE q.vec_id < 10),
-          |t$tag AS (SELECT query_id, neighbor_id FROM (
-          |    SELECT query_id, neighbor_id,
-          |      row_number() OVER (PARTITION BY query_id
-          |        ORDER BY cs DESC, neighbor_id) AS rnk
-          |    FROM p$tag) x WHERE rnk <= 5)"""
-      val blocks = (knn(64, "x") +:
-        matryoshkaDims.map(dm => knn(dm, s"d$dm"))).mkString(",\n")
-      val rows = matryoshkaDims.map { dm =>
-        s"SELECT CAST($dm AS BIGINT) AS prefix_dim, " +
-          s"CAST(count(*) AS BIGINT) AS n_hits " +
-          s"FROM td$dm JOIN tx USING (query_id, neighbor_id)"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |$blocks
-        |SELECT prefix_dim, n_hits,
-        |  CAST((n_hits * 1000000) // 50 AS BIGINT) AS recall_ppm
-        |FROM ($rows) u
-        |ORDER BY prefix_dim""".stripMargin
-    },
-    "q_ann_recall" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |bp AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * c.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * c.nrm, 0) AS cs
-        |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10),
-        |bt AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |        AS rnk FROM bp) WHERE rnk <= 5),
-        |cc AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |dd AS (SELECT e.vec_id, cc.cid,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> e.v[CAST(i+1 AS INT)] * cc.cv[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) AS dt
-        |  FROM e, cc),
-        |cell AS (SELECT vec_id, cid AS cell FROM
-        |  (SELECT vec_id, cid,
-        |     row_number() OVER (PARTITION BY vec_id ORDER BY dt DESC, cid) AS rn
-        |   FROM dd) WHERE rn = 1),
-        |n2 AS (SELECT n.vec_id, n.v, cell.cell, n.nrm
-        |  FROM n JOIN cell ON cell.vec_id = n.vec_id),
-        |ip AS (SELECT q.vec_id AS query_id, nb.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * nb.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * nb.nrm, 0) AS cs
-        |  FROM n2 q JOIN n2 nb ON nb.cell = q.cell AND nb.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10),
-        |it AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |        AS rnk FROM ip) WHERE rnk <= 5),
-        |ne AS (SELECT query_id, count(*) AS n_exact FROM bt GROUP BY 1),
-        |na AS (SELECT query_id, count(*) AS n_approx FROM it GROUP BY 1),
-        |ov AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM bt b JOIN it i ON i.query_id = b.query_id
-        |    AND i.neighbor_id = b.neighbor_id GROUP BY 1)
-        |SELECT ne.query_id, ne.n_exact,
-        |  coalesce(na.n_approx, 0) AS n_approx,
-        |  coalesce(ov.n_overlap, 0) AS n_overlap,
-        |  CAST(coalesce(ov.n_overlap, 0) AS DOUBLE) / 5 AS recall
-        |FROM ne LEFT JOIN na USING (query_id) LEFT JOIN ov USING (query_id)
-        |ORDER BY query_id""".stripMargin,
-    // F7c — the trained-quantizer MULTI-PROBE recall audit: the
-    // kmeans CTE chain (duckKmeansCtes, q_kmeans's exact spelling)
-    // supplies the home-cell map a2 and the s2 score table; each
-    // query probes its rn <= 2 nearest cells from the SAME window;
-    // brute/within-cell/overlap reuse q_ann_recall's folds.
-    "q_ann_ivf_trained" ->
-      s"""$duckKmeansCtes,
-        |e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |bp AS (SELECT qr.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> qr.v[CAST(i+1 AS INT)] * c.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(qr.nrm * c.nrm, 0) AS cs
-        |  FROM n qr JOIN n c ON c.vec_id <> qr.vec_id WHERE qr.vec_id < 10),
-        |bt AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |        AS rnk FROM bp) WHERE rnk <= 5),
-        |n2 AS (SELECT n.vec_id, n.v, a2.cluster AS cell, n.nrm
-        |  FROM n JOIN a2 ON a2.vec_id = n.vec_id),
-        |qp AS (SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY score, cid) AS rn
-        |    FROM s2 WHERE vec_id < 10) x WHERE rn <= 2),
-        |qn AS (SELECT qp.vec_id, qp.cell, n.v, n.nrm
-        |  FROM qp JOIN n ON n.vec_id = qp.vec_id),
-        |ip AS (SELECT qr.vec_id AS query_id, nb.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> qr.v[CAST(i+1 AS INT)] * nb.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(qr.nrm * nb.nrm, 0) AS cs
-        |  FROM qn qr JOIN n2 nb ON nb.cell = qr.cell AND nb.vec_id <> qr.vec_id),
-        |it AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |        AS rnk FROM ip) WHERE rnk <= 5),
-        |ne AS (SELECT query_id, count(*) AS n_exact FROM bt GROUP BY 1),
-        |na AS (SELECT query_id, count(*) AS n_approx FROM it GROUP BY 1),
-        |ov AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM bt b JOIN it i ON i.query_id = b.query_id
-        |    AND i.neighbor_id = b.neighbor_id GROUP BY 1)
-        |SELECT ne.query_id, ne.n_exact,
-        |  coalesce(na.n_approx, 0) AS n_approx,
-        |  coalesce(ov.n_overlap, 0) AS n_overlap,
-        |  CAST(coalesce(ov.n_overlap, 0) AS DOUBLE) / 5 AS recall
-        |FROM ne LEFT JOIN na USING (query_id) LEFT JOIN ov USING (query_id)
-        |ORDER BY query_id""".stripMargin,
-    // F7d — the SERVED trained-IVF read path: q_ann_ivf_trained's
-    // search chain (home cells a2, probe window rn <= 2 over s2)
-    // emitting the RANKED ROWS instead of the recall folds — the
-    // training replays in the oracle (the centroids are a pure
-    // function of the corpus), while the Spark side reads them from
-    // the session fixture.
-    "q_ann_ivf_served" ->
-      s"""$duckKmeansCtes,
-        |e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |n2 AS (SELECT n.vec_id, n.v, a2.cluster AS cell, n.nrm
-        |  FROM n JOIN a2 ON a2.vec_id = n.vec_id),
-        |qp AS (SELECT vec_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY score, cid) AS rn
-        |    FROM s2 WHERE vec_id < 10) x WHERE rn <= 2),
-        |qn AS (SELECT qp.vec_id, qp.cell, n.v, n.nrm
-        |  FROM qp JOIN n ON n.vec_id = qp.vec_id),
-        |ip AS (SELECT qr.vec_id AS query_id, qr.cell,
-        |    nb.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> qr.v[CAST(i+1 AS INT)] * nb.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(qr.nrm * nb.nrm, 0) AS cs
-        |  FROM qn qr JOIN n2 nb ON nb.cell = qr.cell AND nb.vec_id <> qr.vec_id),
-        |r AS (SELECT query_id, cell, neighbor_id, cs,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |      AS rnk FROM ip)
-        |SELECT query_id, cell, neighbor_id, rnk, round(cs, 4) AS cos_sim
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "q_ann_topk" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * c.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * c.nrm, 0) AS cs
-        |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10),
-        |r AS (SELECT query_id, neighbor_id, cs,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |      AS rnk FROM p)
-        |SELECT query_id, neighbor_id, rnk, round(cs, 4) AS cos_sim
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    // F89 — F6's oracle with the metadata predicate on the CANDIDATE
-    // side only (queries come from anywhere — asymmetric by design).
-    "q_ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, label, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * c.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * c.nrm, 0) AS cs
-        |  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 10 AND c.label = $annFilterLabel),
-        |r AS (SELECT query_id, neighbor_id, cs,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id)
-        |      AS rnk FROM p)
-        |SELECT query_id, neighbor_id, rnk, round(cs, 4) AS cos_sim
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "q_ann_lsh" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(range(8), j ->
-        |      CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |          list_transform(range(64), i -> v[CAST(i+1 AS INT)]
-        |            * CAST((j*31 + i*17) % 5 - 2 AS DOUBLE))),
-        |          (a, b) -> a + b) > 0
-        |      THEN (CAST(1 AS BIGINT) << CAST(j AS INT))
-        |      ELSE CAST(0 AS BIGINT) END)), (a, b) -> a + b) AS bucket
-        |  FROM e)
-        |SELECT vec_id, bucket,
-        |  count(*) OVER (PARTITION BY bucket) AS bucket_size
-        |FROM s ORDER BY vec_id""".stripMargin,
-    "q_text_langid" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, lang, hits_en, hits_de, hits_fr, hits_es,
-        |  CASE WHEN hits_en >= hits_de AND hits_en >= hits_fr
-        |         AND hits_en >= hits_es THEN 'en'
-        |       WHEN hits_de >= hits_fr AND hits_de >= hits_es THEN 'de'
-        |       WHEN hits_fr >= hits_es THEN 'fr' ELSE 'es' END AS predicted
-        |FROM (SELECT doc_id, lang,
-        |    length(list_filter(tk, t -> list_contains(['the','a','is','of','and'], t))) AS hits_en,
-        |    length(list_filter(tk, t -> list_contains(['der','die','das','und','ist'], t))) AS hits_de,
-        |    length(list_filter(tk, t -> list_contains(['le','la','et','les','des'], t))) AS hits_fr,
-        |    length(list_filter(tk, t -> list_contains(['el','los','las','y','es'], t))) AS hits_es
-        |  FROM (SELECT doc_id, lang, $duckTokens AS tk FROM documents) x) y
-        |ORDER BY doc_id""".stripMargin
-    },
-    // F56 — confusion cells from the SAME detector SQL as
-    // q_text_langid; shares exact int64 bps.
-    "q_lang_confusion" -> {
-      import graft.functions.PortableText._
-      s"""WITH pred AS (
-        |  SELECT lang AS declared,
-        |    CASE WHEN hits_en >= hits_de AND hits_en >= hits_fr
-        |           AND hits_en >= hits_es THEN 'en'
-        |         WHEN hits_de >= hits_fr AND hits_de >= hits_es THEN 'de'
-        |         WHEN hits_fr >= hits_es THEN 'fr' ELSE 'es'
-        |    END AS predicted
-        |  FROM (SELECT lang,
-        |      length(list_filter(tk, t -> list_contains(['the','a','is','of','and'], t))) AS hits_en,
-        |      length(list_filter(tk, t -> list_contains(['der','die','das','und','ist'], t))) AS hits_de,
-        |      length(list_filter(tk, t -> list_contains(['le','la','et','les','des'], t))) AS hits_fr,
-        |      length(list_filter(tk, t -> list_contains(['el','los','las','y','es'], t))) AS hits_es
-        |    FROM (SELECT lang, $duckTokens AS tk FROM documents) x) y),
-        |cells AS (
-        |  SELECT declared, predicted, count(*) AS n_docs
-        |  FROM pred GROUP BY declared, predicted),
-        |marg AS (
-        |  SELECT declared, CAST(sum(n_docs) AS BIGINT) AS n_declared
-        |  FROM cells GROUP BY declared)
-        |SELECT cells.declared, predicted, n_docs, n_declared,
-        |  (n_docs * 10000) // n_declared AS cell_share_bp,
-        |  cells.declared = predicted AS agree
-        |FROM cells JOIN marg ON marg.declared = cells.declared
-        |ORDER BY cells.declared, predicted""".stripMargin
-    },
-    "q_text_quality" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, length(text) AS len, length(tk) AS n_tokens,
-        |  CASE WHEN length(text) > 0 THEN
-        |    CAST(length(regexp_extract_all(text, '[.,!?;]')) AS DOUBLE)
-        |      / length(text) END AS punct_ratio,
-        |  CASE WHEN length(tk) > 0 THEN
-        |    CAST(length(list_filter(tk, t ->
-        |      list_contains(['the','a','of','and','to'], t))) AS DOUBLE)
-        |      / length(tk) END AS stop_ratio,
-        |  CASE WHEN length(tk) > 0 THEN
-        |    CAST(list_reduce(list_prepend(0, list_transform(tk,
-        |      t -> CAST(length(t) AS INT))), (a, b) -> a + b) AS DOUBLE)
-        |      / length(tk) END AS mean_word_len
-        |FROM (SELECT doc_id, text, $duckTokens AS tk FROM documents) x
-        |ORDER BY doc_id""".stripMargin
-    },
-    "q_token_count" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, length($duckTokens) AS n_ws_tokens,
-        |  length(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
-        |    AS n_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q_doc_fingerprint" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, $duckDocFingerprint AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    // Bloom prefilter: gram spelling as q_decontaminate; 3 affine
-    // probes into 2048 32-bit words (1<<63 overflow-checks in BOTH
-    // engines, so masks stay positive); candidate iff all 3 bits set;
-    // exact overlap join restricted to candidates.
-    "q_bloom_prefilter" -> {
-      import graft.functions.PortableText._
-      val ph = duckPolyHash("gram")
-      s"""WITH g AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, length(tk) - 3),
-        |    i -> array_to_string(tk[i:i+4], ' '))) AS gram
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x),
-        |tr AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 <> 0),
-        |te AS (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 50 = 0),
-        |trp AS (SELECT ((2*i + 3) * $ph + 5*i + 7) % $P % 65536 AS pos
-        |  FROM tr, (SELECT unnest(range(3)) AS i) ii),
-        |bloom AS (SELECT pos // 32 AS word,
-        |    bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
-        |  FROM trp GROUP BY pos // 32),
-        |tep AS (SELECT doc_id, gram,
-        |    ((2*i + 3) * $ph + 5*i + 7) % $P % 65536 AS pos
-        |  FROM te, (SELECT unnest(range(3)) AS i) ii),
-        |probe AS (SELECT doc_id, gram,
-        |    sum(CASE WHEN (bits
-        |        & (CAST(1 AS BIGINT) << CAST(pos % 32 AS INT))) <> 0
-        |      THEN 1 ELSE 0 END) AS n_hits
-        |  FROM tep LEFT JOIN bloom ON bloom.word = tep.pos // 32
-        |  GROUP BY doc_id, gram),
-        |cand AS (SELECT doc_id, gram FROM probe WHERE n_hits = 3),
-        |ex AS (SELECT cand.doc_id, count(*) AS n_overlap
-        |  FROM cand JOIN tr USING (gram) GROUP BY cand.doc_id),
-        |cd AS (SELECT doc_id, count(*) AS n_candidates
-        |  FROM cand GROUP BY doc_id),
-        |gd AS (SELECT doc_id, count(*) AS n_grams FROM te GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(n_grams, 0) AS n_grams,
-        |  coalesce(n_candidates, 0) AS n_candidates,
-        |  coalesce(n_overlap, 0) AS n_overlap,
-        |  coalesce(n_candidates, 0) - coalesce(n_overlap, 0) AS n_false_pos,
-        |  coalesce(n_overlap, 0) > 0 AS contaminated,
-        |  coalesce(n_candidates, 0) > 0 AS bloom_contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 = 0) d
-        |LEFT JOIN gd USING (doc_id)
-        |LEFT JOIN cd USING (doc_id)
-        |LEFT JOIN ex USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // Boilerplate share: distinct per-doc grams → df → join back; the
-    // ratio is one exact-int division, NULL for gram-less docs.
-    // F62 — positional w-gram hashes, cross-doc df on the hash,
-    // gap ≤ w clustering into maximal spans; share = exact-int IEEE
-    // division, unrounded.
-    "q_dup_spans" -> {
-      import graft.functions.PortableText._
-      val w = dupSpanW
-      val gramHash = duckPolyHash(
-        s"array_to_string(tk[CAST(p + 1 AS INT):CAST(p + $w AS INT)], ' ')")
-      s"""WITH sized AS (
-        |  SELECT doc_id, CAST(length(tk) AS BIGINT) AS n_tokens, tk
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) b),
-        |grams AS (
-        |  SELECT doc_id, CAST(p AS BIGINT) AS p, $gramHash AS h
-        |  FROM (SELECT doc_id, tk, unnest(range(length(tk) - ${w - 1}))
-        |      AS p
-        |    FROM sized WHERE length(tk) >= $w) gp),
-        |dup AS (SELECT h FROM grams GROUP BY h
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |marked AS (
-        |  SELECT doc_id, p,
-        |    CASE WHEN lag(p) OVER (PARTITION BY doc_id ORDER BY p)
-        |        IS NULL
-        |      OR p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) > $w
-        |    THEN 1 ELSE 0 END AS ns
-        |  FROM grams JOIN dup USING (h)),
-        |clust AS (
-        |  SELECT doc_id, p, sum(ns) OVER (PARTITION BY doc_id
-        |    ORDER BY p ROWS UNBOUNDED PRECEDING) AS cl
-        |  FROM marked),
-        |spans AS (
-        |  SELECT doc_id, cl, max(p) - min(p) + $w AS span_tokens
-        |  FROM clust GROUP BY doc_id, cl),
-        |agg AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans,
-        |    CAST(sum(span_tokens) AS BIGINT) AS covered_tokens,
-        |    CAST(max(span_tokens) AS BIGINT) AS max_span_tokens
-        |  FROM spans GROUP BY doc_id)
-        |SELECT s.doc_id, s.n_tokens,
-        |  CAST(coalesce(a.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(coalesce(a.covered_tokens, 0) AS BIGINT)
-        |    AS covered_tokens,
-        |  CAST(coalesce(a.max_span_tokens, 0) AS BIGINT)
-        |    AS max_span_tokens,
-        |  CASE WHEN s.n_tokens > 0 THEN
-        |    CAST(coalesce(a.covered_tokens, 0) AS DOUBLE)
-        |      / CAST(s.n_tokens AS DOUBLE)
-        |  ELSE 0.0 END AS dup_share
-        |FROM sized s LEFT JOIN agg a USING (doc_id)
-        |ORDER BY s.doc_id""".stripMargin
-    },
-    // F64 — same gram/df CTEs as q_dup_spans (one spelling of
-    // "duplicated"); coverage via the union + running-max window
-    // (starts sort BEFORE the token at the same position); cleaned
-    // text = kept tokens re-joined in position order.
-    "q_dup_excise" -> {
-      import graft.functions.PortableText._
-      val w = dupSpanW
-      val gramHash = duckPolyHash(
-        s"array_to_string(tk[CAST(p + 1 AS INT):CAST(p + $w AS INT)], ' ')")
-      s"""WITH sized AS (
-        |  SELECT doc_id, CAST(length(tk) AS BIGINT) AS n_tokens, tk
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) b),
-        |grams AS (
-        |  SELECT doc_id, CAST(p AS BIGINT) AS p, $gramHash AS h
-        |  FROM (SELECT doc_id, tk, unnest(range(length(tk) - ${w - 1}))
-        |      AS p
-        |    FROM sized WHERE length(tk) >= $w) gp),
-        |dup AS (SELECT h FROM grams GROUP BY h
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |starts AS (
-        |  SELECT doc_id, p AS pos, CAST(NULL AS VARCHAR) AS token,
-        |    1 AS is_start, p + ${w - 1} AS cover_end
-        |  FROM grams JOIN dup USING (h)),
-        |toks AS (
-        |  SELECT doc_id, CAST(t AS BIGINT) AS pos,
-        |    tk[CAST(t + 1 AS INT)] AS token, 0 AS is_start,
-        |    CAST(NULL AS BIGINT) AS cover_end
-        |  FROM (SELECT doc_id, tk, unnest(range(length(tk))) AS t
-        |    FROM sized) x),
-        |markd AS (
-        |  SELECT doc_id, pos, token, is_start,
-        |    max(cover_end) OVER (PARTITION BY doc_id
-        |      ORDER BY pos, is_start DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS run_end
-        |  FROM (SELECT * FROM toks UNION ALL SELECT * FROM starts) m),
-        |tokd AS (
-        |  SELECT doc_id, pos, token,
-        |    (run_end IS NULL OR run_end < pos) AS kept
-        |  FROM markd WHERE is_start = 0),
-        |per AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_kept,
-        |    string_agg(CASE WHEN kept THEN token END, ' '
-        |      ORDER BY pos) AS cleaned_text
-        |  FROM tokd GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(p.n_kept, 0) AS BIGINT) AS n_kept,
-        |  CAST(coalesce(p.n_tokens, 0) - coalesce(p.n_kept, 0)
-        |    AS BIGINT) AS n_removed,
-        |  CASE WHEN coalesce(p.n_tokens, 0) > 0 THEN
-        |    CAST(p.n_tokens - p.n_kept AS DOUBLE)
-        |      / CAST(p.n_tokens AS DOUBLE)
-        |  END AS removed_share,
-        |  coalesce(p.cleaned_text, '') AS cleaned_text
-        |FROM documents d LEFT JOIN per p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    "q_gram_novelty" -> {
-      import graft.functions.PortableText._
-      s"""WITH g0 AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, length(tk) - 1),
-        |      i -> array_to_string(tk[i:i+2], ' '))) AS gram
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x),
-        |g AS (SELECT DISTINCT doc_id, gram FROM g0),
-        |dfreq AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
-        |per AS (SELECT doc_id, count(*) AS n_grams,
-        |    CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_shared
-        |  FROM g JOIN dfreq USING (gram) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(n_grams, 0) AS n_grams,
-        |  coalesce(n_shared, 0) AS n_shared,
-        |  CASE WHEN coalesce(n_grams, 0) > 0 THEN
-        |    CAST(coalesce(n_shared, 0) AS DOUBLE) / n_grams END
-        |    AS shared_ratio
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // Portable HLL: integer-only rho bit scan (no libm), registers
-    // maxed per 5-bit bucket, harmonic denominator kept scaled by 2^26
-    // (sum of exact ints), one identically-spelled double division for
-    // the estimate. Word-2-gram spelling as in WordGrams' dual.
-    "q_hll_ndv" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |g AS (SELECT unnest(list_transform(range(1, length(tk)),
-        |    i -> array_to_string(tk[i:i+1], ' '))) AS gram FROM tok),
-        |p1 AS (SELECT (3 * ${duckPolyHash("gram")} + 7) % $P AS u FROM g),
-        |p2 AS (SELECT u % 32 AS reg, u // 32 AS rest FROM p1),
-        |p3 AS (SELECT reg, list_reduce(
-        |    list_prepend(CAST(26 AS BIGINT),
-        |      list_transform(range(1, 26), j -> j)),
-        |    (acc, j) -> CASE WHEN acc = 26
-        |        AND (rest >> CAST(25 - j AS INT)) % 2 = 1
-        |      THEN j ELSE acc END) AS rho
-        |  FROM p2),
-        |regs AS (SELECT reg, max(rho) AS m_reg FROM p3 GROUP BY reg),
-        |allr AS (SELECT r.reg, coalesce(regs.m_reg, 0) AS m_reg
-        |  FROM (SELECT unnest(range(32)) AS reg) r
-        |  LEFT JOIN regs USING (reg)),
-        |summ AS (SELECT count(*) AS m,
-        |    CAST(sum(CASE WHEN m_reg = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_zero_registers,
-        |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - m_reg AS INT))
-        |      AS BIGINT) AS sum_scaled
-        |  FROM allr),
-        |ex AS (SELECT count(DISTINCT gram) AS exact_ndv FROM g)
-        |SELECT m, n_zero_registers, sum_scaled,
-        |  cast(0.697 as double) * 1024 * 67108864
-        |    / cast(sum_scaled as double) AS est_ndv,
-        |  exact_ndv,
-        |  CASE WHEN exact_ndv > 0 THEN
-        |    (cast(0.697 as double) * 1024 * 67108864
-        |      / cast(sum_scaled as double) - exact_ndv) / exact_ndv
-        |  END AS rel_err
-        |FROM summ, ex ORDER BY m""".stripMargin
-    },
-    // Winnowing: fingerprint = hash*2^21 + position (flat bigint —
-    // DuckDB list_distinct can't take structs); fold replaces on
-    // decoded-hash ≤ so the rightmost minimum wins; k=5, w=8. List
-    // slice l[s : s+7] is 1-based inclusive and clamps, matching
-    // Spark's slice(gs, s, 8).
-    "q_winnow" -> {
-      import graft.functions.PortableText._
-      s"""WITH g0 AS (SELECT doc_id, text,
-        |    greatest(length(text) - 4, 0) AS n_grams FROM documents),
-        |g1 AS (SELECT doc_id, n_grams,
-        |    list_transform(range(1, greatest(n_grams, 1) + 1), i ->
-        |      ${duckPolyHash("substr(text, CAST(i AS INT), 5)")} * 2097152 + i)
-        |      AS gs,
-        |    CASE WHEN n_grams = 0 THEN 0 WHEN n_grams < 8 THEN 1
-        |         ELSE n_grams - 7 END AS n_windows
-        |  FROM g0),
-        |fp AS (SELECT doc_id, n_grams, n_windows,
-        |    CASE WHEN n_windows >= 1 THEN
-        |      list_distinct(list_transform(range(1, n_windows + 1), s ->
-        |        list_reduce(
-        |          list_prepend(CAST(9223372036854775807 AS BIGINT),
-        |            gs[CAST(s AS INT) : CAST(s + 7 AS INT)]),
-        |          (acc, x) -> CASE WHEN x // 2097152 <= acc // 2097152
-        |                           THEN x ELSE acc END)))
-        |    END AS fps
-        |  FROM g1)
-        |SELECT doc_id, n_grams, n_windows,
-        |  CASE WHEN n_windows >= 1 THEN length(fps) ELSE 0 END
-        |    AS n_fingerprints,
-        |  CASE WHEN n_windows >= 1 THEN
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(fps, f -> f // 2097152)), (a, b) -> a + b)
-        |  ELSE 0 END AS fp_sum
-        |FROM fp ORDER BY doc_id""".stripMargin
-    },
-    // F102 — the CDC dual: each position's rolling hash is an
-    // INDEPENDENT fold over its <=32-cp window (contributions older
-    // than 32 positions carry 2^>=32 = 0 mod 2^32 — the locality
-    // that makes CDC parallel); boundaries where the mask hits or at
-    // doc end; chunk hashes via the polyhash fold over the
-    // boundary-delimited slices (starts = boundaries shifted by one,
-    // 0-prepended — no conditional slice bounds).
-    "q_cdc_chunks" -> {
-      import graft.functions.PortableText._
-      val m = (1L << cdcMaskBits)
-      s"""WITH c0 AS (SELECT source, doc_id,
-        |    list_transform(string_split(text, ''),
-        |      ch -> CAST(ascii(ch) AS BIGINT)) AS cs
-        |  FROM documents WHERE length(text) >= 1),
-        |b AS (SELECT source, doc_id, cs,
-        |    list_filter(range(1, len(cs) + 1), i ->
-        |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(cs[greatest(1, i - 31):i],
-        |            ch -> (ch * 2654435761) % 4294967296)),
-        |        (a, g) -> (a * 2 + g) % 4294967296) % $m = 0
-        |      OR i = len(cs)) AS bp
-        |  FROM c0),
-        |ck AS (SELECT source, doc_id,
-        |    unnest(list_transform(range(1, len(bp) + 1), k ->
-        |      {h: list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |            cs[sp[CAST(k AS INT)] + 1:bp[CAST(k AS INT)]]),
-        |          (a, c) -> (a * 31 + c) % $P),
-        |       l: bp[CAST(k AS INT)] - sp[CAST(k AS INT)]})) AS c
-        |  FROM (SELECT source, doc_id, cs, bp,
-        |      list_prepend(CAST(0 AS BIGINT), bp) AS sp FROM b) x),
-        |cc AS (SELECT source, doc_id, c.h AS h, c.l AS len FROM ck),
-        |multi AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd
-        |    FROM cc GROUP BY h) z WHERE nd >= 2)
-        |SELECT cc.source,
-        |  count(DISTINCT cc.doc_id) AS n_docs,
-        |  count(*) AS n_chunks,
-        |  round(CAST(sum(cc.len) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 4) AS avg_chunk_len,
-        |  CAST(count(m.h) AS BIGINT) AS n_dup_chunks,
-        |  round(CAST(count(m.h) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 4) AS dup_share
-        |FROM cc LEFT JOIN multi m USING (h)
-        |GROUP BY cc.source ORDER BY cc.source""".stripMargin
-    },
-    "q_text_repetition" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, length(tk) AS n_tokens,
-        |  length(list_distinct(tk)) AS n_distinct,
-        |  CASE WHEN length(tk) > 0 THEN
-        |    1.0 - CAST(length(list_distinct(tk)) AS DOUBLE) / length(tk)
-        |  END AS rep_ratio
-        |FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x
-        |ORDER BY doc_id""".stripMargin
-    },
-    // Gram spelling as in q_decontaminate (n=3: range(1, len-1),
-    // 3-wide slices); dup count = total − distinct; exact-int division
-    // unrounded, NULL when the doc has no 3-grams.
-    "q_repeated_spans" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, length(g) AS n_grams,
-        |  length(g) - length(list_distinct(g)) AS n_dup_grams,
-        |  CASE WHEN length(g) > 0 THEN
-        |    CAST(length(g) - length(list_distinct(g)) AS DOUBLE) / length(g)
-        |  END AS dup_ratio
-        |FROM (SELECT doc_id,
-        |    list_transform(range(1, length(tk) - 1),
-        |      i -> array_to_string(tk[i:i+2], ' ')) AS g
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x) y
-        |ORDER BY doc_id""".stripMargin
-    },
-    // F97 — held-out perplexity: split predicates via the shared F16
-    // hash fragment, Laplace (c+1)/(N+V) in one fixed ln spelling,
-    // OOV rows keep c = 0 through the LEFT join, per-doc mean
-    // round(4) (float sweep).
-    "q_heldout_ppl" -> {
-      import graft.functions.PortableText._
-      s"""WITH tr AS (SELECT token, count(*) AS c
-        |  FROM (SELECT unnest($duckTokens) AS token FROM documents
-        |    WHERE ${duckHashOrder("doc_id")} % 100 < 80) x
-        |  GROUP BY token),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_total,
-        |    count(*) AS v FROM tr),
-        |vd AS (SELECT doc_id, text FROM documents
-        |  WHERE ${duckHashOrder("doc_id")} % 100 >= 80
-        |    AND ${duckHashOrder("doc_id")} % 100 < 90),
-        |vt AS (SELECT doc_id, unnest($duckTokens) AS token FROM vd),
-        |sc AS (SELECT vt.doc_id, coalesce(tr.c, 0) AS c
-        |  FROM vt LEFT JOIN tr USING (token)),
-        |pd AS (SELECT sc.doc_id, count(*) AS n_tokens,
-        |    CAST(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_oov,
-        |    round(avg(-(ln(CAST(c AS DOUBLE) + 1.0)
-        |      - ln(CAST(n_total AS DOUBLE) + CAST(v AS DOUBLE)))), 4)
-        |      AS avg_nll
-        |  FROM sc, tot GROUP BY sc.doc_id)
-        |SELECT vd.doc_id, coalesce(pd.n_tokens, 0) AS n_tokens,
-        |  coalesce(pd.n_oov, 0) AS n_oov, pd.avg_nll
-        |FROM vd LEFT JOIN pd USING (doc_id)
-        |ORDER BY vd.doc_id""".stripMargin
-    },
-    // F96 — ES weighted WOR sample: u from the shared multiplicative
-    // hash ((h+1)/(P+1), never ln(0)), ordering by ln(u)/w (libm pow
-    // avoided), per-source row_number over the (es_key DESC, doc_id)
-    // total order; es_key element-wise unrounded.
-    "q_weighted_sample" -> {
-      import graft.functions.PortableText._
-      s"""WITH b AS (SELECT doc_id, source,
-        |    CAST(length($duckTokens) AS BIGINT) AS weight
-        |  FROM documents),
-        |u AS (SELECT *,
-        |    CAST(${duckHashOrder("doc_id")} + 1 AS DOUBLE)
-        |      / CAST(${P + 1L} AS DOUBLE) AS u
-        |  FROM b WHERE weight > 0),
-        |s AS (SELECT *, ln(u) / CAST(weight AS DOUBLE) AS es_key
-        |  FROM u),
-        |r AS (SELECT source, doc_id, weight, es_key,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY es_key DESC, doc_id) AS rnk
-        |  FROM s)
-        |SELECT source, rnk, doc_id, weight, es_key
-        |FROM r WHERE rnk <= $wsampleK
-        |ORDER BY source, rnk""".stripMargin
-    },
-    // F95 — PageRank over the cross-source duplication graph: the
-    // round cascade is GENERATED from centIters (the bpeCascadeSql
-    // rule — round count cannot drift), every double op one shared
-    // spelling, teleport denominator the nodes-count subquery.
-    "q_source_centrality" -> {
-      import graft.functions.PortableText._
-      val rounds = (1 to centIters).map { r =>
-        s"""c$r AS (SELECT e.dst AS source,
-          |    sum(p.pr * (CAST(e.w AS DOUBLE) / CAST(ow.outw AS DOUBLE)))
-          |      AS inflow
-          |  FROM e JOIN ow ON e.src = ow.src
-          |  JOIN pr${r - 1} p ON p.source = e.src
-          |  GROUP BY e.dst),
-          |pr$r AS (SELECT n.source,
-          |    (1.0 - $centDamping) / (SELECT n FROM nn)
-          |      + $centDamping * coalesce(c$r.inflow, 0.0) AS pr
-          |  FROM nodes n LEFT JOIN c$r ON n.source = c$r.source)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH fps AS (SELECT source, $duckDocFingerprint AS fp
-        |  FROM documents),
-        |ps AS (SELECT fp, source, count(*) AS n FROM fps GROUP BY 1, 2),
-        |e AS (SELECT a.source AS src, b.source AS dst,
-        |    CAST(sum(a.n * b.n) AS BIGINT) AS w
-        |  FROM ps a JOIN ps b ON a.fp = b.fp AND a.source <> b.source
-        |  GROUP BY 1, 2),
-        |nodes AS (SELECT DISTINCT source FROM documents),
-        |nn AS (SELECT count(*) AS n FROM nodes),
-        |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw
-        |  FROM e GROUP BY src),
-        |pr0 AS (SELECT source, 1.0 / (SELECT n FROM nn) AS pr
-        |  FROM nodes),
-        |$rounds
-        |SELECT source, round(pr, 4) AS pagerank FROM pr$centIters
-        |ORDER BY source""".stripMargin
-    },
-    // F94 — the oracle computes all three counts from the FULL corpus
-    // in one pass; the Spark side merges two per-release aggregates —
-    // the hash match IS the merge-equals-recompute identity.
-    "q_incr_vocab" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS token
-        |  FROM documents),
-        |c AS (SELECT token,
-        |    CAST(sum(CASE WHEN doc_id <= $incrVocabSplit
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS base_cnt,
-        |    CAST(sum(CASE WHEN doc_id > $incrVocabSplit
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS delta_cnt,
-        |    count(*) AS total_cnt
-        |  FROM tok GROUP BY token),
-        |k AS (SELECT * FROM c
-        |  ORDER BY total_cnt DESC, token LIMIT $incrVocabK)
-        |SELECT row_number() OVER (ORDER BY total_cnt DESC, token)
-        |    AS rnk, token, base_cnt, delta_cnt, total_cnt
-        |FROM k ORDER BY rnk""".stripMargin
-    },
-    "q_token_freq" -> {
-      import graft.functions.PortableText._
-      s"""SELECT token, count(*) AS freq
-        |FROM (SELECT unnest($duckTokens) AS token FROM documents) x
-        |GROUP BY token ORDER BY freq DESC, token LIMIT 20""".stripMargin
-    },
-    // F59 — the BPE trainer's oracle recomputes the SAME adaptive
-    // cascade in pure SQL: per round, an argmax CTE (cnt DESC, pair —
-    // exact ints, total order) and a list_reduce string fold spelled
-    // identically to the Spark `aggregate` (both seed with the first
-    // symbol; `acc || t` completes the merge in place because the
-    // accumulator's last symbol IS pa when the guard holds). The CTE
-    // chain is GENERATED by the same loop count as the operator, so
-    // round count cannot drift.
-    "q_bpe_train" -> {
-      val out = (1 to bpeMergeRounds).map(r =>
-        s"SELECT $r AS merge_idx, pair, cnt AS pair_cnt FROM m$r")
-        .mkString("\n UNION ALL ")
-      s"""WITH $bpeCascadeSql
-        |$out
-        |ORDER BY merge_idx""".stripMargin
-    },
-    // F93 — the compression-curve oracle replays the SAME generated
-    // cascade and aggregates Σ freq·|symbols| at every rung (0 = the
-    // character baseline from seg0); saved via lag, compression one
-    // IEEE division of exact ints round(4).
-    "q_bpe_curve" -> {
-      val rungs = (0 to bpeMergeRounds).map(r =>
-        s"SELECT CAST($r AS BIGINT) AS merge_idx, " +
-          "CAST(sum(freq * len(string_split(seg, ' '))) AS BIGINT) " +
-          s"AS corpus_tokens FROM seg$r")
-        .mkString("\n UNION ALL ")
-      s"""WITH $bpeCascadeSql,
-        |u AS ($rungs),
-        |w AS (SELECT merge_idx, corpus_tokens,
-        |    CAST(coalesce(lag(corpus_tokens) OVER (ORDER BY merge_idx)
-        |      - corpus_tokens, 0) AS BIGINT) AS tokens_saved
-        |  FROM u),
-        |b AS (SELECT corpus_tokens AS m0 FROM u WHERE merge_idx = 0)
-        |SELECT merge_idx, corpus_tokens, tokens_saved,
-        |  round(CAST(m0 AS DOUBLE) / CAST(corpus_tokens AS DOUBLE), 4)
-        |    AS compression
-        |FROM w, b ORDER BY merge_idx""".stripMargin
-    },
-    // F63 — the encode oracle replays the SAME generated training
-    // cascade, reconstructs each word from its final segmentation
-    // (replace(seg, ' ', '') — symbols never contain spaces) and
-    // joins the corpus back on the word; ratios are IEEE divisions
-    // of exact ints, unrounded.
-    "q_bpe_encode" -> {
-      import graft.functions.PortableText._
-      s"""WITH $bpeCascadeSql,
-        |tok AS (SELECT replace(seg, ' ', '') AS word,
-        |    CAST(len(string_split(seg, ' ')) AS BIGINT) AS n_sym
-        |  FROM seg$bpeMergeRounds),
-        |dw AS (SELECT doc_id, unnest($duckTokens) AS word
-        |  FROM documents),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(sum(n_sym) AS BIGINT) AS n_bpe_tokens,
-        |    CAST(sum(length(word)) AS BIGINT) AS n_chars
-        |  FROM dw JOIN tok USING (word) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(a.n_words, 0) AS n_words,
-        |  coalesce(a.n_bpe_tokens, 0) AS n_bpe_tokens,
-        |  coalesce(a.n_chars, 0) AS n_chars,
-        |  CASE WHEN coalesce(a.n_words, 0) > 0 THEN
-        |    CAST(a.n_bpe_tokens AS DOUBLE) / CAST(a.n_words AS DOUBLE)
-        |  END AS fertility,
-        |  CASE WHEN coalesce(a.n_bpe_tokens, 0) > 0 THEN
-        |    CAST(a.n_chars AS DOUBLE) / CAST(a.n_bpe_tokens AS DOUBLE)
-        |  END AS chars_per_token
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F57 — Zipf fit: ln inputs are IDENTICAL exact ints (count, rank)
-    // both engines; the five OLS sums round(4) over the k-row frame
-    // (D25's ln-input discipline); slope/intercept/r2 derive from the
-    // ROUNDED sums with identically-spelled IEEE expressions.
-    // F98 — Heaps fit: exact-int-div prefix buckets off the max-id
-    // scalar, first-bucket cumulative histogram (one explode, never B
-    // distinct scans), F57's rounded-sums-then-closed-form
-    // discipline. Slope/intercept/r2 carry the D60 `round(..) + 0.0`
-    // negative-zero normalization (DuckDB fp-round emits -0.0 for
-    // tiny negatives; Spark BigDecimal-round never does — the r11
-    // heaps_beta hash drift was exactly this).
-    "q_heaps_fit" -> {
-      import graft.functions.PortableText._
-      s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
-        |pd AS (SELECT CAST(doc_id * $heapsBuckets // (mx + 1) AS INT)
-        |      AS b,
-        |    CAST(sum(length($duckTokens)) AS BIGINT) AS toks
-        |  FROM documents, mx GROUP BY 1),
-        |fb AS (SELECT CAST(doc_id * $heapsBuckets // (mx + 1) AS INT)
-        |      AS b,
-        |    count(*) AS vocab
-        |  FROM (SELECT token, min(doc_id) AS doc_id
-        |    FROM (SELECT doc_id, unnest($duckTokens) AS token
-        |      FROM documents) t
-        |    GROUP BY token) f, mx
-        |  GROUP BY 1),
-        |pts AS (SELECT coalesce(pd.b, fb.b) AS b,
-        |    coalesce(toks, 0) AS toks, coalesce(vocab, 0) AS vocab
-        |  FROM pd FULL OUTER JOIN fb ON pd.b = fb.b),
-        |cum AS (SELECT b,
-        |    sum(toks) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS ct,
-        |    sum(vocab) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS cv
-        |  FROM pts),
-        |xy AS (SELECT ln(CAST(ct AS DOUBLE)) AS x,
-        |    ln(CAST(cv AS DOUBLE)) AS y
-        |  FROM cum WHERE ct > 0 AND cv > 0),
-        |s AS (SELECT count(*) AS n_points,
-        |    round(sum(x), 4) AS sx, round(sum(y), 4) AS sy,
-        |    round(sum(x * x), 4) AS sxx, round(sum(x * y), 4) AS sxy,
-        |    round(sum(y * y), 4) AS syy
-        |  FROM xy)
-        |SELECT n_points,
-        |  CASE WHEN n_points * sxx - sx * sx > 0 THEN
-        |    round((n_points * sxy - sx * sy)
-        |      / (n_points * sxx - sx * sx), 4) + 0.0 END AS heaps_beta,
-        |  CASE WHEN n_points * sxx - sx * sx > 0 THEN
-        |    round((sy - ((n_points * sxy - sx * sy)
-        |      / (n_points * sxx - sx * sx)) * sx) / n_points, 4) + 0.0
-        |  END AS ln_k,
-        |  CASE WHEN n_points * sxx - sx * sx > 0
-        |    AND n_points * syy - sy * sy > 0 THEN
-        |    round(((n_points * sxy - sx * sy) * (n_points * sxy - sx * sy))
-        |      / ((n_points * sxx - sx * sx) * (n_points * syy - sy * sy)),
-        |      4) + 0.0 END AS r2
-        |FROM s""".stripMargin
-    },
-    "q_zipf_fit" -> {
-      import graft.functions.PortableText._
-      s"""WITH top AS (
-        |  SELECT count(*) AS cnt, token
-        |  FROM (SELECT unnest($duckTokens) AS token FROM documents) x
-        |  GROUP BY token ORDER BY cnt DESC, token LIMIT $zipfTopK),
-        |ranked AS (
-        |  SELECT CAST(row_number() OVER (ORDER BY cnt DESC, token)
-        |    AS BIGINT) AS rnk, cnt FROM top),
-        |sums AS (
-        |  SELECT count(*) AS n_tokens,
-        |    round(sum(ln(CAST(rnk AS DOUBLE))), 4) AS sx,
-        |    round(sum(ln(CAST(cnt AS DOUBLE))), 4) AS sy,
-        |    round(sum(ln(CAST(rnk AS DOUBLE)) * ln(CAST(rnk AS DOUBLE))), 4)
-        |      AS sxx,
-        |    round(sum(ln(CAST(rnk AS DOUBLE)) * ln(CAST(cnt AS DOUBLE))), 4)
-        |      AS sxy,
-        |    round(sum(ln(CAST(cnt AS DOUBLE)) * ln(CAST(cnt AS DOUBLE))), 4)
-        |      AS syy
-        |  FROM ranked)
-        |SELECT n_tokens,
-        |  CASE WHEN n_tokens * sxx - sx * sx > 0 THEN
-        |    round((n_tokens * sxy - sx * sy) / (n_tokens * sxx - sx * sx), 4)
-        |  END AS slope,
-        |  CASE WHEN n_tokens * sxx - sx * sx > 0 THEN
-        |    round((sy - ((n_tokens * sxy - sx * sy)
-        |      / (n_tokens * sxx - sx * sx)) * sx) / n_tokens, 4)
-        |  END AS intercept,
-        |  CASE WHEN n_tokens * sxx - sx * sx > 0
-        |    AND n_tokens * syy - sy * sy > 0 THEN
-        |    round(((n_tokens * sxy - sx * sy) * (n_tokens * sxy - sx * sy))
-        |      / ((n_tokens * sxx - sx * sx) * (n_tokens * syy - sy * sy)), 4)
-        |  END AS r2
-        |FROM sums""".stripMargin
-    },
-    // F35 — unigram surprisal: freq/N exact ints, one IEEE division,
-    // ln parity per D3; per-doc mean is an aggregate → round(4).
-    "q_lm_surprisal" -> {
-      import graft.functions.PortableText._
-      s"""WITH toks AS (
-        |  SELECT doc_id, unnest($duckTokens) AS token FROM documents),
-        |freq AS (SELECT token, CAST(count(*) AS BIGINT) AS freq
-        |  FROM toks GROUP BY token),
-        |tot AS (SELECT count(*) AS n_total FROM toks),
-        |per AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    round(avg(-ln(CAST(freq AS DOUBLE) / n_total)), 4)
-        |      AS avg_surprisal
-        |  FROM toks JOIN freq USING (token), tot
-        |  GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(per.n_tokens, 0) AS n_tokens,
-        |  per.avg_surprisal
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F46 — DSIR-lite: C = (N_all·10⁴) div N_target fixed once, then
-    // w_bp = (tf_target·C) div tf_all — all exact int64 (`//` = Spark
-    // DIV, both truncate toward zero, operands non-negative); mean one
-    // IEEE division of exact ints, unrounded.
-    "q_importance_weights" -> {
-      import graft.functions.PortableText._
-      s"""WITH toks AS (
-        |  SELECT doc_id, source, unnest($duckTokens) AS token
-        |  FROM documents),
-        |freq AS (SELECT token, CAST(count(*) AS BIGINT) AS tf_all,
-        |    CAST(sum(CASE WHEN source = 'src3' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tf_target
-        |  FROM toks GROUP BY token),
-        |tot AS (SELECT (CAST(sum(tf_all) AS BIGINT) * 10000)
-        |      // CAST(sum(tf_target) AS BIGINT) AS c_ratio
-        |  FROM freq),
-        |per AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    CAST(sum((tf_target * c_ratio) // tf_all) AS BIGINT)
-        |      AS sum_w_bp
-        |  FROM toks JOIN freq USING (token), tot
-        |  GROUP BY doc_id)
-        |SELECT d.doc_id, d.source,
-        |  coalesce(per.n_tokens, 0) AS n_tokens,
-        |  coalesce(per.sum_w_bp, 0) AS sum_w_bp,
-        |  CAST(per.sum_w_bp AS DOUBLE) / CAST(per.n_tokens AS DOUBLE)
-        |    AS avg_w_bp
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F42 — vocab coverage: boundary tie broken by (freq desc, token
-    // asc) total order; oov_rate one division of exact ints, unrounded.
-    "q_vocab_coverage" -> {
-      import graft.functions.PortableText._
-      s"""WITH toks AS (
-        |  SELECT doc_id, unnest($duckTokens) AS token FROM documents),
-        |freq AS (SELECT token, count(*) AS freq FROM toks GROUP BY token),
-        |vocab AS (SELECT token FROM freq
-        |  ORDER BY freq DESC, token LIMIT 256),
-        |per AS (
-        |  SELECT t.doc_id, count(*) AS n_tokens,
-        |    count(*) FILTER (WHERE v.token IS NULL) AS n_oov
-        |  FROM toks t LEFT JOIN vocab v USING (token)
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(per.n_tokens, 0) AS n_tokens,
-        |  coalesce(per.n_oov, 0) AS n_oov,
-        |  CASE WHEN per.n_tokens > 0 THEN
-        |    CAST(per.n_oov AS DOUBLE) / per.n_tokens END AS oov_rate
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F40 — bigram LM: c2/c_head exact ints (c_head = sum of c2 —
-    // CAST, the HUGEINT rule), one division, ln per D3, mean round(4).
-    "q_bigram_surprisal" -> {
-      import graft.functions.PortableText._
-      // r16 one-tokenize-pass spelling: the (doc_id, bigram, tf)
-      // frame replaces the occurrence stream; the per-doc mean is the
-      // tf-weighted Σ(tf·nll)/Σtf — the identical IEEE multiply-add
-      // shape the Spark side folds.
-      s"""WITH tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |bg AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, length(tk)),
-        |      i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i+1 AS INT)]))
-        |      AS bigram
-        |  FROM tk),
-        |dbt AS (SELECT doc_id, bigram, CAST(count(*) AS BIGINT) AS tf
-        |  FROM bg GROUP BY doc_id, bigram),
-        |c2 AS (SELECT bigram, CAST(sum(tf) AS BIGINT) AS c2
-        |  FROM dbt GROUP BY bigram),
-        |ch AS (SELECT split_part(bigram, ' ', 1) AS head,
-        |    CAST(sum(c2) AS BIGINT) AS c_head
-        |  FROM c2 GROUP BY split_part(bigram, ' ', 1)),
-        |sc AS (SELECT dbt.doc_id, dbt.tf,
-        |    -ln(CAST(c2.c2 AS DOUBLE) / ch.c_head) AS nll
-        |  FROM dbt JOIN c2 USING (bigram)
-        |  JOIN ch ON ch.head = split_part(dbt.bigram, ' ', 1)),
-        |per AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |    round(sum(CAST(tf AS DOUBLE) * nll)
-        |      / CAST(sum(tf) AS DOUBLE), 4) AS avg_cond_surprisal
-        |  FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(per.n_bigrams, 0) AS n_bigrams,
-        |  per.avg_cond_surprisal
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F66 — interpolated Kneser-Ney: all counts exact int64 (c2,
-    // c_head, the N1+ continuation counts, B); the probability is ONE
-    // identically-spelled IEEE expression with the hoisted discount
-    // literal; self-scoring keeps c2 >= 1 > D so it is strictly
-    // positive; per-doc mean round(4).
-    "q_kn_surprisal" -> {
-      import graft.functions.PortableText._
-      // r16 one-tokenize-pass spelling — see q_bigram_surprisal.
-      s"""WITH tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |bg AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, length(tk)),
-        |      i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i+1 AS INT)]))
-        |      AS bigram
-        |  FROM tk),
-        |dbt AS (SELECT doc_id, bigram, CAST(count(*) AS BIGINT) AS tf
-        |  FROM bg GROUP BY doc_id, bigram),
-        |c2 AS (SELECT bigram, CAST(sum(tf) AS BIGINT) AS c2
-        |  FROM dbt GROUP BY bigram),
-        |hd AS (SELECT split_part(bigram, ' ', 1) AS head,
-        |    CAST(sum(c2) AS BIGINT) AS c_head,
-        |    CAST(count(*) AS BIGINT) AS n1_head
-        |  FROM c2 GROUP BY split_part(bigram, ' ', 1)),
-        |ct AS (SELECT split_part(bigram, ' ', 2) AS tail,
-        |    CAST(count(*) AS BIGINT) AS n1_cont
-        |  FROM c2 GROUP BY split_part(bigram, ' ', 2)),
-        |ty AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM c2),
-        |sc AS (SELECT dbt.doc_id, dbt.tf,
-        |    -ln((CAST(c2.c2 AS DOUBLE) - $knDiscount +
-        |      $knDiscount * CAST(hd.n1_head AS DOUBLE) *
-        |        (CAST(ct.n1_cont AS DOUBLE) /
-        |          CAST(ty.n_types AS DOUBLE))) /
-        |      CAST(hd.c_head AS DOUBLE)) AS nll
-        |  FROM dbt JOIN c2 USING (bigram)
-        |  JOIN hd ON hd.head = split_part(dbt.bigram, ' ', 1)
-        |  JOIN ct ON ct.tail = split_part(dbt.bigram, ' ', 2)
-        |  CROSS JOIN ty),
-        |per AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |    round(sum(CAST(tf AS DOUBLE) * nll)
-        |      / CAST(sum(tf) AS DOUBLE), 4) AS avg_kn_surprisal
-        |  FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(per.n_bigrams, 0) AS n_bigrams,
-        |  per.avg_kn_surprisal
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // F36 — codepoint entropy, UNROUNDED: both engines fold
-    // cnt·ln(cnt) over distinct codepoints in ascending order
-    // (list_sort = binary collation = codepoint order), exact int
-    // counts — bit-identical doubles by construction.
-    "q_char_entropy" ->
-      """WITH c AS (SELECT doc_id, length(text) AS len_cp,
-        |    string_split(text, '') AS cs FROM documents)
-        |SELECT doc_id, len_cp,
-        |  CASE WHEN len_cp > 0 THEN length(list_distinct(cs))
-        |       ELSE 0 END AS n_distinct_cp,
-        |  CASE WHEN len_cp > 0 THEN
-        |    ln(CAST(len_cp AS DOUBLE)) -
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(list_sort(list_distinct(cs)),
-        |        ch -> CAST(length(list_filter(cs, x -> x = ch)) AS DOUBLE)
-        |          * ln(CAST(length(list_filter(cs, x -> x = ch))
-        |              AS DOUBLE)))),
-        |      (a, b) -> a + b) / len_cp
-        |  END AS entropy
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // F37 — mixture sampling: quantized-sqrt weights make the whole
-    // allocation int64-exact (floor(√n·1e6) is bit-identical — sqrt
-    // is IEEE-correctly-rounded); // and div both truncate.
-    "q_mixture_sample" -> {
-      import graft.functions.PortableText._
-      s"""WITH c AS (SELECT source, count(*) AS n_docs
-        |  FROM documents GROUP BY source),
-        |q AS (SELECT source, n_docs,
-        |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6) AS BIGINT)
-        |      AS sq FROM c),
-        |z AS (SELECT CAST(sum(sq) AS BIGINT) AS z FROM q),
-        |t AS (SELECT source, n_docs, sq,
-        |    least(n_docs, (200 * sq) // z) AS tgt FROM q, z),
-        |r AS (SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY ${duckHashOrder("doc_id")}, doc_id) AS rnk
-        |  FROM documents)
-        |SELECT r.source, r.doc_id, r.rnk, t.tgt
-        |FROM r JOIN t USING (source) WHERE r.rnk <= t.tgt
-        |ORDER BY source, rnk""".stripMargin
-    },
-    // F38 — kNN density: q_ann_topk's pair CTE with a per-target
-    // mean over the top-k; out_rank orders the ROUNDED density.
-    "q_knn_density" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b)) AS nrm FROM e),
-        |p AS (SELECT q.vec_id AS target_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64), i -> q.v[CAST(i+1 AS INT)] * c.v[CAST(i+1 AS INT)])),
-        |      (a, b) -> a + b) / nullif(q.nrm * c.nrm, 0) AS cs
-        |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 100),
-        |r AS (SELECT target_id, cs,
-        |    row_number() OVER (PARTITION BY target_id
-        |      ORDER BY cs DESC, neighbor_id) AS rnk FROM p),
-        |d AS (SELECT target_id, round(avg(cs), 4) AS density,
-        |    count(cs) AS n_neighbors
-        |  FROM r WHERE rnk <= 10 GROUP BY target_id)
-        |SELECT target_id, n_neighbors, density,
-        |  row_number() OVER (ORDER BY density ASC NULLS FIRST, target_id)
-        |    AS out_rank
-        |FROM d ORDER BY target_id""".stripMargin,
-    // tf/df is one IEEE division of exact counts: values AND ordering
-    // are bit-identical across engines, so score stays unrounded.
-    "q_term_saliency" -> {
-      import graft.functions.PortableText._
-      s"""WITH tfreq AS (
-        |  SELECT doc_id, token, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest($duckTokens) AS token
-        |        FROM documents) x
-        |  GROUP BY doc_id, token),
-        |dfreq AS (SELECT token, count(*) AS df FROM tfreq GROUP BY token),
-        |s AS (SELECT tfreq.doc_id, tfreq.token, tfreq.tf, dfreq.df,
-        |    CAST(tfreq.tf AS DOUBLE) / dfreq.df AS score,
-        |    row_number() OVER (PARTITION BY tfreq.doc_id
-        |      ORDER BY CAST(tfreq.tf AS DOUBLE) / dfreq.df DESC, tfreq.token)
-        |      AS rnk
-        |  FROM tfreq JOIN dfreq USING (token))
-        |SELECT doc_id, token, tf, df, score, rnk
-        |FROM s WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin
-    },
-    "q_quality_filter" -> {
-      import graft.functions.PortableText._
-      s"""WITH q AS (
-        |  SELECT doc_id, length(tk) AS n_tokens,
-        |    CASE WHEN length(tk) > 0 THEN
-        |      1.0 - CAST(length(list_distinct(tk)) AS DOUBLE) / length(tk)
-        |    END AS rep_ratio,
-        |    CASE WHEN length(tk) > 0 THEN
-        |      CAST(length(list_filter(tk, t ->
-        |        list_contains(['the','a','of','and','to'], t))) AS DOUBLE)
-        |        / length(tk) END AS stop_ratio
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x)
-        |SELECT doc_id, n_tokens, rep_ratio, stop_ratio,
-        |  (CASE WHEN n_tokens < 20 THEN 'short'
-        |        WHEN rep_ratio > 0.65 THEN 'repetitive'
-        |        WHEN stop_ratio < 0.01 THEN 'low_stop' END) IS NULL AS keep,
-        |  CASE WHEN n_tokens < 20 THEN 'short'
-        |       WHEN rep_ratio > 0.65 THEN 'repetitive'
-        |       WHEN stop_ratio < 0.01 THEN 'low_stop' END AS drop_reason
-        |FROM q ORDER BY doc_id""".stripMargin
-    },
-    // F83 — calibration: F73's margin CTE + F15's keep CTE joined,
-    // floor-binned on the double (signed // vs div — the D50 rule),
-    // clamped, exact counts, one division per share.
-    "q_clf_calibration" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |ft AS (SELECT doc_id, ${duckPolyHash("tok")} % 1024 AS bucket
-        |  FROM tok),
-        |w AS (SELECT r AS bucket, (r * 37 + 11) % 21 - 10 AS w
-        |  FROM (SELECT unnest(range(1024)) AS r)),
-        |ag AS (SELECT doc_id, CAST(sum(w.w) AS BIGINT) AS margin
-        |  FROM ft JOIN w USING (bucket) GROUP BY doc_id),
-        |clf AS (SELECT d.doc_id, coalesce(ag.margin, 0) AS margin,
-        |    coalesce(ag.margin, 0) >= 0 AS label
-        |  FROM documents d LEFT JOIN ag USING (doc_id)),
-        |tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |qf AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN length(tk) < 20 THEN 'short'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              1.0 - CAST(length(list_distinct(tk)) AS DOUBLE)
-        |                / length(tk) END > 0.65 THEN 'repetitive'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              CAST(length(list_filter(tk, t -> list_contains(
-        |                ['the','a','of','and','to'], t))) AS DOUBLE)
-        |                / length(tk) END < 0.01 THEN 'low_stop'
-        |     END) IS NULL AS keep
-        |  FROM tk),
-        |j AS (SELECT clf.margin, clf.label, qf.keep,
-        |    greatest(least(CAST(floor(CAST(clf.margin AS DOUBLE)
-        |      / 40.0) AS BIGINT), 3), -3) AS bin
-        |  FROM clf JOIN qf USING (doc_id))
-        |SELECT bin, count(*) AS n_docs,
-        |  count(CASE WHEN label THEN 1 END) AS n_clf_keep,
-        |  count(CASE WHEN keep THEN 1 END) AS n_rule_keep,
-        |  count(CASE WHEN label = keep THEN 1 END) AS n_agree,
-        |  CAST(count(CASE WHEN keep THEN 1 END) AS DOUBLE) / count(*)
-        |    AS rule_keep_share,
-        |  CAST(count(CASE WHEN label = keep THEN 1 END) AS DOUBLE)
-        |    / count(*) AS agree_share
-        |FROM j GROUP BY bin ORDER BY bin""".stripMargin
-    },
-    // F104 — the temperature-curve oracle: exact int64 token counts,
-    // the same sqrt ladder (IEEE sqrt is correctly rounded — no
-    // pow/exp/ln), scores scaled by the per-T max (deterministic)
-    // then quantized to parts-per-1e12 — overflow-free at any corpus
-    // size — integer normalizer, one division.
-    "q_mixture_temps" -> {
-      import graft.functions.PortableText._
-      s"""WITH c AS (SELECT source,
-        |    CAST(sum(len($duckTokens)) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |x AS (SELECT t_quarters, source, n_tokens,
-        |    CASE t_quarters
-        |      WHEN 1 THEN sqrt(sqrt(CAST(n_tokens AS DOUBLE)))
-        |      WHEN 2 THEN sqrt(CAST(n_tokens AS DOUBLE))
-        |      WHEN 3 THEN sqrt(CAST(n_tokens AS DOUBLE))
-        |        * sqrt(sqrt(CAST(n_tokens AS DOUBLE)))
-        |      ELSE CAST(n_tokens AS DOUBLE)
-        |    END AS s
-        |  FROM c, (SELECT unnest(range(1, 5)) AS t_quarters) t),
-        |q AS (SELECT t_quarters, source, n_tokens,
-        |    CAST(floor(s / max(s) OVER (PARTITION BY t_quarters)
-        |      * 1000000000000.0 + 0.5) AS BIGINT) AS sq FROM x)
-        |SELECT t_quarters, source, n_tokens,
-        |  round(CAST(sq AS DOUBLE) / CAST(sum(sq) OVER
-        |    (PARTITION BY t_quarters) AS DOUBLE), 6) AS weight
-        |FROM q ORDER BY t_quarters, source""".stripMargin
-    },
-    // F103 — the AUC oracle: the q_clf_calibration clf/qf CTEs
-    // joined to source, then the exact pair-counting identity —
-    // distinct-margin cells, a cumulative neg-below window, and one
-    // integer aggregate; AUC = one division of exact ints.
-    "q_clf_auc" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |ft AS (SELECT doc_id, ${duckPolyHash("tok")} % 1024 AS bucket
-        |  FROM tok),
-        |w AS (SELECT r AS bucket, (r * 37 + 11) % 21 - 10 AS w
-        |  FROM (SELECT unnest(range(1024)) AS r)),
-        |ag AS (SELECT doc_id, CAST(sum(w.w) AS BIGINT) AS margin
-        |  FROM ft JOIN w USING (bucket) GROUP BY doc_id),
-        |clf AS (SELECT d.doc_id, coalesce(ag.margin, 0) AS margin
-        |  FROM documents d LEFT JOIN ag USING (doc_id)),
-        |tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |qf AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN length(tk) < 20 THEN 'short'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              1.0 - CAST(length(list_distinct(tk)) AS DOUBLE)
-        |                / length(tk) END > 0.65 THEN 'repetitive'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              CAST(length(list_filter(tk, t -> list_contains(
-        |                ['the','a','of','and','to'], t))) AS DOUBLE)
-        |                / length(tk) END < 0.01 THEN 'low_stop'
-        |     END) IS NULL AS keep
-        |  FROM tk),
-        |j AS (SELECT d.source, clf.margin, qf.keep
-        |  FROM documents d JOIN clf USING (doc_id)
-        |  JOIN qf USING (doc_id)),
-        |g AS (SELECT source, margin,
-        |    count(CASE WHEN keep THEN 1 END) AS np,
-        |    count(CASE WHEN NOT keep THEN 1 END) AS nn
-        |  FROM j GROUP BY 1, 2),
-        |c AS (SELECT source, np, nn,
-        |    coalesce(sum(nn) OVER (PARTITION BY source ORDER BY margin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS nn_below
-        |  FROM g)
-        |SELECT source, CAST(sum(np) AS BIGINT) AS n_pos,
-        |  CAST(sum(nn) AS BIGINT) AS n_neg,
-        |  CAST(sum(np * nn_below) AS BIGINT) AS n_conc,
-        |  CAST(sum(np * nn) AS BIGINT) AS n_tied,
-        |  CASE WHEN sum(np) > 0 AND sum(nn) > 0 THEN
-        |    round(CAST(2 * sum(np * nn_below) + sum(np * nn) AS DOUBLE)
-        |      / CAST(2 * sum(np) * sum(nn) AS DOUBLE), 4)
-        |  END AS auc
-        |FROM c GROUP BY source ORDER BY source""".stripMargin
-    },
-    // F81 — attribution: the q_corpus_select qf/dup CTE chains
-    // re-composed into the 2×2 per-source matrix; counts exact,
-    // share one IEEE division.
-    "q_curation_matrix" -> {
-      import graft.functions.PortableText._
-      s"""WITH tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |qf AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN length(tk) < 20 THEN 'short'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              1.0 - CAST(length(list_distinct(tk)) AS DOUBLE)
-        |                / length(tk) END > 0.65 THEN 'repetitive'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              CAST(length(list_filter(tk, t -> list_contains(
-        |                ['the','a','of','and','to'], t))) AS DOUBLE)
-        |                / length(tk) END < 0.01 THEN 'low_stop'
-        |     END) IS NULL AS keep
-        |  FROM tk),
-        |th AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM th),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bf AS (SELECT band, band_hash, min(doc_id) AS first_doc
-        |       FROM bands WHERE band_hash IS NOT NULL
-        |       GROUP BY band, band_hash),
-        |dup AS (SELECT bands.doc_id,
-        |         bool_or(first_doc < bands.doc_id) AS is_dup
-        |       FROM bands JOIN bf USING (band, band_hash)
-        |       GROUP BY bands.doc_id),
-        |v AS (SELECT d.source, qf.keep,
-        |    coalesce(dup.is_dup, false) AS is_dup
-        |  FROM documents d
-        |  JOIN qf ON qf.doc_id = d.doc_id
-        |  LEFT JOIN dup ON dup.doc_id = d.doc_id)
-        |SELECT source, count(*) AS n_docs,
-        |  count(CASE WHEN keep AND NOT is_dup THEN 1 END) AS n_clean,
-        |  count(CASE WHEN NOT keep AND NOT is_dup THEN 1 END)
-        |    AS n_quality_only,
-        |  count(CASE WHEN keep AND is_dup THEN 1 END) AS n_dup_only,
-        |  count(CASE WHEN NOT keep AND is_dup THEN 1 END) AS n_both,
-        |  CAST(count(CASE WHEN keep AND NOT is_dup THEN 1 END) AS DOUBLE)
-        |    / count(*) AS clean_share
-        |FROM v GROUP BY source ORDER BY source""".stripMargin
-    },
-    // F80 — corpus delta: both snapshots via the SAME duckPolyHash
-    // fingerprint (text-equality in the oracle could disagree with a
-    // Spark fp collision — one spelling, both engines), full outer
-    // join on doc_id, exact class counts, churn one IEEE division.
-    "q_corpus_delta" -> {
-      import graft.functions.PortableText._
-      s"""WITH o AS (SELECT doc_id, source, $duckDocFingerprint AS fp
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |n AS (SELECT doc_id, source,
-        |    ${duckPolyHash(
-               "CASE WHEN doc_id % 5 = 0 THEN text || ' v2' " +
-                 "ELSE text END")} AS fp
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |j AS (SELECT coalesce(n.source, o.source) AS source,
-        |    CASE WHEN o.fp IS NULL THEN 'added'
-        |         WHEN n.fp IS NULL THEN 'removed'
-        |         WHEN o.fp = n.fp THEN 'unchanged'
-        |         ELSE 'changed' END AS cls
-        |  FROM o FULL OUTER JOIN n USING (doc_id))
-        |SELECT source,
-        |  count(CASE WHEN cls = 'added' THEN 1 END) AS n_added,
-        |  count(CASE WHEN cls = 'removed' THEN 1 END) AS n_removed,
-        |  count(CASE WHEN cls = 'changed' THEN 1 END) AS n_changed,
-        |  count(CASE WHEN cls = 'unchanged' THEN 1 END) AS n_unchanged,
-        |  count(*) AS n_tracked,
-        |  CAST(count(CASE WHEN cls <> 'unchanged' THEN 1 END) AS DOUBLE)
-        |    / count(*) AS churn
-        |FROM j GROUP BY source ORDER BY source""".stripMargin
-    },
-    // F77 — hashed-TF profile: dense 64-bucket grid per doc (left
-    // join), exact-int count/support/checksum sums (HUGEINT CAST),
-    // nrm = sqrt of an exact int — every scalar engine-identical.
-    "q_text_embed" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |bk AS (SELECT doc_id, ${duckPolyHash("tok")} % 64 AS b,
-        |    count(*) AS c
-        |  FROM tok GROUP BY doc_id, b),
-        |g AS (SELECT d.doc_id, r.r AS b
-        |  FROM documents d CROSS JOIN (SELECT unnest(range(64)) AS r) r),
-        |v AS (SELECT g.doc_id, g.b, coalesce(bk.c, 0) AS c
-        |  FROM g LEFT JOIN bk ON bk.doc_id = g.doc_id AND bk.b = g.b)
-        |SELECT doc_id,
-        |  CAST(sum(c) AS BIGINT) AS n_tokens,
-        |  count(CASE WHEN c > 0 THEN 1 END) AS nnz,
-        |  CAST(sum((b + 1) * c * c) AS BIGINT) AS vec_checksum,
-        |  sqrt(CAST(CAST(sum(c * c) AS BIGINT) AS DOUBLE)) AS nrm
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    // F76 — KS drift: same (source, len) collapse, bounded CDF grid,
-    // exact-int cumulatives, one IEEE division per CDF value, sup
-    // picked by (|diff| desc, len asc) — identical doubles rank
-    // identically; int-len tiebreak.
-    "q_ks_drift" -> {
-      import graft.functions.PortableText._
-      s"""WITH sl AS (SELECT source, CAST(length($duckTokens) AS BIGINT)
-        |      AS len
-        |  FROM documents),
-        |bysl AS (SELECT source, len, count(*) AS c_sl
-        |  FROM sl GROUP BY source, len),
-        |byl AS (SELECT len, CAST(sum(c_sl) AS BIGINT) AS c_l
-        |  FROM bysl GROUP BY len),
-        |ns AS (SELECT source, CAST(sum(c_sl) AS BIGINT) AS n_s
-        |  FROM bysl GROUP BY source),
-        |nall AS (SELECT CAST(sum(c_sl) AS BIGINT) AS n_all FROM bysl),
-        |grid AS (SELECT ns.source, byl.len, ns.n_s, nall.n_all, byl.c_l,
-        |    coalesce(bysl.c_sl, 0) AS c_sl
-        |  FROM ns CROSS JOIN byl CROSS JOIN nall
-        |  LEFT JOIN bysl ON bysl.source = ns.source AND bysl.len = byl.len),
-        |cdf AS (SELECT source, len, n_s, n_all,
-        |    CAST(sum(c_sl) OVER (PARTITION BY source ORDER BY len
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_s,
-        |    CAST(sum(c_l) OVER (PARTITION BY source ORDER BY len
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_all
-        |  FROM grid),
-        |d AS (SELECT source, len, n_s, n_all,
-        |    CASE WHEN n_all - n_s > 0 THEN
-        |      abs(CAST(cum_s AS DOUBLE) / n_s
-        |        - CAST(cum_all - cum_s AS DOUBLE) / (n_all - n_s)) END
-        |      AS absdiff
-        |  FROM cdf),
-        |r AS (SELECT source, len, n_s, n_all, absdiff,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY absdiff DESC NULLS LAST, len) AS rnk
-        |  FROM d)
-        |SELECT source, n_s AS n_docs, n_all - n_s AS n_rest,
-        |  absdiff AS ks_stat, len AS ks_at_len
-        |FROM r WHERE rnk = 1 ORDER BY source""".stripMargin
-    },
-    // F75 — waterfill: same rank/prefix windows on the source frame,
-    // band pick by exact-int cross-mult (ORDER BY j LIMIT 1), level
-    // via // on non-negative ints (== Spark div), slack CAST back
-    // from the HUGEINT sum.
-    "q_waterfill" -> {
-      import graft.functions.PortableText._
-      s"""WITH tk AS (SELECT source,
-        |    CAST(sum(length($duckTokens)) AS BIGINT) AS avail_tokens
-        |  FROM documents GROUP BY source),
-        |n AS (SELECT count(*) AS n_src,
-        |    CAST(sum(avail_tokens) AS BIGINT) AS total_avail FROM tk),
-        |r AS (SELECT source, avail_tokens,
-        |    (n.total_avail * $waterfillPct) // 100 AS budget,
-        |    row_number() OVER (ORDER BY avail_tokens, source) AS j,
-        |    coalesce(CAST(sum(avail_tokens) OVER (
-        |      ORDER BY avail_tokens, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS pb,
-        |    n.n_src - row_number() OVER (ORDER BY avail_tokens, source)
-        |      + 1 AS rem
-        |  FROM tk, n),
-        |lv AS (SELECT (budget - pb) // rem AS water_level, 1 AS _one
-        |  FROM r WHERE budget - pb <= avail_tokens * rem
-        |  ORDER BY j LIMIT 1),
-        |al AS (SELECT r.source, r.avail_tokens, r.budget, lv.water_level,
-        |    CASE WHEN lv.water_level IS NOT NULL
-        |      THEN least(r.avail_tokens, lv.water_level)
-        |      ELSE r.avail_tokens END AS alloc_tokens
-        |  FROM r LEFT JOIN lv ON true)
-        |SELECT source, avail_tokens, alloc_tokens,
-        |  alloc_tokens = avail_tokens AS fully_funded,
-        |  water_level, budget,
-        |  budget - CAST((SELECT sum(alloc_tokens) FROM al) AS BIGINT)
-        |    AS budget_slack
-        |FROM al ORDER BY source""".stripMargin
-    },
-    // F73 — classifier inference: per-token polyhash buckets (the
-    // duckPolyHash dual, non-negative so plain % is pmod), the SAME
-    // integer weight formula on a range() table, margin CAST back to
-    // BIGINT from DuckDB's HUGEINT sum, avg one IEEE division, label
-    // on the exact int; token-less docs keep margin 0 via left join.
-    // F92 — NB trainer: rule labels via integer cross-multiply, class
-    // counts exact int64, each log-odds term ONE fixed left-assoc ln
-    // spelling (F86 rule), margins = prior + per-doc term sum, mean
-    // margin round(4) (float sweep), agree_rate exact-int division.
-    "q_nb_classifier" -> {
-      import graft.functions.PortableText._
-      s"""WITH lab AS (SELECT doc_id, source, length(tk) AS n_tok,
-        |    length(list_filter(tk, t ->
-        |      list_contains(['the','a','of','and','to'], t))) AS n_stop
-        |  FROM (SELECT doc_id, source, $duckTokens AS tk
-        |    FROM documents) x),
-        |lab2 AS (SELECT *, n_tok >= $nbMinTok
-        |    AND n_stop * 100 >= n_tok * $nbMinStopPct AS pos FROM lab),
-        |tl AS (SELECT t.doc_id, t.token, l.pos
-        |  FROM (SELECT doc_id, unnest($duckTokens) AS token
-        |    FROM documents) t JOIN lab2 l USING (doc_id)),
-        |cc AS (SELECT token,
-        |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(sum(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS c0
-        |  FROM tl GROUP BY token),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS n1w,
-        |    CAST(sum(c0) AS BIGINT) AS n0w, count(*) AS v FROM cc),
-        |pr AS (SELECT
-        |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n1d,
-        |    CAST(sum(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n0d
-        |  FROM lab2),
-        |pd AS (SELECT tl.doc_id,
-        |    sum(ln(CAST(c1 AS DOUBLE) + 1.0)
-        |      - ln(CAST(n1w AS DOUBLE) + CAST(v AS DOUBLE))
-        |      - ln(CAST(c0 AS DOUBLE) + 1.0)
-        |      + ln(CAST(n0w AS DOUBLE) + CAST(v AS DOUBLE))) AS tsum
-        |  FROM tl JOIN cc USING (token), tot GROUP BY tl.doc_id),
-        |sc AS (SELECT l.source, l.pos,
-        |    ln(CAST(n1d AS DOUBLE) + 1.0) - ln(CAST(n0d AS DOUBLE) + 1.0)
-        |      + coalesce(pd.tsum, 0.0) AS margin
-        |  FROM lab2 l LEFT JOIN pd USING (doc_id), pr),
-        |sc2 AS (SELECT source, pos, margin, margin > 0 AS pred FROM sc)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_pos_label,
-        |  CAST(sum(CASE WHEN pred THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_pos_pred,
-        |  CAST(sum(CASE WHEN pos = pred THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_agree,
-        |  CAST(sum(CASE WHEN pos = pred THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) AS agree_rate,
-        |  round(avg(margin), 4) AS mean_margin
-        |FROM sc2 GROUP BY source ORDER BY source""".stripMargin
-    },
-    "q_classifier_score" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |ft AS (SELECT doc_id, ${duckPolyHash("tok")} % 1024 AS bucket
-        |  FROM tok),
-        |w AS (SELECT r AS bucket, (r * 37 + 11) % 21 - 10 AS w
-        |  FROM (SELECT unnest(range(1024)) AS r)),
-        |ag AS (SELECT doc_id, count(*) AS n_tokens,
-        |    CAST(sum(w.w) AS BIGINT) AS margin
-        |  FROM ft JOIN w USING (bucket) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(ag.n_tokens, 0) AS n_tokens,
-        |  coalesce(ag.margin, 0) AS margin,
-        |  CASE WHEN ag.n_tokens > 0
-        |    THEN CAST(ag.margin AS DOUBLE) / ag.n_tokens END AS avg_margin,
-        |  coalesce(ag.margin, 0) >= 0 AS label
-        |FROM documents d LEFT JOIN ag USING (doc_id)
-        |ORDER BY doc_id""".stripMargin
-    },
-    // The shared pmod hash spelling lives in PortableText.duckHashOrder
-    // (negative-id parity rationale documented there).
-    // F90 — release manifest: F16's split CASE + fingerprint sums;
-    // checksum reduced mod p after the sum (HUGEINT rule).
-    "q_release_manifest" -> {
-      import graft.functions.PortableText._
-      s"""WITH s AS (SELECT doc_id,
-        |    CASE WHEN ${duckHashOrder("doc_id")} % 100 < 80
-        |           THEN 'train'
-        |         WHEN ${duckHashOrder("doc_id")} % 100 < 90
-        |           THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |    CAST(length($duckTokens) AS BIGINT) AS n_toks,
-        |    $duckDocFingerprint AS fp
-        |  FROM documents)
-        |SELECT split, count(*) AS n_docs,
-        |  CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-        |  CAST(CAST(sum(fp) AS HUGEINT) % $P AS BIGINT)
-        |    AS content_checksum,
-        |  min(f.doc_id) AS min_doc_id, max(f.doc_id) AS max_doc_id
-        |FROM f JOIN s USING (doc_id)
-        |GROUP BY split ORDER BY split""".stripMargin
-    },
-    "q_hash_split" -> {
-      import graft.functions.PortableText.duckHashOrder
-      s"""SELECT doc_id, lang, source,
-        |  CASE WHEN ${duckHashOrder("doc_id")} % 100 < 80
-        |         THEN 'train'
-        |       WHEN ${duckHashOrder("doc_id")} % 100 < 90
-        |         THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q_corpus_select" -> {
-      import graft.functions.PortableText._
-      s"""WITH tk AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |qf AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN length(tk) < 20 THEN 'short'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              1.0 - CAST(length(list_distinct(tk)) AS DOUBLE)
-        |                / length(tk) END > 0.65 THEN 'repetitive'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              CAST(length(list_filter(tk, t -> list_contains(
-        |                ['the','a','of','and','to'], t))) AS DOUBLE)
-        |                / length(tk) END < 0.01 THEN 'low_stop'
-        |     END) IS NULL AS keep
-        |  FROM tk),
-        |th AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM th),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bf AS (SELECT band, band_hash, min(doc_id) AS first_doc
-        |       FROM bands WHERE band_hash IS NOT NULL
-        |       GROUP BY band, band_hash),
-        |dup AS (SELECT bands.doc_id,
-        |         bool_or(first_doc < bands.doc_id) AS is_dup
-        |       FROM bands JOIN bf USING (band, band_hash)
-        |       GROUP BY bands.doc_id)
-        |SELECT d.doc_id, d.lang, d.source
-        |FROM documents d
-        |JOIN qf ON qf.doc_id = d.doc_id
-        |LEFT JOIN dup ON dup.doc_id = d.doc_id
-        |WHERE qf.keep AND NOT coalesce(dup.is_dup, false)
-        |  AND ${duckHashOrder("d.doc_id")} % 100 < 80
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    // Same pmod spelling as q_hash_split for the shard; `//` in DuckDB
-    // truncates toward zero like Spark's `div` (probed r4) — equal to
-    // floor here because every operand is non-negative.
-    // The window sum is CAST AS BIGINT: DuckDB's sum(BIGINT) OVER
-    // returns HUGEINT, which materializes as float64 and fails the
-    // driver's type-sensitive row hash despite identical values (the
-    // r8 q_pack_sequences/q_token_budget failure).
-    "q_pack_sequences" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, shard, n_tokens,
-        |  tok_end - n_tokens AS tok_start,
-        |  CASE WHEN n_tokens > 0 THEN (tok_end - n_tokens) // 512 END AS bin_first,
-        |  CASE WHEN n_tokens > 0 THEN (tok_end - 1) // 512 END AS bin_last
-        |FROM (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_end
-        |  FROM (
-        |    SELECT doc_id,
-        |      CAST(${duckHashOrder("doc_id")} % 4 AS INT) AS shard,
-        |      CAST(length($duckTokens) AS BIGINT) AS n_tokens
-        |    FROM documents) s) x
-        |ORDER BY doc_id""".stripMargin
-    },
-    // Quantized linear-idf relevance: weight = (N*1000) // df (exact
-    // int), score = sum(tf*weight) — reduction-order-free, so the
-    // engines agree bit-for-bit. Top-15 by (score DESC, doc_id).
-    // F68 — the (query, term) map is GENERATED from auditQueries;
-    // tf/df/score reuse F28's exact-int spelling; discounts use the
-    // hard ln2 literal; DCG/IDCG round(4), NDCG from the rounded pair.
-    "q_ranking_audit" -> {
-      import graft.functions.PortableText._
-      s"""WITH qm AS (SELECT * FROM (VALUES $auditQueriesSql)
-        |    AS v(query_id, query, term)),
-        |tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |tf AS (SELECT qm.query_id, qm.query, tok.doc_id, qm.term,
-        |    count(*) AS tf
-        |  FROM tok JOIN qm ON qm.term = tok.tok
-        |  GROUP BY qm.query_id, qm.query, tok.doc_id, qm.term),
-        |dfreq AS (SELECT term, count(*) AS df FROM (
-        |    SELECT DISTINCT term, doc_id FROM tf) x GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |per AS (SELECT query_id, query, doc_id,
-        |    CAST(sum(tf * ((n_docs * 1000) // df)) AS BIGINT) AS score,
-        |    CAST(sum(tf) AS BIGINT) AS rel
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-        |  GROUP BY query_id, query, doc_id),
-        |rk AS (SELECT *,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id) AS rnk_score,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY rel DESC, doc_id) AS rnk_ideal
-        |  FROM per),
-        |d AS (SELECT query_id, query,
-        |    round(sum(CAST(rel AS DOUBLE) * 0.6931471805599453 /
-        |      ln(CAST(rnk_score AS DOUBLE) + 1.0)), 4) AS dcg,
-        |    count(*) AS n_ranked
-        |  FROM rk WHERE rnk_score <= $auditK GROUP BY query_id, query),
-        |i AS (SELECT query_id,
-        |    round(sum(CAST(rel AS DOUBLE) * 0.6931471805599453 /
-        |      ln(CAST(rnk_ideal AS DOUBLE) + 1.0)), 4) AS idcg
-        |  FROM rk WHERE rnk_ideal <= $auditK GROUP BY query_id),
-        |c AS (SELECT query_id, count(*) AS n_cand FROM rk
-        |  GROUP BY query_id)
-        |SELECT d.query_id, d.query, c.n_cand, d.n_ranked, d.dcg,
-        |  i.idcg,
-        |  CASE WHEN i.idcg > 0 THEN round(d.dcg / i.idcg, 4) END AS ndcg
-        |FROM d JOIN i USING (query_id) JOIN c USING (query_id)
-        |ORDER BY d.query_id""".stripMargin
-    },
-    "q_term_search" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS token
-        |  FROM documents),
-        |ft AS (SELECT doc_id, token, count(*) AS tf FROM tok
-        |  WHERE token IN ('dup', 'scan', 'spark', 'xyzzy')
-        |  GROUP BY doc_id, token),
-        |dfreq AS (SELECT token, count(*) AS df FROM ft GROUP BY token),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |sc AS (SELECT doc_id, count(*) AS n_hit_terms,
-        |    CAST(sum(tf * ((n_docs * 1000) // df)) AS BIGINT) AS score
-        |  FROM ft JOIN dfreq USING (token) CROSS JOIN n
-        |  GROUP BY doc_id)
-        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
-        |    AS rnk,
-        |  doc_id, n_hit_terms, score
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 15""".stripMargin
-    },
-    // F101 — BM25: the per-term double score through ONE fixed
-    // expression tree (identical to the Spark spelling), floored to
-    // int64 so the per-doc sum is an exact-integer reduction; k1+1
-    // and 1−b are Scala round-trip literals.
-    "q_bm25" -> {
-      import graft.functions.PortableText._
-      val (k1, b) = (bm25K1, bm25B)
-      val k1p1 = k1 + 1.0      // same Scala ops as the operator's
-      val oneMinusB = 1.0 - b  // derivation — identical doubles
-      s"""WITH tok AS (SELECT doc_id, len($duckTokens) AS dl,
-        |    unnest($duckTokens) AS token
-        |  FROM documents),
-        |ft AS (SELECT doc_id, token, count(*) AS tf, max(dl) AS dl
-        |  FROM tok
-        |  WHERE token IN ('dup', 'scan', 'spark', 'xyzzy')
-        |  GROUP BY doc_id, token),
-        |dfreq AS (SELECT token, count(*) AS df FROM ft GROUP BY token),
-        |n AS (SELECT count(*) AS n_docs,
-        |    CAST(sum(len($duckTokens)) AS BIGINT) AS sum_dl
-        |  FROM documents),
-        |sc AS (SELECT doc_id, count(*) AS n_hit_terms,
-        |    CAST(max(dl) AS BIGINT) AS dl,
-        |    CAST(sum(CAST(floor(CAST((n_docs * 1000) // df AS DOUBLE)
-        |      * (CAST(tf AS DOUBLE) * $k1p1)
-        |      / (CAST(tf AS DOUBLE) + $k1 * ($oneMinusB + $b
-        |        * (CAST(dl AS DOUBLE)
-        |           / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      ) AS BIGINT)) AS BIGINT) AS score
-        |  FROM ft JOIN dfreq USING (token) CROSS JOIN n
-        |  GROUP BY doc_id)
-        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
-        |    AS rnk,
-        |  doc_id, n_hit_terms, dl, score
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 15""".stripMargin
-    },
-    // Hybrid: q_term_search's scoring CTEs at kCand=20, candidates
-    // joined to embeddings (vec_id = doc_id), cosine re-rank vs vec 0
-    // with the q_ann_topk dot/norm spelling; DESC orders NULLS LAST
-    // in both engines.
-    "q_hybrid_search" -> {
-      import graft.functions.PortableText._
-      val dot = "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(64), i -> a.v[CAST(i+1 AS INT)] * " +
-        "b.v[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS token
-        |  FROM documents),
-        |ft AS (SELECT doc_id, token, count(*) AS tf FROM tok
-        |  WHERE token IN ('dup', 'scan', 'spark', 'xyzzy')
-        |  GROUP BY doc_id, token),
-        |dfreq AS (SELECT token, count(*) AS df FROM ft GROUP BY token),
-        |nn AS (SELECT count(*) AS n_docs FROM documents),
-        |sc AS (SELECT doc_id, count(*) AS n_hit_terms,
-        |    CAST(sum(tf * ((n_docs * 1000) // df)) AS BIGINT) AS score
-        |  FROM ft JOIN dfreq USING (token) CROSS JOIN nn
-        |  GROUP BY doc_id),
-        |cand AS (SELECT CAST(row_number() OVER
-        |      (ORDER BY score DESC, doc_id) AS INT) AS term_rnk,
-        |    doc_id, score AS term_score
-        |  FROM sc ORDER BY score DESC, doc_id LIMIT 20),
-        |e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |nr AS (SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(64),
-        |        i -> v[CAST(i+1 AS INT)] * v[CAST(i+1 AS INT)])),
-        |      (x, y) -> x + y)) AS nrm FROM e),
-        |scored AS (SELECT cand.term_rnk, cand.doc_id, cand.term_score,
-        |    CASE WHEN a.v IS NOT NULL AND a.nrm * b.nrm <> 0
-        |      THEN $dot / (a.nrm * b.nrm) END AS cs
-        |  FROM cand
-        |  LEFT JOIN nr a ON a.vec_id = cand.doc_id
-        |  CROSS JOIN (SELECT v, nrm FROM nr WHERE vec_id = 0) b)
-        |SELECT CAST(row_number() OVER (ORDER BY cs DESC, doc_id) AS INT)
-        |    AS rnk,
-        |  doc_id, term_rnk, term_score, round(cs, 4) AS cos_sim
-        |FROM scored ORDER BY cs DESC, doc_id LIMIT 10""".stripMargin
-    },
-    // Chunk c covers tokens [c*24+1, c*24+32] (stride 24 = 32 − 8
-    // overlap); DuckDB list slice is 1-based INCLUSIVE both ends and
-    // clamps at the list end, same as Spark's slice(arr, start, len).
-    "q_chunk_docs" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokens AS tk FROM documents),
-        |c AS (SELECT doc_id, length(tk) AS n_tokens,
-        |    unnest(range(0, (length(tk) - 1) // 24 + 1)) AS chunk_idx, tk
-        |  FROM t WHERE length(tk) > 0),
-        |s AS (SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx, n_tokens,
-        |    array_to_string(tk[chunk_idx*24 + 1 : chunk_idx*24 + 32], ' ')
-        |      AS chunk_text
-        |  FROM c)
-        |SELECT doc_id, chunk_idx,
-        |  least(32, n_tokens - chunk_idx * 24) AS n_chunk_tokens,
-        |  chunk_text, ${duckPolyHash("chunk_text")} AS chunk_fp
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin
-    },
-    // Keep-iff-prefix-fits semantics: the window sum INCLUDES the
-    // current doc, so the doc that would cross the budget is dropped.
-    // CAST AS BIGINT for the same HUGEINT->float64 reason as
-    // q_pack_sequences (r8 driver-hash failure).
-    "q_token_budget" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, lang, source, n_tokens, cum_tokens FROM (
-        |  SELECT doc_id, lang, source, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY source
-        |      ORDER BY ${duckHashOrder("doc_id")}, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM (
-        |    SELECT doc_id, lang, source,
-        |      CAST(length($duckTokens) AS BIGINT) AS n_tokens
-        |    FROM documents) s) x
-        |WHERE cum_tokens <= 1000 ORDER BY doc_id""".stripMargin
-    },
-    // Keep rule is exact integer arithmetic (df*100 <= n_docs*50);
-    // within-doc repeats count once toward df but are kept/dropped in
-    // place; reassembly order restored by pos. Spark's pos is 0-based
-    // and internal only — both engines order by it, neither emits it.
-    "q_line_dedup" ->
-      """WITH p AS (SELECT doc_id, string_split(text, ' ') AS parts
-        |  FROM documents),
-        |l0 AS (SELECT doc_id, unnest(range(1, length(parts) + 1)) AS pos,
-        |    parts FROM p),
-        |l AS (SELECT doc_id, pos, parts[CAST(pos AS INT)] AS line FROM l0
-        |  WHERE parts[CAST(pos AS INT)] <> ''),
-        |nd AS (SELECT count(*) AS n_docs FROM documents),
-        |df AS (SELECT line, count(DISTINCT doc_id) AS df FROM l GROUP BY line),
-        |k AS (SELECT l.doc_id, l.pos, l.line,
-        |    df.df * 100 <= nd.n_docs * 50 AS kept
-        |  FROM l JOIN df USING (line) CROSS JOIN nd),
-        |agg AS (SELECT doc_id, count(*) AS n_lines,
-        |    count(CASE WHEN kept THEN 1 END) AS n_kept,
-        |    coalesce(string_agg(CASE WHEN kept THEN line END, ' '
-        |      ORDER BY pos), '') AS clean_text
-        |  FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(agg.n_lines, 0) AS n_lines,
-        |  coalesce(agg.n_kept, 0) AS n_kept,
-        |  coalesce(agg.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // F79 — boilerplate: q_line_dedup's split spelling, df on the
-    // distinct (source, line, doc) frame, occurrences on the raw
-    // frame, exact-int cross-mult threshold with the df >= 2 guard,
-    // share ONE IEEE division; counts CAST from HUGEINT.
-    "q_boilerplate" ->
-      """WITH p AS (SELECT source, doc_id, string_split(text, ' ')
-        |    AS parts FROM documents),
-        |l0 AS (SELECT source, doc_id,
-        |    unnest(range(1, length(parts) + 1)) AS pos, parts FROM p),
-        |l AS (SELECT source, doc_id, parts[CAST(pos AS INT)] AS line
-        |  FROM l0 WHERE parts[CAST(pos AS INT)] <> ''),
-        |sd AS (SELECT source, count(*) AS n_docs FROM documents
-        |  GROUP BY source),
-        |dfs AS (SELECT source, line, count(DISTINCT doc_id) AS df
-        |  FROM l GROUP BY source, line),
-        |occ AS (SELECT source, line, count(*) AS occ
-        |  FROM l GROUP BY source, line),
-        |fl AS (SELECT dfs.source, dfs.line, dfs.df, occ.occ, sd.n_docs,
-        |    dfs.df >= 2 AND dfs.df * 100 >= sd.n_docs * 80 AS boiler
-        |  FROM dfs JOIN occ USING (source, line)
-        |  JOIN sd USING (source)),
-        |agg AS (SELECT source, count(*) AS n_distinct_lines,
-        |    count(CASE WHEN boiler THEN 1 END) AS n_boiler_lines,
-        |    CAST(sum(occ) AS BIGINT) AS occ_total,
-        |    CAST(sum(CASE WHEN boiler THEN occ ELSE 0 END) AS BIGINT)
-        |      AS occ_boiler
-        |  FROM fl GROUP BY source)
-        |SELECT sd.source, sd.n_docs,
-        |  coalesce(agg.n_distinct_lines, 0) AS n_distinct_lines,
-        |  coalesce(agg.n_boiler_lines, 0) AS n_boiler_lines,
-        |  coalesce(agg.occ_total, 0) AS occ_total,
-        |  coalesce(agg.occ_boiler, 0) AS occ_boiler,
-        |  CASE WHEN agg.occ_total > 0
-        |    THEN CAST(agg.occ_boiler AS DOUBLE) / agg.occ_total END
-        |    AS boiler_share
-        |FROM sd LEFT JOIN agg USING (source)
-        |ORDER BY source""".stripMargin,
-    // F79 over the RICH corpus: the same boilerplate body as
-    // q_boilerplate with the richdocs CTE chain as the source, lines
-    // split on chr(10) (real multi-word lines) and the realistic
-    // dfPct=30 gate the planted 12%-rate boilers clear.
-    "q_boilerplate_rich" ->
-      s"""WITH ${RichCorpus.duckDocsCtes},
-        |p AS (SELECT source, doc_id, string_split(text, chr(10))
-        |    AS parts FROM richdocs),
-        |l0 AS (SELECT source, doc_id,
-        |    unnest(range(1, length(parts) + 1)) AS pos, parts FROM p),
-        |l AS (SELECT source, doc_id, parts[CAST(pos AS INT)] AS line
-        |  FROM l0 WHERE parts[CAST(pos AS INT)] <> ''),
-        |sd AS (SELECT source, count(*) AS n_docs FROM richdocs
-        |  GROUP BY source),
-        |dfs AS (SELECT source, line, count(DISTINCT doc_id) AS df
-        |  FROM l GROUP BY source, line),
-        |occ AS (SELECT source, line, count(*) AS occ
-        |  FROM l GROUP BY source, line),
-        |fl AS (SELECT dfs.source, dfs.line, dfs.df, occ.occ, sd.n_docs,
-        |    dfs.df >= 2 AND dfs.df * 100 >= sd.n_docs * 30 AS boiler
-        |  FROM dfs JOIN occ USING (source, line)
-        |  JOIN sd USING (source)),
-        |agg AS (SELECT source, count(*) AS n_distinct_lines,
-        |    count(CASE WHEN boiler THEN 1 END) AS n_boiler_lines,
-        |    CAST(sum(occ) AS BIGINT) AS occ_total,
-        |    CAST(sum(CASE WHEN boiler THEN occ ELSE 0 END) AS BIGINT)
-        |      AS occ_boiler
-        |  FROM fl GROUP BY source)
-        |SELECT sd.source, sd.n_docs,
-        |  coalesce(agg.n_distinct_lines, 0) AS n_distinct_lines,
-        |  coalesce(agg.n_boiler_lines, 0) AS n_boiler_lines,
-        |  coalesce(agg.occ_total, 0) AS occ_total,
-        |  coalesce(agg.occ_boiler, 0) AS occ_boiler,
-        |  CASE WHEN agg.occ_total > 0
-        |    THEN CAST(agg.occ_boiler AS DOUBLE) / agg.occ_total END
-        |    AS boiler_share
-        |FROM sd LEFT JOIN agg USING (source)
-        |ORDER BY source""".stripMargin,
-    // F55 over the RICH corpus: q_threshold_sweep's body, cuts from
-    // the shared richSweepCuts constant (the tier-discriminating
-    // token range), source = richdocs.
-    "q_threshold_sweep_rich" -> {
-      import graft.functions.PortableText._
-      s"""WITH ${RichCorpus.duckDocsCtes}
-        |SELECT source, min_tokens,
-        |  count(*) AS n_docs_total,
-        |  CAST(sum(CASE WHEN n >= min_tokens THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_docs_kept,
-        |  CAST(sum(CASE WHEN n >= min_tokens THEN n ELSE 0 END)
-        |    AS BIGINT) AS tokens_kept,
-        |  (CAST(sum(CASE WHEN n >= min_tokens THEN 1 ELSE 0 END)
-        |    AS BIGINT) * 10000) // count(*) AS kept_share_bp
-        |FROM (SELECT source, CAST(length($duckTokens) AS BIGINT) AS n
-        |  FROM richdocs) d,
-        |  (SELECT CAST(t.min_tokens AS BIGINT) AS min_tokens
-        |   FROM (VALUES $richSweepCutsSql) AS t(min_tokens)) t
-        |GROUP BY source, min_tokens
-        |ORDER BY source, min_tokens""".stripMargin
-    },
-    // F70 over the RICH corpus: q_source_similarity's body on
-    // richdocs — the planted quote-pool overlap gives the graded
-    // cross-source spectrum the audit exists to measure.
-    "q_source_similarity_rich" -> {
-      import graft.functions.PortableText._
-      s"""WITH ${RichCorpus.duckDocsCtes},
-        |sg AS (SELECT DISTINCT source, gram FROM (
-        |    SELECT source,
-        |      unnest(list_transform(range(1, length(tk) - 1),
-        |        i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i+1 AS INT)]
-        |          || ' ' || tk[CAST(i+2 AS INT)])) AS gram
-        |    FROM (SELECT source, $duckTokens AS tk
-        |      FROM richdocs) t) x),
-        |sh AS (SELECT source, ${duckPolyHash("gram")} AS h FROM sg),
-        |sz AS (SELECT source, count(*) AS n_grams FROM sh
-        |  GROUP BY source),
-        |sig AS (SELECT source, j,
-        |    min(((2*j + 3) * h + 5*j + 7) % $P) AS mh
-        |  FROM sh, (SELECT unnest(range($srcSimK)) AS j) js
-        |  GROUP BY source, j),
-        |est AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    CAST(sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_match
-        |  FROM sig a JOIN sig b ON a.j = b.j AND a.source < b.source
-        |  GROUP BY a.source, b.source),
-        |iv AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    count(*) AS n_inter
-        |  FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-        |  GROUP BY a.source, b.source)
-        |SELECT e.source_a, e.source_b, sa.n_grams AS n_gram_a,
-        |  sb.n_grams AS n_gram_b, coalesce(iv.n_inter, 0) AS n_inter,
-        |  e.n_match,
-        |  CAST(e.n_match AS DOUBLE) / CAST($srcSimK AS DOUBLE)
-        |    AS est_jaccard,
-        |  CAST(coalesce(iv.n_inter, 0) AS DOUBLE) /
-        |    CAST(sa.n_grams + sb.n_grams - coalesce(iv.n_inter, 0)
-        |      AS DOUBLE) AS exact_jaccard,
-        |  CAST(e.n_match AS DOUBLE) / CAST($srcSimK AS DOUBLE) -
-        |    CAST(coalesce(iv.n_inter, 0) AS DOUBLE) /
-        |      CAST(sa.n_grams + sb.n_grams - coalesce(iv.n_inter, 0)
-        |        AS DOUBLE) AS err
-        |FROM est e LEFT JOIN iv USING (source_a, source_b)
-        |JOIN sz sa ON sa.source = e.source_a
-        |JOIN sz sb ON sb.source = e.source_b
-        |ORDER BY source_a, source_b""".stripMargin
-    },
-    // F2e — planted-dup LSH calibration: the richdup CTE chain
-    // (controlled keep/(16-keep) Jaccard), token-hash sets + the
-    // standard band spelling, caught = any shared (band, band_hash),
-    // exact overlap via the hash-keyed pair join; counts exact int64,
-    // catch_bp integer bps, mean Jaccard round(4).
-    "q_dedup_spectrum" -> {
-      import graft.functions.PortableText._
-      s"""WITH ${RichCorpus.duckDupCtes},
-        |t AS (SELECT doc_id, $duckTokenHashes AS th FROM richdup),
-        |tok AS (SELECT DISTINCT doc_id, unnest(th) AS h FROM t),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |caught AS (SELECT DISTINCT p.doc_a, p.doc_b
-        |  FROM richdup_pairs p
-        |  JOIN bands a ON a.doc_id = p.doc_a
-        |  JOIN bands b ON b.doc_id = p.doc_b AND b.band = a.band
-        |    AND b.band_hash = a.band_hash),
-        |sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-        |iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter
-        |  FROM richdup_pairs p
-        |  JOIN tok a ON a.doc_id = p.doc_a
-        |  JOIN tok b ON b.doc_id = p.doc_b AND b.h = a.h
-        |  GROUP BY p.doc_a, p.doc_b),
-        |j AS (SELECT p.keep,
-        |    CASE WHEN c.doc_a IS NOT NULL THEN 1 ELSE 0 END AS caught,
-        |    CAST(coalesce(iv.n_inter, 0) AS DOUBLE)
-        |      / CAST(sa.n + sb.n - coalesce(iv.n_inter, 0) AS DOUBLE)
-        |      AS jac
-        |  FROM richdup_pairs p
-        |  LEFT JOIN caught c ON c.doc_a = p.doc_a AND c.doc_b = p.doc_b
-        |  LEFT JOIN iv ON iv.doc_a = p.doc_a AND iv.doc_b = p.doc_b
-        |  JOIN sz sa ON sa.doc_id = p.doc_a
-        |  JOIN sz sb ON sb.doc_id = p.doc_b)
-        |SELECT keep, count(*) AS n_planted,
-        |  CAST(sum(caught) AS BIGINT) AS n_caught,
-        |  (CAST(sum(caught) AS BIGINT) * 10000) // count(*) AS catch_bp,
-        |  round(avg(jac), 4) AS mean_exact_j
-        |FROM j GROUP BY keep ORDER BY keep""".stripMargin
-    },
-    // G7b — the streaming dup-spectrum: the tape is fed in doc_id
-    // order and the keyed bucket state sorts within batch by doc_id,
-    // so the admission verdict equals the batch min-over-bucket rule
-    // (the q_stream_near_dup equivalence) — replayed here over the
-    // richdup corpus and bucketed by the planted keep level.
-    "q_stream_dup_spectrum" -> {
-      import graft.functions.PortableText._
-      s"""WITH ${RichCorpus.duckDupCtes},
-        |t AS (SELECT doc_id, $duckTokenHashes AS th FROM richdup),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |v AS (SELECT doc_id,
-        |    min(doc_id) OVER (PARTITION BY band, band_hash) < doc_id
-        |      AS dup_band
-        |  FROM bands WHERE band_hash IS NOT NULL),
-        |fl AS (SELECT doc_id, bool_or(dup_band) AS is_dup
-        |  FROM v GROUP BY doc_id)
-        |SELECT p.keep, count(*) AS n_planted,
-        |  CAST(sum(CASE WHEN coalesce(f.is_dup, false) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_flagged,
-        |  (CAST(sum(CASE WHEN coalesce(f.is_dup, false) THEN 1 ELSE 0 END)
-        |    AS BIGINT) * 10000) // count(*) AS flag_bp
-        |FROM richdup_pairs p
-        |LEFT JOIN fl f ON f.doc_id = p.doc_b
-        |GROUP BY p.keep ORDER BY p.keep""".stripMargin
-    },
-    // F82 over the PLANTED-label embeddings: q_label_fisher's body on
-    // the richemb CTE (+0.375 on dimension i for label i mod 10) —
-    // Fisher lands ≈0.8 on every dim, the >0.5 separable verdict.
-    "q_label_fisher_rich" ->
-      s"""WITH ${RichCorpus.duckEmbCte},
-        |e AS (SELECT label, r.r AS pos,
-        |    CAST(round(CAST(embedding[CAST(r.r + 1 AS INT)] AS DOUBLE)
-        |      * 1000000.0, 0) AS BIGINT) AS vq
-        |  FROM richemb, (SELECT unnest(range(64)) AS r) r),
-        |pl AS (SELECT label, pos, count(*) AS n_c,
-        |    CAST(sum(vq) AS BIGINT) AS s_c,
-        |    CAST(sum(vq * vq) AS BIGINT) AS sq_c
-        |  FROM e GROUP BY label, pos),
-        |pl2 AS (SELECT *, CAST(round(CAST(s_c AS DOUBLE)
-        |    * CAST(s_c AS DOUBLE) / n_c, 0) AS BIGINT) AS t_c
-        |  FROM pl),
-        |pp AS (SELECT pos, CAST(sum(n_c) AS BIGINT) AS n,
-        |    CAST(sum(s_c) AS BIGINT) AS s,
-        |    CAST(sum(sq_c) AS BIGINT) AS sq,
-        |    CAST(sum(t_c) AS BIGINT) AS t_within
-        |  FROM pl2 GROUP BY pos),
-        |v AS (SELECT pos, n,
-        |    CAST(sq - CAST(round(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |      / n, 0) AS BIGINT) AS DOUBLE) / n AS _vt,
-        |    CAST(sq - t_within AS DOUBLE) / n AS _vw
-        |  FROM pp)
-        |SELECT pos, n,
-        |  round(_vt / 1e12, 4) AS var_total,
-        |  round(_vw / 1e12, 4) AS var_within,
-        |  round(CASE WHEN _vw > 0 THEN (_vt - _vw) / _vw END, 4)
-        |    AS fisher
-        |FROM v ORDER BY pos""".stripMargin,
-    // The regex constants interpolate from Curation so the Spark plan
-    // and the oracle can never drift; DuckDB single-quoted literals do
-    // not escape-process, so the backslashes arrive verbatim (RE2 and
-    // Java regex agree on this restricted syntax). Counts are on the
-    // ORIGINAL text; replacement order email -> ip -> phone.
-    "q_pii_scrub" -> {
-      val (em, ip, ph) = (Curation.EmailRe, Curation.IpRe, Curation.PhoneRe)
-      s"""WITH t AS (SELECT doc_id, $duckContactText AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  length(regexp_extract_all(text, '$em')) AS n_emails,
-        |  length(regexp_extract_all(text, '$ip')) AS n_ips,
-        |  length(regexp_extract_all(text, '$ph')) AS n_phones,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '$em', '<EMAIL>', 'g'),
-        |    '$ip', '<IP>', 'g'),
-        |    '$ph', '<PHONE>', 'g') AS clean_text
-        |FROM t ORDER BY doc_id""".stripMargin
-    },
-    // Quantized Lloyd (k=8, 2 assignment rounds, 1/32 grid): the
-    // fixed-point snap makes the update's per-dim sums exact integers
-    // (order-free), and every dot/score is the same left-to-right
-    // list_reduce the ANN oracles replay against graft_vecdot.
-    // Centroid cid == init vec_id; ties to the lower cid, matching
-    // array_position-of-array_min; a cluster with no members keeps
-    // its previous centroid (the coalesce). CTEs shared with
-    // q_cluster_cap via duckKmeansCtes.
-    "q_kmeans" ->
-      s"""$duckKmeansCtes
-        |SELECT a2.vec_id, a2.cluster, round(a2.score + qq.qq, 4) AS dist_sq
-        |FROM a2 JOIN qq USING (vec_id) ORDER BY vec_id""".stripMargin,
-    // Same assignment; per-row dist spelling as q_kmeans, re-rounded
-    // aggregates per SURVEY §6.
-    "q_cluster_audit" ->
-      s"""$duckKmeansCtes,
-        |dd AS (SELECT a2.vec_id, a2.cluster,
-        |    round(a2.score + qq.qq, 4) AS dist
-        |  FROM a2 JOIN qq USING (vec_id))
-        |SELECT cluster, count(*) AS n_vectors, min(vec_id) AS rep_vec,
-        |  round(sum(dist), 4) AS sse, round(avg(dist), 4) AS mean_dist,
-        |  round(max(dist), 4) AS max_dist
-        |FROM dd GROUP BY cluster ORDER BY cluster""".stripMargin,
-    // Same assignment, then the capPerSource window keyed on the
-    // learned cluster — identical duckHashOrder ranking spelling.
-    "q_cluster_cap" ->
-      s"""$duckKmeansCtes
-        |SELECT vec_id, cluster, rnk FROM (
-        |  SELECT vec_id, cluster,
-        |    row_number() OVER (PARTITION BY cluster
-        |      ORDER BY ${graft.functions.PortableText.duckHashOrder("vec_id")},
-        |        vec_id) AS rnk
-        |  FROM a2) x
-        |WHERE rnk <= 30 ORDER BY vec_id""".stripMargin,
-    // F82 — Fisher audit: same 1e-6 quantize grid, exact (label, dim)
-    // sums, per-row-rounded s²/n terms subtracted from exact ints
-    // (the F12b rule), one division per variance, round(4).
-    "q_label_fisher" ->
-      """WITH e AS (SELECT label, r.r AS pos,
-        |    CAST(round(CAST(embedding[CAST(r.r + 1 AS INT)] AS DOUBLE)
-        |      * 1000000.0, 0) AS BIGINT) AS vq
-        |  FROM embeddings, (SELECT unnest(range(64)) AS r) r),
-        |pl AS (SELECT label, pos, count(*) AS n_c,
-        |    CAST(sum(vq) AS BIGINT) AS s_c,
-        |    CAST(sum(vq * vq) AS BIGINT) AS sq_c
-        |  FROM e GROUP BY label, pos),
-        |pl2 AS (SELECT *, CAST(round(CAST(s_c AS DOUBLE)
-        |    * CAST(s_c AS DOUBLE) / n_c, 0) AS BIGINT) AS t_c
-        |  FROM pl),
-        |pp AS (SELECT pos, CAST(sum(n_c) AS BIGINT) AS n,
-        |    CAST(sum(s_c) AS BIGINT) AS s,
-        |    CAST(sum(sq_c) AS BIGINT) AS sq,
-        |    CAST(sum(t_c) AS BIGINT) AS t_within
-        |  FROM pl2 GROUP BY pos),
-        |v AS (SELECT pos, n,
-        |    CAST(sq - CAST(round(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |      / n, 0) AS BIGINT) AS DOUBLE) / n AS _vt,
-        |    CAST(sq - t_within AS DOUBLE) / n AS _vw
-        |  FROM pp)
-        |SELECT pos, n,
-        |  round(_vt / 1e12, 4) AS var_total,
-        |  round(_vw / 1e12, 4) AS var_within,
-        |  round(CASE WHEN _vw > 0 THEN (_vt - _vw) / _vw END, 4)
-        |    AS fisher
-        |FROM v ORDER BY pos""".stripMargin,
-    // F72 — SemDeDup: the kmeans assignment CTEs give the blocks;
-    // cosines re-run q_dedup_cosine's raw-float left-fold spelling
-    // inside each cluster; verdict tests the RAW order-free max,
-    // n_dups is a BIGINT count (not a HUGEINT sum), round(4) display.
-    "q_semantic_dedup" -> {
-      def dot(a: String, b: String): String =
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range(64), i -> $a[CAST(i+1 AS INT)] * " +
-          s"$b[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-      s"""$duckKmeansCtes,
-        |en AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-        |  FROM embeddings),
-        |nn AS (SELECT vec_id, ev, sqrt(${dot("ev", "ev")}) AS nrm
-        |  FROM en),
-        |mm AS (SELECT a2.vec_id, a2.cluster, nn.ev, nn.nrm
-        |  FROM a2 JOIN nn USING (vec_id)),
-        |pp AS (SELECT hi.vec_id,
-        |    ${dot("hi.ev", "lo.ev")} / nullif(hi.nrm * lo.nrm, 0) AS cs
-        |  FROM mm hi JOIN mm lo ON hi.cluster = lo.cluster
-        |    AND lo.vec_id < hi.vec_id),
-        |ag AS (SELECT vec_id, max(cs) AS mx,
-        |    count(CASE WHEN cs >= $semDedupTau THEN 1 END) AS n_dups
-        |  FROM pp GROUP BY vec_id)
-        |SELECT m.vec_id, m.cluster,
-        |  coalesce(ag.n_dups, 0) AS n_dups,
-        |  round(ag.mx, 4) AS max_sim,
-        |  coalesce(ag.mx >= $semDedupTau, false) AS dropped
-        |FROM mm m LEFT JOIN ag USING (vec_id)
-        |ORDER BY vec_id""".stripMargin
-    },
-    // Same IEEE op sequence as Vectors.quantizeInt8: ((x-mn)/(mx-mn))
-    // *255+0.5 floored, dequant mn + q/255*(mx-mn), error fold
-    // left-to-right; a constant dimension (mx == mn) codes to 0.
-    "q_embed_quant" ->
-      """WITH dm AS (SELECT unnest(range(64)) AS d, embedding
-        |  FROM embeddings),
-        |mm AS (SELECT d,
-        |    min(CAST(embedding[CAST(d + 1 AS INT)] AS DOUBLE)) AS mn,
-        |    max(CAST(embedding[CAST(d + 1 AS INT)] AS DOUBLE)) AS mx
-        |  FROM dm GROUP BY d),
-        |st AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs
-        |  FROM mm),
-        |e AS (SELECT vec_id, embedding, mns, mxs
-        |  FROM embeddings CROSS JOIN st),
-        |qz AS (SELECT vec_id, embedding, mns, mxs,
-        |    list_transform(range(64), i ->
-        |      CASE WHEN mxs[CAST(i+1 AS INT)] > mns[CAST(i+1 AS INT)]
-        |        THEN CAST(floor((CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE)
-        |          - mns[CAST(i+1 AS INT)])
-        |          / (mxs[CAST(i+1 AS INT)] - mns[CAST(i+1 AS INT)])
-        |          * 255 + 0.5) AS INT)
-        |        ELSE 0 END) AS qarr
-        |  FROM e),
-        |er AS (SELECT vec_id, qarr,
-        |    list_transform(range(64), i ->
-        |      abs(CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE)
-        |        - (mns[CAST(i+1 AS INT)]
-        |           + CAST(qarr[CAST(i+1 AS INT)] AS DOUBLE) / 255.0
-        |             * (mxs[CAST(i+1 AS INT)] - mns[CAST(i+1 AS INT)]))))
-        |      AS errs
-        |  FROM qz)
-        |SELECT vec_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(qarr, x -> CAST(x AS BIGINT))), (a, b) -> a + b)
-        |    AS qsum,
-        |  round(list_max(errs), 6) AS max_err,
-        |  round(list_reduce(list_prepend(CAST(0 AS DOUBLE), errs),
-        |    (a, b) -> a + b) / 64, 6) AS mean_err
-        |FROM er ORDER BY vec_id""".stripMargin,
-    // PQ replay: same c·c − 2·sub·c argmin per subspace (ties to the
-    // lower code via row_number), ADC terms q·q + c·c − 2·q·c summed
-    // in subspace order via an ordered-list fold (matching Spark's
-    // reduceLeft), exact distance via the same decomposition on the
-    // full 64 dims.
-    "q_pq_codes" -> {
-      def dot(n: Int)(a: String, b: String): String =
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range($n), i -> $a[CAST(i+1 AS INT)] * " +
-          s"$b[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-      val d8 = dot(8) _; val d64 = dot(64) _
-      s"""WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |ss AS (SELECT unnest(range(8)) AS s),
-        |sub AS (SELECT e.vec_id, ss.s,
-        |    v[CAST(s*8+1 AS INT):CAST(s*8+8 AS INT)] AS sv FROM e, ss),
-        |cb AS (SELECT s, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 16),
-        |qv AS (SELECT s, sv AS qs FROM sub WHERE vec_id = 0),
-        |sc AS (SELECT sub.vec_id, sub.s, cb.j,
-        |    ${d8("cv", "cv")} - 2 * ${d8("sv", "cv")} AS score
-        |  FROM sub JOIN cb ON cb.s = sub.s),
-        |code AS (SELECT vec_id, s, j AS code
-        |  FROM (SELECT vec_id, s, j,
-        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY score, j)
-        |      AS rn FROM sc) x WHERE rn = 1),
-        |term AS (SELECT code.vec_id, code.s,
-        |    ${d8("qs", "qs")} + ${d8("cv", "cv")} - 2 * ${d8("qs", "cv")}
-        |      AS term
-        |  FROM code JOIN cb ON cb.s = code.s AND cb.j = code.code
-        |  JOIN qv ON qv.s = code.s),
-        |adc AS (SELECT vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list(term ORDER BY s)), (a, b) -> a + b) AS adc_dist
-        |  FROM term GROUP BY vec_id),
-        |codes AS (SELECT vec_id,
-        |    string_agg(CAST(code AS VARCHAR), ',' ORDER BY s) AS code_str
-        |  FROM code GROUP BY vec_id),
-        |qf AS (SELECT v AS q64 FROM e WHERE vec_id = 0),
-        |ex AS (SELECT e.vec_id,
-        |    ${d64("v", "v")} + ${d64("q64", "q64")} - 2 * ${d64("v", "q64")}
-        |      AS exact_dist
-        |  FROM e CROSS JOIN qf)
-        |SELECT codes.vec_id, codes.code_str,
-        |  round(adc.adc_dist, 4) AS adc_dist,
-        |  round(ex.exact_dist, 4) AS exact_dist
-        |FROM codes JOIN adc USING (vec_id) JOIN ex USING (vec_id)
-        |ORDER BY vec_id""".stripMargin
-    },
-    // F39 — IVF-PQ replay: q_ann_ivf's cell CTEs + q_pq_codes' code
-    // CTEs, ADC terms per (query, candidate) summed in subspace order
-    // (matching Spark's reduceLeft over the driver-built tables),
-    // rank on the RAW double, round(4) display only.
-    "q_ivfpq_search" -> {
-      def dot(n: Int)(a: String, b: String): String =
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range($n), i -> $a[CAST(i+1 AS INT)] * " +
-          s"$b[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-      val d8 = dot(8) _; val d64 = dot(64) _
-      s"""WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cid, ${d64("v", "cv")} AS dt FROM e, c),
-        |cell AS (SELECT vec_id, cid AS cell FROM
-        |  (SELECT vec_id, cid,
-        |     row_number() OVER (PARTITION BY vec_id ORDER BY dt DESC, cid) AS rn
-        |   FROM d) x WHERE rn = 1),
-        |ss AS (SELECT unnest(range(8)) AS s),
-        |sub AS (SELECT e.vec_id, ss.s,
-        |    v[CAST(s*8+1 AS INT):CAST(s*8+8 AS INT)] AS sv FROM e, ss),
-        |cb AS (SELECT s, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 16),
-        |sc AS (SELECT sub.vec_id, sub.s, cb.j,
-        |    ${d8("cv", "cv")} - 2 * ${d8("sv", "cv")} AS score
-        |  FROM sub JOIN cb ON cb.s = sub.s),
-        |code AS (SELECT vec_id, s, j AS code
-        |  FROM (SELECT vec_id, s, j,
-        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY score, j)
-        |      AS rn FROM sc) x WHERE rn = 1),
-        |qsub AS (SELECT vec_id AS query_id, s, sv AS qs
-        |  FROM sub WHERE vec_id < 10),
-        |term AS (SELECT qsub.query_id, code.vec_id, code.s,
-        |    ${d8("qs", "qs")} + ${d8("cv", "cv")} - 2 * ${d8("qs", "cv")}
-        |      AS term
-        |  FROM code JOIN cb ON cb.s = code.s AND cb.j = code.code
-        |  JOIN qsub ON qsub.s = code.s),
-        |adc AS (SELECT query_id, vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list(term ORDER BY s)), (a, b) -> a + b) AS adc_raw
-        |  FROM term GROUP BY query_id, vec_id),
-        |qc AS (SELECT vec_id AS query_id, cell FROM cell
-        |  WHERE vec_id < 10),
-        |cand AS (SELECT adc.query_id, qc.cell, adc.neighbor_id,
-        |    adc.adc_raw
-        |  FROM adc JOIN qc USING (query_id)
-        |  JOIN cell nb ON nb.vec_id = adc.neighbor_id
-        |    AND nb.cell = qc.cell
-        |  WHERE adc.neighbor_id <> adc.query_id),
-        |r AS (SELECT query_id, cell, neighbor_id, adc_raw,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adc_raw, neighbor_id) AS rnk
-        |  FROM cand)
-        |SELECT query_id, cell, neighbor_id, rnk,
-        |  round(adc_raw, 4) AS adc_dist
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
-    },
-    // F39b — the fully TRAINED IVF-PQ recall audit: the coarse side
-    // is duckKmeansCtes' trained cells (a2 home cells, s2 probe
-    // scores — q_kmeans's exact spelling, probed rn <= 2 as in
-    // q_ann_ivf_trained); the codebook side replays the SAME
-    // quantized-Lloyd round per (subspace, code) over the grid
-    // SLICES (ps1/pa1/pdims/pu/pu2/pcb1 mirror s1/a1/dims/u/u2/c1
-    // at dim 8, k 16); code assignment + ADC are q_ivfpq_search's
-    // chain against the TRAINED codebook; the exact baseline is
-    // squared-L2 (the metric PQ approximates); folds are F58's.
-    "q_ivfpq_trained" -> {
-      def dot(n: Int)(a: String, b: String): String =
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range($n), i -> $a[CAST(i+1 AS INT)] * " +
-          s"$b[CAST(i+1 AS INT)])), (x, y) -> x + y)"
-      val d8 = dot(8) _; val d64 = dot(64) _
-      s"""$duckKmeansCtes,
-        |pss AS (SELECT unnest(range(8)) AS s),
-        |psub AS (SELECT qd.vec_id, pss.s,
-        |    qd.qv[CAST(s*8+1 AS INT):CAST(s*8+8 AS INT)] AS sq,
-        |    qd.v[CAST(s*8+1 AS INT):CAST(s*8+8 AS INT)] AS sv
-        |  FROM qd, pss),
-        |pcb0 AS (SELECT s, vec_id AS j, sv AS cv FROM psub
-        |  WHERE vec_id < 16),
-        |ps1 AS (SELECT psub.vec_id, psub.s, pcb0.j,
-        |    ${d8("cv", "cv")} - 2 * ${d8("sv", "cv")} AS score
-        |  FROM psub JOIN pcb0 ON pcb0.s = psub.s),
-        |pa1 AS (SELECT vec_id, s, j AS code FROM (SELECT vec_id, s, j,
-        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY score, j)
-        |      AS rn FROM ps1) x WHERE rn = 1),
-        |pdims AS (SELECT pa1.s, pa1.code, unnest(range(8)) AS d, psub.sq
-        |  FROM psub JOIN pa1 ON pa1.vec_id = psub.vec_id
-        |    AND pa1.s = psub.s),
-        |pu AS (SELECT s, code, d, sum(sq[CAST(d + 1 AS INT)]) AS sm,
-        |    count(*) AS cnt
-        |  FROM pdims GROUP BY s, code, d),
-        |pu2 AS (SELECT s, code,
-        |    list(CAST(CAST(CAST(sm AS DOUBLE) / cnt AS FLOAT) AS DOUBLE)
-        |      ORDER BY d) AS cv
-        |  FROM pu GROUP BY s, code),
-        |pcb1 AS (SELECT pcb0.s, pcb0.j, coalesce(pu2.cv, pcb0.cv) AS cv
-        |  FROM pcb0 LEFT JOIN pu2 ON pu2.s = pcb0.s AND pu2.code = pcb0.j),
-        |pcbf AS (SELECT s, j, list_transform(cv, c -> c / 32.0) AS cv
-        |  FROM pcb1),
-        |pe AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |pesub AS (SELECT pe.vec_id, pss.s,
-        |    v[CAST(s*8+1 AS INT):CAST(s*8+8 AS INT)] AS sv
-        |  FROM pe, pss),
-        |ps2 AS (SELECT pesub.vec_id, pesub.s, pcbf.j,
-        |    ${d8("cv", "cv")} - 2 * ${d8("sv", "cv")} AS score
-        |  FROM pesub JOIN pcbf ON pcbf.s = pesub.s),
-        |pcode AS (SELECT vec_id, s, j AS code FROM (SELECT vec_id, s, j,
-        |    row_number() OVER (PARTITION BY vec_id, s ORDER BY score, j)
-        |      AS rn FROM ps2) x WHERE rn = 1),
-        |pterm AS (SELECT qs.vec_id AS query_id, pcode.vec_id, pcode.s,
-        |    ${d8("qs.sv", "qs.sv")} + ${d8("cv", "cv")} - 2 * ${d8("qs.sv", "cv")}
-        |      AS term
-        |  FROM pcode JOIN pcbf ON pcbf.s = pcode.s AND pcbf.j = pcode.code
-        |  JOIN pesub qs ON qs.s = pcode.s AND qs.vec_id < 10),
-        |padc AS (SELECT query_id, vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list(term ORDER BY s)), (a, b) -> a + b) AS adc_raw
-        |  FROM pterm GROUP BY query_id, vec_id),
-        |pqp AS (SELECT vec_id AS query_id, cid AS cell FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY score, cid)
-        |        AS rn FROM s2 WHERE vec_id < 10) x WHERE rn <= 2),
-        |pcand AS (SELECT padc.query_id, padc.neighbor_id, padc.adc_raw
-        |  FROM padc JOIN pqp USING (query_id)
-        |  JOIN a2 nb ON nb.vec_id = padc.neighbor_id
-        |    AND nb.cluster = pqp.cell
-        |  WHERE padc.neighbor_id <> padc.query_id),
-        |pit AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |        ORDER BY adc_raw, neighbor_id) AS rnk
-        |    FROM pcand) x WHERE rnk <= 5),
-        |pbp AS (SELECT qr.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    ${d64("qr.v", "qr.v")} + ${d64("c.v", "c.v")} - 2 * ${d64("qr.v", "c.v")}
-        |      AS l2
-        |  FROM pe qr JOIN pe c ON c.vec_id <> qr.vec_id
-        |  WHERE qr.vec_id < 10),
-        |pbt AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |        ORDER BY l2, neighbor_id) AS rnk FROM pbp) x
-        |  WHERE rnk <= 5),
-        |pne AS (SELECT query_id, count(*) AS n_exact FROM pbt GROUP BY 1),
-        |pna AS (SELECT query_id, count(*) AS n_approx FROM pit GROUP BY 1),
-        |pov AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM pbt b JOIN pit i ON i.query_id = b.query_id
-        |    AND i.neighbor_id = b.neighbor_id GROUP BY 1)
-        |SELECT pne.query_id, pne.n_exact,
-        |  coalesce(pna.n_approx, 0) AS n_approx,
-        |  coalesce(pov.n_overlap, 0) AS n_overlap,
-        |  CAST(coalesce(pov.n_overlap, 0) AS DOUBLE) / 5 AS recall
-        |FROM pne LEFT JOIN pna USING (query_id) LEFT JOIN pov USING (query_id)
-        |ORDER BY query_id""".stripMargin
-    },
-    // The composed curation plan replayed stage by stage: the line
-    // dedup CTEs are q_line_dedup's over the contact-injected text,
-    // the scrub is q_pii_scrub's replace chain, the quality rules are
-    // q_quality_filter's with (minTokens=5, stop rule < 0.0 — never
-    // fires, spelled identically to Spark's), and the dup/split
-    // predicates are q_corpus_select's verbatim.
-    "q_corpus_curate" -> {
-      import graft.functions.PortableText._
-      val (em, ip, ph) = (Curation.EmailRe, Curation.IpRe, Curation.PhoneRe)
-      s"""WITH raw AS (SELECT doc_id, $duckContactText AS text
-        |  FROM documents),
-        |p AS (SELECT doc_id, string_split(text, ' ') AS parts FROM raw),
-        |l0 AS (SELECT doc_id, unnest(range(1, length(parts) + 1)) AS pos,
-        |    parts FROM p),
-        |l AS (SELECT doc_id, pos, parts[CAST(pos AS INT)] AS line FROM l0
-        |  WHERE parts[CAST(pos AS INT)] <> ''),
-        |nd AS (SELECT count(*) AS n_docs FROM documents),
-        |ldf AS (SELECT line, count(DISTINCT doc_id) AS df FROM l GROUP BY line),
-        |cl AS (SELECT l.doc_id,
-        |    coalesce(string_agg(CASE WHEN ldf.df * 100 <= nd.n_docs * 80
-        |      THEN l.line END, ' ' ORDER BY l.pos), '') AS text
-        |  FROM l JOIN ldf USING (line) CROSS JOIN nd GROUP BY l.doc_id),
-        |sc AS (SELECT doc_id,
-        |    regexp_replace(regexp_replace(regexp_replace(text,
-        |      '$em', '<EMAIL>', 'g'),
-        |      '$ip', '<IP>', 'g'),
-        |      '$ph', '<PHONE>', 'g') AS text
-        |  FROM cl),
-        |tk AS (SELECT doc_id, text, $duckTokens AS tk FROM sc),
-        |qf AS (SELECT doc_id, text, length(tk) AS n_tokens,
-        |    (CASE WHEN length(tk) < 5 THEN 'short'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              1.0 - CAST(length(list_distinct(tk)) AS DOUBLE)
-        |                / length(tk) END > 0.65 THEN 'repetitive'
-        |          WHEN CASE WHEN length(tk) > 0 THEN
-        |              CAST(length(list_filter(tk, t -> list_contains(
-        |                ['the','a','of','and','to'], t))) AS DOUBLE)
-        |                / length(tk) END < 0.0 THEN 'low_stop'
-        |     END) IS NULL AS keep
-        |  FROM tk),
-        |th AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM th),
-        |bands AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31 + mh[CAST(2*band + 2 AS INT)]) % $P
-        |      AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) b),
-        |bf AS (SELECT band, band_hash, min(doc_id) AS first_doc
-        |       FROM bands WHERE band_hash IS NOT NULL
-        |       GROUP BY band, band_hash),
-        |dup AS (SELECT bands.doc_id,
-        |         bool_or(first_doc < bands.doc_id) AS is_dup
-        |       FROM bands JOIN bf USING (band, band_hash)
-        |       GROUP BY bands.doc_id)
-        |SELECT d.doc_id, d.source, qf.n_tokens, qf.text AS clean_text
-        |FROM documents d
-        |JOIN qf ON qf.doc_id = d.doc_id
-        |LEFT JOIN dup ON dup.doc_id = d.doc_id
-        |WHERE qf.keep AND NOT coalesce(dup.is_dup, false)
-        |  AND ${duckHashOrder("d.doc_id")} % 100 < 80
-        |ORDER BY d.doc_id""".stripMargin
-    },
-    "q_source_cap" ->
-      s"""SELECT doc_id, lang, source, rnk FROM (
-        |  SELECT doc_id, lang, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY ${graft.functions.PortableText.duckHashOrder("doc_id")}, doc_id) AS rnk
-        |  FROM documents) x
-        |WHERE rnk <= 10 ORDER BY doc_id""".stripMargin,
-    "q_decontaminate" -> {
-      import graft.functions.PortableText._
-      s"""WITH g AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, length(tk) - 3),
-        |    i -> array_to_string(tk[i:i+4], ' '))) AS gram
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x),
-        |tr AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 <> 0),
-        |te AS (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 50 = 0),
-        |ov AS (SELECT te.doc_id, count(*) AS n_overlap
-        |       FROM te JOIN tr USING (gram) GROUP BY te.doc_id)
-        |SELECT d.doc_id, coalesce(ov.n_overlap, 0) AS n_overlap,
-        |  coalesce(ov.n_overlap, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
-        |WHERE d.doc_id % 50 = 0 ORDER BY d.doc_id""".stripMargin
-    },
-    // F43 — overlap_frac one division of exact counts, unrounded.
-    "q_contamination_score" -> {
-      import graft.functions.PortableText._
-      s"""WITH g AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, length(tk) - 3),
-        |    i -> array_to_string(tk[i:i+4], ' '))) AS gram
-        |  FROM (SELECT doc_id, $duckTokens AS tk FROM documents) x),
-        |tr AS (SELECT DISTINCT gram, 1 AS hit FROM g
-        |       WHERE doc_id % 50 <> 0),
-        |te AS (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 50 = 0),
-        |per AS (SELECT te.doc_id, count(*) AS n_grams,
-        |         count(tr.hit) AS n_overlap
-        |       FROM te LEFT JOIN tr USING (gram) GROUP BY te.doc_id)
-        |SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
-        |  coalesce(per.n_overlap, 0) AS n_overlap,
-        |  CASE WHEN per.n_grams > 0 THEN
-        |    CAST(per.n_overlap AS DOUBLE) / per.n_grams END AS overlap_frac
-        |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-        |WHERE d.doc_id % 50 = 0 ORDER BY d.doc_id""".stripMargin
-    },
-    // F105 — the sweep oracle: one generated branch per gram width
-    // (the q_contamination_score CTE shape collapsed to a summary
-    // row; per-doc fractions ppm-quantized so the mean is an exact
-    // integer sum).
-    "q_decon_sweep" -> {
-      import graft.functions.PortableText._
-      val branches = deconSweepNs.map { n =>
-        s"""SELECT CAST($n AS BIGINT) AS n,
-          |  count(*) AS n_heldout,
-          |  count(CASE WHEN n_overlap > 0 THEN 1 END) AS n_flagged,
-          |  round(CAST(count(CASE WHEN n_overlap > 0 THEN 1 END)
-          |      AS DOUBLE)
-          |    / CAST(count(*) AS DOUBLE), 4) AS flag_share,
-          |  CASE WHEN count(CASE WHEN n_grams > 0 THEN 1 END) > 0 THEN
-          |    round(CAST(sum(CASE WHEN n_grams > 0 THEN
-          |        CAST(floor(CAST(n_overlap AS DOUBLE)
-          |          / CAST(n_grams AS DOUBLE) * 1000000.0 + 0.5)
-          |          AS BIGINT) END) AS DOUBLE)
-          |      / CAST(count(CASE WHEN n_grams > 0 THEN 1 END)
-          |          AS DOUBLE) / 1000000.0, 4)
-          |  END AS mean_frac
-          |FROM (
-          |  SELECT d.doc_id, coalesce(per.n_grams, 0) AS n_grams,
-          |    coalesce(per.n_overlap, 0) AS n_overlap
-          |  FROM documents d LEFT JOIN (
-          |    SELECT te.doc_id, count(*) AS n_grams,
-          |      count(tr.hit) AS n_overlap
-          |    FROM (SELECT DISTINCT doc_id, gram FROM g$n
-          |          WHERE doc_id % 50 = 0) te
-          |    LEFT JOIN (SELECT DISTINCT gram, 1 AS hit FROM g$n
-          |               WHERE doc_id % 50 <> 0) tr USING (gram)
-          |    GROUP BY te.doc_id) per ON d.doc_id = per.doc_id
-          |  WHERE d.doc_id % 50 = 0) h$n""".stripMargin
-      }
-      val gramCtes = deconSweepNs.map { n =>
-        s"""g$n AS (
-          |  SELECT doc_id, unnest(list_transform(
-          |    range(1, length(tk) - ${n - 2}),
-          |    i -> array_to_string(tk[i:i+${n - 1}], ' '))) AS gram
-          |  FROM tk0)""".stripMargin
-      }
-      s"""WITH tk0 AS (SELECT doc_id, $duckTokens AS tk
-        |  FROM documents),
-        |${gramCtes.mkString(",\n")}
-        |SELECT * FROM (${branches.mkString(" UNION ALL ")}) u
-        |ORDER BY n""".stripMargin
-    },
-    "q_json_extract" ->
-      """SELECT event_type,
-        |  count(CAST(props->>'$.k' AS INT)) AS n_with_key,
-        |  round(avg(CAST(props->>'$.k' AS INT)), 4) AS avg_k,
-        |  max(CAST(props->>'$.k' AS INT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_group_percentile" ->
-      s"""SELECT symbol, round(quantile_cont(ask - bid, 0.5), 4) AS p0,
-        |  round(quantile_cont(ask - bid, 0.9), 4) AS p1,
-        |  count(*) AS n
-        |FROM $ticksSql t GROUP BY symbol ORDER BY symbol""".stripMargin,
-
-    // ===== q_stream_* — batch twins of the streaming sinks. The
-    // tape is tick_id-ordered and tick_id is globally ts-monotone
-    // (verified per corpus), so the stream's (ts, tick_id)
-    // tie-breaks collapse to plain tick_id arg_min/arg_max here.
-    // G1 — the sink is the per-second session downsample itself.
-    "q_stream_downsample" ->
-      s"""SELECT symbol, date_trunc('second', ts) AS ts_s,
-        |  min(tick_id) AS tick_id, arg_min(bid, tick_id) AS bid,
-        |  count(*) AS n_ticks
-        |FROM $ticksSql t
-        |WHERE (hour(ts) = 7 OR hour(ts) = 13) AND minute(ts) >= 50
-        |GROUP BY 1, 2 ORDER BY symbol, ts_s""".stripMargin,
-    // G4 — per-(symbol, UTC day) counts + first/last bid.
-    "q_stream_window_counts" ->
-      s"""SELECT symbol, date_trunc('day', ts) AS win_start,
-        |  count(*) AS n_ticks, arg_min(bid, tick_id) AS first_bid,
-        |  arg_max(bid, tick_id) AS last_bid
-        |FROM $ticksSql t
-        |GROUP BY 1, 2 ORDER BY symbol, win_start""".stripMargin,
-    // G8 — hourly OHLC bars, batch tie-breaks.
-    "q_stream_ohlc" ->
-      s"""SELECT symbol, date_trunc('hour', ts) AS bucket_start,
-        |  arg_min(bid, tick_id) AS open, max(bid) AS high,
-        |  min(bid) AS low, arg_max(bid, tick_id) AS close,
-        |  count(*) AS n_ticks
-        |FROM $ticksSql t
-        |GROUP BY 1, 2 ORDER BY symbol, bucket_start""".stripMargin,
-    // G13 — daily VWAP, B8's exact-integer-cents spelling on the
-    // day-window timestamp key.
-    "q_stream_vwap" ->
-      """SELECT symbol, bucket_start,
-        |  CAST((_n * 200 + _d) // (_d * 2) AS DOUBLE) / 10000.0 AS vwap,
-        |  total_qty, n_trades FROM (
-        |  SELECT user_id AS symbol, date_trunc('day', ts) AS bucket_start,
-        |    CAST(sum(CAST(round(value * 100.0, 0) AS BIGINT)
-        |      * CAST(props->>'$.k' AS INT)) AS BIGINT) AS _n,
-        |    CAST(nullif(sum(CAST(props->>'$.k' AS INT)), 0) AS BIGINT)
-        |      AS _d,
-        |    CAST(sum(CAST(props->>'$.k' AS INT)) AS BIGINT) AS total_qty,
-        |    count(*) AS n_trades
-        |  FROM events GROUP BY 1, 2) x
-        |ORDER BY symbol, bucket_start""".stripMargin,
-    // G12 — per-tick tick-rule classes (lag over the symbol tape).
-    "q_stream_tick_classes" ->
-      s"""SELECT tick_id, symbol,
-        |  CASE WHEN prev IS NULL THEN 'first'
-        |       WHEN bid > prev THEN 'up'
-        |       WHEN bid < prev THEN 'down' ELSE 'zero' END AS cls
-        |FROM (SELECT tick_id, symbol, bid,
-        |    lag(bid) OVER (PARTITION BY symbol ORDER BY tick_id) AS prev
-        |  FROM $ticksSql t) x
-        |ORDER BY tick_id""".stripMargin,
-    // G35 — per-tick running peak + drawdown ratio (NULL on zero peak).
-    "q_stream_drawdown" ->
-      s"""SELECT tick_id, symbol, cummax,
-        |  CASE WHEN cummax != 0 THEN (cummax - bid) / cummax END
-        |    AS drawdown
-        |FROM (SELECT tick_id, symbol, bid,
-        |    max(bid) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS cummax
-        |  FROM $ticksSql t) x
-        |ORDER BY tick_id""".stripMargin,
-    // G3 — exact dedup: the doc_id-ordered feed makes the keeper the
-    // MIN doc_id of each md5 content class.
-    "q_stream_dedup_exact" ->
-      """SELECT doc_id, md5(text) AS content_hash,
-        |  doc_id != min(doc_id) OVER (PARTITION BY md5(text))
-        |    AS isDuplicate
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // G40 — every tape session window scored against the trained
-    // band: the D67 chain with the deployment's QUANTIZED int64
-    // centroid (sign-split round of su/n_tr — live registers ship
-    // as integers) and the p99 threshold over the SAME quantized
-    // errors' test split.
-    "q_stream_anomaly" ->
-      s"""WITH $quantWindowErrSql,
-        |thq AS (SELECT symbol, quantile_cont(u_err, $reconFlagPct)
-        |    AS qu
-        |  FROM er WHERE split = 'test' GROUP BY 1)
-        |SELECT e.symbol AS symbol, e.date AS date, e.win AS win,
-        |  e.n_ticks AS n_ticks,
-        |  CAST(u_err AS DOUBLE) / 1000000.0 AS err,
-        |  COALESCE(CAST(u_err AS DOUBLE) > t.qu, FALSE) AS is_anomaly
-        |FROM er e LEFT JOIN thq t USING (symbol)
-        |ORDER BY symbol, date, win""".stripMargin,
-    // G41 — the live position tracker: quantized-band entries/exits
-    // via D76's last_value IGNORE NULLS position machine, restricted
-    // to the go-live roster (date >= fromDate replaces the batch
-    // test-split roster), exact-cent step P&L per traded window.
-    "q_stream_positions" ->
-      s"""WITH $quantWindowErrSql,
-        |$testThresholdSql,
-        |${positionChainSql("JOIN th ON th.symbol = er.symbol",
-          ", th.qu", "symbol",
-          bbPred = s"er.date >= '$streamGoLive'")}
-        |SELECT symbol, date, win,
-        |  CAST(u_err AS DOUBLE) / 1000000.0 AS err,
-        |  pos, pos_prev,
-        |  CAST(CASE WHEN dc IS NOT NULL THEN pos_prev * dc
-        |    ELSE 0 END AS BIGINT) AS pnl_step_cents
-        |FROM pp ORDER BY symbol, date, win""".stripMargin,
-    // G42 — the retrain monitor: breach runs over the quantized
-    // errors at the deployment's p90 band, one alert per run at the
-    // Nth consecutive breach (D83's run-id idiom).
-    "q_stream_retrain" ->
-      s"""WITH $quantWindowErrSql,
-        |thr AS (SELECT symbol, quantile_cont(u_err, $retrainPct)
-        |    AS qu
-        |  FROM er WHERE split = 'test' GROUP BY 1),
-        |fb AS (SELECT er.symbol, er.date, er.win, er.u_err,
-        |    CASE WHEN t.qu IS NOT NULL
-        |      AND CAST(er.u_err AS DOUBLE) > t.qu
-        |      THEN 1 ELSE 0 END AS breach
-        |  FROM er LEFT JOIN thr t ON t.symbol = er.symbol),
-        |fs AS (SELECT *, CASE WHEN breach = 1
-        |      AND coalesce(lag(breach) OVER w, 0) = 0
-        |    THEN 1 ELSE 0 END AS start
-        |  FROM fb WINDOW w AS (PARTITION BY symbol ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END)),
-        |fr AS (SELECT *, CAST(sum(start) OVER (PARTITION BY symbol
-        |    ORDER BY date, CASE WHEN win = 'morning' THEN 0 ELSE 1 END
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS BIGINT) AS run_id
-        |  FROM fs),
-        |fx AS (SELECT *, row_number() OVER (
-        |    PARTITION BY symbol, run_id ORDER BY date,
-        |    CASE WHEN win = 'morning' THEN 0 ELSE 1 END) AS idx
-        |  FROM fr WHERE breach = 1)
-        |SELECT symbol, date, win,
-        |  CAST($retrainConsecutive AS BIGINT) AS streak,
-        |  CAST(u_err AS DOUBLE) / 1000000.0 AS err
-        |FROM fx WHERE idx = $retrainConsecutive
-        |ORDER BY symbol, date, win""".stripMargin,
-    // G5 — gaps-and-islands dual of session_window: a session breaks
-    // when the gap to the previous tick reaches the 5-minute gap
-    // (session end is exclusive at last + gap); bounds emitted as
-    // exact epoch-µs int64 (§6: no sub-second timestamp cells).
-    "q_stream_sessions" ->
-      s"""WITH t AS (SELECT symbol, ts, tick_id, bid FROM $ticksSql t),
-        |x AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w >= INTERVAL 5 MINUTE
-        |    THEN 1 ELSE 0 END AS brk
-        |  FROM t WINDOW w AS (PARTITION BY symbol ORDER BY ts, tick_id)),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY symbol
-        |    ORDER BY ts, tick_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM x)
-        |SELECT symbol, epoch_us(min(ts)) AS session_start_us,
-        |  epoch_us(max(ts) + INTERVAL 5 MINUTE) AS session_end_us,
-        |  count(*) AS n_ticks, arg_min(bid, tick_id) AS first_bid
-        |FROM g GROUP BY symbol, sid
-        |ORDER BY symbol, session_start_us""".stripMargin,
-    // G23 — the F47 cell derivation, cells only (4 rows × 1024).
-    "q_stream_cms" -> {
-      import graft.functions.PortableText._
-      s"""WITH occ AS (SELECT ${duckPolyHash("token")} AS h
-        |  FROM (SELECT unnest($duckTokens) AS token FROM documents) t)
-        |SELECT CAST(rc.j AS INT) AS rw,
-        |  ((2*rc.j+3)*occ.h + 5*rc.j+7) % $P % 1024 AS cell,
-        |  count(*) AS cnt
-        |FROM occ, (SELECT unnest(range(4)) AS j) rc
-        |GROUP BY 1, 2 ORDER BY rw, cell""".stripMargin
-    },
-    // G14 — the CDC register's final state per key: max-seq wins,
-    // n_changes counts every change seen.
-    "q_stream_cdc" ->
-      """SELECT user_id AS key, max(event_id) AS last_seq,
-        |  arg_max(CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END,
-        |    event_id) AS last_op,
-        |  arg_max(value, event_id) AS value,
-        |  count(*) AS n_changes
-        |FROM events GROUP BY 1 ORDER BY key""".stripMargin,
-    // G18 — the D30 bar ladder minus each symbol's trailing partial
-    // bar (Append emits closed bars only; the open bar is state).
-    "q_stream_volume_bars" ->
-      s"""SELECT * FROM (
-        |  SELECT symbol, bar_id,
-        |    CAST(sum(k) AS BIGINT) AS bar_qty,
-        |    count(*) AS n_ticks,
-        |    arg_min(cents, event_id) AS open_cents,
-        |    max(cents) AS high_cents,
-        |    min(cents) AS low_cents,
-        |    arg_max(cents, event_id) AS close_cents,
-        |    strftime(date_trunc('second', min(ts)), '%Y-%m-%d %H:%M:%S')
-        |      AS ts_first,
-        |    strftime(date_trunc('second', max(ts)), '%Y-%m-%d %H:%M:%S')
-        |      AS ts_last
-        |  FROM (
-        |    SELECT symbol, event_id, ts, cents, k,
-        |      CAST(greatest(sum(k) OVER (PARTITION BY symbol
-        |        ORDER BY event_id ROWS UNBOUNDED PRECEDING) - 1, 0)
-        |        // $barQtyParam AS BIGINT) AS bar_id
-        |    FROM (
-        |      SELECT user_id AS symbol, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |        CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |        coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |      FROM events) y) x
-        |  GROUP BY symbol, bar_id
-        |  QUALIFY bar_id < max(bar_id) OVER (PARTITION BY symbol)) z
-        |ORDER BY symbol, bar_id""".stripMargin,
-    // G43 — the D84 cascade's trained weights score every window of
-    // a trained symbol; flag at the test p99 of the SAME errors.
-    "q_stream_gd_scores" ->
-      (gdCascadeSql(tensorSlots, 2, 4, 0.0625, reconFlagPct,
-        withVal = false) +
-      s""",
-        |gwin AS (SELECT symbol, date, win, min(n_ticks) AS n_ticks
-        |  FROM uq GROUP BY 1, 2, 3)
-        |SELECT f.symbol AS symbol, f.date AS date, f.win AS win,
-        |  g.n_ticks AS n_ticks,
-        |  CAST(f.err_ppm AS DOUBLE) / 1000000.0 AS err,
-        |  COALESCE(CAST(f.err_ppm AS DOUBLE) > t.qu, FALSE)
-        |    AS is_anomaly
-        |FROM ferr f JOIN gwin g USING (symbol, date, win)
-        |LEFT JOIN fth t USING (symbol)
-        |ORDER BY symbol, date, win""".stripMargin),
-    // G20 — running TWAP: prefix sums of B13's exact-integer interval
-    // ladder (prev cents × µs gap), emitted once Σdur > 0; n_weighted
-    // counts every completed interval including zero-µs ones.
-    "q_stream_twap" ->
-      s"""WITH p AS (SELECT symbol, CAST(ts AS DATE) AS _date, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM $ticksSql t),
-        |i AS (SELECT symbol, _date, tick_id,
-        |    lag(cents) OVER w AS pc, us - lag(us) OVER w AS dur
-        |  FROM p WINDOW w AS (PARTITION BY symbol, _date
-        |    ORDER BY tick_id)),
-        |c AS (SELECT symbol, _date,
-        |    CAST(row_number() OVER (PARTITION BY symbol, _date
-        |      ORDER BY tick_id) AS BIGINT) AS n_weighted,
-        |    CAST(sum(pc * dur) OVER w2 AS BIGINT) AS s,
-        |    CAST(sum(dur) OVER w2 AS BIGINT) AS d
-        |  FROM i WHERE dur IS NOT NULL
-        |  WINDOW w2 AS (PARTITION BY symbol, _date ORDER BY tick_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT symbol, strftime(_date, '%Y-%m-%d') AS date, n_weighted,
-        |  CAST((s * 200 + d) // (d * 2) AS DOUBLE) / 10000.0 AS twap
-        |FROM c WHERE d > 0
-        |ORDER BY symbol, date, n_weighted""".stripMargin,
-    // G19 — the B12 frame minus each symbol's last tick (its verdict
-    // waits on a successor that never arrives on a bounded tape).
-    "q_stream_spikes" ->
-      s"""SELECT tick_id, symbol, cents, is_spike,
-        |  CASE WHEN is_spike THEN (prev + next + 1) // 2
-        |    ELSE cents END AS repaired_cents
-        |FROM (
-        |  SELECT tick_id, symbol, cents, prev, next,
-        |    prev IS NOT NULL AND next IS NOT NULL
-        |      AND abs(cents - prev) * 10000 > $spikeBp * prev
-        |      AND abs(cents - next) * 10000 > $spikeBp * next
-        |      AND (cents - prev) * (cents - next) > 0 AS is_spike
-        |  FROM (
-        |    SELECT tick_id, symbol,
-        |      CAST(round(bid * 100.0, 0) AS BIGINT) AS cents,
-        |      lag(CAST(round(bid * 100.0, 0) AS BIGINT), 1)
-        |        OVER w AS prev,
-        |      lead(CAST(round(bid * 100.0, 0) AS BIGINT), 1)
-        |        OVER w AS next
-        |    FROM $ticksSql t
-        |    WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)) x) y
-        |WHERE next IS NOT NULL
-        |ORDER BY tick_id""".stripMargin,
-    // G22 — D39's moment formulas over PREFIX power sums (the cent
-    // moves are integer-valued doubles, so the prefix sums are exact
-    // in both engines); rows emit once variance is positive.
-    "q_stream_moments" ->
-      s"""WITH x AS (SELECT symbol, tick_id, CAST(ts AS DATE) AS _date,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c
-        |  FROM $ticksSql t),
-        |dd AS (SELECT symbol, _date, tick_id,
-        |    CAST(c - lag(c) OVER (PARTITION BY symbol, _date
-        |      ORDER BY tick_id) AS DOUBLE) AS d
-        |  FROM x),
-        |r AS (SELECT symbol, _date,
-        |    CAST(row_number() OVER (PARTITION BY symbol, _date
-        |      ORDER BY tick_id) AS BIGINT) AS n_moves,
-        |    sum(d) OVER w2 AS s1, sum(d * d) OVER w2 AS s2,
-        |    sum(d * d * d) OVER w2 AS s3,
-        |    sum(d * d * d * d) OVER w2 AS s4
-        |  FROM dd WHERE d IS NOT NULL
-        |  WINDOW w2 AS (PARTITION BY symbol, _date ORDER BY tick_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT symbol, _date, n_moves,
-        |    s1 / n_moves AS m1, s2 / n_moves AS m2,
-        |    s3 / n_moves AS m3, s4 / n_moves AS m4
-        |  FROM r),
-        |v AS (SELECT *, m2 - m1 * m1 AS _var FROM m)
-        |SELECT symbol, strftime(_date, '%Y-%m-%d') AS date, n_moves,
-        |  round(_var, 4) AS variance,
-        |  round((m3 - 3.0 * m1 * m2 + 2.0 * m1 * m1 * m1)
-        |    / (_var * sqrt(_var)), 4) AS skewness,
-        |  round((m4 - 4.0 * m1 * m3 + 6.0 * m1 * m1 * m2
-        |    - 3.0 * m1 * m1 * m1 * m1) / (_var * _var) - 3.0, 4)
-        |    AS ex_kurtosis
-        |FROM v WHERE _var > 0
-        |ORDER BY symbol, date, n_moves""".stripMargin,
-    // G26 — the D52 fill report verbatim: both divisions of exact
-    // int64 prefix sums, zero-qty quotes transparent.
-    "q_stream_running_vwap" ->
-      s"""WITH p AS (SELECT event_id, user_id AS symbol,
-        |    CAST(date_trunc('day', ts) AS DATE) AS day,
-        |    CAST(round(value * 100.0, 0) AS BIGINT) AS cents,
-        |    coalesce(CAST(props->>'$$.k' AS BIGINT), 0) AS k
-        |  FROM events),
-        |t AS (SELECT * FROM p WHERE k > 0),
-        |r AS (SELECT symbol, event_id, day, cents,
-        |    CAST(sum(k) OVER w2 AS BIGINT) AS cum_qty,
-        |    CAST(sum(cents * k) OVER w2 AS BIGINT) AS cum_pv
-        |  FROM t
-        |  WINDOW w2 AS (PARTITION BY symbol, day ORDER BY event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT symbol, event_id AS fill_id,
-        |  strftime(day, '%Y-%m-%d') AS day,
-        |  cents AS exec_cents, cum_qty,
-        |  CAST(cum_pv AS DOUBLE) / cum_qty AS run_vwap_cents,
-        |  CAST((cents * cum_qty - cum_pv) * 10000 AS DOUBLE) / cum_pv
-        |    AS slip_bp
-        |FROM r WHERE event_id % $tcaFillEvery = 0
-        |ORDER BY symbol, fill_id""".stripMargin,
-
-    // G21 — the D38 ladder with the stream's decide-time column:
-    // label ±1 decides at the first barrier hit, label 0 at the
-    // horizon'th lookahead; feed-truncated label-0 entries (still
-    // open in state) are excluded.
-    "q_stream_triple_barrier" ->
-      s"""WITH x AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS BIGINT) AS idx
-        |  FROM $ticksSql t),
-        |e AS (SELECT symbol, idx AS e_idx, tick_id AS entry_id, c AS e_c
-        |  FROM x WHERE idx % $tbEntryEvery = 1),
-        |j AS (
-        |  SELECT e.symbol, e.e_idx, e.entry_id, e.e_c,
-        |    min(CASE WHEN f.c * 10000 >= e.e_c * (10000 + $tbBarrierBp)
-        |      THEN f.idx END) AS up_idx,
-        |    min(CASE WHEN f.c * 10000 <= e.e_c * (10000 - $tbBarrierBp)
-        |      THEN f.idx END) AS dn_idx,
-        |    count(*) AS n_lookahead
-        |  FROM e JOIN x f ON f.symbol = e.symbol
-        |    AND f.idx > e.e_idx AND f.idx <= e.e_idx + $tbHorizon
-        |  GROUP BY 1, 2, 3, 4),
-        |lb AS (SELECT symbol, e_idx, entry_id, e_c, up_idx, dn_idx,
-        |    n_lookahead,
-        |  CASE WHEN up_idx IS NOT NULL AND (dn_idx IS NULL OR up_idx < dn_idx)
-        |    THEN 1
-        |  WHEN dn_idx IS NOT NULL AND (up_idx IS NULL OR dn_idx < up_idx)
-        |    THEN -1
-        |  ELSE 0 END AS label
-        |FROM j)
-        |SELECT symbol, e_idx, entry_id, e_c, label,
-        |  CASE WHEN label = 1 THEN up_idx
-        |       WHEN label = -1 THEN dn_idx
-        |       ELSE e_idx + $tbHorizon END AS decided_idx
-        |FROM lb WHERE label != 0 OR n_lookahead = $tbHorizon
-        |ORDER BY symbol, e_idx""".stripMargin,
-    // G24 — the running R(l) ladder: per-tick prefix counts/sums of
-    // the settle-time contributions (lag-l sign x move), one row per
-    // (tick, lag) once the lag has observations. Branches generated
-    // from respLags like the batch D45 oracle.
-    "q_stream_response" ->
-      s"""WITH x AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS c
-        |  FROM $ticksSql t),
-        |sg AS (SELECT symbol, tick_id, c,
-        |    CASE WHEN lag(c) OVER w IS NULL THEN 0
-        |         WHEN c > lag(c) OVER w THEN 1
-        |         WHEN c < lag(c) OVER w THEN -1 ELSE 0 END AS sgn
-        |  FROM x WINDOW w AS (PARTITION BY symbol ORDER BY tick_id)),
-        |u AS (
-        |${respLags.map(l =>
-          s"""  SELECT symbol, tick_id, $l AS lag,
-            |    CASE WHEN lag(sgn, $l) OVER wl$l != 0
-            |      THEN lag(sgn, $l) OVER wl$l * (c - lag(c, $l) OVER wl$l)
-            |    END AS contrib
-            |  FROM sg WINDOW wl$l AS (PARTITION BY symbol ORDER BY tick_id)"""
-            .stripMargin).mkString("\n  UNION ALL\n")}
-        |),
-        |r AS (SELECT symbol, lag,
-        |    CAST(count(contrib) OVER w2 AS BIGINT) AS n_obs,
-        |    CAST(sum(contrib) OVER w2 AS BIGINT) AS s
-        |  FROM u
-        |  WINDOW w2 AS (PARTITION BY symbol, lag ORDER BY tick_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT symbol, lag, n_obs,
-        |  CAST(s AS DOUBLE) / n_obs AS resp_cents
-        |FROM r WHERE n_obs > 0
-        |ORDER BY symbol, lag, n_obs, resp_cents""".stripMargin,
-    // G27 — the F73 margin spelling per doc, admission on the sign.
-    "q_stream_classifier" -> {
-      import graft.functions.PortableText._
-      s"""WITH tok AS (SELECT doc_id, unnest($duckTokens) AS tok
-        |  FROM documents),
-        |ft AS (SELECT doc_id, ${duckPolyHash("tok")} % 1024 AS bucket
-        |  FROM tok),
-        |w AS (SELECT r AS bucket, (r * 37 + 11) % 21 - 10 AS w
-        |  FROM (SELECT unnest(range(1024)) AS r)),
-        |ag AS (SELECT doc_id, count(*) AS n_tokens,
-        |    CAST(sum(w.w) AS BIGINT) AS margin
-        |  FROM ft JOIN w USING (bucket) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  coalesce(ag.n_tokens, 0) AS n_tokens,
-        |  coalesce(ag.margin, 0) AS margin,
-        |  coalesce(ag.margin, 0) >= 0 AS admitted
-        |FROM documents d LEFT JOIN ag USING (doc_id)
-        |ORDER BY doc_id""".stripMargin
-    },
-    // G31 — the snapshot ladder: for every (source, chunk) with new
-    // grams, the 32-register summary over that source's grams in the
-    // deterministic 4-chunk tape prefix (per = ceil(N/4), doc_id
-    // order — the drive's `quarters` split verbatim).
-    "q_stream_hll" -> {
-      import graft.functions.PortableText._
-      s"""WITH nd AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
-        |  FROM documents),
-        |d1 AS (SELECT source, text,
-        |    (row_number() OVER (ORDER BY doc_id) - 1) // per AS chunk
-        |  FROM documents, nd),
-        |tok AS (SELECT source, chunk, $duckTokens AS tk FROM d1),
-        |g AS (SELECT source, chunk,
-        |    unnest(list_transform(range(1, length(tk)),
-        |      i -> array_to_string(tk[i:i+1], ' '))) AS gram
-        |  FROM tok),
-        |p1 AS (SELECT source, chunk,
-        |    (3 * ${duckPolyHash("gram")} + 7) % $P AS u FROM g),
-        |p2 AS (SELECT source, chunk, u % 32 AS reg, u // 32 AS rest
-        |  FROM p1),
-        |p3 AS (SELECT source, chunk, reg, list_reduce(
-        |    list_prepend(CAST(26 AS BIGINT),
-        |      list_transform(range(1, 26), j -> j)),
-        |    (acc, j) -> CASE WHEN acc = 26
-        |        AND (rest >> CAST(25 - j AS INT)) % 2 = 1
-        |      THEN j ELSE acc END) AS rho
-        |  FROM p2),
-        |touched AS (SELECT DISTINCT source, chunk FROM g),
-        |pre AS (SELECT t.source, t.chunk, p.reg, max(p.rho) AS m_reg
-        |  FROM touched t JOIN p3 p ON p.source = t.source
-        |    AND p.chunk <= t.chunk
-        |  GROUP BY 1, 2, 3),
-        |allr AS (SELECT t.source, t.chunk, r.reg,
-        |    coalesce(pre.m_reg, 0) AS m_reg
-        |  FROM touched t
-        |  CROSS JOIN (SELECT unnest(range(32)) AS reg) r
-        |  LEFT JOIN pre ON pre.source = t.source
-        |    AND pre.chunk = t.chunk AND pre.reg = r.reg),
-        |summ AS (SELECT source, chunk,
-        |    CAST(sum(CASE WHEN m_reg = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_zero_registers,
-        |    CAST(sum(CAST(1 AS BIGINT) << CAST(26 - m_reg AS INT))
-        |      AS BIGINT) AS sum_scaled
-        |  FROM allr GROUP BY 1, 2)
-        |SELECT source, n_zero_registers, sum_scaled,
-        |  cast(0.697 as double) * 1024 * 67108864
-        |    / cast(sum_scaled as double) AS est_ndv
-        |FROM summ
-        |ORDER BY source, n_zero_registers, sum_scaled""".stripMargin
-    },
-
-    // G30 — E17's RANGE frame verbatim on the epoch-day axis.
-    "q_stream_order_velocity" ->
-      s"""SELECT o_orderkey, o_custkey,
-        |  CAST(date_diff('day', DATE '1970-01-01',
-        |    CAST(o_orderdate AS DATE)) AS INT) AS day_i,
-        |  count(*) OVER (PARTITION BY o_custkey
-        |    ORDER BY date_diff('day', DATE '1970-01-01',
-        |      CAST(o_orderdate AS DATE))
-        |    RANGE BETWEEN $velocityDays PRECEDING AND 1 PRECEDING)
-        |    AS n_prior
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // G38 — the per-user lag edges (the E19 census BEFORE counting):
-    // event_id order is the tape's arrival order.
-    "q_stream_path_edges" ->
-      """SELECT user_id, prev_type, event_type AS next_type
-        |FROM (SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY event_id) AS prev_type
-        |  FROM events) x
-        |WHERE prev_type IS NOT NULL
-        |ORDER BY user_id, prev_type, next_type""".stripMargin,
-    // G34 — the F90 manifest as a snapshot ladder over the
-    // deterministic 4-chunk tape prefixes (one row per split per
-    // touched chunk; checksum = mod-p sum, the fold dual).
-    "q_stream_manifest" -> {
-      import graft.functions.PortableText._
-      s"""WITH nd AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
-        |  FROM documents),
-        |d1 AS (SELECT doc_id,
-        |    (row_number() OVER (ORDER BY doc_id) - 1) // per AS chunk,
-        |    CASE WHEN ${duckHashOrder("doc_id")} % 100 < 80
-        |           THEN 'train'
-        |         WHEN ${duckHashOrder("doc_id")} % 100 < 90
-        |           THEN 'val'
-        |         ELSE 'test' END AS split,
-        |    CAST(length($duckTokens) AS BIGINT) AS n_toks,
-        |    $duckDocFingerprint AS fp
-        |  FROM documents, nd),
-        |touched AS (SELECT DISTINCT split, chunk FROM d1)
-        |SELECT t.split AS split, count(*) AS n_docs,
-        |  CAST(sum(d.n_toks) AS BIGINT) AS n_tokens,
-        |  CAST(CAST(sum(d.fp) AS HUGEINT) % $P AS BIGINT)
-        |    AS content_checksum,
-        |  min(d.doc_id) AS min_doc_id, max(d.doc_id) AS max_doc_id
-        |FROM touched t JOIN d1 d ON d.split = t.split
-        |  AND d.chunk <= t.chunk
-        |GROUP BY t.split, t.chunk
-        |ORDER BY split, n_docs""".stripMargin
-    },
-    // G15 — flagged minutes vs the offline-trained rounded p90 rates
-    // (B10's threshold spelling at the deployed minute grain).
-    "q_stream_burst" ->
-      s"""WITH per AS (
-        |  SELECT symbol, date_trunc('minute', ts) AS sec,
-        |    count(*) AS n
-        |  FROM $ticksSql t
-        |  GROUP BY symbol, date_trunc('minute', ts)),
-        |thr AS (
-        |  SELECT symbol, round(quantile_cont(n, 0.90), 4) AS thr
-        |  FROM per GROUP BY symbol)
-        |SELECT p.symbol, p.sec, p.n, t.thr
-        |FROM per p JOIN thr t USING (symbol)
-        |WHERE p.n > t.thr
-        |ORDER BY symbol, sec""".stripMargin,
-    // G25 — the D48 per-tick flag frame verbatim (the stream trains
-    // its baseline on the same corpus it scores).
-    "q_stream_seasonal" ->
-      s"""WITH mv AS (
-        |  SELECT symbol, tick_id,
-        |    CAST(hour(ts) * 60 + minute(ts) AS INT) AS minute_od,
-        |    CAST(abs(cents - prev) AS DOUBLE) AS mv
-        |  FROM (
-        |    SELECT symbol, tick_id, ts, cents,
-        |      lag(cents) OVER (PARTITION BY symbol, CAST(ts AS DATE)
-        |        ORDER BY tick_id) AS prev
-        |    FROM (
-        |      SELECT symbol, tick_id, ts,
-        |        CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |      FROM $ticksSql t) c) p
-        |  WHERE prev IS NOT NULL),
-        |base AS (SELECT minute_od, avg(mv) AS mu,
-        |    stddev_samp(mv) AS sigma
-        |  FROM mv GROUP BY minute_od)
-        |SELECT symbol, tick_id, minute_od, mv,
-        |  round(CASE WHEN sigma <> 0 THEN (mv - mu) / sigma END, 4)
-        |    AS zscore
-        |FROM mv JOIN base USING (minute_od)
-        |WHERE abs(CASE WHEN sigma <> 0 THEN (mv - mu) / sigma END)
-        |  > $seasonalZThr
-        |ORDER BY symbol, tick_id""".stripMargin,
-    // G6 — the interval join as plain SQL: 20th-tick trades vs the
-    // full quote tape, symbol-matched in the trailing hour,
-    // timestamps emitted as exact epoch-µs.
-    "q_stream_interval_join" ->
-      s"""WITH tq AS (SELECT tick_id, symbol, ts, bid FROM $ticksSql t),
-        |tr AS (SELECT tick_id AS trade_id, symbol, ts AS trade_ts
-        |  FROM tq WHERE tick_id % 20 = 0)
-        |SELECT tr.trade_id, tr.symbol,
-        |  epoch_us(tr.trade_ts) AS trade_us,
-        |  epoch_us(q.ts) AS quote_us, q.bid AS quote_bid
-        |FROM tr JOIN tq q ON q.symbol = tr.symbol
-        |  AND q.ts >= tr.trade_ts - INTERVAL 1 HOUR
-        |  AND q.ts <= tr.trade_ts
-        |ORDER BY trade_id, quote_us, quote_bid""".stripMargin,
-
-    // G11 — per-tick EWMA: the D15 fold over the PREFIX list (the
-    // windowed-list dual of q_ewma's whole-day reduce).
-    "q_stream_ewma" ->
-      s"""SELECT tick_id, symbol,
-        |  strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |  CAST(row_number() OVER wn AS BIGINT) AS n_seen,
-        |  list_reduce(list(bid) OVER wl,
-        |    (acc, x) -> (x + acc) * cast(0.5 as double)) AS ewma
-        |FROM $ticksSql t
-        |WINDOW wn AS (PARTITION BY symbol, CAST(ts AS DATE)
-        |    ORDER BY tick_id),
-        |  wl AS (PARTITION BY symbol, CAST(ts AS DATE)
-        |    ORDER BY tick_id ROWS UNBOUNDED PRECEDING)
-        |ORDER BY tick_id""".stripMargin,
-    // G29 — E16's offline join verbatim (the serving cache equals the
-    // training join row for row — that parity IS the key's point).
-    "q_stream_pit" ->
-      """SELECT t.event_id AS fact_id, t.user_id AS symbol,
-        |  a.value AS a_val,
-        |  epoch_us(t.ts) - epoch_us(a.ts) AS a_age_us,
-        |  b.value AS b_val,
-        |  epoch_us(t.ts) - epoch_us(b.ts) AS b_age_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') t
-        |ASOF LEFT JOIN (SELECT * FROM events
-        |    WHERE event_type = 'click') a
-        |  ON t.user_id = a.user_id AND t.ts >= a.ts
-        |ASOF LEFT JOIN (SELECT * FROM events
-        |    WHERE event_type = 'view') b
-        |  ON t.user_id = b.user_id AND t.ts >= b.ts
-        |ORDER BY fact_id""".stripMargin,
-    // G28 — the KS ladder: per (source, touched chunk), the sup walk
-    // of the prefix histogram's CDF against the corpus reference CDF
-    // (strict-greater ties to the lowest bin; banker's-rounded
-    // display, the rint dual).
-    "q_stream_ks_drift" -> {
-      val maxLen = 128
-      import graft.functions.PortableText._
-      s"""WITH nd AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
-        |  FROM documents),
-        |d1 AS (SELECT source,
-        |    least(length($duckTokens), $maxLen) AS len,
-        |    (row_number() OVER (ORDER BY doc_id) - 1) // per AS chunk
-        |  FROM documents, nd),
-        |touched AS (SELECT DISTINCT source, chunk FROM d1),
-        |pre AS (SELECT t.source, t.chunk, d.len, count(*) AS c
-        |  FROM touched t JOIN d1 d ON d.source = t.source
-        |    AND d.chunk <= t.chunk
-        |  GROUP BY 1, 2, 3),
-        |tot AS (SELECT source, chunk, CAST(sum(c) AS BIGINT) AS total
-        |  FROM pre GROUP BY 1, 2),
-        |rh AS (SELECT len, count(*) AS c FROM d1 GROUP BY 1),
-        |rt AS (SELECT CAST(sum(c) AS DOUBLE) AS rtotal FROM rh),
-        |grid AS (SELECT unnest(range(${maxLen + 1})) AS i),
-        |rc AS (SELECT g.i,
-        |    CAST(coalesce(sum(rh.c), 0) AS DOUBLE) / rt.rtotal AS ref
-        |  FROM grid g CROSS JOIN rt LEFT JOIN rh ON rh.len <= g.i
-        |  GROUP BY g.i, rt.rtotal),
-        |sc AS (SELECT t.source, t.chunk, g.i,
-        |    CAST(coalesce(sum(p.c), 0) AS BIGINT) AS cum
-        |  FROM touched t CROSS JOIN grid g
-        |  LEFT JOIN pre p ON p.source = t.source AND p.chunk = t.chunk
-        |    AND p.len <= g.i
-        |  GROUP BY 1, 2, 3),
-        |df AS (SELECT sc.source, sc.chunk, sc.i, tot.total,
-        |    abs(CAST(sc.cum AS DOUBLE) / tot.total - rc.ref) AS diff
-        |  FROM sc JOIN tot ON tot.source = sc.source
-        |    AND tot.chunk = sc.chunk
-        |  JOIN rc ON rc.i = sc.i),
-        |sel AS (SELECT source, chunk, total, i, diff,
-        |    row_number() OVER (PARTITION BY source, chunk
-        |      ORDER BY diff DESC, i ASC) AS rk
-        |  FROM df)
-        |SELECT source, total AS n_docs,
-        |  roundbankers(diff * 10000.0, 0) / 10000.0 AS ks_stat,
-        |  CAST(i AS INT) AS ks_at_len
-        |FROM sel WHERE rk = 1
-        |ORDER BY source, n_docs""".stripMargin
-    },
-    // G36 — the running gaps-and-islands report: per arrival, closed
-    // islands' mass plus the open island's (running-max-end − start),
-    // span = running max end − first start. All exact int64.
-    "q_stream_coverage" ->
-      s"""WITH o AS (SELECT o_orderkey, o_custkey,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS s,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      + $coverageWindowDays AS e
-        |  FROM orders),
-        |r AS (SELECT *,
-        |    CAST(max(e) OVER (PARTITION BY o_custkey ORDER BY s, o_orderkey
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS rmax,
-        |    CASE WHEN max(e) OVER (PARTITION BY o_custkey
-        |        ORDER BY s, o_orderkey
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |      OR s > max(e) OVER (PARTITION BY o_custkey
-        |        ORDER BY s, o_orderkey
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    THEN 1 ELSE 0 END AS brk
-        |  FROM o),
-        |g AS (SELECT *,
-        |    CAST(sum(brk) OVER (PARTITION BY o_custkey ORDER BY s, o_orderkey
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS isl,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY s, o_orderkey) AS BIGINT) AS n_orders
-        |  FROM r),
-        |ia AS (SELECT o_custkey, isl, min(s) AS si, max(e) AS ei
-        |  FROM g GROUP BY 1, 2),
-        |cum AS (SELECT o_custkey, isl, si,
-        |    CAST(coalesce(sum(ei - si) OVER (PARTITION BY o_custkey
-        |      ORDER BY isl
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS closed
-        |  FROM ia),
-        |fs AS (SELECT o_custkey, min(s) AS firsts FROM o GROUP BY 1)
-        |SELECT g.o_orderkey, g.o_custkey, g.n_orders,
-        |  g.isl AS n_intervals,
-        |  c.closed + (g.rmax - c.si) AS covered_days,
-        |  g.rmax - f.firsts AS span_days
-        |FROM g JOIN cum c ON c.o_custkey = g.o_custkey AND c.isl = g.isl
-        |JOIN fs f ON f.o_custkey = g.o_custkey
-        |ORDER BY g.o_orderkey""".stripMargin,
-
-    // G17 — the watermark-sizing audit on the jittered-arrival
-    // replay: process order is (chunk, tick_id) — the drive's 4-chunk
-    // grouping of the arrival order, then the operator's in-batch
-    // tick_id sort; wm = the symbol's running max BEFORE the tick.
-    "q_stream_late" -> {
-      import graft.functions.PortableText.P
-      s"""WITH nt AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
-        |  FROM events),
-        |j AS (SELECT tick_id, symbol,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    epoch_us(CAST(ts AS TIMESTAMP))
-        |      + (((tick_id % $P) * 2654435761) % $P) % 1200000000
-        |      - 600000000 AS arr
-        |  FROM $ticksSql t),
-        |r AS (SELECT tick_id, symbol, us,
-        |    (row_number() OVER (ORDER BY arr, tick_id) - 1) // per
-        |      AS chunk
-        |  FROM j, nt),
-        |o AS (SELECT tick_id, symbol, us,
-        |    max(us) OVER (PARTITION BY symbol ORDER BY chunk, tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS wm_us
-        |  FROM r)
-        |SELECT tick_id, symbol, us, wm_us,
-        |  coalesce(us < wm_us - 60000000, FALSE) AS late
-        |FROM o ORDER BY tick_id""".stripMargin
-    },
-    // G16 — the chained-MIN funnel unpivoted to one row per advance.
-    "q_stream_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |t1 AS (SELECT user_id, min(us) AS t1_us FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |t2 AS (SELECT ev.user_id, min(us) AS t2_us
-        |  FROM ev JOIN t1 USING (user_id)
-        |  WHERE event_type = 'click' AND us > t1_us
-        |    AND us <= t1_us + 86400000000 GROUP BY ev.user_id),
-        |t3 AS (SELECT ev.user_id, min(us) AS t3_us
-        |  FROM ev JOIN t2 USING (user_id)
-        |  WHERE event_type = 'purchase' AND us > t2_us
-        |    AND us <= t2_us + 86400000000 GROUP BY ev.user_id)
-        |SELECT user_id, CAST(1 AS INT) AS stage, t1_us AS t_us,
-        |  FALSE AS completed FROM t1
-        |UNION ALL SELECT user_id, 2, t2_us, FALSE FROM t2
-        |UNION ALL SELECT user_id, 3, t3_us, TRUE FROM t3
-        |ORDER BY user_id, stage""".stripMargin,
-    // G9 — the prefix-cut on the hash walk: running per-source token
-    // total, admitted while it fits, rejected rows report the frozen
-    // admitted-prefix total.
-    "q_stream_token_budget" -> {
-      import graft.functions.PortableText._
-      s"""WITH x AS (SELECT doc_id, source,
-        |    CAST(length($duckTokens) AS BIGINT) AS n,
-        |    ${duckHashOrder("doc_id")} AS rnk0
-        |  FROM documents),
-        |w AS (SELECT *, CAST(sum(n) OVER (PARTITION BY source
-        |      ORDER BY rnk0, doc_id ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS wcum
-        |  FROM x),
-        |m AS (SELECT source,
-        |    CAST(coalesce(max(CASE WHEN wcum <= 1000 THEN wcum END), 0)
-        |      AS BIGINT) AS adm
-        |  FROM w GROUP BY source)
-        |SELECT doc_id, source, n AS n_tokens,
-        |  CASE WHEN wcum <= 1000 THEN wcum ELSE m.adm END AS cum_tokens,
-        |  wcum <= 1000 AS admitted
-        |FROM w JOIN m USING (source)
-        |ORDER BY doc_id""".stripMargin
-    },
-    // G10 — cap admission: the source's 1-based hash-walk position.
-    "q_stream_source_cap" -> {
-      import graft.functions.PortableText._
-      s"""SELECT doc_id, source,
-        |  CAST(row_number() OVER w AS BIGINT) AS rnk,
-        |  row_number() OVER w <= 10 AS admitted
-        |FROM documents
-        |WINDOW w AS (PARTITION BY source
-        |  ORDER BY ${duckHashOrder("doc_id")}, doc_id)
-        |ORDER BY doc_id""".stripMargin
-    },
-
-    // G7 — the band-claim dual: a band flags iff an earlier doc
-    // shares its (band, band_hash) bucket (first-writer-wins in
-    // doc_id order = min-doc_id-strictly-less); token-less docs
-    // carry no bands.
-    "q_stream_near_dup" -> {
-      import graft.functions.PortableText._
-      s"""WITH t AS (SELECT doc_id, $duckTokenHashes AS th FROM documents),
-        |m AS (SELECT doc_id, $duckMinHashes AS mh FROM t),
-        |b AS (SELECT doc_id, band,
-        |    (mh[CAST(2*band + 1 AS INT)] * 31
-        |      + mh[CAST(2*band + 2 AS INT)]) % $P AS band_hash
-        |  FROM m, (SELECT unnest(range($Bands)) AS band) bb)
-        |SELECT doc_id, CAST(band AS INT) AS band,
-        |  min(doc_id) OVER (PARTITION BY band, band_hash) < doc_id
-        |    AS dup_band
-        |FROM b WHERE band_hash IS NOT NULL
-        |ORDER BY doc_id, band""".stripMargin
-    },
-    // G39 — day-close banded points: per-symbol per-observed-day rv
-    // (0 for single-tick days — the stream ring counts every observed
-    // day), full 5-day windows only, final open day never emits; the
-    // cone trains on the BATCH rv frame (move-days only — the D64
-    // spelling verbatim).
-    "q_stream_vol_cone" ->
-      s"""WITH p AS (SELECT symbol, CAST(ts AS DATE) AS _date, tick_id,
-        |    CAST(round(bid * 100.0, 0) AS BIGINT) AS cents
-        |  FROM $ticksSql t),
-        |l AS (SELECT symbol, _date,
-        |    cents - lag(cents) OVER (PARTITION BY symbol, _date
-        |      ORDER BY tick_id) AS d
-        |  FROM p),
-        |rvd AS (SELECT symbol, _date,
-        |    CAST(coalesce(sum(d * d), 0) AS BIGINT) AS rv
-        |  FROM l GROUP BY 1, 2),
-        |w AS (SELECT symbol, _date,
-        |    CAST(sum(rv) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS roll,
-        |    count(*) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS nw,
-        |    row_number() OVER (PARTITION BY symbol ORDER BY _date DESC)
-        |      AS rdesc
-        |  FROM rvd),
-        |rvb AS (SELECT symbol, _date, CAST(sum(d * d) AS BIGINT) AS rv
-        |  FROM l WHERE d IS NOT NULL GROUP BY 1, 2),
-        |fb AS (SELECT symbol,
-        |    sum(rv) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS roll_rv,
-        |    count(*) OVER (PARTITION BY symbol ORDER BY _date
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS nw
-        |  FROM rvb),
-        |cones AS (SELECT symbol,
-        |    round(quantile_cont(roll_rv, 0.25), 4) AS lo,
-        |    round(quantile_cont(roll_rv, 0.75), 4) AS hi
-        |  FROM fb WHERE nw = 5 GROUP BY symbol)
-        |SELECT w.symbol, strftime(w._date, '%Y-%m-%d') AS day,
-        |  w.roll AS roll_rv,
-        |  CASE WHEN c.symbol IS NULL THEN 'untrained'
-        |       WHEN w.roll < c.lo THEN 'below'
-        |       WHEN w.roll > c.hi THEN 'above' ELSE 'in' END AS band
-        |FROM w LEFT JOIN cones c USING (symbol)
-        |WHERE w.nw = 5 AND w.rdesc > 1
-        |ORDER BY symbol, day""".stripMargin,
-
-    // G32 — the exactly-once-effect verdict: the final sink table's
-    // per-symbol logical content equals the plain tick view iff every
-    // tick landed once and the replayed batch was a no-op.
-    "q_stream_upsert" -> {
-      import graft.functions.PortableText.P
-      // Sign-safe % (r15 ADVICE class, same fix as A28 at the
-      // stage-lineage fingerprint): DuckDB's % is SIGNED while the
-      // Spark side folds pmod, so a negative term (negative cents —
-      // bad prints) would diverge. ((x % P + P) % P) == pmod(x, P)
-      // for all x; identical to x % P for the non-negative terms of
-      // the standard corpora, so hashes are unchanged there. The
-      // inner guard makes every summand non-negative, which keeps the
-      // OUTER % equal to pmod too.
-      s"""SELECT symbol, count(*) AS n,
-        |  CAST(COALESCE(SUM(((tick_id * 31
-        |    + CAST(round(bid * 100.0, 0) AS BIGINT)) % $P + $P) % $P),
-        |    0) % $P AS BIGINT) AS content_fp,
-        |  CAST(COALESCE(SUM((epoch_ms(CAST(ts AS TIMESTAMP)) % $P + $P)
-        |    % $P), 0) % $P AS BIGINT) AS ts_fp
-        |FROM $ticksSql t
-        |GROUP BY symbol ORDER BY symbol""".stripMargin
-    },
-
-    // G2 — the Welford register replayed per symbol over each tick's
-    // prefix list (q_stream_ewma's pattern with a STRUCT
-    // accumulator). The flag uses the PRE-update register — the fold
-    // over the one-shorter prefix. Struct-literal field ORDER is
-    // load-bearing: DuckDB evaluates result-struct fields
-    // sequentially into the accumulator, so m2 (which needs the OLD
-    // mean) is declared first and every denominator comes from the
-    // lambda's iteration index, never from a just-updated field —
-    // probed bit-for-bit against the Scala fold on random series.
-    "q_stream_welford" -> {
-      def fold(l: String) =
-        s"""list_reduce(list_transform($l,
-          |      v -> {m2: CAST(0.0 AS DOUBLE), mean: v,
-          |            n: CAST(1 AS BIGINT)}),
-          |    (acc, e, i) -> {
-          |      m2: acc.m2 + (e.mean - acc.mean) * (e.mean
-          |        - (acc.mean + (e.mean - acc.mean) / (i + 1))),
-          |      mean: acc.mean + (e.mean - acc.mean) / (i + 1),
-          |      n: CAST(i + 1 AS BIGINT)})""".stripMargin
-      s"""WITH p AS (SELECT symbol, tick_id, CAST(bid AS DOUBLE) AS bid,
-        |    list(CAST(bid AS DOUBLE)) OVER wc AS pre,
-        |    list(CAST(bid AS DOUBLE)) OVER wp AS prev
-        |  FROM $ticksSql t
-        |  WINDOW wc AS (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS UNBOUNDED PRECEDING),
-        |    wp AS (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |w AS (SELECT symbol, tick_id, bid,
-        |    ${fold("pre")} AS cur,
-        |    CASE WHEN len(prev) > 0 THEN ${fold("prev")} END AS pv
-        |  FROM p)
-        |SELECT symbol, cur.n AS n, cur.mean AS mean,
-        |  COALESCE(pv.n > 1 AND abs(bid - pv.mean)
-        |      > CAST($welfordK AS DOUBLE) * sqrt(pv.m2 / (pv.n - 1)),
-        |    FALSE) AS is_anomaly
-        |FROM w ORDER BY symbol, n""".stripMargin
-    },
-
-    // G37 — the pair-spread Welford z replayed per pair. The roster
-    // is derived from the data exactly as the registry derives it
-    // (consecutive ranked-symbol pairs, β_j = 0.5 + 0.25·j — exactly
-    // representable). Leg state is SCALAR window arithmetic
-    // (last_value IGNORE NULLS over the routed prefix — the
-    // last-leg-price registers), so the lambda fold only ever sees
-    // the plain DOUBLE spread series and stays in q_stream_welford's
-    // proven index-based shape. (A struct-leg fold with CONDITIONAL
-    // in-lambda updates mis-evaluated a handful of late rows in this
-    // DuckDB — probed; scalar windows + unconditional fold are
-    // bit-stable.) Every row with both legs known advances the
-    // register, so the fold index IS the Welford n, exactly as the
-    // operator's per-arrival update.
-    "q_stream_pairz" -> {
-      def fold(l: String) =
-        s"""list_reduce(list_transform($l,
-          |      v -> {m2: CAST(0.0 AS DOUBLE), mean: v,
-          |            n: CAST(1 AS BIGINT)}),
-          |    (acc, e, i) -> {
-          |      m2: acc.m2 + (e.mean - acc.mean) * (e.mean
-          |        - (acc.mean + (e.mean - acc.mean) / (i + 1))),
-          |      mean: acc.mean + (e.mean - acc.mean) / (i + 1),
-          |      n: CAST(i + 1 AS BIGINT)})""".stripMargin
-      s"""WITH syms AS (SELECT symbol,
-        |    row_number() OVER (ORDER BY symbol) AS r
-        |  FROM (SELECT DISTINCT symbol FROM $ticksSql t)),
-        |roster AS (SELECT a.symbol AS sym_a, b.symbol AS sym_b,
-        |    0.5 + 0.25 * CAST((a.r - 1) // 2 AS DOUBLE) AS beta
-        |  FROM syms a JOIN syms b ON b.r = a.r + 1 AND a.r % 2 = 1
-        |  WHERE (a.r - 1) // 2 < $pairZCount),
-        |routed AS (SELECT r.sym_a, r.sym_b, r.beta, t.tick_id,
-        |    t.symbol = r.sym_a AS is_a, CAST(t.bid AS DOUBLE) AS bid
-        |  FROM $ticksSql t JOIN roster r
-        |    ON t.symbol = r.sym_a OR t.symbol = r.sym_b),
-        |legs AS (SELECT sym_a, sym_b, beta, tick_id,
-        |    last_value(CASE WHEN is_a THEN bid END IGNORE NULLS)
-        |      OVER wp AS la,
-        |    last_value(CASE WHEN NOT is_a THEN bid END IGNORE NULLS)
-        |      OVER wp AS lb
-        |  FROM routed
-        |  WINDOW wp AS (PARTITION BY sym_a, sym_b ORDER BY tick_id
-        |    ROWS UNBOUNDED PRECEDING)),
-        |sp AS (SELECT sym_a, sym_b, beta, tick_id,
-        |    la - beta * lb AS s
-        |  FROM legs WHERE la IS NOT NULL AND lb IS NOT NULL),
-        |p AS (SELECT sym_a, sym_b, tick_id, s,
-        |    list(s) OVER (PARTITION BY sym_a, sym_b ORDER BY tick_id
-        |      ROWS UNBOUNDED PRECEDING) AS pre
-        |  FROM sp),
-        |f AS (SELECT sym_a, sym_b, tick_id, s, ${fold("pre")} AS st
-        |  FROM p)
-        |SELECT tick_id, sym_a, sym_b, s AS spread,
-        |  CASE WHEN st.n >= 2 AND st.m2 > 0
-        |    THEN (s - st.mean) / sqrt(st.m2 / st.n) END AS z
-        |FROM f ORDER BY tick_id, sym_a, sym_b""".stripMargin
-    },
-
-    // G33 — the watermark schedule simulated exactly: chunk =
-    // the drive's 4-way split in tape order, W_c = the running max
-    // event-ms through chunk c, and a register DIES between
-    // consecutive same-symbol ticks iff the next tick lands in a
-    // later chunk whose preceding watermark strictly passed
-    // last_ms + gap (probed: strict `<`, evaluated after every data
-    // batch by the no-data micro-batch). The two sentinel BATCHES
-    // the registry appends guarantee the final register of every
-    // symbol dies, so the tape-end flush needs no special case
-    // beyond `next IS NULL`. n_ticks restarts at each death — the
-    // register-rebirth rule — which is exactly the row_number within
-    // (symbol, preceding-death count).
-    "q_stream_dormant" ->
-      s"""WITH nd AS (SELECT CAST(ceil(count(*) / 4.0) AS BIGINT) AS per
-        |  FROM events),
-        |d AS (SELECT symbol, tick_id, epoch_us(ts) // 1000 AS ms,
-        |    (row_number() OVER (ORDER BY tick_id) - 1) // per + 1
-        |      AS chunk
-        |  FROM $ticksSql t, nd),
-        |wm AS (SELECT chunk AS wchunk,
-        |    max(max(ms)) OVER (ORDER BY chunk) AS w
-        |  FROM d GROUP BY chunk),
-        |p AS (SELECT symbol, tick_id, ms, chunk,
-        |    lead(chunk) OVER (PARTITION BY symbol ORDER BY tick_id)
-        |      AS nchunk
-        |  FROM d),
-        |dd AS (SELECT p.*, CASE WHEN nchunk IS NULL THEN TRUE
-        |    WHEN nchunk > chunk AND ms + $dormantGapMs < wm.w
-        |      THEN TRUE ELSE FALSE END AS death
-        |  FROM p LEFT JOIN wm ON wm.wchunk = p.nchunk - 1),
-        |regs AS (SELECT *, COALESCE(SUM(CASE WHEN death THEN 1
-        |      ELSE 0 END) OVER (PARTITION BY symbol ORDER BY tick_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS reg FROM dd),
-        |cnt AS (SELECT *, row_number() OVER (PARTITION BY symbol, reg
-        |      ORDER BY tick_id) AS n_in_reg FROM regs)
-        |SELECT symbol, tick_id AS last_tick_id,
-        |  make_timestamp(ms * 1000) AS last_ts,
-        |  CAST(n_in_reg AS BIGINT) AS n_ticks
-        |FROM cnt WHERE death
-        |ORDER BY symbol, last_tick_id""".stripMargin,
-
-    // D88 — the FFD dot product: the SAME Scala-computed weights
-    // interpolated as round-trip literals, one fixed left-assoc
-    // chain over the K-lag window; warm-up rows (no full window)
-    // excluded on both sides.
-    "q_fracdiff" -> fracDiffOracleSql,
-    // G47 — the live twin's sink IS the batch frame row for row
-    // (parity spec'd), so the oracle is the batch oracle verbatim.
-    "q_stream_ffd" -> fracDiffOracleSql,
-    // G46 — the shared branchless CUSUM fragment replayed over each
-    // move PREFIX: one trace row per move with registers + count.
-    "q_stream_cusum" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs,
-        |    list(tick_id ORDER BY tick_id) AS ids
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date, ids,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> cs[k] - cs[k - 1]) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |rows_ AS (SELECT symbol, date, ids, mv,
-        |    unnest(range(1, len(mv) + 1)) AS k FROM m),
-        |tr AS (SELECT symbol, date, ids[k + 1] AS tick_id,
-        |    CAST(k AS BIGINT) AS n_move,
-        |    ${cusumFoldSql("mv[1:k]")} AS st
-        |  FROM rows_)
-        |SELECT tick_id, symbol, date, n_move,
-        |  CAST(st.sp AS BIGINT) AS s_pos, CAST(st.sn AS BIGINT) AS s_neg,
-        |  st.nev AS n_events
-        |FROM tr ORDER BY symbol, date, n_move""".stripMargin,
-    // D89 — the CUSUM day-close fold per (symbol, day): the shared
-    // branchless fragment over the whole move list.
-    "q_cusum" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> cs[k] - cs[k - 1]) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |f AS (SELECT symbol, date, len(mv) AS n_moves,
-        |    ${cusumFoldSql("mv")} AS st
-        |  FROM m)
-        |SELECT symbol, date, CAST(n_moves AS BIGINT) AS n_moves,
-        |  st.nev AS n_events, CAST(st.sp AS BIGINT) AS s_pos_close,
-        |  CAST(st.sn AS BIGINT) AS s_neg_close
-        |FROM f ORDER BY symbol, date""".stripMargin,
-
-    // D86 — the GARCH(1,1) filter fold per (symbol, day): same
-    // lambda, same left-to-right order as the Spark aggregate; the
-    // transform maps each move to the as-if-first state so
-    // list_reduce's first-element init IS the batch init (same field
-    // order as every fold oracle: readers of acc.h before its
-    // writer — the struct fields evaluate sequentially in-place in
-    // this DuckDB).
-    "q_garch" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> CAST(cs[k] - cs[k - 1] AS DOUBLE)) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |f AS (SELECT symbol, date, len(mv) AS n_moves,
-        |    ${garchFoldSql("mv")} AS st
-        |  FROM m)
-        |SELECT symbol, date, CAST(n_moves AS BIGINT) AS n_moves,
-        |  st.h AS h_close, sqrt(st.h) AS sigma_close,
-        |  st.hmax AS h_max, st.breach AS n_breach
-        |FROM f ORDER BY symbol, date""".stripMargin,
-    // D87 — the Kalman local-level fold per (symbol, day), same
-    // discipline.
-    "q_kalman" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(CAST(round(bid * 100.0, 0) AS BIGINT) AS DOUBLE)
-        |      ORDER BY tick_id) AS zs
-        |  FROM $ticksSql t GROUP BY 1, 2)
-        |SELECT symbol, date, CAST(len(zs) AS BIGINT) AS n_ticks,
-        |  st.x AS x_close, st.p AS p_close, st.imax AS innov_max
-        |FROM (SELECT symbol, date, zs, ${kalmanFoldSql("zs")} AS st
-        |  FROM g) f
-        |ORDER BY symbol, date""".stripMargin,
-    // G44 — the same GARCH fold replayed over each move PREFIX: one
-    // trace row per cent move with its forecast and 2σ verdict.
-    "q_stream_garch" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs,
-        |    list(tick_id ORDER BY tick_id) AS ids
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date, ids,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> CAST(cs[k] - cs[k - 1] AS DOUBLE)) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |rows_ AS (SELECT symbol, date, ids, mv,
-        |    unnest(range(1, len(mv) + 1)) AS k FROM m),
-        |tr AS (SELECT symbol, date, ids[k + 1] AS tick_id,
-        |    CAST(k AS BIGINT) AS n_move, mv[k] AS move,
-        |    ${garchFoldSql("mv[1:k]")} AS st
-        |  FROM rows_)
-        |SELECT tick_id, symbol, date, n_move, move, st.h AS h,
-        |  move * move > 4.0 * st.h AS breach
-        |FROM tr ORDER BY symbol, date, n_move""".stripMargin,
-    // D90 — the two-state forward-filter fold per (symbol, day):
-    // same rational lambda, same left-to-right order as the Spark
-    // aggregate (p_H ≡ 1 − p_L spelled identically in both engines).
-    "q_hmm_regime" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> CAST(cs[k] - cs[k - 1] AS DOUBLE)) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |f AS (SELECT symbol, date, len(mv) AS n_moves,
-        |    ${hmmFoldSql("mv")} AS st
-        |  FROM m)
-        |SELECT symbol, date, CAST(n_moves AS BIGINT) AS n_moves,
-        |  1.0 - st.pl AS p_high_close, st.pmax AS p_high_max,
-        |  st.nhi AS n_high
-        |FROM f ORDER BY symbol, date""".stripMargin,
-    // D91 — the factor-model oracle: deterministic roster + exact
-    // int64 daily-return gram/sums, covariance cells through the
-    // identical double expression, then the SHARED unrolled power
-    // cascade (one spelling per engine — powerCascadeBlocks is the
-    // SQL twin of Vectors.powerIterate).
-    "q_factor_pca" -> {
-      val dim = factorSyms
-      val finals = (0 until factorComps).map { m =>
-        s"SELECT CAST($m AS BIGINT) AS comp, pos.p AS pos, " +
-          "pos.symbol AS symbol, " +
-          "round(v[CAST(pos.p + 1 AS INT)], 6) + 0.0 AS loading, " +
-          "round(lam, 6) + 0.0 AS eigenvalue, " +
-          "round(lam / tr, 6) + 0.0 AS explained_share " +
-          s"FROM p${m}e, trace, pos"
-      }
-      s"WITH $factorCascadeSql\nSELECT * FROM (" +
-        finals.mkString(" UNION ALL ") + ") u ORDER BY comp, pos"
-    },
-    // D92 — the residual-decomposition oracle: the SAME head +
-    // cascade, read per symbol — variance = the C0 diagonal,
-    // explained = the fixed left-assoc Σ λ·v² chain from a 0.0 seed
-    // (the Scala fold's exact order), residual from the UNROUNDED
-    // share; signed-zero guards on every round (shares and loadings
-    // straddle zero).
-    "q_factor_resid" -> {
-      val explSum = "0.0 + " + (0 until factorComps).map { m =>
-        s"t$m.lam * t$m.v[CAST(pos.p + 1 AS INT)] " +
-          s"* t$m.v[CAST(pos.p + 1 AS INT)]"
-      }.mkString(" + ")
-      val varCell =
-        "cm0.c[CAST(pos.p + 1 AS INT)][CAST(pos.p + 1 AS INT)]"
-      val froms = (0 until factorComps).map(m => s"p${m}e t$m")
-        .mkString(", ")
-      s"""WITH $factorCascadeSql
-        |SELECT pos.p AS pos, pos.symbol AS symbol,
-        |  round($varCell, 6) + 0.0 AS variance,
-        |  round(t0.v[CAST(pos.p + 1 AS INT)], 6) + 0.0 AS mode_loading,
-        |  round(($explSum) / $varCell, 6) + 0.0 AS factor_share,
-        |  round(1.0 - ($explSum) / $varCell, 6) + 0.0 AS resid_share
-        |FROM cm0, $froms, pos
-        |ORDER BY pos""".stripMargin
-    },
-    // D93 — the λ-grid oracle: exact int64 daily rv, the same
-    // sequential fold per λ in day order (1−λ Scala-interpolated, the
-    // D86 DECIMAL lesson), one UNION ALL branch per grid point over
-    // the shared day-list CTE.
-    "q_ewma_vol_grid" -> {
-      val branches = ewmaVolLambdas.map { l =>
-        val oneMinus = 1.0 - l
-        s"""SELECT symbol, CAST($l AS DOUBLE) AS lambda,
-          |  CAST(len(rvs) AS BIGINT) AS n_days,
-          |  st.err / CAST(len(rvs) - 1 AS DOUBLE) AS mse,
-          |  st.f AS f_next
-          |FROM (SELECT symbol, rvs,
-          |    list_reduce(list_transform(rvs, v -> {
-          |        err: CAST(0.0 AS DOUBLE), f: v, rv: v}),
-          |      (acc, e) -> {
-          |        err: acc.err + (acc.f - e.rv) * (acc.f - e.rv),
-          |        f: $l * acc.f + $oneMinus * e.rv,
-          |        rv: e.rv}) AS st
-          |  FROM l) z""".stripMargin
-      }
-      s"""WITH g AS (SELECT symbol, CAST(ts AS DATE) AS d,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |r AS (SELECT symbol, d,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(2, len(cs) + 1),
-        |        k -> cs[k] - cs[k - 1])),
-        |      (a, m) -> a + m * m) AS rv
-        |  FROM g WHERE len(cs) >= 2),
-        |l AS (SELECT symbol,
-        |    list(CAST(rv AS DOUBLE) ORDER BY d) AS rvs
-        |  FROM r GROUP BY symbol HAVING count(*) >= 2)
-        |SELECT * FROM (${branches.mkString(" UNION ALL ")}) u
-        |ORDER BY symbol, lambda""".stripMargin
-    },
-    // G48 — the same regime fold replayed over each move PREFIX: one
-    // trace row per cent move with its posterior and regime verdict.
-    "q_stream_hmm" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(round(bid * 100.0, 0) AS BIGINT)
-        |      ORDER BY tick_id) AS cs,
-        |    list(tick_id ORDER BY tick_id) AS ids
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |m AS (SELECT symbol, date, ids,
-        |    list_transform(range(2, len(cs) + 1),
-        |      k -> CAST(cs[k] - cs[k - 1] AS DOUBLE)) AS mv
-        |  FROM g WHERE len(cs) >= 2),
-        |rows_ AS (SELECT symbol, date, ids, mv,
-        |    unnest(range(1, len(mv) + 1)) AS k FROM m),
-        |tr AS (SELECT symbol, date, ids[k + 1] AS tick_id,
-        |    CAST(k AS BIGINT) AS n_move, mv[k] AS move,
-        |    ${hmmFoldSql("mv[1:k]")} AS st
-        |  FROM rows_)
-        |SELECT tick_id, symbol, date, n_move, move,
-        |  1.0 - st.pl AS p_high,
-        |  (1.0 - st.pl) > 0.5 AS is_high
-        |FROM tr ORDER BY symbol, date, n_move""".stripMargin,
-    // G45 — the Kalman fold replayed over each tick PREFIX: one
-    // trace row per tick with the post-update (x̂, P).
-    "q_stream_kalman" ->
-      s"""WITH g AS (SELECT symbol,
-        |    strftime(CAST(ts AS DATE), '%Y-%m-%d') AS date,
-        |    list(CAST(CAST(round(bid * 100.0, 0) AS BIGINT) AS DOUBLE)
-        |      ORDER BY tick_id) AS zs,
-        |    list(tick_id ORDER BY tick_id) AS ids
-        |  FROM $ticksSql t GROUP BY 1, 2),
-        |rows_ AS (SELECT symbol, date, ids, zs,
-        |    unnest(range(1, len(zs) + 1)) AS k FROM g),
-        |tr AS (SELECT symbol, date, ids[k] AS tick_id,
-        |    CAST(k AS BIGINT) AS n_seen, zs[k] AS z,
-        |    ${kalmanFoldSql("zs[1:k]")} AS st
-        |  FROM rows_)
-        |SELECT tick_id, symbol, date, n_seen, z, st.x AS x_filt,
-        |  st.p AS p
-        |FROM tr ORDER BY symbol, date, n_seen""".stripMargin,
-
-    // ===== A-section audit oracles: the logical halves of the
-    // side-effectful maintenance ops. File-count cells are layout
-    // constants pinned by the audit's build parameters (3+3 appended
-    // files compacting to 1; 4 live + 2 planted orphans); content
-    // cells derive from the sfDir tables.
-    // A1 — the CSV tree is symbol=<id> dirs; the reader surfaces the
-    // dir name as the symbol string. Timestamps round-trip at the
-    // Dukascopy format's ms precision (epoch_ms).
-    "q_ingest_roundtrip" -> {
-      import graft.functions.PortableText.P
-      s"""SELECT 'symbol=' || CAST(symbol AS VARCHAR) AS symbol,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(round(bid * 100.0, 0) AS BIGINT)) AS BIGINT)
-        |    AS bid_cents,
-        |  CAST(sum(CAST(round(ask * 10000.0, 0) AS BIGINT)) AS BIGINT)
-        |    AS ask_e4,
-        |  CAST(sum(epoch_ms(ts) % $P) AS BIGINT) AS ts_fp
-        |FROM $ticksSql t
-        |WHERE symbol % 16 = 0
-        |GROUP BY 1 ORDER BY symbol""".stripMargin
-    },
-    // A29 — the ORC round-trip must change nothing: the oracle
-    // prices the audit cells straight off the parquet source (µs
-    // fingerprints — ORC stores ns, so µs survives exactly).
-    "q_orc_roundtrip" -> {
-      import graft.functions.PortableText.P
-      s"""SELECT symbol, count(*) AS n,
-        |  CAST(sum(CAST(round(bid * 100.0, 0) AS BIGINT)) AS BIGINT)
-        |    AS bid_cents,
-        |  CAST(sum(CAST(round(ask * 10000.0, 0) AS BIGINT)) AS BIGINT)
-        |    AS ask_e4,
-        |  CAST(sum(epoch_us(ts) % $P) AS BIGINT) AS ts_fp
-        |FROM $ticksSql t
-        |WHERE symbol % 16 = 0
-        |GROUP BY 1 ORDER BY symbol""".stripMargin
-    },
-    // A30 — the JSONL escape/parse cycle must change nothing: the
-    // oracle prices the audit cells straight off the parquet source.
-    "q_jsonl_roundtrip" -> {
-      import graft.functions.PortableText._
-      s"""SELECT source, count(*) AS n,
-        |  CAST(sum(length(text)) AS BIGINT) AS chars_read,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_stored,
-        |  CAST(sum(${duckPolyHash("text")} % $P) AS BIGINT) AS text_fp,
-        |  count(DISTINCT lang) AS n_langs
-        |FROM documents
-        |GROUP BY 1 ORDER BY source""".stripMargin
-    },
-    // A11 — two 3-file appends compact to exactly 1 file per year at
-    // an unbounded byte target; rows and the order-free content fp
-    // must survive the rewrite untouched.
-    "q_compaction_audit" -> {
-      import graft.functions.PortableText.P
-      // ((x % P + P) % P) == pmod — the operator folds pmod while
-      // DuckDB's % is signed; identity for the non-negative terms of
-      // the standard corpora, sign-safe for negative event values.
-      s"""SELECT year(ts) AS year, 6 AS n_files_before,
-        |  1 AS n_files_planned, CAST(1 AS BIGINT) AS n_files_after,
-        |  count(*) AS n_rows,
-        |  CAST(COALESCE(SUM(((event_id * 31
-        |    + CAST(round(value * 100.0, 0) AS BIGINT)) % $P + $P) % $P),
-        |    0) % $P AS BIGINT) AS fp
-        |FROM events GROUP BY 1 ORDER BY year""".stripMargin
-    },
-    // A17 — gen 0 lacks props+event_type (all-NULL backfill), gen 1
-    // lacks event_type; natural nulls ride through unchanged.
-    "q_schema_evolution" ->
-      """SELECT CAST(event_id % 3 AS INT) AS gen, count(*) AS n_rows,
-        |  CAST(sum(CASE WHEN event_id % 3 = 0 OR props IS NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_null_props,
-        |  CAST(sum(CASE WHEN event_id % 3 < 2 OR event_type IS NULL
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_null_event_type
-        |FROM events GROUP BY 1 ORDER BY gen""".stripMargin,
-    // A21 — 4 live + 2 planted orphan files; the sweep deletes the 2,
-    // the re-run finds none, the table rows survive.
-    "q_orphan_audit" ->
-      """SELECT CAST(6 AS BIGINT) AS n_files,
-        |  CAST(4 AS BIGINT) AS n_referenced,
-        |  CAST(2 AS BIGINT) AS n_orphans,
-        |  CAST(2 AS BIGINT) AS n_deleted,
-        |  CAST(0 AS BIGINT) AS n_orphans_after,
-        |  count(*) AS n_rows_live
-        |FROM events WHERE event_id % 5 = 0
-        |ORDER BY n_files""".stripMargin,
-    // A22 — parquet footer value counts include nulls on flat
-    // schemas; footer-stats null counts are the logical cell the
-    // oracle prices per column.
-    "q_storage_profile" ->
-      """SELECT col AS "column", count(*) AS n_values,
-        |  CAST(sum(CASE col
-        |    WHEN 'event_id' THEN CASE WHEN event_id IS NULL THEN 1 ELSE 0 END
-        |    WHEN 'user_id' THEN CASE WHEN user_id IS NULL THEN 1 ELSE 0 END
-        |    WHEN 'event_type' THEN CASE WHEN event_type IS NULL THEN 1 ELSE 0 END
-        |    WHEN 'value' THEN CASE WHEN value IS NULL THEN 1 ELSE 0 END
-        |    WHEN 'props' THEN CASE WHEN props IS NULL THEN 1 ELSE 0 END
-        |  END) AS BIGINT) AS n_nulls
-        |FROM events
-        |CROSS JOIN (SELECT unnest(['event_id', 'user_id', 'event_type',
-        |  'value', 'props']) AS col) c
-        |GROUP BY 1 ORDER BY "column"""".stripMargin,
-  )
+  /** Key → DuckDB oracle SQL over the sfDir tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, k) => n -> k.oracle }
 }

@@ -76,25 +76,8 @@ case class CdcChunks(child: Expression, maskBits: Int)
 object CdcChunks {
   /** Build from SQL-registry arguments with plan-time validation. */
   def fromArgs(exprs: Seq[Expression]): CdcChunks = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_cdc(text, maskBits): $why")
-    if (exprs.length != 2)
-      fail(s"takes exactly 2 arguments, got ${exprs.length}")
-    val e = exprs(1)
-    if (!e.foldable) fail("maskBits must be a literal")
-    val m = e.eval(null) match {
-      case i: java.lang.Integer => i.intValue
-      case l: java.lang.Long =>
-        // range-check BEFORE narrowing: a 2^32+k literal must fail,
-        // not silently truncate to its low bits (the Winnow rule)
-        if (l < 1 || l > Int.MaxValue) fail(s"maskBits out of range: $l")
-        l.intValue
-      case s: java.lang.Short => s.intValue
-      case b: java.lang.Byte => b.intValue
-      case other => fail(s"maskBits must be an integer literal, got " +
-        (if (other == null) "NULL" else other.getClass.getSimpleName)); 0
-    }
-    if (m < 1 || m > 30) fail(s"maskBits must be in [1, 30], got $m")
-    CdcChunks(exprs.head, m)
+    val a = Args("graft_cdc(text, maskBits)")
+    a.arity(exprs, 2)
+    CdcChunks(exprs.head, a.intLit(exprs(1), "maskBits", 1, 30))
   }
 }

@@ -57,8 +57,7 @@ case class CharEntropy(child: Expression) extends UnaryExpression
 
 object CharEntropy {
   def fromArgs(exprs: Seq[Expression]): CharEntropy = {
-    if (exprs.length != 1) throw new IllegalArgumentException(
-      s"graft_charentropy(str): takes exactly 1 argument, got ${exprs.length}")
+    Args("graft_charentropy(str)").arity(exprs, 1)
     CharEntropy(exprs.head)
   }
 }

@@ -56,22 +56,8 @@ object CharGrams {
     * non-literal, non-integer, or missing `n` must fail analysis with
     * a message naming the signature, not NPE inside `eval(null)`. */
   def fromArgs(exprs: Seq[Expression]): CharGrams = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_grams(str, n): $why")
-    if (exprs.length != 2)
-      fail(s"takes exactly 2 arguments, got ${exprs.length}")
-    val nExpr = exprs(1)
-    if (!nExpr.foldable) fail("n must be a literal")
-    val n = nExpr.eval(null) match {
-      case i: java.lang.Integer => i.intValue
-      case l: java.lang.Long =>
-        if (l < 1 || l > Int.MaxValue) fail(s"n out of range: $l"); l.intValue
-      case s: java.lang.Short => s.intValue
-      case b: java.lang.Byte => b.intValue
-      case null => fail("n must not be NULL")
-      case other => fail(s"n must be an integer literal, got ${other.getClass.getSimpleName}")
-    }
-    if (n < 1) fail(s"n must be positive, got $n")
-    CharGrams(exprs.head, n)
+    val a = Args("graft_grams(str, n)")
+    a.arity(exprs, 2)
+    CharGrams(exprs.head, a.intLit(exprs(1), "n", 1, Int.MaxValue))
   }
 }

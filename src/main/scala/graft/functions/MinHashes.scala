@@ -75,23 +75,10 @@ case class MinHashes(child: Expression, k: Int) extends UnaryExpression
 object MinHashes {
   /** Build from SQL-registry arguments with plan-time validation. */
   def fromArgs(exprs: Seq[Expression]): MinHashes = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_minhashes(th, k): $why")
-    if (exprs.length != 2)
-      fail(s"takes exactly 2 arguments, got ${exprs.length}")
-    if (!exprs(1).foldable) fail("k must be a literal")
-    val k = exprs(1).eval(null) match {
-      case i: java.lang.Integer => i.intValue
-      case l: java.lang.Long => l.longValue match {
-        case v if v < 1 || v > 1024 => fail(s"k out of range: $v")
-        case v => v.toInt
-      }
-      case null => fail("k must not be NULL")
-      case other => fail(s"k must be an integer literal, got ${other.getClass.getSimpleName}")
-    }
-    // Bound k on EVERY literal type: each row allocates a k-element
-    // array, so an absurd k is an executor OOM, not a user knob.
-    if (k < 1 || k > 1024) fail(s"k out of range: $k")
-    MinHashes(exprs.head, k)
+    val a = Args("graft_minhashes(th, k)")
+    a.arity(exprs, 2)
+    // Each row allocates a k-element array, so an absurd k is an
+    // executor OOM, not a user knob.
+    MinHashes(exprs.head, a.intLit(exprs(1), "k", 1, 1024))
   }
 }

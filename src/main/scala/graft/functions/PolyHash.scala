@@ -77,9 +77,7 @@ object PolyHash {
 
   /** Build from SQL-registry arguments with an arity check. */
   def fromArgs(exprs: Seq[Expression]): PolyHash = {
-    if (exprs.length != 1)
-      throw new IllegalArgumentException(
-        s"graft_polyhash(str) takes exactly 1 argument, got ${exprs.length}")
+    Args("graft_polyhash(str)").arity(exprs, 1)
     PolyHash(exprs.head)
   }
 }

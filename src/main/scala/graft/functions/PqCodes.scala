@@ -84,32 +84,11 @@ case class PqCodes(left: Expression, right: Expression,
 object PqCodes {
   /** Build from SQL-registry arguments with plan-time validation. */
   def fromArgs(exprs: Seq[Expression]): PqCodes = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_pqcodes(v, cents, nSub, subDim, k): $why")
-    if (exprs.length != 5)
-      fail(s"takes exactly 5 arguments, got ${exprs.length}")
-    def intLit(e: Expression, name: String, lo: Int, hi: Int): Int = {
-      if (!e.foldable) fail(s"$name must be a literal")
-      e.eval(null) match {
-        case i: java.lang.Integer => i.intValue match {
-          case v if v < lo || v > hi => fail(s"$name out of range: $v"); 0
-          case v => v
-        }
-        case l: java.lang.Long => l.longValue match {
-          case v if v < lo || v > hi => fail(s"$name out of range: $v"); 0
-          case v => v.toInt
-        }
-        case null => fail(s"$name must not be NULL"); 0
-        case other =>
-          fail(s"$name must be an integer literal, got " +
-            other.getClass.getSimpleName); 0
-      }
-    }
+    val a = Args("graft_pqcodes(v, cents, nSub, subDim, k)")
+    a.arity(exprs, 5)
     // Bounds keep the per-row work and output allocation sane: the
     // codebook is nSub*k*subDim floats evaluated per row.
-    val nSub = intLit(exprs(2), "nSub", 1, 256)
-    val subDim = intLit(exprs(3), "subDim", 1, 4096)
-    val k = intLit(exprs(4), "k", 1, 65536)
-    PqCodes(exprs.head, exprs(1), nSub, subDim, k)
+    PqCodes(exprs.head, exprs(1), a.intLit(exprs(2), "nSub", 1, 256),
+      a.intLit(exprs(3), "subDim", 1, 4096), a.intLit(exprs(4), "k", 1, 65536))
   }
 }

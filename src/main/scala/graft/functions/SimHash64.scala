@@ -50,21 +50,8 @@ case class SimHash64(child: Expression, bits: Int) extends UnaryExpression
 object SimHash64 {
   /** Build from SQL-registry arguments with plan-time validation. */
   def fromArgs(exprs: Seq[Expression]): SimHash64 = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_simhash(th, bits): $why")
-    if (exprs.length != 2)
-      fail(s"takes exactly 2 arguments, got ${exprs.length}")
-    if (!exprs(1).foldable) fail("bits must be a literal")
-    val bits = exprs(1).eval(null) match {
-      case i: java.lang.Integer => i.intValue
-      case l: java.lang.Long => l.longValue match {
-        case v if v < 1 || v > 64 => fail(s"bits out of range: $v")
-        case v => v.toInt
-      }
-      case null => fail("bits must not be NULL")
-      case other => fail(s"bits must be an integer literal, got ${other.getClass.getSimpleName}")
-    }
-    if (bits < 1 || bits > 64) fail(s"bits out of range: $bits")
-    SimHash64(exprs.head, bits)
+    val a = Args("graft_simhash(th, bits)")
+    a.arity(exprs, 2)
+    SimHash64(exprs.head, a.intLit(exprs(1), "bits", 1, 64))
   }
 }

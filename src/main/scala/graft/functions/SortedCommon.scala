@@ -69,10 +69,7 @@ case class SortedCommon(left: Expression, right: Expression)
 
 object SortedCommon {
   def fromArgs(exprs: Seq[Expression]): SortedCommon = {
-    if (exprs.length != 2)
-      throw new IllegalArgumentException(
-        s"graft_sorted_ncommon(a, b) takes exactly 2 arguments, " +
-          s"got ${exprs.length}")
+    Args("graft_sorted_ncommon(a, b)").arity(exprs, 2)
     SortedCommon(exprs.head, exprs(1))
   }
 }

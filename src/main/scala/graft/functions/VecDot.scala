@@ -57,9 +57,7 @@ case class VecDot(left: Expression, right: Expression)
 object VecDot {
   /** Build from SQL-registry arguments with an arity check. */
   def fromArgs(exprs: Seq[Expression]): VecDot = {
-    if (exprs.length != 2)
-      throw new IllegalArgumentException(
-        s"graft_vecdot(a, b) takes exactly 2 arguments, got ${exprs.length}")
+    Args("graft_vecdot(a, b)").arity(exprs, 2)
     VecDot(exprs.head, exprs(1))
   }
 }

@@ -105,29 +105,9 @@ case class Winnow(child: Expression, k: Int, w: Int) extends UnaryExpression
 object Winnow {
   /** Build from SQL-registry arguments with plan-time validation. */
   def fromArgs(exprs: Seq[Expression]): Winnow = {
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"graft_winnow(text, k, w): $why")
-    if (exprs.length != 3)
-      fail(s"takes exactly 3 arguments, got ${exprs.length}")
-    def intLit(e: Expression, name: String): Int = {
-      if (!e.foldable) fail(s"$name must be a literal")
-      e.eval(null) match {
-        case i: java.lang.Integer => i.intValue
-        case l: java.lang.Long =>
-          if (l < 1 || l > Int.MaxValue) fail(s"$name out of range: $l")
-          l.intValue
-        case s: java.lang.Short => s.intValue
-        case b: java.lang.Byte => b.intValue
-        case null => fail(s"$name must not be NULL"); 0
-        case other =>
-          fail(s"$name must be an integer literal, got " +
-            other.getClass.getSimpleName); 0
-      }
-    }
-    val k = intLit(exprs(1), "k")
-    val w = intLit(exprs(2), "w")
-    if (k < 1) fail(s"k must be positive, got $k")
-    if (w < 1) fail(s"w must be positive, got $w")
-    Winnow(exprs.head, k, w)
+    val a = Args("graft_winnow(text, k, w)")
+    a.arity(exprs, 3)
+    Winnow(exprs.head, a.intLit(exprs(1), "k", 1, Int.MaxValue),
+      a.intLit(exprs(2), "w", 1, Int.MaxValue))
   }
 }

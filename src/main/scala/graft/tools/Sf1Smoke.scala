@@ -41,48 +41,41 @@ object Sf1Smoke {
     val spark = GraftSession.local(cpus)
     spark.range(1000L).write.format("noop").mode("overwrite").save()
 
-    val docsPath = s"$outDir/documents.parquet"
-    val srcRows = spark.read.parquet(s"$src/documents.parquet").count()
-    // Cache guard on _SUCCESS, not bare directory existence: a killed
-    // prior write leaves a partial directory that would silently time
-    // the family on a fraction of the corpus.
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$docsPath/_SUCCESS"))) {
-      spark.read.parquet(s"$src/documents.parquet")
-        .crossJoin(spark.range(replicas).select(col("id").as("replica")))
-        .select((col("doc_id") + col("replica") * lit(5000000000L)).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .repartition(8)
-        .write.mode("overwrite").parquet(docsPath)
+    // `copies` copies of `$src/$table.parquet` at
+    // `$outDir/$table.parquet`, each `keys` column remapped to
+    // key + copy * 5e9 so every copy is a disjoint key universe. Cache
+    // guard on _SUCCESS, not bare directory existence: a killed prior
+    // write leaves a partial directory that would silently time the
+    // family on a fraction of the corpus. A stale cache (source
+    // regenerated since) must fail loudly, not mislabel the results.
+    def replicate(table: String, copies: Int, keys: String*): Unit = {
+      val p = s"$outDir/$table.parquet"
+      val source = spark.read.parquet(s"$src/$table.parquet")
+      val srcN = source.count()
+      if (!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$p/_SUCCESS"))) {
+        val cols = source.columns.toSeq.map { c =>
+          if (keys.contains(c)) (col(c) + col("replica") * lit(5000000000L)).as(c)
+          else col(c)
+        }
+        source.crossJoin(spark.range(copies).select(col("id").as("replica")))
+          .select(cols: _*)
+          .repartition(8)
+          .write.mode("overwrite").parquet(p)
+      }
+      val n = spark.read.parquet(p).count()
+      require(n == copies * srcN,
+        s"$table replica has $n rows, expected ${copies * srcN} — " +
+          s"delete $outDir and rerun")
+      println(s"[sf1-smoke] $table rows=$n (${copies}x $src)")
     }
-    val n = spark.read.parquet(docsPath).count()
-    // A stale cache (source regenerated since) must fail loudly, not
-    // mislabel the results.
-    require(n == replicas * srcRows,
-      s"replica has $n rows, expected ${replicas * srcRows} — delete $outDir and rerun")
-    println(s"[sf1-smoke] corpus rows=$n (${replicas}x $src)")
-
-    // 10x embeddings replica for the vector ops (round-8 additions).
+    replicate("documents", replicas, "doc_id")
+    // Embeddings replica for the vector ops (round-8 additions).
     // Replica 0 keeps the original vec_ids, so kmeansAssign's 0..k-1
     // init contract holds; the duplicated vectors make every kmeans
-    // cell and LSH bucket 10x hot, same worst-case logic as the docs.
-    val embPath = s"$outDir/embeddings.parquet"
-    val srcVecs = spark.read.parquet(s"$src/embeddings.parquet").count()
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$embPath/_SUCCESS"))) {
-      spark.read.parquet(s"$src/embeddings.parquet")
-        .crossJoin(spark.range(replicas).select(col("id").as("replica")))
-        .select((col("vec_id") + col("replica") * lit(5000000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-        .repartition(8)
-        .write.mode("overwrite").parquet(embPath)
-    }
-    val nv = spark.read.parquet(embPath).count()
-    require(nv == replicas * srcVecs,
-      s"embedding replica has $nv rows, expected ${replicas * srcVecs} — " +
-        s"delete $outDir and rerun")
-    println(s"[sf1-smoke] embedding rows=$nv (${replicas}x $src)")
-
+    // cell and LSH bucket replicas-hot, same worst-case logic as the
+    // docs.
+    replicate("embeddings", replicas, "vec_id")
     // Events replica for the temporal-join/tick family (round-9: the
     // only block whose scale claims rested solely on plan reads).
     // Symbols remap like doc_id: each replica is a fresh symbol set
@@ -92,29 +85,9 @@ object Sf1Smoke {
     // × more days) — scales 10x/100x. The as-of/nearest window state
     // per key is constant; what must NOT blow up is the shuffle and
     // the per-key window machinery across 10-100x more keys.
-    // ts is kept as RAW int64 nanos (read under nanosAsLong) so the
-    // replica parquet round-trips through Tables.events identically
-    // to the driver-generated table.
-    val eventsPath = s"$outDir/events.parquet"
-    val srcEvents = spark.read.parquet(s"$src/events.parquet").count()
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$eventsPath/_SUCCESS"))) {
-      spark.read.parquet(s"$src/events.parquet")
-        .crossJoin(spark.range(replicas).select(col("id").as("replica")))
-        .select(
-          (col("event_id") + col("replica") * lit(5000000000L)).as("event_id"),
-          col("ts"),
-          (col("user_id") + col("replica") * lit(5000000000L)).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .repartition(8)
-        .write.mode("overwrite").parquet(eventsPath)
-    }
-    val ne = spark.read.parquet(eventsPath).count()
-    require(ne == replicas * srcEvents,
-      s"events replica has $ne rows, expected ${replicas * srcEvents} — " +
-        s"delete $outDir and rerun")
-    println(s"[sf1-smoke] events rows=$ne (${replicas}x $src)")
-
+    // ts is copied as stored, so the replica parquet round-trips
+    // through Tables.events identically to the driver-generated table.
+    replicate("events", replicas, "event_id", "user_id")
     // TPC-H replicas (round-16, whole-registry sweep): the C-family
     // analytics read lineitem/orders/customer/supplier/part. Primary
     // AND foreign keys remap together (+replica·5e9) so every join
@@ -122,44 +95,16 @@ object Sf1Smoke {
     // which scales the join/agg KEY CARDINALITY 10-100x while
     // per-key density stays at sf0.1 (the same growth axis as the
     // events replica's symbol remap). nation/region are semantic
-    // constants (25/5 rows) — copied, not replicated, so nationkey
+    // constants (25/5 rows) — copied once, not remapped, so nationkey
     // joins still land.
-    def replicate(table: String, remap: Seq[(String, Boolean)]): Unit = {
-      val p = s"$outDir/$table.parquet"
-      val srcN = spark.read.parquet(s"$src/$table.parquet").count()
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$p/_SUCCESS"))) {
-        val df = spark.read.parquet(s"$src/$table.parquet")
-        val cols = remap.map { case (c, isKey) =>
-          if (isKey) (col(c) + col("replica") * lit(5000000000L)).as(c)
-          else col(c)
-        }
-        df.crossJoin(spark.range(replicas).select(col("id").as("replica")))
-          .select(cols: _*)
-          .repartition(8)
-          .write.mode("overwrite").parquet(p)
-      }
-      val nRep = spark.read.parquet(p).count()
-      require(nRep == replicas * srcN,
-        s"$table replica has $nRep rows, expected ${replicas * srcN} — " +
-          s"delete $outDir and rerun")
-      println(s"[sf1-smoke] $table rows=$nRep (${replicas}x $src)")
-    }
-    def copyTable(table: String): Unit = {
-      val p = s"$outDir/$table.parquet"
-      val srcN = spark.read.parquet(s"$src/$table.parquet").count()
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$p/_SUCCESS")))
-        spark.read.parquet(s"$src/$table.parquet")
-          .write.mode("overwrite").parquet(p)
-      // Same staleness guard as replicate(): a cached copy from
-      // before a testdata regeneration must fail loudly, not be
-      // silently reused (r16 advice).
-      val nCopy = spark.read.parquet(p).count()
-      require(nCopy == srcN,
-        s"$table copy has $nCopy rows, expected $srcN — delete $outDir " +
-          "and rerun")
-    }
+    replicate("lineitem", replicas, "l_orderkey", "l_partkey", "l_suppkey")
+    replicate("orders", replicas, "o_orderkey", "o_custkey")
+    replicate("customer", replicas, "c_custkey")
+    replicate("supplier", replicas, "s_suppkey")
+    replicate("part", replicas, "p_partkey")
+    replicate("nation", 1)
+    replicate("region", 1)
+
     // STREAMING replica (r16 verdict #2): the 49-key G-family was
     // excluded from the 10x bracket because naive replication repeats
     // the same time span in every +5e9 id block, breaking the tape's
@@ -181,6 +126,7 @@ object Sf1Smoke {
       import org.apache.spark.sql.types.LongType
       val p = s"$streamDir/events.parquet"
       val raw = spark.read.parquet(s"$src/events.parquet")
+      val srcEvents = raw.count()
       val isNanos = raw.schema("ts").dataType == LongType
       if (!java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$p/_SUCCESS"))) {
@@ -240,24 +186,6 @@ object Sf1Smoke {
           s" — delete $outDir and rerun")
       }
     }
-    replicate("lineitem", Seq("l_orderkey" -> true, "l_partkey" -> true,
-      "l_suppkey" -> true, "l_linenumber" -> false, "l_quantity" -> false,
-      "l_extendedprice" -> false, "l_discount" -> false, "l_tax" -> false,
-      "l_returnflag" -> false, "l_linestatus" -> false,
-      "l_shipdate" -> false))
-    replicate("orders", Seq("o_orderkey" -> true, "o_custkey" -> true,
-      "o_orderstatus" -> false, "o_totalprice" -> false,
-      "o_orderdate" -> false, "o_orderpriority" -> false))
-    replicate("customer", Seq("c_custkey" -> true, "c_name" -> false,
-      "c_nationkey" -> false, "c_acctbal" -> false,
-      "c_mktsegment" -> false))
-    replicate("supplier", Seq("s_suppkey" -> true, "s_name" -> false,
-      "s_nationkey" -> false, "s_acctbal" -> false))
-    replicate("part", Seq("p_partkey" -> true, "p_name" -> false,
-      "p_brand" -> false, "p_type" -> false, "p_size" -> false,
-      "p_retailprice" -> false))
-    copyTable("nation")
-    copyTable("region")
 
     // Whole-registry sweep (r15 verdict #4): every SparkEntry key at
     // the 10x replica, timed twice, JSON out — the standing

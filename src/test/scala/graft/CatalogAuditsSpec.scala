@@ -70,19 +70,12 @@ class CatalogAuditsSpec extends SparkSpec {
       (1L, "he said \"hi\" \\ and \t left", "en", "s0", 0L),
       (2L, "plain", "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsspec")
-    try {
+    withTempDir("graft_jsspec") { dir =>
       nasty.write.mode("overwrite").json(dir.toString)
       val got = spark.read.json(dir.toString)
         .select("doc_id", "text").as[(Long, String)].collect().toMap
       assert(got(1L) == "he said \"hi\" \\ and \t left")
       assert(got(2L) == "plain")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 

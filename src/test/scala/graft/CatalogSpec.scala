@@ -185,34 +185,36 @@ class CatalogSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema reconciles generations, old rows " +
       "backfill NULL in late-added columns, gen predicates prune") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
-    // gen 1: (tick_id, bid); gen 2 adds venue; gen 3 adds venue + qty
-    Seq((1L, 1.0), (2L, 1.1)).toDF("tick_id", "bid")
-      .write.parquet(s"$dir/gen=1")
-    Seq((3L, 1.2, "X")).toDF("tick_id", "bid", "venue")
-      .write.parquet(s"$dir/gen=2")
-    Seq((4L, 1.3, "Y", 7L), (5L, 1.4, "X", 9L))
-      .toDF("tick_id", "bid", "venue", "qty")
-      .write.parquet(s"$dir/gen=3")
-    val merged = CatalogOps.mergedRead(spark, dir)
-    assert(merged.columns.toSet == Set("tick_id", "bid", "venue", "qty", "gen"))
-    assert(merged.count() == 5L)
-    // late-added columns are NULL exactly for pre-evolution rows
-    assert(merged.filter($"venue".isNull).select("tick_id")
-      .as[Long].collect().toSet == Set(1L, 2L))
-    assert(merged.filter($"qty".isNotNull).count() == 2L)
-    val rep = CatalogOps.evolutionReport(spark, dir, Seq("venue", "qty"))
-      .as[(Int, Long, Long, Long)].collect().toSeq
-    assert(rep == Seq((1, 2L, 2L, 2L), (2, 1L, 0L, 1L), (3, 2L, 0L, 0L)))
-    // generation predicate reaches the scan as a partition filter
-    val plan = merged.filter($"gen" === 3).queryExecution.executedPlan
-    val scans = plan.collect {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.collect {
-        case f: FileSourceScanExec => f }
-      case f: FileSourceScanExec => Seq(f)
-    }.flatten
-    assert(scans.nonEmpty && scans.forall(
-      _.partitionFilters.exists(_.references.exists(_.name == "gen"))))
+    withTempDir("graft_evo") { tmp =>
+      val dir = tmp.toString
+      // gen 1: (tick_id, bid); gen 2 adds venue; gen 3 adds venue + qty
+      Seq((1L, 1.0), (2L, 1.1)).toDF("tick_id", "bid")
+        .write.parquet(s"$dir/gen=1")
+      Seq((3L, 1.2, "X")).toDF("tick_id", "bid", "venue")
+        .write.parquet(s"$dir/gen=2")
+      Seq((4L, 1.3, "Y", 7L), (5L, 1.4, "X", 9L))
+        .toDF("tick_id", "bid", "venue", "qty")
+        .write.parquet(s"$dir/gen=3")
+      val merged = CatalogOps.mergedRead(spark, dir)
+      assert(merged.columns.toSet == Set("tick_id", "bid", "venue", "qty", "gen"))
+      assert(merged.count() == 5L)
+      // late-added columns are NULL exactly for pre-evolution rows
+      assert(merged.filter($"venue".isNull).select("tick_id")
+        .as[Long].collect().toSet == Set(1L, 2L))
+      assert(merged.filter($"qty".isNotNull).count() == 2L)
+      val rep = CatalogOps.evolutionReport(spark, dir, Seq("venue", "qty"))
+        .as[(Int, Long, Long, Long)].collect().toSeq
+      assert(rep == Seq((1, 2L, 2L, 2L), (2, 1L, 0L, 1L), (3, 2L, 0L, 0L)))
+      // generation predicate reaches the scan as a partition filter
+      val plan = merged.filter($"gen" === 3).queryExecution.executedPlan
+      val scans = plan.collect {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.collect {
+          case f: FileSourceScanExec => f }
+        case f: FileSourceScanExec => Seq(f)
+      }.flatten
+      assert(scans.nonEmpty && scans.forall(
+        _.partitionFilters.exists(_.references.exists(_.name == "gen"))))
+    }
   }
 
   test("eraseKeys rewrites only partitions holding subjects, reports " +
@@ -379,96 +381,100 @@ class CatalogSpec extends SparkSpec {
   test("A24 multi-table atomic publish: readers see a CONSISTENT " +
       "table set; a torn publish (data written, manifest missing) " +
       "is invisible; unchanged tables carry forward") {
-    val root = java.nio.file.Files.createTempDirectory("a24").toString
-    import spark.implicits._
-    val factV1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
-    val dimV1 = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
-    val v1 = CatalogOps.publishTables(spark, root,
-      Map("fact" -> factV1, "dim" -> dimV1))
-    assert(v1 == 1)
-    assert(CatalogOps.readPublished(spark, root, "fact").count() == 2)
-    assert(CatalogOps.readPublished(spark, root, "dim").count() == 2)
+    withTempDir("a24") { tmp =>
+      val root = tmp.toString
+      import spark.implicits._
+      val factV1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
+      val dimV1 = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
+      val v1 = CatalogOps.publishTables(spark, root,
+        Map("fact" -> factV1, "dim" -> dimV1))
+      assert(v1 == 1)
+      assert(CatalogOps.readPublished(spark, root, "fact").count() == 2)
+      assert(CatalogOps.readPublished(spark, root, "dim").count() == 2)
 
-    // TORN publish: new fact data lands on disk with NO manifest —
-    // readers must stay pinned to v1 for BOTH tables
-    Seq((9L, 99.0)).toDF("k", "v")
-      .write.mode("overwrite").parquet(s"$root/fact/v2")
-    assert(CatalogOps.currentManifestVersion(root) == 1)
-    assert(CatalogOps.readPublished(spark, root, "fact")
-      .as[(Long, Double)].collect().toSet == Set((1L, 10.0), (2L, 20.0)),
-      "uncommitted directories must be invisible to readers")
+      // TORN publish: new fact data lands on disk with NO manifest —
+      // readers must stay pinned to v1 for BOTH tables
+      Seq((9L, 99.0)).toDF("k", "v")
+        .write.mode("overwrite").parquet(s"$root/fact/v2")
+      assert(CatalogOps.currentManifestVersion(root) == 1)
+      assert(CatalogOps.readPublished(spark, root, "fact")
+        .as[(Long, Double)].collect().toSet == Set((1L, 10.0), (2L, 20.0)),
+        "uncommitted directories must be invisible to readers")
 
-    // real v2 publish updates ONLY the fact; dim carries forward
-    val v2 = CatalogOps.publishTables(spark, root,
-      Map("fact" -> Seq((3L, 30.0)).toDF("k", "v")))
-    assert(v2 == 2)
-    assert(CatalogOps.readPublished(spark, root, "fact")
-      .as[(Long, Double)].collect().toSeq == Seq((3L, 30.0)))
-    assert(CatalogOps.readManifest(root)("dim") == "dim/v1",
-      "unchanged table must keep its committed directory")
-    assert(CatalogOps.readPublished(spark, root, "dim").count() == 2)
+      // real v2 publish updates ONLY the fact; dim carries forward
+      val v2 = CatalogOps.publishTables(spark, root,
+        Map("fact" -> Seq((3L, 30.0)).toDF("k", "v")))
+      assert(v2 == 2)
+      assert(CatalogOps.readPublished(spark, root, "fact")
+        .as[(Long, Double)].collect().toSeq == Seq((3L, 30.0)))
+      assert(CatalogOps.readManifest(root)("dim") == "dim/v1",
+        "unchanged table must keep its committed directory")
+      assert(CatalogOps.readPublished(spark, root, "dim").count() == 2)
+    }
   }
 
   test("A23 partition evolution: old spec keeps year-only pruning, " +
       "new spec prunes on (year, month); unioned read is one schema " +
       "and month predicates stay correct across both generations") {
-    val root = java.nio.file.Files.createTempDirectory("a23").toString
-    def t(s: String) = Timestamp.valueOf(s)
-    // gen 0 (pre-evolution): 2023 + Jan 2024, year-partitioned
-    val g0 = Seq(
-      (1L, t("2023-03-01 10:00:00"), 1.0),
-      (2L, t("2023-07-01 10:00:00"), 2.0),
-      (3L, t("2024-01-05 10:00:00"), 3.0),
-      (4L, t("2024-01-20 10:00:00"), 4.0))
-      .toDF("id", "ts", "v")
-    // gen 1 (post-evolution): Feb/Mar 2024, (year, month)-partitioned
-    val g1 = Seq(
-      (5L, t("2024-02-10 10:00:00"), 5.0),
-      (6L, t("2024-03-15 10:00:00"), 6.0),
-      (7L, t("2024-03-20 10:00:00"), 7.0))
-      .toDF("id", "ts", "v")
-    CatalogOps.writePartitionSpec(g0, root, 0)
-    CatalogOps.writePartitionSpec(g1, root, 1)
+    withTempDir("a23") { tmp =>
+      val root = tmp.toString
+      def t(s: String) = Timestamp.valueOf(s)
+      // gen 0 (pre-evolution): 2023 + Jan 2024, year-partitioned
+      val g0 = Seq(
+        (1L, t("2023-03-01 10:00:00"), 1.0),
+        (2L, t("2023-07-01 10:00:00"), 2.0),
+        (3L, t("2024-01-05 10:00:00"), 3.0),
+        (4L, t("2024-01-20 10:00:00"), 4.0))
+        .toDF("id", "ts", "v")
+      // gen 1 (post-evolution): Feb/Mar 2024, (year, month)-partitioned
+      val g1 = Seq(
+        (5L, t("2024-02-10 10:00:00"), 5.0),
+        (6L, t("2024-03-15 10:00:00"), 6.0),
+        (7L, t("2024-03-20 10:00:00"), 7.0))
+        .toDF("id", "ts", "v")
+      CatalogOps.writePartitionSpec(g0, root, 0)
+      CatalogOps.writePartitionSpec(g1, root, 1)
 
-    val all = CatalogOps.evolvedPartitionRead(spark, root)
-    assert(all.count() == 7L)
-    // one schema: every row carries mo, derived for gen-0 rows
-    assert(all.filter($"spec" === 0 && $"mo" === 1).count() == 2L)
+      val all = CatalogOps.evolvedPartitionRead(spark, root)
+      assert(all.count() == 7L)
+      // one schema: every row carries mo, derived for gen-0 rows
+      assert(all.filter($"spec" === 0 && $"mo" === 1).count() == 2L)
 
-    // year predicate: partition filter on BOTH generation scans
-    def scansOf(df: org.apache.spark.sql.DataFrame) = {
-      df.count() // settle the AQE final plan before reading it
-      df.queryExecution.executedPlan.collect {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.collect {
-          case f: FileSourceScanExec => f }
-        case f: FileSourceScanExec => Seq(f)
-      }.flatten
+      // year predicate: partition filter on BOTH generation scans
+      def scansOf(df: org.apache.spark.sql.DataFrame) = {
+        df.count() // settle the AQE final plan before reading it
+        df.queryExecution.executedPlan.collect {
+          case a: AdaptiveSparkPlanExec => a.executedPlan.collect {
+            case f: FileSourceScanExec => f }
+          case f: FileSourceScanExec => Seq(f)
+        }.flatten
+      }
+      val byYear = all.filter($"yr" === 2024)
+      assert(byYear.count() == 5L)
+      val yearScans = scansOf(byYear)
+      assert(yearScans.length == 2)
+      assert(yearScans.forall(_.partitionFilters.exists(
+        _.toString.contains("yr"))),
+        "year predicate must prune directories in BOTH specs")
+
+      // month predicate: directory pruning under spec 1, data filter
+      // (derived month(ts)) under spec 0 — and the answer is right
+      val march = all.filter($"mo" === 3)
+      assert(march.select("id").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 6L, 7L))
+      val marchScans = scansOf(march)
+      val s1Scan = marchScans.find(
+        _.relation.location.rootPaths.exists(_.toString.contains("spec=1")))
+        .get
+      val s0Scan = marchScans.find(
+        _.relation.location.rootPaths.exists(_.toString.contains("spec=0")))
+        .get
+      assert(s1Scan.partitionFilters.exists(_.toString.contains("mo")),
+        "evolved spec must prune month directories")
+      assert(!s0Scan.partitionFilters.exists(_.toString.contains("mo")) &&
+        s0Scan.dataFilters.nonEmpty,
+        "pre-evolution spec answers the month predicate with a data " +
+          "filter, never a wrong prune")
     }
-    val byYear = all.filter($"yr" === 2024)
-    assert(byYear.count() == 5L)
-    val yearScans = scansOf(byYear)
-    assert(yearScans.length == 2)
-    assert(yearScans.forall(_.partitionFilters.exists(
-      _.toString.contains("yr"))),
-      "year predicate must prune directories in BOTH specs")
-
-    // month predicate: directory pruning under spec 1, data filter
-    // (derived month(ts)) under spec 0 — and the answer is right
-    val march = all.filter($"mo" === 3)
-    assert(march.select("id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 6L, 7L))
-    val marchScans = scansOf(march)
-    val s1Scan = marchScans.find(
-      _.relation.location.rootPaths.exists(_.toString.contains("spec=1")))
-      .get
-    val s0Scan = marchScans.find(
-      _.relation.location.rootPaths.exists(_.toString.contains("spec=0")))
-      .get
-    assert(s1Scan.partitionFilters.exists(_.toString.contains("mo")),
-      "evolved spec must prune month directories")
-    assert(!s0Scan.partitionFilters.exists(_.toString.contains("mo")) &&
-      s0Scan.dataFilters.nonEmpty,
-      "pre-evolution spec answers the month predicate with a data " +
-        "filter, never a wrong prune")
   }
 }

@@ -14,26 +14,27 @@ class FileOrderSpec extends SparkSpec {
   private def t(s: String) = Timestamp.valueOf(s)
 
   test("fileRanges orders files chronologically in one job") {
-    val dir = Files.createTempDirectory("graft_order")
-    // three files written out of name-order vs time-order
-    Seq((1L, t("2024-03-01 00:00:00"), 1.0))
-      .toDF("tick_id", "ts", "bid").write.parquet(s"$dir/c.parquet")
-    Seq((2L, t("2024-01-01 00:00:00"), 2.0), (3L, t("2024-01-02 00:00:00"), 3.0))
-      .toDF("tick_id", "ts", "bid").coalesce(1).write.parquet(s"$dir/a.parquet")
-    Seq((4L, t("2024-02-01 00:00:00"), 4.0))
-      .toDF("tick_id", "ts", "bid").write.parquet(s"$dir/b.parquet")
-    val df = spark.read.parquet(s"$dir/c.parquet", s"$dir/a.parquet", s"$dir/b.parquet")
-    val ranges = FileOrder.fileRanges(df, "ts").collect()
-    assert(ranges.length == 3)
-    val ordered = ranges.sortBy(_.getAs[Int]("file_order"))
-      .map(r => (r.getAs[String]("file").split("/").takeRight(2).head,
-        r.getAs[Long]("n_ticks")))
-    assert(ordered.toSeq == Seq(("a.parquet", 2L), ("b.parquet", 1L), ("c.parquet", 1L)))
+    withTempDir("graft_order") { dir =>
+      // three files written out of name-order vs time-order
+      Seq((1L, t("2024-03-01 00:00:00"), 1.0))
+        .toDF("tick_id", "ts", "bid").write.parquet(s"$dir/c.parquet")
+      Seq((2L, t("2024-01-01 00:00:00"), 2.0), (3L, t("2024-01-02 00:00:00"), 3.0))
+        .toDF("tick_id", "ts", "bid").coalesce(1).write.parquet(s"$dir/a.parquet")
+      Seq((4L, t("2024-02-01 00:00:00"), 4.0))
+        .toDF("tick_id", "ts", "bid").write.parquet(s"$dir/b.parquet")
+      val df = spark.read.parquet(s"$dir/c.parquet", s"$dir/a.parquet", s"$dir/b.parquet")
+      val ranges = FileOrder.fileRanges(df, "ts").collect()
+      assert(ranges.length == 3)
+      val ordered = ranges.sortBy(_.getAs[Int]("file_order"))
+        .map(r => (r.getAs[String]("file").split("/").takeRight(2).head,
+          r.getAs[Long]("n_ticks")))
+      assert(ordered.toSeq == Seq(("a.parquet", 2L), ("b.parquet", 1L), ("c.parquet", 1L)))
 
-    val withOrder = FileOrder.withFileOrder(df, "ts")
-    val byTick = withOrder.select("tick_id", "file_order")
-      .as[(Long, Int)].collect().toMap
-    assert(byTick == Map(1L -> 3, 2L -> 1, 3L -> 1, 4L -> 2))
+      val withOrder = FileOrder.withFileOrder(df, "ts")
+      val byTick = withOrder.select("tick_id", "file_order")
+        .as[(Long, Int)].collect().toMap
+      assert(byTick == Map(1L -> 3, 2L -> 1, 3L -> 1, 4L -> 2))
+    }
   }
 
   test("streaming sessionWindows merges ticks within the gap, splits beyond it") {

@@ -85,46 +85,48 @@ class GoldIngestSpec extends SparkSpec {
     // sample under EURUSD plus a synthetic second symbol — proving the
     // symbol column really comes from the path, per
     // `Symbol Data And Stats/`'s four per-symbol tables.
-    val dir = java.nio.file.Files.createTempDirectory("gold").toString
-    spark.read.parquet(sampleFile.getPath)
-      .write.parquet(s"$dir/EURUSD")
-    spark.range(1000)
-      .select(
-        (lit(java.sql.Timestamp.valueOf("2026-02-02 02:00:00"))
-          + expr("make_interval(0,0,0,0,0,0,id)")).as("datetime"),
-        (lit(1.0) + $"id" / 1e4).as("bid"),
-        (lit(1.0001) + $"id" / 1e4).as("ask"))
-      .write.parquet(s"$dir/XAUUSD")
+    withTempDir("gold") { tmp =>
+      val dir = tmp.toString
+      spark.read.parquet(sampleFile.getPath)
+        .write.parquet(s"$dir/EURUSD")
+      spark.range(1000)
+        .select(
+          (lit(java.sql.Timestamp.valueOf("2026-02-02 02:00:00"))
+            + expr("make_interval(0,0,0,0,0,0,id)")).as("datetime"),
+          (lit(1.0) + $"id" / 1e4).as("bid"),
+          (lit(1.0001) + $"id" / 1e4).as("ask"))
+        .write.parquet(s"$dir/XAUUSD")
 
-    val t = GoldIngest.readDir(spark, dir)
-    val bySym = t.groupBy("symbol").count().as[(String, Long)]
-      .collect().toMap
-    assert(bySym == Map("EURUSD" -> 206815L, "XAUUSD" -> 1000L))
-    // tick_id is a dense rank PER symbol.
-    val ranks = t.groupBy("symbol")
-      .agg(min("tick_id"), max("tick_id"), count(lit(1)))
-      .as[(String, Long, Long, Long)].collect()
-    assert(ranks.forall { case (_, lo, hi, n) => lo == 1L && hi == n })
-    // The unioned multi-symbol view flows through the same tick
-    // pipeline as a single-symbol read: shift + session filter keeps
-    // all EURUSD rows (they sit in the windows — prior test) and the
-    // synthetic 02:00–02:17 UTC rows (04:00 GMT+2) land outside both
-    // windows.
-    val filtered = TickOps.sessionWindowFilter(
-      t.withColumn("ts", $"ts" + expr("INTERVAL 2 HOURS")))
-    val counts = filtered.groupBy("symbol").count().as[(String, Long)]
-      .collect().toMap
-    assert(counts("EURUSD") == 206815L)
-    assert(!counts.contains("XAUUSD"))
-    // dailyWindowCounts is a per-symbol statistic (the reference
-    // publishes one CSV per symbol) — select the symbol out of the
-    // unified view, as a user of the directory reader would.
-    val daily = TickOps.dailyWindowCounts(
-      t.filter($"symbol" === "EURUSD")
-        .withColumn("ts", $"ts" + expr("INTERVAL 2 HOURS")))
-    val eurTotal = daily
-      .agg(sum($"ticks_window1" + $"ticks_window2")).as[Long].head()
-    assert(eurTotal == 206815L)
+      val t = GoldIngest.readDir(spark, dir)
+      val bySym = t.groupBy("symbol").count().as[(String, Long)]
+        .collect().toMap
+      assert(bySym == Map("EURUSD" -> 206815L, "XAUUSD" -> 1000L))
+      // tick_id is a dense rank PER symbol.
+      val ranks = t.groupBy("symbol")
+        .agg(min("tick_id"), max("tick_id"), count(lit(1)))
+        .as[(String, Long, Long, Long)].collect()
+      assert(ranks.forall { case (_, lo, hi, n) => lo == 1L && hi == n })
+      // The unioned multi-symbol view flows through the same tick
+      // pipeline as a single-symbol read: shift + session filter keeps
+      // all EURUSD rows (they sit in the windows — prior test) and the
+      // synthetic 02:00–02:17 UTC rows (04:00 GMT+2) land outside both
+      // windows.
+      val filtered = TickOps.sessionWindowFilter(
+        t.withColumn("ts", $"ts" + expr("INTERVAL 2 HOURS")))
+      val counts = filtered.groupBy("symbol").count().as[(String, Long)]
+        .collect().toMap
+      assert(counts("EURUSD") == 206815L)
+      assert(!counts.contains("XAUUSD"))
+      // dailyWindowCounts is a per-symbol statistic (the reference
+      // publishes one CSV per symbol) — select the symbol out of the
+      // unified view, as a user of the directory reader would.
+      val daily = TickOps.dailyWindowCounts(
+        t.filter($"symbol" === "EURUSD")
+          .withColumn("ts", $"ts" + expr("INTERVAL 2 HOURS")))
+      val eurTotal = daily
+        .agg(sum($"ticks_window1" + $"ticks_window2")).as[Long].head()
+      assert(eurTotal == 206815L)
+    }
   }
 
   test("OHLC bars over the real sample are internally consistent") {

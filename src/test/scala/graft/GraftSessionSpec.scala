@@ -155,24 +155,23 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows == (for (x <- 199L to 0L by -1; id <- 0L until 20L) yield (id, x)))
   }
 
-  /** One-split parquet tables, written once: `orders(o_id, cust,
-    * amount)` with 4000 rows over 300 customers, `customer(cust,
-    * nation)` with 300 rows over 7 nations. */
-  private lazy val tables: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_one_stage").toString
-    spark.range(0, 4000, 1, 1).selectExpr("id AS o_id", "(id * 37) % 300 AS cust",
-        "(id * 7919) % 1000 AS amount")
-      .write.parquet(s"$d/orders")
-    spark.range(0, 300, 1, 1).selectExpr("id AS cust", "(id * 13) % 7 AS nation")
-      .write.parquet(s"$d/customer")
-    d
-  }
-  private def orders: DataFrame = spark.read.parquet(s"$tables/orders")
-  private def customer: DataFrame = spark.read.parquet(s"$tables/customer")
+  /** Runs `body` over one-split parquet tables in a fresh temp dir:
+    * `orders(o_id, cust, amount)` with 4000 rows over 300 customers,
+    * `customer(cust, nation)` with 300 rows over 7 nations. */
+  private def withTables[T](body: (DataFrame, DataFrame) => T): T =
+    withTempDir("graft_one_stage") { tmp =>
+      val d = tmp.toString
+      spark.range(0, 4000, 1, 1).selectExpr("id AS o_id", "(id * 37) % 300 AS cust",
+          "(id * 7919) % 1000 AS amount")
+        .write.parquet(s"$d/orders")
+      spark.range(0, 300, 1, 1).selectExpr("id AS cust", "(id * 13) % 7 AS nation")
+        .write.parquet(s"$d/customer")
+      body(spark.read.parquet(s"$d/orders"), spark.read.parquet(s"$d/customer"))
+    }
 
   /** Aggregate ⋈ table → rank window → sort, the shape of most small
     * registry keys. */
-  private def ranked: DataFrame =
+  private def ranked(orders: DataFrame, customer: DataFrame): DataFrame =
     orders.groupBy("cust").agg(sum("amount").as("total"))
       .join(customer, "cust")
       .withColumn("rk", rank().over(
@@ -185,91 +184,107 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("an aggregate ⋈ table → rank window → sort over one-split parquet " +
       "runs as one job, with the rows of the run gated at 1 KB") {
-    val df = ranked
-    var rows = Array.empty[Row]
-    val one = jobs { rows = df.collect() }
-    assert(one == 1, s"jobs: $one\n${df.queryExecution.executedPlan}")
-    assert(shuffles(df).isEmpty, shuffles(df))
-    assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]))
-    assert(nodes(df).exists(_.isInstanceOf[CoalesceExec]))
-    val gated = ranked
-    var gatedRows = Array.empty[Row]
-    val many = withAdvisory(1024) { jobs { gatedRows = gated.collect() } }
-    assert(many > 1, s"jobs at the 1 KB gate: $many")
-    assert(rankedRows(rows) == rankedRows(gatedRows))
-    assert(rows.length == 300)
+    withTables { (orders, customer) =>
+      val df = ranked(orders, customer)
+      var rows = Array.empty[Row]
+      val one = jobs { rows = df.collect() }
+      assert(one == 1, s"jobs: $one\n${df.queryExecution.executedPlan}")
+      assert(shuffles(df).isEmpty, shuffles(df))
+      assert(!nodes(df).exists(_.isInstanceOf[BroadcastExchangeExec]))
+      assert(nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+      val gated = ranked(orders, customer)
+      var gatedRows = Array.empty[Row]
+      val many = withAdvisory(1024) { jobs { gatedRows = gated.collect() } }
+      assert(many > 1, s"jobs at the 1 KB gate: $many")
+      assert(rankedRows(rows) == rankedRows(gatedRows))
+      assert(rows.length == 300)
+    }
   }
 
   test("the 1 KB gate keeps every shuffle of the ranked plan") {
-    val df = ranked
-    withAdvisory(1024) { df.collect() }
-    val ps = shuffles(df)
-    // the aggregate's and the window's hash shuffles, the sort's range
-    // shuffle, and the join's broadcast
-    assert(ps.count(_.isInstanceOf[HashPartitioning]) == 2, ps)
-    assert(ps.count(_.isInstanceOf[RangePartitioning]) == 1, ps)
-    assert(nodes(df).count(_.isInstanceOf[BroadcastExchangeExec]) == 1)
-    assert(nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]))
-    assert(!nodes(df).exists(p => p.isInstanceOf[CoalesceExec] ||
-      p.isInstanceOf[ShuffledHashJoinExec]))
+    withTables { (orders, customer) =>
+      val df = ranked(orders, customer)
+      withAdvisory(1024) { df.collect() }
+      val ps = shuffles(df)
+      // the aggregate's and the window's hash shuffles, the sort's range
+      // shuffle, and the join's broadcast
+      assert(ps.count(_.isInstanceOf[HashPartitioning]) == 2, ps)
+      assert(ps.count(_.isInstanceOf[RangePartitioning]) == 1, ps)
+      assert(nodes(df).count(_.isInstanceOf[BroadcastExchangeExec]) == 1)
+      assert(nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]))
+      assert(!nodes(df).exists(p => p.isInstanceOf[CoalesceExec] ||
+        p.isInstanceOf[ShuffledHashJoinExec]))
+    }
   }
 
   test("a join with one multi-partition side keeps both exchanges") {
-    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val df = customer.join(
-        spark.range(0, 300, 1, 4).selectExpr("id AS cust", "id * 2 AS twice"), "cust")
-      val rows = df.collect().toSeq.map(r => (r.getAs[Long]("cust"), r.getAs[Long]("twice")))
-      assert(rows.sorted == (0L until 300L).map(c => (c, 2 * c)))
-      assert(shuffles(df).count(_.isInstanceOf[HashPartitioning]) == 2, shuffles(df))
-      assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    withTables { (_, customer) =>
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+        val df = customer.join(
+          spark.range(0, 300, 1, 4).selectExpr("id AS cust", "id * 2 AS twice"), "cust")
+        val rows = df.collect().toSeq.map(r => (r.getAs[Long]("cust"), r.getAs[Long]("twice")))
+        assert(rows.sorted == (0L until 300L).map(c => (c, 2 * c)))
+        assert(shuffles(df).count(_.isInstanceOf[HashPartitioning]) == 2, shuffles(df))
+        assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+      }
     }
   }
 
   test("an aggregate over a 4-file parquet scan keeps its shuffle") {
-    val d = java.nio.file.Files.createTempDirectory("graft_four_files").toString
-    orders.repartition(4).write.parquet(s"$d/orders")
-    val df = spark.read.parquet(s"$d/orders").groupBy("cust").agg(count(lit(1)).as("c"))
-    val rows = df.collect()
-    assert(rows.length == 300 && rows.map(_.getLong(1)).sum == 4000L)
-    assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
-    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    withTables { (orders, _) =>
+      withTempDir("graft_four_files") { tmp =>
+        val d = tmp.toString
+        orders.repartition(4).write.parquet(s"$d/orders")
+        val df = spark.read.parquet(s"$d/orders").groupBy("cust").agg(count(lit(1)).as("c"))
+        val rows = df.collect()
+        assert(rows.length == 300 && rows.map(_.getLong(1)).sum == 4000L)
+        assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
+        assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+      }
+    }
   }
 
   test("a 3-branch Union of one-split scans keeps its tasks") {
-    val df = orders.union(orders).union(orders)
-      .groupBy("cust").agg(count(lit(1)).as("c"))
-    var rows = Array.empty[Row]
-    val (_, tasks) = jobsAndTasks { rows = df.collect() }
-    assert(rows.map(_.getLong(1)).sum == 3 * 4000L)
-    assert(nodes(df).exists(_.isInstanceOf[UnionExec]))
-    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
-    // one scan task per branch, then the aggregate's coalesced read
-    assert(tasks >= 4, s"tasks: $tasks")
+    withTables { (orders, _) =>
+      val df = orders.union(orders).union(orders)
+        .groupBy("cust").agg(count(lit(1)).as("c"))
+      var rows = Array.empty[Row]
+      val (_, tasks) = jobsAndTasks { rows = df.collect() }
+      assert(rows.map(_.getLong(1)).sum == 3 * 4000L)
+      assert(nodes(df).exists(_.isInstanceOf[UnionExec]))
+      assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+      // one scan task per branch, then the aggregate's coalesced read
+      assert(tasks >= 4, s"tasks: $tasks")
+    }
   }
 
   test("NOT IN keeps its null-aware BroadcastHashJoin") {
-    orders.createOrReplaceTempView("graft_one_stage_orders")
-    customer.createOrReplaceTempView("graft_one_stage_customer")
-    val df = spark.sql("SELECT cust FROM graft_one_stage_customer WHERE cust NOT IN " +
-      "(SELECT cust FROM graft_one_stage_orders WHERE amount < 50) ORDER BY cust")
-    val rows = df.collect().toSeq.map(_.getLong(0))
-    val kept = (0L until 4000L).filter(id => (id * 7919) % 1000 < 50)
-      .map(id => (id * 37) % 300).toSet
-    assert(rows.nonEmpty && rows == (0L until 300L).filterNot(kept))
-    assert(nodes(df).exists {
-      case j: BroadcastHashJoinExec => j.isNullAwareAntiJoin
-      case _ => false
-    }, df.queryExecution.executedPlan)
+    withTables { (orders, customer) =>
+      orders.createOrReplaceTempView("graft_one_stage_orders")
+      customer.createOrReplaceTempView("graft_one_stage_customer")
+      val df = spark.sql("SELECT cust FROM graft_one_stage_customer WHERE cust NOT IN " +
+        "(SELECT cust FROM graft_one_stage_orders WHERE amount < 50) ORDER BY cust")
+      val rows = df.collect().toSeq.map(_.getLong(0))
+      val kept = (0L until 4000L).filter(id => (id * 7919) % 1000 < 50)
+        .map(id => (id * 37) % 300).toSet
+      assert(rows.nonEmpty && rows == (0L until 300L).filterNot(kept))
+      assert(nodes(df).exists {
+        case j: BroadcastHashJoinExec => j.isNullAwareAntiJoin
+        case _ => false
+      }, df.queryExecution.executedPlan)
+    }
   }
 
   test("explode over a one-split scan keeps its shuffle") {
-    val df = customer
-      .select(col("cust"), explode(sequence(lit(0L), lit(199L))).as("x"))
-      .groupBy("x").agg(sum("cust").as("s"))
-    val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    assert(rows.sorted == (0L until 200L).map(x => (x, 300L * 299 / 2)))
-    assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
-    assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    withTables { (_, customer) =>
+      val df = customer
+        .select(col("cust"), explode(sequence(lit(0L), lit(199L))).as("x"))
+        .groupBy("x").agg(sum("cust").as("s"))
+      val rows = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.sorted == (0L until 200L).map(x => (x, 300L * 299 / 2)))
+      assert(shuffles(df).exists(_.isInstanceOf[HashPartitioning]), shuffles(df))
+      assert(!nodes(df).exists(_.isInstanceOf[CoalesceExec]))
+    }
   }
 
   test("nanosAsLong is set once by the session; Tables.events writes no " +
@@ -280,15 +295,17 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       // unset, so a reader that sets it again shows in getAll
       spark.conf.unset(key)
-      val d = java.nio.file.Files.createTempDirectory("graft_events").toString
-      spark.range(3).selectExpr("id AS event_id",
-        "TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts")
-        .write.parquet(s"$d/events.parquet")
-      val before = spark.conf.getAll
-      val ev = Tables.events(spark, d)
-      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
-      assert(ev.count() == 3)
-      assert(spark.conf.getAll == before)
+      withTempDir("graft_events") { tmp =>
+        val d = tmp.toString
+        spark.range(3).selectExpr("id AS event_id",
+          "TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts")
+          .write.parquet(s"$d/events.parquet")
+        val before = spark.conf.getAll
+        val ev = Tables.events(spark, d)
+        assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+        assert(ev.count() == 3)
+        assert(spark.conf.getAll == before)
+      }
     } finally old.foreach(spark.conf.set(key, _))
   }
 
@@ -316,8 +333,7 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val before = entries
     // a tiny corpus in the registry's table layout: the three keys use
     // graft_polyhash, graft_vecdot, graft_charentropy and graft_grams
-    val d = java.nio.file.Files.createTempDirectory("graft_registry_keys").toFile
-    try {
+    withTempDir("graft_registry_keys") { d =>
       spark.range(0, 8, 1, 1).selectExpr("id AS doc_id",
           "concat('doc ', CAST(id AS STRING), ' text ', repeat('ab', CAST(id AS INT))) AS text",
           "'en' AS lang", "'web' AS source", "CAST(0 AS BIGINT) AS n_chars")
@@ -328,7 +344,7 @@ class GraftSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .write.parquet(s"$d/embeddings.parquet")
       for (key <- Seq("q_doc_fingerprint", "q_ann_topk", "q_char_entropy"))
         assert(SparkEntry.queries(key)(spark, d.toString).collect().nonEmpty, key)
-    } finally LocalFiles.rmTree(d)
+    }
     before.zip(entries).foreach { case ((name, info0, build0), (_, info1, build1)) =>
       assert(info1 eq info0, s"$name: ExpressionInfo replaced")
       assert(build1 eq build0, s"$name: builder replaced")

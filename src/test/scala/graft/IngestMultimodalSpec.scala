@@ -8,27 +8,28 @@ import org.apache.spark.sql.functions._
 class IngestMultimodalSpec extends SparkSpec {
 
   test("CsvTickIngest reads the Dukascopy CSV format, prunes Volume, tags symbol") {
-    val dir = Files.createTempDirectory("graft_csv")
-    val sym = Files.createDirectory(dir.resolve("EURUSD"))
-    Files.writeString(sym.resolve("part1.csv"),
-      "DateTime,Bid,Ask,Volume\n" +
-        "20240101 07:55:01.123,1.1001,1.1003,2.5\n" +
-        "20240101 07:55:02.456,1.1002,1.1004,1.0\n")
-    val df = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
-    val rows = df.collect()
-    assert(rows.length == 2)
-    assert(df.columns.toSeq == Seq("ts", "bid", "ask", "symbol"))
-    assert(rows.forall(_.getAs[String]("symbol") == "EURUSD"))
-    assert(rows.head.getAs[java.sql.Timestamp]("ts").toString
-      .startsWith("2024-01-01 07:55:01"))
+    withTempDir("graft_csv") { dir =>
+      val sym = Files.createDirectory(dir.resolve("EURUSD"))
+      Files.writeString(sym.resolve("part1.csv"),
+        "DateTime,Bid,Ask,Volume\n" +
+          "20240101 07:55:01.123,1.1001,1.1003,2.5\n" +
+          "20240101 07:55:02.456,1.1002,1.1004,1.0\n")
+      val df = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
+      val rows = df.collect()
+      assert(rows.length == 2)
+      assert(df.columns.toSeq == Seq("ts", "bid", "ask", "symbol"))
+      assert(rows.forall(_.getAs[String]("symbol") == "EURUSD"))
+      assert(rows.head.getAs[java.sql.Timestamp]("ts").toString
+        .startsWith("2024-01-01 07:55:01"))
 
-    // round-trip: partitioned write preserves content and layout
-    val out = dir.resolve("gold").toString
-    CsvTickIngest.write(df, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 2)
-    assert(back.select("symbol").distinct().collect().head.getString(0) == "EURUSD")
-    assert(Files.exists(java.nio.file.Paths.get(out, "symbol=EURUSD", "year=2024")))
+      // round-trip: partitioned write preserves content and layout
+      val out = dir.resolve("gold").toString
+      CsvTickIngest.write(df, out)
+      val back = spark.read.parquet(out)
+      assert(back.count() == 2)
+      assert(back.select("symbol").distinct().collect().head.getString(0) == "EURUSD")
+      assert(Files.exists(java.nio.file.Paths.get(out, "symbol=EURUSD", "year=2024")))
+    }
   }
 
   /** A Dukascopy-style tree `<symbol>/<day>.csv`: 4 symbols x 12 days
@@ -36,10 +37,9 @@ class IngestMultimodalSpec extends SparkSpec {
     * ticks. Even days' files are 5 bytes longer (Volume `1.00`), so the
     * scan's largest-first packing is fixed: 48 files in 4 splits of 12,
     * two of even days and two of odd days, and every (symbol, year)
-    * has files in two splits. Returns the root and the source's (rows,
+    * has files in two splits, under `dir`. Returns the source's (rows,
     * bid cents sum, ts millis sum). */
-  private def csvTree(): (java.nio.file.Path, Long, Long, Long) = {
-    val dir = Files.createTempDirectory("graft_csv_tree")
+  private def csvTree(dir: java.nio.file.Path): (Long, Long, Long) = {
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd HH:mm:ss.SSS")
     def price(c: Int) = f"${c / 100}.${c % 100}%02d"
     var rows = 0L; var cents = 0L; var millis = 0L
@@ -57,7 +57,7 @@ class IngestMultimodalSpec extends SparkSpec {
       Files.writeString(sym.resolve(s"$day.csv"),
         ("DateTime,Bid,Ask,Volume" +: lines).mkString("", "\n", "\n"))
     }
-    (dir, rows, cents, millis)
+    (rows, cents, millis)
   }
 
   /** Task counts of the stages `body` submits. The listener bus is
@@ -93,75 +93,80 @@ class IngestMultimodalSpec extends SparkSpec {
 
   test("CsvTickIngest.read lists a many-file glob in at most " +
       "shufflePartitions tasks and reads the same rows as Spark's default") {
-    val (dir, nRows, _, _) = csvTree()
-    val glob = dir.toString + "/*/*.csv"
-    val cores = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-    assert(spark.conf.get(key) == cores.toString) // set by GraftSession
-    var rows = Array.empty[org.apache.spark.sql.Row]
-    val bounded = stageTasks { rows = CsvTickIngest.read(spark, glob).collect() }
-    // 48 root paths > the 32-path threshold: the listing is a job
-    assert(bounded.nonEmpty && bounded.max <= cores, s"stage tasks: $bounded")
-    // Spark's default parallelism lists one path per task
-    var dflt = Array.empty[org.apache.spark.sql.Row]
-    val unbounded = try {
-      spark.conf.set(key, "10000")
-      stageTasks { dflt = CsvTickIngest.read(spark, glob).collect() }
-    } finally spark.conf.set(key, cores.toString)
-    assert(unbounded.contains(48), s"stage tasks: $unbounded")
-    assert(rows.length == nRows)
-    assert(rows.map(_.toString).sorted.toSeq == dflt.map(_.toString).sorted.toSeq)
+    withTempDir("graft_csv_tree") { dir =>
+      val (nRows, _, _) = csvTree(dir)
+      val glob = dir.toString + "/*/*.csv"
+      val cores = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+      assert(spark.conf.get(key) == cores.toString) // set by GraftSession
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val bounded = stageTasks { rows = CsvTickIngest.read(spark, glob).collect() }
+      // 48 root paths > the 32-path threshold: the listing is a job
+      assert(bounded.nonEmpty && bounded.max <= cores, s"stage tasks: $bounded")
+      // Spark's default parallelism lists one path per task
+      var dflt = Array.empty[org.apache.spark.sql.Row]
+      val unbounded = try {
+        spark.conf.set(key, "10000")
+        stageTasks { dflt = CsvTickIngest.read(spark, glob).collect() }
+      } finally spark.conf.set(key, cores.toString)
+      assert(unbounded.contains(48), s"stage tasks: $unbounded")
+      assert(rows.length == nRows)
+      assert(rows.map(_.toString).sorted.toSeq == dflt.map(_.toString).sorted.toSeq)
+    }
   }
 
   test("CsvTickIngest.write leaves one part file per (symbol, year) " +
       "with the source's rows, bid cents and ts millis") {
-    val (dir, nRows, cents, millis) = csvTree()
-    val out = dir.resolve("gold")
-    CsvTickIngest.write(CsvTickIngest.read(spark, dir.toString + "/*/*.csv"),
-      out.toString)
-    val leaves = for {
-      s <- out.toFile.listFiles().toSeq if s.getName.startsWith("symbol=")
-      y <- s.listFiles().toSeq if y.getName.startsWith("year=")
-    } yield s.getName + "/" + y.getName ->
-      y.listFiles().count(_.getName.startsWith("part-"))
-    assert(leaves.length == 8, leaves) // 4 symbols x 2 years
-    assert(leaves.forall(_._2 == 1), leaves)
-    val a = spark.read.parquet(out.toString)
-      .agg(count(lit(1)), sum(round(col("bid") * 100).cast("long")),
-        sum(unix_millis(col("ts")))).head()
-    assert((a.getLong(0), a.getLong(1), a.getLong(2)) == ((nRows, cents, millis)))
+    withTempDir("graft_csv_tree") { dir =>
+      val (nRows, cents, millis) = csvTree(dir)
+      val out = dir.resolve("gold")
+      CsvTickIngest.write(CsvTickIngest.read(spark, dir.toString + "/*/*.csv"),
+        out.toString)
+      val leaves = for {
+        s <- out.toFile.listFiles().toSeq if s.getName.startsWith("symbol=")
+        y <- s.listFiles().toSeq if y.getName.startsWith("year=")
+      } yield s.getName + "/" + y.getName ->
+        y.listFiles().count(_.getName.startsWith("part-"))
+      assert(leaves.length == 8, leaves) // 4 symbols x 2 years
+      assert(leaves.forall(_._2 == 1), leaves)
+      val a = spark.read.parquet(out.toString)
+        .agg(count(lit(1)), sum(round(col("bid") * 100).cast("long")),
+          sum(unix_millis(col("ts")))).head()
+      assert((a.getLong(0), a.getLong(1), a.getLong(2)) == ((nRows, cents, millis)))
+    }
   }
 
   test("the symbol taken from the file path equals the old per-row " +
       "regex on directory names with '-', '.' and digits") {
-    val dir = Files.createTempDirectory("graft_csv_syms")
-    val syms = Seq("EUR-USD", "1000SHIB.P", "x.9-2024", "BTC-USD.v2")
-    syms.foreach { sym =>
-      val d = Files.createDirectories(dir.resolve(sym))
-      Files.writeString(d.resolve("2024-01-02.csv"),
-        "DateTime,Bid,Ask,Volume\n20240102 07:55:01.123,1.1,1.2,1.0\n")
-    }
-    val csv = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
-      .select(col("symbol"),
-        regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1).as("old"))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(csv.map(_._1).sorted.toSeq == syms.sorted)
-    assert(csv.forall { case (now, old) => now == old }, csv.toSeq)
+    withTempDir("graft_csv_syms") { dir =>
+      val syms = Seq("EUR-USD", "1000SHIB.P", "x.9-2024", "BTC-USD.v2")
+      syms.foreach { sym =>
+        val d = Files.createDirectories(dir.resolve(sym))
+        Files.writeString(d.resolve("2024-01-02.csv"),
+          "DateTime,Bid,Ask,Volume\n20240102 07:55:01.123,1.1,1.2,1.0\n")
+      }
+      val csv = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
+        .select(col("symbol"),
+          regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1).as("old"))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      assert(csv.map(_._1).sorted.toSeq == syms.sorted)
+      assert(csv.forall { case (now, old) => now == old }, csv.toSeq)
 
-    val gold = dir.resolve("gold").toString
-    syms.foreach { sym =>
-      spark.range(3).select(lit(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
-          .as("datetime"), lit(1.0).as("bid"), lit(1.1).as("ask"))
-        .write.parquet(s"$gold/$sym")
+      val gold = dir.resolve("gold").toString
+      syms.foreach { sym =>
+        spark.range(3).select(lit(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
+            .as("datetime"), lit(1.0).as("bid"), lit(1.1).as("ask"))
+          .write.parquet(s"$gold/$sym")
+      }
+      val path = col("_metadata.file_path")
+      val paths = spark.read.parquet(s"$gold/*")
+        .select(CsvTickIngest.symbolFromPath(path),
+          regexp_extract(path, ".*/([^/]+)/[^/]+$", 1))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      assert(paths.forall { case (now, old) => now == old }, paths.toSeq)
+      assert(graft.sources.GoldIngest.readDir(spark, gold).select("symbol")
+        .distinct().collect().map(_.getString(0)).sorted.toSeq == syms.sorted)
     }
-    val path = col("_metadata.file_path")
-    val paths = spark.read.parquet(s"$gold/*")
-      .select(CsvTickIngest.symbolFromPath(path),
-        regexp_extract(path, ".*/([^/]+)/[^/]+$", 1))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(paths.forall { case (now, old) => now == old }, paths.toSeq)
-    assert(graft.sources.GoldIngest.readDir(spark, gold).select("symbol")
-      .distinct().collect().map(_.getString(0)).sorted.toSeq == syms.sorted)
   }
 
   test("multimodal feature extraction is deterministic over binary payloads") {

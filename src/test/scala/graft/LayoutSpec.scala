@@ -33,66 +33,70 @@ class LayoutSpec extends SparkSpec {
     // 64x64 grid, one row per cell; 16 files per layout.
     val grid = spark.range(64L * 64L)
       .select((col("id") % 64).as("x"), (col("id") / 64).as("y"))
-    val dir = Files.createTempDirectory("graft_layout").toString
-    val zPath = s"$dir/zorder"
-    val linPath = s"$dir/linear"
-    Layout.zOrderWrite(grid, zPath, "x", "y", nFiles = 16, bits = 6)
-    Layout.linearWrite(grid, linPath, "x", nFiles = 16)
+    withTempDir("graft_layout") { tmp =>
+      val dir = tmp.toString
+      val zPath = s"$dir/zorder"
+      val linPath = s"$dir/linear"
+      Layout.zOrderWrite(grid, zPath, "x", "y", nFiles = 16, bits = 6)
+      Layout.linearWrite(grid, linPath, "x", nFiles = 16)
 
-    val zBoxes = Layout.fileBoxes(spark, zPath, "x", "y")
-    val linBoxes = Layout.fileBoxes(spark, linPath, "x", "y")
-    assert(zBoxes.count() == 16 && linBoxes.count() == 16)
+      val zBoxes = Layout.fileBoxes(spark, zPath, "x", "y")
+      val linBoxes = Layout.fileBoxes(spark, linPath, "x", "y")
+      assert(zBoxes.count() == 16 && linBoxes.count() == 16)
 
-    // Predicate: full x range, narrow y band (y in [8, 15]) — the
-    // query shape a single-column sort cannot skip for.
-    val zTouched = Layout.filesTouched(zBoxes, 0, 63, 8, 15)
-    val linTouched = Layout.filesTouched(linBoxes, 0, 63, 8, 15)
-    // linear-by-x: every file spans all y values -> reads all 16
-    assert(linTouched == 16L, s"linear layout touched $linTouched")
-    // z-order: files are ~square tiles -> only the tiles meeting the
-    // band are read
-    assert(zTouched <= 8L, s"z-order layout touched $zTouched")
+      // Predicate: full x range, narrow y band (y in [8, 15]) — the
+      // query shape a single-column sort cannot skip for.
+      val zTouched = Layout.filesTouched(zBoxes, 0, 63, 8, 15)
+      val linTouched = Layout.filesTouched(linBoxes, 0, 63, 8, 15)
+      // linear-by-x: every file spans all y values -> reads all 16
+      assert(linTouched == 16L, s"linear layout touched $linTouched")
+      // z-order: files are ~square tiles -> only the tiles meeting the
+      // band are read
+      assert(zTouched <= 8L, s"z-order layout touched $zTouched")
 
-    // Layout is physical only: logical content identical.
-    assert(spark.read.parquet(zPath).orderBy("x", "y").collect().toSeq ==
-      grid.orderBy("x", "y").collect().toSeq)
+      // Layout is physical only: logical content identical.
+      assert(spark.read.parquet(zPath).orderBy("x", "y").collect().toSeq ==
+        grid.orderBy("x", "y").collect().toSeq)
+    }
   }
 
   test("partitioned layout: static filters prune directories and a " +
       "dim join plans a dynamicpruning subquery on the fact scan") {
-    val dir = Files.createTempDirectory("graft_dpp").toString
-    val fact = spark.range(10000L)
-      .select(col("id"), (col("id") % 10).as("yr"),
-        (col("id") * 3 % 97).as("v"))
-    Layout.partitionedWrite(fact, s"$dir/fact", "yr")
+    withTempDir("graft_dpp") { tmp =>
+      val dir = tmp.toString
+      val fact = spark.range(10000L)
+        .select(col("id"), (col("id") % 10).as("yr"),
+          (col("id") * 3 % 97).as("v"))
+      Layout.partitionedWrite(fact, s"$dir/fact", "yr")
 
-    // Static pruning: a literal partition filter reads 1 of 10 dirs.
-    val statRead = spark.read.parquet(s"$dir/fact").filter(col("yr") === 3)
-    val statFiles = statRead.select(col("_metadata.file_path")).distinct().count()
-    val allFiles = spark.read.parquet(s"$dir/fact")
-      .select(col("_metadata.file_path")).distinct().count()
-    assert(statFiles < allFiles, s"static pruning read $statFiles/$allFiles")
-    assert(statRead.count() == 1000L)
+      // Static pruning: a literal partition filter reads 1 of 10 dirs.
+      val statRead = spark.read.parquet(s"$dir/fact").filter(col("yr") === 3)
+      val statFiles = statRead.select(col("_metadata.file_path")).distinct().count()
+      val allFiles = spark.read.parquet(s"$dir/fact")
+        .select(col("_metadata.file_path")).distinct().count()
+      assert(statFiles < allFiles, s"static pruning read $statFiles/$allFiles")
+      assert(statRead.count() == 1000L)
 
-    // Dynamic pruning: join on the partition column against a
-    // filtered dim — the fact scan must carry a dynamicpruning
-    // subquery (runtime partition filter from the broadcast). Two
-    // rules of engagement found by probing the optimizer: the dim
-    // must be a SOURCE-backed relation with a surviving Filter node
-    // (a local Seq folds the filter into LocalTableScan and the DPP
-    // rule sees no predicate), and that filter must be LIKELY
-    // SELECTIVE in Spark's heuristic — a comparison/IN/LIKE shape; a
-    // bare boolean column does NOT qualify and silently disables DPP.
-    Seq((3, "EU"), (7, "EU"), (1, "US"), (4, "US"))
-      .toDF("yr", "region")
-      .write.mode("overwrite").parquet(s"$dir/dim")
-    val dim = spark.read.parquet(s"$dir/dim")
-    val joined = spark.read.parquet(s"$dir/fact")
-      .join(dim.filter(col("region") === "EU"), Seq("yr"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamicpruning subquery in plan:\n$plan")
-    assert(joined.count() == 2000L) // yr 3 and 7 only
+      // Dynamic pruning: join on the partition column against a
+      // filtered dim — the fact scan must carry a dynamicpruning
+      // subquery (runtime partition filter from the broadcast). Two
+      // rules of engagement found by probing the optimizer: the dim
+      // must be a SOURCE-backed relation with a surviving Filter node
+      // (a local Seq folds the filter into LocalTableScan and the DPP
+      // rule sees no predicate), and that filter must be LIKELY
+      // SELECTIVE in Spark's heuristic — a comparison/IN/LIKE shape; a
+      // bare boolean column does NOT qualify and silently disables DPP.
+      Seq((3, "EU"), (7, "EU"), (1, "US"), (4, "US"))
+        .toDF("yr", "region")
+        .write.mode("overwrite").parquet(s"$dir/dim")
+      val dim = spark.read.parquet(s"$dir/dim")
+      val joined = spark.read.parquet(s"$dir/fact")
+        .join(dim.filter(col("region") === "EU"), Seq("yr"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.toLowerCase.contains("dynamicpruning"),
+        s"no dynamicpruning subquery in plan:\n$plan")
+      assert(joined.count() == 2000L) // yr 3 and 7 only
+    }
   }
 
   test("H7: parquet AGGREGATE PUSHDOWN answers count/min/max from " +
@@ -103,33 +107,35 @@ class LayoutSpec extends SparkSpec {
     // path silently ignores the conf — parquet must leave
     // useV1SourceList; (2) any residual data filter disables the
     // pushdown (stats cannot answer it) — proven both ways below.
-    val dir = Files.createTempDirectory("aggpush").toString
-    spark.range(100000L)
-      .selectExpr("id", "CAST(id AS DOUBLE) AS v")
-      .write.mode("overwrite").parquet(s"$dir/t")
-    val prevV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try {
-      val agg = spark.read.parquet(s"$dir/t")
-        .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
-          max(col("v")).as("hi"))
-      val plan = agg.queryExecution.executedPlan.toString
-      // the scan prints `PushedAggregation: [...]` even when empty —
-      // assert on the pushed COUNT itself
-      assert(plan.contains("PushedAggregation: [COUNT(*)"),
-        s"aggregation not pushed:\n${plan.take(2000)}")
-      val r = agg.collect().head
-      assert(r.getAs[Long]("n") == 100000L &&
-        r.getAs[Double]("lo") == 0.0 && r.getAs[Double]("hi") == 99999.0)
-      // a residual filter must fall back to a real scan
-      val filtered = spark.read.parquet(s"$dir/t")
-        .filter(col("v") > 10.0).agg(count(lit(1)))
-      assert(filtered.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: []"))
-    } finally {
-      spark.conf.set("spark.sql.sources.useV1SourceList", prevV1)
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    withTempDir("aggpush") { tmp =>
+      val dir = tmp.toString
+      spark.range(100000L)
+        .selectExpr("id", "CAST(id AS DOUBLE) AS v")
+        .write.mode("overwrite").parquet(s"$dir/t")
+      val prevV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
+      spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+      spark.conf.set("spark.sql.sources.useV1SourceList", "")
+      try {
+        val agg = spark.read.parquet(s"$dir/t")
+          .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
+            max(col("v")).as("hi"))
+        val plan = agg.queryExecution.executedPlan.toString
+        // the scan prints `PushedAggregation: [...]` even when empty —
+        // assert on the pushed COUNT itself
+        assert(plan.contains("PushedAggregation: [COUNT(*)"),
+          s"aggregation not pushed:\n${plan.take(2000)}")
+        val r = agg.collect().head
+        assert(r.getAs[Long]("n") == 100000L &&
+          r.getAs[Double]("lo") == 0.0 && r.getAs[Double]("hi") == 99999.0)
+        // a residual filter must fall back to a real scan
+        val filtered = spark.read.parquet(s"$dir/t")
+          .filter(col("v") > 10.0).agg(count(lit(1)))
+        assert(filtered.queryExecution.executedPlan.toString
+          .contains("PushedAggregation: []"))
+      } finally {
+        spark.conf.set("spark.sql.sources.useV1SourceList", prevV1)
+        spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+      }
     }
   }
 
@@ -253,19 +259,21 @@ class LayoutSpec extends SparkSpec {
     // scan's PartitionFilters so Spark lists/reads only those
     // partitions. Asserted at plan level (dynamicpruning expression
     // present) AND at result level.
-    val dir = Files.createTempDirectory("graft_dpp").toString
-    spark.range(1000L)
-      .selectExpr("id", "CAST(id % 10 AS INT) AS day")
-      .write.partitionBy("day").parquet(s"$dir/fact")
-    val fact = spark.read.parquet(s"$dir/fact")
-    val dim = spark.range(10L).selectExpr("CAST(id AS INT) AS day",
-        "id % 5 = 0 AS hot")
-      .filter(col("hot"))
-    val joined = fact.join(dim, Seq("day"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"expected a DPP subquery in the fact scan:\n$plan")
-    assert(joined.count() == 200L) // days 0 and 5 only
+    withTempDir("graft_dpp") { tmp =>
+      val dir = tmp.toString
+      spark.range(1000L)
+        .selectExpr("id", "CAST(id % 10 AS INT) AS day")
+        .write.partitionBy("day").parquet(s"$dir/fact")
+      val fact = spark.read.parquet(s"$dir/fact")
+      val dim = spark.range(10L).selectExpr("CAST(id AS INT) AS day",
+          "id % 5 = 0 AS hot")
+        .filter(col("hot"))
+      val joined = fact.join(dim, Seq("day"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruning"),
+        s"expected a DPP subquery in the fact scan:\n$plan")
+      assert(joined.count() == 200L) // days 0 and 5 only
+    }
   }
 
   test("H15: the trading-layer plans checkpoint the slot chain once " +

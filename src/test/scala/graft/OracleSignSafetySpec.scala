@@ -58,57 +58,58 @@ class OracleSignSafetySpec extends SparkSpec {
   test("negative-cents corpus: guarded oracle == operator; old spelling has teeth") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_negcents").toString
-    // 8 ticks, 2 symbols, prices straddling zero (bad prints — the
-    // case the standard corpora never exercise).
-    // Symbol 0 (even i) carries DEEPLY negative prices so its
-    // Σ(term % P) goes negative: the signed outer % then returns a
-    // negative fingerprint where pmod returns a positive one — the
-    // actual divergence mode (per-summand +P offsets alone cancel
-    // under the outer mod when the sum stays positive).
-    val base = java.sql.Timestamp.valueOf("2024-01-02 07:50:00")
-    val rows = (0 until 8).map { i =>
-      (i.toLong, (i % 2).toLong,
-        new java.sql.Timestamp(base.getTime + i * 1000L),
-        if (i % 2 == 0) -1000.5 - i else 2.25 + i)
-    }
-    rows.toDF("event_id", "user_id", "ts", "value")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-
-    try {
-      val audit = graft.streaming.StreamRegistry
-        .streamUpsertAudit(s, dir)
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-
-      // Oracle replay under DuckDB semantics: Scala's % is signed,
-      // exactly like DuckDB's — this fold IS the oracle arithmetic.
-      def guarded(x: Long): Long = ((x % P) + P) % P
-      val diverged = rows.groupBy(_._2).map { case (sym, rs) =>
-        val contentNew = rs.map { case (id, _, _, v) =>
-          guarded(id * 31 + math.round(v * 100.0)) }.sum % P
-        val contentOld = rs.map { case (id, _, _, v) =>
-          (id * 31 + math.round(v * 100.0)) % P }.sum % P
-        val tsFp = rs.map { case (_, _, ts, _) =>
-          guarded(ts.getTime) }.sum % P
-        val (an, acf, atf) = audit(sym)
-        assert(an == rs.size.toLong, s"sym $sym n")
-        assert(acf == contentNew,
-          s"sym $sym: guarded oracle spelling must match the operator")
-        assert(atf == tsFp, s"sym $sym ts_fp")
-        contentOld != contentNew
+    withTempDir("graft_negcents") { tmp =>
+      val dir = tmp.toString
+      // 8 ticks, 2 symbols, prices straddling zero (bad prints — the
+      // case the standard corpora never exercise).
+      // Symbol 0 (even i) carries DEEPLY negative prices so its
+      // Σ(term % P) goes negative: the signed outer % then returns a
+      // negative fingerprint where pmod returns a positive one — the
+      // actual divergence mode (per-summand +P offsets alone cancel
+      // under the outer mod when the sum stays positive).
+      val base = java.sql.Timestamp.valueOf("2024-01-02 07:50:00")
+      val rows = (0 until 8).map { i =>
+        (i.toLong, (i % 2).toLong,
+          new java.sql.Timestamp(base.getTime + i * 1000L),
+          if (i % 2 == 0) -1000.5 - i else 2.25 + i)
       }
-      // teeth: the pre-r16 unguarded spelling must diverge somewhere
-      // on this corpus, or the test proves nothing
-      assert(diverged.exists(identity),
-        "corpus failed to exercise the signed-% divergence")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
+      rows.toDF("event_id", "user_id", "ts", "value")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+      try {
+        val audit = graft.streaming.StreamRegistry
+          .streamUpsertAudit(s, dir)
+          .collect().map(r => r.getLong(0) ->
+            ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+
+        // Oracle replay under DuckDB semantics: Scala's % is signed,
+        // exactly like DuckDB's — this fold IS the oracle arithmetic.
+        def guarded(x: Long): Long = ((x % P) + P) % P
+        val diverged = rows.groupBy(_._2).map { case (sym, rs) =>
+          val contentNew = rs.map { case (id, _, _, v) =>
+            guarded(id * 31 + math.round(v * 100.0)) }.sum % P
+          val contentOld = rs.map { case (id, _, _, v) =>
+            (id * 31 + math.round(v * 100.0)) % P }.sum % P
+          val tsFp = rs.map { case (_, _, ts, _) =>
+            guarded(ts.getTime) }.sum % P
+          val (an, acf, atf) = audit(sym)
+          assert(an == rs.size.toLong, s"sym $sym n")
+          assert(acf == contentNew,
+            s"sym $sym: guarded oracle spelling must match the operator")
+          assert(atf == tsFp, s"sym $sym ts_fp")
+          contentOld != contentNew
+        }
+        // teeth: the pre-r16 unguarded spelling must diverge somewhere
+        // on this corpus, or the test proves nothing
+        assert(diverged.exists(identity),
+          "corpus failed to exercise the signed-% divergence")
+      } finally {
+        def rm(f: java.io.File): Unit = {
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+          f.delete(); ()
+        }
+        rm(new java.io.File(dir))
       }
-      rm(new java.io.File(dir))
     }
   }
 }

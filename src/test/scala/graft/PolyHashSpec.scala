@@ -132,6 +132,49 @@ class PolyHashSpec extends SparkSpec {
     val ok = df.select(expr("graft_grams(text, CAST(2 AS BIGINT))"))
       .as[Seq[String]].collect().head
     assert(ok == Seq("ab", "bc"))
+
+    // The same checks over every graft_* function: (name, a valid
+    // argument list, the positions that must be integer literals).
+    val table = Seq(
+      ("graft_polyhash", Seq("text"), Nil),
+      ("graft_charentropy", Seq("text"), Nil),
+      ("graft_vecdot", Seq("v", "v"), Nil),
+      ("graft_sorted_ncommon", Seq("th", "th"), Nil),
+      ("graft_grams", Seq("text", "2"), Seq(1 -> "n")),
+      ("graft_wordgrams", Seq("tokens", "2"), Seq(1 -> "n")),
+      ("graft_minhashes", Seq("th", "4"), Seq(1 -> "k")),
+      ("graft_simhash", Seq("th", "16"), Seq(1 -> "bits")),
+      ("graft_winnow", Seq("text", "2", "2"), Seq(1 -> "k", 2 -> "w")),
+      ("graft_cdc", Seq("text", "4"), Seq(1 -> "maskBits")),
+      ("graft_pqcodes", Seq("v", "cents", "1", "2", "1"),
+        Seq(2 -> "nSub", 3 -> "subDim", 4 -> "k")))
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(table.map(_._1).toSet == registered)
+    val args = Seq(("abcdef ghij", Seq("ab", "cd"), Seq(1L, 2L, 3L),
+      Seq(1.0f, 2.0f), Seq(0.5f, 1.5f), 3))
+      .toDF("text", "tokens", "th", "v", "cents", "n")
+    def call(fn: String, as: Seq[String]) =
+      args.select(expr(s"$fn(${as.mkString(", ")})"))
+    def fails(fn: String, as: Seq[String], fragment: String): Unit = {
+      val e = intercept[Exception](call(fn, as).collect())
+      assert(e.getMessage.contains(s"$fn(") &&
+        e.getMessage.contains(fragment), s"${as.mkString(", ")} -> ${e.getMessage}")
+    }
+    for ((fn, good, lits) <- table) {
+      fails(fn, good :+ good.last,
+        s"takes exactly ${good.size} argument")
+      val expected = call(fn, good).collect().head.get(0)
+      for ((i, name) <- lits) {
+        def at(a: String) = good.updated(i, a)
+        fails(fn, at("n"), s"$name must be a literal")
+        fails(fn, at("NULL"), s"$name must not be NULL")
+        fails(fn, at("CAST(4294967297 AS BIGINT)"), "got 4294967297")
+        val small = call(fn, at(s"CAST(${good(i)} AS SMALLINT)"))
+          .collect().head.get(0)
+        assert(small == expected, s"$fn SMALLINT ${good(i)}")
+      }
+    }
   }
 
   test("native functions reject wrong input TYPES at analysis, " +

@@ -1,11 +1,14 @@
 package graft
 
+import graft.registry.Key
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract guards on the driver registry itself — the invariants the
   * correctness gate assumes but nothing previously enforced at test
   * time. (The SURVEY §2 ↔ registry key sync is checked by a comm(1)
-  * one-liner; these are the query↔oracle invariants.)
+  * one-liner; these are the query↔oracle invariants. A key declared
+  * twice fails the registry build itself, in `Key.byName`.)
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -35,18 +38,18 @@ class RegistrySpec extends AnyFunSuite {
       "q_disjunctive_revenue", "q_zipf_fit", "q_forecast_revenue",
       "q_partition_skew", "q_psi_drift")
 
-  test("each registry key is declared exactly once in the source (a " +
-      "duplicate in a Map literal silently DROPS the earlier query — " +
-      "the built Map cannot reveal it, so the guard reads the source)") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")))
-    val Array(qPart, oPart) = src.split("def oracleSql", 2)
-    val key = """"(q[a-z0-9_]+)" *->""".r
-    for ((name, part) <- Seq("queries" -> qPart, "oracleSql" -> oPart)) {
-      val keys = key.findAllMatchIn(part).map(_.group(1)).toSeq
-      val dups = keys.groupBy(identity).filter(_._2.size > 1).keys.toSeq
-      assert(dups.isEmpty, s"duplicate $name keys: ${dups.sorted}")
-    }
+  test("a registry built with a repeated key name throws, naming it") {
+    val b: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException](Key.byName(Seq(
+      Key("q_a", b, "SELECT 1"), Key("q_b", b, "SELECT 2"),
+      Key("q_a", b, "SELECT 3"))))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"),
+      e.getMessage)
+  }
+
+  test("queries and oracleSql are built once per JVM") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
   }
 
   test("oracle SQL ends in an explicit ORDER BY (the compare sorts " +

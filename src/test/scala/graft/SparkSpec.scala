@@ -19,6 +19,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def withAdvisory[T](bytes: Long)(body: => T): T =
     GraftSession.withConf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       bytes.toString)(body)
+
+  /** Runs `body` over a fresh temp directory named `prefix…` and
+    * removes the directory however `body` exits. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally LocalFiles.rmTree(dir.toFile)
+  }
 }
 
 object SparkSpec {
