@@ -131,7 +131,7 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try {
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
+        val df = graft.sources.Tables.table(spark, sfDir, t)
         df.schema
         df.head(1)
       } catch { case scala.util.control.NonFatal(_) => () }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.sources.CsvTickIngest
+import graft.sources.{CsvTickIngest, Parquet}
 import graft.operators.Multimodal
 import graft.streaming.Streaming
 import graft.streaming.Streaming.Tick
@@ -29,11 +29,11 @@ object Demo {
     val ingested = CsvTickIngest.read(spark, dir.toString + "/*/*.csv")
     CsvTickIngest.write(ingested, dir.resolve("gold").toString)
     println("=== ingested gold layout ===")
-    spark.read.parquet(dir.resolve("gold").toString).show(false)
+    Parquet.read(spark, dir.resolve("gold").toString).show(false)
 
     // --- A: cross-file chronological ordering over the gold layout ---
     println("=== file ranges (chronological order) ===")
-    val gold = spark.read.parquet(dir.resolve("gold").toString)
+    val gold = Parquet.read(spark, dir.resolve("gold").toString)
     graft.sources.FileOrder.fileRanges(gold, "ts").show(false)
 
     // --- F12: multimodal features over REAL codecs (PPM/WAV/Y4M) ---

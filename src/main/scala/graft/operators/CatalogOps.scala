@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
+import graft.sources.Parquet
 
 /** Catalog-backed lakehouse operations — the Spark-native analog of the
   * reference's Iceberg/Trino storage layer: year-partitioned gold
@@ -531,7 +532,7 @@ object CatalogOps {
     val m = readManifest(root)
     require(m.contains(table),
       s"table $table not in the committed manifest: ${m.keys}")
-    spark.read.parquet(s"$root/${m(table)}")
+    Parquet.read(spark, s"$root/${m(table)}")
   }
 
   /** A23 — PARTITION EVOLUTION on plain parquet (the Iceberg
@@ -571,10 +572,10 @@ object CatalogOps {
   }
 
   def evolvedPartitionRead(spark: SparkSession, root: String): DataFrame = {
-    val s0 = spark.read.parquet(s"$root/spec=0")
+    val s0 = Parquet.read(spark, s"$root/spec=0")
       .withColumn("mo", month(col("ts")))
       .withColumn("spec", lit(0))
-    val s1 = spark.read.parquet(s"$root/spec=1")
+    val s1 = Parquet.read(spark, s"$root/spec=1")
       .withColumn("spec", lit(1))
     s0.unionByName(s1)
   }

@@ -90,7 +90,7 @@ object Layout {
     * in ONE scan (no driver-side file loop). */
   def fileBoxes(spark: org.apache.spark.sql.SparkSession, path: String,
                 colA: String, colB: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Parquet.read(spark, path)
       .select(col(colA), col(colB),
         col("_metadata.file_path").as("file"))
       .groupBy("file")

@@ -36,7 +36,7 @@ object GoldIngest {
     */
   def readDir(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("symbol").orderBy("ts", "bid", "ask")
-    spark.read.parquet(s"$dir/*")
+    Parquet.read(spark, s"$dir/*")
       .select(
         CsvTickIngest.symbolFromPath(col("_metadata.file_path")).as("symbol"),
         col("datetime").cast("timestamp").as("ts"),
@@ -52,7 +52,7 @@ object GoldIngest {
     // ON tick_id). Fully identical rows remain interchangeable, so
     // this is deterministic up to row identity.
     val w = Window.partitionBy("symbol").orderBy("ts", "bid", "ask")
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .select(lit(symbol).as("symbol"),
         col("datetime").cast("timestamp").as("ts"),
         col("bid"), col("ask"))

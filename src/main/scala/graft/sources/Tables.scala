@@ -12,17 +12,19 @@ import org.apache.spark.sql.functions._
   * the difference between reading a projection and reading the table.
   */
 object Tables {
-  /** Base loaders are SESSION-MEMOIZED (r18): `spark.read.parquet`
-    * runs a one-task schema-inference job (footer read) at DataFrame
-    * CONSTRUCTION — measured ~40-70 ms per call, paid by every query
-    * invocation of every table (724 query executions per bench run).
-    * The memo caches the analyzed DataFrame OBJECT (schema + file
-    * index) once per (session, dir, table) — never any data, and the
-    * testdata inputs are immutable read-only files. Catalyst still
-    * analyzes/optimizes every downstream query exactly as before. */
+  /** Base loaders are SESSION-MEMOIZED: opening a table lists its path
+    * and reads one parquet footer on the driver ([[Parquet.read]], no
+    * Spark job), then resolves the relation — the ten sf0.1-sized base
+    * tables open in about 0.19 s (traced perfbench set-up, 4 vCPUs),
+    * paid by every query invocation of every table without the memo
+    * (724 query executions per bench run). The memo caches the analyzed
+    * DataFrame OBJECT (schema + file index) once per (session, dir,
+    * table) — never any data, and the testdata inputs are immutable
+    * read-only files. Catalyst still analyzes/optimizes every
+    * downstream query exactly as before. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.SessionFrameCache.getOrBuild(spark, s"base_table|$dir|$name") {
-      spark.read.parquet(s"$dir/$name.parquet")
+      Parquet.read(spark, s"$dir/$name.parquet")
     }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")

@@ -1,7 +1,9 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Fixtures, GraftSession, SparkEntry}
+import graft.sources.Parquet
 
 /** Whole-registry scale sweep over a 10x replica of sf0.1 (first
   * built for the round-8 sf1-scale smoke of the dedup family: evidence
@@ -41,41 +43,47 @@ object Sf1Smoke {
     val spark = GraftSession.local(cpus)
     spark.range(1000L).write.format("noop").mode("overwrite").save()
 
-    // `copies` copies of `$src/$table.parquet` at
-    // `$outDir/$table.parquet`, each `keys` column remapped to
-    // key + copy * 5e9 so every copy is a disjoint key universe. Cache
+    // `copies` copies of `source` at `target`, written by `remap` over
+    // `source` crossed with the copy index in column `replica`. Cache
     // guard on _SUCCESS, not bare directory existence: a killed prior
     // write leaves a partial directory that would silently time the
     // family on a fraction of the corpus. A stale cache (source
     // regenerated since) must fail loudly, not mislabel the results.
-    def replicate(table: String, copies: Int, keys: String*): Unit = {
-      val p = s"$outDir/$table.parquet"
-      val source = spark.read.parquet(s"$src/$table.parquet")
+    def replicate(source: DataFrame, target: String, copies: Int)(
+        remap: DataFrame => DataFrame): Long = {
       val srcN = source.count()
       if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$p/_SUCCESS"))) {
-        val cols = source.columns.toSeq.map { c =>
-          if (keys.contains(c)) (col(c) + col("replica") * lit(5000000000L)).as(c)
-          else col(c)
-        }
-        source.crossJoin(spark.range(copies).select(col("id").as("replica")))
-          .select(cols: _*)
+          java.nio.file.Paths.get(s"$target/_SUCCESS")))
+        remap(source.crossJoin(
+            spark.range(copies).select(col("id").as("replica"))))
           .repartition(8)
-          .write.mode("overwrite").parquet(p)
-      }
-      val n = spark.read.parquet(p).count()
+          .write.mode("overwrite").parquet(target)
+      val n = Parquet.read(spark, target).count()
       require(n == copies * srcN,
-        s"$table replica has $n rows, expected ${copies * srcN} — " +
+        s"$target has $n rows, expected ${copies * srcN} — " +
           s"delete $outDir and rerun")
+      n
+    }
+    // `copies` copies of `$src/$table.parquet` at
+    // `$outDir/$table.parquet`, each `keys` column remapped to
+    // key + copy * 5e9 so every copy is a disjoint key universe.
+    def replicateTable(table: String, copies: Int, keys: String*): Unit = {
+      val source = Parquet.read(spark, s"$src/$table.parquet")
+      val cols = source.columns.toSeq.map { c =>
+        if (keys.contains(c)) (col(c) + col("replica") * lit(5000000000L)).as(c)
+        else col(c)
+      }
+      val n = replicate(source, s"$outDir/$table.parquet", copies)(
+        _.select(cols: _*))
       println(s"[sf1-smoke] $table rows=$n (${copies}x $src)")
     }
-    replicate("documents", replicas, "doc_id")
+    replicateTable("documents", replicas, "doc_id")
     // Embeddings replica for the vector ops (round-8 additions).
     // Replica 0 keeps the original vec_ids, so kmeansAssign's 0..k-1
     // init contract holds; the duplicated vectors make every kmeans
     // cell and LSH bucket replicas-hot, same worst-case logic as the
     // docs.
-    replicate("embeddings", replicas, "vec_id")
+    replicateTable("embeddings", replicas, "vec_id")
     // Events replica for the temporal-join/tick family (round-9: the
     // only block whose scale claims rested solely on plan reads).
     // Symbols remap like doc_id: each replica is a fresh symbol set
@@ -87,7 +95,7 @@ object Sf1Smoke {
     // the per-key window machinery across 10-100x more keys.
     // ts is copied as stored, so the replica parquet round-trips
     // through Tables.events identically to the driver-generated table.
-    replicate("events", replicas, "event_id", "user_id")
+    replicateTable("events", replicas, "event_id", "user_id")
     // TPC-H replicas (round-16, whole-registry sweep): the C-family
     // analytics read lineitem/orders/customer/supplier/part. Primary
     // AND foreign keys remap together (+replica·5e9) so every join
@@ -97,13 +105,13 @@ object Sf1Smoke {
     // events replica's symbol remap). nation/region are semantic
     // constants (25/5 rows) — copied once, not remapped, so nationkey
     // joins still land.
-    replicate("lineitem", replicas, "l_orderkey", "l_partkey", "l_suppkey")
-    replicate("orders", replicas, "o_orderkey", "o_custkey")
-    replicate("customer", replicas, "c_custkey")
-    replicate("supplier", replicas, "s_suppkey")
-    replicate("part", replicas, "p_partkey")
-    replicate("nation", 1)
-    replicate("region", 1)
+    replicateTable("lineitem", replicas, "l_orderkey", "l_partkey", "l_suppkey")
+    replicateTable("orders", replicas, "o_orderkey", "o_custkey")
+    replicateTable("customer", replicas, "c_custkey")
+    replicateTable("supplier", replicas, "s_suppkey")
+    replicateTable("part", replicas, "p_partkey")
+    replicateTable("nation", 1)
+    replicateTable("region", 1)
 
     // STREAMING replica (r16 verdict #2): the 49-key G-family was
     // excluded from the 10x bracket because naive replication repeats
@@ -124,12 +132,9 @@ object Sf1Smoke {
     val streamDir = s"$outDir/stream"
     def buildStreamTables(): Unit = {
       import org.apache.spark.sql.types.LongType
-      val p = s"$streamDir/events.parquet"
-      val raw = spark.read.parquet(s"$src/events.parquet")
-      val srcEvents = raw.count()
+      val raw = Parquet.read(spark, s"$src/events.parquet")
       val isNanos = raw.schema("ts").dataType == LongType
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$p/_SUCCESS"))) {
+      val nS = replicate(raw, s"$streamDir/events.parquet", replicas) { x =>
         val shiftDays = (if (isNanos)
           raw.agg(((max(col("ts")) - min(col("ts")))
             / lit(86400L * 1000000000L)).cast("long")).head().getLong(0)
@@ -143,21 +148,14 @@ object Sf1Smoke {
               * 1000000000L)).as("ts")
           else expr(s"timestampadd(DAY, CAST(replica * $shiftDays" +
             " AS INT), ts)").as("ts")
-        raw.crossJoin(spark.range(replicas).select(col("id").as("replica")))
-          .select(
-            (col("event_id") + col("replica") * lit(5000000000L))
-              .as("event_id"),
-            ts2,
-            (col("user_id") + col("replica") * lit(5000000000L))
-              .as("user_id"),
-            col("event_type"), col("value"), col("props"))
-          .repartition(8)
-          .write.mode("overwrite").parquet(p)
+        x.select(
+          (col("event_id") + col("replica") * lit(5000000000L))
+            .as("event_id"),
+          ts2,
+          (col("user_id") + col("replica") * lit(5000000000L))
+            .as("user_id"),
+          col("event_type"), col("value"), col("props"))
       }
-      val nS = spark.read.parquet(p).count()
-      require(nS == replicas * srcEvents,
-        s"stream events replica has $nS rows, expected " +
-          s"${replicas * srcEvents} — delete $outDir and rerun")
       // the invariant the whole exercise exists for: ts-monotone in
       // event_id order (checked on the replica seams, cheap)
       val viol = graft.sources.Tables.events(spark, streamDir)
@@ -175,15 +173,8 @@ object Sf1Smoke {
       // documents/orders: the same frames the batch replica carries,
       // rewritten under streamDir so the one-dir query contract holds
       Seq("documents", "orders").foreach { t =>
-        val tp = s"$streamDir/$t.parquet"
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$tp/_SUCCESS")))
-          spark.read.parquet(s"$outDir/$t.parquet")
-            .repartition(8).write.mode("overwrite").parquet(tp)
-        val nT = spark.read.parquet(tp).count()
-        val nB = spark.read.parquet(s"$outDir/$t.parquet").count()
-        require(nT == nB, s"stream $t copy has $nT rows, expected $nB" +
-          s" — delete $outDir and rerun")
+        replicate(Parquet.read(spark, s"$outDir/$t.parquet"),
+          s"$streamDir/$t.parquet", 1)(_.drop("replica"))
       }
     }
 

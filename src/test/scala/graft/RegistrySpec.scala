@@ -12,24 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RegistrySpec extends AnyFunSuite {
 
-  /** Queries whose result is not SQL-expressible; the driver records a
-    * weaker rows-only check for these, and SURVEY §2 declares each.
-    * Empty since round 12: q_media_features gained a formula-derived
-    * VALUES oracle. */
-  private val declaredRowsOnly = Set.empty[String]
-
-  test("every registered query has an oracle or a declared rows-only " +
-      "exemption") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing == declaredRowsOnly,
-      s"queries without oracle beyond the declared set: " +
-        s"${(missing -- declaredRowsOnly).toSeq.sorted}")
-  }
-
-  test("no orphan oracles (an oracle without a query would silently " +
-      "never run)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"orphan oracles: ${orphans.toSeq.sorted}")
+  test("every key's oracle is a DuckDB query: non-blank, opening " +
+      "with SELECT or WITH") {
+    val bad = SparkEntry.oracleSql.filterNot { case (_, sql) =>
+      val head = sql.trim.takeWhile(!_.isWhitespace).toUpperCase
+      head == "SELECT" || head == "WITH"
+    }.keySet
+    assert(bad.isEmpty, s"oracles that are not a query: ${bad.toSeq.sorted}")
   }
 
   /** Single-row global aggregates — ordering is vacuous. */
@@ -45,6 +34,17 @@ class RegistrySpec extends AnyFunSuite {
       Key("q_a", b, "SELECT 3"))))
     assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"),
       e.getMessage)
+  }
+
+  test("a key's oracle SQL is built on first use: a key whose oracle " +
+      "throws can still be indexed and built") {
+    val built = new java.util.concurrent.atomic.AtomicInteger(0)
+    val k = Key("q_lazy", (_, _) => { built.incrementAndGet(); null },
+      throw new IllegalStateException("oracle built"))
+    val byName = Key.byName(Seq(k))
+    byName("q_lazy").build(null, "")
+    assert(built.get == 1)
+    intercept[IllegalStateException](byName("q_lazy").oracle)
   }
 
   test("queries and oracleSql are built once per JVM") {
